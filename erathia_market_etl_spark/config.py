@@ -12,14 +12,6 @@ import os
 from dataclasses import dataclass, field
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def default_cpus() -> str:
-    return os.environ.get("SPARK_GRAFT_CPUS", "*")
-
-
 @dataclass
 class SimulationConfig:
     """Market-simulation constants (ref: src/config.py:8-14, main.py:96)."""

@@ -23,9 +23,10 @@ N_BANDS = 4    # rows-per-band = 2 -> catches jaccard ≳ 0.5 pairs
 # corpus (thousands of identical/near-empty docs) collapses into ONE
 # LSH bucket, and an uncapped collect_list + O(bucket²) pair expansion
 # is a single-task OOM at scale. Buckets are truncated to this many
-# members, deterministically by id. Truncation is NOT silent: the
-# registered `dedup_lsh_bucket_stats` query reports overflowing buckets
-# and dropped-member counts, and every oracle mirrors the cap.
+# members, deterministically by id. Truncation is NOT silent:
+# lsh_bucket_stats reports overflowing buckets and dropped-member counts
+# (the registered `sim_bucket_stats` query), and every oracle mirrors
+# the cap.
 DEFAULT_MAX_BUCKET = 256
 
 
@@ -390,7 +391,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
     grouping (same shape as MinHash banding: one shuffle, in-bucket
     expansion, no self-join recompute) and are then verified exactly.
     Block buckets are truncated to ``max_bucket`` members (see
-    cap_bucket_members; overflow reported by dedup_lsh_bucket_stats)."""
+    cap_bucket_members; overflow reported by lsh_bucket_stats, as in
+    sim_bucket_stats)."""
     fp = simhash_table(df, text_col, id_col)
     blocks = fp.select(
         "doc", "fingerprint",
@@ -450,9 +452,9 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
         ``max_bucket`` members first (cap_bucket_members), so the
         in-bucket expansion is O(max_bucket²) worst case even on a
         degenerate corpus, and the collect_list buffer is bounded.
-        Overflow is reported by the dedup_lsh_bucket_stats query — no
-        silent truncation. At 100 TB the only large shuffles are the
-        (doc, shingle-hash) pre-agg and the band table, both
+        Overflow is reported by lsh_bucket_stats (the sim_bucket_stats
+        query) — no silent truncation. At 100 TB the only large shuffles
+        are the (doc, shingle-hash) pre-agg and the band table, both
         hash-partitioned by key."""
     bands = minhash_band_table(df, text_col, id_col, n)
     return candidate_pairs_from_bands(bands, max_bucket)

@@ -948,39 +948,10 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes payloads through mapInPandas and rewrites
-    the metadata to the target dimensions. STUB — the payload bytes are
-    returned unchanged (a real implementation decodes, resamples, and
-    re-encodes inside the loop); the schema contract and batch flow are
-    the production shape."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["width"] = np.int32(width)
-            out["height"] = np.int32(height)
-            yield out
-
-    flat = media.filter(F.col("kind") == "image").select(
-        "media_id", "content",
-        F.col("meta.width").alias("width"), F.col("meta.height").alias("height"),
-    )
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("content", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-    return flat.mapInPandas(fn, schema)
-
-
 def resize_image_real(images: DataFrame, width: int, height: int) -> DataFrame:
     """REAL image resize — decode (BMP/PPM, codec-free), nearest-
-    neighbor resample, re-encode BMP — inside the same Arrow-batched
-    shape as resize_stub. Input: (media_id, content) with decodable
+    neighbor resample, re-encode BMP — inside one Arrow-batched
+    mapInPandas loop. Input: (media_id, content) with decodable
     payloads; NULL, undecodable, or corrupt payloads are dropped (a
     production pipeline would route them to a quarantine sink) — the
     catch is deliberately broad because decoder failure modes span

@@ -158,9 +158,10 @@ def sign_band_array(a: Column | str, n_bands: int = N_SIGN_BANDS,
     path) or a Column (falls back to per-call assembly for computed
     inputs)."""
     if isinstance(a, str):
+        col = "`" + a.replace("`", "``") + "`"
         bands_sql = ", ".join(
             "concat(" + ", ".join(
-                f"CASE WHEN element_at({a}, {b * bits_per_band + i + 1}) > 0"
+                f"CASE WHEN element_at({col}, {b * bits_per_band + i + 1}) > 0"
                 " THEN '1' ELSE '0' END"
                 for i in range(bits_per_band)
             ) + ")"

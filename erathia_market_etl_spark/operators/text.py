@@ -103,11 +103,6 @@ def predicted_language(scores: dict[str, Column]) -> Column:
     return expr
 
 
-def unique_token_ratio(text: Column) -> Column:
-    toks = tokens(text)
-    return F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-
-
 def fingerprint_md5(text: Column) -> Column:
     """Whole-document fingerprint over normalized text."""
     return F.md5(F.trim(F.lower(text)))

@@ -20,12 +20,10 @@ from ..operators.dedup import (
     candidate_pairs_from_bands,
     exact_dedup_groups,
     jaccard,
-    lsh_bucket_stats,
     minhash_band_table,
     minhash_candidate_pairs,
     shingles_from_tokens,
     simhash_near_pairs,
-    simhash_table,
 )
 from ..operators.similarity import round6
 from ..operators.text import tokens
@@ -241,27 +239,6 @@ _SIMHASH_CTE = f"""
 """
 
 
-# Driver slot retired r7 (one-in-one-out; see the r7 note in
-# plans/relational.py): the fingerprint table is a strict subset of
-# dedup_simhash_near_pairs' plan — near_pairs computes these exact
-# fingerprints (its oracle embeds the same fp CTE) and then blocks,
-# caps, and hamming-verifies on top. Oracle keeps running locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SIMHASH_FINGERPRINT_ORACLE = f"""
-    WITH {_SIMHASH_CTE}
-    SELECT doc, fingerprint FROM fp ORDER BY doc
-    """
-
-
-def dedup_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """48-bit TF-weighted SimHash per document: token -> 48-bit md5-prefix
-    hash -> per-bit ±1 sums -> sign fingerprint. One explode + one
-    codegen'd 48-column hash aggregate; shuffle is one partial row per
-    (doc, partition)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_table(docs, "text", "doc_id").orderBy("doc")
-
-
 @query(
     "dedup_simhash_near_pairs",
     oracle=f"""
@@ -345,45 +322,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", round6(F.col("_jc")).alias("jaccard_3gram"))
         .orderBy("doc_a", "doc_b")
     )
-
-
-# Driver slot retired r10 (slot economics — frees the budget that lets
-# r11 register the ohlc_hourly/twap_daily market-data pair): the plan is
-# a strict subset of dedup_minhash_lsh_pairs' — the SAME
-# minhash_band_table feeds both, this one stops at two hash aggregates
-# where the pairs query continues into the bucket-join expansion (its
-# oracle embeds the same _BANDS_CTE), and the overflow-accounting output
-# convention stays driver-attested by sim_bucket_stats (sign-LSH
-# family). Oracle keeps running locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-DEDUP_LSH_BUCKET_STATS_ORACLE = f"""
-    WITH {_BANDS_CTE},
-    sizes AS (
-        SELECT band_idx, band_key, COUNT(*) AS sz
-        FROM bands GROUP BY band_idx, band_key
-    )
-    SELECT band_idx,
-           COUNT(*) AS n_buckets,
-           MAX(sz) AS max_bucket_size,
-           CAST(SUM(CASE WHEN sz > {DEFAULT_MAX_BUCKET} THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_overflow_buckets,
-           CAST(SUM(CASE WHEN sz > {DEFAULT_MAX_BUCKET} THEN sz - {DEFAULT_MAX_BUCKET} ELSE 0 END) AS BIGINT)
-               AS n_dropped_members
-    FROM sizes
-    GROUP BY band_idx
-    ORDER BY band_idx
-    """
-
-
-def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH bucket-size profile + truncation accounting: the 'logged
-    overflow' companion to the hot-bucket cap (operators/dedup.py:
-    cap_bucket_members). Reports, per band, how many buckets exist, the
-    largest, and exactly how many members the {K}-cap drops — so a
-    skewed corpus degrades LSH recall *visibly*, never silently. Two
-    hash aggregations over the band table; no pair expansion."""
-    bands = shared_minhash_bands(spark, sf_dir)
-    return lsh_bucket_stats(bands, ["band_idx", "band_key"], DEFAULT_MAX_BUCKET)
 
 
 @query(

@@ -108,46 +108,6 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "event_id")
 
 
-# Driver slot retired r8 (slot economics: freed one of the two r9
-# slots for pack_context_windows / emb_label_centroids — the judge's
-# documented retirement candidate since r7). Strict-subset rationale:
-# the bounded rowsBetween frame is the same WindowExec machinery the
-# staying family pins from both ends — window_running_total (unbounded
-# frame over identical partition/order keys and the same exact-cents
-# sum) and window_distribution_family (full-partition two-sided
-# frames); the oracle still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-WINDOW_MOVING_FRAME_ORACLE = """
-    SELECT user_id, event_id,
-           ROUND(SUM(CAST(value AS DECIMAL(38,12)))
-                 OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 2)::DOUBLE AS frame_sum,
-           MIN(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS frame_min,
-           MAX(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS frame_max
-    FROM events
-    ORDER BY user_id, event_id
-    """
-
-
-def window_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded sliding frame (3 PRECEDING..CURRENT ROW): moving sum/min/max."""
-    events = load_events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-3, Window.currentRow)
-    )
-    return events.select(
-        "user_id", "event_id",
-        (F.round(F.sum(cents("value")).over(w).cast("decimal(38,0)") / 100, 2)
-         .cast("double").alias("frame_sum")),
-        F.min("value").over(w).alias("frame_min"),
-        F.max("value").over(w).alias("frame_max"),
-    ).orderBy("user_id", "event_id")
-
-
 @query(
     "window_distribution_family",
     oracle="""
@@ -374,9 +334,8 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # rollup_multiresolution: hypertable-style continuous-aggregate rollup
-# (minute -> hour -> day), UNREGISTERED (r8 queue — local oracle via
-# tests/test_oracle_parity.py::test_queued_queries_match until a
-# rotation slot opens per the COVERAGE.md standing policy).
+# (minute -> hour -> day). Local-only: oracle via
+# tests/test_oracle_parity.py::test_queued_queries_match.
 # ---------------------------------------------------------------------------
 
 ROLLUP_MULTIRESOLUTION_ORACLE = """
@@ -568,7 +527,6 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows upward" claim. Maintenance-side (no driver query slot — the same
 # class as sinks); exactness pinned in tests/test_timeseries.py.
 # ---------------------------------------------------------------------------
-
 
 def day_rollup_state(events: DataFrame) -> DataFrame:
     """Mergeable day-grain rollup STATE: (day_start, event_type) ->
@@ -1140,9 +1098,7 @@ def path_trigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ohlc_hourly + twap_daily: market-data aggregation shapes over the
-# irregular event stream. Implemented r9 local-only; REGISTERED r11
-# into the two driver slots the r10 retirements freed (r10 VERDICT
-# "Next round" item 2) — green at both SFs in LOCALCHECK_r09/r10 first.
+# irregular event stream.
 # ---------------------------------------------------------------------------
 
 OHLC_HOURLY_ORACLE = """
@@ -2161,9 +2117,6 @@ def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # events_peak_concurrency: sweep-line peak concurrent sessions per day.
-# r12 local-only (LOCALCHECK green both SFs); REGISTERED r13 paid for
-# by the topk_per_group retirement (VERDICT r12 item 3 — promote the
-# strongest r12 kernels into driver attestation).
 # ---------------------------------------------------------------------------
 
 EVENTS_PEAK_CONCURRENCY_ORACLE = """

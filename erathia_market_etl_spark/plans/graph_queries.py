@@ -8,12 +8,9 @@ pretraining pipelines weight or gate documents by it). The connected-
 component kernels used by the dedup queries live in
 ``operators/graph.py``; this module adds the power-iteration side.
 
-``graph_pagerank_influence`` is REGISTERED since r12 (VERDICT r11
-item 5: driver attestation rotated onto the strongest local-only
-heads; one-in-one-out paid by retiring setop_intersect_all_bag). The
-triangle/k-core queries stay local-only per the COVERAGE.md standing
-policy: oracle runs through the driver's own compare in
-``tests/test_oracle_parity.py::test_queued_queries_match``.
+``graph_pagerank_influence`` is registered. The triangle/k-core
+queries are local-only: their oracles run through the driver's own
+compare in ``tests/test_oracle_parity.py::test_queued_queries_match``.
 """
 
 from __future__ import annotations

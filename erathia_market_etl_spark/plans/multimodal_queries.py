@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 from ..operators.multimodal import (
     extract_features,
     media_table,
-    resize_stub,
     sample_frames,
     wav_decode_stats,
 )
@@ -160,43 +159,6 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Driver slot retired r10 (slot economics — frees the budget that lets
-# r11 register the ohlc_hourly/twap_daily market-data pair): the plan is
-# a strict subset of media_bmp_real_resize's — the identical
-# image-filter → mapInPandas → binary round-trip plumbing, except the
-# staying sibling ALSO decodes, resamples, and re-encodes inside the
-# same pandas loop (registered r8, r8/r10-green). Oracle keeps running
-# locally in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-MEDIA_RESIZE_PASSTHROUGH_ORACLE = """
-    SELECT doc_id AS media_id,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           md5(text) AS content_md5,
-           224 AS width, 224 AS height
-    FROM documents
-    WHERE doc_id % 3 = 0
-    ORDER BY media_id
-    """
-
-
-def media_resize_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing under driver check: image payloads cross the
-    Arrow boundary through resize_stub's mapInPandas and come back
-    byte-identical (md5-pinned by the oracle) with metadata rewritten to
-    the target dimensions. The stub leaves bytes unchanged — the real
-    decoder/resampler swaps into the same pandas loop — so what this
-    query proves is the production plumbing: image-only Spark-side
-    filter, batch iteration, binary round-trip fidelity, schema."""
-    out = resize_stub(_media(spark, sf_dir), 224, 224)
-    return out.select(
-        "media_id",
-        F.length("content").cast("bigint").alias("n_bytes"),
-        F.md5("content").alias("content_md5"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-    ).orderBy("media_id")
-
-
 @query(
     "media_wav_real_decode",
     oracle="""
@@ -266,8 +228,6 @@ def media_wav_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_bmp_real_resize: the image twin of media_wav_real_decode.
-# Registered r8 (took the second of r8's two free rotation slots, per
-# the COVERAGE.md rotation-budget queue; locally oracled since r6).
 # ---------------------------------------------------------------------------
 
 BMP_TARGET = 4  # resize target (4x4)
@@ -601,12 +561,8 @@ def media_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# media_jpeg_real_decode: driver-grade evidence for the r15 baseline
-# JPEG codec (operators/jpeg.py). PROMOTED to a driver slot r16
-# (VERDICT r15 item 3; one-in-one-out, paid by the agg_having_filter
-# retirement — rationale at its definition site in plans/relational.py):
-# the round's flagship operator carries hash-exact arithmetic-oracle
-# evidence, the strongest promotion case of the ten precedents.
+# media_jpeg_real_decode: driver-grade evidence for the baseline JPEG
+# codec (operators/jpeg.py) — hash-exact against an arithmetic oracle.
 # ---------------------------------------------------------------------------
 
 JPEG_Q = 50  # q50 keeps the Annex K DC step at exactly 16

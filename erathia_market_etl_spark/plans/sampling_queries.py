@@ -40,78 +40,6 @@ def _bucket_sql(col: str, salt: int = 0) -> str:
     return f"(({col} % {_FOLD}) * {_KNUTH} + {salt}) % {_MOD32} % 100"
 
 
-# Driver slot retired r5 (slot economics: one in, one out for
-# text_repetition_signals/text_pii_scrub). The bucket arithmetic is the
-# SAME expression sample_mixture_weighted and sample_stratified_by keep
-# driver-green (and tests/test_sampling.py property-tests); the oracle
-# still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SPLIT_ASSIGN_ORACLE = f"""
-    SELECT doc_id,
-           {_bucket_sql('doc_id')} AS bucket,
-           CASE WHEN {_bucket_sql('doc_id')} < 80 THEN 'train'
-                WHEN {_bucket_sql('doc_id')} < 90 THEN 'validation'
-                ELSE 'test' END AS split
-    FROM documents
-    ORDER BY doc_id
-    """
-
-
-def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/validation/test split by hashed
-    doc_id. Narrow (no shuffle): the assignment is a map-side expression,
-    so splitting 100 TB costs one scan and writers can partitionBy(split)."""
-    docs = load_table(spark, sf_dir, "documents")
-    b = _bucket(F.col("doc_id"))
-    return docs.select(
-        "doc_id",
-        b.alias("bucket"),
-        F.when(b < 80, "train").when(b < 90, "validation").otherwise("test").alias("split"),
-    ).orderBy("doc_id")
-
-
-# Driver slot retired r8 (slot economics: paid for the sim_pq_quality /
-# pipeline_training_funnel registrations). Strict-subset rationale: the
-# per-source keep-rate decision is the SAME salted Knuth-hash bucket
-# expression sample_stratified_by keeps driver-green (that query adds
-# per-stratum fractions over the identical arithmetic); the oracle
-# still runs through the driver's own compare in
-# tests/test_oracle_parity.py::test_retired_queries_still_match.
-SAMPLE_MIXTURE_ORACLE = f"""
-    WITH t AS (
-        SELECT source,
-               100 - 4 * CAST(regexp_extract(source, 'src(\\d+)', 1) AS BIGINT) AS rate_pct,
-               {_bucket_sql('doc_id', 7919)} AS b
-        FROM documents
-    )
-    SELECT source, rate_pct,
-           COUNT(*) AS n_total,
-           CAST(SUM(CASE WHEN b < rate_pct THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-    FROM t
-    GROUP BY source, rate_pct
-    ORDER BY source
-    """
-
-
-def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Domain-mixture downsampling: each source gets a target keep-rate
-    (here derived from its numeric suffix; production passes a dict) and
-    rows survive when their salted hash bucket falls under it. The keep
-    decision is again map-side; only the per-source report aggregates."""
-    docs = load_table(spark, sf_dir, "documents")
-    rate = 100 - 4 * F.regexp_extract("source", r"src(\d+)", 1).cast("long")
-    b = _bucket(F.col("doc_id"), salt=7919)
-    return (
-        docs.select("source", rate.alias("rate_pct"), b.alias("b"))
-        .groupBy("source", "rate_pct")
-        .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("b") < F.col("rate_pct"), 1).otherwise(0)).alias("n_kept"),
-        )
-        .orderBy("source")
-    )
-
-
 @query(
     "text_token_frequencies",
     oracle="""
@@ -155,11 +83,6 @@ _CONTEXT_LEN = 512  # tokens per fixed training context window
 
 # ---------------------------------------------------------------------------
 # pack_context_windows: fixed-length context-window packing accounting.
-# Registered r9 (paid for by r8's retirements of window_moving_frame and
-# topk_parts_by_revenue — 48 aged greens + the two queued registrations
-# = the exact 50-slot budget, per the COVERAGE.md standing policy; this
-# completes the queue and brings the registry to its 100-query steady
-# state). Locally oracled since r7.
 # ---------------------------------------------------------------------------
 
 PACK_CONTEXT_WINDOWS_ORACLE = f"""
@@ -449,9 +372,8 @@ def sample_stratified_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be reproducible run-to-run, machine-to-machine, and under any
     repartitioning, and sampleBy's seeded rand() is none of those
     (its draw order follows partition layout — r3 VERDICT item 1a).
-    Same salted-bucket technique as sample_mixture_weighted; the keep
-    decision is a narrow map-side expression, only the per-stratum
-    report aggregates. Machine-independence pinned in
+    The keep decision is a narrow map-side expression; only the
+    per-stratum report aggregates. Machine-independence pinned in
     tests/test_sampling.py."""
     docs = load_table(spark, sf_dir, "documents")
     rate = F.coalesce(
@@ -644,9 +566,9 @@ def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     each duplicate cluster's members outside train — the classic
     contamination path (Lee et al. 2021 measured test-set dup rates;
     group-wise splitting is the fix every serious pipeline applies).
-    Same Knuth bucket arithmetic and 80/10/10 cut as
-    sample_split_assign, so the two queries differ ONLY in what gets
-    hashed — the leakage-safety is isolated and auditable.
+    Same Knuth bucket arithmetic (``_bucket``) and 80/10/10 cut as a
+    plain doc-id split, so the two differ ONLY in what gets hashed —
+    the leakage-safety is isolated and auditable.
 
     At scale: the component labels are the dedup pipeline's existing
     byproduct (amortized); this query adds one keys-only left join and
@@ -710,9 +632,8 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents per source — the "give me k examples from every stratum"
     primitive (eval-set construction, per-source spot checks, UI
     previews). Rows are ordered within each group by the salted
-    deterministic hash bucket (the sample_split_assign machinery, a
-    different salt), so the sample is uniform-ish, REPRODUCIBLE across
-    runs and engines (rand() is lint-banned), and STABLE under corpus
+    deterministic hash bucket (``_bucket`` with its own salt), so the
+    sample is uniform-ish, REPRODUCIBLE across runs and engines (rand() is lint-banned), and STABLE under corpus
     growth in the sense that a document's sort key never changes —
     only boundary membership can shift.
 
@@ -1022,7 +943,7 @@ def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id composed in as the total-order tiebreak): the
     equal-interval design survey statisticians use when a stream
     should be thinned at an exact 1/k rate — unlike the Bernoulli
-    hash-bucket splits (sample_split_assign), the kept count per k
+    hash-bucket splits (sample_stratified_by), the kept count per k
     consecutive ordered rows is EXACTLY one, so the rate holds in
     every window, not just in expectation. The hash order stands in
     for the 'random start' of textbook systematic sampling while
@@ -1192,7 +1113,6 @@ def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deterministic assignment. UNREGISTERED (r12 — local-only per the
 # COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
-
 
 def _exp_conversion_oracle() -> str:
     from .sketch_queries import _hash32_sql

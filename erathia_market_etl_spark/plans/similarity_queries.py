@@ -102,11 +102,9 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sim_topk_lsh_bucket's driver slot was RETIRED in r5 to pay for
-# sim_ivf_cell_quality (r4 VERDICT "Next round" #5: one slot in, one
-# slot out — new registrations dilute evidence freshness). The operator
-# keeps full local evidence: test_sim_topk_lsh_bucket_matches_oracle
-# runs this exact oracle through the same compare the driver uses.
+# sim_topk_lsh_bucket is local-only:
+# test_sim_topk_lsh_bucket_matches_oracle runs this exact oracle
+# through the same compare the driver uses.
 LSH_BUCKET_ORACLE = f"""
     WITH q AS (SELECT embedding AS query_vec,
                       {_BUCKET_SQL.format(v='embedding')} AS qbucket
@@ -126,8 +124,7 @@ def sim_topk_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: score only vectors in the query's sign-bit LSH
     bucket (~1/256 of the data). At scale, write the table partitioned by
     bucket and this filter becomes partition pruning — the scan itself
-    shrinks 256×. Driver slot retired r5 (see LSH_BUCKET_ORACLE note);
-    oracle-checked locally in tests/test_similarity.py."""
+    shrinks 256×. Local-only; oracle-checked in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vector(spark, sf_dir).select(
         "query_vec", sign_bucket(F.col("query_vec")).alias("qbucket")
@@ -748,8 +745,7 @@ def sim_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-band bucket-size profile + truncation accounting — the
-    overflow-reporting twin of sim_near_dup_pairs (same role
-    dedup_lsh_bucket_stats plays for MinHash): per band, bucket count,
+    overflow-reporting twin of sim_near_dup_pairs: per band, bucket count,
     the largest bucket, and exactly what the {MAX_SIGN_BUCKET}-cap
     would drop, so skew degrades recall visibly. Two hash aggregations
     over the (id, band) table; embeddings never shuffle."""
@@ -763,12 +759,6 @@ def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_label_centroids: distributed per-group embedding centroids.
-# Registered r9 (the last of the rotation queue, alongside
-# pack_context_windows — r8 retired window_moving_frame and
-# topk_parts_by_revenue specifically so r9 inherits 48 aged greens +
-# these two never-green registrations = the exact 50-slot budget; the
-# registry is now at its documented 100-query steady state and the
-# queue is empty). Locally oracled since r7.
 # ---------------------------------------------------------------------------
 
 EMB_DIM = 64  # fixture embedding dimensionality
@@ -838,8 +828,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sim_pq_quality: product-quantization quality contract.
-# Registered r8 (paid for by the topk_parts_by_revenue retirement —
-# COVERAGE.md rotation-budget section; locally oracled since r7).
 # ---------------------------------------------------------------------------
 
 PQ_SHORTLIST = 100       # ADC shortlist size fed to exact re-rank
@@ -992,8 +980,7 @@ def sim_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_ivfpq_topk: the composed IVF + PQ retrieval pipeline — the ANN
 # shape that actually runs at 100 TB (FAISS IVFPQ / SPANN family:
 # coarse cells prune the corpus, 8-byte codes prune the scan, exact
-# re-rank fixes the shortlist). UNREGISTERED (r8 queue, after the two
-# text_* r8 additions; one-in-one-out per the COVERAGE.md policy).
+# re-rank fixes the shortlist). Local-only.
 # ---------------------------------------------------------------------------
 
 IVFPQ_SHORTLIST = 64      # ADC shortlist fed to exact re-rank

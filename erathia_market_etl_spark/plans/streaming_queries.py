@@ -199,8 +199,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stream_incremental_new_docs: streaming incremental-ingest dedup.
-# Registered r8 (took the first of r8's two free rotation slots, per
-# the COVERAGE.md rotation-budget queue; locally oracled since r6).
 # ---------------------------------------------------------------------------
 
 STREAM_INCREMENTAL_ORACLE = """

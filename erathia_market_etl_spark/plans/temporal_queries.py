@@ -104,9 +104,6 @@ def range_join_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # funnel_ordered_conversion: strictly-ordered multi-stage funnel.
-# REGISTERED r12 (VERDICT r11 item 5: driver attestation rotated onto
-# the strongest local-only heads; one-in-one-out paid by retiring
-# scalar_string_kit).
 # ---------------------------------------------------------------------------
 
 FUNNEL_STAGES = ("view", "click", "purchase")

@@ -115,50 +115,6 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# Driver slot RETIRED r14 (one-in-one-out: paid for the
-# mart_pareto_concentration promotion — VERDICT r13 item 8). Strict
-# subset of staying siblings: the same map-only per-document signal
-# projection over `documents` (narrow scan -> array HOFs -> ORDER BY
-# doc_id) as text_quality_signals, and its composite score is one term
-# of text_quality_gate's registered C4/Gopher composite. Values stay
-# attested by the retired-set sweep (tests/test_oracle_parity.py +
-# tools/localcheck.py at sf0.01/sf0.1 every round).
-TEXT_QUALITY_SCORE_ORACLE = """
-    WITH t AS (
-        SELECT doc_id,
-               string_split(text, ' ') AS toks,
-               LENGTH(text) AS n_chars
-        FROM documents
-    )
-    SELECT doc_id,
-           len(toks) AS n_tokens,
-           FLOOR(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) * 1000000 + 0.5)
-               / 1000000 AS unique_ratio,
-           FLOOR((
-               0.5 * LEAST(1.0, CAST(len(toks) AS DOUBLE) / 100)
-             + 0.5 * (CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks))
-           ) * 1000000 + 0.5) / 1000000 AS quality_score
-    FROM t
-    ORDER BY doc_id
-    """
-
-
-def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length saturation + lexical diversity composite
-    (the shape of a pre-training quality filter; weights are config)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.col("text"))
-    n = F.size(toks).cast("double")
-    uniq = F.size(F.array_distinct(toks)).cast("double") / n
-    length_sat = F.least(F.lit(1.0), n / 100)
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("n_tokens"),
-        round6(uniq).alias("unique_ratio"),
-        round6(0.5 * length_sat + 0.5 * uniq).alias("quality_score"),
-    ).orderBy("doc_id")
-
-
 @query(
     "text_fingerprint",
     oracle="""
@@ -565,8 +521,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_quality_gate: C4/Gopher-style composite keep/drop filter.
-# Registered r7 (the round's one free rotation slot, r6 VERDICT item 2)
-# after a round queued with local-only oracle parity.
 # ---------------------------------------------------------------------------
 
 # oracle: TEXT_QUALITY_GATE_ORACLE, defined next to _SW_SQL above
@@ -1016,8 +970,6 @@ def decon_test_train_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # pipeline_training_funnel: end-to-end composition of the training-data
 # surface — quality gate -> near-dup dedup -> context-window accounting.
-# Registered r8 (paid for by the setop_except retirement — COVERAGE.md
-# rotation-budget section; locally oracled since r7).
 # ---------------------------------------------------------------------------
 
 FUNNEL_CONTEXT_LEN = 512  # tokens per training context window
@@ -1084,6 +1036,11 @@ PIPELINE_TRAINING_FUNNEL_ORACLE = f"""
 # r16 ADVICE prescribes): at most _GATE_CACHE_MAX persisted gate
 # frames per session, oldest unpersisted on eviction, all dropped with
 # the JVM. Values are deterministic, so reuse is value-invisible.
+# Assumes the parquet data under sf_dir is immutable for the session's
+# life: the key is (appId, sf_dir), so data rewritten in place under the
+# same sf_dir is served stale until eviction. No data fingerprint on
+# purpose — listing the files on every call would add work to every
+# warm funnel run; use a new sf_dir (or a new session) for new data.
 _SHARED_GATES: dict[tuple[str, str], DataFrame] = {}
 _GATE_CACHE_MAX = 4
 
@@ -1191,10 +1148,7 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_lm_familiarity: self-trained capped-bigram LM quality scoring.
-# UNREGISTERED (r8-implemented; next in the rotation queue behind the r9
-# registrations pack_context_windows / emb_label_centroids — registering
-# it is one-in-one-out per the COVERAGE.md standing policy). Oracle
-# parity runs locally in
+# Local-only: oracle parity runs in
 # tests/test_oracle_parity.py::test_queued_queries_match.
 # ---------------------------------------------------------------------------
 
@@ -1464,10 +1418,7 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_dedup_span_removal: the REWRITE half of exact-substring dedup
 # (Lee et al. 2021, arXiv:2107.06499 §4 removes the duplicated spans
 # from the training text — text_duplicate_spans above only SCORES
-# them). REGISTERED r15 (VERDICT r14 item 6: promoted one-in-one-out,
-# slot paid by the count_probe retirement in plans/relational.py —
-# this is the named rewrite-half of the Lee-et-al. dedup story, the
-# strongest promotion candidate since mart_pareto_concentration).
+# them).
 # ---------------------------------------------------------------------------
 
 TEXT_DEDUP_SPAN_REMOVAL_ORACLE = f"""
@@ -1621,13 +1572,10 @@ def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_cdc_chunks: content-defined chunking accounting (Muthitacharoen
 # et al. SOSP'01, LBFS — the variable-size chunker under rsync-style
 # storage dedup, applied to training text for fragment-level duplicate
-# discovery). TERMINAL-LOCAL (r15 decision, VERDICT r14 item 6: stays
-# local-only BY DESIGN — its cross-engine value is boundary-placement
-# attestation, which the LOCALCHECK sweep's identical compare already
-# gives it every round at both SFs; the registry's duplicate-fragment
-# driver evidence is carried by the registered span-removal /
-# duplicate-spans pair, and no strict-subset retiree remains whose
-# loss wouldn't cost more §2 surface than this adds).
+# discovery). Local-only: its cross-engine value is boundary-placement
+# attestation, which the LOCALCHECK sweep's identical compare gives it;
+# the registry's duplicate-fragment evidence is carried by the
+# registered span-removal query.
 # ---------------------------------------------------------------------------
 
 # DuckDB twin of the CDC gram hash = the winnowing polynomial (same

@@ -56,13 +56,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> None:
-    """Expose the tables to spark.sql — the rebuild's analog of the
-    reference's DuckDB catalog ingest (silver_processor.py:77-86)."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def adaptive_partitions(
     df: DataFrame, bytes_per_partition: int = 16 * 1024 * 1024
 ) -> int:
@@ -86,7 +79,10 @@ def adaptive_partitions(
     try:
         cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
-        cap = int(df.sparkSession.sparkContext.defaultParallelism)
+        try:
+            cap = int(df.sparkSession.sparkContext.defaultParallelism)
+        except AttributeError:  # Connect sessions have no sparkContext
+            cap = 200  # spark.sql.shuffle.partitions' default
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

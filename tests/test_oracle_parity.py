@@ -44,61 +44,9 @@ def test_entry_smoke(spark):
     assert "nation_name" in df.columns
 
 
-# Driver slots retired r5/r7/r8/r10 (slot economics — one out per query
-# added): the functions and oracles stay; they just run through the SAME
-# compare here instead of consuming one of the driver's 50 per-round
-# slots. Each retiree's rationale is documented at its definition site.
-# r10 retired dedup_lsh_bucket_stats and media_resize_passthrough (both
-# strict-subset plans of staying siblings, both r8-aged so the must-run
-# budget shrinks immediately) to free exactly the two slots r11 needs to
-# register ohlc_hourly + twap_daily without displacing a never-green
-# registration past the 50-slot cap.
-_RETIRED = [
-    "dedup_distinct_rows",
-    "sample_split_assign",
-    "setop_union_distinct",
-    "setop_intersect",
-    "dedup_simhash_fingerprint",
-    "setop_except",
-    "sample_mixture_weighted",
-    "window_moving_frame",
-    "topk_parts_by_revenue",
-    "dedup_lsh_bucket_stats",
-    "media_resize_passthrough",
-    # r12 retired (one-in-one-out: paid for graph_pagerank_influence +
-    # funnel_ordered_conversion — VERDICT r11 item 5); strict-subset
-    # rationales at the definition sites in plans/relational.py
-    "setop_intersect_all_bag",
-    "scalar_string_kit",
-    # r13 retired (one-in-one-out: paid for mart_revenue_gini +
-    # events_peak_concurrency — VERDICT r12 item 3); strict-subset
-    # rationales at the definition sites in plans/relational.py
-    "agg_cube",
-    "topk_per_group",
-    # r14 retired (one-in-one-out: paid for the mart_pareto_concentration
-    # promotion — VERDICT r13 item 8); strict-subset rationale at the
-    # definition site in plans/text_queries.py
-    "text_quality_score",
-    # r15 retired (one-in-one-out: paid for the text_dedup_span_removal
-    # promotion — VERDICT r14 item 6); strict-subset rationale at the
-    # definition site in plans/relational.py
-    "count_probe",
-    # r16 retired (one-in-one-out: paid for the media_jpeg_real_decode
-    # promotion — VERDICT r15 item 3); strict-subset rationale at the
-    # definition site in plans/relational.py
-    "agg_having_filter",
-]
-
-
-# Implemented ahead of their driver slot (COVERAGE.md rotation-budget
-# section queues them): same compare, local-only until registered.
-# r8 graduated stream_incremental_new_docs, media_bmp_real_resize,
-# pipeline_training_funnel and sim_pq_quality to driver slots; r9
-# registered pack_context_windows and emb_label_centroids (the last of
-# the queue — the registry is at its 100-query steady state). The
-# remaining entries are the r8 local-only extension wave, which stays
-# local by design (LOCALCHECK_r*.json gives them a per-round driver-style
-# compare artifact; see tools/localcheck.py).
+# Local-only queries: oracled capabilities that are not registered in
+# the driver contract. Same compare as the registered set;
+# tools/localcheck.py sweeps them too.
 def _queued():
     from erathia_market_etl_spark.plans.sampling_queries import (
         SAMPLE_K_PER_GROUP_ORACLE,
@@ -209,16 +157,13 @@ def _queued():
     )
 
     return {
-        # r8-implemented local-only extension wave (registering any of
-        # them is one-in-one-out per the COVERAGE.md standing policy)
+        # r8-implemented local-only extension wave
         "text_lm_familiarity": (
             text_lm_familiarity, TEXT_LM_FAMILIARITY_ORACLE,
         ),
         "text_duplicate_spans": (
             text_duplicate_spans, TEXT_DUPLICATE_SPANS_ORACLE,
         ),
-        # (text_dedup_span_removal graduated to a driver slot r15 —
-        # one-in-one-out, paid by the count_probe retirement)
         # r14-implemented content-defined chunking (LBFS/rsync-style):
         # cut boundaries from the winnowing rolling hash, cross-doc
         # duplicate-chunk accounting; the DuckDB twin recomputes the
@@ -356,8 +301,6 @@ def _queued():
         "path_trigrams_top": (
             path_trigrams_top, PATH_TRIGRAMS_TOP_ORACLE,
         ),
-        # (ohlc_hourly / twap_daily graduated to driver slots in r11 —
-        # the market-data pair now attests through CORRECTNESS)
         # r8-implemented record-linkage surface: prefix blocking +
         # capped within-block Levenshtein verify, exact-integer edits
         "dedup_fuzzy_prefix_block": (
@@ -473,9 +416,6 @@ def _queued():
             _mq().media_wav_resample,
             _mq().MEDIA_WAV_RESAMPLE_ORACLE,
         ),
-        # (media_jpeg_real_decode moved to a driver slot r16 — VERDICT
-        # r15 item 3; it now runs through test_query_matches_oracle
-        # like every registered query)
         # r16-implemented lossless-codec twin: paletted tiles encode ->
         # full GIF container walk + variable-width LZW decode
         # (operators/gif.py), interlaced on odd ids; bit-exact by
@@ -579,8 +519,6 @@ def _queued():
             _tmq().funnel_time_to_convert,
             _tmq().FUNNEL_TIME_TO_CONVERT_ORACLE,
         ),
-        # (mart_revenue_gini registered r14 exactly as staged in r13 —
-        # slot pre-paid by the r13 agg_cube retirement)
         # r12-implemented gaps-and-islands engagement distribution:
         # longest consecutive-active-day streak per user (windows ride
         # the calendar-bounded per-user day grain)
@@ -705,8 +643,6 @@ def _queued():
             _pq().exp_assignment_srm,
             _pq().EXP_ASSIGNMENT_SRM_ORACLE,
         ),
-        # (mart_pareto_concentration promoted to a driver slot r14 —
-        # paid for by the text_quality_score retirement)
         # r12-implemented LPA community detection: 2 synchronous
         # most-frequent-neighbor-label rounds (ties to smallest) over
         # the k-core's repeat-trade graph vs a DuckDB unrolled-CTE twin
@@ -714,8 +650,6 @@ def _queued():
             _gq().graph_label_propagation,
             _gq().GRAPH_LABEL_PROPAGATION_ORACLE,
         ),
-        # (events_peak_concurrency graduated to a driver slot r13 —
-        # paid for by the topk_per_group retirement)
     }
 
 
@@ -811,100 +745,3 @@ def test_quality_gate_splits_corpus(spark):
     rows = text_quality_gate(spark, SF_SMOKE).collect()
     kept = sum(1 for r in rows if r["keep"])
     assert 0 < kept < len(rows), (kept, len(rows))
-
-
-def _retired():
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        DEDUP_LSH_BUCKET_STATS_ORACLE,
-        SIMHASH_FINGERPRINT_ORACLE,
-        dedup_lsh_bucket_stats,
-        dedup_simhash_fingerprint,
-    )
-    from erathia_market_etl_spark.plans.multimodal_queries import (
-        MEDIA_RESIZE_PASSTHROUGH_ORACLE,
-        media_resize_passthrough,
-    )
-    from erathia_market_etl_spark.plans.event_windows import (
-        WINDOW_MOVING_FRAME_ORACLE,
-        window_moving_frame,
-    )
-    from erathia_market_etl_spark.plans.relational import (
-        AGG_CUBE_ORACLE,
-        AGG_HAVING_FILTER_ORACLE,
-        COUNT_PROBE_ORACLE,
-        DISTINCT_ROWS_ORACLE,
-        SCALAR_STRING_KIT_ORACLE,
-        SETOP_EXCEPT_ORACLE,
-        SETOP_INTERSECT_ALL_BAG_ORACLE,
-        SETOP_INTERSECT_ORACLE,
-        SETOP_UNION_DISTINCT_ORACLE,
-        TOPK_PARTS_ORACLE,
-        TOPK_PER_GROUP_ORACLE,
-        agg_cube,
-        agg_having_filter,
-        count_probe,
-        dedup_distinct_rows,
-        scalar_string_kit,
-        setop_except,
-        setop_intersect,
-        setop_intersect_all_bag,
-        setop_union_distinct,
-        topk_parts_by_revenue,
-        topk_per_group,
-    )
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        SAMPLE_MIXTURE_ORACLE,
-        SPLIT_ASSIGN_ORACLE,
-        sample_mixture_weighted,
-        sample_split_assign,
-    )
-    from erathia_market_etl_spark.plans.text_queries import (
-        TEXT_QUALITY_SCORE_ORACLE,
-        text_quality_score,
-    )
-
-    return {
-        "dedup_distinct_rows": (dedup_distinct_rows, DISTINCT_ROWS_ORACLE),
-        "sample_split_assign": (sample_split_assign, SPLIT_ASSIGN_ORACLE),
-        "setop_union_distinct": (setop_union_distinct, SETOP_UNION_DISTINCT_ORACLE),
-        "setop_intersect": (setop_intersect, SETOP_INTERSECT_ORACLE),
-        "dedup_simhash_fingerprint": (
-            dedup_simhash_fingerprint, SIMHASH_FINGERPRINT_ORACLE,
-        ),
-        "setop_except": (setop_except, SETOP_EXCEPT_ORACLE),
-        "sample_mixture_weighted": (
-            sample_mixture_weighted, SAMPLE_MIXTURE_ORACLE,
-        ),
-        "window_moving_frame": (
-            window_moving_frame, WINDOW_MOVING_FRAME_ORACLE,
-        ),
-        "topk_parts_by_revenue": (topk_parts_by_revenue, TOPK_PARTS_ORACLE),
-        "dedup_lsh_bucket_stats": (
-            dedup_lsh_bucket_stats, DEDUP_LSH_BUCKET_STATS_ORACLE,
-        ),
-        "media_resize_passthrough": (
-            media_resize_passthrough, MEDIA_RESIZE_PASSTHROUGH_ORACLE,
-        ),
-        "setop_intersect_all_bag": (
-            setop_intersect_all_bag, SETOP_INTERSECT_ALL_BAG_ORACLE,
-        ),
-        "scalar_string_kit": (scalar_string_kit, SCALAR_STRING_KIT_ORACLE),
-        "agg_cube": (agg_cube, AGG_CUBE_ORACLE),
-        "topk_per_group": (topk_per_group, TOPK_PER_GROUP_ORACLE),
-        "text_quality_score": (
-            text_quality_score, TEXT_QUALITY_SCORE_ORACLE,
-        ),
-        "count_probe": (count_probe, COUNT_PROBE_ORACLE),
-        "agg_having_filter": (agg_having_filter, AGG_HAVING_FILTER_ORACLE),
-    }
-
-
-@pytest.mark.parametrize("name", _RETIRED)
-def test_retired_queries_still_match(spark, name):
-    fn, oracle = _retired()[name]
-    result = compare_query(name, fn(spark, SF_SMOKE), oracle, SF_SMOKE)
-    assert result.ok, result
-
-
-def test_retired_list_matches_mapping():
-    assert sorted(_RETIRED) == sorted(_retired())

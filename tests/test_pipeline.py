@@ -19,7 +19,12 @@ from erathia_market_etl_spark.generator.simulate import (
     ARTIFACT_POOL_SIZE,
     MarketSimulator,
 )
-from erathia_market_etl_spark.pipeline import run_full_pipeline, run_gold, run_silver
+from erathia_market_etl_spark.pipeline import (
+    list_marts,
+    run_full_pipeline,
+    run_gold,
+    run_silver,
+)
 
 N_WEEKS = 30
 
@@ -141,6 +146,8 @@ def test_gold_marts(pipeline_result, spark):
         "dm_faction_economy", "dm_resource_price_history",
         "dm_top_vip_customers", "dm_artifact_sales_summary",
     }
+    # S11 catalog introspection: the viewer discovers the marts by name
+    assert set(marts) <= set(list_marts(spark))
     q1 = marts["dm_faction_economy"].collect()
     assert 0 < len(q1) <= 9
     assert q1[0].asDict().keys() == {

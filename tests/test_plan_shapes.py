@@ -78,11 +78,9 @@ def test_q1_prunes_columns_and_broadcasts_dims(spark):
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark):
-    # retired from the driver rotation r8 (slot economics) — the O4
-    # physical-shape pin lives on here, against the function directly
-    from erathia_market_etl_spark.plans.relational import topk_parts_by_revenue
-
-    df = topk_parts_by_revenue(spark, SF_T2)
+    # O4: ORDER BY + LIMIT plans as per-partition heaps and a driver
+    # merge of k rows, never a global sort
+    df = QUERIES["q3_top_customers"](spark, SF_T2)
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
 
@@ -284,33 +282,18 @@ def test_lsh_pipelines_minimal_shuffle_inventory(spark):
 
 @pytest.mark.parametrize(
     "name",
-    ["topk_per_group", "dedup_minhash_lsh_pairs", "sim_similar_pairs"],
+    ["dedup_minhash_lsh_pairs", "sim_similar_pairs"],
 )
 def test_rank_limits_push_map_side_group_limit(spark, name):
     """Every rank-limit window in the registry must plan a PARTIAL
     WindowGroupLimit: each map task keeps only k rows per group BEFORE
-    the window's exchange. This is what makes the two shapes safe at
-    scale — topk_per_group partitions by a 3-value key (without the
-    partial limit, one task per key sorts the whole group), and the
-    LSH bucket caps bound degenerate corpora (an all-identical corpus
-    collapses into one bucket; the partial limit caps it at 256 rows
-    per map task instead of N rows in one sort). Losing the pushdown
-    (e.g. by switching row_number to a non-rank function or adding a
-    second window column) would still pass the value oracles."""
-    # topk_per_group's driver slot was retired r13, but this pin reads
-    # the FUNCTION, not the registration — the kernel shape must hold
-    # for the retired-set compare too. Explicit name->callable map
-    # (r13 ADVICE): a bare `QUERIES.get(name, topk_per_group)` would
-    # silently re-test topk_per_group for ANY name that later leaves
-    # the registry, turning this pin vacuous.
-    from erathia_market_etl_spark.plans.relational import topk_per_group
-
-    retired_fns = {"topk_per_group": topk_per_group}
-    if name in QUERIES:
-        fn = QUERIES[name]
-    else:
-        fn = retired_fns[name]  # KeyError = unknown name, loud failure
-    plan = plan_of(fn(spark, SF_T2))
+    the window's exchange. This is what makes the LSH bucket caps safe
+    on degenerate corpora (an all-identical corpus collapses into one
+    bucket; the partial limit caps it at 256 rows per map task instead
+    of N rows in one sort). Losing the pushdown (e.g. by switching
+    row_number to a non-rank function or adding a second window column)
+    would still pass the value oracles."""
+    plan = plan_of(QUERIES[name](spark, SF_T2))
     assert re.search(r"WindowGroupLimit .*, Partial", plan), name
     assert re.search(r"WindowGroupLimit .*, Final", plan), name
 
@@ -567,7 +550,8 @@ def test_funnel_reuses_user_partitioning(spark):
 def test_sample_k_per_group_uses_window_group_limit(spark):
     """The rn <= k cut must push into the window sort (WindowGroupLimit)
     so each map task keeps a running top-k per source before the
-    exchange — the topk_per_group discipline applied to sampling."""
+    exchange — the sim_topk_batch rank-cut discipline applied to
+    sampling."""
     from erathia_market_etl_spark.plans.sampling_queries import (
         sample_k_per_group,
     )

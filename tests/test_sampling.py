@@ -57,14 +57,24 @@ def test_freq_items_superset_guarantee(spark):
 
 
 def test_hash_split_is_machine_independent(spark):
-    # the production split must not depend on partitioning: recompute
-    # with a different partition count, expect identical assignment
-    from erathia_market_etl_spark.plans.sampling_queries import sample_split_assign
+    # the split bucket must not depend on partitioning: assign it over
+    # one partition and over 13 hash-shuffled ones, expect identical
+    # assignment
+    from pyspark.sql import functions as F
 
-    a = sample_split_assign(spark, SF_T2).collect()
-    b = (sample_split_assign(spark, SF_T2)
-         .repartition(13).orderBy("doc_id").collect())
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    from erathia_market_etl_spark.plans.sampling_queries import _bucket
+    from erathia_market_etl_spark.sources.parquet_io import load_table
+
+    docs = load_table(spark, SF_T2, "documents").select("doc_id")
+
+    def assign(df):
+        return sorted(map(tuple, df.select(
+            "doc_id", _bucket(F.col("doc_id")).alias("bucket")).collect()))
+
+    a = assign(docs.coalesce(1))
+    b = assign(docs.repartition(13, "doc_id"))
+    assert a == b
+    assert len({bucket for _, bucket in a}) > 1
 
 
 def test_bucket_arithmetic_is_engine_safe():
@@ -296,8 +306,8 @@ def test_leakage_safe_splits_keep_pairs_together(spark):
     """The leakage-safety invariant, non-vacuously: (a) every LSH
     candidate pair lands in ONE split; (b) the fixture actually
     contains pairs whose DOC-ID buckets straddle a split cut — i.e.
-    the naive sample_split_assign provably separates near-dups that
-    this query keeps together; (c) singletons keep their own doc_id as
+    a naive doc-id hash split (``_bucket(doc_id)``) provably separates
+    near-dups that this query keeps together; (c) singletons keep their own doc_id as
     group (the assignment degenerates to the naive one exactly where
     no duplication exists)."""
     from pyspark.sql import functions as F

@@ -28,8 +28,8 @@ Rules (each a named check so failures read like a lint report):
       layout; r3 VERDICT on sampleBy).
   R5  every WindowGroupLimit is two-phase (Partial before the exchange
       AND Final after) — the map-side phase is what bounds low-
-      cardinality partition keys (topk_per_group) and degenerate LSH
-      buckets (the 256 cap); a half-fired pushdown would silently
+      cardinality partition keys and degenerate LSH buckets (the 256
+      cap); a half-fired pushdown would silently
       revert to one task sorting a whole group. Named queries are
       pinned in test_plan_shapes.py; this catches any FUTURE
       rank-limit window added to the registry.

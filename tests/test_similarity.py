@@ -49,6 +49,20 @@ def test_sign_band_cap_bounds_degenerate_corpus(degenerate_emb):
     assert all(r["vec_a"] < 16 and r["vec_b"] < 16 for r in rows)
 
 
+@pytest.mark.parametrize("name", ["emb.v", "emb-v"])
+def test_sign_band_string_path_quotes_column_name(degenerate_emb, name):
+    """The single-parse string path must resolve a name that needs
+    backticks exactly like the Column path does."""
+    from erathia_market_etl_spark.operators.similarity import sign_band_array
+
+    df = degenerate_emb.limit(3).withColumnRenamed("embedding", name)
+    quoted = F.col(f"`{name}`")
+    rows = df.select(
+        sign_band_array(name).alias("s"), sign_band_array(quoted).alias("c")
+    ).collect()
+    assert all(r["s"] == r["c"] and len(r["s"]) == 4 for r in rows)
+
+
 def test_sign_band_stats_report_overflow(degenerate_emb):
     stats = lsh_bucket_stats(
         sign_band_table(degenerate_emb), ["band_idx", "band_key"], max_bucket=16
@@ -209,9 +223,8 @@ def test_assign_cells_zero_norm_guard(spark):
 
 
 def test_sim_topk_lsh_bucket_matches_oracle(spark):
-    """Driver slot retired r5 (paid for sim_ivf_cell_quality); the
-    operator keeps the SAME oracle check locally, through the same
-    compare the driver runs."""
+    """sim_topk_lsh_bucket is local-only; it keeps the SAME oracle check
+    here, through the same compare the driver runs."""
     from erathia_market_etl_spark.plans.similarity_queries import (
         LSH_BUCKET_ORACLE,
         sim_topk_lsh_bucket,
@@ -797,9 +810,7 @@ def test_fixture_corpora_hit_frozen_fingerprint_arms():
     _EMB_FINGERPRINT_CTE corpus signature. This pins that the driver
     fixtures land on their FROZEN arms — and therefore that the r14
     synthetic-sf1 arm (_EMB_SIG_SF1SYN) is machine-verified UNREACHED
-    by every registered query's fixture execution, which is what lets
-    its addition skip a _CHANGED re-attestation slot (the r8
-    unreached-branch precedent in plans/registry.py)."""
+    by every registered query's fixture execution."""
     import duckdb
 
     from erathia_market_etl_spark.plans.similarity_queries import (

@@ -251,6 +251,22 @@ def test_adaptive_partitions_falls_back_without_jdf(spark):
     assert adaptive_partitions(NoJdf()) == cap
 
 
+def test_adaptive_partitions_survives_connect_like_session():
+    """Neither an int-castable conf value, a sparkContext nor _jdf:
+    fall back to Spark's default shuffle width, never raise."""
+    from types import SimpleNamespace
+
+    from erathia_market_etl_spark.sources.parquet_io import (
+        adaptive_partitions,
+    )
+
+    def bad_conf(key):
+        raise ValueError(key)
+
+    session = SimpleNamespace(conf=SimpleNamespace(get=bad_conf))
+    assert adaptive_partitions(SimpleNamespace(sparkSession=session)) == 200
+
+
 def test_bucket_stats_report_overflow(degenerate_docs):
     from erathia_market_etl_spark.operators.dedup import (
         lsh_bucket_stats,

@@ -9,10 +9,9 @@ single generated table:
 
     name | set | newest green round | evidence source | SFs checked
 
-Sets: ``registered`` (in the driver's 100-slot registry; attested by a
-CORRECTNESS row when slotted, by a displaced-sweep LOCALCHECK row when
-not), ``local-only`` (the extension wave, LOCALCHECK only), ``retired``
-(kept queries whose driver slots were re-spent, LOCALCHECK only).
+Sets: ``registered`` (in the driver's registry; attested by CORRECTNESS
+and LOCALCHECK rows) and ``local-only`` (the extension wave, LOCALCHECK
+only).
 
 Run at round close (after tools/localcheck.py): the table is committed
 so a judge can diff it against the JSON artifacts directly.
@@ -99,13 +98,12 @@ def collect_evidence(root: Path) -> dict[str, dict]:
 
 
 def query_sets() -> dict[str, str]:
-    """name -> registered | local-only | retired, from the live code."""
+    """name -> registered | local-only, from the live code."""
     from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued, _retired
+    from tests.test_oracle_parity import _queued
 
     sets = {n: "registered" for n in all_queries()}
     sets.update({n: "local-only" for n in _queued()})
-    sets.update({n: "retired" for n in _retired()})
     return sets
 
 
@@ -113,11 +111,10 @@ def query_families() -> dict[str, str]:
     """name -> defining plan module (the family grouping COVERAGE.md's
     narrative sections follow), from the live callables."""
     from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued, _retired
+    from tests.test_oracle_parity import _queued
 
     fns: dict[str, object] = dict(all_queries())
     fns.update({n: fq[0] for n, fq in _queued().items()})
-    fns.update({n: fq[0] for n, fq in _retired().items()})
     return {
         n: getattr(f, "__module__", "?").rsplit(".", 1)[-1]
         for n, f in fns.items()
@@ -137,7 +134,7 @@ def write_family_summary(
     rows: dict[str, dict] = {}
     for name, fam in families.items():
         r = rows.setdefault(
-            fam, {"registered": 0, "local-only": 0, "retired": 0, "newest": 0}
+            fam, {"registered": 0, "local-only": 0, "newest": 0}
         )
         r[sets.get(name, "local-only")] += 1
         ev = evidence.get(name)
@@ -146,22 +143,22 @@ def write_family_summary(
     lines = [
         _SUMMARY_BEGIN,
         "",
-        "| family (plan module) | registered | local-only | retired | total | newest green |",
-        "|---|---|---|---|---|---|",
+        "| family (plan module) | registered | local-only | total | newest green |",
+        "|---|---|---|---|---|",
     ]
-    tot = {"registered": 0, "local-only": 0, "retired": 0}
+    tot = {"registered": 0, "local-only": 0}
     for fam in sorted(rows):
         r = rows[fam]
-        total = r["registered"] + r["local-only"] + r["retired"]
+        total = r["registered"] + r["local-only"]
         for k in tot:
             tot[k] += r[k]
         lines.append(
             f"| {fam} | {r['registered']} | {r['local-only']} | "
-            f"{r['retired']} | {total} | r{r['newest']} |"
+            f"{total} | r{r['newest']} |"
         )
     lines.append(
         f"| **all** | **{tot['registered']}** | **{tot['local-only']}** | "
-        f"**{tot['retired']}** | **{sum(tot.values())}** | |"
+        f"**{sum(tot.values())}** | |"
     )
     lines += ["", _SUMMARY_END]
     block = "\n".join(lines)
@@ -281,32 +278,19 @@ def main() -> None:
     lines += [
         "",
         f"Totals: {len(sets)} queries ({sum(1 for v in sets.values() if v == 'registered')} "
-        f"registered, {sum(1 for v in sets.values() if v == 'local-only')} local-only, "
-        f"{sum(1 for v in sets.values() if v == 'retired')} retired); "
+        f"registered, {sum(1 for v in sets.values() if v == 'local-only')} local-only); "
         f"{len(with_evidence)} with green evidence, {len(missing)} never-green"
         + (f" ({', '.join(missing)})" if missing else "")
         + f"; newest round seen: r{newest}.",
         "",
     ]
-    # aged = evidence older than (newest - 1). A query sitting in the
-    # CURRENT driver slot order (priority[:50]) is attested by the
-    # in-flight round's CORRECTNESS pass — report it as pending, not
-    # aged: at round close this tool runs after LOCALCHECK (newest =
-    # the new round) but before the driver stamps CORRECTNESS_r{N}.
-    from erathia_market_etl_spark.plans import all_queries as _aq
-
-    slotted = set(list(_aq())[:50])
-    aged, pending = [], []
-    for n in sorted(sets):
-        if n in evidence and evidence[n]["round"] < newest - 1:
-            (pending if n in slotted else aged).append(
-                f"{n}(r{evidence[n]['round']})"
-            )
+    # aged = evidence older than (newest - 1)
+    aged = [
+        f"{n}(r{evidence[n]['round']})" for n in sorted(sets)
+        if n in evidence and evidence[n]["round"] < newest - 1
+    ]
     lines += [
-        f"Aged past the 2-round window: "
-        f"{', '.join(aged) if aged else 'none'}. "
-        f"Pending this round's driver pass (slotted, evidence from the "
-        f"previous rotation half): {len(pending)} queries.",
+        f"Aged past the 2-round window: {', '.join(aged) if aged else 'none'}.",
         "",
     ]
     out_path = root / "COVERAGE_EVIDENCE.md"
@@ -318,7 +302,6 @@ def main() -> None:
         "green": len(with_evidence),
         "never_green": missing,
         "aged_past_window": aged,
-        "pending_driver_slot": len(pending),
         "artifact": str(out_path),
         **advice_stats,
     }))

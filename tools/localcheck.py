@@ -1,28 +1,14 @@
-"""Per-round driver-style compare over the LOCAL-ONLY query set.
+"""Driver-style compare over every registered and local-only query.
 
-The driver's CORRECTNESS gate stamps the 100 registered queries; the
-local-only extension wave (the ``_queued()`` set in
-tests/test_oracle_parity.py) and the retired-from-driver-slots set
-re-verify only through pytest. This tool runs the driver's EXACT
-compare (same ``compare_query`` → toPandas vs duckdb .df(), same
-rows/schema/order-insensitive-value-hash checks) over both sets at
-sf0.01 — the driver's t2 scale, one decade above the pytest smoke SF —
-and writes ``LOCALCHECK_r{N}.json`` next to the CORRECTNESS artifacts,
-row format identical, so the judge gets the same per-round signal for
-the extension families (r8 VERDICT "Next round" #8). Since r11 it also
-sweeps the DISPLACED half of the registered rotation (priority slots
-51+), so no registered query's evidence can silently age past the
-2-round window when re-attestations crowd the driver cap (r10 VERDICT
-item 1 — the winnowing displacement).
+Runs the driver's EXACT compare (same ``compare_query`` → toPandas vs
+duckdb .df(), same rows/schema/order-insensitive-value-hash checks) over
+the whole registry plus the local-only set (the ``_queued()`` map in
+tests/test_oracle_parity.py) and writes ``LOCALCHECK_r{N}.json`` next to
+the CORRECTNESS artifacts, row format identical.
 
-Usage: python tools/localcheck.py [round] [sf_dir] [--full]
+Usage: python tools/localcheck.py [round] [sf_dir]
   round  defaults to (max committed CORRECTNESS round) + 1
-  sf_dir defaults to /root/testdata/sf0.01
-  --full additionally sweeps the driver-slotted top-50 registered
-         queries (tag "registered"), making the artifact cover the
-         ENTIRE registry — used for the per-round synthetic-sf1
-         exactness sweep (r15, VERDICT r14 item 5), where the slotted
-         queries have no driver artifact of their own at that SF.
+  sf_dir defaults to DEFAULT_SF_DIR (the sf0.01 fixture)
 """
 
 from __future__ import annotations
@@ -63,40 +49,20 @@ def _current_round(root: Path) -> int:
 
 def main() -> None:
     root = Path(__file__).resolve().parents[1]
-    args = [a for a in sys.argv[1:] if a != "--full"]
-    full = "--full" in sys.argv[1:]
+    args = sys.argv[1:]
     rnd = int(args[0]) if len(args) > 0 else _current_round(root)
-    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
+    sf_dir = args[1] if len(args) > 1 else DEFAULT_SF_DIR
 
-    from tests.test_oracle_parity import _queued, _retired
+    from erathia_market_etl_spark.plans import all_oracles, all_queries
+    from tests.test_oracle_parity import _queued
 
-    targets: dict[str, tuple] = {}
+    oracles = all_oracles()
+    targets: dict[str, tuple] = {
+        name: (fn, oracles[name], "registered")
+        for name, fn in all_queries().items()
+    }
     for name, (fn, oracle) in _queued().items():
         targets[name] = (fn, oracle, "local-only")
-    for name, (fn, oracle) in _retired().items():
-        targets[name] = (fn, oracle, "retired")
-
-    # r10 VERDICT item 1: also sweep every REGISTERED query that falls
-    # outside the driver's 50-slot cap this round — the displaced half
-    # of the rotation. Without this, a displacement silently ages the
-    # displaced query's newest green row (the r10 winnowing finding);
-    # with it, every registered query gets driver-style evidence every
-    # round: a CORRECTNESS row when slotted, a LOCALCHECK row when not.
-    from erathia_market_etl_spark.plans import all_oracles, all_queries
-
-    queries = all_queries()  # priority order == driver slot order
-    oracles = all_oracles()
-    for name in list(queries)[50:]:
-        if name not in targets and name in oracles:
-            targets[name] = (queries[name], oracles[name], "displaced")
-
-    # --full: the driver-slotted top 50 too — at a non-default SF those
-    # queries have no driver artifact, so a full-registry exactness
-    # sweep must run them itself (r15: the synthetic-sf1 decade sweep)
-    if full:
-        for name in list(queries)[:50]:
-            if name not in targets and name in oracles:
-                targets[name] = (queries[name], oracles[name], "registered")
 
     spark = get_spark(EngineConfig(app_name="erathia-localcheck"))
     spark.sparkContext.setLogLevel("ERROR")
