@@ -18,6 +18,7 @@ from ..operators import text as TX
 from ..operators.similarity import round6
 from ..sources.parquet_io import adaptive_partitions, load_table
 from .registry import query
+from .stage_cache import session_stage
 
 _MARKER_SQL = {
     lang: "(" + ", ".join(f"'{w}'" for w in words) + ")"
@@ -977,7 +978,7 @@ FUNNEL_CONTEXT_LEN = 512  # tokens per training context window
 # the corpus-wide LSH candidate-pair CTE the dedup family publishes —
 # imported so the funnel's edges are IDENTICAL (same bands, same
 # bucket caps) to dedup_minhash_lsh_pairs' on both engines
-from .dedup_queries import _CANDIDATES_CTE  # noqa: E402
+from .dedup_queries import _CANDIDATES_CTE, shared_minhash_pairs  # noqa: E402
 
 PIPELINE_TRAINING_FUNNEL_ORACLE = f"""
     WITH RECURSIVE {_CANDIDATES_CTE},
@@ -1026,39 +1027,41 @@ PIPELINE_TRAINING_FUNNEL_ORACLE = f"""
     """
 
 
-# Session-scoped cache of the funnel's persisted 4-column gate frame
-# (r17, VERDICT r16 item 6): the r16 funnel persisted a fresh gate
-# frame per invocation and never unpersisted it — a cache-entry leak in
-# any long-lived session (the CacheManager would silently serve the
-# first invocation's frame to later plan-identical invocations, so the
-# leak was also an undisclosed cross-invocation reuse). Keyed and
-# evicted exactly like dedup_queries._SHARED_BANDS (the pattern the
-# r16 ADVICE prescribes): at most _GATE_CACHE_MAX persisted gate
-# frames per session, oldest unpersisted on eviction, all dropped with
-# the JVM. Values are deterministic, so reuse is value-invisible.
-# Assumes the parquet data under sf_dir is immutable for the session's
-# life: the key is (appId, sf_dir), so data rewritten in place under the
-# same sf_dir is served stale until eviction. No data fingerprint on
-# purpose — listing the files on every call would add work to every
-# warm funnel run; use a new sf_dir (or a new session) for new data.
-_SHARED_GATES: dict[tuple[str, str], DataFrame] = {}
-_GATE_CACHE_MAX = 4
-
-
 def _shared_gate_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    """The funnel's gate frame, a session stage (plans/stage_cache.py).
+    It feeds FOUR subtrees (both semi-join key sets, the raw/gated
+    counts, the kept-side aggregate), so the narrow 4-column projection
+    is persisted and the tokenize/regex rules run once (r16). Node-sized:
+    text never enters the cache."""
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    g = _SHARED_GATES.get(key)
-    if g is None:
-        while len(_SHARED_GATES) >= _GATE_CACHE_MAX:
-            _SHARED_GATES.pop(next(iter(_SHARED_GATES))).unpersist()
+    def build(stats: dict) -> DataFrame:
+        gate = _gate_frame(load_table(spark, sf_dir, "documents"))
+        return gate.select("doc_id", "source", "n_tokens", "keep").persist()
+
+    return session_stage(spark, sf_dir, "funnel_gate", build)
+
+
+def _funnel_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Component labels over the gate-induced subgraph (candidate pairs
+    whose BOTH endpoints survived the gate), a session stage."""
+    from ..operators.graph import connected_components_auto
+
+    def build(stats: dict) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        g = _gate_frame(docs).select(
-            "doc_id", "source", "n_tokens", "keep"
-        ).persist()
-        _SHARED_GATES[key] = g
-    return g
+        ge = _shared_gate_frame(spark, sf_dir).filter(F.col("keep"))
+        ga = ge.select(F.col("doc_id").alias("doc_a"))
+        gb = ge.select(F.col("doc_id").alias("doc_b"))
+        ed = (
+            shared_minhash_pairs(spark, sf_dir)
+            .join(ga, "doc_a", "left_semi")
+            .join(gb, "doc_b", "left_semi")
+        )
+        return connected_components_auto(
+            ed, "doc_a", "doc_b",
+            stats=stats, num_partitions=adaptive_partitions(docs),
+        )
+
+    return session_stage(spark, sf_dir, "funnel_components", build)
 
 
 @query("pipeline_training_funnel", oracle=PIPELINE_TRAINING_FUNNEL_ORACLE)
@@ -1089,34 +1092,12 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     restriction is two keys-only semi-joins; components run on the
     (small) candidate-pair set; the final stages are two
     group-count-sized aggregates meeting in a tiny per-source join. No
-    stage shuffles document text."""
-    from ..operators.graph import connected_components_auto
-    from .dedup_queries import shared_minhash_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    # the gate frame feeds FOUR subtrees (both semi-join key sets, the
-    # per-source raw/gated counts, and the kept-side aggregate); persist
-    # the narrow 4-column projection so the tokenize/regex rule stack
-    # runs once per funnel, not once per consumer (r16, guide §2.4 —
-    # profile showed the gate re-executing in every branch). Node-sized:
-    # (doc_id, source, n_tokens, keep) — text never enters the cache.
-    # r17 (VERDICT r16 item 6 / ADVICE): the persist is now registered
-    # in the session-scoped keyed cache below — the r16 version leaked
-    # one cached frame per invocation for the session's lifetime.
+    stage shuffles document text. The gate frame and the component
+    labels are session stages: a warm call constructs with no job."""
     g = _shared_gate_frame(spark, sf_dir)
     ge = g.filter(F.col("keep")).select("doc_id", "source", "n_tokens")
-    pairs = shared_minhash_pairs(spark, sf_dir)
-    ga = ge.select(F.col("doc_id").alias("doc_a"))
-    gb = ge.select(F.col("doc_id").alias("doc_b"))
-    ed = (
-        pairs.join(ga, "doc_a", "left_semi")
-        .join(gb, "doc_b", "left_semi")
-    )
     non_reps = (
-        connected_components_auto(
-            ed, "doc_a", "doc_b",
-            num_partitions=adaptive_partitions(docs),
-        )
+        _funnel_labels(spark, sf_dir)
         .filter(F.col("v") != F.col("component_id"))
         .select(F.col("v").alias("doc_id"))
     )

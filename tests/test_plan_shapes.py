@@ -772,40 +772,119 @@ def test_shared_minhash_band_stage_is_cached_and_live_capped(spark):
     assert c1 is c2
 
 
-def test_shared_band_cache_evicts_beyond_cap(spark, tmp_path):
-    """The shared-stage cache's "handful of entries" claim is enforced:
-    past _SHARED_CACHE_MAX distinct (session, sf_dir) keys the oldest
-    band table is unpersisted and its component entry dropped — a
-    long-lived session sweeping many directories must not accumulate
-    persisted corpora."""
-    from erathia_market_etl_spark.plans import dedup_queries as dq
+def test_shared_band_cache_evicts_beyond_cap(spark, tmp_path, caplog):
+    """The session stage cache holds at most MAX_KEYS (session, sf_dir)
+    keys: past the cap the oldest key is evicted with ALL its stages —
+    its persisted band table and gate frame are both unpersisted and no
+    stage of that key remains (a long-lived session sweeping many
+    directories must not accumulate persisted corpora). Each eviction
+    is reported on the cache logger."""
+    import logging
+
+    from erathia_market_etl_spark.plans import stage_cache as sc
+    from erathia_market_etl_spark.plans.dedup_queries import (
+        shared_minhash_bands,
+    )
+    from erathia_market_etl_spark.plans.text_queries import (
+        _shared_gate_frame,
+    )
 
     dirs = []
-    for i in range(dq._SHARED_CACHE_MAX + 1):
+    for i in range(sc.MAX_KEYS + 1):
         d = str(tmp_path / f"sf{i}")
         spark.createDataFrame(
             [(1, "srcA", f"alpha beta gamma {i}")],
             "doc_id long, source string, text string",
         ).write.parquet(f"{d}/documents.parquet")
         dirs.append(d)
+    keys = [sc.stage_key(spark, d) for d in dirs]
 
-    before = dict(dq._SHARED_BANDS)
     try:
-        first = dq.shared_minhash_bands(spark, dirs[0])
-        for d in dirs[1:]:
-            dq.shared_minhash_bands(spark, d)
-        assert len(dq._SHARED_BANDS) <= dq._SHARED_CACHE_MAX
-        # the first (oldest) entry was evicted and unpersisted
-        import os
-
-        key0 = (spark.sparkContext.applicationId, os.path.abspath(dirs[0]))
-        assert key0 not in dq._SHARED_BANDS
-        assert not first.storageLevel.useMemory
+        bands = shared_minhash_bands(spark, dirs[0])
+        gate = _shared_gate_frame(spark, dirs[0])
+        assert bands.is_cached and gate.is_cached
+        with caplog.at_level(logging.DEBUG, logger=sc.log.name):
+            for d in dirs[1:]:
+                shared_minhash_bands(spark, d)
+        assert len(sc._STAGES) <= sc.MAX_KEYS
+        assert keys[0] not in sc._STAGES
+        assert not bands.storageLevel.useMemory
+        assert not gate.storageLevel.useMemory
+        evicted = [r.getMessage() for r in caplog.records
+                   if r.getMessage().startswith("evict")]
+        assert any("minhash_bands" in m for m in evicted), evicted
+        assert any("funnel_gate" in m for m in evicted), evicted
     finally:
-        # restore the real-fixture entries so sibling tests keep their
-        # warm cache regardless of execution order
-        for k, v in list(dq._SHARED_BANDS.items()):
-            if k not in before:
-                dq._SHARED_BANDS.pop(k).unpersist()
-                dq._SHARED_COMPONENTS.pop(k, None)
-        dq._SHARED_BANDS.update(before)
+        for k in keys:
+            sc.evict(k)
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Run ``fn()`` under job group ``group``; return the number of Spark
+    jobs the group launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_construction_launches_no_eager_jobs(spark, caplog):
+    """Session stages make plan construction job-free once warm: after a
+    first (cold or warm) call, a second pipeline_training_funnel
+    construction launches NO Spark job — its gate frame and its
+    gate-induced component labels are served from the stage cache — and
+    dedup_corpus_representatives launches at most one (the schema
+    inference of its ``documents`` scan)."""
+    import logging
+    import uuid
+
+    run = uuid.uuid4().hex
+    names = ("pipeline_training_funnel", "dedup_corpus_representatives")
+    _jobs_in_group(
+        spark, f"cold-{run}",
+        lambda: [QUERIES[n](spark, SF_T2).count() for n in names],
+    )
+    with caplog.at_level(logging.DEBUG, logger="erathia_market_etl_spark.cache"):
+        funnel_jobs = _jobs_in_group(
+            spark, f"warm-funnel-{run}",
+            lambda: QUERIES["pipeline_training_funnel"](spark, SF_T2),
+        )
+        reps_jobs = _jobs_in_group(
+            spark, f"warm-reps-{run}",
+            lambda: QUERIES["dedup_corpus_representatives"](spark, SF_T2),
+        )
+    assert funnel_jobs == 0
+    assert reps_jobs <= 1
+    hits = {r.getMessage().split()[1] for r in caplog.records
+            if r.getMessage().startswith("hit")}
+    assert {"funnel_gate", "funnel_components", "pair_components"} <= hits
+
+
+def test_warm_funnel_rows_equal_cold_rows_and_oracle(spark):
+    """Reusing the funnel's stages is value-invisible: the warm call's
+    rows equal those of a cold call made after the cache is cleared,
+    and both match the DuckDB oracle."""
+    from erathia_market_etl_spark.plans import all_oracles
+    from erathia_market_etl_spark.plans import stage_cache as sc
+    from erathia_market_etl_spark.testing import compare_query
+
+    name = "pipeline_training_funnel"
+    oracle = all_oracles()[name]
+    key = sc.stage_key(spark, SF_T2)
+    funnel = QUERIES[name]
+    funnel(spark, SF_T2)  # make sure the stages exist
+    warm = funnel(spark, SF_T2)
+    warm_rows = [tuple(r) for r in warm.collect()]
+    assert compare_query(name, warm, oracle, SF_T2).ok
+
+    sc.evict(key)
+    assert key not in sc._STAGES
+    cold = funnel(spark, SF_T2)
+    assert "funnel_components" in sc._STAGES[key]  # rebuilt
+    assert [tuple(r) for r in cold.collect()] == warm_rows
+    assert compare_query(name, cold, oracle, SF_T2).ok
