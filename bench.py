@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from erathia_market_etl_spark.config import EngineConfig
-from erathia_market_etl_spark.plans import all_queries
+from erathia_market_etl_spark.plans import all_queries, local_queries
 from erathia_market_etl_spark.session import get_spark
 
 # Drift-history policy: per-query root-cause narratives for past bench
@@ -131,15 +131,11 @@ TIER2 = [
 
 
 def _tier2_queries():
-    """Tier-2 callables: registered ones come from the registry,
-    local-only ones from their plan modules, and the streaming
-    maintenance sink is a closure over a throwaway state dir."""
+    """Tier-2 callables that are not queries: the streaming maintenance
+    sink, a closure over a throwaway state dir. Every other tier-2 name
+    resolves through all_queries(), then local_queries(), in main()."""
     import shutil
     import tempfile
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        scd2_user_tier_history,
-    )
 
     def stream_rollup_maintenance(spark, sf_dir):
         # one AvailableNow maintenance run: stage the event log as a
@@ -166,19 +162,7 @@ def _tier2_queries():
             shutil.rmtree(work, ignore_errors=True)
         return spark.range(n)
 
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        agg_hll_registers,
-    )
-
-    # registered tier-2 names (graph_pagerank_influence,
-    # events_peak_concurrency, and since r14 mart_revenue_gini) resolve
-    # through the registry fallback in main(); only local-only callables
-    # and the streaming closure need explicit entries here
-    return {
-        "scd2_user_tier_history": scd2_user_tier_history,
-        "stream_rollup_maintenance": stream_rollup_maintenance,
-        "agg_hll_registers": agg_hll_registers,
-    }
+    return {"stream_rollup_maintenance": stream_rollup_maintenance}
 
 
 # Host-calibration probe (r10, VERDICT r9 item 3): r9's bench sat in a
@@ -361,9 +345,10 @@ def main() -> None:
     # never folded into `value` or the vs_baseline ratios (the frozen
     # baseline never timed these shapes)
     tier2_fns = _tier2_queries()
+    local = {n: fn for n, (fn, _) in local_queries().items()}
     tier2: dict[str, float] = {}
     for name in TIER2:
-        fn = tier2_fns.get(name) or registry[name]
+        fn = tier2_fns.get(name) or registry.get(name) or local[name]
         best = float("inf")
         for _ in range(N_RUNS):
             t0 = time.perf_counter()

@@ -2,8 +2,8 @@
 
 Mirrors the semantics of the reference's ``src/config.py:1-14`` (paths,
 simulation dates, default rates, chunk size) but adds the knobs a
-100 TB-scale Spark deployment needs: shuffle partitioning, broadcast
-threshold, and the decimal-money option (SURVEY.md §7.4 "Float money").
+100 TB-scale Spark deployment needs: shuffle partitioning and the
+broadcast threshold.
 """
 
 from __future__ import annotations
@@ -53,10 +53,6 @@ class EngineConfig:
     auto_broadcast_join_threshold: str = "64MB"
     # AQE handles skew joins + partition coalescing at runtime.
     adaptive_enabled: bool = True
-    # money as DecimalType(18,2) instead of double: exact at 100 TB,
-    # but the DuckDB oracle and the reference both use double, so the
-    # default stays double for parity (SURVEY.md §1.3).
-    decimal_money: bool = False
     session_timezone: str = "UTC"
     # 4g suits the driver fixtures (<= sf0.1); decade-up local runs
     # (tools/gen_scale_step.py's sf1) need more heap per the 32-thread

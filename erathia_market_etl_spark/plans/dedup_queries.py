@@ -413,8 +413,7 @@ def dedup_corpus_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_fuzzy_prefix_block: blocking + edit-distance verification (the
 # classic record-linkage / entity-resolution near-dup shape — character-
 # level and order-sensitive, catching small edits that token-set
-# Jaccard treats as identical and SimHash as noise). UNREGISTERED (r8
-# queue — local-only per the COVERAGE.md standing policy).
+# Jaccard treats as identical and SimHash as noise).
 # ---------------------------------------------------------------------------
 
 FUZZY_PREFIX_LEN = 16     # blocking key: first 16 chars
@@ -450,6 +449,7 @@ DEDUP_FUZZY_PREFIX_BLOCK_ORACLE = f"""
     """
 
 
+@query("dedup_fuzzy_prefix_block", DEDUP_FUZZY_PREFIX_BLOCK_ORACLE, local=True)
 def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy near-dup pairs by prefix blocking + Levenshtein verify:
     block on (first FUZZY_PREFIX_LEN (16) chars, length DIV
@@ -506,8 +506,7 @@ def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # dedup_bloom_incremental: Bloom-filter membership pre-pass for the
-# incremental-ingest path. UNREGISTERED (r9 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# incremental-ingest path.
 # ---------------------------------------------------------------------------
 
 from ..operators.dedup import (  # noqa: E402  (section-local import)
@@ -585,6 +584,7 @@ DEDUP_BLOOM_INCREMENTAL_ORACLE = f"""
     """
 
 
+@query("dedup_bloom_incremental", DEDUP_BLOOM_INCREMENTAL_ORACLE, local=True)
 def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership pre-pass for incremental-ingest dedup
     (the scale refinement of dedup_incremental_new_docs): history's
@@ -638,8 +638,7 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dedup_minhash_jaccard_estimate: the accuracy contract of the MinHash
 # sketch itself — signature-agreement estimate vs exact Jaccard per
-# candidate pair. UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# candidate pair.
 # ---------------------------------------------------------------------------
 
 _SIG_MATCHES_SQL = " + ".join(
@@ -703,6 +702,11 @@ DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE = f"""
     """
 
 
+@query(
+    "dedup_minhash_jaccard_estimate",
+    DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE,
+    local=True,
+)
 def dedup_minhash_jaccard_estimate(
     spark: SparkSession, sf_dir: str, audit_cap: int = AUDIT_PAIR_CAP
 ) -> DataFrame:
@@ -818,8 +822,7 @@ def dedup_minhash_jaccard_estimate(
 
 # ---------------------------------------------------------------------------
 # sample_hard_negatives: contrastive-training negative mining from the
-# LSH candidate stream. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# LSH candidate stream.
 # ---------------------------------------------------------------------------
 
 NEG_PER_ANCHOR = 2       # hardest negatives kept per anchor document
@@ -849,6 +852,7 @@ SAMPLE_HARD_NEGATIVES_ORACLE = f"""
     """
 
 
+@query("sample_hard_negatives", SAMPLE_HARD_NEGATIVES_ORACLE, local=True)
 def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARD-NEGATIVE mining for contrastive training (retrieval /
     embedding models): the strongest negatives are documents that

@@ -334,8 +334,7 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # rollup_multiresolution: hypertable-style continuous-aggregate rollup
-# (minute -> hour -> day). Local-only: oracle via
-# tests/test_oracle_parity.py::test_queued_queries_match.
+# (minute -> hour -> day).
 # ---------------------------------------------------------------------------
 
 ROLLUP_MULTIRESOLUTION_ORACLE = """
@@ -351,6 +350,7 @@ ROLLUP_MULTIRESOLUTION_ORACLE = """
     """
 
 
+@query("rollup_multiresolution", ROLLUP_MULTIRESOLUTION_ORACLE, local=True)
 def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-resolution rollup (the TimescaleDB continuous-aggregate /
     Druid rollup pattern): aggregate raw events to 1-minute grain, then
@@ -426,7 +426,7 @@ def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # timeseries_gap_fill: dense per-series time spine + last-observation-
-# carried-forward, UNREGISTERED (r8 queue, behind rollup_multiresolution).
+# carried-forward.
 # ---------------------------------------------------------------------------
 
 TIMESERIES_GAP_FILL_ORACLE = """
@@ -459,6 +459,7 @@ TIMESERIES_GAP_FILL_ORACLE = """
     """
 
 
+@query("timeseries_gap_fill", TIMESERIES_GAP_FILL_ORACLE, local=True)
 def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-fill + LOCF (the TimescaleDB time_bucket_gapfill / locf
     shape): build the dense hourly spine per series from that series'
@@ -594,8 +595,7 @@ def present_day_rollup(state: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # timeseries_rolling_zscore: rolling-window anomaly flags over the
-# hourly rollup, UNREGISTERED (r8 queue, with rollup_multiresolution /
-# timeseries_gap_fill).
+# hourly rollup.
 # ---------------------------------------------------------------------------
 
 ZSCORE_WINDOW = 24  # trailing hours (ROWS frame over observed hours)
@@ -634,6 +634,7 @@ TIMESERIES_ROLLING_ZSCORE_ORACLE = f"""
     """
 
 
+@query("timeseries_rolling_zscore", TIMESERIES_ROLLING_ZSCORE_ORACLE, local=True)
 def timeseries_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly flags: hourly totals per series, trailing
     ZSCORE_WINDOW (24)-row window, flag hours more than ZSCORE_FLAG (3)
@@ -703,8 +704,7 @@ def timeseries_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # scd2_user_tier_history: type-2 slowly-changing-dimension compaction
-# (CDC gaps-and-islands). UNREGISTERED (r9 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# (CDC gaps-and-islands).
 # ---------------------------------------------------------------------------
 
 SCD2_USER_TIER_HISTORY_ORACLE = """
@@ -746,6 +746,7 @@ SCD2_USER_TIER_HISTORY_ORACLE = """
     """
 
 
+@query("scd2_user_tier_history", SCD2_USER_TIER_HISTORY_ORACLE, local=True)
 def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-2 slowly-changing-dimension history of each user's value
     tier (low/mid/high), compacted from the raw event stream: one row
@@ -809,8 +810,6 @@ def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # cohort_daily_retention: signup-cohort x day-offset activity grid.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 COHORT_DAILY_RETENTION_ORACLE = """
@@ -839,6 +838,7 @@ COHORT_DAILY_RETENTION_ORACLE = """
     """
 
 
+@query("cohort_daily_retention", COHORT_DAILY_RETENTION_ORACLE, local=True)
 def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily cohort-retention grid (the product-analytics retention
     triangle): users are cohorted by the calendar DAY of their first
@@ -889,8 +889,7 @@ def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # markov_event_transitions: first-order behavior model of the event
-# stream. UNREGISTERED (r9 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# stream.
 # ---------------------------------------------------------------------------
 
 MARKOV_EVENT_TRANSITIONS_ORACLE = """
@@ -916,6 +915,7 @@ MARKOV_EVENT_TRANSITIONS_ORACLE = """
     """
 
 
+@query("markov_event_transitions", MARKOV_EVENT_TRANSITIONS_ORACLE, local=True)
 def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of per-user event behavior:
     for each (from_type, to_type) pair, the count of consecutive
@@ -957,8 +957,6 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # growth_accounting_daily: DAU split into new / returning (+ WAU).
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 GROWTH_ACCOUNTING_DAILY_ORACLE = """
@@ -995,6 +993,7 @@ GROWTH_ACCOUNTING_DAILY_ORACLE = """
     """
 
 
+@query("growth_accounting_daily", GROWTH_ACCOUNTING_DAILY_ORACLE, local=True)
 def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily growth accounting (the DAU/WAU board metric): per day, the
     distinct active users split into NEW (first-ever-seen that day) and
@@ -1049,9 +1048,7 @@ def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# path_trigrams_top: most common 3-step behavior paths. UNREGISTERED
-# (r9 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# path_trigrams_top: most common 3-step behavior paths.
 # ---------------------------------------------------------------------------
 
 PATH_TOP_K = 20
@@ -1072,6 +1069,7 @@ PATH_TRIGRAMS_TOP_ORACLE = f"""
     """
 
 
+@query("path_trigrams_top", PATH_TRIGRAMS_TOP_ORACLE, local=True)
 def path_trigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PATH_TOP_K (20) most common 3-step event paths across users
     (the path-analysis complement of the first-order Markov matrix —
@@ -1334,8 +1332,7 @@ def present_candles(state: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_cusum_changepoints: CUSUM change-point detection over the daily
-# value series. UNREGISTERED (r10 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# value series.
 # ---------------------------------------------------------------------------
 
 CUSUM_H_MULT = 4  # threshold = CUSUM_H_MULT x mean |deviation|, in cents
@@ -1380,6 +1377,7 @@ TS_CUSUM_CHANGEPOINTS_ORACLE = f"""
     """
 
 
+@query("ts_cusum_changepoints", TS_CUSUM_CHANGEPOINTS_ORACLE, local=True)
 def ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM (Page 1954) change-point detection over the daily total
     value series — the level-shift monitor a metrics warehouse runs on
@@ -1467,8 +1465,6 @@ def cusum_frame(daily: DataFrame, h_mult: int = CUSUM_H_MULT) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # trend_daily_regression: exact per-type OLS trend over the daily series.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TREND_DAILY_REGRESSION_ORACLE = """
@@ -1497,6 +1493,7 @@ TREND_DAILY_REGRESSION_ORACLE = """
     """
 
 
+@query("trend_daily_regression", TREND_DAILY_REGRESSION_ORACLE, local=True)
 def trend_daily_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type trend detection: exact ordinary-least-squares slope of
     the daily value series against the day index — the 'is this KPI
@@ -1561,9 +1558,7 @@ def trend_frame(daily: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# user_lifetime_stats: the per-user lifetime mart. UNREGISTERED (r10 —
-# local-only per the COVERAGE.md standing policy; driver-style evidence
-# via LOCALCHECK).
+# user_lifetime_stats: the per-user lifetime mart.
 # ---------------------------------------------------------------------------
 
 USER_LIFETIME_STATS_ORACLE = """
@@ -1585,6 +1580,7 @@ USER_LIFETIME_STATS_ORACLE = """
     """
 
 
+@query("user_lifetime_stats", USER_LIFETIME_STATS_ORACLE, local=True)
 def user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-user LIFETIME mart every analytics stack materializes:
     event count, distinct active days, first/last day, calendar
@@ -1638,8 +1634,7 @@ def user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_seasonal_dow_profile: day-of-week seasonal baseline + residuals
-# over the daily revenue series. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# over the daily revenue series.
 # ---------------------------------------------------------------------------
 
 TS_SEASONAL_DOW_PROFILE_ORACLE = """
@@ -1663,6 +1658,7 @@ TS_SEASONAL_DOW_PROFILE_ORACLE = """
     """
 
 
+@query("ts_seasonal_dow_profile", TS_SEASONAL_DOW_PROFILE_ORACLE, local=True)
 def ts_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonal decomposition of the daily revenue series,
     per event type: each day's exact-cents total, the SEASONAL BASELINE
@@ -1719,8 +1715,7 @@ def ts_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_ewma_smoothing: exact truncating-fold EWMA (alpha = 1/2) over the
-# daily series. UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# daily series.
 # ---------------------------------------------------------------------------
 
 TS_EWMA_SMOOTHING_ORACLE = """
@@ -1752,6 +1747,7 @@ TS_EWMA_SMOOTHING_ORACLE = """
     """
 
 
+@query("ts_ewma_smoothing", TS_EWMA_SMOOTHING_ORACLE, local=True)
 def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of the daily revenue
     series, alpha = 1/2, as an EXACT integer fold: S_1 = v_1,
@@ -1808,8 +1804,6 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ts_anomaly_mad_flags: the composed anomaly detector — seasonal
 # residuals scored against a robust (median/MAD) envelope.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 ANOMALY_MAD_MULT = 3  # flag |residual - median| > 3 * MAD
@@ -1855,6 +1849,7 @@ TS_ANOMALY_MAD_FLAGS_ORACLE = f"""
     """
 
 
+@query("ts_anomaly_mad_flags", TS_ANOMALY_MAD_FLAGS_ORACLE, local=True)
 def ts_anomaly_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED anomaly detector the time-series family has been
     building toward: de-seasonalize the daily revenue series against
@@ -1936,9 +1931,7 @@ def ts_anomaly_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cdc_merge_apply: MERGE INTO / CDC-upsert batch apply. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# cdc_merge_apply: MERGE INTO / CDC-upsert batch apply.
 # ---------------------------------------------------------------------------
 
 CDC_CUTOFF = "2024-01-21"  # events fixtures span 2024-01-01..01-30 at every SF
@@ -1975,6 +1968,7 @@ CDC_MERGE_APPLY_ORACLE = f"""
     """
 
 
+@query("cdc_merge_apply", CDC_MERGE_APPLY_ORACLE, local=True)
 def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO semantics (the Delta/Iceberg CDC-upsert apply) as a
     pure DataFrame pipeline: a BASE dimension state (per-user event
@@ -2040,8 +2034,6 @@ def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # user_activity_streaks: gaps-and-islands longest-streak distribution.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 USER_ACTIVITY_STREAKS_ORACLE = """
@@ -2068,6 +2060,7 @@ USER_ACTIVITY_STREAKS_ORACLE = """
     """
 
 
+@query("user_activity_streaks", USER_ACTIVITY_STREAKS_ORACLE, local=True)
 def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-active-day streak per user, rolled up to the
     engagement distribution (streak length -> user count + the smallest
@@ -2245,8 +2238,7 @@ def peak_concurrency_frame(sessions: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # ts_autocorrelation: exact ACF of the daily revenue series at lags
-# 1..7. UNREGISTERED (r12 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# 1..7.
 # ---------------------------------------------------------------------------
 
 ACF_MAX_LAG = 7
@@ -2282,6 +2274,7 @@ TS_AUTOCORRELATION_ORACLE = f"""
     """
 
 
+@query("ts_autocorrelation", TS_AUTOCORRELATION_ORACLE, local=True)
 def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact AUTOCORRELATION (ACF) of the daily revenue series at
     calendar lags 1..{7}: with the n-scaled deviations
@@ -2356,8 +2349,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # window_positional_values: FIRST/LAST/NTH_VALUE — the positional
-# window family. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# window family.
 # ---------------------------------------------------------------------------
 
 WINDOW_POSITIONAL_VALUES_ORACLE = """
@@ -2376,6 +2368,7 @@ WINDOW_POSITIONAL_VALUES_ORACLE = """
     """
 
 
+@query("window_positional_values", WINDOW_POSITIONAL_VALUES_ORACLE, local=True)
 def window_positional_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The POSITIONAL window family — FIRST_VALUE / LAST_VALUE /
     NTH_VALUE — completing the window surface next to the offset

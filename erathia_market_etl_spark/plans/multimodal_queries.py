@@ -7,7 +7,7 @@ outputs the DuckDB twins reproduce (ASCII payload ⇒ ord() histogram,
 md5(text||'|'||idx) frame fingerprints, md5-pinned resize
 round-trip). Since r6 the REAL codec-free decoders carry evidence too:
 media_wav_real_decode (registered) parses synthesized valid WAV
-containers, and media_bmp_real_resize (queued for a free slot) runs
+containers, and media_bmp_real_resize (registered) runs
 the full BMP encode→decode→resample→encode→decode cycle — both
 hash-matched against pure-arithmetic oracles.
 """
@@ -342,8 +342,6 @@ def media_bmp_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # media_wav_resample: the audio twin of media_bmp_real_resize — full
 # encode -> decode -> resample -> re-encode -> re-decode cycle.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 WAV_RESAMPLE_N = 48  # fixed-length clip every audio model consumes
@@ -372,6 +370,7 @@ MEDIA_WAV_RESAMPLE_ORACLE = f"""
     """
 
 
+@query("media_wav_resample", MEDIA_WAV_RESAMPLE_ORACLE, local=True)
 def media_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio pipeline end-to-end — the PCM twin of
     media_bmp_real_resize: synthesize a VALID PCM16 WAV from the
@@ -455,8 +454,7 @@ def media_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_scene_segments: shot/scene segmentation over sampled frame
-# fingerprints. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# fingerprints.
 # ---------------------------------------------------------------------------
 
 # 24-bit frame energy domain; a jump of more than half the domain
@@ -504,6 +502,7 @@ MEDIA_SCENE_SEGMENTS_ORACLE = f"""
     """
 
 
+@query("media_scene_segments", MEDIA_SCENE_SEGMENTS_ORACLE, local=True)
 def media_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SHOT/SCENE segmentation of the video assets — the frame-level
     composition a video-curation pipeline runs before clip extraction:
@@ -657,9 +656,7 @@ def media_jpeg_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # media_gif_real_decode: driver-grade evidence for the r16 GIF/LZW
-# codec (operators/gif.py). UNREGISTERED (local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK +
-# tests/test_oracle_parity.py). GIF is LOSSLESS for paletted content,
+# codec (operators/gif.py). GIF is LOSSLESS for paletted content,
 # so unlike the JPEG twin no divisibility construction is needed —
 # every synthesized tile round-trips bit-exactly and the oracle
 # predicts the stats from modular arithmetic alone.
@@ -702,6 +699,7 @@ MEDIA_GIF_REAL_DECODE_ORACLE = """
     """
 
 
+@query("media_gif_real_decode", MEDIA_GIF_REAL_DECODE_ORACLE, local=True)
 def media_gif_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-codec decode under driver-style check (r16): each
     selected documents row (doc_id % 3 = 0) synthesizes a paletted

@@ -23,15 +23,26 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# oracled capabilities kept out of the driver contract: name -> (fn, oracle)
+LOCAL: dict[str, tuple[QueryFn, str]] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str, oracle: str | None = None, local: bool = False
+) -> Callable[[QueryFn], QueryFn]:
     """Register a named query; ``oracle`` is the DuckDB SQL twin (omit
-    only for genuinely non-SQL-expressible operators)."""
+    only for genuinely non-SQL-expressible operators). ``local=True``
+    keeps an oracled query out of the driver contract: it lands in
+    ``local_queries()`` instead of ``all_queries()``."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in QUERIES:
+        if name in QUERIES or name in LOCAL:
             raise ValueError(f"duplicate query name: {name}")
+        if local:
+            if oracle is None:
+                raise ValueError(f"local query {name} needs an oracle")
+            LOCAL[name] = (fn, oracle)
+            return fn
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -47,9 +58,11 @@ def _load_all() -> None:
         event_windows,
         graph_queries,
         multimodal_queries,
+        profile_queries,
         relational,
         sampling_queries,
         similarity_queries,
+        sketch_queries,
         skew_queries,
         streaming_queries,
         temporal_queries,
@@ -65,3 +78,8 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracles() -> dict[str, str]:
     _load_all()
     return dict(ORACLES)
+
+
+def local_queries() -> dict[str, tuple[QueryFn, str]]:
+    _load_all()
+    return dict(LOCAL)

@@ -1173,8 +1173,6 @@ def setop_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_rfm_segments: quartile RFM customer segmentation over orders.
-# UNREGISTERED (r11 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 MART_RFM_SEGMENTS_ORACLE = """
@@ -1206,6 +1204,7 @@ MART_RFM_SEGMENTS_ORACLE = """
     """
 
 
+@query("mart_rfm_segments", MART_RFM_SEGMENTS_ORACLE, local=True)
 def mart_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM (recency / frequency / monetary) customer segmentation —
     the classic CRM mart: per customer the last order date, order
@@ -1295,9 +1294,7 @@ def mart_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# skyline_part_frontier: 2-D skyline / Pareto frontier. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# skyline_part_frontier: 2-D skyline / Pareto frontier.
 # ---------------------------------------------------------------------------
 
 SKYLINE_BLOCK_CENTS = 500  # $5 price blocks; TPC-H price domain is fixed
@@ -1326,6 +1323,7 @@ SKYLINE_PART_FRONTIER_ORACLE = """
     """
 
 
+@query("skyline_part_frontier", SKYLINE_PART_FRONTIER_ORACLE, local=True)
 def skyline_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D SKYLINE (Pareto frontier) over parts: every part such that
     no other part is both cheaper-or-equal AND smaller-or-equal with at

@@ -437,9 +437,6 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_temperature_mixture: temperature-based data-mixing weights.
-# UNREGISTERED (r8, local-only past the registry ceiling — COVERAGE.md
-# standing policy; oracle parity runs in
-# tests/test_oracle_parity.py::test_queued_queries_match).
 # ---------------------------------------------------------------------------
 
 # Temperature tau = 0.5, i.e. weight = n_tokens^0.5 = sqrt(n_tokens).
@@ -475,6 +472,7 @@ SAMPLE_TEMPERATURE_MIXTURE_ORACLE = f"""
     """
 
 
+@query("sample_temperature_mixture", SAMPLE_TEMPERATURE_MIXTURE_ORACLE, local=True)
 def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based mixture weighting (the Gopher / LLaMA data-mix
     recipe): per source, weight = n_tokens^tau with tau = 0.5, so
@@ -522,8 +520,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_leakage_safe_splits: split assignment hashed on the NEAR-DUP
-# COMPONENT, not the document. UNREGISTERED (r8 queue — local-only per
-# the COVERAGE.md standing policy).
+# COMPONENT, not the document.
 # ---------------------------------------------------------------------------
 
 def _leakage_safe_oracle() -> str:
@@ -558,6 +555,7 @@ def _leakage_safe_oracle() -> str:
     """
 
 
+@query("sample_leakage_safe_splits", _leakage_safe_oracle(), local=True)
 def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/validation/test assignment that cannot leak near-
     duplicates across splits: hash the near-dup COMPONENT id (LSH
@@ -601,8 +599,6 @@ def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_k_per_group: deterministic fixed-size per-group sample.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 SAMPLE_K_PER_GROUP = 5
@@ -627,6 +623,7 @@ SAMPLE_K_PER_GROUP_ORACLE = f"""
     """
 
 
+@query("sample_k_per_group", SAMPLE_K_PER_GROUP_ORACLE, local=True)
 def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fixed-size sample of SAMPLE_K_PER_GROUP (5)
     documents per source — the "give me k examples from every stratum"
@@ -656,8 +653,6 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_quota_allocation: Hamilton largest-remainder budget allocation.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 QUOTA_BUDGET = 997  # docs to sample corpus-wide (prime: real remainders)
@@ -690,6 +685,7 @@ SAMPLE_QUOTA_ALLOCATION_ORACLE = f"""
     """
 
 
+@query("sample_quota_allocation", SAMPLE_QUOTA_ALLOCATION_ORACLE, local=True)
 def sample_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamilton (largest-remainder) apportionment of a fixed sampling
     budget across corpus strata, weighted by total characters — the
@@ -765,9 +761,7 @@ def quota_frame(w: DataFrame, budget: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # pack_binpack_ffd: first-fit-decreasing sequence packing — the greedy
 # bin-packing pass training pipelines run to pack documents into
-# fixed-token context windows with minimal padding. UNREGISTERED (r11 —
-# local-only per the COVERAGE.md standing policy; driver-style evidence
-# via LOCALCHECK).
+# fixed-token context windows with minimal padding.
 # ---------------------------------------------------------------------------
 
 PACK_FFD_CAP = 128    # bin capacity in tokens (the context length)
@@ -828,6 +822,7 @@ PACK_BINPACK_FFD_ORACLE = f"""
     """
 
 
+@query("pack_binpack_ffd", PACK_BINPACK_FFD_ORACLE, local=True)
 def pack_binpack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST-FIT-DECREASING bin packing of documents into
     PACK_FFD_CAP-token context windows, per source — THE standard
@@ -904,8 +899,7 @@ def pack_binpack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_systematic_interval: systematic (every k-th) sampling in a
-# deterministic hash order. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# deterministic hash order.
 # ---------------------------------------------------------------------------
 
 SYSTEMATIC_K = 7  # keep every 7th document
@@ -937,6 +931,7 @@ SAMPLE_SYSTEMATIC_ORACLE = f"""
     """
 
 
+@query("sample_systematic_interval", SAMPLE_SYSTEMATIC_ORACLE, local=True)
 def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SYSTEMATIC sampling — keep every SYSTEMATIC_K-th document in a
     deterministic pseudo-random order (the salted Knuth bucket, with
@@ -992,8 +987,7 @@ def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # exp_assignment_srm: deterministic experiment assignment + sample-ratio
-# -mismatch audit. UNREGISTERED (r12 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# -mismatch audit.
 # ---------------------------------------------------------------------------
 
 # (variant, weight in percent) — weights sum to 100; CASE arms below
@@ -1046,6 +1040,7 @@ def _exp_srm_oracle() -> str:
 EXP_ASSIGNMENT_SRM_ORACLE = _exp_srm_oracle()
 
 
+@query("exp_assignment_srm", EXP_ASSIGNMENT_SRM_ORACLE, local=True)
 def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic experiment (A/B/n) assignment plus the
     SAMPLE-RATIO-MISMATCH audit every experimentation platform runs
@@ -1110,8 +1105,7 @@ def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # exp_variant_conversion: the experiment readout on top of the
-# deterministic assignment. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# deterministic assignment.
 # ---------------------------------------------------------------------------
 
 def _exp_conversion_oracle() -> str:
@@ -1149,6 +1143,7 @@ def _exp_conversion_oracle() -> str:
 EXP_VARIANT_CONVERSION_ORACLE = _exp_conversion_oracle()
 
 
+@query("exp_variant_conversion", EXP_VARIANT_CONVERSION_ORACLE, local=True)
 def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The experiment READOUT on top of exp_assignment_srm's
     deterministic arms: per variant, users, purchase converters,
@@ -1205,8 +1200,6 @@ def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sample_shuffle_order: deterministic global training-order shuffle.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 SHUFFLE_N_SHARDS = 16          # data-parallel worker count
@@ -1237,6 +1230,7 @@ def _shuffle_order_oracle() -> str:
 SAMPLE_SHUFFLE_ORDER_ORACLE = _shuffle_order_oracle()
 
 
+@query("sample_shuffle_order", SAMPLE_SHUFFLE_ORDER_ORACLE, local=True)
 def sample_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic GLOBAL TRAINING-ORDER shuffle — the epoch
     permutation every data loader needs: each document's position is

@@ -102,9 +102,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sim_topk_lsh_bucket is local-only:
-# test_sim_topk_lsh_bucket_matches_oracle runs this exact oracle
-# through the same compare the driver uses.
 LSH_BUCKET_ORACLE = f"""
     WITH q AS (SELECT embedding AS query_vec,
                       {_BUCKET_SQL.format(v='embedding')} AS qbucket
@@ -120,11 +117,12 @@ LSH_BUCKET_ORACLE = f"""
     """
 
 
+@query("sim_topk_lsh_bucket", LSH_BUCKET_ORACLE, local=True)
 def sim_topk_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k: score only vectors in the query's sign-bit LSH
     bucket (~1/256 of the data). At scale, write the table partitioned by
     bucket and this filter becomes partition pruning — the scan itself
-    shrinks 256×. Local-only; oracle-checked in tests/test_similarity.py."""
+    shrinks 256×."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vector(spark, sf_dir).select(
         "query_vec", sign_bucket(F.col("query_vec")).alias("qbucket")
@@ -1005,6 +1003,27 @@ SIM_IVFPQ_TOPK_ORACLE = f"""
     """
 
 
+def _ivfpq_oracle() -> str:
+    # recall_hits values measured r13 (deterministic per fixture —
+    # repeat-run verified), pinned behind the corpus fingerprint like
+    # the sim_pq_quality oracle
+    return SIM_IVFPQ_TOPK_ORACLE.format(
+        ivf_cte=_IVF_CTE,
+        n_probe=N_PROBE,
+        query_vec_id=QUERY_VEC_ID,
+        fingerprint_cte=_EMB_FINGERPRINT_CTE,
+        recall_case=_sig_case(
+            {_EMB_SIG_SF0001: 10, _EMB_SIG_SF001: 8, _EMB_SIG_SF01: 6,
+             _EMB_SIG_SF1SYN: 2}
+        ),
+        recall_ok_case=_sig_case_bool(
+            {_EMB_SIG_SF0001: True, _EMB_SIG_SF001: True,
+             _EMB_SIG_SF01: True, _EMB_SIG_SF1SYN: False}
+        ),
+    )
+
+
+@query("sim_ivfpq_topk", _ivfpq_oracle(), local=True)
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed retrieval, one contract row. The pipeline: the
     deterministic 16-cell coarse quantizer (same argmax-over-broadcast
@@ -1107,30 +1126,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_oracle() -> str:
-    # recall_hits values measured r13 (deterministic per fixture —
-    # repeat-run verified), pinned behind the corpus fingerprint like
-    # the sim_pq_quality oracle
-    return SIM_IVFPQ_TOPK_ORACLE.format(
-        ivf_cte=_IVF_CTE,
-        n_probe=N_PROBE,
-        query_vec_id=QUERY_VEC_ID,
-        fingerprint_cte=_EMB_FINGERPRINT_CTE,
-        recall_case=_sig_case(
-            {_EMB_SIG_SF0001: 10, _EMB_SIG_SF001: 8, _EMB_SIG_SF01: 6,
-             _EMB_SIG_SF1SYN: 2}
-        ),
-        recall_ok_case=_sig_case_bool(
-            {_EMB_SIG_SF0001: True, _EMB_SIG_SF001: True,
-             _EMB_SIG_SF01: True, _EMB_SIG_SF1SYN: False}
-        ),
-    )
-
-
 # ---------------------------------------------------------------------------
 # dedup_semantic_cells: SemDeDup (Abbas et al. 2023, arXiv:2303.09540 —
-# semantic deduplication via k-means cluster bucketing). UNREGISTERED
-# (r8 queue — local-only per the COVERAGE.md standing policy).
+# semantic deduplication via k-means cluster bucketing).
 # r9: the cell count is now the paper's ~sqrt(n) regime by default
 # (VERDICT r8 item 3 — at sf0.1 the fixed-16-cell configuration's
 # 128-doc cap was BINDING, ~312 members/cell, silently dropping
@@ -1257,6 +1255,7 @@ def semantic_cell_pairs(
     )
 
 
+@query("dedup_semantic_cells", DEDUP_SEMANTIC_CELLS_ORACLE, local=True)
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup: semantic near-dup pairs via k-means cell bucketing —
     assign every embedding to its nearest coarse centroid (the
@@ -1296,8 +1295,6 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_random_projection: Johnson-Lindenstrauss sign projection 64 -> 16.
-# UNREGISTERED (r9 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 JL_DIM = 16
@@ -1338,6 +1335,7 @@ EMB_RANDOM_PROJECTION_ORACLE = f"""
     """
 
 
+@query("emb_random_projection", EMB_RANDOM_PROJECTION_ORACLE, local=True)
 def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss dimensionality reduction 64 -> JL_DIM (16)
     by a deterministic ±1 sign matrix (Achlioptas 2003's database-
@@ -1391,8 +1389,7 @@ def jl_projection_rows(emb: DataFrame, dim: int = JL_DIM) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sim_topk_jl_rerank: JL-shortlist retrieval — the third pruning
-# composition next to IVF and IVF+PQ. UNREGISTERED (r9 — local-only per
-# the COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# composition next to IVF and IVF+PQ.
 # ---------------------------------------------------------------------------
 
 JL_RETRIEVAL_DIM = 32   # retrieval wants finer geometry than the 16-d
@@ -1442,6 +1439,7 @@ SIM_TOPK_JL_RERANK_ORACLE = f"""
     """
 
 
+@query("sim_topk_jl_rerank", SIM_TOPK_JL_RERANK_ORACLE, local=True)
 def sim_topk_jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL-shortlist retrieval: project corpus + query to
     JL_RETRIEVAL_DIM (32) exact-integer coordinates
@@ -1506,8 +1504,6 @@ def sim_topk_jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_int8_quantization: scalar int8 embedding-compression audit.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 EMB_INT8_QUANTIZATION_ORACLE = f"""
@@ -1542,6 +1538,7 @@ EMB_INT8_QUANTIZATION_ORACLE = f"""
     """.format(dim=64)
 
 
+@query("emb_int8_quantization", EMB_INT8_QUANTIZATION_ORACLE, local=True)
 def emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar int8 quantization audit over the embedding corpus — the
     4x-compression step (float32 -> int8, per-vector absmax scale)
@@ -1650,8 +1647,6 @@ def int8_quantization_frame(emb: DataFrame, dim: int) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_kmeans_lloyd: fully-distributed exact-integer Lloyd k-means.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 K_CLUSTERS = 8     # Lloyd cluster count (first-K deterministic seeding)
@@ -1740,6 +1735,7 @@ def _lloyd_oracle() -> str:
 EMB_KMEANS_LLOYD_ORACLE = _lloyd_oracle()
 
 
+@query("emb_kmeans_lloyd", EMB_KMEANS_LLOYD_ORACLE, local=True)
 def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fully-DISTRIBUTED Lloyd k-means over the embedding corpus,
     LLOYD_ROUNDS (2) unrolled assign→update cycles + a final
@@ -1866,8 +1862,7 @@ def kmeans_lloyd_frame(
 
 # ---------------------------------------------------------------------------
 # emb_rank_normalize: per-dimension rank (quantile) normalization of
-# the embedding matrix. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# the embedding matrix.
 # ---------------------------------------------------------------------------
 
 EMB_RANK_NORMALIZE_ORACLE = """
@@ -1899,6 +1894,7 @@ EMB_RANK_NORMALIZE_ORACLE = """
     """
 
 
+@query("emb_rank_normalize", EMB_RANK_NORMALIZE_ORACLE, local=True)
 def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension RANK (quantile) normalization of the embedding
     matrix — the heavy-tail-robust feature prep (each dimension's
@@ -1953,8 +1949,7 @@ def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # emb_pca_power_iteration: top principal direction via two distributed
-# power-iteration rounds. UNREGISTERED (r12 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# power-iteration rounds.
 # ---------------------------------------------------------------------------
 
 PCA_ROUNDS = 2        # THE CONTRACT: round-2 accounting state
@@ -2011,6 +2006,7 @@ EMB_PCA_POWER_ITERATION_ORACLE = (
 )
 
 
+@query("emb_pca_power_iteration", EMB_PCA_POWER_ITERATION_ORACLE, local=True)
 def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PRINCIPAL DIRECTION of the embedding cloud via two
     distributed POWER-ITERATION rounds on the (uncentered) second

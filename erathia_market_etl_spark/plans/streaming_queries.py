@@ -22,6 +22,7 @@ from ..streaming.event_stream import (
     stream_events,
     user_running_totals_stream,
 )
+from .dedup_queries import DEDUP_BLOOM_INCREMENTAL_ORACLE, _BLOOM_HIST_SPLIT
 from .registry import query
 
 
@@ -253,9 +254,7 @@ def stream_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stream_quality_gate: the C4/Gopher quality gate on the ingest stream.
-# UNREGISTERED (r8, local-only past the registry ceiling — COVERAGE.md
-# standing policy; oracle parity in
-# tests/test_oracle_parity.py::test_queued_queries_match).
+# Registered (local=True) in text_queries.py, next to the shared oracle.
 # ---------------------------------------------------------------------------
 
 
@@ -289,12 +288,11 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # stream_bloom_gate: the Bloom membership pre-pass on the ingest
-# stream. UNREGISTERED (r9, local-only past the registry ceiling —
-# COVERAGE.md standing policy; oracle parity in
-# tests/test_oracle_parity.py::test_queued_queries_match).
+# stream.
 # ---------------------------------------------------------------------------
 
 
+@query("stream_bloom_gate", DEDUP_BLOOM_INCREMENTAL_ORACLE, local=True)
 def stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming form of dedup_bloom_incremental (same oracle): each
     arriving micro-batch probes the STATIC history Bloom word table
@@ -309,7 +307,6 @@ def stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import bloom_build, bloom_m_bits, bloom_probe
     from ..sources.parquet_io import load_table
     from ..streaming.event_stream import stream_documents
-    from .dedup_queries import _BLOOM_HIST_SPLIT
 
     fp = F.md5(F.trim(F.lower(F.col("text")))).alias("fp")
     hist = (

@@ -257,8 +257,7 @@ def funnel_ordered_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # funnel_time_to_convert: the conversion-latency SLA report — as-of
 # matched purchase←click latencies rolled into exact daily percentile
-# bands. UNREGISTERED (r11 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# bands.
 # ---------------------------------------------------------------------------
 
 FUNNEL_TIME_TO_CONVERT_ORACLE = """
@@ -314,6 +313,7 @@ FUNNEL_TIME_TO_CONVERT_ORACLE = """
     """
 
 
+@query("funnel_time_to_convert", FUNNEL_TIME_TO_CONVERT_ORACLE, local=True)
 def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIME-TO-CONVERT SLA bands: every purchase is as-of matched to
     the user's most recent click at or before it (the reverse
@@ -365,9 +365,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# asof_nearest_purchase: bidirectional nearest-event join. UNREGISTERED
-# (r12 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# asof_nearest_purchase: bidirectional nearest-event join.
 # ---------------------------------------------------------------------------
 
 NEAREST_GAP_SECONDS = 7 * 86400
@@ -408,6 +406,7 @@ ASOF_NEAREST_PURCHASE_ORACLE = f"""
     """
 
 
+@query("asof_nearest_purchase", ASOF_NEAREST_PURCHASE_ORACLE, local=True)
 def asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bidirectional as-of: every click gets the user's NEAREST
     purchase within a ±7-day bound — backward or forward by floored
@@ -444,8 +443,7 @@ def asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # mart_session_error_exposure: interval union-merge + overlap-duration
-# join. UNREGISTERED (r12 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# join.
 # ---------------------------------------------------------------------------
 
 ERROR_HALO_SECONDS = 300  # each error taints ±5 minutes of its session
@@ -519,6 +517,7 @@ MART_SESSION_ERROR_EXPOSURE_ORACLE = f"""
     """
 
 
+@query("mart_session_error_exposure", MART_SESSION_ERROR_EXPOSURE_ORACLE, local=True)
 def mart_session_error_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """How much session time ran INSIDE an error halo — per day, the
     sessions that overlapped any ±{300}s window around the same user's

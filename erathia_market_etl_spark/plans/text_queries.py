@@ -19,6 +19,7 @@ from ..operators.similarity import round6
 from ..sources.parquet_io import adaptive_partitions, load_table
 from .registry import query
 from .stage_cache import session_stage
+from .streaming_queries import stream_quality_gate
 
 _MARKER_SQL = {
     lang: "(" + ", ".join(f"'{w}'" for w in words) + ")"
@@ -640,6 +641,14 @@ def text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+# The streaming twin shares this oracle, so it registers here: importing
+# this module from streaming_queries would register the text family
+# ahead of temporal_queries and reorder all_queries().
+query("stream_quality_gate", TEXT_QUALITY_GATE_ORACLE, local=True)(
+    stream_quality_gate
+)
+
+
 def _bigrams(toks):
     """whitespace-bigram array: zip_with over two shifted slices."""
     n = F.size(toks)
@@ -1129,8 +1138,6 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_lm_familiarity: self-trained capped-bigram LM quality scoring.
-# Local-only: oracle parity runs in
-# tests/test_oracle_parity.py::test_queued_queries_match.
 # ---------------------------------------------------------------------------
 
 # Model capacity: top LM_TOP_K bigrams by corpus count (deterministic
@@ -1192,6 +1199,7 @@ TEXT_LM_FAMILIARITY_ORACLE = f"""
     """
 
 
+@query("text_lm_familiarity", TEXT_LM_FAMILIARITY_ORACLE, local=True)
 def text_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scoring, self-trained on the corpus: fit a
     capped bigram model (top LM_TOP_K (512) bigrams by count, each carrying an
@@ -1275,7 +1283,7 @@ def text_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact-substring dedup signal of Lee et al., "Deduplicating Training
 # Data Makes Language Models Better" — arXiv:2107.06499 — bounded to
 # fixed-length token spans so it runs as three hash aggregates instead
-# of a suffix array). UNREGISTERED (r8 queue, behind text_lm_familiarity).
+# of a suffix array).
 # ---------------------------------------------------------------------------
 
 SPAN_K = 8  # tokens per span; spans overlap (stride 1)
@@ -1322,6 +1330,7 @@ TEXT_DUPLICATE_SPANS_ORACLE = f"""
     """
 
 
+@query("text_duplicate_spans", TEXT_DUPLICATE_SPANS_ORACLE, local=True)
 def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicate-span accounting: every overlapping
     SPAN_K (8)-token span, counted across the corpus; a span is DUPLICATED
@@ -1616,6 +1625,7 @@ TEXT_CDC_CHUNKS_ORACLE = f"""
     """
 
 
+@query("text_cdc_chunks", TEXT_CDC_CHUNKS_ORACLE, local=True)
 def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking + cross-document chunk-dedup
     accounting: each document is cut into variable-size chunks wherever
@@ -1679,8 +1689,6 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r15 item 4 — the last big absent LLM-pipeline stage: real pretraining
 # corpora start as crawled HTML, and tags→text + nav/footer/script
 # stripping is the stage upstream of every gate this file already has).
-# UNREGISTERED (local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK + tests/test_oracle_parity.py).
 # Follows the JPEG-codec evidence pattern (plans/multimodal_queries.py
 # media_jpeg_real_decode): stage 1 SYNTHESIZES a deterministic HTML
 # document from each documents row with pure column arithmetic, stage 2
@@ -1755,6 +1763,7 @@ TEXT_HTML_EXTRACT_ORACLE = """
     """
 
 
+@query("text_html_extract", TEXT_HTML_EXTRACT_ORACLE, local=True)
 def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markup→text boilerplate extraction under driver-style check:
     each documents row synthesizes a deterministic HTML page — a <nav>
@@ -1834,9 +1843,8 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # href harvesting, internal/external classification, host extraction:
 # the crawl-graph stage (outbound host adjacency feeding host-level
 # PageRank / spam screens) that sits beside boilerplate extraction in
-# every web-corpus pipeline. UNREGISTERED (local-only per the standing
-# policy). Same evidence pattern as text_html_extract: deterministic
-# synthesis, REAL extraction, arithmetic oracle.
+# every web-corpus pipeline. Same evidence pattern as text_html_extract:
+# deterministic synthesis, REAL extraction, arithmetic oracle.
 # ---------------------------------------------------------------------------
 
 TEXT_HTML_LINKS_ORACLE = """
@@ -1861,6 +1869,7 @@ TEXT_HTML_LINKS_ORACLE = """
     """
 
 
+@query("text_html_links", TEXT_HTML_LINKS_ORACLE, local=True)
 def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link census under driver-style check: each documents row
     synthesizes a page whose nav carries 4 EXTERNAL anchors with hosts
@@ -1945,8 +1954,6 @@ def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # text_bpe_merges: distributed BPE merge learning (Sennrich et al. 2016,
 # arXiv:1508.07909 — the tokenizer-training loop, run on-cluster).
-# UNREGISTERED (r8 queue — local-only per the COVERAGE.md standing
-# policy).
 # ---------------------------------------------------------------------------
 
 BPE_ROUNDS = 5
@@ -2009,6 +2016,7 @@ TEXT_BPE_MERGES_ORACLE = (
 )
 
 
+@query("text_bpe_merges", TEXT_BPE_MERGES_ORACLE, local=True)
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge learning on-cluster: whitespace-tokenize the corpus
     once, reduce to the (word, count) vocabulary, segment each word
@@ -2112,8 +2120,7 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
 
 # ---------------------------------------------------------------------------
 # text_chunk_overlap: retrieval-prep chunking (fixed window, fixed
-# overlap). UNREGISTERED (r8 queue — local-only per the COVERAGE.md
-# standing policy).
+# overlap).
 # ---------------------------------------------------------------------------
 
 CHUNK_TOKENS = 64   # tokens per chunk
@@ -2148,6 +2155,7 @@ TEXT_CHUNK_OVERLAP_ORACLE = f"""
     """
 
 
+@query("text_chunk_overlap", TEXT_CHUNK_OVERLAP_ORACLE, local=True)
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping-window chunker (the RAG / long-context preprocessing
     shape): each document yields chunks of CHUNK_TOKENS (64) tokens
@@ -2201,8 +2209,7 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_bpe_compression: the APPLY side of BPE — segment the corpus with
-# the learned merges and account per-source compression. UNREGISTERED
-# (r8 queue, with text_bpe_merges).
+# the learned merges and account per-source compression.
 # ---------------------------------------------------------------------------
 
 TEXT_BPE_COMPRESSION_ORACLE = (
@@ -2241,6 +2248,7 @@ TEXT_BPE_COMPRESSION_ORACLE = (
 )
 
 
+@query("text_bpe_compression", TEXT_BPE_COMPRESSION_ORACLE, local=True)
 def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY half of the tokenizer loop: segment every word with
     the merges text_bpe_merges learned (the shared ``_bpe_learn`` runs
@@ -2295,8 +2303,7 @@ def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_phrase_search: positional phrase retrieval with a self-derived
-# query workload. UNREGISTERED (r9 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# query workload.
 # ---------------------------------------------------------------------------
 
 PHRASE_TOP_Q = 4   # query workload: the corpus's 4 hottest bigrams
@@ -2342,6 +2349,7 @@ TEXT_PHRASE_SEARCH_ORACLE = f"""
     """
 
 
+@query("text_phrase_search", TEXT_PHRASE_SEARCH_ORACLE, local=True)
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional phrase search (the exact-phrase complement of BM25's
     bag-of-words ranking): adjacency is captured by materializing word
@@ -2416,9 +2424,7 @@ def phrase_search_frame(docs: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# text_top_terms_tfidf: per-document keyword extraction. UNREGISTERED
-# (r9 — local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# text_top_terms_tfidf: per-document keyword extraction.
 # ---------------------------------------------------------------------------
 
 TFIDF_TOP_K = 5
@@ -2456,6 +2462,7 @@ TEXT_TOP_TERMS_TFIDF_ORACLE = f"""
     """
 
 
+@query("text_top_terms_tfidf", TEXT_TOP_TERMS_TFIDF_ORACLE, local=True)
 def text_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keyword extraction: the TFIDF_TOP_K (5) most
     distinctive terms per document by tf-idf, with the BM25-style
@@ -2508,8 +2515,6 @@ def text_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_vocab_coverage: tokenizer-vocabulary coverage / OOV-rate audit.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 VOCAB_SIZE = 16  # reference vocabulary: top-N terms by document frequency
@@ -2547,6 +2552,7 @@ TEXT_VOCAB_COVERAGE_ORACLE = f"""
     """
 
 
+@query("text_vocab_coverage", TEXT_VOCAB_COVERAGE_ORACLE, local=True)
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-coverage / OOV-rate audit — the tokenizer-fit check a
     training pipeline runs before committing a vocab: against a
@@ -2616,8 +2622,6 @@ def vocab_coverage_frame(
 
 # ---------------------------------------------------------------------------
 # text_simpson_diversity: exact lexical-diversity signals per document.
-# UNREGISTERED (r10 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TEXT_SIMPSON_DIVERSITY_ORACLE = """
@@ -2642,6 +2646,7 @@ TEXT_SIMPSON_DIVERSITY_ORACLE = """
     """
 
 
+@query("text_simpson_diversity", TEXT_SIMPSON_DIVERSITY_ORACLE, local=True)
 def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact lexical-diversity signals per document: type-token ratio
     and the Simpson repeat probability Σ tf·(tf−1) / (n·(n−1)) — the
@@ -2699,8 +2704,7 @@ def simpson_diversity_frame(docs: DataFrame) -> DataFrame:
 # decon_ngram_contamination: per-TRAIN-doc n-gram overlap rate vs the
 # held-out split — the GPT-3/PaLM-style decontamination direction
 # (filter TRAIN docs), complementing decon_test_train_overlap's
-# per-test winnowing report. UNREGISTERED (r11 — local-only per the
-# COVERAGE.md standing policy; driver-style evidence via LOCALCHECK).
+# per-test winnowing report.
 # ---------------------------------------------------------------------------
 
 # production pipelines use 8-13-gram exact overlap (GPT-3 appendix C
@@ -2735,6 +2739,7 @@ DECON_NGRAM_CONTAMINATION_ORACLE = f"""
     """
 
 
+@query("decon_ngram_contamination", DECON_NGRAM_CONTAMINATION_ORACLE, local=True)
 def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-TRAIN-document n-gram contamination rate against the
     held-out split (test = doc_id < 250, the corpus convention shared
@@ -2801,9 +2806,7 @@ def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_source_divergence: pairwise unigram-distribution L1 distance
-# between sources — corpus mixture analysis. UNREGISTERED (r11 —
-# local-only per the COVERAGE.md standing policy; driver-style
-# evidence via LOCALCHECK).
+# between sources — corpus mixture analysis.
 # ---------------------------------------------------------------------------
 
 TEXT_SOURCE_DIVERGENCE_ORACLE = """
@@ -2843,6 +2846,7 @@ TEXT_SOURCE_DIVERGENCE_ORACLE = """
     """
 
 
+@query("text_source_divergence", TEXT_SOURCE_DIVERGENCE_ORACLE, local=True)
 def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise corpus-mixture divergence: the exact L1 distance (in
     ppm of probability mass) between every two sources' unigram
@@ -2930,8 +2934,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_url_canonicalize: URL parsing + canonicalization over
 # deterministically-synthesized messy URLs (the PII-injection
 # precedent: the fixture corpus has no URLs, so the evidence rides
-# planted ones). UNREGISTERED (r11 — local-only per the COVERAGE.md
-# standing policy; driver-style evidence via LOCALCHECK).
+# planted ones).
 # ---------------------------------------------------------------------------
 
 TEXT_URL_CANONICALIZE_ORACLE = """
@@ -2962,6 +2965,7 @@ TEXT_URL_CANONICALIZE_ORACLE = """
     """
 
 
+@query("text_url_canonicalize", TEXT_URL_CANONICALIZE_ORACLE, local=True)
 def text_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization + domain rollup — the normalization pass
     every crawl pipeline runs before domain-level filtering and URL
@@ -3028,8 +3032,6 @@ def text_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # text_vocab_hapax_profile: per-source vocabulary richness profile.
-# UNREGISTERED (r12 — local-only per the COVERAGE.md standing policy;
-# driver-style evidence via LOCALCHECK).
 # ---------------------------------------------------------------------------
 
 TEXT_VOCAB_HAPAX_PROFILE_ORACLE = """
@@ -3056,6 +3058,7 @@ TEXT_VOCAB_HAPAX_PROFILE_ORACLE = """
     """
 
 
+@query("text_vocab_hapax_profile", TEXT_VOCAB_HAPAX_PROFILE_ORACLE, local=True)
 def text_vocab_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source VOCABULARY RICHNESS profile: token total, distinct
     type count, hapax-legomena count (types occurring exactly once in
@@ -3117,8 +3120,7 @@ def text_vocab_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # mart_corpus_mix: the per-source data-mix report (docs/tokens kept by
 # the quality gate, and each source's share of the post-gate token
-# budget). UNREGISTERED (r12 — local-only per the COVERAGE.md standing
-# policy; driver-style evidence via LOCALCHECK).
+# budget).
 # ---------------------------------------------------------------------------
 
 MART_CORPUS_MIX_ORACLE = f"""
@@ -3142,6 +3144,7 @@ MART_CORPUS_MIX_ORACLE = f"""
     """
 
 
+@query("mart_corpus_mix", MART_CORPUS_MIX_ORACLE, local=True)
 def mart_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DATA-MIX report a pretraining pipeline signs off before a
     run: per corpus source, document and token counts before/after the

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import pytest
 
-from erathia_market_etl_spark.plans import all_oracles, all_queries
+from erathia_market_etl_spark.plans import (
+    all_oracles, all_queries, local_queries,
+)
 from erathia_market_etl_spark.testing import compare_query
 
 from .conftest import SF_SMOKE
@@ -44,696 +46,15 @@ def test_entry_smoke(spark):
     assert "nation_name" in df.columns
 
 
-# Local-only queries: oracled capabilities that are not registered in
-# the driver contract. Same compare as the registered set;
-# tools/localcheck.py sweeps them too.
-def _queued():
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        SAMPLE_K_PER_GROUP_ORACLE,
-        SAMPLE_QUOTA_ALLOCATION_ORACLE,
-        SAMPLE_TEMPERATURE_MIXTURE_ORACLE,
-        _leakage_safe_oracle,
-        sample_k_per_group,
-        sample_leakage_safe_splits,
-        sample_quota_allocation,
-        sample_temperature_mixture,
-    )
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        DEDUP_SEMANTIC_CELLS_ORACLE,
-        dedup_semantic_cells,
-    )
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        _ivfpq_oracle,
-        sim_ivfpq_topk,
-    )
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        EMB_INT8_QUANTIZATION_ORACLE,
-        EMB_KMEANS_LLOYD_ORACLE,
-        EMB_RANDOM_PROJECTION_ORACLE,
-        SIM_TOPK_JL_RERANK_ORACLE,
-        emb_int8_quantization,
-        emb_kmeans_lloyd,
-        emb_random_projection,
-        sim_topk_jl_rerank,
-    )
-    from erathia_market_etl_spark.plans.streaming_queries import (
-        stream_bloom_gate,
-        stream_quality_gate,
-    )
-    from erathia_market_etl_spark.plans.event_windows import (
-        COHORT_DAILY_RETENTION_ORACLE,
-        MARKOV_EVENT_TRANSITIONS_ORACLE,
-        ROLLUP_MULTIRESOLUTION_ORACLE,
-        SCD2_USER_TIER_HISTORY_ORACLE,
-        TIMESERIES_GAP_FILL_ORACLE,
-        TIMESERIES_ROLLING_ZSCORE_ORACLE,
-        TREND_DAILY_REGRESSION_ORACLE,
-        TS_CUSUM_CHANGEPOINTS_ORACLE,
-        USER_LIFETIME_STATS_ORACLE,
-        GROWTH_ACCOUNTING_DAILY_ORACLE,
-        PATH_TRIGRAMS_TOP_ORACLE,
-        cohort_daily_retention,
-        growth_accounting_daily,
-        markov_event_transitions,
-        path_trigrams_top,
-        rollup_multiresolution,
-        scd2_user_tier_history,
-        timeseries_gap_fill,
-        timeseries_rolling_zscore,
-        trend_daily_regression,
-        ts_cusum_changepoints,
-        user_lifetime_stats,
-    )
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        DEDUP_BLOOM_INCREMENTAL_ORACLE,
-        DEDUP_FUZZY_PREFIX_BLOCK_ORACLE,
-        dedup_bloom_incremental,
-        dedup_fuzzy_prefix_block,
-    )
-    from erathia_market_etl_spark.plans.graph_queries import (
-        BASKET_PAIR_LIFT_ORACLE,
-        GRAPH_HITS_INFLUENCE_ORACLE,
-        GRAPH_TRIANGLE_COHESION_ORACLE,
-        basket_pair_lift,
-        graph_hits_influence,
-        graph_triangle_cohesion,
-    )
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        AGG_CMS_FREQUENCIES_ORACLE,
-        AGG_HLL_REGISTERS_ORACLE,
-        agg_cms_frequencies,
-        agg_hll_registers,
-    )
-    from erathia_market_etl_spark.plans.profile_queries import (
-        AGG_MAD_ROBUST_ORACLE,
-        HISTOGRAM_EQUI_DEPTH_ORACLE,
-        PROFILE_FACT_COLUMNS_ORACLE,
-        TS_PERCENTILE_BANDS_ORACLE,
-        agg_mad_robust,
-        histogram_equi_depth,
-        profile_fact_columns,
-        ts_percentile_bands,
-    )
-    from erathia_market_etl_spark.plans.text_queries import (
-        TEXT_BPE_COMPRESSION_ORACLE,
-        TEXT_BPE_MERGES_ORACLE,
-        TEXT_CHUNK_OVERLAP_ORACLE,
-        TEXT_DUPLICATE_SPANS_ORACLE,
-        TEXT_LM_FAMILIARITY_ORACLE,
-        TEXT_PHRASE_SEARCH_ORACLE,
-        TEXT_QUALITY_GATE_ORACLE,
-        TEXT_SIMPSON_DIVERSITY_ORACLE,
-        TEXT_TOP_TERMS_TFIDF_ORACLE,
-        TEXT_VOCAB_COVERAGE_ORACLE,
-        text_bpe_compression,
-        text_bpe_merges,
-        text_chunk_overlap,
-        text_duplicate_spans,
-        text_lm_familiarity,
-        text_phrase_search,
-        text_simpson_diversity,
-        text_top_terms_tfidf,
-        text_vocab_coverage,
-    )
-
-    return {
-        # r8-implemented local-only extension wave
-        "text_lm_familiarity": (
-            text_lm_familiarity, TEXT_LM_FAMILIARITY_ORACLE,
-        ),
-        "text_duplicate_spans": (
-            text_duplicate_spans, TEXT_DUPLICATE_SPANS_ORACLE,
-        ),
-        # r14-implemented content-defined chunking (LBFS/rsync-style):
-        # cut boundaries from the winnowing rolling hash, cross-doc
-        # duplicate-chunk accounting; the DuckDB twin recomputes the
-        # cut positions from the same polynomial, so hash equality
-        # attests boundary placement itself
-        "text_cdc_chunks": (
-            _tq().text_cdc_chunks,
-            _tq().TEXT_CDC_CHUNKS_ORACLE,
-        ),
-        # r16-implemented HTML/markup extraction (VERDICT r15 item 4):
-        # deterministic page synthesis -> REAL regex block
-        # segmentation + tag stripping + link-density/length keep rule
-        # (operators/html.py); the DuckDB twin predicts every column
-        # including the extracted text from the synthesis arithmetic
-        "text_html_extract": (
-            _tq().text_html_extract,
-            _tq().TEXT_HTML_EXTRACT_ORACLE,
-        ),
-        # r16 link-census half of the markup family: href harvesting,
-        # internal/external classification, host extraction with both
-        # collapse/distinct branches of the synthesized host arithmetic
-        "text_html_links": (
-            _tq().text_html_links,
-            _tq().TEXT_HTML_LINKS_ORACLE,
-        ),
-        "sim_ivfpq_topk": (sim_ivfpq_topk, _ivfpq_oracle()),
-        "sample_temperature_mixture": (
-            sample_temperature_mixture, SAMPLE_TEMPERATURE_MIXTURE_ORACLE,
-        ),
-        # streaming twin of text_quality_gate — SAME oracle: an
-        # AvailableNow run over the staged corpus must gate exactly
-        # like the batch query
-        "stream_quality_gate": (
-            stream_quality_gate, TEXT_QUALITY_GATE_ORACLE,
-        ),
-        # streaming twin of dedup_bloom_incremental — SAME oracle: an
-        # AvailableNow run probing the static history filter must gate
-        # exactly like the batch query
-        "stream_bloom_gate": (
-            stream_bloom_gate, DEDUP_BLOOM_INCREMENTAL_ORACLE,
-        ),
-        # r8-implemented time-series surface (hypertable rollup +
-        # gapfill/LOCF): re-aggregation associativity attested by a
-        # raw->day direct oracle; dense-spine LOCF vs DuckDB
-        # generate_series + LAST_VALUE IGNORE NULLS
-        "rollup_multiresolution": (
-            rollup_multiresolution, ROLLUP_MULTIRESOLUTION_ORACLE,
-        ),
-        "timeseries_gap_fill": (
-            timeseries_gap_fill, TIMESERIES_GAP_FILL_ORACLE,
-        ),
-        "timeseries_rolling_zscore": (
-            timeseries_rolling_zscore, TIMESERIES_ROLLING_ZSCORE_ORACLE,
-        ),
-        # r9-implemented SCD2/CDC compaction: gaps-and-islands run
-        # detection -> [valid_from, valid_to) dimension history,
-        # hash-exact (strings/timestamps/longs only)
-        "scd2_user_tier_history": (
-            scd2_user_tier_history, SCD2_USER_TIER_HISTORY_ORACLE,
-        ),
-        # r9-implemented triangle counting: degree-oriented wedge
-        # enumeration vs a plain id-orientation DuckDB closure —
-        # triangle totals are orientation-independent, so hash-exact
-        "graph_triangle_cohesion": (
-            graph_triangle_cohesion, GRAPH_TRIANGLE_COHESION_ORACLE,
-        ),
-        # r12-implemented HITS hubs/authorities: two alternating
-        # integer half-rounds over the directed bipartite trading
-        # graph vs a DuckDB unrolled-CTE twin, hash-exact (ROUNDS=2
-        # contract, the pagerank precedent)
-        "graph_hits_influence": (
-            graph_hits_influence, GRAPH_HITS_INFLUENCE_ORACLE,
-        ),
-        # r9-implemented market-basket association mining: support +
-        # exact-ppm lift over the same bounded per-order pair expansion
-        "basket_pair_lift": (basket_pair_lift, BASKET_PAIR_LIFT_ORACLE),
-        # r9-implemented mergeable HLL register algebra: integer-exact
-        # registers/denominator/estimate, merged 'all' row attesting
-        # the max-merge law; the avalanche hash stays inside int64 on
-        # both engines
-        "agg_hll_registers": (agg_hll_registers, AGG_HLL_REGISTERS_ORACLE),
-        # r9-implemented count-min twin: Spark SUM-merges per-month
-        # counter tables, the oracle builds the global counters
-        # directly — hash equality attests the merge law itself
-        "agg_cms_frequencies": (
-            agg_cms_frequencies, AGG_CMS_FREQUENCIES_ORACLE,
-        ),
-        # r9-implemented daily cohort-retention grid, integer/date-
-        # exact (its funnel sibling graduated to a driver slot r12)
-        "cohort_daily_retention": (
-            cohort_daily_retention, COHORT_DAILY_RETENTION_ORACLE,
-        ),
-        # r9-implemented data-quality surface: per-column profile with
-        # deterministic renderings, and the exact equi-depth histogram
-        # via the text_length_trim rank decomposition
-        "profile_fact_columns": (
-            profile_fact_columns, PROFILE_FACT_COLUMNS_ORACLE,
-        ),
-        "histogram_equi_depth": (
-            histogram_equi_depth, HISTOGRAM_EQUI_DEPTH_ORACLE,
-        ),
-        # r9-implemented JL sign projection 64->16: hash-derived ±1
-        # matrix never materialized; Spark's 16 conditional sums vs the
-        # oracle's explicit cell expansion — identical exact integers
-        # from independent formulations
-        "emb_random_projection": (
-            emb_random_projection, EMB_RANDOM_PROJECTION_ORACLE,
-        ),
-        # r9-implemented JL-shortlist retrieval: the third pruning
-        # composition (vs IVF / IVF+PQ) — every stage integer-exact, so
-        # the WHOLE retrieval incl. shortlist membership hash-attests
-        "sim_topk_jl_rerank": (
-            sim_topk_jl_rerank, SIM_TOPK_JL_RERANK_ORACLE,
-        ),
-        # r9-implemented first-order Markov transition matrix over
-        # per-user event sequences, exact ppm probabilities
-        "markov_event_transitions": (
-            markov_event_transitions, MARKOV_EVENT_TRANSITIONS_ORACLE,
-        ),
-        # r9-implemented per-stratum fixed-size sample: deterministic
-        # hash order, WindowGroupLimit plan pin
-        "sample_k_per_group": (
-            sample_k_per_group, SAMPLE_K_PER_GROUP_ORACLE,
-        ),
-        # r9-implemented per-doc keyword extraction: rational-idf
-        # tf-idf top-k, single tokenization, hash-exact ranks
-        "text_top_terms_tfidf": (
-            text_top_terms_tfidf, TEXT_TOP_TERMS_TFIDF_ORACLE,
-        ),
-        # r9-implemented growth-accounting pair: DAU new/returning split
-        # + trailing-7d WAU, and the top 3-step behavior paths
-        "growth_accounting_daily": (
-            growth_accounting_daily, GROWTH_ACCOUNTING_DAILY_ORACLE,
-        ),
-        "path_trigrams_top": (
-            path_trigrams_top, PATH_TRIGRAMS_TOP_ORACLE,
-        ),
-        # r8-implemented record-linkage surface: prefix blocking +
-        # capped within-block Levenshtein verify, exact-integer edits
-        "dedup_fuzzy_prefix_block": (
-            dedup_fuzzy_prefix_block, DEDUP_FUZZY_PREFIX_BLOCK_ORACLE,
-        ),
-        # r9-implemented Bloom membership pre-pass for incremental
-        # ingest: word table bit-for-bit reproduced by the oracle
-        "dedup_bloom_incremental": (
-            dedup_bloom_incremental, DEDUP_BLOOM_INCREMENTAL_ORACLE,
-        ),
-        # r8-implemented SemDeDup: k-means-cell-bucketed semantic
-        # near-dup pairs, capped, exact-cosine verified
-        "dedup_semantic_cells": (
-            dedup_semantic_cells, DEDUP_SEMANTIC_CELLS_ORACLE,
-        ),
-        # r8-implemented tokenizer training: unrolled BPE merge rounds
-        # vs the same rounds as chained DuckDB CTEs, hash-exact
-        "text_bpe_merges": (text_bpe_merges, TEXT_BPE_MERGES_ORACLE),
-        # ...and its APPLY half: per-source compression accounting of
-        # the learned segmentation
-        "text_bpe_compression": (
-            text_bpe_compression, TEXT_BPE_COMPRESSION_ORACLE,
-        ),
-        # r8-implemented leakage-safe splits: bucket the near-dup
-        # COMPONENT id, vs recursive-CTE components + the same bucket
-        "sample_leakage_safe_splits": (
-            sample_leakage_safe_splits, _leakage_safe_oracle(),
-        ),
-        # r8-implemented RAG chunker: fixed window + overlap, narrow
-        # slice arithmetic, hash-exact
-        "text_chunk_overlap": (text_chunk_overlap, TEXT_CHUNK_OVERLAP_ORACLE),
-        # r9-implemented positional phrase search with a self-derived
-        # top-bigram workload — the exact-phrase complement of BM25
-        "text_phrase_search": (text_phrase_search, TEXT_PHRASE_SEARCH_ORACLE),
-        # r10-implemented CUSUM level-shift detection over the daily
-        # series: the clamped fold rewritten as prefix-sum minus
-        # running extreme, integer cents end-to-end incl. the flag
-        "ts_cusum_changepoints": (
-            ts_cusum_changepoints, TS_CUSUM_CHANGEPOINTS_ORACLE,
-        ),
-        # r10-implemented exact integer OLS trend per type: slope as an
-        # exact num/den pair + floor-divided centi-cents/day
-        "trend_daily_regression": (
-            trend_daily_regression, TREND_DAILY_REGRESSION_ORACLE,
-        ),
-        # r10-implemented tokenizer-vocab coverage / OOV-rate audit:
-        # top-df vocab via TakeOrdered, broadcast membership, exact-ppm
-        "text_vocab_coverage": (
-            text_vocab_coverage, TEXT_VOCAB_COVERAGE_ORACLE,
-        ),
-        # r10-implemented robust location/scale pair: exact lower
-        # median + MAD via the value-histogram rank decomposition x2
-        "agg_mad_robust": (agg_mad_robust, AGG_MAD_ROBUST_ORACLE),
-        # r10-implemented int8 embedding-compression audit: codes,
-        # order-sensitive checksum, saturation, nano-exact round-trip
-        # error — all map-only array HOFs, zero shuffle
-        "emb_int8_quantization": (
-            emb_int8_quantization, EMB_INT8_QUANTIZATION_ORACLE,
-        ),
-        # r10-implemented distributed exact-integer Lloyd k-means:
-        # unrolled assign->update rounds, broadcast-row centroids,
-        # map-side-combinable updates, chained-CTE oracle
-        "emb_kmeans_lloyd": (emb_kmeans_lloyd, EMB_KMEANS_LLOYD_ORACLE),
-        # r10-implemented unigram diversity signals: type-token ratio +
-        # Simpson repeat probability in exact ppm (the log-free
-        # Renyi-2 stand-in for entropy)
-        "text_simpson_diversity": (
-            text_simpson_diversity, TEXT_SIMPSON_DIVERSITY_ORACLE,
-        ),
-        # r10-implemented Hamilton largest-remainder budget allocation:
-        # char-weighted integer quotas summing exactly to the budget
-        "sample_quota_allocation": (
-            sample_quota_allocation, SAMPLE_QUOTA_ALLOCATION_ORACLE,
-        ),
-        # r10-implemented daily P50/P95/max bands: exact nearest-rank
-        # percentiles via the histogram rank decomposition per group
-        "ts_percentile_bands": (
-            ts_percentile_bands, TS_PERCENTILE_BANDS_ORACLE,
-        ),
-        # r10-implemented per-user lifetime mart: counts, active days,
-        # span, exact-cents LTV, activity density in exact ppm
-        "user_lifetime_stats": (
-            user_lifetime_stats, USER_LIFETIME_STATS_ORACLE,
-        ),
-        # r11-implemented GPT-3-style per-TRAIN-doc n-gram overlap rate
-        # vs the held-out split (the direction decontamination filters)
-        "decon_ngram_contamination": (
-            _tq().decon_ngram_contamination,
-            _tq().DECON_NGRAM_CONTAMINATION_ORACLE,
-        ),
-        # r11-implemented corpus-mixture analysis: exact pairwise
-        # unigram L1 divergence via the shared/private-mass split
-        "text_source_divergence": (
-            _tq().text_source_divergence,
-            _tq().TEXT_SOURCE_DIVERGENCE_ORACLE,
-        ),
-        # r11-implemented day-of-week seasonal baseline + residuals
-        # (the de-seasonalized anomaly input; zscore/CUSUM are blind)
-        "ts_seasonal_dow_profile": (
-            _ew().ts_seasonal_dow_profile,
-            _ew().TS_SEASONAL_DOW_PROFILE_ORACLE,
-        ),
-        # r11-implemented fixed-round k-core peel over the repeat-trade
-        # graph (third iterative kernel: degree threshold, not mass or
-        # reachability)
-        "graph_kcore_loyalty": (
-            _gq().graph_kcore_loyalty,
-            _gq().GRAPH_KCORE_LOYALTY_ORACLE,
-        ),
-        # r11-implemented audio resample cycle with an order-sensitive
-        # checksum (the PCM twin of media_bmp_real_resize)
-        "media_wav_resample": (
-            _mq().media_wav_resample,
-            _mq().MEDIA_WAV_RESAMPLE_ORACLE,
-        ),
-        # r16-implemented lossless-codec twin: paletted tiles encode ->
-        # full GIF container walk + variable-width LZW decode
-        # (operators/gif.py), interlaced on odd ids; bit-exact by
-        # losslessness, oracle from modular arithmetic
-        "media_gif_real_decode": (
-            _mq().media_gif_real_decode,
-            _mq().MEDIA_GIF_REAL_DECODE_ORACLE,
-        ),
-        # r11-implemented exact truncating-fold EWMA (alpha=1/2) — the
-        # non-associative fold CUSUM's prefix-sum rewrite can't express
-        "ts_ewma_smoothing": (
-            _ew().ts_ewma_smoothing,
-            _ew().TS_EWMA_SMOOTHING_ORACLE,
-        ),
-        # r11-implemented per-dimension rank (quantile) normalization
-        # of the embedding matrix, order-sensitive checksum
-        "emb_rank_normalize": (
-            _sq().emb_rank_normalize,
-            _sq().EMB_RANK_NORMALIZE_ORACLE,
-        ),
-        # r11-implemented quartile RFM customer mart — NTILE under
-        # deterministic total orders, uneven-bucket rule attested
-        "mart_rfm_segments": (
-            _rq().mart_rfm_segments,
-            _rq().MART_RFM_SEGMENTS_ORACLE,
-        ),
-        # r11-implemented URL canonicalization + domain rollup: Spark's
-        # real parse_url attested against the synthesis formula
-        "text_url_canonicalize": (
-            _tq().text_url_canonicalize,
-            _tq().TEXT_URL_CANONICALIZE_ORACLE,
-        ),
-        # r12-implemented per-source vocabulary richness profile:
-        # type/token + hapax counts with exact integer-ppm ratios
-        "text_vocab_hapax_profile": (
-            _tq().text_vocab_hapax_profile,
-            _tq().TEXT_VOCAB_HAPAX_PROFILE_ORACLE,
-        ),
-        # r12-implemented bidirectional nearest-event join: union-sort
-        # two-window formulation vs a full bounded-candidate rank —
-        # floored-gap tie semantics attested cross-engine
-        "asof_nearest_purchase": (
-            _xq().asof_nearest_purchase,
-            _xq().ASOF_NEAREST_PURCHASE_ORACLE,
-        ),
-        # r12-implemented MERGE INTO / CDC-upsert apply: one full-outer
-        # join of two key-grain aggregates; deletes attested by absence
-        "cdc_merge_apply": (
-            _eq().cdc_merge_apply,
-            _eq().CDC_MERGE_APPLY_ORACLE,
-        ),
-        # r12-implemented 2-D skyline via the block decomposition vs
-        # the single-node global-window DuckDB twin — hash equality
-        # attests the distributed dominance split itself.
-        # TERMINAL-LOCAL (r14 decision, VERDICT r13 item 8): both
-        # operators/rank.py block-decomposition kernels it builds on are
-        # now driver-attested (grouped_rank via mart_revenue_gini,
-        # grouped_prefix_sum via mart_pareto_concentration); the skyline
-        # composition stays on the per-round LOCALCHECK sweep
-        "skyline_part_frontier": (
-            _rq().skyline_part_frontier,
-            _rq().SKYLINE_PART_FRONTIER_ORACLE,
-        ),
-        # r11-implemented k-minimum-values distinct sketch: the Spark
-        # 'all' row MERGES the per-type sketches while the oracle
-        # computes global k-minimums raw — equality attests the KMV
-        # merge law (cms_frequencies precedent)
-        "agg_kmv_distinct": (
-            _kq().agg_kmv_distinct,
-            _kq().AGG_KMV_DISTINCT_ORACLE,
-        ),
-        # r11-implemented first-fit-decreasing context-window packing:
-        # the list-state fold (bin loads array) via aggregate HOF /
-        # DuckDB list_reduce, per-source bounded
-        "pack_binpack_ffd": (
-            _pq().pack_binpack_ffd,
-            _pq().PACK_BINPACK_FFD_ORACLE,
-        ),
-        # r11-implemented systematic every-k sampling in deterministic
-        # hash order — exact 1/k in every window, not just expectation
-        "sample_systematic_interval": (
-            _pq().sample_systematic_interval,
-            _pq().SAMPLE_SYSTEMATIC_ORACLE,
-        ),
-        # r11-implemented MinHash accuracy contract: per candidate
-        # pair, signature-agreement estimate vs exact shingle Jaccard
-        "dedup_minhash_jaccard_estimate": (
-            _dq().dedup_minhash_jaccard_estimate,
-            _dq().DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE,
-        ),
-        # r11-implemented composed anomaly detector: seasonal residuals
-        # scored against a robust median/MAD envelope
-        "ts_anomaly_mad_flags": (
-            _ew().ts_anomaly_mad_flags,
-            _ew().TS_ANOMALY_MAD_FLAGS_ORACLE,
-        ),
-        # r11-implemented conversion-latency SLA bands: reverse as-of
-        # (purchase probes its preceding click) into exact daily
-        # nearest-rank P50/P95/max seconds
-        "funnel_time_to_convert": (
-            _tmq().funnel_time_to_convert,
-            _tmq().FUNNEL_TIME_TO_CONVERT_ORACLE,
-        ),
-        # r12-implemented gaps-and-islands engagement distribution:
-        # longest consecutive-active-day streak per user (windows ride
-        # the calendar-bounded per-user day grain)
-        "user_activity_streaks": (
-            _ew().user_activity_streaks,
-            _ew().USER_ACTIVITY_STREAKS_ORACLE,
-        ),
-        # r12-implemented declarative DQ expectations (dbt-test
-        # analog): FK orphans, PK uniqueness, NOT NULL, accepted
-        # values, numeric ranges — one conditional-sum pass per table
-        "dq_expectations_suite": (
-            _fq().dq_expectations_suite,
-            _fq().DQ_EXPECTATIONS_SUITE_ORACLE,
-        ),
-        # r12-implemented k-hop BFS reachability from the hub node:
-        # 3 frontier expansions with visited-set anti-joins (the
-        # fourth iterative graph kernel) vs a DuckDB unrolled-CTE twin.
-        # TERMINAL-LOCAL (r14 decision, VERDICT r13 item 8): the
-        # iterative-join machinery it exercises (persisted edges,
-        # localCheckpoint lineage control, bounded rounds) is
-        # driver-attested through graph_pagerank_influence; no
-        # registered graph sibling is a strict subset to trade against
-        "graph_bfs_reach": (
-            _gq().graph_bfs_reach,
-            _gq().GRAPH_BFS_REACH_ORACLE,
-        ),
-        # r12-implemented positional window family:
-        # first/last/nth_value with the LAST_VALUE full-frame trap and
-        # the NTH_VALUE(2) running-frame null edge attested
-        "window_positional_values": (
-            _ew().window_positional_values,
-            _ew().WINDOW_POSITIONAL_VALUES_ORACLE,
-        ),
-        # r12-implemented interval union-merge + overlap-duration
-        # join: per-day session time inside coalesced +-300s error
-        # halos, exact integer microseconds floored once
-        "mart_session_error_exposure": (
-            _xq().mart_session_error_exposure,
-            _xq().MART_SESSION_ERROR_EXPOSURE_ORACLE,
-        ),
-        # r12-implemented deterministic epoch shuffle: exact global
-        # rank under the avalanche hash via the UNGROUPED block
-        # decomposition + round-robin shard assignment
-        "sample_shuffle_order": (
-            _pq().sample_shuffle_order,
-            _pq().SAMPLE_SHUFFLE_ORDER_ORACLE,
-        ),
-        # r12-implemented exact sample ACF of the daily revenue series
-        # at lags 1..7 (n-scaled integer deviations; the ratio's
-        # inputs are exact int64 < 2^53 so the division is
-        # IEEE-identical cross-engine)
-        "ts_autocorrelation": (
-            _ew().ts_autocorrelation,
-            _ew().TS_AUTOCORRELATION_ORACLE,
-        ),
-        # r12-implemented fulfillment-latency SLA bands: exact
-        # nearest-rank P50/P95/max order-to-ship day lag per priority
-        # over the calendar-bounded (priority, lag) histogram
-        "mart_fulfillment_latency": (
-            _fq().mart_fulfillment_latency,
-            _fq().MART_FULFILLMENT_LATENCY_ORACLE,
-        ),
-        # r12-implemented hard-negative mining: band-colliding but
-        # sub-threshold-Jaccard pairs, top-2 per anchor (contrastive
-        # training pairs from the shared LSH candidate stream)
-        "sample_hard_negatives": (
-            _dq().sample_hard_negatives,
-            _dq().SAMPLE_HARD_NEGATIVES_ORACLE,
-        ),
-        # r12-implemented distributed power iteration: top principal
-        # direction of the embedding cloud, 2 all-int64 rounds vs a
-        # DuckDB unrolled-CTE twin (matrix-free, Gram never built)
-        "emb_pca_power_iteration": (
-            _sq().emb_pca_power_iteration,
-            _sq().EMB_PCA_POWER_ITERATION_ORACLE,
-        ),
-        # r12-implemented shot/scene segmentation over frame
-        # fingerprints: mapInPandas stride-1 frame expansion ->
-        # hex-energy jumps -> gaps-and-islands scene rollup
-        "media_scene_segments": (
-            _mq().media_scene_segments,
-            _mq().MEDIA_SCENE_SEGMENTS_ORACLE,
-        ),
-        # r12-implemented experiment readout: per-variant users /
-        # purchase converters / exact-ppm conversion + uplift vs the
-        # control arm (composes exp_assignment_srm's hash arms)
-        "exp_variant_conversion": (
-            _pq().exp_variant_conversion,
-            _pq().EXP_VARIANT_CONVERSION_ORACLE,
-        ),
-        # r12-implemented k-anonymity audit over the (nation, segment)
-        # quasi-identifier pair: cells, min cell, risky cells/rows
-        # under k=5 with exact-ppm share (domain-bounded cell grain)
-        "privacy_k_anonymity": (
-            _fq().privacy_k_anonymity,
-            _fq().PRIVACY_K_ANONYMITY_ORACLE,
-        ),
-        # r12-implemented per-source data-mix report: docs/tokens
-        # before/after the quality gate + exact-ppm share of the
-        # post-gate token budget (reuses _gate_frame; SAME rules as
-        # text_quality_gate so the two attest each other)
-        "mart_corpus_mix": (
-            _tq().mart_corpus_mix,
-            _tq().MART_CORPUS_MIX_ORACLE,
-        ),
-        # r12-implemented exact quantity-weighted median price per
-        # flag via grouped_prefix_sum (lower weighted median as a MIN
-        # over the running-weight threshold; all-integer)
-        "agg_weighted_median": (
-            _fq().agg_weighted_median,
-            _fq().AGG_WEIGHTED_MEDIAN_ORACLE,
-        ),
-        # r12-implemented experiment assignment + SRM audit: avalanche
-        # hash buckets -> weighted variants, per-arm Pearson chi-square
-        # contribution in exact integer micro-units.
-        # TERMINAL-LOCAL (r14 decision, VERDICT r13 item 8): the
-        # deterministic hash-bucket assignment primitive is
-        # driver-attested through sample_stratified_by, and the SRM
-        # chi-square readout composes it with plain conditional sums;
-        # stays on the LOCALCHECK sweep with exp_variant_conversion
-        "exp_assignment_srm": (
-            _pq().exp_assignment_srm,
-            _pq().EXP_ASSIGNMENT_SRM_ORACLE,
-        ),
-        # r12-implemented LPA community detection: 2 synchronous
-        # most-frequent-neighbor-label rounds (ties to smallest) over
-        # the k-core's repeat-trade graph vs a DuckDB unrolled-CTE twin
-        "graph_label_propagation": (
-            _gq().graph_label_propagation,
-            _gq().GRAPH_LABEL_PROPAGATION_ORACLE,
-        ),
-    }
+# Local-only queries: oracled capabilities registered with
+# ``local=True``, outside the driver contract. Same compare as the
+# registered set; tools/localcheck.py sweeps them too.
+LOCAL = local_queries()
 
 
-def _fq():
-    from erathia_market_etl_spark.plans import profile_queries
-
-    return profile_queries
-
-
-def _tmq():
-    from erathia_market_etl_spark.plans import temporal_queries
-
-    return temporal_queries
-
-
-def _dq():
-    from erathia_market_etl_spark.plans import dedup_queries
-
-    return dedup_queries
-
-
-def _pq():
-    from erathia_market_etl_spark.plans import sampling_queries
-
-    return sampling_queries
-
-
-def _kq():
-    from erathia_market_etl_spark.plans import sketch_queries
-
-    return sketch_queries
-
-
-def _rq():
-    from erathia_market_etl_spark.plans import relational
-
-    return relational
-
-
-def _sq():
-    from erathia_market_etl_spark.plans import similarity_queries
-
-    return similarity_queries
-
-
-def _tq():
-    from erathia_market_etl_spark.plans import text_queries
-
-    return text_queries
-
-
-def _xq():
-    from erathia_market_etl_spark.plans import temporal_queries
-
-    return temporal_queries
-
-
-def _eq():
-    from erathia_market_etl_spark.plans import event_windows
-
-    return event_windows
-
-
-def _ew():
-    from erathia_market_etl_spark.plans import event_windows
-
-    return event_windows
-
-
-def _gq():
-    from erathia_market_etl_spark.plans import graph_queries
-
-    return graph_queries
-
-
-def _mq():
-    from erathia_market_etl_spark.plans import multimodal_queries
-
-    return multimodal_queries
-
-
-@pytest.mark.parametrize("name", sorted(_queued()))
+@pytest.mark.parametrize("name", sorted(LOCAL))
 def test_queued_queries_match(spark, name):
-    fn, oracle = _queued()[name]
+    fn, oracle = LOCAL[name]
     result = compare_query(name, fn(spark, SF_SMOKE), oracle, SF_SMOKE)
     assert result.ok, result
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as ST
 
-from erathia_market_etl_spark.plans import all_queries
+from erathia_market_etl_spark.plans import all_queries, local_queries, query
 
 from .conftest import SF_SMOKE
 
@@ -56,12 +56,10 @@ def test_coverage_markers_match_registry_sets():
     hand-written narrative."""
     from pathlib import Path
 
-    from tests.test_oracle_parity import _queued
-
     text = Path(__file__).resolve().parents[1].joinpath(
         "COVERAGE.md"
     ).read_text()
-    stale = [n for n in _queued() if f"★ `{n}`" in text]
+    stale = [n for n in local_queries() if f"★ `{n}`" in text]
     assert stale == [], (
         f"COVERAGE.md marks non-registered queries as ★: {stale}"
     )
@@ -143,6 +141,43 @@ def test_registered_names_and_oracles_are_pinned():
         name: hashlib.sha256(sql.encode()).hexdigest()
         for name, sql in oracles.items()
     } == _ORACLE_SHA256
+
+
+# sha256 of json.dumps(sorted((name, oracle) for every local query))
+_LOCAL_SHA256 = "12a35c869ea740c7d08d86c883bfc79a40a1cbe2ff9e42d5361983e581009751"
+
+
+def test_local_names_and_oracles_are_pinned():
+    """The local-only surface: 84 oracled queries registered with
+    ``local=True``, pinned like the driver set (one hash over all
+    names and oracle bytes)."""
+    import hashlib
+    import json
+
+    local = local_queries()
+    assert len(local) == 84
+    pairs = sorted((name, oracle) for name, (_, oracle) in local.items())
+    digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
+    assert digest == _LOCAL_SHA256
+
+
+def test_local_and_driver_sets_are_disjoint():
+    assert set(local_queries()).isdisjoint(QUERIES)
+
+
+def test_local_entries_are_registered_at_their_definition():
+    # a decorator slid onto a helper would register it under the name
+    bad = [n for n, (fn, _) in local_queries().items() if fn.__name__ != n]
+    assert bad == []
+
+
+@pytest.mark.parametrize("taken", ["q1_net_revenue_by_nation", "sim_topk_lsh_bucket"])
+@pytest.mark.parametrize("local", [False, True])
+def test_duplicate_name_across_sets_raises(taken, local):
+    before = (all_queries(), local_queries())
+    with pytest.raises(ValueError, match="duplicate query name"):
+        query(taken, "SELECT 1", local=local)(lambda spark, sf_dir: None)
+    assert (all_queries(), local_queries()) == before
 
 
 _ORACLE_SHA256 = {

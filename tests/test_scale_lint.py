@@ -53,25 +53,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from erathia_market_etl_spark.plans import all_queries
+from erathia_market_etl_spark.plans import all_queries, local_queries
 
 from .conftest import SF_T2
 
-QUERIES = all_queries()
-
-
-def _with_queued() -> dict:
-    """Registered queries plus the local-only queue
-    (test_oracle_parity._queued) — the scale-lint rules are policy for
-    EVERY query shape the repo ships, driver-registered or not."""
-    from .test_oracle_parity import _queued
-
-    out = dict(QUERIES)
-    out.update({n: fn for n, (fn, _) in _queued().items()})
-    return out
-
-
-ALL_QUERIES = _with_queued()
+# the scale-lint rules are policy for EVERY query shape the repo ships,
+# driver-registered or local-only
+ALL_QUERIES = dict(all_queries())
+ALL_QUERIES.update({n: fn for n, (fn, _) in local_queries().items()})
 BATCH = [n for n in ALL_QUERIES if not n.startswith("stream_")]
 
 

@@ -222,26 +222,6 @@ def test_assign_cells_zero_norm_guard(spark):
     assert out[2] == 0  # all -inf -> deterministic lowest-cid tie-break
 
 
-def test_sim_topk_lsh_bucket_matches_oracle(spark):
-    """sim_topk_lsh_bucket is local-only; it keeps the SAME oracle check
-    here, through the same compare the driver runs."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        LSH_BUCKET_ORACLE,
-        sim_topk_lsh_bucket,
-    )
-    from erathia_market_etl_spark.testing import compare_query
-
-    from .conftest import SF_SMOKE
-
-    r = compare_query(
-        "sim_topk_lsh_bucket",
-        sim_topk_lsh_bucket(spark, SF_SMOKE),
-        LSH_BUCKET_ORACLE,
-        SF_SMOKE,
-    )
-    assert r.ok, r
-
-
 def test_ivf_cells_partitioned_write_prunes_probes(spark, clustered_emb, tmp_path):
     """SCALE.md's IVF claim, demonstrated: cells written partitionBy(cid)
     turn probe reads into PARTITION PRUNING — a probe of nprobe cells

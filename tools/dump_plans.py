@@ -17,9 +17,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, TIER2, _tier2_queries
+from bench import HEADLINE, TIER2
 from erathia_market_etl_spark.config import EngineConfig
-from erathia_market_etl_spark.plans import all_queries
+from erathia_market_etl_spark.plans import all_queries, local_queries
 from erathia_market_etl_spark.session import get_spark
 
 _PLANS_ROOT = os.path.join(
@@ -41,11 +41,11 @@ def main() -> None:
     spark = get_spark(EngineConfig(app_name="erathia-plan-dump"))
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    tier2_fns = _tier2_queries()
+    local = {n: fn for n, (fn, _) in local_queries().items()}
     for name in names:
         if name == "stream_rollup_maintenance":
             continue  # streaming lifecycle closure: no single frame to explain
-        fn = registry.get(name) or tier2_fns.get(name)
+        fn = registry.get(name) or local.get(name)
         if fn is None:
             print(f"SKIP {name}: not found")
             continue

@@ -99,22 +99,20 @@ def collect_evidence(root: Path) -> dict[str, dict]:
 
 def query_sets() -> dict[str, str]:
     """name -> registered | local-only, from the live code."""
-    from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued
+    from erathia_market_etl_spark.plans import all_queries, local_queries
 
     sets = {n: "registered" for n in all_queries()}
-    sets.update({n: "local-only" for n in _queued()})
+    sets.update({n: "local-only" for n in local_queries()})
     return sets
 
 
 def query_families() -> dict[str, str]:
     """name -> defining plan module (the family grouping COVERAGE.md's
     narrative sections follow), from the live callables."""
-    from erathia_market_etl_spark.plans import all_queries
-    from tests.test_oracle_parity import _queued
+    from erathia_market_etl_spark.plans import all_queries, local_queries
 
     fns: dict[str, object] = dict(all_queries())
-    fns.update({n: fq[0] for n, fq in _queued().items()})
+    fns.update({n: fq[0] for n, fq in local_queries().items()})
     return {
         n: getattr(f, "__module__", "?").rsplit(".", 1)[-1]
         for n, f in fns.items()

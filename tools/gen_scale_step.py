@@ -336,28 +336,17 @@ def run_compare() -> None:
     303k capped LSH pairs, 1M-row running totals, the 160k-row
     pagerank fixed-point, and the Gini int64 envelope)."""
     from erathia_market_etl_spark.config import EngineConfig
-    from erathia_market_etl_spark.plans import registry
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        AGG_HLL_REGISTERS_ORACLE,
-        agg_hll_registers,
+    from erathia_market_etl_spark.plans import (
+        all_oracles, all_queries, local_queries,
     )
     from erathia_market_etl_spark.session import get_spark
     from erathia_market_etl_spark.testing import compare_query
 
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        _ivfpq_oracle,
-        sim_ivfpq_topk,
-    )
-
-    registry._load_all()
-    items = [
-        (n, registry.QUERIES[n], registry.ORACLES[n]) for n in COMPARE_NAMES
-    ]
-    items += [
-        ("agg_hll_registers", agg_hll_registers, AGG_HLL_REGISTERS_ORACLE),
-        # local-only contract sibling, third-fingerprint-pinned r14
-        ("sim_ivfpq_topk", sim_ivfpq_topk, _ivfpq_oracle()),
-    ]
+    queries, oracles, local = all_queries(), all_oracles(), local_queries()
+    items = [(n, queries[n], oracles[n]) for n in COMPARE_NAMES]
+    # local-only: agg_hll_registers, and the contract sibling
+    # sim_ivfpq_topk (third-fingerprint-pinned r14)
+    items += [(n, *local[n]) for n in ("agg_hll_registers", "sim_ivfpq_topk")]
     spark = get_spark(
         EngineConfig(app_name="sf1-compare", driver_memory="24g")
     )

@@ -2,9 +2,9 @@
 
 Runs the driver's EXACT compare (same ``compare_query`` → toPandas vs
 duckdb .df(), same rows/schema/order-insensitive-value-hash checks) over
-the whole registry plus the local-only set (the ``_queued()`` map in
-tests/test_oracle_parity.py) and writes ``LOCALCHECK_r{N}.json`` next to
-the CORRECTNESS artifacts, row format identical.
+the whole registry plus the local-only set (``plans.local_queries()``)
+and writes ``LOCALCHECK_r{N}.json`` next to the CORRECTNESS artifacts,
+row format identical.
 
 Usage: python tools/localcheck.py [round] [sf_dir]
   round  defaults to (max committed CORRECTNESS round) + 1
@@ -53,15 +53,16 @@ def main() -> None:
     rnd = int(args[0]) if len(args) > 0 else _current_round(root)
     sf_dir = args[1] if len(args) > 1 else DEFAULT_SF_DIR
 
-    from erathia_market_etl_spark.plans import all_oracles, all_queries
-    from tests.test_oracle_parity import _queued
+    from erathia_market_etl_spark.plans import (
+        all_oracles, all_queries, local_queries,
+    )
 
     oracles = all_oracles()
     targets: dict[str, tuple] = {
         name: (fn, oracles[name], "registered")
         for name, fn in all_queries().items()
     }
-    for name, (fn, oracle) in _queued().items():
+    for name, (fn, oracle) in local_queries().items():
         targets[name] = (fn, oracle, "local-only")
 
     spark = get_spark(EngineConfig(app_name="erathia-localcheck"))
