@@ -17,8 +17,10 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import SimulationConfig
+from ..pipeline import DIM_SCHEMAS, FACT_SALES_SCHEMA
 from .definitions import customers, factions, product_categories, products, towns
 from .simulate import MarketSimulator, Trade
 
@@ -53,12 +55,9 @@ def calendar_rows(cfg: SimulationConfig) -> list[dict]:
     return rows
 
 
-def _write_single(path: str, rows: list[dict]) -> None:
-    pq.write_table(pa.Table.from_pylist(rows), path)
-
-
 def write_dimensions(out_dir: str, cfg: SimulationConfig) -> dict[str, int]:
-    """All six dims, one parquet file each (S4). dim_product drops the
+    """All six dims, one parquet file each (S4), each written with its
+    declared schema (``pipeline.DIM_SCHEMAS``). dim_product drops the
     denormalized category_name/tier_level before persisting — the
     snowflake stays normalized (ref: bronze_generator.py:425-427)."""
     os.makedirs(out_dir, exist_ok=True)
@@ -96,7 +95,8 @@ def write_dimensions(out_dir: str, cfg: SimulationConfig) -> dict[str, int]:
         "dim_date": calendar_rows(cfg),
     }
     for name, rows in dims.items():
-        _write_single(os.path.join(out_dir, f"{name}.parquet"), rows)
+        table = pa.Table.from_pylist(rows, schema=to_arrow_schema(DIM_SCHEMAS[name]))
+        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
     return {name: len(rows) for name, rows in dims.items()}
 
 
@@ -167,7 +167,7 @@ def _flush_fact(fact_dir: str, trades: list[Trade], chunk_id: int) -> int:
     rows = _fact_rows(trades)
     if not rows:
         return 0
-    table = pa.Table.from_pylist(rows)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(FACT_SALES_SCHEMA))
     pq.write_to_dataset(
         table,
         root_path=fact_dir,

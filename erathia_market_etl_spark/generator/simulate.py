@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import random
 from dataclasses import dataclass, field
+from itertools import accumulate
 
 from .definitions import CustomerDef, ProductDef, customers, products
 
@@ -77,6 +78,10 @@ _TIER_ODDS: dict[str, tuple[float, float, float, float]] = {
     "low_income": (0.9999, 0.0, 0.0, 0.0001),
 }
 _TIER_NAMES = ("low", "mid", "high", "relic")
+# random.choices(weights=...) accumulates the weights on every call;
+# passing the same accumulation as cum_weights bisects the same floats,
+# so the draw stream is unchanged (pinned in tests/test_pipeline.py).
+_TIER_CUM = {cls: list(accumulate(w)) for cls, w in _TIER_ODDS.items()}
 
 
 @dataclass
@@ -135,6 +140,7 @@ class MarketSimulator:
             "vip": (vip_buy, vip_sell, 1.0 - vip_buy - vip_sell),
             "unit": (unit_buy, unit_sell, 1.0 - unit_buy - unit_sell),
         }
+        self._cum_odds = {k: list(accumulate(v)) for k, v in self.odds.items()}
         self.date_keys = date_keys
         self.town_keys = list(town_keys)  # global draw (ref :313,340)
         self.products: dict[int, ProductDef] = {p.key: p for p in products()}
@@ -183,10 +189,8 @@ class MarketSimulator:
         (gold < 2x income) AND holding inventory, else 'vip' odds —
         wealth-based, not segment-based."""
         cash_poor = a.gold < 2.0 * a.spec.base_income and bool(a.inventory)
-        buy, sell, hold = self.odds["unit" if cash_poor else "vip"]
-        return self.rng.choices(
-            ("BUY", "SELL", "HOLD"), weights=(buy, sell, hold), k=1
-        )[0]
+        cum = self._cum_odds["unit" if cash_poor else "vip"]
+        return self.rng.choices(("BUY", "SELL", "HOLD"), cum_weights=cum, k=1)[0]
 
     def _pick_tier(self, a: AgentState) -> str:
         """G4 (ref choose_product_tier_to_buy:168-183): class by segment
@@ -199,7 +203,7 @@ class MarketSimulator:
             cls = "mid_income"
         else:
             cls = "low_income"
-        tier = self.rng.choices(_TIER_NAMES, weights=_TIER_ODDS[cls], k=1)[0]
+        tier = self.rng.choices(_TIER_NAMES, cum_weights=_TIER_CUM[cls], k=1)[0]
         if not self._pools[tier]:
             tier = "low"
         return tier

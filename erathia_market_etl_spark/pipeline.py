@@ -8,10 +8,11 @@ dm_* data marts of src/gold_aggregator.py:27-125 executed by Catalyst
 over temp views, with the same business-facing column aliases (spaces
 and all — backticked in Spark SQL, SURVEY.md §7.4).
 
-Scale notes: the fact is read with Hive partition discovery and written
-back partitioned by (year, month) so date-bounded mart queries prune;
-every dim join broadcasts (dims are KB-sized at any fact scale); the
-marts' group-bys are the only shuffles.
+Scale notes: every table is read with its declared schema (no
+schema-inference job), the fact keeps its Hive (year, month) layout
+through silver so date-bounded mart queries prune, and every dim join
+broadcasts (dims are KB-sized at any fact scale). Gold reads silver back
+from parquet, so silver is a durable, re-runnable boundary.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -28,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .sources.parquet_io import load_table
 
 # The reference DECLARED an explicit fact schema but never imported it
 # anywhere (schemas.py:6-19 — dead code; SURVEY.md §1.4). Here it is an
@@ -56,10 +60,57 @@ FACT_SALES_SCHEMA = StructType(
     ]
 )
 
-DIM_TABLES = [
-    "dim_faction", "dim_town", "dim_customer",
-    "dim_product_category", "dim_product", "dim_date",
-]
+
+# The six dims under the same contract, in write order. generator/bronze.py
+# writes them with these schemas, and tests/test_schema_contract.py pins
+# both against the footers.
+DIM_SCHEMAS: dict[str, StructType] = {
+    "dim_faction": StructType([
+        StructField("faction_key", LongType()),
+        StructField("faction_name", StringType()),
+    ]),
+    "dim_town": StructType([
+        StructField("town_key", LongType()),
+        StructField("town_name", StringType()),
+        StructField("faction_key", LongType()),
+    ]),
+    "dim_customer": StructType([
+        StructField("customer_key", LongType()),
+        StructField("customer_name", StringType()),
+        StructField("customer_segment", StringType()),
+        StructField("unit_tier", LongType()),
+        StructField("base_income", DoubleType()),
+        StructField("faction_key", LongType()),
+    ]),
+    "dim_product_category": StructType([
+        StructField("category_key", LongType()),
+        StructField("category_name", StringType()),
+        StructField("tier_level", StringType()),
+    ]),
+    "dim_product": StructType([
+        StructField("product_key", LongType()),
+        StructField("product_name", StringType()),
+        StructField("base_value_gold", DoubleType()),
+        StructField("category_key", LongType()),
+    ]),
+    "dim_date": StructType([
+        StructField("date_key", LongType()),
+        StructField("lore_date_str", StringType()),
+        StructField("day_of_week", LongType()),
+        StructField("month", LongType()),
+        StructField("day", LongType()),
+        StructField("year", LongType()),
+        StructField("is_weekend", BooleanType()),
+    ]),
+}
+# Silver adds exactly one column, P3's is_hero flag on dim_customer.
+SILVER_SCHEMAS: dict[str, StructType] = {
+    "fact_sales": FACT_SALES_SCHEMA,
+    **DIM_SCHEMAS,
+    "dim_customer": StructType(
+        DIM_SCHEMAS["dim_customer"].fields + [StructField("is_hero", BooleanType())]
+    ),
+}
 DIM_KEYS = {
     "dim_faction": "faction_key",
     "dim_town": "town_key",
@@ -89,6 +140,18 @@ def enrich_customer(dim_customer: DataFrame) -> DataFrame:
     )
 
 
+def clean_dim(dim: DataFrame, name: str) -> DataFrame:
+    """P4 dedup by key (plus P3 for dim_customer) on ONE partition. The
+    single-file dim write (S8) needs ``coalesce(1)`` anyway, and taking
+    it first means the dedup's input is already ``SinglePartition``,
+    which satisfies the aggregate's distribution: no Exchange, one job
+    per dim instead of a shuffle-map job plus a write job."""
+    one = dim.coalesce(1)
+    if name == "dim_customer":
+        return enrich_customer(one)
+    return one.dropDuplicates([DIM_KEYS[name]])
+
+
 def run_silver(spark: SparkSession, bronze_dir: str, silver_dir: str) -> dict[str, int]:
     """Clean every bronze table into silver parquet: fact partitioned by
     (year, month) (S7), dims compacted to one file (S8). Returns row
@@ -100,37 +163,33 @@ def run_silver(spark: SparkSession, bronze_dir: str, silver_dir: str) -> dict[st
 
     counts: dict[str, int] = {}
 
-    fact = spark.read.schema(FACT_SALES_SCHEMA).parquet(
-        os.path.join(bronze_dir, "fact_sales")
-    )
+    fact = load_table(spark, bronze_dir, "fact_sales", FACT_SALES_SCHEMA)
     obs = Observation("silver_fact_rows")
     fact = clean_fact(fact).observe(obs, F.count(F.lit(1)).alias("rows"))
-    fact.write.mode("overwrite").partitionBy("year", "month").parquet(
-        os.path.join(silver_dir, "fact_sales")
-    )
+    # REBALANCE on the partition columns: each (year, month) lands in one
+    # shuffle partition, AQE coalesces small months together and splits
+    # a skewed one, so each month dir gets about one file instead of one
+    # per bronze chunk that touched it.
+    fact.hint("rebalance", "year", "month").write.mode("overwrite").partitionBy(
+        "year", "month"
+    ).parquet(os.path.join(silver_dir, "fact_sales"))
     counts["fact_sales"] = obs.get["rows"]
 
-    for name in DIM_TABLES:
-        df = spark.read.parquet(os.path.join(bronze_dir, f"{name}.parquet"))
-        if name == "dim_customer":
-            df = enrich_customer(df)
-        else:
-            df = df.dropDuplicates([DIM_KEYS[name]])
+    for name, schema in DIM_SCHEMAS.items():
+        df = clean_dim(load_table(spark, bronze_dir, name, schema), name)
         dim_obs = Observation(f"silver_{name}_rows")
         df = df.observe(dim_obs, F.count(F.lit(1)).alias("rows"))
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(silver_dir, name)
-        )
+        df.write.mode("overwrite").parquet(os.path.join(silver_dir, name))
         counts[name] = dim_obs.get["rows"]
     return counts
 
 
 def register_silver_views(spark: SparkSession, silver_dir: str) -> None:
     """Expose silver tables to SQL — replaces the reference's DuckDB
-    ingest (S9): same engine end-to-end, no parquet round-trip between
-    silver and gold."""
-    for name in ["fact_sales", *DIM_TABLES]:
-        spark.read.parquet(os.path.join(silver_dir, name)).createOrReplaceTempView(name)
+    ingest (S9): same engine end-to-end, each view read back with its
+    declared silver schema."""
+    for name, schema in SILVER_SCHEMAS.items():
+        load_table(spark, silver_dir, name, schema).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------

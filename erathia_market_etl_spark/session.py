@@ -59,6 +59,13 @@ def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSessio
         # (winnowing) lives in numpy uint64 inside Arrow UDFs, outside
         # ANSI's reach. See SCALE.md "ANSI mode".
         .config("spark.sql.ansi.enabled", "true")
+        # Spark's generated-class cache holds 100 by default, but one
+        # medallion pass touches 129 distinct classes and a cold corpus
+        # pass 146-158, always in the same cycle, so the LRU never hits
+        # and every warm pass recompiles them all. 1000 holds both. A
+        # static conf: it must be set before the session starts, which
+        # is why harden_session cannot apply it (SCALE.md).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

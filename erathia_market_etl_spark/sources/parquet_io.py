@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -33,23 +34,58 @@ FIXTURE_TABLES = (
 )
 
 
+class MissingColumnError(ValueError):
+    """A parquet table lacks a column its declared schema names. Under a
+    user schema Spark's reader returns NULL for an absent column (a
+    bronze dim_customer without customer_segment would silently make
+    every is_hero false), so ``load_table`` refuses instead."""
+
+    def __init__(self, table: str, column: str, path: str) -> None:
+        super().__init__(f"table {table}: declared column {column!r} is missing from {path}")
+        self.table, self.column, self.path = table, column, path
+
+
+def _check_declared_columns(path: str, table: str, schema: StructType) -> None:
+    """Every data file Spark would read under ``path`` (hidden ``_``/``.``
+    entries skipped, as its file index does) must carry every declared
+    column in its footer or in its Hive ``col=value`` directories. The
+    footers are read with pyarrow in this process, so the check launches
+    no Spark job."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            files += [os.path.join(root, f) for f in names if not f.startswith(("_", "."))]
+    for f in sorted(files):
+        present = set(pq.read_schema(f).names)
+        rel = os.path.relpath(os.path.dirname(f), path)
+        present |= {seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg}
+        for field in schema.fields:
+            if field.name not in present:
+                raise MissingColumnError(table, field.name, f)
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
     name: str,
     schema: StructType | None = None,
 ) -> DataFrame:
-    """Read one fixture/bronze table. ``schema`` enforces a contract on
-    read (the reference declared FACT_SALES_SCHEMA but never applied it —
-    schemas.py:6-19; here enforcement is opt-in and real)."""
+    """Read one fixture/bronze/silver table. ``schema`` enforces a
+    contract on read (the reference declared FACT_SALES_SCHEMA but never
+    applied it — schemas.py:6-19): no schema-inference job, types checked
+    at the scan, and a declared column missing from any file raises
+    ``MissingColumnError``."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.exists(path):
         # hive-partitioned tables are directories (fact_sales/year=.../)
         path = os.path.join(sf_dir, name)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    if schema is None:
+        return spark.read.parquet(path)
+    _check_declared_columns(path, name, schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[str, DataFrame]:

@@ -36,7 +36,7 @@ class _ScriptedRng:
         vals = self.script.get(name)
         return vals.pop(0) if vals else default
 
-    def choices(self, population, weights=None, k=1):
+    def choices(self, population, weights=None, *, cum_weights=None, k=1):
         return [self._next("choices", population[0])]
 
     def choice(self, seq):
