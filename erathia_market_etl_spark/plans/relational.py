@@ -656,7 +656,9 @@ def scalar_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS with GROUPING() flags (disambiguates real
     NULL group values from subtotal rows) — the general form of
-    rollup/cube."""
+    rollup/cube. The grand-total set ``()`` is a separate global
+    aggregate, as in ``agg_rollup``: Spark's grouping sets yield no row
+    on empty input, where SQL yields the one grand-total row."""
     T(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
     return spark.sql("""
         SELECT l_returnflag, l_linestatus,
@@ -664,7 +666,10 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(GROUPING(l_linestatus) AS TINYINT) AS g_status,
                COUNT(*) AS n_rows
         FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag))
+        UNION ALL
+        SELECT NULL, NULL, CAST(1 AS TINYINT), CAST(1 AS TINYINT), COUNT(*)
+        FROM lineitem_gs
         ORDER BY g_flag, g_status, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """)
 
@@ -716,11 +721,18 @@ def agg_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS surface via rollup — subtotals + grand total."""
+    lineitem = T(spark, sf_dir, "lineitem")
+    aggs = (F.count(F.lit(1)).alias("n_rows"),
+            money_sum_cents(cents("l_extendedprice")).alias("sum_price"))
+    subtotals = lineitem.groupingSets(
+        [["l_returnflag", "l_linestatus"], ["l_returnflag"]],
+        "l_returnflag", "l_linestatus",
+    ).agg(*aggs)
+    # The grand total is a global aggregate, not the grouping set ():
+    # Spark's Expand + Aggregate yields no row on empty input, where SQL
+    # (and the oracle) yields the one grand-total row.
     return (
-        T(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n_rows"),
-             money_sum_cents(cents("l_extendedprice")).alias("sum_price"))
+        subtotals.unionByName(lineitem.agg(*aggs), allowMissingColumns=True)
         .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"))
     )
 

@@ -15,6 +15,17 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT, EngineConfig
 
 
+# HotSpot sizes its JIT compiler pool from the host's core count (3
+# threads on 4 cores, 15 on 32), not from how long the JVM lives. In the
+# short local sessions get_spark starts, the C1/C2 threads used 19 of
+# 31 s CPU on a cold medallion pass and 27 of 45 s on a cold corpus pass
+# (4 cores), mostly speculative C2 compiles of lukewarm Spark
+# infrastructure that a short session never pays back. Two threads (one
+# C1, one C2) compile the hottest methods first; steady-state loops
+# still reach C2. Driver JVM only, and static (SCALE.md).
+DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+
+
 def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSession:
     cfg = cfg or DEFAULT
     master = cfg.master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
@@ -66,6 +77,7 @@ def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSessio
         # static conf: it must be set before the session starts, which
         # is why harden_session cannot apply it (SCALE.md).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
@@ -75,7 +87,13 @@ def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSessio
 def harden_session(spark: SparkSession) -> SparkSession:
     """Apply deterministic, runtime-settable confs to a session we did
     not create (the driver hands us its own). Only touches confs that are
-    safe to set post-start and that correctness depends on."""
+    safe to set post-start and that correctness depends on.
+
+    The two static settings ``get_spark`` pins cannot be applied here: a
+    handed-in session keeps its own ``spark.sql.codegen.cache.maxEntries``
+    and its JVM's JIT compiler pool (``-XX:CICompilerCount`` in
+    ``spark.driver.extraJavaOptions``), because both are fixed when the
+    JVM starts."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # TIMESTAMP(NANOS) parquet (events.ts) is otherwise unreadable in

@@ -3,6 +3,10 @@ the same comparison the driver runs at sf0.01 (BASELINE.md t2)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow.parquet as pq
 import pytest
 
 from erathia_market_etl_spark.plans import (
@@ -24,6 +28,30 @@ def test_query_matches_oracle(spark, name):
         f"cols_match={result.columns_match} hash={result.hash_match}\n"
         f"spark cols: {result.spark_cols}\noracle cols: {result.oracle_cols}"
     )
+
+
+@pytest.fixture(scope="module")
+def sf_empty_lineitem(tmp_path_factory):
+    """The sf0.001 fixture with ``lineitem`` emptied, its schema kept."""
+    sf_dir = tmp_path_factory.mktemp("sf_empty_lineitem")
+    for name in os.listdir(SF_SMOKE):
+        shutil.copyfile(os.path.join(SF_SMOKE, name), sf_dir / name)
+    path = str(sf_dir / "lineitem.parquet")
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, 0), path)
+    return str(sf_dir)
+
+
+@pytest.mark.parametrize("name", ["agg_rollup", "agg_grouping_sets"])
+def test_grouping_sets_emit_grand_total_on_empty_input(
+    spark, sf_empty_lineitem, name
+):
+    # SQL's grouping set () yields one grand-total row even over no
+    # input; the oracle returns it, so the query must too
+    df = QUERIES[name](spark, sf_empty_lineitem)
+    result = compare_query(name, df, ORACLES[name], sf_empty_lineitem)
+    assert result.oracle_rows == 1
+    assert result.ok, result
 
 
 def test_every_registered_query_has_an_oracle():

@@ -10,6 +10,8 @@ on a planted star (the hub must outrank every leaf).
 
 from __future__ import annotations
 
+import pytest
+
 
 def _py_pagerank(edges, iters, scale=1_000_000):
     """Reference: same integer arithmetic, driver-side. Every node with
@@ -64,6 +66,26 @@ def test_pagerank_matches_python_on_random_graphs(spark):
     run()
 
 
+# 4-cycle with an off-cycle feeder and a pure source node: the ranks
+# still move after 17 rounds, so every round count below is distinct
+_CADENCE_EDGES = [(1, 2), (2, 3), (3, 4), (4, 1), (5, 1), (5, 2), (2, 5), (6, 3)]
+
+
+@pytest.mark.parametrize("iters", [8, 9, 16, 17])
+def test_pagerank_exact_across_checkpoint_cadence(spark, iters):
+    """Fixed-round mode checkpoints the unrolled plan every 8 rounds:
+    8 and 16 end on a cadence boundary (no mid-plan checkpoint at the
+    last round), 9 and 17 resume after one and two checkpoints."""
+    from erathia_market_etl_spark.operators.graph import pagerank_fixed_point
+
+    df = spark.createDataFrame(_CADENCE_EDGES, "src long, dst long")
+    got = {
+        r["v"]: (r["rank"], r["deg"])
+        for r in pagerank_fixed_point(df, iters=iters).collect()
+    }
+    assert got == _py_pagerank(_CADENCE_EDGES, iters)
+
+
 def test_pagerank_star_hub_dominates(spark):
     """Undirected star K_{1,n}: the hub aggregates every leaf's full
     rank (deg(leaf)=1) while each leaf gets 1/n of the hub's — after
@@ -111,8 +133,6 @@ def test_pagerank_directed_source_node_keeps_rank_and_feeds_mass(spark):
 
 
 def test_pagerank_rejects_zero_iters(spark):
-    import pytest
-
     from erathia_market_etl_spark.operators.graph import pagerank_fixed_point
 
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
@@ -164,8 +184,6 @@ def test_fixed_rounds_differ_from_fixpoint(spark):
 
 
 def test_pagerank_rejects_bad_tol(spark):
-    import pytest
-
     from erathia_market_etl_spark.operators.graph import pagerank_fixed_point
 
     df = spark.createDataFrame([(1, 2)], "src long, dst long")

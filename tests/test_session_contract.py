@@ -7,6 +7,9 @@ load-bearing — an envelope violation is a loud ARITHMETIC_OVERFLOW, not
 a silently wrapped sketch. These tests pin all three legs: the conf is
 on (and re-pinned onto handed-in sessions), overflow REALLY raises in
 this session, and the proved envelope extreme REALLY doesn't.
+
+The engine JVM's JIT compiler pool is capped at two threads (SCALE.md
+"Session defaults"); the last test reads the flag back from HotSpot.
 """
 
 from __future__ import annotations
@@ -51,3 +54,13 @@ def test_zorder_envelope_extreme_is_overflow_free(spark):
         f"SELECT CAST({vmax} AS BIGINT) * CAST({1 << bits} AS BIGINT) AS k"
     ).collect()[0]
     assert row["k"] == (1 << 63) - (1 << bits)
+
+
+def test_engine_jvm_caps_jit_compiler_pool(spark):
+    # read the flag the JVM runs with, not the argument list: HotSpot
+    # sizes the pool from the core count (3 on 4 cores) unless capped
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("CICompilerCount").getValue() == "2"
