@@ -683,93 +683,6 @@ def pagerank_fixed_point(
     return ranks.select("v", "rank", "deg")
 
 
-def triangle_counts(edges: DataFrame, x: str = "x", y: str = "y") -> DataFrame:
-    """Per-vertex triangle counts over an UNDIRECTED simple graph given
-    as canonical distinct edges (``x < y``, no duplicates — the
-    caller's contract; a duplicated or mirrored edge would double-count
-    every triangle it closes). Returns (v, degree, triangles) for
-    EVERY vertex, triangle-free vertices included with triangles = 0.
-
-    Algorithm: degree orientation (Cohen's MapReduce triangle
-    enumeration / the GraphX ``TriangleCount`` shape). Each undirected
-    edge is oriented from its lower endpoint to its higher endpoint
-    under the total order (degree, id); every triangle then has
-    exactly ONE vertex with oriented edges to the other two (its
-    minimum under that order), so enumerating oriented wedges
-    (u -> v, u -> w with v < w by id) and closing them against the
-    canonical edge set counts each triangle exactly once — no
-    per-triangle dedup pass.
-
-    Why orientation matters at 100 TB: the wedge join is the whole
-    cost, and its size is sum(outdeg(u)^2). Unoriented, a single
-    degree-D hub contributes D^2 wedges (the classic skew blow-up);
-    degree orientation caps every outdeg at O(sqrt(m)) (a vertex only
-    points at HIGHER-degree neighbors, and there can be at most
-    2*sqrt(m) vertices of degree >= sqrt(m)), so the intermediate is
-    O(m^1.5) on ANY degree distribution — the hub's wedges land on its
-    low-degree neighbors instead. Only 8-byte vertex ids ride the
-    three shuffles (degree count, wedge self-join, closing join);
-    payload columns never enter the kernel.
-
-    Exactness: counts are integers; the output is a pure function of
-    the edge SET, independent of partitioning and of the orientation
-    tie-break (triangle totals do not depend on which vertex pivots),
-    so a SQL twin using plain id-orientation attests these longs
-    bit-for-bit."""
-    canon = edges.select(F.col(x).alias("x"), F.col(y).alias("y"))
-    both = canon.select(F.col("x").alias("v")).unionAll(
-        canon.select(F.col("y").alias("v"))
-    )
-    deg = (
-        both.groupBy("v")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint()
-    )
-    # orient under (degree, id): struct comparison gives the total order
-    keyed = (
-        canon.join(deg.select(F.col("v").alias("x"),
-                              F.col("degree").alias("dx")), "x")
-        .join(deg.select(F.col("v").alias("y"),
-                         F.col("degree").alias("dy")), "y")
-    )
-    lo_first = F.struct("dx", "x") < F.struct("dy", "y")
-    oriented = keyed.select(
-        F.when(lo_first, F.col("x")).otherwise(F.col("y")).alias("src"),
-        F.when(lo_first, F.col("y")).otherwise(F.col("x")).alias("dst"),
-    )
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = e1.join(
-        e2,
-        (F.col("e1.src") == F.col("e2.src"))
-        & (F.col("e1.dst") < F.col("e2.dst")),
-    ).select(
-        F.col("e1.src").alias("u"),
-        F.col("e1.dst").alias("v1"),
-        F.col("e2.dst").alias("v2"),
-    )
-    # closing edge: v1 < v2 by construction, so the canonical form of
-    # the missing side is exactly (x = v1, y = v2)
-    tri = wedges.join(
-        canon,
-        (F.col("v1") == F.col("x")) & (F.col("v2") == F.col("y")),
-    ).select("u", "v1", "v2")
-    per_node = (
-        tri.select(
-            F.explode(F.array("u", "v1", "v2")).alias("v")
-        )
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("triangles"))
-    )
-    return (
-        deg.join(per_node, "v", "left")
-        .select(
-            "v",
-            F.col("degree").cast("long").alias("degree"),
-            F.coalesce("triangles", F.lit(0).cast("long")).alias("triangles"),
-        )
-    )
-
-
 def kcore_peel(
     edges: DataFrame,
     k: int,

@@ -100,58 +100,6 @@ def keep_block(chars: Column, ppm: Column) -> Column:
     return (chars >= MIN_BLOCK_CHARS) & (ppm <= MAX_LINK_PPM)
 
 
-HREF_RE = r'(?is)<a\b[^>]*?href="([^"]*)"[^>]*>'
-HOST_RE = r"(?i)^[a-z][a-z0-9+.-]*://([^/?#]+)"
-
-
-def anchor_hrefs(html: Column) -> Column:
-    """array<string> of every anchor's href attribute value, in
-    document order — from the noise-stripped document, so javascript
-    string literals can never contribute phantom links."""
-    return F.regexp_extract_all(strip_noise(html), F.lit(HREF_RE), 1)
-
-
-def href_host(href: Column) -> Column:
-    """Host of an absolute URL ('' for scheme-relative/internal) —
-    lowercased, since hosts are case-insensitive."""
-    return F.lower(F.regexp_extract(href, HOST_RE, 1))
-
-
-def link_stats(html: Column) -> dict[str, Column]:
-    """Per-document link census — the crawl-graph stage upstream of
-    host-level PageRank/dedup:
-
-      n_links         anchors with an href
-      n_internal      site-relative hrefs ('/path' but NOT the
-                      scheme-relative '//host/path')
-      n_external      absolute hrefs with a scheme://host
-                      (mailto:, #fragment, bare-relative and
-                      scheme-relative hrefs count in n_links only)
-      n_hosts         distinct external hosts
-      host_list       sorted distinct hosts, comma-joined (the
-                      outbound adjacency a graph stage would explode)
-
-    Same shape discipline as extract_content: one chain of array
-    expressions, no UDFs, no shuffle."""
-    hrefs = anchor_hrefs(html)
-    hosts = F.array_sort(
-        F.array_distinct(
-            F.filter(F.transform(hrefs, href_host), lambda h: h != "")
-        )
-    )
-    return {
-        "n_links": F.size(hrefs).cast("int"),
-        "n_internal": F.size(
-            F.filter(hrefs, lambda u: u.startswith("/") & ~u.startswith("//"))
-        ).cast("int"),
-        "n_external": F.size(
-            F.filter(F.transform(hrefs, href_host), lambda h: h != "")
-        ).cast("int"),
-        "n_hosts": F.size(hosts).cast("int"),
-        "host_list": F.concat_ws(",", hosts),
-    }
-
-
 def extract_content(html: Column) -> dict[str, Column]:
     """Full extraction over one html column — returns the per-document
     signal columns as a dict (callers alias/select what they need):

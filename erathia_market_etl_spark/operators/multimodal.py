@@ -1303,40 +1303,3 @@ def wav_near_pairs(
     return hash64_near_pairs(
         media_wav_energy_hash(wavs), hamming_max, max_bucket
     )
-
-
-def resample_audio_real(wavs: DataFrame, target_n: int) -> DataFrame:
-    """REAL audio resample — decode (stdlib wave), nearest-neighbor
-    resample the PCM16 sample vector to exactly ``target_n`` samples
-    (src index = (dst·n) DIV target — the same exact integer mapping
-    as the image path), re-encode WAV at the ORIGINAL rate. The audio
-    twin of resize_image_real: fixed-length clips are what embedding /
-    feature models consume. Corrupt/NULL payloads are dropped
-    (quarantine-sink pattern, same broad-catch rationale as the image
-    path). Narrow mapInPandas: payloads never shuffle."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs = [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                try:
-                    samples, rate = decode_wav(bytes(buf))
-                    n = len(samples)
-                    if n == 0:
-                        continue
-                    idx = (np.arange(target_n, dtype=np.int64) * n) // target_n
-                    out = samples[idx]
-                    outs.append(encode_wav(out, rate))
-                    ids.append(mid)
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                {"media_id": pd.Series(ids, dtype="int64"),
-                 "content": pd.Series(outs, dtype="object")}
-            )
-
-    return wavs.select("media_id", "content").mapInPandas(
-        fn, "media_id long, content binary"
-    )

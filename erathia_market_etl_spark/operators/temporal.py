@@ -117,108 +117,3 @@ def bounded_range_self_join(
         .filter((gap > 0) & (gap <= max_gap_seconds))
         .drop("__bucket")
     )
-
-
-def nearest_event_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts: str = "ts",
-    right_cols: list[str] | None = None,
-    max_gap_seconds: int = 7 * 86400,
-    suffix: str = "_matched",
-) -> DataFrame:
-    """Bidirectional as-of: for every left row, attach the NEAREST
-    right row with the same ``on`` key within ``max_gap_seconds`` —
-    backward or forward, whichever is closer in FLOORED whole seconds,
-    ties to the backward (earlier) side. Left outer: nulls when no
-    right row falls inside the gap bound. Right rows must be unique
-    per (on, ts), the ``asof_join`` precondition.
-
-    Implementation is the same union-sort discipline as ``asof_join``
-    — NOT a range join: tag right=0/left=1, union, ONE shuffle on the
-    key, then two window passes over the SAME sort (last non-null
-    payload up to the current row = backward candidate; first
-    non-null strictly after it = forward candidate — a right row at
-    the exact left timestamp sorts first and lands on the BACKWARD
-    side with gap 0). The nearest-by-floored-seconds selection over
-    just these two candidates equals a full rank over all candidates
-    because flooring is monotone: among backward rows, later raw ts
-    can only shrink the floored gap (symmetrically forward), so each
-    side's raw-nearest IS its floored-nearest (raw ties within a
-    floored second resolve to the same row both ways). Gap arithmetic
-    floors each timestamp to whole epoch seconds BEFORE subtracting
-    (the funnel r9 lesson — sub-second parts make fractional
-    subtraction engine-divergent).
-
-    At 100 TB this is one hash exchange of (key, ts, payload) plus two
-    window functions sharing one sort — no candidate-pair expansion,
-    no range-bucket replication; the per-key state is the sort run,
-    not a pair table."""
-    right_cols = right_cols or [c for c in right.columns if c not in (on, ts)]
-    payload = F.struct(
-        F.col(ts).alias("__rts"), *[F.col(c) for c in right_cols]
-    )
-    r = right.select(
-        F.col(on), F.col(ts), F.lit(0).alias("__tag"),
-        payload.alias("__payload"),
-    )
-    l = left.select(  # noqa: E741
-        "*",
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(r.schema["__payload"].dataType).alias("__payload"),
-    )
-    order = [F.col(ts).asc(), F.col("__tag").asc()]
-    w_back = (
-        Window.partitionBy(on)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(on)
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    sec = "CAST(CAST({c} AS TIMESTAMP) AS LONG)"
-    lsec = F.expr(sec.format(c=ts))
-    merged = (
-        l.unionByName(
-            r.select(
-                *[
-                    F.lit(None).cast(left.schema[c].dataType).alias(c)
-                    for c in left.columns
-                    if c not in (on, ts)
-                ],
-                on, ts, "__tag", "__payload",
-            ),
-            allowMissingColumns=False,
-        )
-        .withColumn("__back", F.last("__payload", ignorenulls=True).over(w_back))
-        .withColumn("__fwd", F.first("__payload", ignorenulls=True).over(w_fwd))
-        .filter(F.col("__tag") == 1)
-        .withColumn(
-            "__gb", lsec - F.expr(sec.format(c="__back.__rts"))
-        )  # >= 0: seconds back to the backward candidate
-        .withColumn(
-            "__gf", F.expr(sec.format(c="__fwd.__rts")) - lsec
-        )  # >= 0: seconds forward (0 possible via sub-second flooring)
-    )
-    back_ok = F.col("__back").isNotNull() & (F.col("__gb") <= max_gap_seconds)
-    fwd_ok = F.col("__fwd").isNotNull() & (F.col("__gf") <= max_gap_seconds)
-    match = (
-        F.when(back_ok & (~fwd_ok | (F.col("__gb") <= F.col("__gf"))), F.col("__back"))
-        .when(fwd_ok, F.col("__fwd"))
-    )
-    dt = (
-        F.when(back_ok & (~fwd_ok | (F.col("__gb") <= F.col("__gf"))), -F.col("__gb"))
-        .when(fwd_ok, F.col("__gf"))
-    )
-    out = merged.withColumn("__match", match).withColumn(
-        "__dt", dt.cast("long")
-    )
-    return out.select(
-        *left.columns,
-        F.col("__match.__rts").alias(f"{ts}{suffix}"),
-        *[F.col(f"__match.{c}").alias(f"{c}{suffix}") for c in right_cols],
-        F.col("__dt").alias("dt_seconds"),
-    )

@@ -230,83 +230,3 @@ def winnow_doc(text: str | None, k: int = WINNOW_K, w: int = WINNOW_W,
     # suffix minima over the last min(w-1, m) hashes
     sel.update(np.minimum.accumulate(carry[::-1]).tolist())
     return sel
-
-
-# content-defined-chunking parameters (LBFS/rsync-style: gram size the
-# cut predicate reads, divisor setting the expected chunk length —
-# E[chunk] ~ CDC_DIV chars at one cut per CDC_DIV gram hashes)
-CDC_K = WINNOW_K
-CDC_DIV = 32
-
-
-def cdc_chunks(text: str | None, k: int = CDC_K,
-               divisor: int = CDC_DIV) -> list[str]:
-    """Content-defined chunking core (Muthitacharoen et al. SOSP'01,
-    LBFS — the variable-size chunker underneath rsync-style dedup):
-    the text is cut AFTER every k-gram whose rolling hash is 0 mod
-    `divisor`, so chunk boundaries depend only on LOCAL content — an
-    insertion near the start re-aligns within ~one chunk instead of
-    shifting every boundary the way fixed-size chunking does. Reuses
-    winnow_doc's codepoint-polynomial mod-2^64 gram hash (numpy uint64
-    Horner; the DuckDB twin reproduces it exactly with HUGEINT + one
-    final %), so cut positions are cross-engine identical. This is the
-    UNBOUNDED original form (no min/max chunk clamps): the clamped
-    production variant is a sequential fold over cut candidates (each
-    accepted cut suppresses candidates inside the next min-window) and
-    is deliberately not offered here — a clamp would make the oracle a
-    recursive fold, and the fixture chunk-length distribution at
-    divisor 32 never degenerates. Documents shorter than k chars (no
-    grams) are one whole-text chunk. Texts here are KB-scale; a
-    production MB-scale variant streams position blocks exactly like
-    winnow_doc."""
-    import numpy as np
-
-    if text is None:
-        return []
-    n = len(text)
-    if n < k:
-        return [text]
-    codes = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-    m = n - k + 1
-    h = codes[:m].astype(np.uint64)
-    base = np.uint64(WINNOW_BASE)
-    for j in range(1, k):
-        h = h * base + codes[j:j + m]
-    # 0-based gram start p cuts so the NEXT chunk starts at p + k;
-    # a cut at the very end (p + k == n) would emit an empty chunk —
-    # excluded on both engines (the oracle's i + K <= length(text))
-    starts = np.flatnonzero(h % np.uint64(divisor) == 0) + k
-    starts = starts[starts <= n - 1]
-    bounds = [0, *starts.tolist(), n]
-    return [text[a:b] for a, b in zip(bounds, bounds[1:])]
-
-
-def cdc_chunk_frame(df, text_col: str, id_col: str,
-                    k: int = CDC_K, divisor: int = CDC_DIV):
-    """(id, chunk) frame of content-defined chunks — the
-    winnowing_fingerprints plumbing applied to cdc_chunks: Arrow
-    mapInPandas over a fan_out-rebalanced raw-text scan, zero shuffles
-    (chunk strings are born in the map stage; consumers hash them to
-    int64 before any exchange)."""
-    from pyspark.sql import functions as F
-
-    from ..sources.parquet_io import fan_out
-
-    src = fan_out(df.select(F.col(id_col), F.col(text_col)))
-    id_type = src.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids_out: list = []
-            chunks_out: list[str] = []
-            for doc, text in zip(pdf[id_col].values, pdf[text_col].values):
-                cs = cdc_chunks(text, k, divisor)
-                ids_out.extend([doc] * len(cs))
-                chunks_out.extend(cs)
-            yield pd.DataFrame(
-                {"doc": pd.Series(ids_out, dtype=pdf[id_col].dtype),
-                 "chunk": chunks_out})
-
-    return src.mapInPandas(gen, f"doc {id_type}, chunk string")

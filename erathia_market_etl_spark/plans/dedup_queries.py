@@ -633,276 +633,3 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# dedup_minhash_jaccard_estimate: the accuracy contract of the MinHash
-# sketch itself — signature-agreement estimate vs exact Jaccard per
-# candidate pair.
-# ---------------------------------------------------------------------------
-
-_SIG_MATCHES_SQL = " + ".join(
-    f"(CASE WHEN sa.h{j} = sb.h{j} THEN 1 ELSE 0 END)"
-    for j in range(N_MINHASH)
-)
-
-# Deterministic audit-sample cap (r14 VERDICT item 4): the exact-Jaccard
-# verify is pair-proportional, so an uncapped audit rides the FULL
-# candidate-pair count — 8.5× for 10× data at the sf0.1→sf1 decade step
-# (SCALESTEP_r14.json, 98 s at synthetic sf1, 3× the next-heaviest
-# query). The audit's value is a statistically representative read on
-# estimator drift, not exhaustive coverage, so it samples: pairs ranked
-# by md5(doc_a||'|'||doc_b) — engine-portable, corpus-independent,
-# uniform over pairs — keep the lowest AUDIT_PAIR_CAP. Below the cap
-# (both fixture SFs: 34 / 804 pairs) output is the identical full set;
-# above it the verify cost is bounded by the cap, never the corpus.
-# Coverage is derivable from registered outputs alone: audited pairs =
-# min(cap, |dedup_minhash_lsh_pairs|), the latter a driver-checked row
-# count — no silent truncation (the no-silent-caps rule).
-AUDIT_PAIR_CAP = 2048
-
-_AUDIT_SEL_SQL = "md5(CAST(doc_a AS VARCHAR) || '|' || CAST(doc_b AS VARCHAR))"
-
-DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE = f"""
-    WITH {_CANDIDATES_CTE},
-    audit AS (
-        SELECT doc_a, doc_b FROM pairs
-        ORDER BY {_AUDIT_SEL_SQL}, doc_a, doc_b
-        LIMIT {AUDIT_PAIR_CAP}
-    ),
-    da AS (
-        SELECT DISTINCT doc_id, unnest(s) AS sx FROM sh WHERE len(s) > 0
-    ),
-    szs AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM da GROUP BY doc_id),
-    inter AS (
-        SELECT p.doc_a, p.doc_b, CAST(COUNT(*) AS BIGINT) AS n_inter
-        FROM audit p
-        JOIN da a ON a.doc_id = p.doc_a
-        JOIN da b ON b.doc_id = p.doc_b AND b.sx = a.sx
-        GROUP BY p.doc_a, p.doc_b
-    )
-    SELECT p.doc_a, p.doc_b,
-           CAST({_SIG_MATCHES_SQL} AS BIGINT) AS n_matches,
-           CAST(({_SIG_MATCHES_SQL}) * 1000000 // {N_MINHASH} AS BIGINT)
-               AS est_jaccard_ppm,
-           CAST(COALESCE(i.n_inter, 0) * 1000000
-                // (za.n + zb.n - COALESCE(i.n_inter, 0)) AS BIGINT)
-               AS jaccard_ppm,
-           CAST(ABS(({_SIG_MATCHES_SQL}) * 1000000 // {N_MINHASH}
-                    - COALESCE(i.n_inter, 0) * 1000000
-                      // (za.n + zb.n - COALESCE(i.n_inter, 0)))
-                AS BIGINT) AS err_ppm
-    FROM audit p
-    JOIN sig sa ON sa.doc_id = p.doc_a
-    JOIN sig sb ON sb.doc_id = p.doc_b
-    JOIN szs za ON za.doc_id = p.doc_a
-    JOIN szs zb ON zb.doc_id = p.doc_b
-    LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-    ORDER BY p.doc_a, p.doc_b
-    """
-
-
-@query(
-    "dedup_minhash_jaccard_estimate",
-    DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE,
-    local=True,
-)
-def dedup_minhash_jaccard_estimate(
-    spark: SparkSession, sf_dir: str, audit_cap: int = AUDIT_PAIR_CAP
-) -> DataFrame:
-    """The MinHash sketch's OWN accuracy contract (the
-    agg_approx_sketches philosophy applied to the dedup family): for
-    every LSH candidate pair, the signature-agreement estimate
-    (matching positions / 8, in ppm — the statistic whose expectation
-    IS the Jaccard similarity, Broder 1997) next to the EXACT shingle
-    Jaccard and the absolute error, so estimator drift shows up as a
-    red row rather than silently degraded dedup recall. Candidate
-    pairs, signatures, and shingle sets all reuse the family's shared
-    kernels/CTEs — one shingle-hash pipeline feeds everything.
-
-    Scale shape: the signature join attaches two 8-column rows per
-    pair (pair-table-sized); the exact-Jaccard verify joins the
-    distinct (doc, shingle) table ONLY for candidate-pair docs (the
-    dedup_ngram_jaccard discipline — at 100 TB the verify cost rides
-    the candidate count, never the corpus); the intersection join is
-    shingle-keyed with LEFT JOIN + COALESCE for the no-overlap edge
-    (media_feature_extract precedent). The candidate set itself is
-    capped at ``audit_cap`` pairs via a deterministic engine-portable
-    md5 ranking (rationale + coverage accounting at AUDIT_PAIR_CAP
-    above; TakeOrderedAndProject, never a full sort), so at any scale
-    the verify cost is min(cap, pairs)-proportional."""
-    from ..operators.dedup import (
-        minhash_signature_cols,
-        shingles_from_tokens,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sel = F.md5(F.concat_ws("|", "doc_a", "doc_b"))
-    pairs = (
-        shared_minhash_pairs(spark, sf_dir)
-        .orderBy(sel.asc(), "doc_a", "doc_b")
-        .limit(audit_cap)
-        .localCheckpoint()
-    )
-    # the verify cost must ride the CANDIDATE count, never the corpus
-    # (dedup_ngram_jaccard discipline): restrict the shingle/signature
-    # pipelines to pair members with keys-only semi joins before any
-    # aggregation or pair join
-    pair_docs = (
-        pairs.select(F.col("doc_a").alias("doc"))
-        .union(pairs.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    toked = fan_out(docs).select(
-        F.col("doc_id").alias("doc"),
-        shingles_from_tokens(tokens(F.col("text"))).alias("s"),
-    ).filter(F.size("s") > 0)
-    hashed = toked.join(pair_docs, "doc", "left_semi").select(
-        "doc",
-        F.explode("s").alias("sx"),
-    )
-    sig = (
-        hashed.select(
-            "doc", F.md5(F.concat(F.lit("mh|"), F.col("sx"))).alias("h")
-        )
-        .groupBy("doc")
-        .agg(*minhash_signature_cols())
-    )
-    da = hashed.distinct()
-    szs = da.groupBy("doc").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    inter = (
-        pairs.join(da.select(F.col("doc").alias("doc_a"), "sx"), "doc_a")
-        .join(
-            da.select(F.col("doc").alias("doc_b"), "sx"),
-            ["doc_b", "sx"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
-    matches = sum(
-        F.when(F.col(f"a_h{j}") == F.col(f"b_h{j}"), 1).otherwise(0)
-        for j in range(N_MINHASH)
-    ).cast("long")
-    sa = sig.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"h{j}").alias(f"a_h{j}") for j in range(N_MINHASH)],
-    )
-    sb = sig.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"h{j}").alias(f"b_h{j}") for j in range(N_MINHASH)],
-    )
-    est = F.expr(f"n_matches * 1000000 DIV {N_MINHASH}")
-    jac = F.expr("n_inter * 1000000 DIV (na + nb - n_inter)")
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .join(szs.select(F.col("doc").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(szs.select(F.col("doc").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a",
-            "doc_b",
-            matches.alias("n_matches"),
-            "na",
-            "nb",
-            F.coalesce(F.col("n_inter"), F.lit(0)).cast("long")
-            .alias("n_inter"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_matches",
-            est.cast("long").alias("est_jaccard_ppm"),
-            jac.cast("long").alias("jaccard_ppm"),
-            F.abs(est - jac).cast("long").alias("err_ppm"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# sample_hard_negatives: contrastive-training negative mining from the
-# LSH candidate stream.
-# ---------------------------------------------------------------------------
-
-NEG_PER_ANCHOR = 2       # hardest negatives kept per anchor document
-NEG_DUP_THRESHOLD = 0.5  # at/above this the pair is a NEAR-DUP, not a negative
-
-SAMPLE_HARD_NEGATIVES_ORACLE = f"""
-    WITH {_CANDIDATES_CTE},
-    scored AS (
-        SELECT p.doc_a, p.doc_b,
-               CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-                   / len(list_distinct(sa.s || sb.s)) AS jc
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.doc_a
-        JOIN sh sb ON sb.doc_id = p.doc_b
-    ),
-    kept AS (
-        SELECT doc_a, doc_b, jc FROM scored
-        WHERE jc < {NEG_DUP_THRESHOLD}
-        QUALIFY row_number() OVER (PARTITION BY doc_a
-                                   ORDER BY jc DESC, doc_b)
-                <= {NEG_PER_ANCHOR}
-    )
-    SELECT doc_a AS anchor, doc_b AS negative,
-           FLOOR(jc * 1000000 + 0.5) / 1000000 AS jaccard_3gram
-    FROM kept
-    ORDER BY anchor, negative
-    """
-
-
-@query("sample_hard_negatives", SAMPLE_HARD_NEGATIVES_ORACLE, local=True)
-def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HARD-NEGATIVE mining for contrastive training (retrieval /
-    embedding models): the strongest negatives are documents that
-    COLLIDE in hash space (share an LSH band — so a lexical model
-    finds them confusable) yet sit BELOW the near-dup threshold on
-    exact 3-gram Jaccard — the semi-hard band between 'duplicate'
-    (a positive, dedup_ngram_jaccard's >= 0.5 side) and 'random
-    negative' (never collides at all). Keeps the NEG_PER_ANCHOR (2)
-    highest-Jaccard sub-threshold partners per anchor under a
-    deterministic tiebreak.
-
-    Scale shape: identical cost envelope to dedup_ngram_jaccard — the
-    pair stream comes from the SHARED capped band table (one session
-    computation feeds the LSH pairs, the components, the funnel, and
-    this miner), shingles ride as int64 arrays, and the only new stage
-    is a per-anchor WindowGroupLimit (two-phase, partial limit before
-    the shuffle). The complement filter means this query and the
-    near-dup verifier PARTITION the candidate stream — nothing is
-    scored twice at 100 TB, the pipeline just routes by threshold."""
-    from ..operators.dedup import shingles_from_tokens
-    from ..operators.similarity import round6
-    from ..operators.text import tokens
-    from ..sources.parquet_io import fan_out
-    from pyspark.sql import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        fan_out(docs)
-        .withColumn("_toks", tokens(F.col("text")))
-        .select(
-            "doc_id",
-            F.transform(
-                shingles_from_tokens(F.col("_toks"), 3), lambda x: F.xxhash64(x)
-            ).alias("s"),
-        )
-    )
-    pairs = shared_minhash_pairs(spark, sf_dir)
-    jc = jaccard(F.col("sa.s"), F.col("sb.s"))
-    w = Window.partitionBy("doc_a").orderBy(F.desc("_jc"), F.asc("doc_b"))
-    return (
-        pairs.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .withColumn("_jc", jc)
-        .filter(F.col("_jc") < NEG_DUP_THRESHOLD)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= NEG_PER_ANCHOR)
-        .select(
-            F.col("doc_a").alias("anchor"),
-            F.col("doc_b").alias("negative"),
-            round6(F.col("_jc")).alias("jaccard_3gram"),
-        )
-        .orderBy("anchor", "negative")
-    )

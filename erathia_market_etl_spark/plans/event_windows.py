@@ -1558,81 +1558,6 @@ def trend_frame(daily: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# user_lifetime_stats: the per-user lifetime mart.
-# ---------------------------------------------------------------------------
-
-USER_LIFETIME_STATS_ORACLE = """
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days,
-           CAST(MIN(ts) AS DATE) AS first_day,
-           CAST(MAX(ts) AS DATE) AS last_day,
-           CAST(CAST(MAX(ts) AS DATE) - CAST(MIN(ts) AS DATE) + 1
-                AS BIGINT) AS lifetime_days,
-           CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-                AS BIGINT) AS lifetime_cents,
-           CAST(COUNT(DISTINCT CAST(ts AS DATE)) * 1000000
-                // (CAST(MAX(ts) AS DATE) - CAST(MIN(ts) AS DATE) + 1)
-                AS BIGINT) AS activity_ppm
-    FROM events
-    GROUP BY user_id
-    ORDER BY user_id
-    """
-
-
-@query("user_lifetime_stats", USER_LIFETIME_STATS_ORACLE, local=True)
-def user_lifetime_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-user LIFETIME mart every analytics stack materializes:
-    event count, distinct active days, first/last day, calendar
-    lifetime span, lifetime value in exact cents, and the activity
-    density (active_days / lifetime_days) in exact ppm — the
-    engagement statistic cohort models bucket on. Complements
-    growth_accounting_daily (corpus-grain DAU/WAU) with the user-grain
-    rollup.
-
-    Exactness: cents for money, dates for time, DIV for the density —
-    every column integer or date, hash-exact. Scale shape: ONE
-    map-side-combinable user_id aggregate is the whole query (the
-    distinct-days term rides the same exchange via partial distinct
-    aggregation); output is user-cardinality, the natural serving
-    grain."""
-    ev = load_events(spark, sf_dir).select(
-        "user_id",
-        F.to_date("ts").alias("day"),
-        cents("value").alias("c"),
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.countDistinct("day").cast("long").alias("active_days"),
-            F.min("day").alias("first_day"),
-            F.max("day").alias("last_day"),
-            F.sum("c").cast("long").alias("lifetime_cents"),
-        )
-        .select(
-            "user_id",
-            "n_events",
-            "active_days",
-            "first_day",
-            "last_day",
-            (F.datediff("last_day", "first_day") + 1).cast("long")
-            .alias("lifetime_days"),
-            "lifetime_cents",
-            F.expr(
-                "active_days * 1000000"
-                " DIV (datediff(last_day, first_day) + 1)"
-            ).cast("long").alias("activity_ppm"),
-        )
-        .select(
-            "user_id", "n_events", "active_days", "first_day", "last_day",
-            "lifetime_days", "lifetime_cents", "activity_ppm",
-        )
-        .orderBy("user_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # ts_seasonal_dow_profile: day-of-week seasonal baseline + residuals
 # over the daily revenue series.
 # ---------------------------------------------------------------------------
@@ -1798,237 +1723,6 @@ def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("ewma_cents"),
         )
         .orderBy("event_type", "day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ts_anomaly_mad_flags: the composed anomaly detector — seasonal
-# residuals scored against a robust (median/MAD) envelope.
-# ---------------------------------------------------------------------------
-
-ANOMALY_MAD_MULT = 3  # flag |residual - median| > 3 * MAD
-
-TS_ANOMALY_MAD_FLAGS_ORACLE = f"""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               (EXTRACT(isodow FROM CAST(ts AS DATE)) - 1)::BIGINT AS dow,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5e0) AS BIGINT))
-                    AS BIGINT) AS day_cents
-        FROM events
-        GROUP BY event_type, CAST(ts AS DATE)
-    ),
-    res AS (
-        SELECT event_type, day, day_cents,
-               CAST(day_cents
-                    - SUM(day_cents) OVER w // COUNT(*) OVER w
-                    AS BIGINT) AS residual_cents
-        FROM daily
-        WINDOW w AS (PARTITION BY event_type, dow)
-    ),
-    arrs AS (
-        SELECT event_type,
-               list(residual_cents ORDER BY residual_cents) AS rs
-        FROM res GROUP BY event_type
-    ),
-    meds AS (
-        SELECT event_type, rs[(len(rs) + 1) // 2] AS med FROM arrs
-    ),
-    stats AS (
-        SELECT a.event_type, m.med,
-               list_sort(list_transform(a.rs, x -> ABS(x - m.med)))
-                   [(len(a.rs) + 1) // 2] AS mad
-        FROM arrs a JOIN meds m ON a.event_type = m.event_type
-    )
-    SELECT r.event_type, r.day, r.day_cents, r.residual_cents,
-           CAST(s.med AS BIGINT) AS med_residual_cents,
-           CAST(s.mad AS BIGINT) AS mad_cents,
-           (ABS(r.residual_cents - s.med)
-            > {ANOMALY_MAD_MULT} * s.mad) AS is_anomaly
-    FROM res r JOIN stats s ON r.event_type = s.event_type
-    ORDER BY r.event_type, r.day
-    """
-
-
-@query("ts_anomaly_mad_flags", TS_ANOMALY_MAD_FLAGS_ORACLE, local=True)
-def ts_anomaly_mad_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED anomaly detector the time-series family has been
-    building toward: de-seasonalize the daily revenue series against
-    its day-of-week baseline (ts_seasonal_dow_profile's residual), then
-    score each residual against a ROBUST envelope — the per-type lower
-    median and MAD of residuals (agg_mad_robust's estimator pair) —
-    flagging days where |residual − median| > 3·MAD. Each stage fixes
-    the previous one's blind spot: raw thresholds fire every weekend
-    (seasonality), mean/stddev envelopes get dragged by the outliers
-    they hunt (non-robust), and seasonal residuals alone have no
-    severity scale.
-
-    Exactness: cents + truncating DIV baselines + LOWER median via
-    sorted-array indexing — every column an exact long, boolean flag
-    CASE'd identically. The median/MAD per type ride ONE sorted
-    collect_list whose length is CALENDAR-bounded (the ts_ewma
-    argument): ~365 longs/type/year, never event-volume. The only
-    event-sized stage is the (type, day) rollup; the stats frame
-    broadcasts back onto day-grain rows."""
-    ev = load_events(spark, sf_dir)
-    tick_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        ev.select(
-            "event_type", F.to_date("ts").alias("day"),
-            tick_cents.alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").cast("long").alias("day_cents"))
-        .select(
-            "event_type", "day",
-            F.weekday("day").cast("long").alias("dow"),
-            "day_cents",
-        )
-    )
-    res = daily.select(
-        "event_type",
-        "day",
-        "day_cents",
-        F.expr(
-            "day_cents - sum(day_cents)"
-            " OVER (PARTITION BY event_type, dow)"
-            " DIV count(*) OVER (PARTITION BY event_type, dow)"
-        ).cast("long").alias("residual_cents"),
-    )
-    arrs = res.groupBy("event_type").agg(
-        F.sort_array(F.collect_list("residual_cents")).alias("rs")
-    )
-    meds = arrs.select(
-        "event_type",
-        "rs",
-        F.expr(
-            "element_at(rs, CAST((size(rs) + 1) DIV 2 AS INT))"
-        ).alias("med"),
-    )
-    stats = meds.select(
-        "event_type",
-        "med",
-        F.expr(
-            "element_at(sort_array(transform(rs, x -> abs(x - med))),"
-            " CAST((size(rs) + 1) DIV 2 AS INT))"
-        ).alias("mad"),
-    )
-    return (
-        res.join(F.broadcast(stats), "event_type")
-        .select(
-            "event_type",
-            "day",
-            "day_cents",
-            "residual_cents",
-            F.col("med").cast("long").alias("med_residual_cents"),
-            F.col("mad").cast("long").alias("mad_cents"),
-            (
-                F.abs(F.col("residual_cents") - F.col("med"))
-                > ANOMALY_MAD_MULT * F.col("mad")
-            ).alias("is_anomaly"),
-        )
-        .orderBy("event_type", "day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# cdc_merge_apply: MERGE INTO / CDC-upsert batch apply.
-# ---------------------------------------------------------------------------
-
-CDC_CUTOFF = "2024-01-21"  # events fixtures span 2024-01-01..01-30 at every SF
-
-CDC_MERGE_APPLY_ORACLE = f"""
-    WITH base AS (
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_events,
-               MAX(ts) AS last_ts
-        FROM events WHERE ts < TIMESTAMP '{CDC_CUTOFF}'
-        GROUP BY user_id
-    ),
-    batch AS (
-        SELECT user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_new,
-               MAX(ts) AS new_last_ts,
-               CASE WHEN SUM(CASE WHEN event_type = 'error' THEN 1
-                                  ELSE 0 END) > 0
-                    THEN 'D' ELSE 'U' END AS op
-        FROM events WHERE ts >= TIMESTAMP '{CDC_CUTOFF}'
-        GROUP BY user_id
-    )
-    SELECT user_id,
-           CASE WHEN batch.user_id IS NULL THEN 'kept'
-                WHEN base.user_id IS NULL THEN 'inserted'
-                ELSE 'updated' END AS action,
-           CAST(COALESCE(base.n_events, 0) + COALESCE(batch.n_new, 0)
-                AS BIGINT) AS n_events,
-           CASE WHEN batch.user_id IS NULL THEN base.last_ts
-                ELSE batch.new_last_ts END AS last_ts
-    FROM base FULL OUTER JOIN batch USING (user_id)
-    WHERE batch.op IS NULL OR batch.op <> 'D'
-    ORDER BY user_id
-    """
-
-
-@query("cdc_merge_apply", CDC_MERGE_APPLY_ORACLE, local=True)
-def cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO semantics (the Delta/Iceberg CDC-upsert apply) as a
-    pure DataFrame pipeline: a BASE dimension state (per-user event
-    count + last-seen before the CDC_CUTOFF) merged with a CHANGE
-    BATCH (per-user deltas after the cutoff, op = 'D' delete when the
-    batch contains an error event, else 'U' upsert) —
-    WHEN MATCHED AND op='D' THEN DELETE /
-    WHEN MATCHED THEN UPDATE (additive counts, new last_ts) /
-    WHEN NOT MATCHED AND op='U' THEN INSERT /
-    base rows without a change pass through. Output carries the
-    per-row action (kept/updated/inserted) so the apply is auditable;
-    deletes are attested by ABSENCE under the full-outer hash compare.
-
-    Scale shape: MERGE is exactly one full-outer hash join of the two
-    key-grain aggregates (each map-side combinable from its scan
-    slice; the cutoff predicate pushes to parquet) — the same plan a
-    lakehouse MERGE compiles to before write materialization. No
-    window, no single partition; at 100 TB the join is the only
-    key-sized exchange and AQE picks broadcast when a change batch is
-    small (the common case for incremental CDC)."""
-    events = load_events(spark, sf_dir)
-    cut = F.lit(CDC_CUTOFF).cast("timestamp")
-    base = (
-        events.filter(F.col("ts") < cut)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    batch = (
-        events.filter(F.col("ts") >= cut)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_new"),
-            F.max("ts").alias("new_last_ts"),
-            F.when(
-                F.sum(
-                    F.when(F.col("event_type") == "error", 1).otherwise(0)
-                ) > 0,
-                F.lit("D"),
-            ).otherwise(F.lit("U")).alias("op"),
-        )
-    )
-    merged = base.join(batch, "user_id", "full_outer")
-    return (
-        merged.filter(F.col("op").isNull() | (F.col("op") != "D"))
-        .select(
-            "user_id",
-            F.when(F.col("op").isNull(), F.lit("kept"))
-            .when(F.col("n_events").isNull(), F.lit("inserted"))
-            .otherwise(F.lit("updated")).alias("action"),
-            (
-                F.coalesce(F.col("n_events"), F.lit(0))
-                + F.coalesce(F.col("n_new"), F.lit(0))
-            ).cast("long").alias("n_events"),
-            F.when(F.col("op").isNull(), F.col("last_ts"))
-            .otherwise(F.col("new_last_ts")).alias("last_ts"),
-        )
-        .orderBy("user_id")
     )
 
 
@@ -2233,175 +1927,4 @@ def peak_concurrency_frame(sessions: DataFrame) -> DataFrame:
             .alias("sessions_ended"),
         )
         .orderBy("day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ts_autocorrelation: exact ACF of the daily revenue series at lags
-# 1..7.
-# ---------------------------------------------------------------------------
-
-ACF_MAX_LAG = 7
-
-TS_AUTOCORRELATION_ORACLE = f"""
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) // 100 AS x
-        FROM events GROUP BY 1
-    ),
-    s AS (
-        SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(x) AS BIGINT) AS sx
-        FROM daily
-    ),
-    dev AS (SELECT day, s.n * x - s.sx AS dv FROM daily, s),
-    den AS (SELECT CAST(SUM(dv * dv) AS BIGINT) AS den FROM dev),
-    lags AS (SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag),
-    pairs AS (
-        SELECT l.lag,
-               CAST(COUNT(*) AS BIGINT) AS n_pairs,
-               CAST(SUM(a.dv * b.dv) AS BIGINT) AS num
-        FROM lags l
-        JOIN dev a ON TRUE
-        JOIN dev b ON b.day = a.day + CAST(l.lag AS INTEGER)
-        GROUP BY l.lag
-    )
-    SELECT p.lag, p.n_pairs,
-           FLOOR(CAST(p.num AS DOUBLE) / NULLIF(d.den, 0)
-                 * 1000000 + 0.5) / 1000000 AS acf
-    FROM pairs p CROSS JOIN den d
-    ORDER BY p.lag
-    """
-
-
-@query("ts_autocorrelation", TS_AUTOCORRELATION_ORACLE, local=True)
-def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact AUTOCORRELATION (ACF) of the daily revenue series at
-    calendar lags 1..{7}: with the n-scaled deviations
-    dv_d = n*x_d - S (integers — no fractional mean ever computed),
-    acf(k) = sum(dv_d * dv_(d+k)) / sum(dv_d^2); the n^2 scaling
-    cancels in the ratio, so this IS the standard (variance-normalized,
-    non-mean-adjusted-denominator) sample ACF — the seasonality probe
-    that tells a forecaster which lags matter before fitting anything
-    (complements ts_seasonal_dow_profile's fixed weekly grid with a
-    data-driven lag scan). Numerator and denominator are exact int64
-    sums well inside 2^53 (daily totals pre-truncate to whole dollars
-    for headroom), so both engines divide identical exactly-represented
-    doubles — IEEE-identical, then ppm-rounded; constant series guard
-    via NULLIF.
-
-    Scale shape: one map-side combinable (day) aggregate is the only
-    event-volume-sized stage; everything after rides the
-    CALENDAR-bounded daily table (n ~ observation days): the 1-row
-    stats broadcast, a 7-lag cross join over the tiny dev table, and
-    group-sized sums. The day-grain joins are the R6 bounded-grain
-    story in join form."""
-    daily = (
-        load_events(spark, sf_dir)
-        .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(
-            F.expr(
-                "CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT))"
-                " AS BIGINT) DIV 100"
-            ).alias("x")
-        )
-    )
-    s = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-    )
-    dev = daily.crossJoin(F.broadcast(s)).select(
-        "day", (F.col("n") * F.col("x") - F.col("sx")).alias("dv")
-    )
-    den = dev.agg(F.sum(F.col("dv") * F.col("dv")).cast("long").alias("den"))
-    lags = spark.range(1, ACF_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("lag")
-    )
-    a = dev.select(F.col("day").alias("day_a"), F.col("dv").alias("dv_a"))
-    b = dev.select(F.col("day").alias("day_b"), F.col("dv").alias("dv_b"))
-    pairs = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("day_b") == F.expr("date_add(day_a, lag)"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_pairs"),
-            F.sum(F.col("dv_a") * F.col("dv_b")).cast("long").alias("num"),
-        )
-    )
-    return (
-        pairs.crossJoin(F.broadcast(den))
-        .select(
-            F.col("lag").cast("long").alias("lag"),
-            "n_pairs",
-            (
-                F.floor(
-                    F.col("num").cast("double")
-                    / F.expr("NULLIF(den, 0)")
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).cast("double").alias("acf"),
-        )
-        .orderBy("lag")
-    )
-
-
-# ---------------------------------------------------------------------------
-# window_positional_values: FIRST/LAST/NTH_VALUE — the positional
-# window family.
-# ---------------------------------------------------------------------------
-
-WINDOW_POSITIONAL_VALUES_ORACLE = """
-    SELECT user_id, event_id,
-           FIRST_VALUE(event_type) OVER w AS first_type,
-           LAST_VALUE(event_type) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id
-                                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND UNBOUNDED FOLLOWING)
-               AS last_type,
-           NTH_VALUE(event_type, 2) OVER w AS second_type
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ORDER BY user_id, event_id
-    """
-
-
-@query("window_positional_values", WINDOW_POSITIONAL_VALUES_ORACLE, local=True)
-def window_positional_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The POSITIONAL window family — FIRST_VALUE / LAST_VALUE /
-    NTH_VALUE — completing the window surface next to the offset
-    (lag/lead), ranking, frame, and distribution families. The
-    LAST_VALUE trap is deliberate and attested: under the default
-    running frame LAST_VALUE is just the current row, so the query
-    pins the full-frame (UNBOUNDED FOLLOWING) form both engines agree
-    on; NTH_VALUE(2) under the running frame is NULL until the
-    partition's second row arrives — the null-edge behavior the
-    compare hashes. Deterministic total order via the (ts, event_id)
-    tiebreak.
-
-    Scale shape: one user-keyed exchange + per-partition sort shared
-    by all three functions (one Window node); per-key rows are
-    user-activity-bounded (the window_lag_lead precedent)."""
-    events = load_events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_full = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            F.first("event_type").over(w).alias("first_type"),
-            F.last("event_type").over(w_full).alias("last_type"),
-            F.nth_value("event_type", 2).over(w).alias("second_type"),
-        )
-        .orderBy("user_id", "event_id")
     )

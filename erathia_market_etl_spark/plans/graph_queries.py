@@ -8,9 +8,9 @@ pretraining pipelines weight or gate documents by it). The connected-
 component kernels used by the dedup queries live in
 ``operators/graph.py``; this module adds the power-iteration side.
 
-``graph_pagerank_influence`` is registered. The triangle/k-core
-queries are local-only (``local_queries()``): same oracle compare,
-outside the driver contract.
+``graph_pagerank_influence`` is registered. The basket-lift, k-core
+and label-propagation queries are local-only (``local_queries()``):
+same oracle compare, outside the driver contract.
 """
 
 from __future__ import annotations
@@ -151,110 +151,6 @@ def graph_pagerank_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rank").alias("rank_scaled"),
         )
         .orderBy(F.col("rank_scaled").desc(), "node_type", "entity_key")
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph_triangle_cohesion: per-part triangle counts over the co-purchase
-# graph.
-# ---------------------------------------------------------------------------
-
-TRIANGLE_TOP_K = 50
-
-GRAPH_TRIANGLE_COHESION_ORACLE = f"""
-    WITH li AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-    ),
-    edges AS MATERIALIZED (
-        SELECT a.p AS x, b.p AS y
-        FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-        GROUP BY a.p, b.p
-    ),
-    deg AS (
-        SELECT v, COUNT(*) AS degree FROM (
-            SELECT x AS v FROM edges UNION ALL SELECT y AS v FROM edges
-        ) GROUP BY v
-    ),
-    -- id-orientation closure: x < y < z counts each triangle once;
-    -- triangle totals are orientation-independent, so this attests the
-    -- degree-oriented Spark kernel bit-for-bit
-    tri AS MATERIALIZED (
-        SELECT e1.x AS a, e1.y AS b, e2.y AS c
-        FROM edges e1
-        JOIN edges e2 ON e1.y = e2.x
-        JOIN edges e3 ON e3.x = e1.x AND e3.y = e2.y
-    ),
-    pern AS (
-        SELECT v, CAST(COUNT(*) AS BIGINT) AS triangles FROM (
-            SELECT a AS v FROM tri
-            UNION ALL SELECT b FROM tri
-            UNION ALL SELECT c FROM tri
-        ) GROUP BY v
-    )
-    SELECT d.v AS part_key,
-           CAST(d.degree AS BIGINT) AS degree,
-           COALESCE(p.triangles, 0) AS triangles,
-           CAST(d.degree * (d.degree - 1) // 2 AS BIGINT) AS wedges
-    FROM deg d LEFT JOIN pern p ON d.v = p.v
-    ORDER BY triangles DESC, part_key
-    LIMIT {TRIANGLE_TOP_K}
-    """
-
-
-@query("graph_triangle_cohesion", GRAPH_TRIANGLE_COHESION_ORACLE, local=True)
-def graph_triangle_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle counting over the part co-purchase graph (an undirected
-    edge per distinct part pair that ever shared an order): the
-    TRIANGLE_TOP_K (50) most triangle-embedded parts with their degree,
-    triangle count, and wedge count (degree choose 2 — the local
-    clustering coefficient's exact-integer numerator/denominator pair,
-    kept unreduced so the contract stays hash-exact).
-
-    Triangle density is the standard cohesion signal on co-occurrence
-    graphs (community detection preprocessing, spam/bot subgraph
-    flagging on web graphs, basket-affinity strength beyond pairwise
-    counts). The kernel is ``triangle_counts`` — degree-oriented wedge
-    enumeration, O(m^1.5) intermediate on any degree distribution; see
-    its docstring for the scale argument.
-
-    Plan: distinct (order, part) pairs -> per-order pair expansion
-    (bounded by basket size: TPC-H orders hold <= 7 lineitems, and
-    production baskets are similarly capped — the expansion is
-    O(basket^2) per order, never corpus-quadratic) -> distinct edge
-    set -> the kernel's three id-only shuffles. At production scale a
-    co-purchase graph adds a min-support edge filter (HAVING
-    COUNT(*) >= s on the pair aggregate) before the kernel — a
-    one-line knob on the same plan; the fixtures run support 1 so the
-    small-SF graphs stay triangle-rich."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("x")
-    )
-    b = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("y")
-    )
-    edges = (
-        a.join(b, "o")
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-    )
-    from ..operators.graph import triangle_counts
-
-    counts = triangle_counts(edges)
-    return (
-        counts.select(
-            F.col("v").alias("part_key"),
-            "degree",
-            "triangles",
-            F.expr("degree * (degree - 1) DIV 2").alias("wedges"),
-        )
-        .orderBy(F.desc("triangles"), "part_key")
-        .limit(TRIANGLE_TOP_K)
     )
 
 
@@ -460,111 +356,6 @@ def graph_kcore_loyalty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_hits_influence: two-round integer HITS (hubs & authorities)
-# over the DIRECTED customer->supplier trading graph.
-# ---------------------------------------------------------------------------
-
-HITS_ROUNDS = 2  # the contract: round-2 accounting state, not the fixpoint
-
-GRAPH_HITS_INFLUENCE_ORACLE = """
-    WITH e AS MATERIALIZED (
-        SELECT DISTINCT o_custkey AS c, l_suppkey AS s
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    a1 AS MATERIALIZED (
-        SELECT s, CAST(COUNT(*) AS BIGINT) AS a FROM e GROUP BY s),
-    h1 AS (
-        SELECT e.c, CAST(SUM(a1.a) AS BIGINT) AS h
-        FROM e JOIN a1 ON e.s = a1.s GROUP BY e.c
-    ),
-    a2 AS (
-        SELECT e.s, CAST(SUM(h1.h) AS BIGINT) AS a
-        FROM e JOIN h1 ON e.c = h1.c GROUP BY e.s
-    ),
-    degs AS (
-        SELECT c AS k, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY c
-    )
-    SELECT node_type, entity_key, degree, score FROM (
-        SELECT 'customer' AS node_type, h1.c AS entity_key,
-               degs.deg AS degree, h1.h AS score
-        FROM h1 JOIN degs ON h1.c = degs.k
-        UNION ALL
-        SELECT 'supplier', a2.s, a1.a, a2.a
-        FROM a2 JOIN a1 ON a2.s = a1.s
-    ) ORDER BY score DESC, node_type, entity_key
-    """
-
-
-@query("graph_hits_influence", GRAPH_HITS_INFLUENCE_ORACLE, local=True)
-def graph_hits_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs-and-authorities over the DIRECTED customer->supplier
-    trading graph (an edge per distinct pair that ever traded) — the
-    other classic link-analysis centrality next to PageRank, and the
-    natural one for BIPARTITE interaction data: hubs (customers) are
-    scored by the authority of the suppliers they buy from,
-    authorities (suppliers) by the hub mass of their buyers. Two
-    ALTERNATING half-rounds from h0 = 1, all-integer and unnormalized:
-
-        a1(s) = in-degree of s            (sum of h0 over buyers)
-        h1(c) = sum of a1 over c's suppliers   -> the hub score
-        a2(s) = sum of h1 over s's buyers      -> the authority score
-
-    ROUNDS=2 IS THE CONTRACT (the pagerank ROUNDS=3 precedent): exact
-    integer sums, no normalization, so the DuckDB unrolled-CTE twin is
-    hash-exact and the ordering equals normalized HITS' round-2
-    ordering (normalization is a positive scalar per half-round).
-    Output: one row per active node — customers carry (out-degree,
-    h1), suppliers (in-degree = a1, a2) — ordered by score under a
-    deterministic tiebreak.
-
-    Scale shape: the distinct-pair base is one exchange; each
-    half-round is one key-hashed join (the node-sized score table onto
-    the edge list) followed by a map-side-combinable SUM — the same
-    per-round cost envelope as the PageRank kernel, alternating
-    between the two key spaces instead of re-keying one. No window, no
-    single partition, no floats. Unlike pagerank_fixed_point the
-    2-round chain is shallow enough that no checkpoint is needed.
-    Scores stay within int64 for any graph with < 2^31 edges per
-    authority neighborhood (a1 <= in-degree, h1 <= sum of neighbor
-    in-degrees <= E, a2 <= E^2/node — at web scale the standard move
-    is per-round max-normalization, the documented upgrade path)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    e = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    a1 = e.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("a"))
-    h1 = (
-        e.join(a1, "s")
-        .groupBy("c")
-        .agg(F.sum("a").cast("long").alias("h"))
-    )
-    a2 = (
-        e.join(h1, "c")
-        .groupBy("s")
-        .agg(F.sum("h").cast("long").alias("a2"))
-    )
-    degs = e.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    hubs = h1.join(degs, "c").select(
-        F.lit("customer").alias("node_type"),
-        F.col("c").alias("entity_key"),
-        F.col("deg").alias("degree"),
-        F.col("h").alias("score"),
-    )
-    auths = a2.join(a1, "s").select(
-        F.lit("supplier").alias("node_type"),
-        F.col("s").alias("entity_key"),
-        F.col("a").alias("degree"),
-        F.col("a2").alias("score"),
-    )
-    return hubs.unionByName(auths).orderBy(
-        F.desc("score"), "node_type", "entity_key"
-    )
-
-
-# ---------------------------------------------------------------------------
 # graph_label_propagation: synchronous LPA community detection over the
 # repeat-trade graph.
 # ---------------------------------------------------------------------------
@@ -696,132 +487,3 @@ def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
             F.max(F.struct(F.col("c"), (-F.col("lab")).alias("neg"))).alias("m")
         ).select(F.col("src").alias("v"), (-F.col("m.neg")).alias("lab"))
     return labels
-
-
-# ---------------------------------------------------------------------------
-# graph_bfs_reach: k-hop BFS reachability from the hub node.
-# ---------------------------------------------------------------------------
-
-BFS_HOPS = 3          # THE CONTRACT: hop-3 accounting state
-BFS_MIN_TRADES = 3    # same repeat-trade edge rule as k-core / LPA
-
-
-def _bfs_round_cte(r: int) -> str:
-    p = r - 1
-    seen = " UNION ALL ".join(f"SELECT v FROM f{i}" for i in range(r))
-    return f"""
-    f{r} AS MATERIALIZED (
-        SELECT DISTINCT e.dst AS v
-        FROM e0 e JOIN f{p} ON e.src = f{p}.v
-        WHERE e.dst NOT IN ({seen})
-    )"""
-
-
-GRAPH_BFS_REACH_ORACLE = (
-    """
-    WITH base AS MATERIALIZED (
-        SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s, COUNT(*) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ),
-    rep AS MATERIALIZED (SELECT c, s FROM base WHERE n >= {minn}),
-    e0 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM rep
-        UNION ALL
-        SELECT s AS src, c AS dst FROM rep
-    ),
-    deg AS MATERIALIZED (
-        SELECT src AS v, COUNT(*) AS d FROM e0 GROUP BY src),
-    f0 AS MATERIALIZED (SELECT v FROM deg ORDER BY d DESC, v LIMIT 1),"""
-    + ",".join(_bfs_round_cte(r) for r in range(1, BFS_HOPS + 1))
-    + """
-    SELECT dist, CAST(COUNT(*) AS BIGINT) AS n_nodes,
-           CAST(MIN(v) AS BIGINT) AS min_node,
-           CAST(MAX(v) AS BIGINT) AS max_node
-    FROM ("""
-    + " UNION ALL ".join(
-        f"SELECT {i} AS dist, v FROM f{i}" for i in range(BFS_HOPS + 1)
-    )
-    + """)
-    GROUP BY dist ORDER BY dist
-    """
-).format(minn=BFS_MIN_TRADES)
-
-
-@query("graph_bfs_reach", GRAPH_BFS_REACH_ORACLE, local=True)
-def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-hop BFS REACHABILITY from the graph's hub: starting at the
-    highest-degree node of the repeat-trade graph (deterministic
-    tiebreak: smallest id), expand the frontier BFS_HOPS (3) times and
-    report each hop ring's size and id range — the ego-network /
-    blast-radius question ('how much of the market is within 3 trades
-    of the biggest player?'). HOPS=3 IS THE CONTRACT (the
-    pagerank/HITS/LPA precedent): the output is the per-ring
-    accounting state, attested by a DuckDB unrolled-CTE twin. BFS is
-    the fourth iterative graph kernel shipped — FRONTIER EXPANSION
-    with a visited-set restriction, where components grow regions,
-    k-core shrinks them, and pagerank/HITS/LPA move values.
-
-    Scale shape: the hub pick is a degree aggregate + a 1-row
-    TakeOrderedAndProject (broadcast into round 1 — never a collect);
-    each hop is one edge-sized hash join (frontier onto src) + a
-    DISTINCT + LEFT ANTI joins against the prior rings (keys-only,
-    frontier-sized right sides — at web scale the visited set
-    broadcast-degrades to shuffle exactly like any growing dim). Ring
-    depth is fixed, so lineage stays shallow with no checkpoint."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    rep = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= BFS_MIN_TRADES)
-        .select("c", "s")
-    )
-    edges = (
-        rep.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionByName(rep.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-        .localCheckpoint()  # feeds the degree pick + one join per hop
-    )
-    hub = (
-        edges.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .orderBy(F.desc("d"), F.asc("v"))
-        .limit(1)
-        .select("v")
-    )
-    rings = [hub]
-    for _ in range(BFS_HOPS):
-        frontier = rings[-1]
-        nxt = (
-            edges.join(
-                frontier.withColumnRenamed("v", "src"), "src"
-            )
-            .select(F.col("dst").alias("v"))
-            .distinct()
-        )
-        for seen in rings:
-            nxt = nxt.join(seen, "v", "left_anti")
-        rings.append(nxt.localCheckpoint())
-    out = None
-    for i, ring in enumerate(rings):
-        tagged = ring.select(F.lit(i).alias("dist"), "v")
-        out = tagged if out is None else out.unionByName(tagged)
-    return (
-        out.groupBy("dist")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.min("v").cast("long").alias("min_node"),
-            F.max("v").cast("long").alias("max_node"),
-        )
-        .select(F.col("dist").cast("int").alias("dist"),
-                "n_nodes", "min_node", "max_node")
-        .orderBy("dist")
-    )

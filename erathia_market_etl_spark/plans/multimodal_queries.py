@@ -340,226 +340,6 @@ def media_bmp_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# media_wav_resample: the audio twin of media_bmp_real_resize — full
-# encode -> decode -> resample -> re-encode -> re-decode cycle.
-# ---------------------------------------------------------------------------
-
-WAV_RESAMPLE_N = 48  # fixed-length clip every audio model consumes
-
-MEDIA_WAV_RESAMPLE_ORACLE = f"""
-    WITH a AS (
-        SELECT doc_id AS media_id,
-               8000 + 100 * (doc_id % 80) AS rate,
-               64 + doc_id % 64 AS n
-        FROM documents WHERE doc_id % 3 = 2
-    ),
-    s AS (
-        SELECT media_id, rate, j,
-               ((media_id * 31 + ((j * n) // {WAV_RESAMPLE_N}) * 7)
-                % 65536) - 32768 AS v
-        FROM a, UNNEST(generate_series(0, {WAV_RESAMPLE_N - 1})) AS u(j)
-    )
-    SELECT media_id,
-           CAST(MIN(rate) AS INT) AS sample_rate,
-           CAST({WAV_RESAMPLE_N} AS BIGINT) AS n_samples,
-           CAST(SUM(v) AS BIGINT) AS sum_samples,
-           CAST(MAX(ABS(v)) AS INT) AS peak,
-           CAST(SUM((j + 1) * v) AS BIGINT) AS checksum_weighted
-    FROM s GROUP BY media_id
-    ORDER BY media_id
-    """
-
-
-@query("media_wav_resample", MEDIA_WAV_RESAMPLE_ORACLE, local=True)
-def media_wav_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio pipeline end-to-end — the PCM twin of
-    media_bmp_real_resize: synthesize a VALID PCM16 WAV from the
-    arithmetic sample formula (v_i = (id·31 + i·7) % 65536 − 32768 on
-    n = 64 + id % 64 samples, residue class doc_id % 3 = 2 — the third
-    class, disjoint from the decode (1) and image (0) fixtures),
-    decode it, nearest-neighbor resample to exactly WAV_RESAMPLE_N
-    (48) samples (src = (dst·n) DIV 48 — exact integer index map),
-    re-encode at the original rate, then RE-DECODE the output payload
-    and report stats. checksum_weighted = Σ (j+1)·v_j is
-    ORDER-SENSITIVE, so a sample permutation or off-by-one in the
-    resample index silently reordering the clip breaks the hash — the
-    oracle evaluates the source formula at the resampled indices
-    directly. All stages narrow mapInPandas; payloads never shuffle;
-    at 100 TB parallelism = input splits and the only cross-node data
-    is the stats frame."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        decode_wav,
-        encode_wav,
-        resample_audio_real,
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            outs = []
-            for mid in pdf["media_id"]:
-                n = 64 + mid % 64
-                i = np.arange(n, dtype=np.int64)
-                v = ((mid * 31 + i * 7) % 65536) - 32768
-                outs.append(encode_wav(v, int(8000 + 100 * (mid % 80))))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"],
-                 "content": pd.Series(outs, dtype="object")}
-            )
-
-    def stats(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("media_id", "sample_rate", "n_samples",
-                     "sum_samples", "peak", "checksum_weighted")}
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                samples, rate = decode_wav(bytes(buf))
-                v = samples.astype(np.int64)
-                j = np.arange(len(v), dtype=np.int64)
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(len(v))
-                rows["sum_samples"].append(int(v.sum()))
-                rows["peak"].append(int(np.abs(v).max()))
-                rows["checksum_weighted"].append(int(((j + 1) * v).sum()))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "sample_rate": pd.Series(rows["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int64"),
-                    "sum_samples": pd.Series(rows["sum_samples"], dtype="int64"),
-                    "peak": pd.Series(rows["peak"], dtype="int32"),
-                    "checksum_weighted": pd.Series(
-                        rows["checksum_weighted"], dtype="int64"),
-                }
-            )
-
-    docs = load_table(spark, sf_dir, "documents")
-    wavs = (
-        docs.filter(F.col("doc_id") % 3 == 2)
-        .select(F.col("doc_id").alias("media_id"))
-        .mapInPandas(synth, "media_id long, content binary")
-    )
-    resampled = resample_audio_real(wavs, WAV_RESAMPLE_N)
-    return resampled.mapInPandas(
-        stats,
-        "media_id long, sample_rate int, n_samples long, "
-        "sum_samples long, peak int, checksum_weighted long",
-    ).orderBy("media_id")
-
-
-# ---------------------------------------------------------------------------
-# media_scene_segments: shot/scene segmentation over sampled frame
-# fingerprints.
-# ---------------------------------------------------------------------------
-
-# 24-bit frame energy domain; a jump of more than half the domain
-# between consecutive frames opens a new scene (uniform fingerprints
-# => ~1/4 boundary rate, so fixture videos carry many multi-frame
-# scenes AND many boundaries — both paths non-vacuous).
-SCENE_JUMP_THRESHOLD = 1 << 23
-
-MEDIA_SCENE_SEGMENTS_ORACLE = f"""
-    WITH v AS (
-        SELECT doc_id AS media_id, text, 24 + doc_id % 240 AS n_frames
-        FROM documents WHERE doc_id % 3 = 2
-    ),
-    e AS (
-        SELECT media_id, CAST(f AS INT) AS frame_idx,
-               CAST('0x' || substr(md5(text || '|' || f), 1, 6) AS BIGINT)
-                   AS energy
-        FROM v, UNNEST(range(0, n_frames)) AS u(f)
-    ),
-    flagged AS (
-        SELECT media_id, frame_idx, energy,
-               CASE WHEN LAG(energy) OVER w IS NULL
-                         OR ABS(energy - LAG(energy) OVER w)
-                            > {SCENE_JUMP_THRESHOLD}
-                    THEN 1 ELSE 0 END AS is_new
-        FROM e
-        WINDOW w AS (PARTITION BY media_id ORDER BY frame_idx)
-    ),
-    scenes AS (
-        SELECT media_id,
-               SUM(is_new) OVER (PARTITION BY media_id ORDER BY frame_idx
-                                 ROWS UNBOUNDED PRECEDING) AS scene_id
-        FROM flagged
-    ),
-    lens AS (
-        SELECT media_id, scene_id, CAST(COUNT(*) AS BIGINT) AS len
-        FROM scenes GROUP BY 1, 2
-    )
-    SELECT media_id,
-           CAST(SUM(len) AS BIGINT) AS n_frames,
-           CAST(COUNT(*) AS BIGINT) AS n_scenes,
-           CAST(MAX(len) AS BIGINT) AS longest_scene
-    FROM lens GROUP BY media_id
-    ORDER BY media_id
-    """
-
-
-@query("media_scene_segments", MEDIA_SCENE_SEGMENTS_ORACLE, local=True)
-def media_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SHOT/SCENE segmentation of the video assets — the frame-level
-    composition a video-curation pipeline runs before clip extraction:
-    every frame is fingerprinted through the SAME mapInPandas decode
-    plumbing as media_frame_sample (stride 1), a 24-bit ENERGY is read
-    off the fingerprint (hex->int, engine-portable), and a new scene
-    opens wherever consecutive frames jump by more than half the
-    energy domain — then gaps-and-islands (running sum of boundary
-    flags) yields per-video scene counts and the longest scene. On
-    real codecs the energy column would be a luma histogram distance
-    from the decoded frames (the honest-stub convention of
-    operators/multimodal.py); the fingerprint energy exercises the
-    identical Spark plumbing end-to-end.
-
-    Scale shape: the frame expansion happens INSIDE mapInPandas (1->N
-    rows, payload read once, only (media_id, idx, 32-byte hash) ever
-    leaves); the lag/cumsum windows partition BY media_id whose
-    per-key row count is bounded by meta.n_frames (a per-asset
-    constant, the user-day precedent), and the two rollups are
-    group-sized. Payload bytes never shuffle."""
-    frames = sample_frames(_media(spark, sf_dir), every_n=1)
-    from pyspark.sql import Window
-
-    energy = F.conv(F.substring("frame_hash", 1, 6), 16, 10).cast("bigint")
-    w = Window.partitionBy("media_id").orderBy("frame_idx")
-    flagged = frames.select(
-        "media_id", "frame_idx", energy.alias("energy")
-    ).withColumn(
-        "is_new",
-        F.when(
-            F.lag("energy").over(w).isNull()
-            | (
-                F.abs(F.col("energy") - F.lag("energy").over(w))
-                > SCENE_JUMP_THRESHOLD
-            ),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    scenes = flagged.withColumn(
-        "scene_id",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    lens = scenes.groupBy("media_id", "scene_id").agg(
-        F.count(F.lit(1)).cast("long").alias("len")
-    )
-    return (
-        lens.groupBy("media_id")
-        .agg(
-            F.sum("len").cast("long").alias("n_frames"),
-            F.count(F.lit(1)).cast("long").alias("n_scenes"),
-            F.max("len").cast("long").alias("longest_scene"),
-        )
-        .orderBy("media_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # media_jpeg_real_decode: driver-grade evidence for the baseline JPEG
 # codec (operators/jpeg.py) — hash-exact against an arithmetic oracle.
 # ---------------------------------------------------------------------------
@@ -648,125 +428,6 @@ def media_jpeg_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(
             synth_and_decode,
             "media_id long, height int, width int, "
-            "px_min int, px_max int, px_sum long",
-        )
-        .orderBy("media_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# media_gif_real_decode: driver-grade evidence for the r16 GIF/LZW
-# codec (operators/gif.py). GIF is LOSSLESS for paletted content,
-# so unlike the JPEG twin no divisibility construction is needed —
-# every synthesized tile round-trips bit-exactly and the oracle
-# predicts the stats from modular arithmetic alone.
-# ---------------------------------------------------------------------------
-
-MEDIA_GIF_REAL_DECODE_ORACLE = """
-    WITH d AS (
-        SELECT doc_id,
-               5 + doc_id % 13 AS h,
-               5 + (doc_id * 3) % 17 AS w,
-               2 + doc_id % 7 AS nc
-        FROM documents WHERE doc_id % 3 = 0
-    ),
-    pal AS (
-        SELECT doc_id, h, w, nc, unnest(range(nc)) AS i FROM d
-    ),
-    colors AS (
-        SELECT doc_id, h, w, nc, i,
-               (10 + 7 * i + doc_id) % 256 AS r,
-               ((10 + 7 * i + doc_id) % 256 + 40) % 256 AS g,
-               ((10 + 7 * i + doc_id) % 256 + 80) % 256 AS b,
-               -- index i paints (h*w)/nc pixels, +1 for the first
-               -- (h*w % nc) indices of the rotation starting at
-               -- doc_id mod nc: idx(t) = (doc_id + t) % nc
-               (h * w) // nc
-               + CASE WHEN ((i - doc_id) % nc + nc) % nc < (h * w) % nc
-                      THEN 1 ELSE 0 END AS cnt
-        FROM pal
-    )
-    SELECT doc_id AS media_id,
-           CAST(h AS INT) AS height,
-           CAST(w AS INT) AS width,
-           CAST(nc AS INT) AS n_colors,
-           CAST(MIN(LEAST(r, g, b)) AS INT) AS px_min,
-           CAST(MAX(GREATEST(r, g, b)) AS INT) AS px_max,
-           CAST(SUM(cnt * (r + g + b)) AS BIGINT) AS px_sum
-    FROM colors
-    GROUP BY doc_id, h, w, nc
-    ORDER BY media_id
-    """
-
-
-@query("media_gif_real_decode", MEDIA_GIF_REAL_DECODE_ORACLE, local=True)
-def media_gif_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossless-codec decode under driver-style check (r16): each
-    selected documents row (doc_id % 3 = 0) synthesizes a paletted
-    tile — h = 5 + id % 13, w = 5 + 3·id % 17, nc = 2 + id % 7 colors
-    with palette color i = ((10 + 7i + id) % 256, +40, +80) and pixel
-    index (id + y·w + x) % nc — encodes it as a VALID GIF89a
-    (interlaced when id is odd, so both row orders run under the
-    compare) and decodes it back through the full container walk +
-    variable-width LZW state machine of operators/gif.py. GIF is
-    lossless, so the decoded tile equals the constructed one exactly
-    and the oracle predicts n_colors / min / max / channel-sum from
-    pure modular arithmetic — any defect anywhere in LZW packing,
-    sub-block framing, palette handling, or (de)interlacing breaks
-    the hash. h·w >= 25 > nc always, so every palette index is used
-    and min/max over used colors equal min/max over pixels.
-
-    Scale shape: identical to media_jpeg_real_decode — one narrow
-    mapInPandas over (id); payloads are born and die inside the task,
-    bytes never shuffle; the only exchange is the output ORDER BY."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.gif import decode_gif, encode_gif
-
-    def synth_and_decode(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "height", "width",
-                                     "n_colors", "px_min", "px_max", "px_sum")}
-            for mid in pdf["media_id"]:
-                mid = int(mid)
-                h = 5 + mid % 13
-                w = 5 + (mid * 3) % 17
-                nc = 2 + mid % 7
-                base = (10 + 7 * np.arange(nc) + mid) % 256
-                pal = np.stack(
-                    [base, (base + 40) % 256, (base + 80) % 256], axis=1
-                ).astype(np.uint8)
-                idx = ((mid + np.arange(h * w)) % nc).reshape(h, w)
-                img = pal[idx]
-                out = decode_gif(encode_gif(img, interlace=bool(mid % 2)))
-                assert out.shape == (h, w, 3)
-                rows["media_id"].append(mid)
-                rows["height"].append(out.shape[0])
-                rows["width"].append(out.shape[1])
-                rows["n_colors"].append(
-                    len(np.unique(out.reshape(-1, 3), axis=0))
-                )
-                rows["px_min"].append(int(out.min()))
-                rows["px_max"].append(int(out.max()))
-                rows["px_sum"].append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame({
-                "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "n_colors": pd.Series(rows["n_colors"], dtype="int32"),
-                "px_min": pd.Series(rows["px_min"], dtype="int32"),
-                "px_max": pd.Series(rows["px_max"], dtype="int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="int64"),
-            })
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.filter(F.col("doc_id") % 3 == 0)
-        .select(F.col("doc_id").alias("media_id"))
-        .mapInPandas(
-            synth_and_decode,
-            "media_id long, height int, width int, n_colors int, "
             "px_min int, px_max int, px_sum long",
         )
         .orderBy("media_id")

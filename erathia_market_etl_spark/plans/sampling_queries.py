@@ -759,145 +759,6 @@ def quota_frame(w: DataFrame, budget: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# pack_binpack_ffd: first-fit-decreasing sequence packing — the greedy
-# bin-packing pass training pipelines run to pack documents into
-# fixed-token context windows with minimal padding.
-# ---------------------------------------------------------------------------
-
-PACK_FFD_CAP = 128    # bin capacity in tokens (the context length)
-PACK_FFD_TOP_N = 64   # docs packed per source — the per-group contract
-
-# COALESCE guard (r12, ADVICE r11): the installed duckdb 1.0.0 returns
-# 0 from list_position on a miss, but the documented semantics in later
-# versions is NULL-on-miss — without the COALESCE the "open new bin"
-# CASE arm would fall through on a dependency bump and silently drop
-# the item, surfacing as a confusing red compare.
-_FFD_POS_SQL = (
-    "COALESCE(list_position("
-    "list_transform(acc, b -> b + xe[1] <= {cap}), true), 0)"
-)
-
-PACK_BINPACK_FFD_ORACLE = f"""
-    WITH tok AS (
-        SELECT source, doc_id,
-               len(string_split(text, ' ')) AS n
-        FROM documents
-    ),
-    top AS (
-        SELECT source, doc_id, n FROM (
-            SELECT source, doc_id, n,
-                   ROW_NUMBER() OVER (PARTITION BY source
-                                      ORDER BY n DESC, doc_id) AS rn
-            FROM tok
-        ) WHERE rn <= {PACK_FFD_TOP_N}
-    ),
-    arr AS (
-        SELECT source,
-               list_transform(list(n ORDER BY n DESC, doc_id), x -> [x])
-                   AS items,
-               CAST(SUM(n) AS BIGINT) AS total_tokens,
-               CAST(COUNT(*) AS BIGINT) AS n_docs
-        FROM top GROUP BY source
-    ),
-    packed AS (
-        SELECT source, n_docs, total_tokens,
-               list_reduce(items, (acc, xe) -> CASE
-                   WHEN {_FFD_POS_SQL.format(cap=PACK_FFD_CAP)} = 0
-                   THEN acc || xe
-                   ELSE list_transform(acc, (b, i) -> CASE
-                       WHEN i = {_FFD_POS_SQL.format(cap=PACK_FFD_CAP)}
-                       THEN b + xe[1] ELSE b END)
-               END) AS bins
-        FROM arr
-    )
-    SELECT source, n_docs, total_tokens,
-           CAST(len(bins) AS BIGINT) AS n_bins,
-           CAST(list_max(bins) AS BIGINT) AS max_bin,
-           CAST(list_min(bins) AS BIGINT) AS min_bin,
-           CAST(total_tokens * 1000000
-                // (len(bins) * {PACK_FFD_CAP}) AS BIGINT)
-               AS utilization_ppm
-    FROM packed
-    ORDER BY source
-    """
-
-
-@query("pack_binpack_ffd", PACK_BINPACK_FFD_ORACLE, local=True)
-def pack_binpack_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIRST-FIT-DECREASING bin packing of documents into
-    PACK_FFD_CAP-token context windows, per source — THE standard
-    greedy for training-sequence packing (FFD wastes at most ~22%
-    over optimal; the token-budget shard query packs by running sum,
-    this one packs for minimal padding). The fold is sequential and
-    state-carrying (a list of open-bin loads), so like ts_ewma it
-    cannot be a window rewrite: docs are sorted tokens-DESC with a
-    doc_id tiebreak and folded through the aggregate HOF whose
-    accumulator is the bin-load array — place into the FIRST bin that
-    fits (array_position over a fits mask), else open a new bin. All
-    integer arithmetic, so n_bins/max/min/utilization are hash-exact;
-    the DuckDB twin is the same fold via list_reduce (accumulator and
-    element both LIST-typed — list_reduce demands matching types, so
-    elements ride as single-element lists).
-
-    Per-group boundedness contract: the fold packs each source's
-    PACK_FFD_TOP_N (64) largest documents — bin packing is inherently
-    sequential per group, so production packs per SHARD after the
-    token-budget sharder bounds group size; the per-source cap states
-    that bound explicitly at fixture scale. Only (source, n) pairs
-    shuffle; the WindowGroupLimit top-N is two-phase (lint R5)."""
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source",
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("n"),
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("n"), "doc_id")
-    top = (
-        tok.select("source", "doc_id", "n", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= PACK_FFD_TOP_N)
-    )
-    arr = top.groupBy("source").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(-n AS negn, doc_id, n)))"
-            ", s -> array(s.n))"
-        ).alias("items"),
-        F.sum("n").cast("long").alias("total_tokens"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
-    cap = PACK_FFD_CAP
-    pos = (
-        f"array_position(transform(acc, b -> b + element_at(xe, 1)"
-        f" <= {cap}), true)"
-    )
-    bins_expr = (
-        f"aggregate(slice(items, 2, size(items) - 1), items[0],"
-        f" (acc, xe) -> IF({pos} = 0, concat(acc, xe),"
-        f" transform(acc, (b, i) -> IF(i + 1 = {pos},"
-        f" b + element_at(xe, 1), b))))"
-    )
-    packed = arr.select(
-        "source",
-        "n_docs",
-        "total_tokens",
-        F.expr(bins_expr).alias("bins"),
-    )
-    return (
-        packed.select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            F.size("bins").cast("long").alias("n_bins"),
-            F.array_max("bins").cast("long").alias("max_bin"),
-            F.array_min("bins").cast("long").alias("min_bin"),
-            F.expr(
-                f"total_tokens * 1000000 DIV (size(bins) * {cap})"
-            ).cast("long").alias("utilization_ppm"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
 # sample_systematic_interval: systematic (every k-th) sampling in a
 # deterministic hash order.
 # ---------------------------------------------------------------------------
@@ -1195,83 +1056,4 @@ def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("uplift_ppm"),
         )
         .orderBy("variant")
-    )
-
-
-# ---------------------------------------------------------------------------
-# sample_shuffle_order: deterministic global training-order shuffle.
-# ---------------------------------------------------------------------------
-
-SHUFFLE_N_SHARDS = 16          # data-parallel worker count
-SHUFFLE_BLOCK_WIDTH = 1 << 20  # 32-bit hash domain / 2^20 = 4096 blocks
-
-
-def _shuffle_order_oracle() -> str:
-    from .sketch_queries import _hash32_sql
-
-    h = _hash32_sql("doc_id")
-    return f"""
-    WITH hashed AS (
-        SELECT doc_id, CAST({h} AS BIGINT) AS h FROM documents
-    ),
-    ranked AS (
-        SELECT doc_id, h,
-               ROW_NUMBER() OVER (ORDER BY h, doc_id) AS shuffle_pos,
-               COUNT(*) OVER () AS n
-        FROM hashed
-    )
-    SELECT doc_id, CAST(shuffle_pos AS BIGINT) AS shuffle_pos,
-           CAST((shuffle_pos - 1) % {SHUFFLE_N_SHARDS} AS BIGINT) AS shard
-    FROM ranked
-    ORDER BY doc_id
-    """
-
-
-SAMPLE_SHUFFLE_ORDER_ORACLE = _shuffle_order_oracle()
-
-
-@query("sample_shuffle_order", SAMPLE_SHUFFLE_ORDER_ORACLE, local=True)
-def sample_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic GLOBAL TRAINING-ORDER shuffle — the epoch
-    permutation every data loader needs: each document's position is
-    its exact rank under the integer avalanche hash of its id (change
-    the salt, get a fresh epoch; same salt, bit-identical order on
-    every run and engine — never rand(), which the lint bans), plus a
-    round-robin SHARD assignment so SHUFFLE_N_SHARDS data-parallel
-    workers each read an interleaved, hash-random slice.
-
-    Scale shape: the global rank comes from ``operators/rank.py``'s
-    block decomposition with NO grouping — a bare ROW_NUMBER() OVER
-    (ORDER BY hash) funnels the whole corpus through one task, while
-    here the hash domain splits into 4096 fixed blocks (width 2^20
-    over the 32-bit avalanche range): per-block counts fold map-side,
-    the cumulative offsets ride the bounded 4096-row block table (the
-    one R6-justified single-partition site — block grain, never
-    corpus grain), and row_number runs within blocks in parallel.
-    Writing the output sorted by shuffle_pos then gives sequential
-    readers contiguous hash-random runs."""
-    from ..operators.rank import grouped_rank
-    from .sketch_queries import _hash32_spark_sql
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    hashed = docs.withColumn(
-        "h", F.expr(_hash32_spark_sql("doc_id")).cast("long")
-    )
-    ranked = grouped_rank(
-        hashed,
-        [],
-        F.col("h"),
-        "doc_id",
-        block_width=SHUFFLE_BLOCK_WIDTH,
-        out_rank="shuffle_pos",
-        out_n="n",
-    )
-    return (
-        ranked.select(
-            "doc_id",
-            F.col("shuffle_pos").cast("long").alias("shuffle_pos"),
-            ((F.col("shuffle_pos") - 1) % SHUFFLE_N_SHARDS).cast("long")
-            .alias("shard"),
-        )
-        .orderBy("doc_id")
     )

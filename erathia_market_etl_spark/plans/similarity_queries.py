@@ -431,7 +431,7 @@ _EMB_SIG_SF1SYN = 797541686   # .scalecheck/sf1 (8000 vectors)
 # regression). For each frozen corpus: (1) recompute sig with the
 # _EMB_FINGERPRINT_CTE SQL in DuckDB over embeddings.parquet — if sig
 # moved, the CORPUS changed, regenerate or re-pin; (2) run
-# sim_ivf_cell_quality / sim_pq_quality / sim_ivfpq_topk twice under
+# sim_ivf_cell_quality / sim_pq_quality twice under
 # different spark.sql.shuffle.partitions and confirm the measured
 # integers agree run-to-run — if they do but differ from the pinned
 # value, it is an environment bump: re-pin the integers in ONE commit
@@ -975,325 +975,6 @@ def sim_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sim_ivfpq_topk: the composed IVF + PQ retrieval pipeline — the ANN
-# shape that actually runs at 100 TB (FAISS IVFPQ / SPANN family:
-# coarse cells prune the corpus, 8-byte codes prune the scan, exact
-# re-rank fixes the shortlist). Local-only.
-# ---------------------------------------------------------------------------
-
-IVFPQ_SHORTLIST = 64      # ADC shortlist fed to exact re-rank
-# recall@10 vs in-cell exact L2 — measured 1.0 / 0.8 / 0.6 at
-# sf0.001 / sf0.01 / sf0.1 (within-cell neighbors are mutually close,
-# so 8x16 codebooks discriminate them more coarsely than the
-# corpus-wide sim_pq_quality scan; the re-ranked shortlist still
-# recovers a solid majority of the exact in-cell top-10)
-IVFPQ_RECALL_FLOOR = 0.5
-
-SIM_IVFPQ_TOPK_ORACLE = f"""
-    WITH {{ivf_cte}},
-    {{fingerprint_cte}}
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates,
-           {{n_probe}} AS n_probe, 8 AS n_sub, 16 AS k,
-           {IVFPQ_SHORTLIST} AS shortlist,
-           (SELECT {{recall_case}} FROM fp) AS recall_hits,
-           TRUE AS shortlist_bounded,
-           (SELECT {{recall_ok_case}} FROM fp) AS recall_ok
-    FROM cells JOIN probes ON cells.cid = probes.cid
-    WHERE cells.vec_id <> {{query_vec_id}}
-    """
-
-
-def _ivfpq_oracle() -> str:
-    # recall_hits values measured r13 (deterministic per fixture —
-    # repeat-run verified), pinned behind the corpus fingerprint like
-    # the sim_pq_quality oracle
-    return SIM_IVFPQ_TOPK_ORACLE.format(
-        ivf_cte=_IVF_CTE,
-        n_probe=N_PROBE,
-        query_vec_id=QUERY_VEC_ID,
-        fingerprint_cte=_EMB_FINGERPRINT_CTE,
-        recall_case=_sig_case(
-            {_EMB_SIG_SF0001: 10, _EMB_SIG_SF001: 8, _EMB_SIG_SF01: 6,
-             _EMB_SIG_SF1SYN: 2}
-        ),
-        recall_ok_case=_sig_case_bool(
-            {_EMB_SIG_SF0001: True, _EMB_SIG_SF001: True,
-             _EMB_SIG_SF01: True, _EMB_SIG_SF1SYN: False}
-        ),
-    )
-
-
-@query("sim_ivfpq_topk", _ivfpq_oracle(), local=True)
-def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composed retrieval, one contract row. The pipeline: the
-    deterministic 16-cell coarse quantizer (same argmax-over-broadcast
-    assignment as sim_topk_ivf), probe the query's N_PROBE (4) nearest
-    cells, ADC-scan ONLY the probed cells' 8-byte PQ codes for an
-    IVFPQ_SHORTLIST (64) shortlist, exact-L2 re-rank the shortlist,
-    return top-10.
-
-    The oracle pins the IVF half HASH-EXACTLY: n_candidates counts the
-    probed-cell population through the full coarse assignment
-    (argmax of 16 cosines per vector, ROW_NUMBER ties) recomputed
-    independently by DuckDB — an engine-drift canary for the whole
-    cell/probe pipeline. The PQ half (codebooks, codes, ADC) is not
-    SQL-reproducible state, so it is pinned as the measured
-    recall_ok contract (>= IVFPQ_RECALL_FLOOR (0.5) of the IN-CELL exact-L2
-    top-10 — the PQ stage's own loss, separated from the IVF cell-miss
-    loss that sim_topk_ivf already evidences) plus shortlist_bounded
-    (the shortlist genuinely prunes: IVFPQ_SHORTLIST < n_candidates,
-    so recall_ok is non-vacuous) — and, since r13, the measured
-    recall_hits INTEGER itself, frozen per fixture behind the corpus
-    fingerprint (the sim_pq_quality pattern; r12 VERDICT item 4).
-
-    Scale shape: at 100 TB the codes table is encoded offline
-    corpus-wide (pq_assign's narrow map) and written partitioned by
-    cell id, so probing prunes partitions and the ADC scan reads
-    8 bytes/vector from N_PROBE/N_CENTROIDS of the corpus; raw vectors
-    are read only by the |shortlist| re-rank. Here the encode runs on
-    the probed candidates only — retrieval-identical, and the full-
-    corpus encode path is already attested by sim_pq_quality."""
-    from ..operators.similarity import (
-        _sq_l2,
-        pq_adc_topk,
-        pq_assign,
-        pq_codebooks,
-    )
-
-    from ..operators.similarity import cell_argmax_udf, probe_order_udf
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cids, C = _ivf_centroids(emb)
-    cells = emb.select(
-        "vec_id", "embedding",
-        cell_argmax_udf(cids, C)(F.col("embedding")).alias("cid"),
-    )
-    probes = (
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(
-            F.explode(
-                F.slice(probe_order_udf(cids, C)(F.col("embedding")),
-                        1, N_PROBE)
-            ).alias("cid")
-        )
-    )
-    cand = (
-        cells.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", "embedding")
-    )
-    books = pq_codebooks(emb)
-    codes = pq_assign(spark, cand, books).select(
-        "vec_id", "embedding", "pq_code"
-    )
-    q = collect_query_embedding(emb)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    short = pq_adc_topk(codes, q, books, top=IVFPQ_SHORTLIST)
-    # re-rank probes the pre-encode candidate frame — the shortlist
-    # only needs (vec_id, embedding), so the encode subtree executes
-    # exactly once (for the ADC scan), not twice
-    rerank = (
-        cand.join(short.select("vec_id"), "vec_id", "left_semi")
-        .select("vec_id", _sq_l2(F.col("embedding"), qlit).alias("d2"))
-        .orderBy(F.asc("d2"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id")
-    )
-    incell_exact = (
-        cand.select("vec_id", _sq_l2(F.col("embedding"), qlit).alias("d2"))
-        .orderBy(F.asc("d2"), F.asc("vec_id"))
-        .limit(TOP_K)
-        .select("vec_id")
-    )
-    hits = rerank.join(incell_exact, "vec_id").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    ncand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-    return ncand.crossJoin(hits).select(
-        F.col("n_candidates").cast("bigint").alias("n_candidates"),
-        F.lit(N_PROBE).alias("n_probe"),
-        F.lit(len(books)).alias("n_sub"),
-        F.lit(len(books[0])).alias("k"),
-        F.lit(IVFPQ_SHORTLIST).alias("shortlist"),
-        # measured-value column (r13, the sim_pq_quality pattern): the
-        # shortlist∩in-cell-exact hit count is a deterministic integer
-        # per fixture — the oracle pins its VALUE behind the corpus
-        # fingerprint, not just the >= floor boolean
-        F.col("n_hits").cast("bigint").alias("recall_hits"),
-        (F.lit(IVFPQ_SHORTLIST) < F.col("n_candidates"))
-        .alias("shortlist_bounded"),
-        ((F.col("n_hits") / TOP_K) >= IVFPQ_RECALL_FLOOR).alias("recall_ok"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# dedup_semantic_cells: SemDeDup (Abbas et al. 2023, arXiv:2303.09540 —
-# semantic deduplication via k-means cluster bucketing).
-# r9: the cell count is now the paper's ~sqrt(n) regime by default
-# (VERDICT r8 item 3 — at sf0.1 the fixed-16-cell configuration's
-# 128-doc cap was BINDING, ~312 members/cell, silently dropping
-# candidate pairs), and the output carries per-cell cap-slack
-# accounting the way sim_bucket_stats accounts bucket overflow.
-# ---------------------------------------------------------------------------
-
-SEM_CELL_CAP = 128  # deterministic per-cell candidate cap (by vec_id)
-SEM_MIN_CELLS = 16  # floor: tiny fixtures keep >= the retrieval cell count
-# fixture-calibrated like SIMILAR_THRESHOLD: the fixture embeddings are
-# random (max observed within-cell cosine ~0.47-0.49 across SFs), so the
-# paper's ~0.95 near-dup threshold would make every green row vacuous;
-# 0.4 keeps a real keep/drop population on both engines at every SF.
-SEM_DUP_THRESHOLD = 0.4
-
-# k = max(16, floor(sqrt(n))) on BOTH engines. DuckDB's SQRT is
-# IEEE-correctly-rounded, so FLOOR(SQRT(n)) == Python math.isqrt(n) for
-# any n < 2^52 (a perfect square's sqrt is exact; a non-square's
-# correctly-rounded sqrt cannot cross the next integer boundary).
-DEDUP_SEMANTIC_CELLS_ORACLE = f"""
-    WITH k AS (
-        SELECT GREATEST({SEM_MIN_CELLS},
-                        CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT)) AS k
-        FROM embeddings
-    ),
-    cent AS (
-        SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-        WHERE vec_id < (SELECT k FROM k)
-    ),
-    scored AS (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (
-                   PARTITION BY e.vec_id
-                   ORDER BY ({_COSINE_SQL.format(a='e.embedding', b='c.cvec')}) DESC, c.cid
-               ) AS rn
-        FROM embeddings e CROSS JOIN cent c
-    ),
-    cells AS (SELECT vec_id, embedding, cid FROM scored WHERE rn = 1),
-    counted AS (
-        SELECT cid, vec_id, embedding,
-               CAST(COUNT(*) OVER (PARTITION BY cid) AS BIGINT) AS cell_n
-        FROM cells
-    ),
-    capped AS (
-        SELECT cid, vec_id, embedding, cell_n FROM counted
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY cid ORDER BY vec_id
-        ) <= {SEM_CELL_CAP}
-    )
-    SELECT x.cid, x.vec_id AS vec_a, y.vec_id AS vec_b,
-           FLOOR(({_COSINE_SQL.format(a='x.embedding', b='y.embedding')})
-                 * 1000000 + 0.5) / 1000000 AS cosine_sim,
-           x.cell_n,
-           x.cell_n > {SEM_CELL_CAP} AS truncated
-    FROM capped x
-    JOIN capped y ON x.cid = y.cid AND x.vec_id < y.vec_id
-    WHERE ({_COSINE_SQL.format(a='x.embedding', b='y.embedding')})
-          >= {SEM_DUP_THRESHOLD}
-    ORDER BY vec_a, vec_b
-    """
-
-
-def semantic_cell_pairs(
-    emb: DataFrame, n_cells: int, cap: int = SEM_CELL_CAP
-) -> DataFrame:
-    """Core SemDeDup pass over a (vec_id, embedding, ...) frame:
-    nearest-of-``n_cells`` coarse assignment (first-n_cells vectors as
-    centroids — deterministic; production swaps in `kmeans_centroids`),
-    deterministic per-cell cap, within-cell exact-cosine pairs, with
-    per-cell cap-slack accounting (``cell_n`` = pre-cap population;
-    ``truncated`` = the cap bound, so this cell's pair list is a
-    SAMPLE, not the full set — the sim_bucket_stats overflow-accounting
-    convention). Separated from the query wrapper so the planted-pair
-    test in tests/test_similarity.py can prove the cell-count knob's
-    recall effect on a crafted corpus."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import cell_argmax_udf
-
-    cids, C = _ivf_centroids(emb, n_centroids=n_cells)
-    cells = emb.select(
-        "vec_id", "embedding",
-        cell_argmax_udf(cids, C)(F.col("embedding")).alias("cid"),
-    )
-    # pre-cap population as a K-CELLS-sized aggregate broadcast back
-    # (an unordered count window above the row_number would block the
-    # two-phase WindowGroupLimit pushdown the R5 lint pins; partial
-    # aggregation collapses each partition to <= k rows pre-exchange)
-    counts = cells.groupBy("cid").agg(
-        F.count(F.lit(1)).cast("long").alias("cell_n")
-    )
-    rn = F.row_number().over(Window.partitionBy("cid").orderBy("vec_id"))
-    capped = (
-        cells.withColumn("rn", rn)
-        .filter(F.col("rn") <= cap)
-        .join(F.broadcast(counts), "cid")
-    )
-    a = capped.select(
-        "cid", F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("emb_a"), "cell_n",
-    )
-    b = capped.select(
-        "cid", F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("emb_b"),
-    )
-    from ..operators.similarity import pairwise_cosine_udf
-
-    # Arrow pairwise verify (r16): one vectorized batch, bit-identical
-    # to the old interpreted cosine folds; projected once, then
-    # filtered/rounded on the column (a filter(cs)+select(round6(cs))
-    # pair would run the scorer twice)
-    cs = pairwise_cosine_udf()(F.col("emb_a"), F.col("emb_b"))
-    return (
-        a.join(b, "cid")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("_cs", cs)
-        .filter(F.col("_cs") >= SEM_DUP_THRESHOLD)
-        .select(
-            "cid", "vec_a", "vec_b",
-            round6(F.col("_cs")).alias("cosine_sim"),
-            "cell_n", (F.col("cell_n") > cap).alias("truncated"),
-        )
-        .orderBy("vec_a", "vec_b")
-    )
-
-
-@query("dedup_semantic_cells", DEDUP_SEMANTIC_CELLS_ORACLE, local=True)
-def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: semantic near-dup pairs via k-means cell bucketing —
-    assign every embedding to its nearest coarse centroid (the
-    shuffle-free Arrow argmax scorer shared with the IVF retrieval
-    path — r16, ex the `_ivf_scored` broadcast-row HOF stage), cap each cell at SEM_CELL_CAP (128) members
-    deterministically, then emit within-cell pairs with exact cosine
-    >= SEM_DUP_THRESHOLD (0.4) plus per-cell cap-slack accounting
-    (cell_n, truncated). Complements the banded sign-LSH pass
-    (`sim_near_dup_pairs`): LSH candidates are recall-bounded by random
-    hyperplanes, cluster bucketing by the learned partition — the
-    published SemDeDup result is that cluster-local comparison finds
-    the semantic duplicates LSH misses at equal cost. Downstream, the
-    pairs feed the same `connected_components_auto` -> representative
-    anti-join as the MinHash stack.
-
-    Cell count (r9, VERDICT r8 item 3): k = max(SEM_MIN_CELLS,
-    isqrt(n)) — the paper's k ~ sqrt(n) regime, so the EXPECTED cell
-    population is ~sqrt(n) and the 128-cap stays slack as the corpus
-    grows. The previous fixed 16 cells had the cap BINDING at sf0.1
-    (~312 members/cell): cost stayed bounded but candidate PAIRS were
-    silently dropped — a recall cliff every further decade. n comes
-    from one COUNT action (scalar result, R4-bounded like the
-    iterative kernels' .first() probes).
-
-    At 100 TB: assignment is a narrow map (centroids ride one
-    broadcast row); the only shuffle is the cell-keyed self-join of
-    (vec_id, cid, embedding) projections; pair expansion is bounded
-    O(cap²) per cell with truncation deterministic (lowest vec_ids
-    kept) AND accounted (a truncated=true row marks the cell's pair
-    list as a sample) — a mega-cluster costs 128 rows, never |cell|²."""
-    import math
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_cells = max(SEM_MIN_CELLS, math.isqrt(emb.count()))
-    return semantic_cell_pairs(emb, n_cells)
-
-
-# ---------------------------------------------------------------------------
 # emb_random_projection: Johnson-Lindenstrauss sign projection 64 -> 16.
 # ---------------------------------------------------------------------------
 
@@ -1388,479 +1069,6 @@ def jl_projection_rows(emb: DataFrame, dim: int = JL_DIM) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sim_topk_jl_rerank: JL-shortlist retrieval — the third pruning
-# composition next to IVF and IVF+PQ.
-# ---------------------------------------------------------------------------
-
-JL_RETRIEVAL_DIM = 32   # retrieval wants finer geometry than the 16-d
-                        # compression default (measured recall below)
-JL_SHORTLIST = 128
-
-SIM_TOPK_JL_RERANK_ORACLE = f"""
-    WITH e AS (
-        SELECT vec_id, u.i - 1 AS pos,
-               CAST(SIGN(CAST(embedding[u.i] AS DOUBLE))
-                    * FLOOR(ABS(CAST(embedding[u.i] AS DOUBLE))
-                            * 1000000 + 0.5e0) AS BIGINT) AS micro
-        FROM embeddings,
-             (SELECT unnest(generate_series(1, 64)) AS i) u
-        WHERE len(embedding) = 64
-    ),
-    proj AS (
-        SELECT e.vec_id, j.j,
-               CAST(SUM(e.micro
-                        * {_jl_sign_sql('e.pos', 'j.j', spark_side=False,
-                                        dim=JL_RETRIEVAL_DIM)})
-                    AS BIGINT) AS p
-        FROM e, (SELECT unnest(generate_series(0, {JL_RETRIEVAL_DIM - 1}))
-                 AS j) j
-        GROUP BY e.vec_id, j.j
-    ),
-    qp AS (SELECT j, p FROM proj WHERE vec_id = {QUERY_VEC_ID}),
-    dist AS (
-        SELECT proj.vec_id,
-               CAST(SUM((proj.p - qp.p) * (proj.p - qp.p)) AS BIGINT) AS d2
-        FROM proj JOIN qp ON proj.j = qp.j
-        WHERE proj.vec_id <> {QUERY_VEC_ID}
-        GROUP BY proj.vec_id
-    ),
-    short AS (
-        SELECT vec_id, d2 FROM dist ORDER BY d2, vec_id
-        LIMIT {JL_SHORTLIST}
-    ),
-    q AS (SELECT embedding AS query_vec FROM embeddings
-          WHERE vec_id = {QUERY_VEC_ID})
-    SELECT s.vec_id, e.label,
-           FLOOR(({_COSINE_SQL.format(a='e.embedding', b='q.query_vec')})
-                 * 1000000 + 0.5) / 1000000 AS cosine_sim
-    FROM short s JOIN embeddings e ON s.vec_id = e.vec_id CROSS JOIN q
-    ORDER BY cosine_sim DESC, s.vec_id
-    LIMIT {TOP_K}
-    """
-
-
-@query("sim_topk_jl_rerank", SIM_TOPK_JL_RERANK_ORACLE, local=True)
-def sim_topk_jl_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JL-shortlist retrieval: project corpus + query to
-    JL_RETRIEVAL_DIM (32) exact-integer coordinates
-    (jl_projection_rows — the hash-derived ±1 matrix, never
-    materialized), take the JL_SHORTLIST (128) nearest candidates by
-    EXACT integer projected L2, then exact-cosine re-rank the raw
-    vectors to TOP_K. d'=32 is the measured knee on the fixtures
-    (random near-equidistant vectors, the adversarial case for any
-    pruner): recall@10 vs brute force is 0.8/0.6 at sf0.001/0.01 with
-    (32, 128) vs 0.3/0.5 with the 16-d compression default —
-    comparable to the IVFPQ composition's measured 1.0/0.8/0.6. The third pruning composition in this
-    package next to IVF (coarse cells) and IVF+PQ (cells + ADC codes):
-    JL trades the train-a-codebook step for a data-independent
-    projection — nothing to fit, nothing to drift, the right first cut
-    when the corpus distribution shifts faster than codebooks retrain.
-
-    Unlike the PQ compositions (recall-measured), EVERY stage here is
-    integer- or correctly-rounded-exact, so the WHOLE retrieval is
-    hash-attested against DuckDB — shortlist membership included.
-
-    Scale shape: the projection is one map-side-combinable vec_id
-    aggregation (32 longs per vector — 2x narrower than the raw
-    vectors on any downstream exchange); distances join the 32-row
-    broadcast query projection (shuffle-free scoring); the shortlist
-    is TakeOrderedAndProject; the re-rank joins the 128-row broadcast
-    shortlist against the vector store and touches 128 raw vectors
-    total. max|p| <= 64e6, so the squared-distance sum is <= ~1e18 —
-    inside int64 on both engines."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    proj = jl_projection_rows(
-        emb, dim=JL_RETRIEVAL_DIM
-    ).localCheckpoint()  # query + corpus reads
-    qp = proj.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        "j", F.col("proj_micro").alias("qp")
-    )
-    dist = (
-        proj.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(qp), "j")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                (F.col("proj_micro") - F.col("qp"))
-                * (F.col("proj_micro") - F.col("qp"))
-            ).cast("long").alias("d2")
-        )
-    )
-    short = dist.orderBy("d2", "vec_id").limit(JL_SHORTLIST)
-    q = _query_vector(spark, sf_dir)
-    return (
-        emb.join(F.broadcast(short.select("vec_id")), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            round6(cosine(F.col("embedding"), F.col("query_vec")))
-            .alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
-
-
-# ---------------------------------------------------------------------------
-# emb_int8_quantization: scalar int8 embedding-compression audit.
-# ---------------------------------------------------------------------------
-
-EMB_INT8_QUANTIZATION_ORACLE = f"""
-    WITH e AS (
-        SELECT vec_id, u.i AS pos1,
-               CAST(embedding[u.i] AS DOUBLE) AS x
-        FROM embeddings,
-             (SELECT unnest(generate_series(1, {{dim}})) AS i) u
-        WHERE len(embedding) = {{dim}}
-    ),
-    s AS (SELECT vec_id, MAX(ABS(x)) AS s FROM e GROUP BY vec_id),
-    q AS (
-        SELECT e.vec_id, e.pos1, e.x, s.s,
-               CASE WHEN s.s = 0 THEN 0
-                    ELSE CAST(SIGN(e.x)
-                              * FLOOR(ABS(e.x) * 127 / s.s + 0.5e0)
-                              AS BIGINT)
-               END AS q
-        FROM e JOIN s USING (vec_id)
-    )
-    SELECT vec_id,
-           CAST(FLOOR(MAX(s) * 1000000 + 0.5e0) AS BIGINT) AS scale_micro,
-           CAST(SUM(q) AS BIGINT) AS code_sum,
-           CAST(SUM(pos1 * q) AS BIGINT) AS code_checksum,
-           CAST(COUNT(CASE WHEN ABS(q) = 127 THEN 1 END) AS BIGINT)
-               AS n_maxed,
-           CAST(SUM(CAST(FLOOR(ABS(x - q * s / 127) * 1000000000 + 0.5e0)
-                         AS BIGINT)) AS BIGINT) AS err_nano_sum
-    FROM q
-    GROUP BY vec_id
-    ORDER BY vec_id
-    """.format(dim=64)
-
-
-@query("emb_int8_quantization", EMB_INT8_QUANTIZATION_ORACLE, local=True)
-def emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar int8 quantization audit over the embedding corpus — the
-    4x-compression step (float32 -> int8, per-vector absmax scale)
-    every large vector store applies before indexing, with the
-    round-trip accounting that tells you whether it was safe: per
-    vector the quantization scale, an order-sensitive code checksum
-    (Σ (i+1)·q_i — detects any permutation/corruption of the code
-    bytes, not just value drift), the count of saturated codes, and
-    the total absolute reconstruction error in exact nano units.
-
-    Exactness: q_i = SIGN(x)·FLOOR(|x|·127/s + 0.5) is two correctly-
-    rounded IEEE ops and a FLOOR — bit-identical cross-engine; every
-    reported statistic is then integer arithmetic over the q_i (the
-    reconstruction term FLOOR(|x - q·s/127|·1e9 + 0.5) quantizes each
-    per-element error BEFORE the sum, so summation order is
-    irrelevant). Zero-vector guard: s = 0 -> all codes 0.
-
-    Scale shape: ENTIRELY narrow — scale, codes, checksums, and error
-    all fold per row with array higher-order functions (no explode, no
-    shuffle of any kind before the presentation sort); at 100 TB this
-    is a map-only pass at parquet-scan speed. The oracle formulation
-    unnests (the single-node spelling); Spark never does."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return int8_quantization_frame(emb, dim=64)
-
-
-def int8_quantization_frame(emb: DataFrame, dim: int) -> DataFrame:
-    """Core of emb_int8_quantization over any (vec_id, embedding)
-    frame — split out so planted hand-vector / zero-vector tests can
-    pin the code and error arithmetic directly.
-
-    Evaluation discipline: xd / s / q are materialized as REAL columns
-    in staged projections instead of inlined expression trees — four
-    output aggregates referencing an inlined q would each re-evaluate
-    the whole when+signum+floor chain per element (and s's array_max
-    inside every lambda step), a ~dim× constant-factor blowup measured
-    at 3.4× wall on the fixture. CollapseProject keeps the stages
-    separate because q/s are referenced more than once and are
-    non-cheap, so each computes exactly once per row."""
-    zero = F.lit(0).cast("long")
-    staged = (
-        emb.filter(F.size("embedding") == dim)
-        .select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda v: v.cast("double"))
-            .alias("xd"),
-        )
-        .select(
-            "vec_id",
-            "xd",
-            F.array_max(F.transform("xd", lambda v: F.abs(v))).alias("s"),
-        )
-        .select(
-            "vec_id",
-            "xd",
-            "s",
-            F.transform(
-                "xd",
-                lambda v: F.when(
-                    F.col("s") == 0, zero
-                ).otherwise(
-                    (
-                        F.signum(v)
-                        * F.floor(F.abs(v) * 127 / F.col("s") + F.lit(0.5))
-                    ).cast("long")
-                ),
-            ).alias("q"),
-        )
-    )
-    s = F.col("s")
-    code_sum = F.aggregate(F.col("q"), zero, lambda acc, x: acc + x)
-    checksum = F.aggregate(
-        F.transform("q", lambda x, i: (i + 1) * x),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    n_maxed = F.aggregate(
-        F.transform(
-            "q",
-            lambda x: F.when(F.abs(x) == 127, F.lit(1).cast("long"))
-            .otherwise(zero),
-        ),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    err_sum = F.aggregate(
-        F.zip_with(
-            "xd",
-            "q",
-            lambda x, qq: F.floor(
-                F.abs(x - qq * s / 127) * 1000000000 + F.lit(0.5)
-            ).cast("long"),
-        ),
-        zero,
-        lambda acc, x: acc + x,
-    )
-    return staged.select(
-        "vec_id",
-        F.floor(s * 1000000 + F.lit(0.5)).cast("long").alias("scale_micro"),
-        code_sum.alias("code_sum"),
-        checksum.alias("code_checksum"),
-        n_maxed.alias("n_maxed"),
-        err_sum.alias("err_nano_sum"),
-    ).orderBy("vec_id")
-
-
-# ---------------------------------------------------------------------------
-# emb_kmeans_lloyd: fully-distributed exact-integer Lloyd k-means.
-# ---------------------------------------------------------------------------
-
-K_CLUSTERS = 8     # Lloyd cluster count (first-K deterministic seeding)
-LLOYD_ROUNDS = 2   # unrolled assign->update cycles before the report
-
-
-def _lloyd_oracle() -> str:
-    """Chained-CTE DuckDB twin of emb_kmeans_lloyd: the same
-    LLOYD_ROUNDS assign->update cycles unrolled as (a{r}, m{r}, cn{r},
-    c{r}) CTE blocks — the BPE-merges / pagerank unrolling idiom."""
-    k, dim = K_CLUSTERS, 64
-    blocks = [f"""
-    pts AS (
-        SELECT vec_id, u.i - 1 AS pos,
-               CAST(SIGN(CAST(embedding[u.i] AS DOUBLE))
-                    * FLOOR(ABS(CAST(embedding[u.i] AS DOUBLE))
-                            * 1000000 + 0.5e0) AS BIGINT) AS v
-        FROM embeddings,
-             (SELECT unnest(generate_series(1, {dim})) AS i) u
-        WHERE len(embedding) = {dim}
-    ),
-    c0 AS (SELECT vec_id AS cid, pos, v AS c FROM pts WHERE vec_id < {k})"""]
-    prev = "c0"
-    for r in range(1, LLOYD_ROUNDS + 1):
-        blocks.append(f"""
-    a{r} AS (
-        SELECT p.vec_id, c.cid,
-               CAST(SUM((p.v - c.c) * (p.v - c.c)) AS BIGINT) AS d
-        FROM pts p JOIN {prev} c ON p.pos = c.pos
-        GROUP BY p.vec_id, c.cid
-    ),
-    m{r} AS (
-        SELECT vec_id, cid FROM (
-            SELECT vec_id, cid,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d, cid
-                   ) AS rn
-            FROM a{r}
-        ) WHERE rn = 1
-    ),
-    cn{r} AS (
-        SELECT m.cid, p.pos,
-               CAST(SUM(p.v) // COUNT(*) AS BIGINT) AS c
-        FROM m{r} m JOIN pts p USING (vec_id)
-        GROUP BY m.cid, p.pos
-    ),
-    c{r} AS (
-        SELECT o.cid, o.pos, COALESCE(n.c, o.c) AS c
-        FROM {prev} o LEFT JOIN cn{r} n
-          ON o.cid = n.cid AND o.pos = n.pos
-    )""")
-        prev = f"c{r}"
-    return f"""
-    WITH {','.join(blocks)},
-    af AS (
-        SELECT p.vec_id, c.cid,
-               CAST(SUM((p.v - c.c) * (p.v - c.c)) AS BIGINT) AS d
-        FROM pts p JOIN {prev} c ON p.pos = c.pos
-        GROUP BY p.vec_id, c.cid
-    ),
-    mf AS (
-        SELECT vec_id, cid, d FROM (
-            SELECT vec_id, cid, d,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY vec_id ORDER BY d, cid
-                   ) AS rn
-            FROM af
-        ) WHERE rn = 1
-    ),
-    sums AS (
-        SELECT cid,
-               CAST(COUNT(*) AS BIGINT) AS n_members,
-               CAST(SUM(d // 1000000) AS BIGINT) AS inertia_div1e6
-        FROM mf GROUP BY cid
-    ),
-    chk AS (
-        SELECT cid, CAST(SUM((pos + 1) * c) AS BIGINT) AS centroid_checksum
-        FROM {prev} GROUP BY cid
-    )
-    SELECT s.cid, s.n_members, s.inertia_div1e6, k.centroid_checksum
-    FROM sums s JOIN chk k USING (cid)
-    ORDER BY s.cid
-    """
-
-
-EMB_KMEANS_LLOYD_ORACLE = _lloyd_oracle()
-
-
-@query("emb_kmeans_lloyd", EMB_KMEANS_LLOYD_ORACLE, local=True)
-def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fully-DISTRIBUTED Lloyd k-means over the embedding corpus,
-    LLOYD_ROUNDS (2) unrolled assign→update cycles + a final
-    assignment, every number an exact integer so the chained-CTE
-    DuckDB twin is hash-exact — the full-corpus training loop
-    complementing `kmeans_centroids`' bounded-sample driver path (the
-    IVF coarse quantizer trains on a collected sample; THIS is the
-    shape you run when the model must see every row).
-
-    Exactness: elements micro-quantized once (the emb_label_centroids
-    idiom); assignment argmin on exact squared-L2 BIGINTs with a
-    (d, cid) tie order; centroid update SUM DIV count — both engines
-    truncate integer division toward zero (verified on negatives);
-    empty clusters keep their previous centroid (COALESCE in both
-    formulations). Overflow envelope: per-pair d ≤ 64·(2e6)² ≈ 2.6e14
-    ≪ 2^63; the reported inertia pre-scales each vector's d DIV 1e6
-    BEFORE summing (order-free), keeping the sum in-range to ~3e10
-    vectors.
-
-    Scale shape per round: assignment is NARROW — the K×64 centroid
-    table folds to ONE broadcast row and each vector scans it with
-    array HOFs (no K-way row expansion, no shuffle); the update is a
-    posexplode keyed (cid, pos) whose map-side combine collapses every
-    task to ≤ K·64 partial rows — the only thing that crosses the wire
-    is K·64·#tasks partials, independent of corpus size. The rounds
-    are a STATIC unrolled plan (no driver-side convergence loop —
-    fixed-round Lloyd, the pagerank/BPE discipline)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_lloyd_frame(emb, dim=64)
-
-
-def kmeans_lloyd_frame(
-    emb: DataFrame,
-    dim: int,
-    k: int = K_CLUSTERS,
-    rounds: int = LLOYD_ROUNDS,
-) -> DataFrame:
-    """Core of emb_kmeans_lloyd over any (vec_id, embedding) frame —
-    split out so planted two-cluster and duplicate-seed (empty-cluster
-    COALESCE) tests can drive the Lloyd dynamics directly."""
-    micro = lambda v: (  # noqa: E731
-        F.signum(v.cast("double"))
-        * F.floor(F.abs(v.cast("double")) * 1000000 + F.lit(0.5))
-    ).cast("long")
-    pts = emb.filter(F.size("embedding") == dim).select(
-        "vec_id",
-        F.transform("embedding", lambda v: micro(v)).alias("m"),
-    )
-    # centroid table (cid, pos, c) -> one-row broadcast of
-    # array<struct<cid, cm: array<long>>> sorted by cid
-    cent_tbl = pts.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"),
-        F.posexplode("m").alias("pos", "c"),
-    )
-
-    def cents_row(tbl: DataFrame) -> DataFrame:
-        per_cid = tbl.groupBy("cid").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("cm")
-        )
-        return per_cid.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "cm"))).alias("cents")
-        )
-
-    def assign(points: DataFrame, crow: DataFrame) -> DataFrame:
-        dist_structs = F.transform(
-            F.col("cents"),
-            lambda cc: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        cc["cm"],
-                        F.col("m"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                cc["cid"].alias("cid"),
-            ),
-        )
-        return points.crossJoin(F.broadcast(crow)).select(
-            "vec_id", "m", F.array_min(dist_structs).alias("best")
-        ).select(
-            "vec_id",
-            "m",
-            F.col("best.cid").alias("cid"),
-            F.col("best.d").alias("d"),
-        )
-
-    for _ in range(rounds):
-        assigned = assign(pts, cents_row(cent_tbl))
-        newc = (
-            assigned.select("cid", F.posexplode("m").alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(F.expr("sum(v) DIV count(*)").cast("long").alias("c"))
-        )
-        cent_tbl = (
-            cent_tbl.alias("o")
-            .join(newc.alias("n"), ["cid", "pos"], "left")
-            .select(
-                "cid",
-                "pos",
-                F.coalesce(F.col("n.c"), F.col("o.c")).alias("c"),
-            )
-        )
-
-    final = assign(pts, cents_row(cent_tbl))
-    sums = final.groupBy("cid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members"),
-        F.sum(F.expr("d DIV 1000000")).cast("long").alias("inertia_div1e6"),
-    )
-    chk = cent_tbl.groupBy("cid").agg(
-        F.sum((F.col("pos") + 1) * F.col("c")).cast("long")
-        .alias("centroid_checksum")
-    )
-    return (
-        sums.join(F.broadcast(chk), "cid")
-        .select("cid", "n_members", "inertia_div1e6", "centroid_checksum")
-        .orderBy("cid")
-    )
-
-
-# ---------------------------------------------------------------------------
 # emb_rank_normalize: per-dimension rank (quantile) normalization of
 # the embedding matrix.
 # ---------------------------------------------------------------------------
@@ -1944,146 +1152,4 @@ def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("checksum_weighted"),
         )
         .orderBy("vec_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# emb_pca_power_iteration: top principal direction via two distributed
-# power-iteration rounds.
-# ---------------------------------------------------------------------------
-
-PCA_ROUNDS = 2        # THE CONTRACT: round-2 accounting state
-PCA_V_SCALE = 1000    # renormalized integer coordinate scale per round
-PCA_D_SHRINK = 1_000_000  # dot products truncate by 1e6 before re-multiply
-
-
-def _pca_round_cte(r: int) -> str:
-    p = r - 1
-    return f"""
-    d{r} AS (
-        SELECT e.vec_id,
-               CAST(SUM(e.micro * v{p}.v) AS BIGINT) // {PCA_D_SHRINK} AS d
-        FROM e JOIN v{p} ON e.pos = v{p}.pos
-        GROUP BY e.vec_id
-    ),
-    r{r} AS (
-        SELECT e.pos, CAST(SUM(e.micro * d{r}.d) AS BIGINT) AS raw
-        FROM e JOIN d{r} ON e.vec_id = d{r}.vec_id
-        GROUP BY e.pos
-    ),
-    m{r} AS (SELECT MAX(ABS(raw)) AS mx FROM r{r}),
-    v{r} AS (
-        SELECT pos,
-               COALESCE((raw * {PCA_V_SCALE}) // NULLIF(mx, 0), 0) AS v
-        FROM r{r} CROSS JOIN m{r}
-    )"""
-
-
-EMB_PCA_POWER_ITERATION_ORACLE = (
-    f"""
-    WITH raw_e AS (
-        SELECT vec_id, u.i - 1 AS pos,
-               CAST(embedding[u.i] AS DOUBLE) AS val
-        FROM embeddings,
-             (SELECT unnest(generate_series(1, {EMB_DIM})) AS i) u
-        WHERE len(embedding) = {EMB_DIM}
-    ),
-    e AS (
-        SELECT vec_id, pos,
-               CAST(SIGN(val) * FLOOR(ABS(val) * 1000000 + 0.5e0) AS BIGINT)
-                   AS micro
-        FROM raw_e
-    ),
-    v0 AS (SELECT unnest(generate_series(0, {EMB_DIM - 1})) AS pos,
-                  {PCA_V_SCALE} AS v),"""
-    + ",".join(_pca_round_cte(r) for r in range(1, PCA_ROUNDS + 1))
-    + f"""
-    SELECT v1.pos AS pos, CAST(v1.v AS BIGINT) AS v1,
-           CAST(v{PCA_ROUNDS}.v AS BIGINT) AS v2
-    FROM v1 JOIN v{PCA_ROUNDS} ON v1.pos = v{PCA_ROUNDS}.pos
-    ORDER BY pos
-    """
-)
-
-
-@query("emb_pca_power_iteration", EMB_PCA_POWER_ITERATION_ORACLE, local=True)
-def emb_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top PRINCIPAL DIRECTION of the embedding cloud via two
-    distributed POWER-ITERATION rounds on the (uncentered) second
-    moment: v' ∝ Σᵢ xᵢ (xᵢ·v) — the matrix-free formulation that never
-    materializes the 64x64 Gram matrix, just two corpus passes per
-    round (the streaming-PCA / randomized-SVD building block; centering
-    is the documented upgrade — subtract emb_label_centroids' global
-    mean first, identical plan shape). ROUNDS=2 IS THE CONTRACT (the
-    pagerank/HITS/Lloyd precedent): the output is the round-1 and
-    round-2 renormalized integer coordinate vectors, attested
-    bit-for-bit by a DuckDB unrolled-CTE twin, and v2 != v1 on the
-    fixtures (the iteration demonstrably moves; planted-dominant-
-    direction recovery pinned in tests/test_similarity.py).
-
-    All-INT64 by construction: elements quantize once to micro ints;
-    each round's dot products truncate by 1e6 (deterministic,
-    identical on both engines — power iteration is robust to this
-    fixed-point shrink) so the re-multiply sum stays ≤ ~n·3e6·2e5;
-    renormalization divides by the max |coordinate| back onto a ±1000
-    integer scale (truncate-toward-zero DIV on both engines, zero-max
-    guarded). Beyond ~1e9 vectors the re-multiply sum outgrows int64 —
-    the standard DECIMAL/HUGEINT upgrade, noted not needed at fixture
-    SFs.
-
-    Scale shape: per round, ONE broadcast of the 64-row v table onto
-    the melted (vec_id, pos, micro) frame + a vec-keyed combinable
-    SUM, then ONE vec-keyed join back + a pos-keyed combinable SUM
-    (64 output rows); the max is a 64-row fold. Nothing wider than
-    (vec_id, long) crosses an exchange; round depth is fixed."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    val = F.col("val").cast("double")
-    micro = (
-        F.signum(val) * F.floor(F.abs(val) * F.lit(1000000.0) + F.lit(0.5))
-    ).cast("long")
-    e = (
-        emb.filter(F.size("embedding") == EMB_DIM)
-        .select("vec_id", F.posexplode("embedding").alias("pos", "val"))
-        .select("vec_id", "pos", micro.alias("micro"))
-        .localCheckpoint()  # feeds two joins per round
-    )
-    v = spark.range(EMB_DIM).select(
-        F.col("id").cast("int").alias("pos"),
-        F.lit(PCA_V_SCALE).cast("long").alias("v"),
-    )
-    rounds = []
-    for _ in range(PCA_ROUNDS):
-        d = (
-            e.join(F.broadcast(v), "pos")
-            .groupBy("vec_id")
-            .agg(
-                (F.sum(F.col("micro") * F.col("v")).cast("long"))
-                .alias("_dd")
-            )
-            .select(
-                "vec_id", F.expr(f"_dd DIV {PCA_D_SHRINK}").alias("d")
-            )
-        )
-        raw = (
-            e.join(d, "vec_id")
-            .groupBy("pos")
-            .agg(F.sum(F.col("micro") * F.col("d")).cast("long").alias("raw"))
-        )
-        mx = raw.agg(F.max(F.abs(F.col("raw"))).alias("mx"))
-        v = (
-            raw.crossJoin(F.broadcast(mx))
-            .select(
-                "pos",
-                F.coalesce(
-                    F.expr(f"(raw * {PCA_V_SCALE}) DIV NULLIF(mx, 0)"),
-                    F.lit(0),
-                ).cast("long").alias("v"),
-            )
-        )
-        rounds.append(v)
-    return (
-        rounds[0].select("pos", F.col("v").alias("v1"))
-        .join(rounds[-1].select("pos", F.col("v").alias("v2")), "pos")
-        .select(F.col("pos").cast("long").alias("pos"), "v1", "v2")
-        .orderBy("pos")
     )

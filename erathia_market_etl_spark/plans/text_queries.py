@@ -1559,132 +1559,6 @@ def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_cdc_chunks: content-defined chunking accounting (Muthitacharoen
-# et al. SOSP'01, LBFS — the variable-size chunker under rsync-style
-# storage dedup, applied to training text for fragment-level duplicate
-# discovery). Local-only: its cross-engine value is boundary-placement
-# attestation, which the LOCALCHECK sweep's identical compare gives it;
-# the registry's duplicate-fragment evidence is carried by the
-# registered span-removal query.
-# ---------------------------------------------------------------------------
-
-# DuckDB twin of the CDC gram hash = the winnowing polynomial (same
-# base/k — operators.text is the single source of truth); a cut falls
-# AFTER gram start i wherever h % CDC_DIV == 0, excluding a cut flush
-# at the text end (it would emit an empty chunk).
-TEXT_CDC_CHUNKS_ORACLE = f"""
-    WITH grams AS (
-        SELECT doc_id, i, length(text) AS n, {_WINNOW_GRAM_HASH_SQL} AS h
-        FROM documents,
-             UNNEST(generate_series(1, length(text) - {TX.CDC_K - 1})) AS u(i)
-        WHERE length(text) >= {TX.CDC_K}
-    ),
-    cuts AS (
-        SELECT doc_id, list_sort(list(i + {TX.CDC_K})) AS cs
-        FROM grams
-        WHERE h % {TX.CDC_DIV} = 0 AND i + {TX.CDC_K} <= n
-        GROUP BY doc_id
-    ),
-    bounds AS (
-        SELECT d.doc_id, d.text,
-               list_concat(
-                   list_concat([CAST(1 AS BIGINT)], COALESCE(cs, [])),
-                   [CAST(length(d.text) + 1 AS BIGINT)]) AS bs
-        FROM documents d LEFT JOIN cuts USING (doc_id)
-        -- NULL-text symmetry (r14 ADVICE): the Spark side's
-        -- cdc_chunks(None) returns [] so a NULL-text doc emits no
-        -- rows; without this filter the oracle would keep the doc
-        -- with NULL aggregates — a latent cross-engine divergence the
-        -- current fixtures never exercise
-        WHERE d.text IS NOT NULL
-    ),
-    chunks AS (
-        SELECT doc_id,
-               substr(text, CAST(bs[j] AS INT),
-                      CAST(bs[j + 1] - bs[j] AS INT)) AS chunk
-        FROM bounds, UNNEST(generate_series(1, len(bs) - 1)) AS v(j)
-    ),
-    occ AS (
-        SELECT doc_id, chunk, COUNT(*) AS n_occ
-        FROM chunks GROUP BY doc_id, chunk
-    ),
-    wd AS (
-        SELECT doc_id, chunk, n_occ,
-               COUNT(*) OVER (PARTITION BY chunk) AS n_docs
-        FROM occ
-    )
-    SELECT doc_id,
-           CAST(SUM(n_occ) AS BIGINT) AS n_chunks,
-           CAST(SUM(length(chunk) * n_occ) AS BIGINT) AS n_chars,
-           CAST(SUM(CASE WHEN n_docs >= 2 THEN n_occ ELSE 0 END)
-                AS BIGINT) AS n_dup_chunks,
-           CAST(SUM(CASE WHEN n_docs >= 2 THEN n_occ ELSE 0 END)
-                * 1000000 // SUM(n_occ) AS BIGINT) AS dup_chunk_ppm
-    FROM wd GROUP BY doc_id
-    ORDER BY doc_id
-    """
-
-
-@query("text_cdc_chunks", TEXT_CDC_CHUNKS_ORACLE, local=True)
-def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking + cross-document chunk-dedup
-    accounting: each document is cut into variable-size chunks wherever
-    the winnowing rolling hash of the preceding CDC_K (8)-char gram is
-    0 mod CDC_DIV (32 — the expected chunk length), and a chunk is
-    DUPLICATED when its exact text appears in >= 2 distinct documents.
-    Because boundaries depend only on local content, an edit re-aligns
-    within ~one chunk — the property that makes CDC the storage-dedup
-    standard and a fragment-level near-dup signal fixed-size chunking
-    (text_chunk_overlap) structurally cannot give: insert one token at
-    a document's head and every fixed chunk shifts, while the CDC
-    chunks after the first cut are byte-identical (pinned).
-
-    Scale shape: chunking is the winnowing mapInPandas plumbing
-    (fan_out raw-text scan, Arrow batches, zero shuffles — chunk
-    strings are born in the map stage and hashed to int64 xxhash64
-    before any exchange, the text_duplicate_spans trick: every output
-    is a count, so each engine may key dup-detection on its own hash
-    of the same chunk text). Then the bm25 window-over-subtree
-    pattern: one (chunk-hash, doc) combine-collapsed aggregate, the
-    documents-per-chunk count as a window over that same collapsed
-    table, one doc-keyed rollup. The DuckDB twin recomputes the cut
-    positions from the SAME polynomial (HUGEINT + one final mod 2^64),
-    so the compare attests boundary placement itself, not just the
-    counting."""
-    from pyspark.sql import Window
-
-    from ..operators.text import cdc_chunk_frame
-
-    docs = load_table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_frame(docs, "text", "doc_id").select(
-        F.col("doc").alias("doc_id"),
-        F.xxhash64("chunk").alias("h"),
-        F.length("chunk").alias("clen"),
-    )
-    occ = chunks.groupBy("h", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_occ"),
-        F.sum("clen").alias("len_sum"),
-    )
-    wd = occ.withColumn(
-        "n_docs", F.count(F.lit(1)).over(Window.partitionBy("h"))
-    )
-    return (
-        wd.groupBy("doc_id")
-        .agg(
-            F.sum("n_occ").cast("long").alias("n_chunks"),
-            F.sum("len_sum").cast("long").alias("n_chars"),
-            F.sum(F.when(F.col("n_docs") >= 2, F.col("n_occ")).otherwise(0))
-            .cast("long").alias("n_dup_chunks"),
-        )
-        .withColumn(
-            "dup_chunk_ppm",
-            F.expr("CAST(n_dup_chunks * 1000000 DIV n_chunks AS BIGINT)"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # text_html_extract: HTML boilerplate/markup extraction (r16, VERDICT
 # r15 item 4 — the last big absent LLM-pipeline stage: real pretraining
 # corpora start as crawled HTML, and tags→text + nav/footer/script
@@ -1839,286 +1713,6 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_html_links: the link-census half of the markup family (r16) —
-# href harvesting, internal/external classification, host extraction:
-# the crawl-graph stage (outbound host adjacency feeding host-level
-# PageRank / spam screens) that sits beside boilerplate extraction in
-# every web-corpus pipeline. Same evidence pattern as text_html_extract:
-# deterministic synthesis, REAL extraction, arithmetic oracle.
-# ---------------------------------------------------------------------------
-
-TEXT_HTML_LINKS_ORACLE = """
-    WITH hs AS (
-        SELECT doc_id, (doc_id * (j + 1)) % 5 AS h
-        FROM documents, (VALUES (0), (1), (2), (3)) js(j)
-    ),
-    agg AS (
-        SELECT doc_id,
-               list_sort(list_distinct(
-                   list('site' || CAST(h AS VARCHAR) || '.example.com')
-               )) AS hosts
-        FROM hs GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST(8 AS INT) AS n_links,
-           CAST(4 AS INT) AS n_internal,
-           CAST(4 AS INT) AS n_external,
-           CAST(len(hosts) AS INT) AS n_hosts,
-           array_to_string(hosts, ',') AS host_list
-    FROM agg ORDER BY doc_id
-    """
-
-
-@query("text_html_links", TEXT_HTML_LINKS_ORACLE, local=True)
-def text_html_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link census under driver-style check: each documents row
-    synthesizes a page whose nav carries 4 EXTERNAL anchors with hosts
-    site((id·(j+1)) mod 5).example.com — when id ≡ 0 (mod 5) all four
-    collapse to site0 (n_hosts = 1), otherwise id is invertible mod 5
-    and all four are distinct (n_hosts = 4), so the distinct-host
-    logic is exercised on both branches — plus 4 INTERNAL anchors
-    (three paragraph links and /about in the footer), one hrefless
-    named anchor that must NOT count, and a <script> decoy containing
-    a fake '<a href="https://evil.example.com/x">' string literal that
-    noise-stripping must remove before harvesting. The oracle predicts
-    the census and the sorted host adjacency from the same modular
-    arithmetic.
-
-    Scale shape: like text_html_extract — one chain of regex/array
-    expressions (operators/html.py link_stats), map-only, the output
-    ORDER BY is the only exchange."""
-    from ..operators.html import link_stats
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = F.col("doc_id")
-    ws = F.split(F.col("text"), " ")
-    n = F.size(ws)
-
-    def word(pos):
-        return F.element_at(ws, ((pos % n) + 1).cast("int"))
-
-    nav = F.concat(
-        F.lit("<nav>"),
-        F.concat_ws(
-            " ",
-            *[
-                F.concat(
-                    F.lit('<a href="https://site'),
-                    ((d * (j + 1)) % 5).cast("string"),
-                    F.lit(f'.example.com/{j}">'),
-                    word(d * 7 + j * 3),
-                    F.lit("</a>"),
-                )
-                for j in range(4)
-            ],
-        ),
-        F.lit("</nav>"),
-    )
-    h1 = F.concat(
-        F.lit('<h1><a name="top">doc '), d.cast("string"), F.lit("</a></h1>")
-    )
-
-    def para(k: int):
-        L = (F.lit(3) + (d + F.lit(k)) % 5).cast("int")
-        s = ((d + F.lit(k * 11)) % (n - L + 1)).cast("int")
-        r = ((d + F.lit(3 * k)) % L).cast("int")
-        wrapped = F.transform(
-            F.slice(ws, s + 1, L),
-            lambda x, i: F.when(
-                i == r,
-                F.concat(F.lit(f'<a href="/w/{k}">'), x, F.lit("</a>")),
-            ).otherwise(x),
-        )
-        return F.concat(F.lit("<p>"), F.concat_ws(" ", wrapped), F.lit("</p>"))
-
-    footer = F.lit('<footer>(c) 2026 <a href="/about">about</a></footer>')
-    script = F.lit(
-        "<script>var u = '<a href=\"https://evil.example.com/x\">';</script>"
-    )
-    html = F.concat_ws("\n", nav, h1, para(0), para(1), script, para(2), footer)
-
-    sig = link_stats(html)
-    return (
-        docs.select(
-            "doc_id",
-            sig["n_links"].alias("n_links"),
-            sig["n_internal"].alias("n_internal"),
-            sig["n_external"].alias("n_external"),
-            sig["n_hosts"].alias("n_hosts"),
-            sig["host_list"].alias("host_list"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_bpe_merges: distributed BPE merge learning (Sennrich et al. 2016,
-# arXiv:1508.07909 — the tokenizer-training loop, run on-cluster).
-# ---------------------------------------------------------------------------
-
-BPE_ROUNDS = 5
-
-
-def _bpe_round_cte(k: int) -> str:
-    """One unrolled BPE round: pair counts over seg{k-1}, the top-1
-    merge (count DESC, left, right — a total order), seg{k} via the
-    padded non-overlapping replace (verified identical left-to-right
-    semantics in Spark and DuckDB)."""
-    return f"""
-    pairs{k} AS (
-        SELECT s.cnt,
-               unnest(t[1:len(t)-1]) AS x,
-               unnest(t[2:len(t)]) AS y
-        FROM (SELECT cnt, string_split(seg, '  ') AS t FROM seg{k - 1}) s
-    ),
-    top{k} AS (
-        SELECT x, y, CAST(SUM(cnt) AS BIGINT) AS pc
-        FROM pairs{k} GROUP BY x, y
-        ORDER BY pc DESC, x, y LIMIT 1
-    ),
-    seg{k} AS (
-        -- LEFT JOIN ON TRUE, not CROSS JOIN: an empty top{k} (vocab
-        -- fully merged) must pass seg through unchanged, mirroring the
-        -- Spark loop's early break
-        SELECT s.word, s.cnt,
-               CASE WHEN t.x IS NULL THEN s.seg
-                    ELSE trim(replace(' ' || s.seg || ' ',
-                                      ' ' || t.x || '  ' || t.y || ' ',
-                                      ' ' || t.x || t.y || ' '))
-               END AS seg
-        FROM seg{k - 1} s LEFT JOIN top{k} t ON TRUE
-    )"""
-
-
-TEXT_BPE_MERGES_ORACLE = (
-    """
-    WITH words AS (
-        SELECT w AS word, COUNT(*) AS cnt FROM (
-            SELECT unnest(string_split(text, ' ')) AS w FROM documents
-        ) WHERE w <> '' GROUP BY w
-    ),
-    seg0 AS (
-        SELECT word, cnt,
-               array_to_string(string_split(word, ''), '  ') AS seg
-        FROM words
-    ),"""
-    + ",".join(_bpe_round_cte(k) for k in range(1, BPE_ROUNDS + 1))
-    + """
-    """
-    + " UNION ALL ".join(
-        f"SELECT {k} AS rank, x AS left_sym, y AS right_sym, "
-        f"x || y AS merged, pc AS pair_count FROM top{k}"
-        for k in range(1, BPE_ROUNDS + 1)
-    )
-    + """
-    ORDER BY rank
-    """
-)
-
-
-@query("text_bpe_merges", TEXT_BPE_MERGES_ORACLE, local=True)
-def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge learning on-cluster: whitespace-tokenize the corpus
-    once, reduce to the (word, count) vocabulary, segment each word
-    into characters, then run BPE_ROUNDS (5) merge rounds — each round
-    counts adjacent-symbol pairs weighted by word frequency, picks the
-    top pair under a total order (count DESC, left, right), and applies
-    the merge with a padded non-overlapping string replace whose
-    left-to-right semantics are identical in Spark and DuckDB.
-
-    Segment representation: symbols joined by TWO spaces, single-space
-    padding at replace time, pattern ' x  y ' -> ' xy '. The single-
-    space representation is WRONG for repeated-symbol runs: its
-    pattern consumes the boundary space shared with the next match, so
-    'a a a a' merges to [aa, a, a] where canonical greedy BPE gives
-    [aa, aa] (found by the hypothesis property test). With double-space
-    joints each match's consumed outer spaces are exactly restored by
-    the replacement's own padding, so greedy left-to-right string
-    replace == greedy left-to-right list merge — pinned generatively
-    against a pure-Python reference in tests/test_text_semantics.py.
-    No end-of-word marker — intra-word merges only, documented
-    divergence from the tokenizer deployments that add one.
-
-    Exactness: symbols are strings, counts are longs — the oracle
-    unrolls the same rounds as chained CTEs and is hash-exact.
-
-    Scale shape: the ONLY corpus-sized stage is the first tokenize +
-    vocabulary aggregate (one shuffle, collapsing map-side under
-    Zipf); every round after that is VOCAB-local — Heaps' law puts the
-    vocabulary at ~millions of rows for a 100 TB corpus, so rounds are
-    small narrow jobs. Each round needs the chosen pair as a literal in
-    the next round's replace, which costs one bounded `.first()` per
-    round (the k-means/PQ precedent); the seg table is eagerly
-    localCheckpoint()ed per round so round k never recomputes rounds
-    1..k-1 (the pagerank lineage discipline). Production BPE runs
-    thousands of merges by batch-applying non-interacting pairs per
-    round — this query demonstrates the per-round shape with R=5;
-    the round body is rank-count invariant."""
-    out_rows, _ = _bpe_learn(spark, sf_dir)
-    return spark.createDataFrame(
-        out_rows,
-        "rank int, left_sym string, right_sym string, merged string, "
-        "pair_count long",
-    ).orderBy("rank")
-
-
-def _bpe_learn(spark: SparkSession, sf_dir: str):
-    """Shared learn loop: returns (merge rows, final segmented vocab
-    (word, cnt, seg) with seg checkpointed) — text_bpe_merges reports
-    the former, text_bpe_compression applies the latter."""
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = (
-        fan_out(docs)
-        .select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    seg = words.select(
-        "word", "cnt", F.array_join(F.split("word", ""), "  ").alias("seg")
-    ).localCheckpoint()
-
-    out_rows = []
-    for k in range(1, BPE_ROUNDS + 1):
-        t = F.split("seg", "  ")
-        pair_expr = (
-            "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),"
-            " (a, b) -> struct(a AS x, b AS y))"
-        )
-        top = (
-            seg.select("cnt", t.alias("t"))
-            .select("cnt", F.explode(F.expr(pair_expr)).alias("p"))
-            .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
-            .agg(F.sum("cnt").alias("pc"))
-            .orderBy(F.col("pc").desc(), "x", "y")
-            .limit(1)
-            .first()
-        )
-        if top is None:
-            # vocabulary fully merged (or single-char words only): no
-            # adjacent pairs remain. The oracle's top{k} CTE is empty in
-            # the same state, so its UNION ALL arm emits no row either —
-            # both sides stop at the same rank.
-            break
-        out_rows.append((k, top["x"], top["y"], top["x"] + top["y"], top["pc"]))
-        pat = F.concat(F.lit(" "), F.lit(top["x"]), F.lit("  "),
-                       F.lit(top["y"]), F.lit(" "))
-        rep = F.concat(F.lit(" "), F.lit(top["x"] + top["y"]), F.lit(" "))
-        seg = seg.select(
-            "word", "cnt",
-            F.trim(
-                F.replace(
-                    F.concat(F.lit(" "), F.col("seg"), F.lit(" ")), pat, rep
-                )
-            ).alias("seg"),
-        ).localCheckpoint()
-
-    return out_rows, seg
-
-
-# ---------------------------------------------------------------------------
 # text_chunk_overlap: retrieval-prep chunking (fixed window, fixed
 # overlap).
 # ---------------------------------------------------------------------------
@@ -2204,100 +1798,6 @@ def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(chunk, " ").alias("chunk_text"),
         )
         .orderBy("doc_id", "chunk_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_bpe_compression: the APPLY side of BPE — segment the corpus with
-# the learned merges and account per-source compression.
-# ---------------------------------------------------------------------------
-
-TEXT_BPE_COMPRESSION_ORACLE = (
-    """
-    WITH words AS (
-        SELECT w AS word, COUNT(*) AS cnt FROM (
-            SELECT unnest(string_split(text, ' ')) AS w FROM documents
-        ) WHERE w <> '' GROUP BY w
-    ),
-    seg0 AS (
-        SELECT word, cnt,
-               array_to_string(string_split(word, ''), '  ') AS seg
-        FROM words
-    ),"""
-    + ",".join(_bpe_round_cte(k) for k in range(1, BPE_ROUNDS + 1))
-    + f"""
-    ,
-    src_words AS (
-        SELECT source, w AS word, COUNT(*) AS cnt FROM (
-            SELECT source, unnest(string_split(text, ' ')) AS w
-            FROM documents
-        ) WHERE w <> '' GROUP BY source, w
-    )
-    SELECT sw.source,
-           CAST(SUM(sw.cnt) AS BIGINT) AS n_words,
-           CAST(SUM(sw.cnt * length(sg.word)) AS BIGINT) AS n_chars,
-           CAST(SUM(sw.cnt * len(string_split(sg.seg, '  ')))
-                AS BIGINT) AS n_symbols,
-           FLOOR(CAST(SUM(sw.cnt * length(sg.word)) AS DOUBLE)
-                 / SUM(sw.cnt * len(string_split(sg.seg, '  ')))
-                 * 1000000 + 0.5) / 1000000 AS chars_per_symbol
-    FROM src_words sw JOIN seg{BPE_ROUNDS} sg ON sw.word = sg.word
-    GROUP BY sw.source
-    ORDER BY sw.source
-    """
-)
-
-
-@query("text_bpe_compression", TEXT_BPE_COMPRESSION_ORACLE, local=True)
-def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY half of the tokenizer loop: segment every word with
-    the merges text_bpe_merges learned (the shared ``_bpe_learn`` runs
-    the same rounds and hands back the final segmented vocabulary) and
-    report per-source compression — weighted chars, symbols after
-    merging, and chars-per-symbol (the metric tokenizer training
-    optimizes; sources whose orthography the merges fit show higher
-    ratios). Integer counts are hash-exact; the single ratio divides
-    identical longs on both engines and FLOOR-rounds.
-
-    Scale shape: learning stays vocab-local (see text_bpe_merges); the
-    APPLY is the corpus-sized half, and it runs as a broadcast-friendly
-    join of (source, word) counts against the ~vocab-sized segmented
-    table — per-document segmentation never touches a shuffle, and the
-    per-source rollup collapses map-side. This is exactly how a learned
-    tokenizer is deployed over 100 TB: ship the merge table, join or
-    map, never re-learn."""
-    _, seg = _bpe_learn(spark, sf_dir)
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    src_words = (
-        fan_out(docs)
-        .select("source", F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("source", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    seg_sized = seg.select(
-        "word",
-        F.length("word").alias("n_chars_word"),
-        F.size(F.split("seg", "  ")).alias("n_sym_word"),
-    )
-    joined = src_words.join(seg_sized, "word")
-    n_chars = F.sum(F.col("cnt") * F.col("n_chars_word"))
-    n_sym = F.sum(F.col("cnt") * F.col("n_sym_word"))
-    return (
-        joined.groupBy("source")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_words"),
-            n_chars.cast("long").alias("n_chars"),
-            n_sym.cast("long").alias("n_symbols"),
-            (
-                F.floor(
-                    n_chars.cast("double") / n_sym * 1_000_000 + F.lit(0.5)
-                ) / 1_000_000
-            ).alias("chars_per_symbol"),
-        )
-        .orderBy("source")
     )
 
 
@@ -2927,106 +2427,6 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("l1_ppm"),
         )
         .orderBy("l1_ppm", "src_a", "src_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_url_canonicalize: URL parsing + canonicalization over
-# deterministically-synthesized messy URLs (the PII-injection
-# precedent: the fixture corpus has no URLs, so the evidence rides
-# planted ones).
-# ---------------------------------------------------------------------------
-
-TEXT_URL_CANONICALIZE_ORACLE = """
-    WITH u AS (
-        SELECT doc_id, n_chars,
-               lower(CASE WHEN doc_id % 3 = 0
-                          THEN upper(source) || '.Example.COM'
-                          ELSE source || '.example.com' END)
-                   AS canon_host,
-               CASE WHEN doc_id % 3 = 0
-                    THEN upper(source) || '.Example.COM'
-                    ELSE source || '.example.com' END
-                   || CASE WHEN doc_id % 5 = 0 THEN ':443' ELSE '' END
-                   AS raw_authority,
-               rtrim('/' || lang || '/doc/' || doc_id
-                     || CASE WHEN doc_id % 7 = 0 THEN '/' ELSE '' END,
-                     '/') AS canon_path
-        FROM documents
-    )
-    SELECT canon_host,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COUNT(DISTINCT raw_authority) AS BIGINT) AS n_raw_variants,
-           CAST(COUNT(DISTINCT canon_path) AS BIGINT) AS n_paths,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM u
-    GROUP BY canon_host
-    ORDER BY canon_host
-    """
-
-
-@query("text_url_canonicalize", TEXT_URL_CANONICALIZE_ORACLE, local=True)
-def text_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + domain rollup — the normalization pass
-    every crawl pipeline runs before domain-level filtering and URL
-    dedup: per document a MESSY url is synthesized deterministically
-    (case-shuffled scheme/host on doc_id residues, a redundant :443
-    port on every fifth doc, a trailing slash on every seventh — the
-    same planted-evidence pattern as text_pii_scrub, since the fixture
-    corpus carries no URLs), then Spark's REAL parser takes it apart —
-    parse_url(url, 'HOST') / 'FILE' — and the canonical form is
-    lower(host) + port-stripped authority + trailing-slash-trimmed
-    path. The rollup per canonical host counts docs, RAW authority
-    variants collapsed by canonicalization (> 1 per host proves the
-    messy forms genuinely differed), distinct canonical paths, and
-    total chars. DuckDB has no parse_url, so the oracle reconstructs
-    host/path from the synthesis formula directly — the compare
-    attests Spark's parser against arithmetic ground truth.
-
-    Scale shape: map-only expression work (parse_url is a JVM-side
-    expression, no UDF) into one host-keyed aggregate whose
-    cardinality is the domain count — the standard crawl-curation
-    rollup grain."""
-    docs = load_table(spark, sf_dir, "documents")
-    raw_host = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(F.upper("source"), F.lit(".Example.COM")),
-    ).otherwise(F.concat(F.col("source"), F.lit(".example.com")))
-    authority = F.concat(
-        raw_host,
-        F.when(F.col("doc_id") % 5 == 0, F.lit(":443")).otherwise(F.lit("")),
-    )
-    path = F.concat(
-        F.lit("/"), F.col("lang"), F.lit("/doc/"),
-        F.col("doc_id").cast("string"),
-        F.when(F.col("doc_id") % 7 == 0, F.lit("/")).otherwise(F.lit("")),
-    )
-    scheme = F.when(F.col("doc_id") % 2 == 0, F.lit("https")).otherwise(
-        F.lit("HTTPS")
-    )
-    url = F.concat(scheme, F.lit("://"), authority, path)
-    parsed = docs.select(
-        "doc_id",
-        "n_chars",
-        url.alias("url"),
-        authority.alias("raw_authority"),
-    ).select(
-        "doc_id",
-        "n_chars",
-        "raw_authority",
-        F.lower(F.expr("parse_url(url, 'HOST')")).alias("canon_host"),
-        F.expr("rtrim('/', parse_url(url, 'FILE'))").alias("canon_path"),
-    )
-    return (
-        parsed.groupBy("canon_host")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("raw_authority").cast("long")
-            .alias("n_raw_variants"),
-            F.countDistinct("canon_path").cast("long").alias("n_paths"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-        )
-        .orderBy("canon_host")
     )
 
 

@@ -123,98 +123,3 @@ def test_bloom_probe_is_shuffle_free(spark):
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
     assert plan.count("BroadcastHashJoin") == BLOOM_K
-
-
-def test_minhash_jaccard_estimate_contract(spark, tmp_path):
-    """Planted near-identical and half-overlapping docs pin the
-    estimator contract: identical shingle sets agree on all 8
-    signature positions (est 1e6, exact 1e6, err 0); a
-    half-overlapping pair's exact Jaccard is computed from true
-    shingle sets, the estimate is matches/8, and err is their
-    difference — every column integer-exact."""
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        dedup_minhash_jaccard_estimate,
-    )
-
-    base = "a b c d e f g h i j k l"
-    rows = [
-        (0, base, "en", "s", 0),
-        (1, base, "en", "s", 0),                       # identical to 0
-        (2, base + " x y z w v u t s r q p o", "en", "s", 0),  # superset
-        (3, "q w e r t y u i o p a s", "en", "s", 0),  # unrelated
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-    out = {
-        (r["doc_a"], r["doc_b"]): r.asDict()
-        for r in dedup_minhash_jaccard_estimate(spark, str(tmp_path)).collect()
-    }
-    identical = out[(0, 1)]
-    assert identical["n_matches"] == 8
-    assert identical["est_jaccard_ppm"] == 1_000_000
-    assert identical["jaccard_ppm"] == 1_000_000
-    assert identical["err_ppm"] == 0
-    # the superset pair must surface as a candidate with exact
-    # jaccard = 10/22 (10 shared 3-gram shingles of 0's 10, union 22)
-    sup = out.get((0, 2)) or out.get((1, 2))
-    assert sup is not None
-    assert sup["jaccard_ppm"] == 10 * 1_000_000 // 22
-    assert sup["err_ppm"] == abs(sup["est_jaccard_ppm"] - sup["jaccard_ppm"])
-
-
-def test_jaccard_audit_cap_is_deterministic_md5_sample(spark, tmp_path):
-    """The audit-pair cap (r14 VERDICT item 4): above ``audit_cap`` the
-    estimator audit keeps exactly the pairs ranked lowest by
-    md5(doc_a||'|'||doc_b) — an engine-portable deterministic uniform
-    sample, pinned here against a pure-python md5 recomputation — and
-    the surviving rows carry the SAME values as the uncapped run. The
-    DuckDB oracle applies the identical ranking, attested by running
-    the oracle at the same small cap through the driver's compare."""
-    import hashlib
-
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        AUDIT_PAIR_CAP,
-        DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE,
-        dedup_minhash_jaccard_estimate,
-    )
-    from erathia_market_etl_spark.testing import compare_query
-
-    base = "a b c d e f g h i j k l"
-    rows = [
-        (0, base, "en", "s", 0),
-        (1, base, "en", "s", 0),
-        (2, base + " x y z w v u t s r q p o", "en", "s", 0),
-        (3, base + " m n o p q r s t u v w x", "en", "s", 0),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    full = dedup_minhash_jaccard_estimate(spark, str(tmp_path)).collect()
-    full_pairs = [(r["doc_a"], r["doc_b"]) for r in full]
-    assert len(full_pairs) >= 3, "planted corpus must exceed the test cap"
-
-    def md5_rank(p):
-        return (hashlib.md5(f"{p[0]}|{p[1]}".encode()).hexdigest(), p)
-
-    expected = sorted(sorted(full_pairs, key=md5_rank)[:2])
-    capped_df = dedup_minhash_jaccard_estimate(spark, str(tmp_path), audit_cap=2)
-    capped = capped_df.collect()
-    assert sorted((r["doc_a"], r["doc_b"]) for r in capped) == expected
-
-    # capped rows are a strict subset of the uncapped audit, values intact
-    full_map = {(r["doc_a"], r["doc_b"]): tuple(r) for r in full}
-    for r in capped:
-        assert tuple(r) == full_map[(r["doc_a"], r["doc_b"])]
-
-    # the oracle mirrors the cap: same md5 ranking, same survivors
-    capped_oracle = DEDUP_MINHASH_JACCARD_ESTIMATE_ORACLE.replace(
-        f"LIMIT {AUDIT_PAIR_CAP}", "LIMIT 2"
-    )
-    result = compare_query(
-        "jaccard_audit_cap", capped_df, capped_oracle, str(tmp_path)
-    )
-    assert result.ok, result

@@ -316,80 +316,3 @@ def test_funnel_matches_python_reference_generative(spark, tmp_path):
             assert got[stage] == (users, want_sec), stage
 
     run()
-
-
-def test_time_to_convert_planted_latencies(spark, tmp_path):
-    """Planted conversions pin the latency arithmetic end-to-end: each
-    purchase matches its LATEST preceding click (not the first), a
-    purchase with no prior click is excluded, a same-timestamp click
-    converts at latency 0, and the daily P50/P95/max come out of the
-    nearest-rank decomposition exactly."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.temporal_queries import (
-        funnel_time_to_convert,
-    )
-
-    def t(m, s=0):
-        return datetime.datetime(2024, 1, 1, 10, m, s)
-
-    rows = [
-        # user 1: clicks at 10:00 and 10:05; purchase 10:06 -> 60s
-        (1, t(0), 1, "click", 0.0),
-        (2, t(5), 1, "click", 0.0),
-        (3, t(6), 1, "purchase", 9.99),
-        # user 2: click and purchase same instant -> 0s
-        (4, t(20), 2, "click", 0.0),
-        (5, t(20), 2, "purchase", 5.0),
-        # user 3: purchase with NO prior click -> excluded
-        (6, t(30), 3, "purchase", 1.0),
-        # user 4: click 10:40, purchase 10:50 -> 600s
-        (7, t(40), 4, "click", 0.0),
-        (8, t(50), 4, "purchase", 2.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double",
-    )
-    df.write.parquet(str(tmp_path / "events.parquet"))
-    out = funnel_time_to_convert(spark, str(tmp_path)).collect()
-    assert len(out) == 1
-    r = out[0]
-    # three conversions (user 3 excluded); latencies {0, 60, 600}
-    assert r["n_conversions"] == 3
-    assert r["p50_sec"] == 60    # rank ceil(50*3/100)=2 -> 60
-    assert r["p95_sec"] == 600   # rank ceil(95*3/100)=3 -> 600
-    assert r["max_sec"] == 600
-
-
-def test_nearest_purchase_planted_directions_ties_and_bounds(spark, tmp_path):
-    """asof_nearest_purchase semantic pin on planted users:
-
-      u1: click at t=100, purchases at t=40 (back 60s) and t=130
-          (fwd 30s) -> FORWARD wins (30 < 60), dt=+30.
-      u2: click at t=100, purchases at t=80 and t=120 (both 20s)
-          -> TIE goes BACKWARD, dt=-20.
-      u3: click at t=100, only purchase 8 days away -> out of the
-          7-day bound, left-outer NULL match.
-      u4: purchase exactly at the click timestamp -> backward side,
-          dt=0 (the >=-semantics inherited from asof_join)."""
-    from erathia_market_etl_spark.plans.temporal_queries import (
-        asof_nearest_purchase,
-    )
-
-    rows = [
-        (1, "click", 100), (1, "purchase", 40), (1, "purchase", 130),
-        (2, "click", 100), (2, "purchase", 80), (2, "purchase", 120),
-        (3, "click", 100), (3, "purchase", 100 + 8 * 86400),
-        (4, "click", 100), (4, "purchase", 100),
-    ]
-    sf = _write_events(spark, tmp_path, rows)
-    got = {
-        r["user_id"]: (r["event_id_matched"], r["dt_seconds"])
-        for r in asof_nearest_purchase(spark, sf).collect()
-    }
-    # event ids are enumeration order in _write_events
-    assert got[1] == (2, 30)        # forward wins
-    assert got[2] == (4, -20)       # tie -> backward
-    assert got[3] == (None, None)   # out of bound
-    assert got[4] == (9, 0)         # same-instant -> backward dt=0

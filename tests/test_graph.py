@@ -351,65 +351,6 @@ def test_fixture_lsh_graph_routes_minlabel(spark):
     assert stats["rounds"] <= 6, stats
 
 
-def test_triangle_counts_planted_shapes(spark):
-    """K4 (every node in C(3,2)=3 triangles), a pendant vertex (degree
-    1, zero triangles, still present in the output), and a triangle-free
-    path — the hand-checkable pins for the degree-oriented kernel."""
-    from erathia_market_etl_spark.operators.graph import triangle_counts
-
-    # K4 on {1,2,3,4} + pendant 5-1 + path 6-7
-    edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (1, 5), (6, 7)]
-    df = spark.createDataFrame(edges, "x long, y long")
-    got = {r["v"]: (r["degree"], r["triangles"])
-           for r in triangle_counts(df).collect()}
-    assert got == {
-        1: (4, 3), 2: (3, 3), 3: (3, 3), 4: (3, 3),
-        5: (1, 0), 6: (1, 0), 7: (1, 0),
-    }
-
-
-def test_triangle_counts_match_bruteforce_random(spark):
-    """Randomized equality vs a pure-Python per-vertex triangle counter
-    — exercises skewed degrees (a planted hub) so the degree
-    orientation path is non-trivial, and proves the count is a pure
-    function of the edge set (orientation/tie-break independence)."""
-    import itertools
-    import random
-
-    from erathia_market_etl_spark.operators.graph import triangle_counts
-
-    rng = random.Random(97)
-    nodes = list(range(1, 26))
-    edge_set = set()
-    for a, b in itertools.combinations(nodes, 2):
-        if rng.random() < 0.18:
-            edge_set.add((a, b))
-    # planted hub: node 1 connects to everything (degree skew)
-    for b in nodes[1:]:
-        edge_set.add((1, b))
-
-    adj: dict[int, set[int]] = {v: set() for v in nodes}
-    for a, b in edge_set:
-        adj[a].add(b)
-        adj[b].add(a)
-    expected = {}
-    for v in nodes:
-        nbrs = sorted(adj[v])
-        t = sum(
-            1
-            for i, p in enumerate(nbrs)
-            for q in nbrs[i + 1:]
-            if q in adj[p]
-        )
-        if adj[v]:
-            expected[v] = (len(adj[v]), t)
-
-    df = spark.createDataFrame(sorted(edge_set), "x long, y long")
-    got = {r["v"]: (r["degree"], r["triangles"])
-           for r in triangle_counts(df).collect()}
-    assert got == expected
-
-
 def test_basket_pair_lift_planted(spark, tmp_path):
     """Lift semantics: a pair that ALWAYS co-occurs scores lift 2e6
     (twice independence) while a pair involving a part present in
@@ -577,51 +518,3 @@ def test_lpa_majority_beats_smaller_label(spark):
     assert r2[5] == 2
     # and node 4 follows its only neighbor's round-1 label
     assert r2[4] == 2  # lab(5) after round 1 = min(2,3,4,6) = 2
-
-
-def test_bfs_rings_on_planted_path_graph(spark, tmp_path):
-    """graph_bfs_reach semantics on a planted star-plus-path trade
-    graph with KNOWN rings: hub customer 1 trades with suppliers
-    2,3,4 (>=3 line items each); supplier 2 also serves customer 5,
-    who also buys from supplier 6. Node encoding c*2 / s*2+1:
-    hub = 2 (degree 3 beats everyone), ring 1 = {5, 7, 9}
-    (suppliers 2,3,4), ring 2 = {10} (customer 5), ring 3 = {13}
-    (supplier 6)."""
-    import datetime as dt
-
-    from erathia_market_etl_spark.plans.graph_queries import graph_bfs_reach
-
-    rows, ok = [], 0
-
-    def trade(ck, sk, times):
-        nonlocal ok
-        for _ in range(times):
-            ok += 1
-            rows.append((ok, ck, sk))
-
-    trade(1, 2, 3); trade(1, 3, 3); trade(1, 4, 3)
-    trade(5, 2, 3); trade(5, 6, 3)
-    orders = [(o, c, "O", 1.0, dt.date(2024, 3, 1), "1-URGENT")
-              for o, c, _ in rows]
-    lineitem = [(o, 1, s, 1, 1.0, 1.0, 0.0, 0.0, "N", "O",
-                 dt.date(2024, 3, 1)) for o, _, s in rows]
-    p = str(tmp_path / "sf")
-    spark.createDataFrame(
-        orders,
-        "o_orderkey long, o_custkey long, o_orderstatus string,"
-        " o_totalprice double, o_orderdate date, o_orderpriority string",
-    ).write.parquet(f"{p}/orders.parquet")
-    spark.createDataFrame(
-        lineitem,
-        "l_orderkey long, l_partkey long, l_suppkey long,"
-        " l_linenumber long, l_quantity double, l_extendedprice double,"
-        " l_discount double, l_tax double, l_returnflag string,"
-        " l_linestatus string, l_shipdate date",
-    ).write.parquet(f"{p}/lineitem.parquet")
-
-    got = {r["dist"]: (r["n_nodes"], r["min_node"], r["max_node"])
-           for r in graph_bfs_reach(spark, p).collect()}
-    assert got[0] == (1, 2, 2)
-    assert got[1] == (3, 5, 9)
-    assert got[2] == (1, 10, 10)
-    assert got[3] == (1, 13, 13)

@@ -30,16 +30,23 @@ def test_query_matches_oracle(spark, name):
     )
 
 
+def _emptied_copy(tmp_path_factory, name, empty) -> str:
+    """A copy of the sf0.001 fixture whose ``empty`` tables (file
+    names) hold no rows, their schemas kept."""
+    sf_dir = tmp_path_factory.mktemp(name)
+    for table in os.listdir(SF_SMOKE):
+        shutil.copyfile(os.path.join(SF_SMOKE, table), sf_dir / table)
+        if table in empty:
+            path = str(sf_dir / table)
+            pq.write_table(pq.read_table(path).slice(0, 0), path)
+    return str(sf_dir)
+
+
 @pytest.fixture(scope="module")
 def sf_empty_lineitem(tmp_path_factory):
     """The sf0.001 fixture with ``lineitem`` emptied, its schema kept."""
-    sf_dir = tmp_path_factory.mktemp("sf_empty_lineitem")
-    for name in os.listdir(SF_SMOKE):
-        shutil.copyfile(os.path.join(SF_SMOKE, name), sf_dir / name)
-    path = str(sf_dir / "lineitem.parquet")
-    table = pq.read_table(path)
-    pq.write_table(table.slice(0, 0), path)
-    return str(sf_dir)
+    return _emptied_copy(tmp_path_factory, "sf_empty_lineitem",
+                         {"lineitem.parquet"})
 
 
 @pytest.mark.parametrize("name", ["agg_rollup", "agg_grouping_sets"])
@@ -51,6 +58,32 @@ def test_grouping_sets_emit_grand_total_on_empty_input(
     df = QUERIES[name](spark, sf_empty_lineitem)
     result = compare_query(name, df, ORACLES[name], sf_empty_lineitem)
     assert result.oracle_rows == 1
+    assert result.ok, result
+
+
+@pytest.fixture(scope="module")
+def sf_all_empty(tmp_path_factory):
+    """The sf0.001 fixture with all ten tables emptied, schemas kept."""
+    return _emptied_copy(tmp_path_factory, "sf_all_empty",
+                         set(os.listdir(SF_SMOKE)))
+
+
+# Arrow-worker and stateful-streaming queries: each must hand an empty
+# batch through its Python kernel (or state store) and return the
+# oracle's zero rows, not a worker trace.
+@pytest.mark.parametrize("name", [
+    "media_wav_real_decode",
+    "media_bmp_real_resize",
+    "media_jpeg_real_decode",
+    "sim_topk_batch",
+    "text_winnowing_fingerprints",
+    "decon_test_train_overlap",
+    "stream_user_running_totals",
+])
+def test_query_matches_oracle_on_empty_tables(spark, sf_all_empty, name):
+    df = QUERIES[name](spark, sf_all_empty)
+    result = compare_query(name, df, ORACLES[name], sf_all_empty)
+    assert result.oracle_rows == 0
     assert result.ok, result
 
 

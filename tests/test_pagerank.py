@@ -189,44 +189,3 @@ def test_pagerank_rejects_bad_tol(spark):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError):
         pagerank_fixed_point(df, tol=0)
-
-
-def test_hits_planted_bipartite_scores(spark, tmp_path):
-    """graph_hits_influence semantic pin on a planted trading graph:
-
-        c1 -> {s1, s2};  c2 -> {s1};  c3 -> {s1, s3}
-
-    a1 (in-degree): s1=3, s2=1, s3=1
-    h1: c1 = a1(s1)+a1(s2) = 4; c2 = 3; c3 = a1(s1)+a1(s3) = 4
-    a2: s1 = h1(c1)+h1(c2)+h1(c3) = 11; s2 = 4; s3 = 4
-
-    Non-vacuity: h1 ranks c1/c3 ABOVE c2 even though all of c2's mass
-    rides the best authority — degree alone (2,1,2) can't order
-    c2 vs c3's tie with c1, and a2(s2) == a2(s3) despite s2/s3 having
-    different buyers (same hub mass) — the tiebreaks must then order
-    deterministically."""
-    import os
-
-    from erathia_market_etl_spark.plans.graph_queries import (
-        graph_hits_influence,
-    )
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    li = [(1, 101), (1, 102), (2, 101), (3, 101), (3, 103)]
-    spark.createDataFrame(
-        [(o, s) for o, s in li], "l_orderkey long, l_suppkey long"
-    ).write.parquet(f"{sf}/lineitem.parquet")
-    spark.createDataFrame(
-        [(1, 11), (2, 12), (3, 13)], "o_orderkey long, o_custkey long"
-    ).write.parquet(f"{sf}/orders.parquet")
-
-    rows = [tuple(r) for r in graph_hits_influence(spark, sf).collect()]
-    assert rows == [
-        ("supplier", 101, 3, 11),
-        ("customer", 11, 2, 4),
-        ("customer", 13, 2, 4),
-        ("supplier", 102, 1, 4),
-        ("supplier", 103, 1, 4),
-        ("customer", 12, 1, 3),
-    ]

@@ -560,27 +560,6 @@ def test_sample_k_per_group_uses_window_group_limit(spark):
     assert "WindowGroupLimit" in plan, plan
 
 
-def test_int8_quantization_map_only_no_generate(spark):
-    """emb_int8_quantization's scale claim pinned: codes, checksums,
-    and errors fold per row with array HOFs — NO explode (Generate),
-    NO join, and the ONLY exchange is the presentation sort's range
-    partitioning. Also pins the staging discipline: the quantization
-    array q must be computed in its own projection (a named q#N
-    attribute), not re-inlined into each of the four output aggregates
-    (the inlined form measured 13x slower at sf0.1)."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        emb_int8_quantization,
-    )
-
-    plan = plan_of(emb_int8_quantization(spark, SF_T2))
-    assert "Generate" not in plan, plan
-    assert "Join" not in plan, plan
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "rangepartitioning" in line, plan
-    assert re.search(r"AS q#\d+", plan), plan
-
-
 def test_vocab_coverage_broadcast_membership_topk_vocab(spark):
     """text_vocab_coverage's scale claims pinned: the vocabulary is a
     TakeOrderedAndProject over the term-df aggregate (top-k never
@@ -595,29 +574,6 @@ def test_vocab_coverage_broadcast_membership_topk_vocab(spark):
     assert "TakeOrderedAndProject" in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-
-
-def test_kmeans_lloyd_no_corpus_expansion(spark):
-    """emb_kmeans_lloyd's scale claim pinned: assignment scans a
-    one-row broadcast centroid relation (BroadcastNestedLoopJoin over
-    a single-row build side — NOT a K-way row expansion join), and
-    every hash exchange in the plan carries aggregate partials
-    (HashAggregate below it), never raw corpus rows. A SortMergeJoin
-    of the points against anything would betray a corpus-sized
-    shuffle."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        emb_kmeans_lloyd,
-    )
-
-    df = emb_kmeans_lloyd(spark, SF_T2)
-    plan = plan_of(df)
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    # the points table must never ride a sort-merge join
-    for line in plan.splitlines():
-        if "SortMergeJoin" in line:
-            # only the tiny (cid, pos) centroid-table joins may SMJ —
-            # they join on cid/pos keys, never vec_id
-            assert "vec_id" not in line, plan
 
 
 def test_aqe_skew_join_split_fires(spark):

@@ -6,48 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from erathia_market_etl_spark.plans.profile_queries import (
-    profile_fact_columns,
-)
-
-
-def test_profile_counts_nulls_distincts_and_renderings(spark, tmp_path):
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    rows = [
-        (1, t0, 10, "view", 1.004, '{"a": 1}'),
-        (2, t0, 10, "view", 2.345, None),
-        (3, None, 11, None, None, None),
-        (4, t0 + dt.timedelta(seconds=5), None, "click", 2.345, '{"a": 1}'),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    p = str(tmp_path / "sf")
-    df.write.parquet(p + "/events.parquet")
-    got = {r["col_name"]: r.asDict() for r in
-           profile_fact_columns(spark, p).collect()}
-
-    assert all(v["n_rows"] == 4 for v in got.values())
-    assert got["ts"]["null_count"] == 1
-    assert got["ts"]["distinct_count"] == 2          # t0 twice, t0+5 once
-    assert got["ts"]["min_repr"] == "2024-03-01 12:00:00"
-    assert got["ts"]["max_repr"] == "2024-03-01 12:00:05"
-    assert got["user_id"]["null_count"] == 1
-    assert got["user_id"]["distinct_count"] == 2
-    assert got["event_type"]["null_count"] == 1
-    assert got["event_type"]["distinct_count"] == 2
-    assert got["value"]["null_count"] == 1
-    assert got["value"]["distinct_count"] == 2       # 2.345 deduped
-    # cents rendering rounds half up: 1.004 -> 100, 2.345 -> 235
-    assert got["value"]["min_repr"] == "100"
-    assert got["value"]["max_repr"] == "235"
-    assert got["props"]["null_count"] == 2
-    assert got["props"]["distinct_count"] == 1
-    assert got["event_id"]["null_count"] == 0
-    assert got["event_id"]["distinct_count"] == 4
-
 
 def test_equi_depth_splits_duplicated_values(spark):
     """The case a per-value histogram cannot handle: 10 copies of value
@@ -89,124 +47,6 @@ def test_equi_depth_population_and_conservation_laws(spark):
     assert sum(r["sum_v"] for r in got) == sum(vals)
     for a, b in zip(got, got[1:]):
         assert a["hi"] <= b["lo"]   # value-ordered buckets
-
-
-def test_mad_planted_group_parities(spark):
-    """Lower-median convention at every parity: odd group, even group
-    (lower of the middle two, never interpolated), and a
-    duplicate-heavy group whose MAD collapses to 0."""
-    from erathia_market_etl_spark.plans.profile_queries import mad_frame
-
-    rows = (
-        [("g_odd", v) for v in (1, 3, 9)]
-        + [("g_even", v) for v in (1, 2, 3, 10)]
-        + [("g_dup", v) for v in (5, 5, 5, 5, 7)]
-    )
-    out = {
-        r["event_type"]: (r["n"], r["median_cents"], r["mad_cents"])
-        for r in mad_frame(
-            spark.createDataFrame(rows, "event_type string, c long")
-        ).collect()
-    }
-    assert out == {
-        "g_odd": (3, 3, 2),    # devs {2,0,6} -> lower median 2
-        "g_even": (4, 2, 1),   # median = lower of (2,3); devs {1,0,1,8} -> 1
-        "g_dup": (5, 5, 0),
-    }
-
-
-def test_percentile_bands_planted_nearest_rank(spark):
-    """Nearest-rank percentiles by hand: n=4 (P50 at rank 2, P95 at
-    rank 4) and a duplicate-heavy n=20 group where the bucket
-    boundaries land inside repeated-value runs."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.profile_queries import (
-        percentile_bands_frame,
-    )
-
-    d = datetime.date(2024, 1, 1)
-    rows = (
-        [("a", d, v) for v in (10, 20, 30, 40)]
-        + [("b", d, 5)] * 18
-        + [("b", d, 7), ("b", d, 9)]
-    )
-    out = {
-        r["event_type"]: (
-            r["n"], r["p50_cents"], r["p95_cents"], r["max_cents"]
-        )
-        for r in percentile_bands_frame(
-            spark.createDataFrame(
-                rows, "event_type string, day date, c long"
-            )
-        ).collect()
-    }
-    # a: ranks ceil(.5*4)=2 -> 20; ceil(.95*4)=4 -> 40
-    assert out["a"] == (4, 20, 40, 40)
-    # b: n=20, ceil(10)=10 -> 5 (inside the run); ceil(19)=19 -> 7
-    assert out["b"] == (20, 5, 7, 9)
-
-
-def test_dq_expectations_counts_planted_violations(spark, tmp_path):
-    """dq_expectations_suite (r12) on a micro-star with one planted
-    violation per check class — the fixtures are violation-free, so
-    without this the violation-counting paths only ever attest at
-    zero (vacuous green)."""
-    import datetime as dt
-
-    from erathia_market_etl_spark.plans.profile_queries import (
-        dq_expectations_suite,
-    )
-
-    p = str(tmp_path / "sf")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    def w(name, rows, schema):
-        spark.createDataFrame(rows, schema).write.parquet(
-            f"{p}/{name}.parquet"
-        )
-
-    w("customer", [(1, "a", 0, 0.0, "m"), (1, "dup", 0, 0.0, "m")],
-      "c_custkey long, c_name string, c_nationkey long, c_acctbal double,"
-      " c_mktsegment string")
-    # order 20 -> custkey 99 is an FK orphan; order 21 nonpositive price
-    w("orders",
-      [(20, 99, "O", 10.0, dt.date(2024, 3, 1), "1-URGENT"),
-       (21, 1, "O", -5.0, dt.date(2024, 3, 2), "1-URGENT")],
-      "o_orderkey long, o_custkey long, o_orderstatus string,"
-      " o_totalprice double, o_orderdate date, o_orderpriority string")
-    w("part", [(7, "p")], "p_partkey long, p_name string")
-    # line 1: orphan orderkey 999 + orphan partkey 8; line 2: discount 1.5
-    w("lineitem",
-      [(999, 8, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", dt.date(2024, 3, 1)),
-       (20, 7, 1, 1, 1.0, 1.0, 1.5, 0.0, "N", "O", dt.date(2024, 3, 1))],
-      "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long,"
-      " l_quantity double, l_extendedprice double, l_discount double,"
-      " l_tax double, l_returnflag string, l_linestatus string,"
-      " l_shipdate date")
-    w("events",
-      [(1, t0, None, "view", 1.0, "{}"), (2, t0, 5, "weird", 1.0, "{}")],
-      "event_id long, ts timestamp, user_id long, event_type string,"
-      " value double, props string")
-    w("documents", [(1, "", "en", "s", 0), (2, "ok", "en", "s", 2)],
-      "doc_id long, text string, lang string, source string, n_chars long")
-
-    got = {r["check_name"]: r.asDict()
-           for r in dq_expectations_suite(spark, p).collect()}
-    assert got["pk_customer_custkey"]["violations"] == 1
-    assert got["fk_orders_custkey"]["violations"] == 1
-    assert got["range_orders_totalprice_positive"]["violations"] == 1
-    assert got["fk_lineitem_orderkey"]["violations"] == 1
-    assert got["fk_lineitem_partkey"]["violations"] == 1
-    assert got["range_lineitem_discount_unit_interval"]["violations"] == 1
-    assert got["not_null_events_user_id"]["violations"] == 1
-    assert got["accepted_values_event_type"]["violations"] == 1
-    assert got["nonempty_documents_text"]["violations"] == 1
-    assert all(not v["passed"] for k, v in got.items()
-               if k != "pk_orders_orderkey")
-    assert got["pk_orders_orderkey"]["violations"] == 0
-    assert got["pk_orders_orderkey"]["passed"]
-    assert got["fk_lineitem_orderkey"]["checked"] == 2
 
 
 def test_weighted_median_matches_bruteforce_and_uses_weights(spark):

@@ -144,18 +144,18 @@ def test_registered_names_and_oracles_are_pinned():
 
 
 # sha256 of json.dumps(sorted((name, oracle) for every local query))
-_LOCAL_SHA256 = "12a35c869ea740c7d08d86c883bfc79a40a1cbe2ff9e42d5361983e581009751"
+_LOCAL_SHA256 = "40046fd79831cfa550f3e0233fe76755bfaa1ae093f3bf52eb8f3b37512a6924"
 
 
 def test_local_names_and_oracles_are_pinned():
-    """The local-only surface: 84 oracled queries registered with
+    """The local-only surface: 50 oracled queries registered with
     ``local=True``, pinned like the driver set (one hash over all
     names and oracle bytes)."""
     import hashlib
     import json
 
     local = local_queries()
-    assert len(local) == 84
+    assert len(local) == 50
     pairs = sorted((name, oracle) for name, (_, oracle) in local.items())
     digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
     assert digest == _LOCAL_SHA256

@@ -401,47 +401,6 @@ def test_quota_allocation_planted_hamilton(spark):
     assert out2 == {"x": 2, "y": 1}
 
 
-def test_binpack_ffd_planted_fold(spark, tmp_path):
-    """Hand-checkable FFD at cap 10 on token counts (9,7,6,5,3): bins
-    evolve [9] -> [9],[7] -> [9],[7],[6] -> [9],[7],[6],[5] ->
-    [9],[7+3],[6],[5] — 4 bins, max 10, min 5 — and the decreasing
-    order is what makes the 3 land beside the 7, not open a 5th bin
-    (first-fit WITHOUT the sort would behave differently on an
-    ascending stream)."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        pack_binpack_ffd,
-    )
-
-    def words(k):
-        return " ".join(f"w{i}" for i in range(k))
-
-    rows = [
-        (0, words(9), "en", "s", 0),
-        (1, words(7), "en", "s", 0),
-        (2, words(6), "en", "s", 0),
-        (3, words(5), "en", "s", 0),
-        (4, words(3), "en", "s", 0),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    import erathia_market_etl_spark.plans.sampling_queries as sq
-
-    orig = sq.PACK_FFD_CAP
-    sq.PACK_FFD_CAP = 10
-    try:
-        out = pack_binpack_ffd(spark, str(tmp_path)).collect()
-    finally:
-        sq.PACK_FFD_CAP = orig
-    assert len(out) == 1
-    r = out[0]
-    assert (r["n_docs"], r["total_tokens"]) == (5, 30)
-    assert (r["n_bins"], r["max_bin"], r["min_bin"]) == (4, 10, 5)
-    assert r["utilization_ppm"] == 30 * 1_000_000 // 40
-
-
 def test_systematic_interval_exact_rate_per_window(spark):
     """The systematic-design property Bernoulli splits lack: every k
     consecutive rows of the hash order keep EXACTLY one. Recompute the

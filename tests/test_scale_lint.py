@@ -306,13 +306,6 @@ R6_BOUNDED_GRAIN: dict[str, list[tuple[str, str]]] = {
         "CUSUM running sum over the per-DAY deviation table — "
         "calendar grain, bounded by the date span",
     )],
-    "sample_shuffle_order": [(
-        r"Sort \[_blk#\d+L ASC",
-        "cumulative rank offsets over the fixed 4096-row hash-BLOCK "
-        "count table (32-bit avalanche domain / 2^20 width) — a "
-        "constant of the shuffler, never the corpus size; the "
-        "ungrouped grouped_rank decomposition",
-    )],
     "events_peak_concurrency": [(
         r"Sort \[_blk#\d+L ASC",
         "sweep-line carry offsets over the per-MINUTE-block delta-sum "
@@ -368,7 +361,7 @@ def test_r6_catches_data_scaling_grain_ntile(spark):
         "re-add a blanket allowlist entry for it"
     )
     # and a SortAggregate-parented exchange stays exempt (node-name
-    # match, not substring — the profile_fact_columns false positive)
+    # match, not substring: a global SortAggregate is a 1-row reduction)
     assert _node_name("+- SortAggregate(key=[], functions=[first(x)])") == (
         "SortAggregate"
     )

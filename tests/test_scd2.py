@@ -3,7 +3,6 @@ insertion, no-op updates, and multi-batch version chains."""
 
 from __future__ import annotations
 
-import datetime as dt
 
 import pytest
 
@@ -68,49 +67,3 @@ def test_multi_batch_version_chain(spark, base):
     ]
     # exactly one open version per key, chain is gapless
     assert h2.filter("is_current").groupBy("id").count().filter("count > 1").count() == 0
-
-
-def test_cdc_merge_apply_planted_actions(spark, tmp_path):
-    """cdc_merge_apply semantic pin: one user per MERGE arm.
-
-      u1: only pre-cutoff events            -> kept (counts unchanged)
-      u2: pre + post (no error)             -> updated (counts added,
-                                               last_ts = post max)
-      u3: only post (no error)              -> inserted
-      u4: pre + post containing an 'error'  -> DELETED (absent)
-      u5: only post, all 'error'            -> delete of a never-
-                                               inserted key: absent"""
-    from erathia_market_etl_spark.plans.event_windows import (
-        CDC_CUTOFF,
-        cdc_merge_apply,
-    )
-
-    cut = dt.datetime.fromisoformat(CDC_CUTOFF)
-    pre = cut - dt.timedelta(days=1)
-    post = cut + dt.timedelta(days=1)
-    rows = [
-        (1, pre, 1, "view", 1.0, "{}"),
-        (2, pre, 1, "click", 1.0, "{}"),
-        (3, pre, 2, "view", 1.0, "{}"),
-        (4, post, 2, "purchase", 1.0, "{}"),
-        (5, post, 2, "view", 1.0, "{}"),
-        (6, post, 3, "signup", 1.0, "{}"),
-        (7, pre, 4, "view", 1.0, "{}"),
-        (8, post, 4, "error", 1.0, "{}"),
-        (9, post, 5, "error", 1.0, "{}"),
-    ]
-    sf = str(tmp_path / "sf")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    ).write.parquet(f"{sf}/events.parquet")
-    got = {
-        r["user_id"]: (r["action"], r["n_events"], r["last_ts"])
-        for r in cdc_merge_apply(spark, sf).collect()
-    }
-    assert got[1] == ("kept", 2, pre)
-    assert got[2] == ("updated", 3, post)
-    assert got[3] == ("inserted", 1, post)
-    assert 4 not in got and 5 not in got
-    assert len(got) == 3

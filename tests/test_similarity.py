@@ -385,155 +385,6 @@ def test_pq_assign_enforces_nibble_packing_invariant(spark):
     assert pq_assign(spark, emb, [ok_book, ok_book]).count() == 1
 
 
-def test_ivfpq_contract_and_composition(spark):
-    """Queued r8 IVF-PQ composition: the contract row holds at
-    SF_SMOKE (recall over the floor, shortlist genuinely pruning),
-    and the IVF half agrees with sim_topk_ivf's own candidate
-    accounting — the probed-cell population count equals the number
-    of candidate rows the exact IVF query scores before its LIMIT."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        N_PROBE,
-        QUERY_VEC_ID,
-        _ivf_centroids,
-        sim_ivfpq_topk,
-    )
-    from erathia_market_etl_spark.sources.parquet_io import load_table
-
-    from .conftest import SF_SMOKE
-
-    row = sim_ivfpq_topk(spark, SF_SMOKE).collect()
-    assert len(row) == 1
-    r = row[0]
-    assert r["recall_ok"] is True, r
-    assert r["shortlist_bounded"] is True, r
-    assert r["n_probe"] == N_PROBE and r["n_sub"] == 8 and r["k"] == 16, r
-
-    # independent recount of the probed-cell candidate population
-    from erathia_market_etl_spark.operators.similarity import (
-        cell_argmax_udf,
-        probe_order_udf,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    cids, C = _ivf_centroids(emb)
-    cells = emb.select(
-        "vec_id", cell_argmax_udf(cids, C)(F.col("embedding")).alias("cid")
-    )
-    probes = (
-        emb.filter(F.col("vec_id") == QUERY_VEC_ID)
-        .select(
-            F.explode(
-                F.slice(probe_order_udf(cids, C)(F.col("embedding")),
-                        1, N_PROBE)
-            ).alias("cid")
-        )
-    )
-    n = (
-        cells.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .count()
-    )
-    assert r["n_candidates"] == n, (r["n_candidates"], n)
-
-
-def test_semantic_cells_planted_dup_found_cross_cell_missed(spark, tmp_path):
-    """SemDeDup semantics on a planted corpus: two near-identical
-    vectors landing in the SAME cell must come out as a pair with
-    cosine ~1; a near-identical pair STRADDLING a cell boundary
-    (mixtures leaning toward two different centroids) is the documented
-    SemDeDup miss — cluster-local comparison cannot see across cells
-    (the paper accepts this; the banded-LSH pass is the complement)."""
-    import os
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        dedup_semantic_cells,
-    )
-
-    def basis(i, scale=1.0):
-        v = [0.0] * DIM
-        v[i] = scale
-        return v
-
-    def mix(i, j, wi, wj):
-        v = [0.0] * DIM
-        v[i], v[j] = wi, wj
-        return v
-
-    rows = [(i, basis(i)) for i in range(16)]          # centroid seeds
-    near = basis(3, 0.6)
-    near2 = list(near)
-    near2[40] = 0.01                                    # tiny off-axis noise
-    rows += [(20, near), (21, near2)]                   # same-cell dup pair
-    rows += [(30, mix(5, 6, 0.51, 0.49)), (31, mix(5, 6, 0.49, 0.51))]
-    df = spark.createDataFrame(rows, _EMB_SCHEMA).withColumn(
-        "label", F.lit(0)  # the fixture embeddings schema carries label
-    )
-    d = str(tmp_path)
-    df.write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))
-
-    pairs = {
-        (r["vec_a"], r["vec_b"]): r
-        for r in dedup_semantic_cells(spark, d).collect()
-    }
-    assert (20, 21) in pairs
-    assert pairs[(20, 21)]["cosine_sim"] > 0.99
-    assert pairs[(20, 21)]["cid"] == 3
-    assert (30, 31) not in pairs  # the documented cross-cell miss
-    # every emitted pair is within one cell and above the threshold
-    for (a, b), r in pairs.items():
-        assert r["cosine_sim"] >= 0.4, r
-
-
-def test_semdedup_sqrt_cells_recovers_capped_pair(spark):
-    """The SemDeDup cell-count knob's recall effect, proven on a
-    crafted corpus (r9, VERDICT r8 item 3): 1024 vectors where all but
-    three point along e1 (so under 16 cells EVERYTHING ties into cell
-    0 and the 128-cap binds), vector 20 points along e2, and a planted
-    near-dup pair (1022, 1023) also points along e2 at high vec_ids.
-
-    With 16 fixed cells, vector 20 is not a centroid: the planted pair
-    lands in overfull cell 0 at row_number ~1021 — beyond the cap —
-    and the pair is silently LOST (but the truncated flag says so).
-    With sqrt(1024)=32 cells, vector 20 IS a centroid: the pair
-    assigns to its cell, survives the cap, and is found."""
-    import math
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        semantic_cell_pairs,
-    )
-
-    n = 1024
-    rows = []
-    for i in range(n):
-        if i == 20 or i >= 1022:
-            vec = [0.0, 1.0, 0.0, 0.0]  # e2 direction
-        else:
-            vec = [1.0, 0.0, 0.0, 0.0]  # e1 direction
-        rows.append((i, vec, "x"))
-    emb = spark.createDataFrame(
-        rows, "vec_id LONG, embedding ARRAY<FLOAT>, label STRING"
-    )
-
-    def pairs(n_cells):
-        got = semantic_cell_pairs(emb, n_cells).collect()
-        return {(r["vec_a"], r["vec_b"]): r for r in got}
-
-    with_16 = pairs(16)
-    assert (1022, 1023) not in with_16  # the recall cliff, demonstrated
-    # ...but the loss is ACCOUNTED: every surviving cell-0 pair carries
-    # the binding-cap evidence
-    cell0 = [r for r in with_16.values() if r["cid"] == 0]
-    assert cell0 and all(r["truncated"] for r in cell0)
-    assert all(r["cell_n"] > 128 for r in cell0)
-
-    with_sqrt = pairs(max(16, math.isqrt(n)))
-    assert (1022, 1023) in with_sqrt  # sqrt(n) cells recover the pair
-    rec = with_sqrt[(1022, 1023)]
-    assert rec["cid"] == 20 and not rec["truncated"] and rec["cell_n"] == 3
-
-
 def test_jl_projection_matches_python_and_preserves_norms(spark):
     """emb_random_projection semantics: (1) every projected coordinate
     equals the pure-Python sign projection over the same micro-
@@ -582,118 +433,6 @@ def test_jl_projection_matches_python_and_preserves_norms(spark):
         norm2 = sum(x * x for x in m)
         proj2 = sum(got[vid][j] ** 2 for j in range(JL_DIM)) / JL_DIM
         assert 0.3 * norm2 <= proj2 <= 2.2 * norm2, (vid, proj2 / norm2)
-
-
-def test_jl_rerank_recall_floor(spark):
-    """The JL-shortlist composition must actually retrieve: recall@10
-    vs the exact brute-force top-10 stays >= 0.5 on the fixture (the
-    adversarial random-vector case; measured 0.8 at sf0.001 with
-    d'=32 / shortlist 128 — the (16, 64) configuration scores 0.3 and
-    FAILS this floor, which is why retrieval gets its own dim)."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        sim_topk_bruteforce,
-        sim_topk_jl_rerank,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    jl = {r["vec_id"] for r in sim_topk_jl_rerank(spark, sf).collect()}
-    bf = {r["vec_id"] for r in sim_topk_bruteforce(spark, sf).collect()}
-    assert len(jl) == 10
-    assert len(jl & bf) / 10 >= 0.5, jl & bf
-
-
-def test_int8_quantization_planted_hand_vector(spark):
-    """Hand-checkable int8 codes on a 4-dim vector, plus the
-    zero-vector guard. The reconstruction-error expectation mirrors
-    the exact IEEE expression (floor(|x - q*s/127|*1e9 + 0.5)) in
-    Python, which follows the same correctly-rounded double semantics."""
-    import math
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        int8_quantization_frame,
-    )
-
-    x = [1.0, -0.5, 0.25, 0.0]
-    emb = spark.createDataFrame(
-        [(0, [float(v) for v in x]), (1, [0.0, 0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = {
-        r["vec_id"]: r
-        for r in int8_quantization_frame(emb, dim=4).collect()
-    }
-
-    # s = 1.0; codes: 127, -floor(63.5+0.5)=-64, floor(31.75+0.5)=32, 0
-    r0 = rows[0]
-    assert r0["scale_micro"] == 1_000_000
-    assert r0["code_sum"] == 127 - 64 + 32
-    assert r0["code_checksum"] == 1 * 127 + 2 * -64 + 3 * 32
-    assert r0["n_maxed"] == 1
-    q = [127, -64, 32, 0]
-    expect_err = sum(
-        math.floor(abs(v - qq * 1.0 / 127) * 1e9 + 0.5)
-        for v, qq in zip(x, q)
-    )
-    assert r0["err_nano_sum"] == expect_err > 0
-
-    # zero vector: guard kicks in — all codes and errors exactly 0
-    r1 = rows[1]
-    assert (
-        r1["scale_micro"], r1["code_sum"], r1["code_checksum"],
-        r1["n_maxed"], r1["err_nano_sum"],
-    ) == (0, 0, 0, 0, 0)
-
-
-def test_kmeans_lloyd_planted_two_clusters(spark):
-    """Two planted tight groups in 2-dim micro space: Lloyd with k=2
-    must separate them, and the centroid checksums must equal the
-    hand-computed integer means of each group."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        kmeans_lloyd_frame,
-    )
-
-    # seeds: vec 0 (low group), vec 1 (high group); two more per group
-    vecs = [
-        (0, [0.10, 0.10]),
-        (1, [0.90, 0.90]),
-        (2, [0.12, 0.10]),
-        (3, [0.10, 0.14]),
-        (4, [0.88, 0.90]),
-        (5, [0.90, 0.86]),
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    out = {
-        r["cid"]: r for r in kmeans_lloyd_frame(emb, dim=2, k=2).collect()
-    }
-    assert set(out) == {0, 1}
-    assert out[0]["n_members"] == 3 and out[1]["n_members"] == 3
-
-    # integer centroid means (micro units; float32->double of these
-    # literals is exact enough that FLOOR lands on the same micro ints
-    # the engines compute — verified by the assertion itself)
-    lo = [(100000 + 120000 + 100000) // 3, (100000 + 100000 + 140000) // 3]
-    hi = [(900000 + 880000 + 900000) // 3, (900000 + 900000 + 860000) // 3]
-    assert out[0]["centroid_checksum"] == 1 * lo[0] + 2 * lo[1]
-    assert out[1]["centroid_checksum"] == 1 * hi[0] + 2 * hi[1]
-
-
-def test_kmeans_lloyd_duplicate_seed_empties_cluster(spark):
-    """Duplicate seed vectors: both initial centroids coincide, every
-    assignment ties and goes to the lower cid, so cluster 1 is EMPTY
-    from round 1 on. The COALESCE path must keep the run alive (no
-    div-by-zero, no dropped rows) and the report shows one cluster
-    holding everything."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        kmeans_lloyd_frame,
-    )
-
-    emb = spark.createDataFrame(
-        [(0, [0.5, 0.5]), (1, [0.5, 0.5]), (2, [0.6, 0.6]), (3, [0.4, 0.4])],
-        "vec_id long, embedding array<float>",
-    )
-    rows = kmeans_lloyd_frame(emb, dim=2, k=2).collect()
-    assert len(rows) == 1
-    assert rows[0]["cid"] == 0 and rows[0]["n_members"] == 4
 
 
 def test_collect_query_embedding_contract(spark):
@@ -752,41 +491,9 @@ def test_rank_normalize_planted_ranks_and_ties(spark):
     assert out[2] == (2_000_000, 1 * 1_000_000 + 2 * 1_000_000)
 
 
-def test_pca_power_iteration_recovers_planted_direction(spark, tmp_path):
-    """emb_pca_power_iteration on a planted cloud dominated by one
-    axis: vectors concentrate on dimension 7 (plus small deterministic
-    off-axis noise), so the round-2 renormalized coordinate vector
-    must peak at dimension 7 at full scale (|v2[7]| = 1000) with every
-    other coordinate well below — and the iteration must have MOVED
-    from the uniform start (v2 spread != v0 spread)."""
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        EMB_DIM,
-        PCA_V_SCALE,
-        emb_pca_power_iteration,
-    )
-
-    rows = []
-    for i in range(80):
-        vec = [0.01 * ((i * 13 + j * 7) % 11 - 5) for j in range(EMB_DIM)]
-        vec[7] = 0.9 if i % 2 == 0 else 0.85
-        rows.append((i, vec, i % 3))
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    p = str(tmp_path / "sf")
-    df.write.parquet(f"{p}/embeddings.parquet")
-
-    got = {r["pos"]: (r["v1"], r["v2"])
-           for r in emb_pca_power_iteration(spark, p).collect()}
-    assert len(got) == EMB_DIM
-    assert abs(got[7][1]) == PCA_V_SCALE  # dominant axis at full scale
-    others = [abs(v2) for pos, (_, v2) in got.items() if pos != 7]
-    assert max(others) < PCA_V_SCALE // 4
-
-
 def test_fixture_corpora_hit_frozen_fingerprint_arms():
-    """The contract-class oracles (sim_pq_quality / sim_ivf_cell_quality
-    / sim_ivfpq_topk) dispatch their pinned measured integers on the
+    """The contract-class oracles (sim_pq_quality and
+    sim_ivf_cell_quality) dispatch their pinned measured integers on the
     _EMB_FINGERPRINT_CTE corpus signature. This pins that the driver
     fixtures land on their FROZEN arms — and therefore that the r14
     synthetic-sf1 arm (_EMB_SIG_SF1SYN) is machine-verified UNREACHED

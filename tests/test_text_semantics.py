@@ -433,97 +433,6 @@ def test_fuzzy_prefix_block_cap_is_deterministic(spark, tmp_path):
     assert max(seen) == FUZZY_BLOCK_CAP - 1  # caps keep LOWEST doc_ids
 
 
-def _py_bpe(word_counts, rounds):
-    """Reference BPE: greedy left-to-right merge application over symbol
-    lists, top pair by (count DESC, left ASC, right ASC)."""
-    segs = {w: list(w) for w in word_counts}
-    merges = []
-    for _ in range(rounds):
-        counts = {}
-        for w, c in word_counts.items():
-            s = segs[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + c
-        if not counts:
-            break
-        (x, y), pc = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((x, y, pc))
-        for w, s in segs.items():
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == x and s[i + 1] == y:
-                    out.append(x + y)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            segs[w] = out
-    return merges
-
-
-def test_bpe_matches_python_reference_on_random_corpora(spark):
-    """Hypothesis property: on random corpora over a 3-letter alphabet
-    (so pair collisions and repeated-symbol words actually happen) the
-    distributed BPE rounds must produce exactly the Python reference's
-    merge table — the padded-string replace and the greedy list merge
-    are the same operation, pinned generatively."""
-    import os
-    import tempfile
-    from collections import Counter
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from erathia_market_etl_spark.plans.text_queries import text_bpe_merges
-
-    @settings(max_examples=4, deadline=None)
-    @given(
-        st.lists(
-            st.text(alphabet="abc", min_size=1, max_size=6),
-            min_size=1,
-            max_size=25,
-        ),
-        st.integers(min_value=1, max_value=4),
-    )
-    def run(all_words, rounds):
-        import erathia_market_etl_spark.plans.text_queries as tq
-
-        rows = []
-        # pack words into a few documents (space-joined), exercising the
-        # corpus->vocab aggregate too
-        for i in range(0, len(all_words), 5):
-            chunk = " ".join(all_words[i:i + 5])
-            rows.append((i, chunk, "en", "s", len(chunk)))
-        with tempfile.TemporaryDirectory() as d:
-            _write_docs(spark, rows, d)
-            old_rounds = tq.BPE_ROUNDS
-            tq.BPE_ROUNDS = rounds
-            try:
-                got = [
-                    (r["left_sym"], r["right_sym"], r["pair_count"])
-                    for r in text_bpe_merges(spark, d).collect()
-                ]
-            finally:
-                tq.BPE_ROUNDS = old_rounds
-        want = _py_bpe(dict(Counter(all_words)), rounds)
-        assert got == want, (all_words, rounds, got, want)
-
-    run()
-
-
-def test_bpe_stops_when_no_pairs_remain(spark, tmp_path):
-    """Single-character words only: zero adjacent pairs, the merge
-    table must be EMPTY (not crash, not emit a null row) — the same
-    early stop the oracle's empty top-CTE arm produces."""
-    from erathia_market_etl_spark.plans.text_queries import text_bpe_merges
-
-    rows = [(0, "a b c a b", "en", "s", 9)]
-    d = _write_docs(spark, rows, str(tmp_path))
-    assert text_bpe_merges(spark, d).collect() == []
-
-
 def test_chunk_overlap_boundaries_exact(spark, tmp_path):
     """Chunker arithmetic on planted token counts: a short doc and an
     exactly-64-token doc yield ONE chunk; 65 tokens yield two chunks
@@ -564,24 +473,6 @@ def test_chunk_overlap_boundaries_exact(spark, tmp_path):
     assert c0 == [f"t{i}" for i in range(64)]
     assert c1 == [f"t{i}" for i in range(48, 65)]
     assert c0[48:] == c1[:16]
-
-
-def test_bpe_compression_merges_shorten_segmentation(spark):
-    """Apply-side sanity on the fixture corpus: per source, symbols
-    after merging never exceed characters (a merge only shortens), and
-    the learned merges genuinely compress somewhere
-    (chars_per_symbol > 1 — with 5 learned merges over a natural-ish
-    vocabulary some words must contain a merged pair)."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        text_bpe_compression,
-    )
-
-    rows = text_bpe_compression(spark, SF_SMOKE).collect()
-    assert rows
-    for r in rows:
-        assert 0 < r["n_symbols"] <= r["n_chars"], r
-        assert r["chars_per_symbol"] >= 1.0, r
-    assert any(r["chars_per_symbol"] > 1.0 for r in rows)
 
 
 def test_phrase_search_ranking_and_workload(spark):
@@ -803,25 +694,6 @@ def test_source_divergence_identical_and_disjoint_extremes(spark):
     assert 0 < mid < full
 
 
-def test_url_canonicalize_collapses_planted_variants(spark):
-    """Canonicalization contract on the fixture synthesis: every host
-    that received BOTH a case-shuffled and a port-suffixed raw variant
-    reports n_raw_variants > 1 (the messy forms genuinely differed and
-    collapsed), hosts are all-lowercase, and no canonical path keeps a
-    trailing slash."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        text_url_canonicalize,
-    )
-
-    rows = text_url_canonicalize(spark, SF_SMOKE).collect()
-    assert len(rows) == 20  # one per source
-    assert all(r["canon_host"] == r["canon_host"].lower() for r in rows)
-    # every source sees doc_ids spanning the %3 and %5 residues at
-    # sf0.001 (25 docs/source), so every host collapsed >1 raw variant
-    assert all(r["n_raw_variants"] > 1 for r in rows)
-    assert all(r["n_docs"] > 0 and r["total_chars"] > 0 for r in rows)
-
-
 def test_vocab_hapax_profile_planted(spark, tmp_path):
     """text_vocab_hapax_profile semantic pin on a planted corpus:
     srcA = 'a a b c' + 'a d' -> tokens 6, types {a,b,c,d} = 4,
@@ -915,93 +787,6 @@ def test_span_removal_overlapping_spans_cover_union(spark, tmp_path):
     assert out[0]["n_removed"] == 0  # keeper
     assert out[1]["n_removed"] == SPAN_K + 1
     assert out[1]["text_rewritten"] == "head tail"
-
-
-def test_cdc_chunks_core_properties():
-    """CDC core (no SparkSession): chunks reconstruct the text exactly,
-    every boundary sits right after a gram whose hash is 0 mod the
-    divisor, and short/None inputs behave."""
-    from erathia_market_etl_spark.operators.text import (
-        CDC_DIV,
-        CDC_K,
-        cdc_chunks,
-        winnow_doc,
-    )
-
-    s = " ".join(f"tok{i * 7 % 93}x{i}" for i in range(60))
-    cs = cdc_chunks(s)
-    assert "".join(cs) == s
-    assert len(cs) > 3  # non-degenerate at divisor 32 on ~500 chars
-    assert all(c != "" for c in cs)
-    assert cdc_chunks("ab") == ["ab"]  # < CDC_K chars: one whole chunk
-    assert cdc_chunks(None) == []
-    # boundary law: each cut position (start of chunk j>0) equals
-    # previous-content length, and the k-gram ENDING at the cut hashes
-    # to 0 mod CDC_DIV — recompute with the same polynomial
-    import numpy as np
-
-    # pure-Python ints (arbitrary precision) with one final mod 2^64 —
-    # the independent formulation, and no numpy scalar-overflow warning
-    codes = [ord(ch) for ch in s]
-    pos = 0
-    for c in cs[:-1]:
-        pos += len(c)
-        h = 0
-        for cp in codes[pos - CDC_K:pos]:
-            h = h * 1_000_003 + cp
-        assert (h % 2**64) % CDC_DIV == 0, pos
-
-
-def test_cdc_chunks_realign_after_insertion(spark, tmp_path):
-    """THE content-defined property: a prefix insertion shifts every
-    fixed-size chunk but leaves CDC chunks after the first cut
-    byte-identical — so the duplicate-chunk counter sees the shared
-    content. Both docs must report duplicated chunks, covering most of
-    their chunk stream."""
-    from erathia_market_etl_spark.plans.text_queries import text_cdc_chunks
-
-    s = " ".join(f"tok{i * 7 % 93}x{i}" for i in range(60))
-    rows = [
-        (0, s, "en", "s", 1),
-        (1, "INSERTED PREFIX " + s, "en", "s", 1),
-        (2, "completely different content here entirely", "en", "s", 1),
-    ]
-    d = _write_docs(spark, rows, str(tmp_path))
-    out = {r["doc_id"]: r for r in text_cdc_chunks(spark, d).collect()}
-    assert out[0]["n_dup_chunks"] >= out[0]["n_chunks"] - 1
-    assert out[1]["n_dup_chunks"] >= out[1]["n_chunks"] - 2
-    assert out[2]["n_dup_chunks"] == 0
-    # chunk streams reconstruct their documents
-    assert out[0]["n_chars"] == len(s)
-    assert out[1]["n_chars"] == len("INSERTED PREFIX " + s)
-
-
-def test_cdc_chunks_null_text_symmetric_across_engines(spark, tmp_path):
-    """r14 ADVICE: cdc_chunks(None) returns [] so a NULL-text document
-    must vanish from BOTH engines' output — before the oracle's bounds
-    CTE gained `WHERE text IS NOT NULL` the DuckDB side kept the doc
-    with NULL aggregates while Spark dropped it. Planted NULL-text
-    corpus, full driver-style compare."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        TEXT_CDC_CHUNKS_ORACLE,
-        text_cdc_chunks,
-    )
-    from erathia_market_etl_spark.testing import compare_query
-
-    s = " ".join(f"tok{i * 7 % 93}x{i}" for i in range(60))
-    rows = [
-        (0, s, "en", "s", 1),
-        (1, None, "en", "s", 0),
-        (2, "short but real text content", "en", "s", 1),
-    ]
-    d = _write_docs(spark, rows, str(tmp_path))
-    out = {r["doc_id"]: r for r in text_cdc_chunks(spark, d).collect()}
-    assert set(out) == {0, 2}, "NULL-text doc must emit no rows"
-    r = compare_query(
-        "text_cdc_chunks", text_cdc_chunks(spark, d),
-        TEXT_CDC_CHUNKS_ORACLE, d,
-    )
-    assert r.ok, r
 
 
 # ---------------------------------------------------------------------------
@@ -1132,74 +917,3 @@ def test_html_extract_query_oracle_and_block_census(spark, tmp_path):
         TEXT_HTML_EXTRACT_ORACLE, d,
     )
     assert r.ok, r
-
-
-def test_html_link_census_laws(spark):
-    """link_stats rules, each on HTML built to exercise exactly it:
-    hrefless anchors don't count; scheme-relative '//host' is neither
-    internal nor external; mailto/#fragment count as links only; hosts
-    are lowercased; a script-embedded anchor string never counts."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.operators.html import link_stats
-
-    def stats(html):
-        sig = link_stats(F.lit(html))
-        return spark.range(1).select(
-            *[v.alias(k) for k, v in sig.items()]
-        ).collect()[0].asDict()
-
-    out = stats(
-        '<p><a href="/local/a">one</a>'
-        ' <a href="HTTPS://SiTe.EXample.com/Path">two</a>'
-        ' <a href="//cdn.example.com/x">three</a>'
-        ' <a href="mailto:a@b.c">four</a>'
-        ' <a href="#top">five</a>'
-        ' <a name="anchor">not a link</a></p>'
-        '<script>var u = \'<a href="https://evil.example.com/x">\';</script>'
-    )
-    assert out["n_links"] == 5
-    assert out["n_internal"] == 1  # only /local/a
-    assert out["n_external"] == 1  # only the https one
-    assert out["n_hosts"] == 1
-    assert out["host_list"] == "site.example.com"  # lowercased
-
-    # host dedup + deterministic ordering
-    out = stats(
-        '<p><a href="https://b.com/1">x</a> <a href="https://a.com/2">y</a>'
-        ' <a href="http://b.com/3">z</a></p>'
-    )
-    assert out["n_hosts"] == 2 and out["host_list"] == "a.com,b.com"
-
-
-def test_html_links_query_host_branches(spark, tmp_path):
-    """The synthesized query's two host branches: id % 5 == 0 collapses
-    all four nav hosts to site0 (n_hosts 1), any other id gives four
-    distinct hosts — and the DuckDB twin hash-matches on planted
-    docs covering both."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        TEXT_HTML_LINKS_ORACLE,
-        text_html_links,
-    )
-    from erathia_market_etl_spark.testing import compare_query
-
-    rows = [
-        (0, " ".join(f"w{i}" for i in range(12)), "en", "s", 1),
-        (3, " ".join(f"w{i}" for i in range(30)), "en", "s", 1),
-        (10, " ".join(f"w{i}" for i in range(10)), "en", "s", 1),
-    ]
-    d = _write_docs(spark, rows, str(tmp_path))
-    out = {r["doc_id"]: r.asDict() for r in text_html_links(spark, d).collect()}
-    assert out[0]["n_hosts"] == 1 and out[0]["host_list"] == "site0.example.com"
-    assert out[10]["n_hosts"] == 1
-    assert out[3]["n_hosts"] == 4
-    assert out[3]["host_list"] == ",".join(
-        sorted(f"site{3 * (j + 1) % 5}.example.com" for j in range(4))
-    )
-    for r in out.values():
-        assert (r["n_links"], r["n_internal"], r["n_external"]) == (8, 4, 4)
-    res = compare_query(
-        "text_html_links", text_html_links(spark, d),
-        TEXT_HTML_LINKS_ORACLE, d,
-    )
-    assert res.ok, res

@@ -636,60 +636,6 @@ def test_ewma_smoothing_planted_fold(spark):
     assert out[("b", "2024-01-03")] == 125
 
 
-def test_anomaly_mad_flags_planted_spike(spark):
-    """Planted series: type 'a' is perfectly flat except ONE spiked
-    Wednesday — with a flat dow baseline and one-day residual spike,
-    the spike day must be the ONLY flagged row. Pins that the seasonal
-    stage doesn't flag ordinary weekday structure (every Monday is
-    high, but consistently so — residual 0) and that the MAD envelope
-    flags the genuine outlier."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        ts_anomaly_mad_flags,
-    )
-
-    rows = []
-    eid = 0
-    # 4 weeks; Mondays always ~500, other days ~100 (plus a per-week
-    # +wk drift so residuals are non-degenerate and MAD > 0)
-    for wk in range(4):
-        for d in range(7):
-            day = datetime.datetime(2024, 1, 1 + wk * 7 + d, 9)
-            val = (500.0 if d == 0 else 100.0) + wk
-            # week 2's Wednesday (d=2) spikes 10x
-            if wk == 2 and d == 2:
-                val = 1000.0
-            eid += 1
-            rows.append((eid, day, 1, "a", val))
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double",
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.parquet(d + "/events.parquet")
-        out = ts_anomaly_mad_flags(spark, d).collect()
-    flagged = [str(r["day"]) for r in out if r["is_anomaly"]]
-    # the spike itself must flag...
-    assert "2024-01-17" in flagged
-    # ...and a mean baseline is CONTAMINATED by the spike it absorbs,
-    # so its same-weekday siblings may flag too (the honest behavior
-    # of a mean seasonal stage) — but nothing off-Wednesday may:
-    # Mondays are 5x the other days every single week (pure
-    # seasonality, residual ~0) and must never flag
-    wednesdays = {"2024-01-03", "2024-01-10", "2024-01-17", "2024-01-24"}
-    assert set(flagged) <= wednesdays
-    mondays = [
-        r for r in out
-        if str(r["day"]) in {"2024-01-01", "2024-01-08",
-                             "2024-01-15", "2024-01-22"}
-    ]
-    assert len(mondays) == 4
-    assert all(not r["is_anomaly"] for r in mondays)
-
-
 def test_peak_concurrency_matches_bruteforce_on_random_intervals(spark):
     """peak_concurrency_frame (r12) must equal the pure-Python sweep
     line on random interval sets — including exact start/end ties
@@ -770,37 +716,3 @@ def test_activity_streaks_match_bruteforce_on_random_days(spark, tmp_path):
         n, ex = want.get(L, (0, None))
         want[L] = (n + 1, u if ex is None else min(ex, u))
     assert got == want
-
-
-def test_autocorrelation_matches_numpy_on_fixture(spark):
-    """ts_autocorrelation must equal the numpy-computed sample ACF
-    (same non-mean-adjusted-denominator definition, whole-dollar daily
-    totals) at every lag, and lag-k pair counts must be n - k."""
-    import math
-
-    import numpy as np
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        ts_autocorrelation,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {r["lag"]: (r["n_pairs"], r["acf"])
-           for r in ts_autocorrelation(spark, sf).collect()}
-    pdf = (
-        spark.read.parquet(f"{sf}/events.parquet")
-        .selectExpr(
-            "CAST(ts AS DATE) AS day",
-            "CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents",
-        )
-        .groupBy("day").sum("cents").toPandas()
-        .sort_values("day")
-    )
-    x = (pdf["sum(cents)"] // 100).to_numpy(dtype=np.int64)
-    n = len(x)
-    dv = n * x - x.sum()
-    den = float((dv.astype(object) * dv.astype(object)).sum())
-    for k in range(1, 8):
-        num = float((dv[:-k].astype(object) * dv[k:].astype(object)).sum())
-        want = math.floor(num / den * 1_000_000 + 0.5) / 1_000_000
-        assert got[k] == (n - k, want), k

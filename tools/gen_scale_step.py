@@ -254,14 +254,12 @@ def generate_rest(con, mx: dict, r: str) -> None:
 def run_timings() -> None:
     from erathia_market_etl_spark.config import EngineConfig
     from erathia_market_etl_spark.plans.dedup_queries import (
-        dedup_minhash_jaccard_estimate,
+        dedup_minhash_lsh_pairs,
     )
     from erathia_market_etl_spark.plans.graph_queries import (
-        graph_triangle_cohesion,
+        graph_pagerank_influence,
     )
-    from erathia_market_etl_spark.plans.profile_queries import (
-        profile_fact_columns,
-    )
+    from erathia_market_etl_spark.plans.relational import agg_stats_profile
     from erathia_market_etl_spark.plans.text_queries import (
         text_language_id,
         text_quality_gate,
@@ -269,9 +267,9 @@ def run_timings() -> None:
     from erathia_market_etl_spark.session import get_spark
 
     queries = [
-        graph_triangle_cohesion,
-        dedup_minhash_jaccard_estimate,
-        profile_fact_columns,
+        graph_pagerank_influence,
+        dedup_minhash_lsh_pairs,
+        agg_stats_profile,
         text_quality_gate,
         text_language_id,
     ]
@@ -306,7 +304,7 @@ def run_timings() -> None:
 # int64 envelopes (gini, pagerank fixed-point, HLL packing), bucket
 # caps, window ties, uint64 wraparound (winnowing), iterative
 # convergence. The fingerprint-dispatched contract oracles (sim_pq /
-# sim_ivf / sim_ivfpq) JOIN the sweep in r14: this synthetic corpus's
+# sim_ivf) JOIN the sweep in r14: this synthetic corpus's
 # fingerprint and measured integers are pinned as a third arm in each
 # CASE (VERDICT r13 item 3 — _EMB_SIG_SF1SYN in plans/
 # similarity_queries.py), so they now hash-attest here instead of
@@ -344,9 +342,8 @@ def run_compare() -> None:
 
     queries, oracles, local = all_queries(), all_oracles(), local_queries()
     items = [(n, queries[n], oracles[n]) for n in COMPARE_NAMES]
-    # local-only: agg_hll_registers, and the contract sibling
-    # sim_ivfpq_topk (third-fingerprint-pinned r14)
-    items += [(n, *local[n]) for n in ("agg_hll_registers", "sim_ivfpq_topk")]
+    # local-only: agg_hll_registers
+    items += [("agg_hll_registers", *local["agg_hll_registers"])]
     spark = get_spark(
         EngineConfig(app_name="sf1-compare", driver_memory="24g")
     )
