@@ -17,7 +17,7 @@ import os
 
 from .config import EngineConfig, SimulationConfig
 from .generator.bronze import generate_bronze
-from .pipeline import MART_SQL, run_gold, run_silver
+from .pipeline import run_gold, run_silver
 from .session import get_spark
 
 
@@ -163,7 +163,3 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
 if __name__ == "__main__":
     raise SystemExit(main())
-
-
-# keep the mart list importable for tooling parity checks
-MARTS = sorted(MART_SQL)

@@ -11,7 +11,7 @@ double. The reference rounds every money output to 2dp
 contract while making it reproducible at any parallelism.
 
 Oracle-side twins (DuckDB):
-    money_sum(x)  ->  ROUND(SUM(CAST(x AS DECIMAL(38,12))), 2)::DOUBLE
+    sum of x      ->  ROUND(SUM(CAST(x AS DECIMAL(38,12))), 2)::DOUBLE
     money_avg(x)  ->  ROUND(CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE)
                             / COUNT(*), 2)
 
@@ -51,16 +51,6 @@ def exact_sum(col: Column | str) -> Column:
     return F.sum(c.cast(DEC))
 
 
-def money_sum(col: Column | str) -> Column:
-    """SUM rounded to 2dp, returned as double (reference F7 contract)."""
-    return F.round(exact_sum(col), 2).cast("double")
-
-
-def money_net(pos: Column | str, neg: Column | str) -> Column:
-    """ROUND(SUM(pos) - SUM(neg), 2) on exact decimals (reference A4)."""
-    return F.round(exact_sum(pos) - exact_sum(neg), 2).cast("double")
-
-
 def cents(col: Column | str) -> Column:
     """Exact integer cents (long) from a 2dp-valued money double.
 
@@ -90,15 +80,15 @@ def _unscale_round2(sum_long: Column, scale: int) -> Column:
 def money_sum_cents(col: Column, scale: int = 2) -> Column:
     """SUM of a scaled-long money expression, rounded to 2dp double.
 
-    Fast path of money_sum() for inputs known to be exactly-2dp money
-    (cents() columns, scale 2) or products of two of them (scale 4).
-    Same oracle twin as money_sum — values are identical because the
-    integer arithmetic is exact."""
+    Fast path of the DECIMAL(38,12) money sum for inputs known to be
+    exactly-2dp money (cents() columns, scale 2) or products of two of
+    them (scale 4). Same oracle twin as that sum — values are identical
+    because the integer arithmetic is exact."""
     return _unscale_round2(F.sum(col), scale)
 
 
 def money_net_cents(pos: Column, neg: Column, scale: int = 2) -> Column:
-    """ROUND(SUM(pos) - SUM(neg), 2) on scaled longs (money_net fast path)."""
+    """ROUND(SUM(pos) - SUM(neg), 2) on scaled longs."""
     return _unscale_round2(F.sum(pos) - F.sum(neg), scale)
 
 

@@ -74,13 +74,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles straight from a text column — prefer
-    shingles_from_tokens over a projected token array in hot paths
-    (see its docstring)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def rotated(h: Column, j: int) -> Column:
     """Hash function j of the rotate-one-hash MinHash scheme: the md5
     hex string rotated left by 4·j chars. Rotations of a uniform 128-bit
@@ -507,147 +500,3 @@ def lsh_bucket_stats(bands: DataFrame, key_cols: list[str],
         )
         .orderBy(idx)
     )
-
-
-# Bloom-filter membership (r9) ----------------------------------------------
-#
-# The day-2 incremental-dedup path at 100 TB: probing an incoming batch
-# against HISTORY should not join the full fingerprint table (billions
-# of rows re-shuffled per ingest). A Bloom filter compresses history to
-# BITS_PER_KEY bits per fingerprint with NO false negatives — probe the
-# broadcast bit-table first, and only "maybe seen" survivors pay the
-# exact anti-join. Built as pure DataFrame ops: ONE bit_or aggregate
-# over k exploded bit positions (map-side combinable — the shuffle
-# carries at most one word row per partition per word), and the probe
-# is a broadcast hash join against the words table. All integer
-# arithmetic is md5-derived and engine-portable, so a DuckDB twin
-# reproduces the filter bit-for-bit.
-
-BLOOM_BITS_PER_KEY = 20  # m = 20n bits -> FPR ~2e-4 at k=7
-BLOOM_K = 7              # hash probes per key (double hashing)
-BLOOM_WORD_BITS = 63     # bits stored per BIGINT word: bit 63 is
-                         # deliberately unused — DuckDB raises on
-                         # 1::BIGINT << 63 (signed overflow) where Spark
-                         # wraps, so the layout keeps every mask exact
-                         # on BOTH engines
-
-
-def bloom_m_bits(n_keys: int) -> int:
-    """Filter size: BITS_PER_KEY * n rounded up to whole words.
-    DuckDB twin: 63 * ((20 * n + 62) // 63)."""
-    n = max(n_keys, 1)
-    return BLOOM_WORD_BITS * (
-        (BLOOM_BITS_PER_KEY * n + BLOOM_WORD_BITS - 1) // BLOOM_WORD_BITS
-    )
-
-
-def _bloom_h(fp: Column, salt: str) -> Column:
-    """60-bit integer hash of a fingerprint (first 15 hex chars of a
-    salted md5) — small enough that h1 + (k-1)*h2 <= 7 * 2^60 < 2^63
-    stays exact in signed-long arithmetic on both engines.
-    DuckDB twin: CAST('0x' || substr(md5('{salt}|' || fp), 1, 15) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt + "|"), fp)), 1, 15), 16, 10
-    ).cast("bigint")
-
-
-def _bloom_positions(m_bits: int, k: int) -> Column:
-    """k bit positions for the fp's (h1, h2) via Kirsch-Mitzenmacher
-    double hashing: pos_i = (h1 + i*h2) mod m. Unrolled as a literal
-    array (k is a Python constant) rather than transform() — HOF
-    lambdas are excluded from whole-stage codegen (the minhash
-    signature lesson). Returns the exploded position column; callers
-    derive (word_idx, mask) from it."""
-    return F.explode(
-        F.array(*[(F.col("h1") + i * F.col("h2")) % m_bits for i in range(k)])
-    )
-
-
-def _word_and_mask(df: DataFrame, m_bits: int, k: int) -> DataFrame:
-    return df.select(
-        "*",
-        (_bloom_positions(m_bits, k)).alias("pos"),
-    ).select(
-        "*",
-        F.expr(f"pos DIV {BLOOM_WORD_BITS}").alias("word_idx"),
-        F.expr(
-            f"shiftleft(cast(1 as bigint), cast(pos % {BLOOM_WORD_BITS} as int))"
-        ).alias("mask"),
-    ).drop("pos")
-
-
-def bloom_build(fps: DataFrame, fp_col: str, m_bits: int,
-                k: int = BLOOM_K) -> DataFrame:
-    """Sparse Bloom word table (word_idx, word) from a fingerprint
-    column: k positions per key, one bit_or aggregate. The table has at
-    most m/63 rows (~40 KB per million keys at 20 bits/key after the
-    bit_or) — broadcastable for probes at any corpus scale."""
-    keyed = fps.select(
-        _bloom_h(F.col(fp_col), "bf1").alias("h1"),
-        _bloom_h(F.col(fp_col), "bf2").alias("h2"),
-    )
-    return (
-        _word_and_mask(keyed, m_bits, k)
-        .groupBy("word_idx")
-        .agg(F.bit_or("mask").alias("word"))
-    )
-
-
-def bloom_probe(items: DataFrame, fp_col: str, words: DataFrame,
-                m_bits: int, k: int = BLOOM_K,
-                out_col: str = "maybe_seen") -> DataFrame:
-    """Membership probe: every input row gains ``out_col`` = TRUE iff
-    all k of its filter bits are set (maybe in history — Bloom
-    guarantees no false negatives, so FALSE means definitely new).
-
-    ZERO-shuffle on the probe side: rather than exploding k probe rows
-    per item and re-aggregating (which would shuffle the batch once),
-    each of the k positions is resolved by its own LEFT BROADCAST join
-    against the same word table — Spark reuses one broadcast exchange
-    across all k joins (ReusedExchange) and the whole chain stays in
-    the batch's map stage. Input keeps all its columns."""
-    out = items.select(
-        "*",
-        _bloom_h(F.col(fp_col), "bf1").alias("h1"),
-        _bloom_h(F.col(fp_col), "bf2").alias("h2"),
-    )
-    checks = []
-    for i in range(k):
-        out = out.withColumn(f"_wi{i}", F.expr(
-            f"((h1 + {i} * h2) % {m_bits}) DIV {BLOOM_WORD_BITS}"
-        )).withColumn(f"_mask{i}", F.expr(
-            f"shiftleft(cast(1 as bigint), "
-            f"cast((h1 + {i} * h2) % {m_bits} % {BLOOM_WORD_BITS} as int))"
-        ))
-        # join the SAME words DataFrame each round with the rename in a
-        # Project ABOVE the join — the broadcast subtree stays
-        # byte-identical, so exchange reuse builds the word table once
-        # and the remaining k-1 joins consume a ReusedExchange. The
-        # broadcast side gets a PER-ITERATION alias so each condition
-        # names its own join's right side unambiguously — referencing
-        # words["word_idx"] would lean on Spark's ambiguous-self-join
-        # disambiguation once `words` also sits in the left lineage
-        # (r9 ADVICE, low; SubqueryAlias is erased in analysis, so the
-        # physical broadcast subtree — and its reuse — is unchanged,
-        # pinned by test_bloom's single-broadcast plan check).
-        w = words.alias(f"_bw{i}")
-        out = (
-            out.join(
-                F.broadcast(w),
-                on=out[f"_wi{i}"] == F.col(f"_bw{i}.word_idx"),
-                how="left",
-            )
-            .drop("word_idx")
-            .withColumnRenamed("word", f"_w{i}")
-        )
-        checks.append(
-            F.coalesce(
-                F.col(f"_w{i}").bitwiseAND(F.col(f"_mask{i}"))
-                == F.col(f"_mask{i}"),
-                F.lit(False),
-            )
-        )
-    hit = checks[0]
-    for c in checks[1:]:
-        hit = hit & c
-    return out.select(*items.columns, hit.alias(out_col))

@@ -681,57 +681,3 @@ def pagerank_fixed_point(
         stats["rounds"] = rounds
         stats["residual"] = residual
     return ranks.select("v", "rank", "deg")
-
-
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """Fixed-round k-core peeling over a symmetrized edge table:
-    ``rounds`` iterations of "drop every node with current degree < k,
-    restrict edges to surviving endpoints". Returns (v, deg) for the
-    nodes still standing, with deg measured in the SURVIVING subgraph
-    — the round-``rounds`` accounting state, same contract family as
-    ``pagerank_fixed_point(iters=...)``: a fixed round count is what
-    lets a SQL oracle unroll the identical peel as chained CTEs and
-    attest the longs bit-for-bit (the converged core needs
-    degree-stable iteration the oracle cannot express finitely).
-
-    Peeling CASCADES — removing a node can push a neighbor below k in
-    the next round (tests plant a chain where round 2 peels what
-    round 1 exposed) — which is exactly why the one-shot "filter by
-    initial degree" shortcut is wrong.
-
-    Scale shape: each round is one degree aggregate (map-side
-    combinable) plus two LEFT SEMI joins restricting the edge table by
-    the shrinking keep-set; edges only ever shrink, so per-round cost
-    is monotonically decreasing. Every round's frames are eagerly
-    localCheckpoint()ed — the lineage discipline shared by all
-    iterative kernels in this module (a stacked plan would grow one
-    join-pair deeper per round)."""
-    if k < 1 or rounds < 1:
-        raise ValueError(f"need k >= 1 and rounds >= 1, got {k}, {rounds}")
-    e = edges.select(src, dst).localCheckpoint()
-    for _ in range(rounds):
-        keep = (
-            e.groupBy(F.col(src).alias("v"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("v")
-            .localCheckpoint()
-        )
-        e = (
-            e.join(
-                keep.select(F.col("v").alias(src)), src, "left_semi"
-            )
-            .join(
-                keep.select(F.col("v").alias(dst)), dst, "left_semi"
-            )
-            .localCheckpoint()
-        )
-    return e.groupBy(F.col(src).alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )

@@ -60,28 +60,18 @@ def marker_hits_from_tokens(toks: Column, markers: tuple[str, ...]) -> Column:
     (r17): an inline ``split`` expression is re-parsed at every
     reference, so a query scoring one text against several marker sets
     should materialize the token array once and filter it k times
-    instead of re-splitting k times. Same integer as ``marker_hits``.
+    instead of re-splitting k times.
     DuckDB twin: len(list_filter(toks, w -> w IN (...)))."""
     arr = F.array(*[F.lit(m) for m in markers])
     return F.size(F.filter(toks, lambda w: F.array_contains(arr, w)))
 
 
-def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
-    """Count of tokens (with duplicates) found in a marker set.
-    DuckDB twin: len(list_filter(string_split(..), w -> w IN (...)))."""
-    return marker_hits_from_tokens(tokens(text), markers)
-
-
-def language_scores(text: Column) -> dict[str, Column]:
-    return {lang: marker_hits(text, LANG_MARKERS[lang]) for lang in LANG_ORDER}
-
-
 def language_scores_from_tokens(toks: Column) -> dict[str, Column]:
-    """``language_scores`` over a pre-projected token array: one split
-    feeds all five marker filters (r17 — the five inline splits each
-    re-parsed the text; projecting the array once measured ~8% off the
-    registered query and generalizes: k marker sets cost one tokenize
-    at any k)."""
+    """Per-language marker-hit scores over a pre-projected token array:
+    one split feeds all five marker filters (r17 — the five inline
+    splits each re-parsed the text; projecting the array once measured
+    ~8% off the registered query and generalizes: k marker sets cost
+    one tokenize at any k)."""
     return {
         lang: marker_hits_from_tokens(toks, LANG_MARKERS[lang])
         for lang in LANG_ORDER

@@ -63,10 +63,10 @@ def shared_pair_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels over ``shared_minhash_pairs``, a
     session stage: the component rounds run EAGERLY (checkpointed, so
     no extra persist) at plan construction, once per session for the
-    three consumers that cluster the full candidate-pair set
-    (dedup_cluster_components, dedup_corpus_representatives,
-    sample_leakage_safe_splits). The funnel clusters the gate-induced
-    subgraph, a different edge set: its own stage, _funnel_labels."""
+    two consumers that cluster the full candidate-pair set
+    (dedup_cluster_components, dedup_corpus_representatives). The
+    funnel clusters the gate-induced subgraph, a different edge set:
+    its own stage, _funnel_labels."""
     from ..operators.graph import connected_components_auto
 
     def build(stats: dict) -> DataFrame:
@@ -501,135 +501,4 @@ def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("prefix_edit_distance") <= FUZZY_MAX_DIST)
         .orderBy("doc_a", "doc_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# dedup_bloom_incremental: Bloom-filter membership pre-pass for the
-# incremental-ingest path.
-# ---------------------------------------------------------------------------
-
-from ..operators.dedup import (  # noqa: E402  (section-local import)
-    BLOOM_K,
-    BLOOM_WORD_BITS,
-    bloom_build,
-    bloom_m_bits,
-    bloom_probe,
-)
-
-_BLOOM_HIST_SPLIT = 250  # same history/batch split as dedup_incremental_new_docs
-
-
-def _bloom_pos_sql(i: int) -> str:
-    return f"((h1 + {i} * h2) % m)"
-
-
-_BLOOM_BITS_UNION = "\n            UNION ALL\n".join(
-    f"""            SELECT doc_id, fp,
-                   {_bloom_pos_sql(i)} // {BLOOM_WORD_BITS} AS word_idx,
-                   CAST(1 AS BIGINT)
-                       << CAST({_bloom_pos_sql(i)} % {BLOOM_WORD_BITS} AS INTEGER)
-                       AS mask
-            FROM {{src}}, par"""
-    for i in range(BLOOM_K)
-)
-
-DEDUP_BLOOM_INCREMENTAL_ORACLE = f"""
-    WITH hist AS (
-        SELECT DISTINCT md5(trim(lower(text))) AS fp
-        FROM documents WHERE doc_id < {_BLOOM_HIST_SPLIT}
-    ),
-    par AS (
-        SELECT {BLOOM_WORD_BITS}
-               * ((20 * COUNT(*) + {BLOOM_WORD_BITS - 1}) // {BLOOM_WORD_BITS})
-               AS m
-        FROM hist
-    ),
-    hh AS (
-        SELECT NULL AS doc_id, fp,
-               CAST('0x' || substr(md5('bf1|' || fp), 1, 15) AS BIGINT) AS h1,
-               CAST('0x' || substr(md5('bf2|' || fp), 1, 15) AS BIGINT) AS h2
-        FROM hist
-    ),
-    hbits AS (
-{_BLOOM_BITS_UNION.format(src="hh")}
-    ),
-    words AS (
-        SELECT word_idx, bit_or(mask) AS word FROM hbits GROUP BY word_idx
-    ),
-    inc AS (
-        SELECT doc_id, md5(trim(lower(text))) AS fp
-        FROM documents WHERE doc_id >= {_BLOOM_HIST_SPLIT}
-    ),
-    ih AS (
-        SELECT doc_id, fp,
-               CAST('0x' || substr(md5('bf1|' || fp), 1, 15) AS BIGINT) AS h1,
-               CAST('0x' || substr(md5('bf2|' || fp), 1, 15) AS BIGINT) AS h2
-        FROM inc
-    ),
-    ibits AS (
-{_BLOOM_BITS_UNION.format(src="ih")}
-    ),
-    probed AS (
-        SELECT b.doc_id, b.fp,
-               bool_and(COALESCE((w.word & b.mask) = b.mask, FALSE))
-                   AS maybe_seen
-        FROM ibits b LEFT JOIN words w ON b.word_idx = w.word_idx
-        GROUP BY b.doc_id, b.fp
-    )
-    SELECT p.doc_id, p.fp, p.maybe_seen,
-           (h.fp IS NOT NULL) AS actually_seen
-    FROM probed p LEFT JOIN hist h ON p.fp = h.fp
-    ORDER BY p.doc_id
-    """
-
-
-@query("dedup_bloom_incremental", DEDUP_BLOOM_INCREMENTAL_ORACLE, local=True)
-def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership pre-pass for incremental-ingest dedup
-    (the scale refinement of dedup_incremental_new_docs): history's
-    distinct fingerprints are compressed into a BLOOM_BITS_PER_KEY
-    (20)-bits-per-key word table — built by ONE map-side-combinable
-    bit_or aggregate — and the incoming batch probes it through a
-    BROADCAST join, gaining ``maybe_seen`` (no false negatives: FALSE
-    is definitely-new and skips the exact check entirely). Output
-    carries ``actually_seen`` (the exact verdict) alongside, so the
-    filter's contract is part of the compared result: every row must
-    satisfy actually_seen => maybe_seen, and rows with maybe_seen AND
-    NOT actually_seen are the (rare, ~2e-4 at k=7) false positives the
-    exact verify pays for.
-
-    At 100 TB: the full-history anti-join re-shuffles billions of
-    fingerprint rows per ingest; the Bloom pass reduces that to (a) a
-    one-time filter build amortized across ingests (the word table is
-    mergeable by bit_or — union new batches in), and (b) an exact join
-    ONLY for maybe-seen survivors — at a 0.1% daily-dup rate that is
-    1000x less join input. All hash arithmetic is md5-derived 60-bit
-    integers (h1 + 6*h2 < 2^63, exact in signed longs on both
-    engines); words store 63 bits each because DuckDB raises on
-    1::BIGINT << 63 where Spark wraps. The m = 20n sizing recomputes
-    from a one-scalar count action (the bounded-materialization
-    pattern of the k-means sample)."""
-    docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.trim(F.lower(F.col("text")))).alias("fp")
-    # localCheckpoint (the graph-kernel lineage pattern): hist feeds the
-    # sizing count, the filter build, AND the exact-verdict join; words
-    # feeds k broadcast probes — without the checkpoint each consumer
-    # re-runs the distinct/aggregate subtree (measured: 7x the build)
-    hist = (
-        docs.filter(F.col("doc_id") < _BLOOM_HIST_SPLIT)
-        .select(fp).distinct().localCheckpoint()
-    )
-    m = bloom_m_bits(hist.count())
-    words = bloom_build(hist, "fp", m).localCheckpoint()
-    incoming = docs.filter(F.col("doc_id") >= _BLOOM_HIST_SPLIT).select("doc_id", fp)
-    probed = bloom_probe(incoming, "fp", words, m)
-    exact = hist.withColumn("actually_seen", F.lit(True))
-    return (
-        probed.join(F.broadcast(exact), "fp", "left")
-        .select(
-            "doc_id", "fp", "maybe_seen",
-            F.coalesce("actually_seen", F.lit(False)).alias("actually_seen"),
-        )
-        .orderBy("doc_id")
     )

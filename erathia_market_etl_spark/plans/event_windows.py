@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import DEC, _unscale_round2, cents, money_sum_cents
+from ..functions.money import _unscale_round2, cents, money_sum_cents
 from ..sources.events import load_events
 from .registry import query
 
@@ -594,115 +594,6 @@ def present_day_rollup(state: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# timeseries_rolling_zscore: rolling-window anomaly flags over the
-# hourly rollup.
-# ---------------------------------------------------------------------------
-
-ZSCORE_WINDOW = 24  # trailing hours (ROWS frame over observed hours)
-ZSCORE_FLAG = 3.0   # |z| above this flags the hour
-
-TIMESERIES_ROLLING_ZSCORE_ORACLE = f"""
-    WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS hour_start,
-               SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-        FROM events GROUP BY 1, 2
-    ),
-    stats AS (
-        SELECT event_type, hour_start, c,
-               COUNT(*) OVER w AS n,
-               CAST(SUM(c) OVER w AS HUGEINT) AS s1,
-               CAST(SUM(c * c) OVER w AS HUGEINT) AS s2
-        FROM hourly
-        WINDOW w AS (PARTITION BY event_type ORDER BY hour_start
-                     ROWS BETWEEN {ZSCORE_WINDOW - 1} PRECEDING
-                              AND CURRENT ROW)
-    )
-    SELECT event_type, hour_start,
-           ROUND(CAST(c AS DECIMAL(38,0)) / 100, 2)::DOUBLE AS total_value,
-           CASE WHEN n * s2 = s1 * s1 THEN NULL
-                ELSE FLOOR((CAST(c AS HUGEINT) * n - s1)
-                           / SQRT(CAST(n * s2 - s1 * s1 AS DOUBLE))
-                           * 1000000 + 0.5) / 1000000
-           END AS zscore,
-           CASE WHEN n * s2 = s1 * s1 THEN FALSE
-                ELSE ABS((CAST(c AS HUGEINT) * n - s1)
-                         / SQRT(CAST(n * s2 - s1 * s1 AS DOUBLE)))
-                     > {ZSCORE_FLAG}
-           END AS is_anomaly
-    FROM stats
-    ORDER BY event_type, hour_start
-    """
-
-
-@query("timeseries_rolling_zscore", TIMESERIES_ROLLING_ZSCORE_ORACLE, local=True)
-def timeseries_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly flags: hourly totals per series, trailing
-    ZSCORE_WINDOW (24)-row window, flag hours more than ZSCORE_FLAG (3)
-    window (population) standard deviations from the window mean. The monitoring
-    primitive you bolt onto every rollup at scale (burst/outage
-    detection on ingest volume, spend, error counts).
-
-    Exactness: the window keeps INTEGER moments — n, s1 = Σc,
-    s2 = Σc² over exact cents — so the mean/variance arithmetic is
-    associative and partition-order-free; the POPULATION z-score is
-    (c·n − s1) / sqrt(n·s2 − s1²) — one subtraction, one sqrt, one
-    division over identical integers on both engines (IEEE sqrt and
-    divide are correctly rounded, so the doubles are bit-identical),
-    rounded via the FLOOR trick. A naive avg/stddev_samp window would
-    hash-diverge: both engines accumulate running doubles in different
-    orders. Constant windows (variance 0) yield NULL z and FALSE flag
-    on both sides. s2 rides DECIMAL/HUGEINT: hourly cents up to ~3e9
-    square past the long range — 128-bit sums keep the moments exact
-    to ~1e19-dollar hours.
-
-    At scale: one full-data shuffle into the hourly rollup (map-side
-    collapsing), then one window pass per series partition — the same
-    single-exchange shape as window_running_total, pinned there."""
-    events = load_events(spark, sf_dir)
-    hourly = (
-        events
-        .select(
-            "event_type",
-            F.date_trunc("hour", "ts").alias("hour_start"),
-            cents("value").alias("v_cents"),
-        )
-        .groupBy("event_type", "hour_start")
-        .agg(F.sum("v_cents").alias("c"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_start")
-        .rowsBetween(-(ZSCORE_WINDOW - 1), Window.currentRow)
-    )
-    cdec = F.col("c").cast("decimal(19,0)")
-    stats = hourly.select(
-        "event_type", "hour_start", "c",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(cdec).over(w).cast("decimal(38,0)").alias("s1"),
-        F.sum(cdec * cdec).over(w).cast("decimal(38,0)").alias("s2"),
-    )
-    num = (cdec * F.col("n") - F.col("s1")).cast("double")
-    den = F.sqrt(
-        (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1"))
-        .cast("double")
-    )
-    z = num / den
-    flat = (F.col("n") * F.col("s2")) == (F.col("s1") * F.col("s1"))
-    return (
-        stats.select(
-            "event_type", "hour_start",
-            _unscale_round2(F.col("c"), 2).alias("total_value"),
-            F.when(flat, F.lit(None).cast("double"))
-            .otherwise(F.floor(z * 1_000_000 + F.lit(0.5)) / 1_000_000)
-            .alias("zscore"),
-            F.when(flat, F.lit(False))
-            .otherwise(F.abs(z) > ZSCORE_FLAG).alias("is_anomaly"),
-        )
-        .orderBy("event_type", "hour_start")
-    )
-
-
-# ---------------------------------------------------------------------------
 # scd2_user_tier_history: type-2 slowly-changing-dimension compaction
 # (CDC gaps-and-islands).
 # ---------------------------------------------------------------------------
@@ -809,85 +700,6 @@ def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cohort_daily_retention: signup-cohort x day-offset activity grid.
-# ---------------------------------------------------------------------------
-
-COHORT_DAILY_RETENTION_ORACLE = """
-    WITH firsts AS (
-        SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day
-        FROM events GROUP BY user_id
-    ),
-    daily AS (
-        SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-    ),
-    grid AS (
-        SELECT f.cohort_day,
-               CAST(d.d - f.cohort_day AS BIGINT) AS day_offset,
-               CAST(COUNT(DISTINCT d.user_id) AS BIGINT) AS active_users
-        FROM daily d JOIN firsts f ON d.user_id = f.user_id
-        GROUP BY f.cohort_day, d.d - f.cohort_day
-    ),
-    sizes AS (
-        SELECT cohort_day, CAST(COUNT(*) AS BIGINT) AS cohort_size
-        FROM firsts GROUP BY cohort_day
-    )
-    SELECT g.cohort_day, g.day_offset, s.cohort_size, g.active_users,
-           g.active_users * 1000000 // s.cohort_size AS retention_ppm
-    FROM grid g JOIN sizes s ON g.cohort_day = s.cohort_day
-    ORDER BY g.cohort_day, day_offset
-    """
-
-
-@query("cohort_daily_retention", COHORT_DAILY_RETENTION_ORACLE, local=True)
-def cohort_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily cohort-retention grid (the product-analytics retention
-    triangle): users are cohorted by the calendar DAY of their first
-    event; for each (cohort day, day offset) cell, the distinct users
-    active that day, the cohort size, and retention as exact
-    parts-per-million (integer multiply-then-DIV — no float division
-    crosses the engine boundary). Day arithmetic is exact date
-    subtraction on both engines — no week-start or timezone convention
-    to diverge on.
-
-    Plan: first-day per user is one user-keyed aggregate; per-user
-    active days is one DISTINCT on (user, day) — both map-side
-    combinable; the grid is a join on user_id followed by a
-    cohort-keyed COUNT(DISTINCT user) whose input is already
-    deduplicated to (user, day). Cohort sizes reuse the firsts table
-    (group-count-sized). At 100 TB: nothing wider than
-    (user_id, date) rides any exchange, and the output is
-    days^2-bounded regardless of event volume."""
-    ev = load_events(spark, sf_dir).select(
-        "user_id", F.col("ts").cast("date").alias("d")
-    )
-    firsts = ev.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
-    daily = ev.distinct()
-    grid = (
-        daily.join(firsts, "user_id")
-        .groupBy(
-            "cohort_day",
-            F.datediff("d", "cohort_day").cast("long").alias("day_offset"),
-        )
-        .agg(F.countDistinct("user_id").cast("long").alias("active_users"))
-    )
-    sizes = firsts.groupBy("cohort_day").agg(
-        F.count(F.lit(1)).cast("long").alias("cohort_size")
-    )
-    return (
-        grid.join(sizes, "cohort_day")
-        .select(
-            "cohort_day",
-            "day_offset",
-            "cohort_size",
-            "active_users",
-            F.expr("active_users * 1000000 DIV cohort_size")
-            .alias("retention_ppm"),
-        )
-        .orderBy("cohort_day", "day_offset")
-    )
-
-
-# ---------------------------------------------------------------------------
 # markov_event_transitions: first-order behavior model of the event
 # stream.
 # ---------------------------------------------------------------------------
@@ -952,98 +764,6 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("n * 1000000 DIV from_total").alias("prob_ppm"),
         )
         .orderBy("from_type", "to_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# growth_accounting_daily: DAU split into new / returning (+ WAU).
-# ---------------------------------------------------------------------------
-
-GROWTH_ACCOUNTING_DAILY_ORACLE = """
-    WITH daily AS (
-        SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
-    ),
-    firsts AS (
-        SELECT user_id, MIN(d) AS first_day FROM daily GROUP BY user_id
-    ),
-    flagged AS (
-        SELECT daily.d, daily.user_id,
-               daily.d = f.first_day AS is_new
-        FROM daily JOIN firsts f ON daily.user_id = f.user_id
-    ),
-    dau AS (
-        SELECT d,
-               CAST(COUNT(*) AS BIGINT) AS dau,
-               CAST(SUM(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)
-                   AS new_users
-        FROM flagged GROUP BY d
-    ),
-    wau AS (
-        SELECT a.d, CAST(COUNT(DISTINCT b.user_id) AS BIGINT) AS wau
-        FROM (SELECT DISTINCT d FROM daily) a
-        JOIN daily b ON b.d BETWEEN a.d - 6 AND a.d
-        GROUP BY a.d
-    )
-    SELECT dau.d AS day, dau.dau, dau.new_users,
-           dau.dau - dau.new_users AS returning_users,
-           wau.wau,
-           dau.dau * 1000000 // wau.wau AS stickiness_ppm
-    FROM dau JOIN wau ON dau.d = wau.d
-    ORDER BY day
-    """
-
-
-@query("growth_accounting_daily", GROWTH_ACCOUNTING_DAILY_ORACLE, local=True)
-def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily growth accounting (the DAU/WAU board metric): per day, the
-    distinct active users split into NEW (first-ever-seen that day) and
-    RETURNING, the trailing-7-day WAU, and DAU/WAU stickiness as exact
-    parts-per-million. All counts are exact integers over (user, day)
-    facts — hash-exact.
-
-    Plan: the (user, day) dedup and first-day table are the cohort
-    query's stages (one user-keyed aggregate each); the WAU term is a
-    bounded self-RANGE-join of the deduped day table against the
-    distinct-days spine — the join expands each (user, day) row into
-    at most 7 spine days, so the intermediate is 7x the deduped table,
-    never events x days. At 100 TB the deduped (user, day) table is
-    the only corpus-derived input to every stage."""
-    daily = (
-        load_events(spark, sf_dir)
-        .select(F.col("ts").cast("date").alias("d"), "user_id")
-        .distinct()
-        .localCheckpoint()  # feeds firsts, dau, and the WAU range join
-    )
-    firsts = daily.groupBy("user_id").agg(F.min("d").alias("first_day"))
-    flagged = daily.join(firsts, "user_id").select(
-        "d", "user_id", (F.col("d") == F.col("first_day")).alias("is_new")
-    )
-    dau = flagged.groupBy("d").agg(
-        F.count(F.lit(1)).cast("long").alias("dau"),
-        F.sum(F.when(F.col("is_new"), 1).otherwise(0))
-        .cast("long").alias("new_users"),
-    )
-    spine = daily.select("d").distinct().select(F.col("d").alias("sd"))
-    wau = (
-        spine.join(
-            daily,
-            (F.col("d") >= F.date_sub(F.col("sd"), 6))
-            & (F.col("d") <= F.col("sd")),
-        )
-        .groupBy("sd")
-        .agg(F.countDistinct("user_id").cast("long").alias("wau"))
-    )
-    return (
-        dau.join(wau, dau["d"] == wau["sd"])
-        .select(
-            F.col("d").alias("day"),
-            "dau",
-            "new_users",
-            (F.col("dau") - F.col("new_users")).alias("returning_users"),
-            "wau",
-            F.expr("dau * 1000000 DIV wau").alias("stickiness_ppm"),
-        )
-        .orderBy("day")
     )
 
 
@@ -1328,478 +1048,6 @@ def present_candles(state: DataFrame) -> DataFrame:
         F.col("close_k.k_cents").alias("close_cents"),
         "n_ticks",
     ).orderBy("event_type", "hour_start")
-
-
-# ---------------------------------------------------------------------------
-# ts_cusum_changepoints: CUSUM change-point detection over the daily
-# value series.
-# ---------------------------------------------------------------------------
-
-CUSUM_H_MULT = 4  # threshold = CUSUM_H_MULT x mean |deviation|, in cents
-
-TS_CUSUM_CHANGEPOINTS_ORACLE = f"""
-    WITH daily AS (
-        SELECT CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-                    AS BIGINT) AS daily_cents
-        FROM events GROUP BY 1
-    ),
-    m AS (
-        SELECT CAST(SUM(daily_cents) // COUNT(*) AS BIGINT) AS mu FROM daily
-    ),
-    dev AS (
-        SELECT day, daily_cents,
-               daily_cents - m.mu AS dev_cents
-        FROM daily, m
-    ),
-    h AS (
-        SELECT CAST({CUSUM_H_MULT} * SUM(ABS(dev_cents)) // COUNT(*)
-                    AS BIGINT) AS h
-        FROM dev
-    ),
-    p AS (
-        SELECT day, daily_cents, dev_cents,
-               CAST(SUM(dev_cents) OVER (ORDER BY day) AS BIGINT) AS pref
-        FROM dev
-    ),
-    s AS (
-        SELECT day, daily_cents, dev_cents,
-               pref - LEAST(0, MIN(pref) OVER (ORDER BY day)) AS cusum_up,
-               GREATEST(0, MAX(pref) OVER (ORDER BY day)) - pref AS cusum_down
-        FROM p
-    )
-    SELECT s.day, s.daily_cents, s.dev_cents,
-           CAST(s.cusum_up AS BIGINT) AS cusum_up,
-           CAST(s.cusum_down AS BIGINT) AS cusum_down,
-           (s.cusum_up > h.h OR s.cusum_down > h.h) AS flagged
-    FROM s, h
-    ORDER BY day
-    """
-
-
-@query("ts_cusum_changepoints", TS_CUSUM_CHANGEPOINTS_ORACLE, local=True)
-def ts_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM (Page 1954) change-point detection over the daily total
-    value series — the level-shift monitor a metrics warehouse runs on
-    every KPI. Entirely integer-exact: daily sums in cents, the
-    reference level mu = total DIV n_days, one-sided cumulative sums,
-    and a data-derived threshold H = CUSUM_H_MULT x mean |deviation|,
-    so the DuckDB twin is hash-exact including the flag booleans.
-
-    The clamped CUSUM recursion S+_i = max(0, S+_{{i-1}} + dev_i) is a
-    fold, not a window function — but it has a closed form over prefix
-    sums: with P_i the running sum of deviations,
-    S+_i = P_i - min(0, min_{{j<=i}} P_j) and
-    S-_i = max(0, max_{{j<=i}} P_j) - P_i
-    (induction: max(0, P_{{i-1}} - M_{{i-1}} + dev_i) = P_i - min(M_{{i-1}},
-    P_i) with M the clamped running min). That turns the sequential
-    recursion into two ordinary running-extreme windows — the same
-    trick that makes max-drawdown distributed-friendly.
-
-    Scale shape: the ONLY full-data operation is the map-side
-    combinable day-grain aggregate; everything after (the scalar mu/H
-    broadcasts and the SinglePartition running windows) rides the
-    day-grain series, whose row count is bounded by the calendar
-    (365/year) regardless of fact size — the justified exception to
-    the no-SinglePartition-window rule, same argument as the gap-fill
-    spine."""
-    daily = (
-        load_events(spark, sf_dir)
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.sum(cents("value")).cast("long").alias("daily_cents"))
-    )
-    return cusum_frame(daily)
-
-
-def cusum_frame(daily: DataFrame, h_mult: int = CUSUM_H_MULT) -> DataFrame:
-    """Core of ts_cusum_changepoints over any (day, daily_cents) series
-    — split out so the planted level-shift test can pin the
-    prefix-sum/running-extreme closed form against the sequential
-    clamped fold directly."""
-    mu = daily.agg(
-        F.expr("sum(daily_cents) DIV count(*)").cast("long").alias("mu")
-    )
-    dev = daily.crossJoin(F.broadcast(mu)).select(
-        "day",
-        "daily_cents",
-        (F.col("daily_cents") - F.col("mu")).alias("dev_cents"),
-    )
-    h = dev.agg(
-        F.expr(f"{h_mult} * sum(abs(dev_cents)) DIV count(*)")
-        .cast("long")
-        .alias("h")
-    )
-    w_run = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    p = dev.withColumn("pref", F.sum("dev_cents").over(w_run).cast("long"))
-    s = p.select(
-        "day",
-        "daily_cents",
-        "dev_cents",
-        (
-            F.col("pref")
-            - F.least(F.lit(0).cast("long"), F.min("pref").over(w_run))
-        ).cast("long").alias("cusum_up"),
-        (
-            F.greatest(F.lit(0).cast("long"), F.max("pref").over(w_run))
-            - F.col("pref")
-        ).cast("long").alias("cusum_down"),
-    )
-    return (
-        s.crossJoin(F.broadcast(h))
-        .select(
-            "day",
-            "daily_cents",
-            "dev_cents",
-            "cusum_up",
-            "cusum_down",
-            (
-                (F.col("cusum_up") > F.col("h"))
-                | (F.col("cusum_down") > F.col("h"))
-            ).alias("flagged"),
-        )
-        .orderBy("day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# trend_daily_regression: exact per-type OLS trend over the daily series.
-# ---------------------------------------------------------------------------
-
-TREND_DAILY_REGRESSION_ORACLE = """
-    WITH daily AS (
-        SELECT event_type,
-               CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) AS x,
-               CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-                    AS BIGINT) AS y
-        FROM events
-        GROUP BY event_type, CAST(ts AS DATE)
-    )
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_days,
-           CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS BIGINT)
-               AS slope_num,
-           CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS BIGINT)
-               AS slope_den,
-           CAST(CASE WHEN COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) = 0
-                     THEN 0
-                     ELSE (COUNT(*) * SUM(x * y) - SUM(x) * SUM(y)) * 100
-                          // (COUNT(*) * SUM(x * x) - SUM(x) * SUM(x))
-                END AS BIGINT) AS slope_centi_cents
-    FROM daily
-    GROUP BY event_type
-    ORDER BY event_type
-    """
-
-
-@query("trend_daily_regression", TREND_DAILY_REGRESSION_ORACLE, local=True)
-def trend_daily_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type trend detection: exact ordinary-least-squares slope of
-    the daily value series against the day index — the 'is this KPI
-    drifting' statistic next to ts_cusum_changepoints' 'did it jump'.
-    The OLS slope (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) is a ratio of two
-    INTEGER quantities when x is the day ordinal and y exact cents, so
-    the report carries the exact numerator and denominator plus the
-    floor-divided slope in centi-cents/day — hash-exact, no float in
-    sight (the usual covariance/variance double formulation is
-    summation-order-dependent and cross-engine inexact).
-
-    Envelope: x ≤ days, y ≤ day-total cents; n·Σxy is bounded by
-    days²·Σy — at 1e6 days (2,700 years) and $10¹¹ daily cents it
-    stays under 2^63; real horizons are ≤ 10⁴ days.
-
-    Scale shape: the only full-data pass is the map-side-combinable
-    (type, day) aggregate; the regression itself is a second aggregate
-    over the day-grain series (calendar-bounded rows), all sums
-    integer and order-free. Degenerate single-day groups report
-    slope 0 with slope_den = 0 (both engines via the same CASE)."""
-    daily = (
-        load_events(spark, sf_dir)
-        .groupBy(
-            "event_type",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .agg(F.sum(cents("value")).cast("long").alias("y"))
-    )
-    return trend_frame(daily)
-
-
-def trend_frame(daily: DataFrame) -> DataFrame:
-    """Core of trend_daily_regression over any (event_type, x, y)
-    day-grain frame — split out so planted exact-slope /
-    negative-trend / single-day tests can pin the integer OLS
-    arithmetic directly."""
-    n = F.count(F.lit(1)).cast("long")
-    num = (n * F.sum(F.col("x") * F.col("y"))
-           - F.sum("x") * F.sum("y")).cast("long")
-    den = (n * F.sum(F.col("x") * F.col("x"))
-           - F.sum("x") * F.sum("x")).cast("long")
-    return (
-        daily.groupBy("event_type")
-        .agg(
-            n.alias("n_days"),
-            num.alias("slope_num"),
-            den.alias("slope_den"),
-        )
-        .select(
-            "event_type",
-            "n_days",
-            "slope_num",
-            "slope_den",
-            F.when(F.col("slope_den") == 0, F.lit(0).cast("long"))
-            .otherwise(F.expr("slope_num * 100 DIV slope_den"))
-            .alias("slope_centi_cents"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ts_seasonal_dow_profile: day-of-week seasonal baseline + residuals
-# over the daily revenue series.
-# ---------------------------------------------------------------------------
-
-TS_SEASONAL_DOW_PROFILE_ORACLE = """
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               (EXTRACT(isodow FROM CAST(ts AS DATE)) - 1)::BIGINT AS dow,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5e0) AS BIGINT))
-                    AS BIGINT) AS day_cents
-        FROM events
-        GROUP BY event_type, CAST(ts AS DATE)
-    )
-    SELECT event_type, day, dow, day_cents,
-           CAST(SUM(day_cents) OVER w // COUNT(*) OVER w AS BIGINT)
-               AS base_cents,
-           CAST(day_cents
-                - SUM(day_cents) OVER w // COUNT(*) OVER w
-                AS BIGINT) AS residual_cents
-    FROM daily
-    WINDOW w AS (PARTITION BY event_type, dow)
-    ORDER BY event_type, day
-    """
-
-
-@query("ts_seasonal_dow_profile", TS_SEASONAL_DOW_PROFILE_ORACLE, local=True)
-def ts_seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week seasonal decomposition of the daily revenue series,
-    per event type: each day's exact-cents total, the SEASONAL BASELINE
-    for its weekday (mean of all same-weekday days, truncating integer
-    division), and the residual — the de-seasonalized signal anomaly
-    detectors should consume instead of the raw series (a quiet Sunday
-    is not an incident; a quiet Tuesday may be). Complements the
-    rolling-zscore and CUSUM queries, which are seasonality-blind.
-    Weekday rides the pinned Mon=0 convention (scalar_date_smart_key;
-    F.weekday == isodow - 1).
-
-    Exactness: cents in, truncating DIV for the mean, so baseline and
-    residual are exact longs. Plan: one (type, day) aggregate — the
-    same first rollup every series query pays — then one (type, dow)
-    window pass computing SUM/COUNT over the 7-bucket season; the
-    window reuses a day-grain frame that is already tiny (days x
-    types), so at 100 TB the only data-sized stage is the initial
-    rollup."""
-    ev = load_events(spark, sf_dir)
-    tick_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        ev.select(
-            "event_type", F.to_date("ts").alias("day"),
-            tick_cents.alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").cast("long").alias("day_cents"))
-        .select(
-            "event_type",
-            "day",
-            F.weekday("day").cast("long").alias("dow"),
-            "day_cents",
-        )
-    )
-    return (
-        daily.select(
-            "event_type",
-            "day",
-            "dow",
-            "day_cents",
-            F.expr(
-                "sum(day_cents) OVER (PARTITION BY event_type, dow)"
-                " DIV count(*) OVER (PARTITION BY event_type, dow)"
-            ).cast("long").alias("base_cents"),
-            F.expr(
-                "day_cents - sum(day_cents)"
-                " OVER (PARTITION BY event_type, dow)"
-                " DIV count(*) OVER (PARTITION BY event_type, dow)"
-            ).cast("long").alias("residual_cents"),
-        )
-        .orderBy("event_type", "day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ts_ewma_smoothing: exact truncating-fold EWMA (alpha = 1/2) over the
-# daily series.
-# ---------------------------------------------------------------------------
-
-TS_EWMA_SMOOTHING_ORACLE = """
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               CAST(SUM(CAST(FLOOR(value * 100 + 0.5e0) AS BIGINT))
-                    AS BIGINT) AS day_cents
-        FROM events
-        GROUP BY event_type, CAST(ts AS DATE)
-    ),
-    arr AS (
-        SELECT event_type,
-               list(day ORDER BY day) AS days,
-               list(day_cents ORDER BY day) AS cents
-        FROM daily GROUP BY event_type
-    ),
-    idx AS (
-        SELECT event_type, days, cents,
-               unnest(generate_series(1, len(cents))) AS t
-        FROM arr
-    )
-    SELECT event_type,
-           days[t] AS day,
-           cents[t] AS day_cents,
-           CAST(list_reduce(cents[1:t], (a, x) -> (a + x) // 2)
-                AS BIGINT) AS ewma_cents
-    FROM idx
-    ORDER BY event_type, day
-    """
-
-
-@query("ts_ewma_smoothing", TS_EWMA_SMOOTHING_ORACLE, local=True)
-def ts_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially-weighted moving average of the daily revenue
-    series, alpha = 1/2, as an EXACT integer fold: S_1 = v_1,
-    S_t = (S_{t-1} + v_t) DIV 2 — the trend smoother dashboards layer
-    under the raw series. The float EWMA (v·α + S·(1−α) in doubles)
-    is summation-order-stable but rounding-divergent across engines;
-    halving with truncating DIV keeps every step a long, so the whole
-    smoothed series is hash-exact.
-
-    The fold is genuinely NON-ASSOCIATIVE (truncation each step), so
-    unlike CUSUM it cannot be rewritten as prefix sums: the kernel
-    collects each type's day-ordered series into an array (bounded by
-    the CALENDAR — ~365 rows/type/year — never by event volume, the
-    same bounded-grain argument as the rollup family) and evaluates
-    prefix folds with the aggregate HOF; per-type work is O(days²) on
-    the day grain, a few hundred thousand long-adds at worst. The only
-    event-volume-sized stage is the (type, day) rollup every series
-    query pays. DuckDB twin: list_reduce over the same prefix slices."""
-    ev = load_events(spark, sf_dir)
-    tick_cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    daily = (
-        ev.select(
-            "event_type", F.to_date("ts").alias("day"),
-            tick_cents.alias("c"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").cast("long").alias("day_cents"))
-    )
-    arr = daily.groupBy("event_type").agg(
-        F.sort_array(
-            F.collect_list(F.struct("day", "day_cents"))
-        ).alias("series")
-    )
-    return (
-        arr.select(
-            "event_type",
-            "series",
-            F.posexplode("series").alias("pos", "row"),
-        )
-        .select(
-            "event_type",
-            F.col("row.day").alias("day"),
-            F.col("row.day_cents").alias("day_cents"),
-            F.expr(
-                "aggregate(slice(series.day_cents, 2, pos),"
-                " series.day_cents[0],"
-                " (a, x) -> (a + x) DIV 2)"
-            ).cast("long").alias("ewma_cents"),
-        )
-        .orderBy("event_type", "day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# user_activity_streaks: gaps-and-islands longest-streak distribution.
-# ---------------------------------------------------------------------------
-
-USER_ACTIVITY_STREAKS_ORACLE = """
-    WITH active AS (
-        SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
-    ),
-    runs AS (
-        SELECT user_id,
-               d - CAST(ROW_NUMBER() OVER (
-                       PARTITION BY user_id ORDER BY d
-                   ) AS INTEGER) AS anchor
-        FROM active
-    ),
-    streaks AS (
-        SELECT user_id, anchor, CAST(COUNT(*) AS BIGINT) AS len
-        FROM runs GROUP BY 1, 2
-    ),
-    longest AS (
-        SELECT user_id, MAX(len) AS streak_days FROM streaks GROUP BY 1
-    )
-    SELECT streak_days, CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(MIN(user_id) AS BIGINT) AS example_user
-    FROM longest GROUP BY 1 ORDER BY streak_days
-    """
-
-
-@query("user_activity_streaks", USER_ACTIVITY_STREAKS_ORACLE, local=True)
-def user_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-active-day streak per user, rolled up to the
-    engagement distribution (streak length -> user count + the smallest
-    example user id) — the classic GAPS-AND-ISLANDS decomposition:
-    within each user's distinct active-day sequence,
-    ``anchor = day - row_number()`` is constant exactly across a run of
-    consecutive days, so grouping by (user, anchor) yields the runs and
-    their lengths without any self-join.
-
-    Scale shape: the (user, day) DISTINCT folds map-side; the one
-    window is ``partitionBy(user_id)`` whose per-key row count is
-    bounded by the CALENDAR (days in the observation span), not by
-    event volume — the same bounded-grain argument the R6 lint encodes;
-    the two rollups are group-count-sized. Nothing wider than
-    (user_id, date) rides any exchange at 100 TB. Cross-engine
-    determinism: pure date/integer arithmetic (exact date - int on both
-    engines), no floats anywhere.
-
-    Reference parity: beyond-reference analytics surface (the
-    reference has no window operators); complements
-    cohort_daily_retention (same (user, day) grain, streaks instead of
-    offsets)."""
-    active = (
-        load_events(spark, sf_dir)
-        .select("user_id", F.col("ts").cast("date").alias("d"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    runs = active.withColumn(
-        "anchor", F.date_sub("d", F.row_number().over(w))
-    )
-    streaks = runs.groupBy("user_id", "anchor").agg(
-        F.count(F.lit(1)).cast("long").alias("len")
-    )
-    longest = streaks.groupBy("user_id").agg(
-        F.max("len").alias("streak_days")
-    )
-    return (
-        longest.groupBy("streak_days")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.min("user_id").cast("long").alias("example_user"),
-        )
-        .orderBy("streak_days")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -8,9 +8,7 @@ pretraining pipelines weight or gate documents by it). The connected-
 component kernels used by the dedup queries live in
 ``operators/graph.py``; this module adds the power-iteration side.
 
-``graph_pagerank_influence`` is registered. The basket-lift, k-core
-and label-propagation queries are local-only (``local_queries()``):
-same oracle compare, outside the driver contract.
+``graph_pagerank_influence`` is registered in the driver contract.
 """
 
 from __future__ import annotations
@@ -152,338 +150,3 @@ def graph_pagerank_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("rank_scaled").desc(), "node_type", "entity_key")
     )
-
-
-# ---------------------------------------------------------------------------
-# basket_pair_lift: market-basket association strength (support + lift).
-# ---------------------------------------------------------------------------
-
-BASKET_TOP_K = 20
-
-BASKET_PAIR_LIFT_ORACLE = f"""
-    WITH li AS (
-        SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-    ),
-    n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders FROM li),
-    freq AS (
-        SELECT p, CAST(COUNT(*) AS BIGINT) AS cnt FROM li GROUP BY p
-    ),
-    pairs AS (
-        SELECT a.p AS x, b.p AS y, CAST(COUNT(*) AS BIGINT) AS support
-        FROM li a JOIN li b ON a.o = b.o AND a.p < b.p
-        GROUP BY a.p, b.p
-    )
-    SELECT pr.x, pr.y, pr.support,
-           fx.cnt AS cnt_x, fy.cnt AS cnt_y,
-           pr.support * n.n_orders * 1000000 // (fx.cnt * fy.cnt)
-               AS lift_ppm
-    FROM pairs pr
-    JOIN freq fx ON pr.x = fx.p
-    JOIN freq fy ON pr.y = fy.p
-    CROSS JOIN n
-    ORDER BY support DESC, x, y
-    LIMIT {BASKET_TOP_K}
-    """
-
-
-@query("basket_pair_lift", BASKET_PAIR_LIFT_ORACLE, local=True)
-def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association mining: the BASKET_TOP_K (20) most
-    co-purchased part pairs with their support (co-occurrence count)
-    and LIFT — support(x,y)·N / (cnt(x)·cnt(y)) as exact
-    parts-per-million (lift > 1e6 means the pair co-occurs more than
-    independence predicts; the Apriori/recommender association
-    strength). The pair table is the SAME bounded per-order expansion
-    the triangle query builds its edges from — O(basket²) per order,
-    never corpus-quadratic — kept WITH its co-occurrence counts here
-    instead of deduplicated.
-
-    Plan: one orderkey exchange for the distinct (order, part) table
-    feeding both the pair self-join and the part-frequency aggregate;
-    the pair aggregate folds map-side; part frequencies ride BROADCAST
-    joins back onto the top pairs; the single-row N is a broadcast
-    cross join. max product support·N·1e6 ~ 2e14 — inside int64.
-    Production adds a min-support HAVING on the pair aggregate (the
-    same knob the triangle query documents)."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint()  # feeds pairs, freq, and N
-    )
-    n = li.agg(F.countDistinct("o").cast("long").alias("n_orders"))
-    freq = li.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    a = li.select("o", F.col("p").alias("x"))
-    b = li.select("o", F.col("p").alias("y"))
-    pairs = (
-        a.join(b, "o")
-        .filter(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("support"))
-        .orderBy(F.desc("support"), "x", "y")
-        .limit(BASKET_TOP_K)
-    )
-    fx = freq.select(F.col("p").alias("x"), F.col("cnt").alias("cnt_x"))
-    fy = freq.select(F.col("p").alias("y"), F.col("cnt").alias("cnt_y"))
-    return (
-        pairs.join(F.broadcast(fx), "x")
-        .join(F.broadcast(fy), "y")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "x", "y", "support", "cnt_x", "cnt_y",
-            F.expr(
-                "support * n_orders * 1000000 DIV (cnt_x * cnt_y)"
-            ).alias("lift_ppm"),
-        )
-        .orderBy(F.desc("support"), "x", "y")
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph_kcore_loyalty: fixed-round k-core peeling over the repeat-trade
-# graph.
-# ---------------------------------------------------------------------------
-
-KCORE_K = 3           # survive with >= 3 repeat-trade partners
-KCORE_ROUNDS = 4      # THE CONTRACT: round-4 accounting state
-KCORE_MIN_TRADES = 3  # an edge = pair traded >= 3 line items
-
-# MATERIALIZED fences (r15): DuckDB INLINES plain CTEs, and in this
-# chained unroll e{r} references e{p} three ways (directly + twice via
-# k{r} -> d{p}), so inlining recomputes the corpus-sized base ~3^rounds
-# times — at synthetic sf1 that spilled the full-registry sweep to
-# disk. Materializing each round's tables makes the unroll linear;
-# results are identical (the hint is an optimization fence only).
-_KCORE_ROUND_CTE = """
-    d{p} AS MATERIALIZED (
-        SELECT src AS v, COUNT(*) AS deg FROM e{p} GROUP BY src),
-    k{r} AS MATERIALIZED (SELECT v FROM d{p} WHERE deg >= {k}),
-    e{r} AS MATERIALIZED (
-        SELECT src, dst FROM e{p}
-        WHERE src IN (SELECT v FROM k{r}) AND dst IN (SELECT v FROM k{r})
-    )"""
-
-GRAPH_KCORE_LOYALTY_ORACLE = (
-    """
-    WITH base AS MATERIALIZED (
-        SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-               COUNT(*) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ),
-    rep AS MATERIALIZED (SELECT c, s FROM base WHERE n >= {minn}),
-    e0 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM rep
-        UNION ALL
-        SELECT s AS src, c AS dst FROM rep
-    ),"""
-    + ",".join(
-        _KCORE_ROUND_CTE.format(r=r, p=r - 1, k=KCORE_K)
-        for r in range(1, KCORE_ROUNDS + 1)
-    )
-    + """
-    SELECT CASE WHEN src % 2 = 0 THEN 'customer' ELSE 'supplier' END
-               AS node_type,
-           src // 2 AS entity_key,
-           CAST(COUNT(*) AS BIGINT) AS core_degree
-    FROM e{last}
-    GROUP BY src
-    ORDER BY core_degree DESC, node_type, entity_key
-    """
-).format(minn=KCORE_MIN_TRADES, last=KCORE_ROUNDS)
-
-
-@query("graph_kcore_loyalty", GRAPH_KCORE_LOYALTY_ORACLE, local=True)
-def graph_kcore_loyalty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-core decomposition of the REPEAT-TRADE graph: nodes are
-    customers (even ids) and suppliers (odd), an edge means the pair
-    traded >= KCORE_MIN_TRADES line items, and KCORE_ROUNDS (4) peel
-    rounds drop every node with fewer than KCORE_K (3) surviving
-    repeat partners — the loyalty core a marketplace's account team
-    actually works from (one-off trades and hangers-on peeled away).
-    The k-core is THE standard dense-subgraph primitive (community
-    seeding, spam-net detection, graph-sampling cores); the peel is a
-    genuinely different iterative kernel from PageRank (mass-free,
-    monotone shrinking) and from connected components (degree
-    threshold, not reachability).
-
-    ROUNDS=4 IS THE CONTRACT (the pagerank_fixed_point pattern): the
-    output is the round-4 accounting state so the DuckDB unrolled-CTE
-    twin attests the peel bit-for-bit; cascades genuinely span rounds
-    (sf0.01: 898 nodes -> 264 -> 258 -> 251 over the four rounds;
-    tests/test_graph.py plants a chain where round 2 peels what round
-    1 exposed). core_degree is the node's degree in the SURVIVING
-    subgraph. Kernel: operators/graph.py::kcore_peel (localCheckpoint
-    lineage discipline; per-round cost shrinks monotonically).
-
-    Scale: the repeat-trade base aggregate is the only corpus-sized
-    stage; each peel round touches the (shrinking) edge table with one
-    map-side-combinable degree agg + two keys-only semi joins — the
-    same shape at 100 TB, where the Common-Crawl-host-graph k-core is
-    a standard pretraining source-quality pass."""
-    from ..operators.graph import kcore_peel
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    rep = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= KCORE_MIN_TRADES)
-    )
-    both = F.array(
-        F.struct(F.col("c").alias("src"), F.col("s").alias("dst")),
-        F.struct(F.col("s").alias("src"), F.col("c").alias("dst")),
-    )
-    edges = rep.select(F.explode(both).alias("e")).select("e.src", "e.dst")
-    core = kcore_peel(edges, k=KCORE_K, rounds=KCORE_ROUNDS)
-    return (
-        core.select(
-            F.when(F.col("v") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier")).alias("node_type"),
-            F.expr("v DIV 2").alias("entity_key"),
-            F.col("deg").alias("core_degree"),
-        )
-        .orderBy(F.desc("core_degree"), "node_type", "entity_key")
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph_label_propagation: synchronous LPA community detection over the
-# repeat-trade graph.
-# ---------------------------------------------------------------------------
-
-LPA_ROUNDS = 2        # THE CONTRACT: round-2 accounting state
-LPA_MIN_TRADES = 3    # an edge = pair traded >= 3 line items (kcore base)
-
-_LPA_ROUND_CTE = """
-    r{r} AS (
-        SELECT e.src AS v, l.lab, COUNT(*) AS c
-        FROM e0 e JOIN l{p} l ON e.dst = l.v
-        GROUP BY 1, 2
-    ),
-    l{r} AS (
-        SELECT v, lab FROM (
-            SELECT v, lab,
-                   ROW_NUMBER() OVER (PARTITION BY v
-                                      ORDER BY c DESC, lab) AS rn
-            FROM r{r}
-        ) WHERE rn = 1
-    )"""
-
-GRAPH_LABEL_PROPAGATION_ORACLE = (
-    """
-    WITH base AS MATERIALIZED (
-        SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s, COUNT(*) AS n
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY 1, 2
-    ),
-    rep AS MATERIALIZED (SELECT c, s FROM base WHERE n >= {minn}),
-    e0 AS MATERIALIZED (
-        SELECT c AS src, s AS dst FROM rep
-        UNION ALL
-        SELECT s AS src, c AS dst FROM rep
-    ),
-    l0 AS (SELECT DISTINCT src AS v, src AS lab FROM e0),"""
-    + ",".join(
-        _LPA_ROUND_CTE.format(r=r, p=r - 1) for r in range(1, LPA_ROUNDS + 1)
-    )
-    + """
-    SELECT lab AS community,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(MIN(v) AS BIGINT) AS min_member,
-           CAST(MAX(v) AS BIGINT) AS max_member
-    FROM l{last}
-    GROUP BY lab ORDER BY community
-    """
-).format(minn=LPA_MIN_TRADES, last=LPA_ROUNDS)
-
-
-@query("graph_label_propagation", GRAPH_LABEL_PROPAGATION_ORACLE, local=True)
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous LABEL PROPAGATION (Raghavan 2007) community
-    detection over the same repeat-trade graph the k-core peels: every
-    node starts as its own label; each round every node adopts the
-    label most frequent among its NEIGHBORS, ties broken by the
-    SMALLEST label — the deterministic variant (vanilla LPA breaks
-    ties randomly; a seeded tie would never hash-match across
-    engines). ROUNDS=2 IS THE CONTRACT (the pagerank/HITS precedent):
-    the output is the round-2 accounting state, attested bit-for-bit
-    by the DuckDB unrolled-CTE twin, not the (order-dependent)
-    fixpoint. LPA is a genuinely different iterative kernel from the
-    shipped three: mass-free like k-core but GROWING regions like
-    components, with a per-round ARGMAX (not sum/threshold/min).
-
-    Scale shape: each round is one edge-sized hash join (node-sized
-    label table onto the edge list) + a (node, label)-keyed count that
-    folds map-side + a node-keyed struct-max argmax — no window, no
-    single partition; ties resolve inside the aggregate via
-    max(struct(count, -label)). Round depth is fixed at 2, so no
-    checkpoint is needed (the pagerank lineage discipline starts at 3).
-
-    Reference parity: beyond-reference graph surface; shares the
-    repeat-trade base (>= LPA_MIN_TRADES line items) with
-    graph_kcore_loyalty so the two marts describe the same graph."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    rep = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= LPA_MIN_TRADES)
-        .select("c", "s")
-    )
-    edges = (
-        rep.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionByName(rep.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-        .localCheckpoint()  # feeds l0 + one join per round
-    )
-    labels = lpa_labels(edges, LPA_ROUNDS)
-    return (
-        labels.groupBy(F.col("lab").alias("community"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.min("v").cast("long").alias("min_member"),
-            F.max("v").cast("long").alias("max_member"),
-        )
-        .select(
-            F.col("community").cast("long").alias("community"),
-            "n_members", "min_member", "max_member",
-        )
-        .orderBy("community")
-    )
-
-
-def lpa_labels(edges: DataFrame, rounds: int) -> DataFrame:
-    """Core of graph_label_propagation over any directed (src, dst)
-    edge frame (pass both directions for an undirected graph):
-    ``rounds`` synchronous most-frequent-neighbor-label updates from
-    lab0(v) = v, ties to the SMALLEST label — factored for the
-    planted-topology tests (tests/test_graph.py pins the tie rule and
-    a genuine round-2 change)."""
-    labels = edges.select(F.col("src").alias("v")).distinct().withColumn(
-        "lab", F.col("v")
-    )
-    for _ in range(rounds):
-        nbr = edges.join(
-            labels.withColumnRenamed("v", "dst"), "dst"
-        ).select("src", "lab")
-        cnt = nbr.groupBy("src", "lab").agg(F.count(F.lit(1)).alias("c"))
-        labels = cnt.groupBy("src").agg(
-            F.max(F.struct(F.col("c"), (-F.col("lab")).alias("neg"))).alias("m")
-        ).select(F.col("src").alias("v"), (-F.col("m.neg")).alias("lab"))
-    return labels

@@ -436,168 +436,6 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sample_temperature_mixture: temperature-based data-mixing weights.
-# ---------------------------------------------------------------------------
-
-# Temperature tau = 0.5, i.e. weight = n_tokens^0.5 = sqrt(n_tokens).
-# tau is FIXED at 0.5 deliberately: sqrt is IEEE-754 correctly rounded
-# on both engines (bit-identical cross-engine), while a general
-# pow(x, tau) is NOT — the micro-integer quantization below could then
-# flip at a FLOOR boundary and break the hash compare. A production
-# caller wanting other taus pays with a tolerance contract instead.
-MIXTURE_TOKEN_BUDGET = 1_000_000  # reporting budget (tokens)
-
-SAMPLE_TEMPERATURE_MIXTURE_ORACLE = f"""
-    WITH t AS (
-        SELECT source,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        FROM documents GROUP BY source
-    ),
-    w AS (
-        SELECT source, n_docs, n_tokens,
-               CAST(FLOOR(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5)
-                    AS BIGINT) AS w_micro
-        FROM t
-    ),
-    tot AS (SELECT CAST(SUM(w_micro) AS BIGINT) AS total FROM w)
-    SELECT source, n_docs, n_tokens, w_micro,
-           CAST(w_micro AS DOUBLE) / CAST(total AS DOUBLE) AS p_sample,
-           CAST(w_micro AS DOUBLE) / CAST(total AS DOUBLE)
-               * {MIXTURE_TOKEN_BUDGET} AS exp_tokens,
-           CAST(w_micro AS DOUBLE) / CAST(total AS DOUBLE)
-               * {MIXTURE_TOKEN_BUDGET} / n_tokens AS epochs
-    FROM w CROSS JOIN tot
-    ORDER BY source
-    """
-
-
-@query("sample_temperature_mixture", SAMPLE_TEMPERATURE_MIXTURE_ORACLE, local=True)
-def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture weighting (the Gopher / LLaMA data-mix
-    recipe): per source, weight = n_tokens^tau with tau = 0.5, so
-    small sources are UPsampled relative to proportional mixing and
-    large ones capped; report each source's sampling probability, its
-    expected token draw for a MIXTURE_TOKEN_BUDGET (1M)-token training
-    budget, and the implied epoch count (>1 means that source repeats
-    — the overfit/dedup-sensitivity signal a mixing design reviews).
-
-    Exactness: weights are quantized ONCE to micro-integers
-    (floor(sqrt(n_tokens)·10⁶ + ½) — sqrt is correctly rounded so the
-    input to FLOOR is bit-identical cross-engine), the normalizer is
-    an exact BIGINT sum (order-free), and every downstream double op
-    is a single correctly-rounded multiply/divide — the whole row is
-    hash-exact without any tolerance. Scale: ONE group-count-sized
-    aggregate with map-side partial collapse; the normalizer is a
-    one-row broadcast back onto #sources rows. Nothing else touches
-    the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), " "))).cast("long")
-        .alias("n_tokens"),
-    )
-    w = t.withColumn(
-        "w_micro",
-        F.floor(
-            F.sqrt(F.col("n_tokens").cast("double")) * F.lit(1000000.0)
-            + F.lit(0.5)
-        ).cast("long"),
-    )
-    tot = w.agg(F.sum("w_micro").cast("long").alias("total"))
-    p = F.col("w_micro").cast("double") / F.col("total").cast("double")
-    return (
-        w.crossJoin(F.broadcast(tot))
-        .select(
-            "source", "n_docs", "n_tokens", "w_micro",
-            p.alias("p_sample"),
-            (p * MIXTURE_TOKEN_BUDGET).alias("exp_tokens"),
-            (p * MIXTURE_TOKEN_BUDGET / F.col("n_tokens")).alias("epochs"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# sample_leakage_safe_splits: split assignment hashed on the NEAR-DUP
-# COMPONENT, not the document.
-# ---------------------------------------------------------------------------
-
-def _leakage_safe_oracle() -> str:
-    from .dedup_queries import _CANDIDATES_CTE
-
-    gid = "COALESCE(c.gid, d.doc_id)"
-    return f"""
-    WITH RECURSIVE {_CANDIDATES_CTE},
-    sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION
-        SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    reach(a, b) AS (
-        SELECT a, b FROM sym
-        UNION
-        SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ),
-    comp AS (
-        SELECT a AS doc_id,
-               CASE WHEN MIN(b) < a THEN MIN(b) ELSE a END AS gid
-        FROM reach GROUP BY a
-    )
-    SELECT d.doc_id,
-           {gid} AS group_id,
-           {_bucket_sql(gid)} AS bucket,
-           CASE WHEN {_bucket_sql(gid)} < 80 THEN 'train'
-                WHEN {_bucket_sql(gid)} < 90 THEN 'validation'
-                ELSE 'test' END AS split
-    FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-    ORDER BY d.doc_id
-    """
-
-
-@query("sample_leakage_safe_splits", _leakage_safe_oracle(), local=True)
-def sample_leakage_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/validation/test assignment that cannot leak near-
-    duplicates across splits: hash the near-dup COMPONENT id (LSH
-    candidate pairs → connected components; singletons are their own
-    group), not the document id. A doc-id-hashed split puts ~20% of
-    each duplicate cluster's members outside train — the classic
-    contamination path (Lee et al. 2021 measured test-set dup rates;
-    group-wise splitting is the fix every serious pipeline applies).
-    Same Knuth bucket arithmetic (``_bucket``) and 80/10/10 cut as a
-    plain doc-id split, so the two differ ONLY in what gets hashed —
-    the leakage-safety is isolated and auditable.
-
-    At scale: the component labels are the dedup pipeline's existing
-    byproduct (amortized); this query adds one keys-only left join and
-    the narrow bucket arithmetic. Invariant pinned in
-    tests/test_sampling.py: every candidate pair lands in ONE split,
-    and the fixture contains pairs whose doc-id buckets straddle a cut
-    — the naive split provably leaks where this one does not."""
-    from .dedup_queries import shared_pair_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    comp = shared_pair_components(spark, sf_dir).select(
-        F.col("v").alias("doc_id"), F.col("component_id").alias("gid")
-    )
-    gid = F.coalesce(F.col("gid"), F.col("doc_id"))
-    bucket = _bucket(gid)
-    return (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            gid.alias("group_id"),
-            bucket.alias("bucket"),
-            F.when(bucket < 80, F.lit("train"))
-            .when(bucket < 90, F.lit("validation"))
-            .otherwise(F.lit("test")).alias("split"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
 # sample_k_per_group: deterministic fixed-size per-group sample.
 # ---------------------------------------------------------------------------
 
@@ -648,412 +486,4 @@ def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= SAMPLE_K_PER_GROUP)
         .select("source", "doc_id", "hkey", "rn")
         .orderBy("source", "rn")
-    )
-
-
-# ---------------------------------------------------------------------------
-# sample_quota_allocation: Hamilton largest-remainder budget allocation.
-# ---------------------------------------------------------------------------
-
-QUOTA_BUDGET = 997  # docs to sample corpus-wide (prime: real remainders)
-
-SAMPLE_QUOTA_ALLOCATION_ORACLE = f"""
-    WITH w AS (
-        SELECT source, CAST(SUM(n_chars) AS BIGINT) AS weight
-        FROM documents GROUP BY source
-    ),
-    t AS (SELECT CAST(SUM(weight) AS BIGINT) AS total FROM w),
-    base AS (
-        SELECT w.source, w.weight,
-               CAST(w.weight * {QUOTA_BUDGET} // t.total AS BIGINT) AS floor_q,
-               CAST(w.weight * {QUOTA_BUDGET} % t.total AS BIGINT) AS rem
-        FROM w, t
-    ),
-    leftover AS (
-        SELECT CAST({QUOTA_BUDGET} - SUM(floor_q) AS BIGINT) AS l FROM base
-    ),
-    ranked AS (
-        SELECT source, weight, floor_q, rem,
-               ROW_NUMBER() OVER (ORDER BY rem DESC, source) AS rk
-        FROM base
-    )
-    SELECT r.source, r.weight, r.floor_q, r.rem,
-           CAST(r.floor_q + CASE WHEN r.rk <= l.l THEN 1 ELSE 0 END
-                AS BIGINT) AS quota
-    FROM ranked r, leftover l
-    ORDER BY r.source
-    """
-
-
-@query("sample_quota_allocation", SAMPLE_QUOTA_ALLOCATION_ORACLE, local=True)
-def sample_quota_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamilton (largest-remainder) apportionment of a fixed sampling
-    budget across corpus strata, weighted by total characters — the
-    'give every source its exact proportional share of a 997-doc eval
-    set' allocator. Proportional quotas are fractional; naive rounding
-    breaks Σquota == budget, and per-stratum float division isn't even
-    cross-engine stable. Hamilton is the classic integer-exact fix:
-    floor_q = weight·B DIV total, then the L = B − Σfloor leftover
-    units go to the L largest remainders (weight·B mod total,
-    source-asc tiebreak) — every column BIGINT, the oracle hash-exact,
-    and the Σquota == B / |quota − exact share| < 1 laws pinned in
-    tests. (Same algorithm as US-House seat apportionment 1852-1900 —
-    the alabama-paradox caveat is irrelevant for a fixed budget.)
-
-    Scale shape: one map-side-combinable (source, Σchars) aggregate is
-    the only full-data pass; the total is a broadcast scalar; the
-    remainder rank is a SinglePartition window over the STRATUM table
-    (bounded by the source vocabulary, not the corpus). The downstream
-    sampler feeding on these quotas is sample_k_per_group with k =
-    quota."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = docs.groupBy("source").agg(
-        F.sum("n_chars").cast("long").alias("weight")
-    )
-    return quota_frame(w, QUOTA_BUDGET)
-
-
-def quota_frame(w: DataFrame, budget: int) -> DataFrame:
-    """Core of sample_quota_allocation over any (source, weight) frame
-    — split out so planted exact-share / leftover / tie tests can pin
-    the Hamilton arithmetic directly.
-
-    Guards total > 0 with a named error (r10 ADVICE): an all-zero or
-    empty strata frame would otherwise surface as an unhelpful ANSI
-    DIV-by-zero deep in the quota expression."""
-    t = w.agg(F.sum("weight").cast("long").alias("total"))
-    total_row = t.first()
-    if total_row is None or not total_row["total"]:
-        raise ValueError(
-            "quota_frame needs at least one stratum with weight > 0 "
-            f"(got total={None if total_row is None else total_row['total']})"
-        )
-    base = w.crossJoin(F.broadcast(t)).select(
-        "source",
-        "weight",
-        F.expr(f"weight * {budget} DIV total").cast("long")
-        .alias("floor_q"),
-        F.expr(f"weight * {budget} % total").cast("long").alias("rem"),
-    )
-    leftover = base.agg(
-        (F.lit(budget) - F.sum("floor_q")).cast("long").alias("l")
-    )
-    rk = F.row_number().over(
-        Window.orderBy(F.col("rem").desc(), "source")
-    )
-    return (
-        base.withColumn("rk", rk)
-        .crossJoin(F.broadcast(leftover))
-        .select(
-            "source",
-            "weight",
-            "floor_q",
-            "rem",
-            (
-                F.col("floor_q")
-                + F.when(F.col("rk") <= F.col("l"), 1).otherwise(0)
-            ).cast("long").alias("quota"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# sample_systematic_interval: systematic (every k-th) sampling in a
-# deterministic hash order.
-# ---------------------------------------------------------------------------
-
-SYSTEMATIC_K = 7  # keep every 7th document
-
-SAMPLE_SYSTEMATIC_ORACLE = f"""
-    WITH h AS (
-        -- ord composes (bucket, doc_id) into one sort key; identical
-        -- to the Spark side's lexicographic (bkt, doc_id) order while
-        -- doc_id < 1e6 (true at every fixture SF; the Spark side's
-        -- two-column order has no such envelope)
-        SELECT doc_id, source,
-               {_bucket_sql('doc_id', 104729)} * 1000000 + doc_id AS ord
-        FROM documents
-    ),
-    r AS (
-        SELECT doc_id, source,
-               ROW_NUMBER() OVER (ORDER BY ord) AS rn
-        FROM h
-    )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_total,
-           CAST(SUM(CASE WHEN rn % {SYSTEMATIC_K} = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_kept,
-           CAST(MIN(CASE WHEN rn % {SYSTEMATIC_K} = 1 THEN doc_id END)
-                AS BIGINT) AS first_kept_doc
-    FROM r
-    GROUP BY source
-    ORDER BY source
-    """
-
-
-@query("sample_systematic_interval", SAMPLE_SYSTEMATIC_ORACLE, local=True)
-def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SYSTEMATIC sampling — keep every SYSTEMATIC_K-th document in a
-    deterministic pseudo-random order (the salted Knuth bucket, with
-    doc_id composed in as the total-order tiebreak): the
-    equal-interval design survey statisticians use when a stream
-    should be thinned at an exact 1/k rate — unlike the Bernoulli
-    hash-bucket splits (sample_stratified_by), the kept count per k
-    consecutive ordered rows is EXACTLY one, so the rate holds in
-    every window, not just in expectation. The hash order stands in
-    for the 'random start' of textbook systematic sampling while
-    staying reproducible run-to-run.
-
-    Interval sampling needs a GLOBAL rank, but never a global sort:
-    the rank is decomposed hierarchically (the pack_token_budget_shards
-    pattern) with the hash BUCKET as the natural block — a per-bucket
-    row_number (100-way parallel) plus each bucket's offset from the
-    tiny post-aggregate count table broadcast back. The only
-    single-partition window runs over the 100-row bucket-count frame
-    (lint R2's sanctioned shape). Report: per source, total, kept, and
-    the first kept doc as the phase witness."""
-    docs = load_table(spark, sf_dir, "documents")
-    b = _bucket(F.col("doc_id"), salt=104729)
-    base = docs.select("doc_id", "source", b.alias("bkt"))
-    w_local = Window.partitionBy("bkt").orderBy("doc_id")
-    local = base.select(
-        "doc_id", "source", "bkt",
-        F.row_number().over(w_local).alias("local_rn"),
-    )
-    counts = base.groupBy("bkt").agg(F.count(F.lit(1)).alias("n"))
-    w_off = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "bkt", F.coalesce(F.sum("n").over(w_off), F.lit(0)).alias("off")
-    )
-    r = local.join(F.broadcast(offsets), "bkt").select(
-        "doc_id", "source",
-        (F.col("off") + F.col("local_rn")).alias("rn"),
-    )
-    kept = F.when(F.col("rn") % SYSTEMATIC_K == 1, 1).otherwise(0)
-    return (
-        r.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_total"),
-            F.sum(kept).cast("long").alias("n_kept"),
-            F.min(
-                F.when(F.col("rn") % SYSTEMATIC_K == 1, F.col("doc_id"))
-            ).cast("long").alias("first_kept_doc"),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# exp_assignment_srm: deterministic experiment assignment + sample-ratio
-# -mismatch audit.
-# ---------------------------------------------------------------------------
-
-# (variant, weight in percent) — weights sum to 100; CASE arms below
-# carve [0, 100) into contiguous bucket ranges in this order.
-EXP_VARIANTS = (("control", 50), ("treat_a", 25), ("treat_b", 25))
-
-
-def _exp_variant_case(bucket: str) -> str:
-    """Engine-portable CASE mapping a [0,100) bucket onto variants."""
-    arms, lo = [], 0
-    for name, w in EXP_VARIANTS[:-1]:
-        lo += w
-        arms.append(f"WHEN ({bucket}) < {lo} THEN '{name}'")
-    return ("CASE " + " ".join(arms)
-            + f" ELSE '{EXP_VARIANTS[-1][0]}' END")
-
-
-def _exp_srm_oracle() -> str:
-    from .sketch_queries import _hash32_sql
-
-    bucket = f"({_hash32_sql('user_id')}) % 100"
-    weights = " UNION ALL ".join(
-        f"SELECT '{name}' AS variant, {w} AS weight_pct"
-        for name, w in EXP_VARIANTS
-    )
-    return f"""
-    WITH users AS (SELECT DISTINCT user_id FROM events),
-    assigned AS (
-        SELECT user_id, {_exp_variant_case(bucket)} AS variant FROM users
-    ),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_users FROM users),
-    w AS ({weights}),
-    obs AS (
-        SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_assigned
-        FROM assigned GROUP BY variant
-    )
-    SELECT w.variant, w.weight_pct,
-           COALESCE(obs.n_assigned, 0) AS n_assigned,
-           COALESCE(obs.n_assigned, 0) * 1000000 // n.n_users
-               AS observed_ppm,
-           CAST(POWER(100 * COALESCE(obs.n_assigned, 0)
-                      - n.n_users * w.weight_pct, 2) AS BIGINT)
-               * 1000000 // (100 * n.n_users * w.weight_pct)
-               AS chi2_micro
-    FROM w LEFT JOIN obs ON w.variant = obs.variant CROSS JOIN n
-    ORDER BY w.variant
-    """
-
-
-EXP_ASSIGNMENT_SRM_ORACLE = _exp_srm_oracle()
-
-
-@query("exp_assignment_srm", EXP_ASSIGNMENT_SRM_ORACLE, local=True)
-def exp_assignment_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic experiment (A/B/n) assignment plus the
-    SAMPLE-RATIO-MISMATCH audit every experimentation platform runs
-    before trusting a readout: each distinct user hashes into a
-    [0, 100) bucket via the engine-portable integer avalanche
-    (plans/sketch_queries.py — identical bit-for-bit on both engines;
-    NEVER rand(), which the scale lint bans and which would unbalance
-    re-runs), buckets carve into weighted variants (50/25/25), and the
-    per-variant Pearson chi-square contribution is reported in exact
-    integer MICRO-units:
-
-        chi2_i = (obs_i - n*w_i/100)^2 / (n*w_i/100)
-               = (100*obs_i - n*w_i)^2 / (100*n*w_i)
-
-    — all-integer multiply-then-DIV, no float crosses the engine
-    boundary. A platform alerts when the summed statistic exceeds the
-    chi-square critical value; the per-variant contributions are the
-    diagnostic view that localizes which arm leaks.
-
-    Scale shape: one DISTINCT on user_id (map-side combinable), one
-    narrow hash projection, one 3-group aggregate, and a broadcast of
-    the 3-row weight table — nothing else. At 100 TB assignment stays
-    a pure map (the hash rides into any downstream join or filter);
-    the audit is group-count-sized. (100*obs)^2 stays inside int64 up
-    to ~10^8 users per variant; beyond that the standard move is the
-    DECIMAL/HUGEINT upgrade, noted not needed at fixture SFs."""
-    from .sketch_queries import _hash32_spark_sql
-
-    bucket = f"({_hash32_spark_sql('user_id')}) % 100"
-    users = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .distinct()
-        .withColumn("variant", F.expr(_exp_variant_case(bucket)))
-    )
-    n = users.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
-    w = spark.createDataFrame(
-        list(EXP_VARIANTS), "variant string, weight_pct long"
-    )
-    obs = users.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("long").alias("n_assigned")
-    )
-    return (
-        w.join(obs, "variant", "left")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "variant",
-            "weight_pct",
-            F.coalesce(F.col("n_assigned"), F.lit(0)).cast("long")
-            .alias("n_assigned"),
-            F.expr("COALESCE(n_assigned, 0) * 1000000 DIV n_users")
-            .cast("long").alias("observed_ppm"),
-            F.expr(
-                "CAST(POWER(100 * COALESCE(n_assigned, 0)"
-                " - n_users * weight_pct, 2) AS BIGINT)"
-                " * 1000000 DIV (100 * n_users * weight_pct)"
-            ).cast("long").alias("chi2_micro"),
-        )
-        .orderBy("variant")
-    )
-
-
-# ---------------------------------------------------------------------------
-# exp_variant_conversion: the experiment readout on top of the
-# deterministic assignment.
-# ---------------------------------------------------------------------------
-
-def _exp_conversion_oracle() -> str:
-    from .sketch_queries import _hash32_sql
-
-    bucket = f"({_hash32_sql('user_id')}) % 100"
-    return f"""
-    WITH users AS (SELECT DISTINCT user_id FROM events),
-    assigned AS (
-        SELECT user_id, {_exp_variant_case(bucket)} AS variant FROM users
-    ),
-    conv AS (
-        SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-    ),
-    arms AS (
-        SELECT a.variant,
-               CAST(COUNT(*) AS BIGINT) AS n_users,
-               CAST(COUNT(c.user_id) AS BIGINT) AS n_converted
-        FROM assigned a LEFT JOIN conv c ON a.user_id = c.user_id
-        GROUP BY a.variant
-    ),
-    ctrl AS (
-        SELECT n_converted * 1000000 // n_users AS ctrl_ppm FROM arms
-        WHERE variant = 'control'
-    )
-    SELECT arms.variant, arms.n_users, arms.n_converted,
-           arms.n_converted * 1000000 // arms.n_users AS conversion_ppm,
-           arms.n_converted * 1000000 // arms.n_users - ctrl.ctrl_ppm
-               AS uplift_ppm
-    FROM arms CROSS JOIN ctrl
-    ORDER BY arms.variant
-    """
-
-
-EXP_VARIANT_CONVERSION_ORACLE = _exp_conversion_oracle()
-
-
-@query("exp_variant_conversion", EXP_VARIANT_CONVERSION_ORACLE, local=True)
-def exp_variant_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The experiment READOUT on top of exp_assignment_srm's
-    deterministic arms: per variant, users, purchase converters,
-    exact-ppm conversion, and uplift vs the control arm — the A/B/n
-    summary table. (The fixture's hash arms are orthogonal to behavior
-    by construction, so uplift hovers near zero — the point attested
-    is the exact accounting, not a causal effect.)
-
-    Scale shape: assignment stays the pure avalanche-hash map; the
-    converter set is one DISTINCT on (user) after a type filter
-    (map-side combinable); arms fold in one LEFT-join + 3-group
-    aggregate; the control row rides back as a 1-row broadcast cross
-    join (the bm25 corpus-stats pattern). All-integer ppm."""
-    from .sketch_queries import _hash32_spark_sql
-
-    bucket = f"({_hash32_spark_sql('user_id')}) % 100"
-    ev = load_table(spark, sf_dir, "events")
-    assigned = (
-        ev.select("user_id").distinct()
-        .withColumn("variant", F.expr(_exp_variant_case(bucket)))
-    )
-    conv = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("cu"))
-        .distinct()
-    )
-    arms = (
-        assigned.join(conv, assigned["user_id"] == F.col("cu"), "left")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.count("cu").cast("long").alias("n_converted"),
-        )
-    )
-    ctrl = arms.filter(F.col("variant") == "control").select(
-        F.expr("n_converted * 1000000 DIV n_users").alias("ctrl_ppm")
-    )
-    return (
-        arms.crossJoin(F.broadcast(ctrl))
-        .select(
-            "variant",
-            "n_users",
-            "n_converted",
-            F.expr("n_converted * 1000000 DIV n_users").cast("long")
-            .alias("conversion_ppm"),
-            (
-                F.expr("n_converted * 1000000 DIV n_users")
-                - F.col("ctrl_ppm")
-            ).cast("long").alias("uplift_ppm"),
-        )
-        .orderBy("variant")
     )

@@ -972,184 +972,3 @@ def sim_pq_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("distortion_ok"),
         ((F.col("n_hits") / TOP_K) >= PQ_RECALL_FLOOR).alias("recall_ok"),
     )
-
-
-# ---------------------------------------------------------------------------
-# emb_random_projection: Johnson-Lindenstrauss sign projection 64 -> 16.
-# ---------------------------------------------------------------------------
-
-JL_DIM = 16
-
-def _jl_sign_sql(pos: str, j: str, spark_side: bool,
-                 dim: int = JL_DIM) -> str:
-    """±1 sign of projection cell (pos, j): low bit of the shared
-    32-bit avalanche over the cell index — deterministic, engine-
-    portable, and never materialized as a matrix."""
-    from .sketch_queries import _hash32_spark_sql, _hash32_sql
-
-    h = (_hash32_spark_sql if spark_side else _hash32_sql)(
-        f"({pos}) * {dim} + ({j})"
-    )
-    return f"(1 - 2 * (({h}) % 2))"
-
-
-EMB_RANDOM_PROJECTION_ORACLE = f"""
-    WITH e AS (
-        SELECT vec_id, u.i - 1 AS pos,
-               CAST(SIGN(CAST(embedding[u.i] AS DOUBLE))
-                    * FLOOR(ABS(CAST(embedding[u.i] AS DOUBLE))
-                            * 1000000 + 0.5e0) AS BIGINT) AS micro
-        FROM embeddings,
-             (SELECT unnest(generate_series(1, 64)) AS i) u
-        WHERE len(embedding) = 64
-    ),
-    cells AS (
-        SELECT e.vec_id, j.j,
-               e.micro * {_jl_sign_sql('e.pos', 'j.j', spark_side=False)}
-                   AS term
-        FROM e, (SELECT unnest(generate_series(0, {JL_DIM - 1})) AS j) j
-    )
-    SELECT vec_id, j, CAST(SUM(term) AS BIGINT) AS proj_micro
-    FROM cells
-    GROUP BY vec_id, j
-    ORDER BY vec_id, j
-    """
-
-
-@query("emb_random_projection", EMB_RANDOM_PROJECTION_ORACLE, local=True)
-def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss dimensionality reduction 64 -> JL_DIM (16)
-    by a deterministic ±1 sign matrix (Achlioptas 2003's database-
-    friendly projection): cell sign (i, j) is the low bit of the shared
-    32-bit avalanche over i*16+j, so the matrix is NEVER materialized
-    or broadcast — each executor recomputes signs as column arithmetic.
-    Elements are micro-quantized once (the emb_label_centroids idiom),
-    so every projected coordinate is an exact ±micro long SUM and the
-    DuckDB twin is hash-exact. The twin deliberately uses a DIFFERENT
-    formulation (explicit 64x16 cell expansion + GROUP BY) than the
-    Spark side (16 conditional SUMs in ONE vec_id aggregation over the
-    64 posexploded rows — map-side combinable, no j-expansion ever
-    rides a shuffle): identical integers from independent shapes.
-
-    This is the standard cheap pre-step in front of every distance
-    operator in this package — at 100 TB, projecting 64-d floats to
-    16 dims cuts ANN/LSH/SemDeDup shuffle bytes 4x while preserving
-    pairwise distances within the JL envelope (distance-correlation
-    pin in tests/test_similarity.py). Output long rows (vec_id, j,
-    proj_micro) per the registry's scalar-column contract."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return jl_projection_rows(emb).orderBy("vec_id", "j")
-
-
-def jl_projection_rows(emb: DataFrame, dim: int = JL_DIM) -> DataFrame:
-    """(vec_id, j, proj_micro) JL projection rows of an embeddings
-    frame — the shared kernel behind emb_random_projection and the
-    JL-shortlist retrieval composition below."""
-    val = F.col("val").cast("double")
-    micro = (
-        F.signum(val) * F.floor(F.abs(val) * F.lit(1000000.0) + F.lit(0.5))
-    ).cast("long")
-    e = (
-        emb.filter(F.size("embedding") == 64)
-        .select("vec_id", F.posexplode("embedding").alias("pos", "val"))
-        .select("vec_id", "pos", micro.alias("micro"))
-    )
-    sums = e.groupBy("vec_id").agg(*[
-        F.sum(
-            F.col("micro")
-            * F.expr(_jl_sign_sql("pos", str(j), spark_side=True, dim=dim))
-        ).cast("long").alias(f"p{j}")
-        for j in range(dim)
-    ])
-    stack = ", ".join(f"{j}, p{j}" for j in range(dim))
-    return sums.select(
-        "vec_id",
-        F.expr(f"stack({dim}, {stack}) AS (j, proj_micro)"),
-    ).select("vec_id", F.col("j").cast("long").alias("j"), "proj_micro")
-
-
-# ---------------------------------------------------------------------------
-# emb_rank_normalize: per-dimension rank (quantile) normalization of
-# the embedding matrix.
-# ---------------------------------------------------------------------------
-
-EMB_RANK_NORMALIZE_ORACLE = """
-    WITH cells AS (
-        SELECT vec_id, i AS dim, embedding[i] AS val
-        FROM embeddings,
-             UNNEST(generate_series(1, len(embedding))) AS u(i)
-    ),
-    n AS (SELECT COUNT(*) AS n_vecs FROM embeddings),
-    ranked AS (
-        SELECT vec_id, dim,
-               RANK() OVER (PARTITION BY dim ORDER BY val) AS rk
-        FROM cells
-    ),
-    norm AS (
-        SELECT vec_id, dim,
-               CAST((rk - 1) * 1000000 // (n_vecs - 1) AS BIGINT) AS r_ppm
-        FROM ranked, n
-    )
-    SELECT vec_id,
-           CAST(COUNT(*) AS BIGINT) AS n_dims,
-           CAST(SUM(r_ppm) AS BIGINT) AS sum_ppm,
-           CAST(MIN(r_ppm) AS BIGINT) AS min_ppm,
-           CAST(MAX(r_ppm) AS BIGINT) AS max_ppm,
-           CAST(SUM(dim * r_ppm) AS BIGINT) AS checksum_weighted
-    FROM norm
-    GROUP BY vec_id
-    ORDER BY vec_id
-    """
-
-
-@query("emb_rank_normalize", EMB_RANK_NORMALIZE_ORACLE, local=True)
-def emb_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension RANK (quantile) normalization of the embedding
-    matrix — the heavy-tail-robust feature prep (each dimension's
-    values are replaced by their rank position scaled to [0, 1e6] ppm)
-    applied before distance computations when raw activations have
-    wildly different per-dimension scales. RANK() gives ties an equal
-    value on both engines (no tiebreak nondeterminism to pin), and the
-    ppm scaling is truncating integer division, so the per-vector
-    report — dims, sum/min/max of normalized values, and an
-    ORDER-SENSITIVE checksum Σ dim·r_ppm that breaks if any dimension's
-    ranks land on the wrong vector — is hash-exact.
-
-    Plan: posexplode to (vec, dim, val) cells, ONE window pass
-    partitioned by dim (64 partitions of n rows — at 100 TB this is
-    the standard per-dimension sort, and a dimension is the natural
-    parallel unit; a skew-prone variant would range-partition within
-    dim), then one vec-keyed reassembly aggregate. Only (id, dim,
-    long) triples ride the two exchanges."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_vecs = emb.count()  # bounded scalar: one count, reused as literal
-    cells = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "val")
-    ).select("vec_id", (F.col("pos") + 1).alias("dim"), "val")
-    w = Window.partitionBy("dim").orderBy("val")
-    ranked = cells.select(
-        "vec_id", "dim", F.rank().over(w).alias("rk")
-    )
-    norm = ranked.select(
-        "vec_id",
-        "dim",
-        # rk is INT; widen BEFORE the ppm scale-up — at sf1 (8000 vecs)
-        # rk*1e6 tops 2^31 and ANSI mode turns the silent wrap into an
-        # ARITHMETIC_OVERFLOW (caught by the r15 full-registry sf1
-        # sweep; sub-2147-vec fixtures never tripped it)
-        F.expr(
-            f"(CAST(rk AS BIGINT) - 1) * 1000000 DIV ({n_vecs} - 1)"
-        ).alias("r_ppm"),
-    )
-    return (
-        norm.groupBy("vec_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dims"),
-            F.sum("r_ppm").cast("long").alias("sum_ppm"),
-            F.min("r_ppm").cast("long").alias("min_ppm"),
-            F.max("r_ppm").cast("long").alias("max_ppm"),
-            F.sum(F.col("dim") * F.col("r_ppm")).cast("long")
-            .alias("checksum_weighted"),
-        )
-        .orderBy("vec_id")
-    )

@@ -1,6 +1,5 @@
-"""Mergeable-sketch queries: HyperLogLog registers, count-min
-counters, and (r11) the k-minimum-values order-statistics sketch —
-three merge disciplines (max, sum, min-k-of-union), all with an
+"""Mergeable-sketch queries: HyperLogLog registers and count-min
+counters — two merge disciplines (max, sum), both with an
 exact-integer contract.
 
 The reference has no sketch surface beyond its exact aggregates; the
@@ -213,7 +212,6 @@ def hll_registers_frame(keys: DataFrame) -> DataFrame:
 # twin of the HLL MAX-merge above).
 # ---------------------------------------------------------------------------
 
-CMS_D = 4            # hash rows
 CMS_W = 1024         # counters per row (top-10-bit column index)
 CMS_TOP_K = 20       # probe workload: the hottest parts by exact count
 # per-row salts xor-ed into the key before the avalanche (< 2^32 so the
@@ -278,7 +276,7 @@ def agg_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The probe workload is the CMS_TOP_K hottest parts by exact count
     (deterministic tiebreak); each returns exact_cnt, the sketch
-    estimate (min over CMS_D row counters — integer, never below the
+    estimate (min over the 4 rows' counters — integer, never below the
     truth), and the overestimate. The one-sided error contract
     (overestimate >= 0 always; <= e*N/W per row with prob 1 - e^-D) is
     pinned in tests/test_sketch.py.
@@ -384,143 +382,3 @@ def hll_register_state(keys: DataFrame) -> DataFrame:
         ).cast("long").alias("rho"),
     )
     return rr.groupBy("idx").agg(F.max("rho").cast("long").alias("r"))
-
-
-# ---------------------------------------------------------------------------
-# agg_kmv_distinct: the k-minimum-values distinct sketch — third member
-# of the mergeable-sketch family (CMS counters, HLL registers, KMV
-# order statistics).
-# ---------------------------------------------------------------------------
-
-KMV_K = 16
-
-AGG_KMV_DISTINCT_ORACLE = f"""
-    WITH keys AS (
-        SELECT event_type AS grp, user_id % {_MOD32} AS x FROM events
-        UNION ALL
-        SELECT 'all' AS grp, user_id % {_MOD32} AS x FROM events
-    ),
-    h AS (SELECT DISTINCT grp, {_hash32_sql('x')} AS h FROM keys),
-    rk AS (
-        SELECT grp, h,
-               ROW_NUMBER() OVER (PARTITION BY grp ORDER BY h) AS rn,
-               COUNT(*) OVER (PARTITION BY grp) AS n_distinct
-        FROM h
-    ),
-    sk AS (
-        SELECT grp, MAX(h) AS kth_hash,
-               CAST(COUNT(*) AS BIGINT) AS n_sketch,
-               MAX(n_distinct) AS n_distinct
-        FROM rk WHERE rn <= {KMV_K} GROUP BY grp
-    )
-    SELECT grp,
-           CAST(n_sketch AS BIGINT) AS n_sketch,
-           CAST(kth_hash AS BIGINT) AS kth_hash,
-           CAST(CASE WHEN n_sketch < {KMV_K} THEN n_sketch
-                     ELSE ({KMV_K} - 1) * {_MOD32} // kth_hash
-                END AS BIGINT) AS est_distinct,
-           CAST(n_distinct AS BIGINT) AS n_exact
-    FROM sk
-    ORDER BY grp
-    """
-
-
-@query("agg_kmv_distinct", AGG_KMV_DISTINCT_ORACLE, local=True)
-def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-minimum-values distinct sketch (Bar-Yossef et al. 2002): per
-    event type keep the KMV_K (16) smallest DISTINCT avalanche-hash values of
-    user_id; the k-th smallest U estimates distinct = (k-1)·2^32 DIV U
-    — one truncating integer division, no float. The third mergeable
-    sketch next to the CMS counter table (sum-merge) and HLL registers
-    (max-merge): KMV merges by "k smallest of the union of sketches",
-    and THIS QUERY ATTESTS THE MERGE LAW ITSELF — the Spark 'all' row
-    is built by MERGING the five per-type sketch sets (never rescanning
-    users), while the oracle computes the global k-minimums directly
-    from the raw keys; hash equality proves min-k(∪ sketches) =
-    min-k(all keys), the cms_frequencies precedent. Groups with fewer
-    than k distinct keys report the exact count (the standard KMV
-    small-cardinality fallback), CASE'd identically on both engines.
-
-    Scale shape: one distinct (grp, hash) aggregate (map-side
-    combinable), a two-phase WindowGroupLimit top-k per group (rule
-    R5), and a k·groups-row merge — the raw keys never leave the first
-    aggregate. n_exact rides along for the error-contract read
-    (agg_approx_sketches' pattern)."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    keys = ev.select(
-        F.col("event_type").alias("grp"),
-        F.expr(f"user_id % {_MOD32}").alias("x"),
-    )
-    h = keys.select("grp", _hash32_col("x").alias("h")).distinct()
-    w = Window.partitionBy("grp").orderBy("h")
-    per_type = (
-        h.select("grp", "h", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= KMV_K)
-        .select("grp", "h")
-    )
-    # exact distinct per type (the error-contract column), and the
-    # merged 'all' sketch built FROM the per-type sketches: min-k of
-    # the union of the six k-min sets, never re-touching raw keys.
-    n_exact = h.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact")
-    )
-    all_h = per_type.select(F.lit("all").alias("grp"), "h").distinct()
-    all_sketch = (
-        all_h.select("grp", "h", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= KMV_K)
-        .select("grp", "h")
-    )
-    n_exact_all = h.select("h").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact")
-    ).select(F.lit("all").alias("grp"), "n_exact")
-    sketches = per_type.unionByName(all_sketch)
-    totals = n_exact.unionByName(n_exact_all)
-    sk = sketches.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sketch"),
-        F.max("h").cast("long").alias("kth_hash"),
-    )
-    return (
-        sk.join(F.broadcast(totals), "grp")
-        .select(
-            "grp",
-            "n_sketch",
-            "kth_hash",
-            F.when(
-                F.col("n_sketch") < KMV_K, F.col("n_sketch")
-            ).otherwise(
-                F.expr(f"({KMV_K} - 1) * {_MOD32} DIV kth_hash")
-            ).cast("long").alias("est_distinct"),
-            F.col("n_exact").alias("n_exact"),
-        )
-        .orderBy("grp")
-    )
-
-
-def kmv_sketch_state(keys: DataFrame) -> DataFrame:
-    """The KMV sketch of a key slice (column ``x``) as STATE ROWS: the
-    KMV_K smallest distinct avalanche hashes, one row per retained
-    hash. Min-k is a mergeable monoid — min-k(A ∪ B) =
-    min-k(min-k(A) ∪ min-k(B)) — so per-batch slices of ≤ k rows
-    merge on read without ever revisiting raw keys; like HLL's
-    max-merge (and unlike rollup sums), the merge is IDEMPOTENT, so a
-    retried slice is absorbed even before batch_id dedup."""
-    h = keys.select(_hash32_col("x").alias("h")).distinct()
-    return h.orderBy("h").limit(KMV_K)
-
-
-def kmv_estimate(sketch: DataFrame) -> DataFrame:
-    """Fold KMV state rows to the (n_sketch, kth_hash, est_distinct)
-    serving row — estimate = (k-1)·2^32 DIV kth, exact-count fallback
-    below k (agg_kmv_distinct's arithmetic over any state frame)."""
-    return sketch.agg(
-        F.count(F.lit(1)).cast("long").alias("n_sketch"),
-        F.max("h").cast("long").alias("kth_hash"),
-    ).select(
-        "n_sketch",
-        "kth_hash",
-        F.when(F.col("n_sketch") < KMV_K, F.col("n_sketch"))
-        .otherwise(F.expr(f"({KMV_K} - 1) * {_MOD32} DIV kth_hash"))
-        .cast("long").alias("est_distinct"),
-    )

@@ -22,7 +22,6 @@ from ..streaming.event_stream import (
     stream_events,
     user_running_totals_stream,
 )
-from .dedup_queries import DEDUP_BLOOM_INCREMENTAL_ORACLE, _BLOOM_HIST_SPLIT
 from .registry import query
 
 
@@ -281,51 +280,6 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "alpha_ok",
         "rep_ok",
         "keep",
-    )
-    out = run_available_now(gated, output_mode="append")
-    return out.orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# stream_bloom_gate: the Bloom membership pre-pass on the ingest
-# stream.
-# ---------------------------------------------------------------------------
-
-
-@query("stream_bloom_gate", DEDUP_BLOOM_INCREMENTAL_ORACLE, local=True)
-def stream_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming form of dedup_bloom_incremental (same oracle): each
-    arriving micro-batch probes the STATIC history Bloom word table
-    through the same k broadcast joins as the batch query, then the
-    exact stream-static verdict join — STATELESS on the stream side
-    (the filter is the state, and it lives outside the state store,
-    maintained batch-side by the bit_or merge the batch operator pins).
-    This is the deployment shape: the word table is KBs per million
-    history docs, so the probe gates a 100 TB/day ingest with zero
-    per-batch shuffle, and only maybe-seen survivors reach the exact
-    anti-join downstream."""
-    from ..operators.dedup import bloom_build, bloom_m_bits, bloom_probe
-    from ..sources.parquet_io import load_table
-    from ..streaming.event_stream import stream_documents
-
-    fp = F.md5(F.trim(F.lower(F.col("text")))).alias("fp")
-    hist = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _BLOOM_HIST_SPLIT)
-        .select(fp).distinct().localCheckpoint()
-    )
-    m = bloom_m_bits(hist.count())
-    words = bloom_build(hist, "fp", m).localCheckpoint()
-    incoming = (
-        stream_documents(spark, sf_dir)
-        .filter(F.col("doc_id") >= _BLOOM_HIST_SPLIT)
-        .select("doc_id", fp)
-    )
-    probed = bloom_probe(incoming, "fp", words, m)
-    exact = hist.withColumn("actually_seen", F.lit(True))
-    gated = probed.join(F.broadcast(exact), "fp", "left").select(
-        "doc_id", "fp", "maybe_seen",
-        F.coalesce("actually_seen", F.lit(False)).alias("actually_seen"),
     )
     out = run_available_now(gated, output_mode="append")
     return out.orderBy("doc_id")

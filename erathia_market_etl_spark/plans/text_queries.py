@@ -1713,95 +1713,6 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_chunk_overlap: retrieval-prep chunking (fixed window, fixed
-# overlap).
-# ---------------------------------------------------------------------------
-
-CHUNK_TOKENS = 64   # tokens per chunk
-CHUNK_STRIDE = 48   # start-to-start stride (overlap = 64 - 48 = 16)
-
-TEXT_CHUNK_OVERLAP_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t,
-               len(string_split(text, ' ')) AS n
-        FROM documents
-    ),
-    starts AS (
-        SELECT doc_id, t, n,
-               unnest(generate_series(0,
-                   CASE WHEN n <= {CHUNK_TOKENS} THEN 0
-                        ELSE (n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1)
-                             // {CHUNK_STRIDE}
-                   END)) AS chunk_idx
-        FROM toks
-    )
-    SELECT doc_id,
-           CAST(chunk_idx AS INT) AS chunk_idx,
-           CAST(chunk_idx * {CHUNK_STRIDE} AS BIGINT) AS start_tok,
-           CAST(len(t[chunk_idx * {CHUNK_STRIDE} + 1 :
-                     chunk_idx * {CHUNK_STRIDE} + {CHUNK_TOKENS}])
-                AS BIGINT) AS n_tokens,
-           array_to_string(t[chunk_idx * {CHUNK_STRIDE} + 1 :
-                             chunk_idx * {CHUNK_STRIDE} + {CHUNK_TOKENS}],
-                           ' ') AS chunk_text
-    FROM starts
-    ORDER BY doc_id, chunk_idx
-    """
-
-
-@query("text_chunk_overlap", TEXT_CHUNK_OVERLAP_ORACLE, local=True)
-def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping-window chunker (the RAG / long-context preprocessing
-    shape): each document yields chunks of CHUNK_TOKENS (64) tokens
-    starting every CHUNK_STRIDE (48) tokens — 16 tokens of overlap so
-    no sentence straddles a hard boundary unseen. The chunk count is
-    exact integer arithmetic (1 for short docs, else
-    (n - C + S - 1) DIV S + 1 — the numerator is kept positive so
-    truncating DIV and flooring // agree), the chunk body is a narrow
-    slice + join over the one tokenization.
-
-    At scale this is a pure map stage: one corpus scan, a bounded
-    sequence-explode (≤ n_tok/S + 1 rows per doc), zero shuffles
-    before the presentation sort — chunking 100 TB is
-    embarrassingly parallel and this plan keeps it that way."""
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = fan_out(docs).select(
-        "doc_id",
-        F.split("text", " ").alias("t"),
-        F.size(F.split("text", " ")).alias("n"),
-    )
-    n_last = F.when(
-        F.col("n") <= CHUNK_TOKENS, F.lit(0)
-    ).otherwise(
-        F.expr(
-            f"(n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1) DIV {CHUNK_STRIDE}"
-        )
-    )
-    chunk = F.slice(
-        F.col("t"),
-        F.col("chunk_idx") * CHUNK_STRIDE + 1,
-        CHUNK_TOKENS,
-    )
-    return (
-        toks.select(
-            "doc_id", "t",
-            F.explode(F.sequence(F.lit(0), n_last)).alias("chunk_idx"),
-        )
-        .select(
-            "doc_id",
-            F.col("chunk_idx").cast("int").alias("chunk_idx"),
-            (F.col("chunk_idx").cast("long") * CHUNK_STRIDE)
-            .alias("start_tok"),
-            F.size(chunk).cast("long").alias("n_tokens"),
-            F.array_join(chunk, " ").alias("chunk_text"),
-        )
-        .orderBy("doc_id", "chunk_idx")
-    )
-
-
-# ---------------------------------------------------------------------------
 # text_phrase_search: positional phrase retrieval with a self-derived
 # query workload.
 # ---------------------------------------------------------------------------
@@ -1893,7 +1804,7 @@ def phrase_search_frame(docs: DataFrame,
         )
     )
     # occ feeds both the workload fit (tot -> top) and the retrieval
-    # join; localCheckpoint (the bloom/graph lineage pattern)
+    # join; localCheckpoint (the graph lineage pattern)
     # materializes the one corpus-sized aggregate instead of scanning
     # and re-aggregating the corpus once per consumer
     occ = big.groupBy("phrase", "doc_id").agg(
@@ -1920,283 +1831,6 @@ def phrase_search_frame(docs: DataFrame,
             "n_occurrences", "rank",
         )
         .orderBy("phrase", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_top_terms_tfidf: per-document keyword extraction.
-# ---------------------------------------------------------------------------
-
-TFIDF_TOP_K = 5
-
-TEXT_TOP_TERMS_TFIDF_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks GROUP BY doc_id, term
-    ),
-    n AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-          FROM tf),
-    scored AS (
-        SELECT tf.doc_id, tf.term, tf.tf,
-               CAST(COUNT(*) OVER (PARTITION BY tf.term) AS BIGINT) AS df,
-               n.n_docs
-        FROM tf, n
-    ),
-    ranked AS (
-        SELECT doc_id, term, tf, df,
-               ROW_NUMBER() OVER (
-                   PARTITION BY doc_id
-                   ORDER BY CAST(tf * (2 * (n_docs - df) + 1) AS DOUBLE)
-                            / (2 * df + 1) DESC,
-                            term
-               ) AS rank
-        FROM scored
-    )
-    SELECT doc_id, term, tf, df, rank
-    FROM ranked WHERE rank <= {TFIDF_TOP_K}
-    ORDER BY doc_id, rank
-    """
-
-
-@query("text_top_terms_tfidf", TEXT_TOP_TERMS_TFIDF_ORACLE, local=True)
-def text_top_terms_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document keyword extraction: the TFIDF_TOP_K (5) most
-    distinctive terms per document by tf-idf, with the BM25-style
-    RATIONAL idf — score = tf * (2*(N - df) + 1) / (2*df + 1), an
-    integer numerator and denominator whose single IEEE division is
-    correctly rounded on both engines (the `ln()` formulation is not;
-    bm25_topk_postings established the idiom). Deterministic term
-    tie-break makes the rank hash-exact.
-
-    Plan: the corpus is tokenized ONCE into (doc, term) tf counts (one
-    map-side-combinable aggregate); df is a window over the SAME
-    subtree partitioned by term (single tokenization — the
-    bm25_topk_postings discipline, no second corpus scan); the final
-    rank window partitions by doc_id and its rank <= k cut pushes into
-    the window sort as WindowGroupLimit. Nothing wider than
-    (doc_id, term, counts) rides any exchange. At 100 TB keyword
-    extraction is exactly this pipeline with a stopword/df-floor
-    pre-filter (one WHERE on the tf table — the same plan)."""
-    docs = load_table(spark, sf_dir, "documents")
-    from ..sources.parquet_io import fan_out
-
-    tf = (
-        fan_out(docs)
-        .select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    from pyspark.sql import Window
-
-    w_df = Window.partitionBy("term")
-    # n_docs is the distinct doc count, a scalar: a broadcast 1-row
-    # cross join, never a global window over the term table
-    n_docs = tf.agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs")
-    )
-    score = (
-        (F.col("tf") * (2 * (F.col("n_docs") - F.col("df")) + 1))
-        .cast("double") / (2 * F.col("df") + 1)
-    )
-    w_rank = Window.partitionBy("doc_id").orderBy(score.desc(), "term")
-    return (
-        tf.withColumn("df", F.count(F.lit(1)).over(w_df).cast("long"))
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TFIDF_TOP_K)
-        .select("doc_id", "term", "tf", "df", "rank")
-        .orderBy("doc_id", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_vocab_coverage: tokenizer-vocabulary coverage / OOV-rate audit.
-# ---------------------------------------------------------------------------
-
-VOCAB_SIZE = 16  # reference vocabulary: top-N terms by document frequency
-# (the fixture corpus has exactly 31 distinct whitespace terms at every
-# SF, so 16 leaves a REAL out-of-vocab population — a 32-term vocab
-# would make every coverage row vacuously 100%)
-
-TEXT_VOCAB_COVERAGE_ORACLE = f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        FROM documents
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM tok GROUP BY doc_id, term
-    ),
-    vocab AS (
-        SELECT term FROM (
-            SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-        ) ORDER BY df DESC, term LIMIT {VOCAB_SIZE}
-    )
-    SELECT t.doc_id,
-           CAST(SUM(t.tf) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(SUM(CASE WHEN v.term IS NOT NULL THEN t.tf END), 0)
-                AS BIGINT) AS n_in_vocab,
-           CAST((SUM(t.tf)
-                 - COALESCE(SUM(CASE WHEN v.term IS NOT NULL THEN t.tf END),
-                            0)) * 1000000 // SUM(t.tf)
-                AS BIGINT) AS oov_ppm,
-           CAST(COUNT(CASE WHEN v.term IS NULL THEN 1 END) AS BIGINT)
-               AS n_distinct_oov
-    FROM tf t LEFT JOIN vocab v ON t.term = v.term
-    GROUP BY t.doc_id
-    ORDER BY doc_id
-    """
-
-
-@query("text_vocab_coverage", TEXT_VOCAB_COVERAGE_ORACLE, local=True)
-def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary-coverage / OOV-rate audit — the tokenizer-fit check a
-    training pipeline runs before committing a vocab: against a
-    reference vocabulary (here self-derived: the VOCAB_SIZE terms with
-    the highest document frequency, term-asc tiebreak — in production a
-    fixed tokenizer vocab table), report per document the total token
-    count, in-vocab token count, the OOV rate in exact ppm
-    ((oov * 1e6) DIV total — integer, hash-exact), and the number of
-    DISTINCT out-of-vocab terms (the new-vocabulary-mass signal).
-
-    Plan: tokenize -> (doc, term, tf) map-side-combinable aggregate;
-    the vocabulary is a TakeOrderedAndProject over the term-df
-    aggregate (top-k never sorts globally) broadcast back as a
-    VOCAB_SIZE-row hash relation, so coverage is a broadcast LEFT join
-    + one per-doc aggregate — no pair of corpus-sized tables ever
-    meets at a shuffle. The tf subtree is evaluated once per branch
-    (vocab derivation + coverage join); at 100 TB the tf table is the
-    thing to materialize once and reuse — same discipline as
-    bm25_topk_postings' posting table."""
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    return vocab_coverage_frame(fan_out(docs))
-
-
-def vocab_coverage_frame(
-    docs: "DataFrame", vocab_size: int = VOCAB_SIZE
-) -> DataFrame:
-    """Core of text_vocab_coverage over any (doc_id, text) frame —
-    split out so the planted-corpus test can drive known vocab/OOV
-    populations directly."""
-    tf = (
-        docs
-        .select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    vocab = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .orderBy(F.col("df").desc(), "term")
-        .limit(vocab_size)
-        .select("term", F.lit(1).alias("_v"))
-    )
-    return (
-        tf.join(F.broadcast(vocab), "term", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_tokens"),
-            F.coalesce(
-                F.sum(F.when(F.col("_v").isNotNull(), F.col("tf"))),
-                F.lit(0),
-            ).cast("long").alias("n_in_vocab"),
-            F.count(F.when(F.col("_v").isNull(), 1)).cast("long")
-            .alias("n_distinct_oov"),
-        )
-        .withColumn(
-            "oov_ppm",
-            F.expr("(n_tokens - n_in_vocab) * 1000000 DIV n_tokens"),
-        )
-        .select(
-            "doc_id", "n_tokens", "n_in_vocab", "oov_ppm", "n_distinct_oov"
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_simpson_diversity: exact lexical-diversity signals per document.
-# ---------------------------------------------------------------------------
-
-TEXT_SIMPSON_DIVERSITY_ORACLE = """
-    WITH tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS term
-            FROM documents
-        ) GROUP BY doc_id, term
-    )
-    SELECT doc_id,
-           CAST(SUM(tf) AS BIGINT) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct,
-           CAST(COUNT(*) * 1000000 // SUM(tf) AS BIGINT) AS ttr_ppm,
-           CAST(CASE WHEN SUM(tf) > 1
-                     THEN SUM(tf * (tf - 1)) * 1000000
-                          // (SUM(tf) * (SUM(tf) - 1))
-                     ELSE 0 END AS BIGINT) AS simpson_ppm
-    FROM tf
-    GROUP BY doc_id
-    ORDER BY doc_id
-    """
-
-
-@query("text_simpson_diversity", TEXT_SIMPSON_DIVERSITY_ORACLE, local=True)
-def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact lexical-diversity signals per document: type-token ratio
-    and the Simpson repeat probability Σ tf·(tf−1) / (n·(n−1)) — the
-    probability two tokens drawn without replacement are the same
-    term. Entropy/perplexity is the usual diversity score but needs
-    log() (not correctly rounded — banned from oracled outputs); the
-    Simpson index is its Rényi-2 sibling and PURE integer arithmetic,
-    so both signals are hash-exact in ppm. Low diversity (high
-    simpson_ppm, low ttr_ppm) flags boilerplate/spam the way
-    text_repetition_signals' bigram fractions do, from the unigram
-    side.
-
-    Plan: one tokenize -> (doc, term, tf) map-side-combinable
-    aggregate, then one per-doc aggregate — both shuffles carry
-    (doc_id, term/counts) longs only; nothing else. At 100 TB this is
-    the cheapest useful corpus-quality pass after raw token counts."""
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    return simpson_diversity_frame(fan_out(docs))
-
-
-def simpson_diversity_frame(docs: DataFrame) -> DataFrame:
-    """Core of text_simpson_diversity over any (doc_id, text) frame —
-    split out so the planted-corpus test can pin the ttr/simpson
-    arithmetic on hand-checkable documents."""
-    tf = (
-        docs
-        .select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    return (
-        tf.groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct"),
-            F.sum(F.col("tf") * (F.col("tf") - 1)).cast("long").alias("_coll"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "n_distinct",
-            F.expr("n_distinct * 1000000 DIV n_tokens").alias("ttr_ppm"),
-            F.when(
-                F.col("n_tokens") > 1,
-                F.expr("_coll * 1000000 DIV (n_tokens * (n_tokens - 1))"),
-            ).otherwise(F.lit(0)).cast("long").alias("simpson_ppm"),
-        )
-        .orderBy("doc_id")
     )
 
 
@@ -2301,318 +1935,4 @@ def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("contaminated"),
         )
         .orderBy("train_doc")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_source_divergence: pairwise unigram-distribution L1 distance
-# between sources — corpus mixture analysis.
-# ---------------------------------------------------------------------------
-
-TEXT_SOURCE_DIVERGENCE_ORACLE = """
-    WITH tf AS (
-        SELECT source, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM (
-            SELECT source, unnest(string_split(text, ' ')) AS term
-            FROM documents
-        ) GROUP BY source, term
-    ),
-    tot AS (SELECT source, SUM(tf) AS tot FROM tf GROUP BY source),
-    p AS (
-        SELECT tf.source, term,
-               CAST(tf * 1000000 // tot AS BIGINT) AS p_ppm
-        FROM tf JOIN tot ON tf.source = tot.source
-    ),
-    tp AS (SELECT source, SUM(p_ppm) AS tot_ppm FROM p GROUP BY source),
-    shared AS (
-        SELECT a.source AS src_a, b.source AS src_b,
-               CAST(COUNT(*) AS BIGINT) AS n_shared_terms,
-               SUM(ABS(a.p_ppm - b.p_ppm)) AS l1_shared,
-               SUM(a.p_ppm) AS pa_shared,
-               SUM(b.p_ppm) AS pb_shared
-        FROM p a JOIN p b ON a.term = b.term AND a.source < b.source
-        GROUP BY a.source, b.source
-    )
-    SELECT ta.source AS src_a, tb.source AS src_b,
-           CAST(COALESCE(s.n_shared_terms, 0) AS BIGINT) AS n_shared_terms,
-           CAST(COALESCE(s.l1_shared, 0)
-                + (ta.tot_ppm - COALESCE(s.pa_shared, 0))
-                + (tb.tot_ppm - COALESCE(s.pb_shared, 0))
-                AS BIGINT) AS l1_ppm
-    FROM tp ta
-    JOIN tp tb ON ta.source < tb.source
-    LEFT JOIN shared s ON s.src_a = ta.source AND s.src_b = tb.source
-    ORDER BY l1_ppm, src_a, src_b
-    """
-
-
-@query("text_source_divergence", TEXT_SOURCE_DIVERGENCE_ORACLE, local=True)
-def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise corpus-mixture divergence: the exact L1 distance (in
-    ppm of probability mass) between every two sources' unigram
-    frequency distributions — the mixture-analysis pass that tells a
-    data curator which sources are near-duplicates of each other and
-    which add genuinely new text. KL/JS divergence is the textbook
-    score but needs log(); L1 (total variation x2) ranks mixtures the
-    same way and is PURE integer arithmetic over truncated-ppm
-    frequencies, so the pair table is hash-exact.
-
-    Decomposition that avoids a union-of-vocab join: L1 over the term
-    UNION = Σ_shared |p_a - p_b| + (mass_a - shared_a) + (mass_b -
-    shared_b), where mass_x = Σ p_ppm over x's whole vocabulary. Only
-    the SHARED-term self-equi-join on term ever runs; each side's
-    private-vocabulary contribution comes from its (sources-sized)
-    mass total. Plan: one (source, term) aggregate, a 20-row totals
-    broadcast, the term-keyed self-join (per-term fanout bounded by
-    sources², never corpus size), and a sources²-row result. At
-    100 TB with S sources the shuffled data is the distinct (source,
-    term) frequency table — vocabulary-sized, not corpus-sized."""
-    docs = load_table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(
-            "source", F.explode(TX.tokens(F.col("text"))).alias("term")
-        )
-        .groupBy("source", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    tot = tf.groupBy("source").agg(F.sum("tf").cast("long").alias("tot"))
-    # stage the ppm frequency table ONCE (localCheckpoint): five
-    # consumers read it (both self-join sides, both mass totals, the
-    # pair assembly) and would otherwise each re-run the tokenize +
-    # (source, term) aggregate subtree — the staged frame is
-    # vocabulary-sized (distinct terms x sources), never corpus-sized,
-    # so materializing it is the cheap side of that trade at any SF
-    p = tf.join(F.broadcast(tot), "source").select(
-        "source", "term", F.expr("tf * 1000000 DIV tot").alias("p_ppm")
-    ).localCheckpoint()
-    tp = p.groupBy("source").agg(
-        F.sum("p_ppm").cast("long").alias("tot_ppm")
-    )
-    a = p.select(
-        F.col("source").alias("src_a"), "term", F.col("p_ppm").alias("pa")
-    )
-    b = p.select(
-        F.col("source").alias("src_b"), "term", F.col("p_ppm").alias("pb")
-    )
-    shared = (
-        a.join(b, "term")
-        .filter(F.col("src_a") < F.col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shared_terms"),
-            F.sum(F.abs(F.col("pa") - F.col("pb"))).cast("long")
-            .alias("l1_shared"),
-            F.sum("pa").cast("long").alias("pa_shared"),
-            F.sum("pb").cast("long").alias("pb_shared"),
-        )
-    )
-    ta = tp.select(F.col("source").alias("src_a"), F.col("tot_ppm").alias("mass_a"))
-    tb = tp.select(F.col("source").alias("src_b"), F.col("tot_ppm").alias("mass_b"))
-    # sources-sized frames: broadcast the pair expansion so it plans
-    # as BroadcastNestedLoopJoin, never CartesianProduct (lint R1)
-    pairs = ta.crossJoin(F.broadcast(tb)).filter(
-        F.col("src_a") < F.col("src_b")
-    )
-    return (
-        pairs.join(F.broadcast(shared), ["src_a", "src_b"], "left")
-        .select(
-            "src_a",
-            "src_b",
-            F.coalesce(F.col("n_shared_terms"), F.lit(0)).cast("long")
-            .alias("n_shared_terms"),
-            (
-                F.coalesce(F.col("l1_shared"), F.lit(0))
-                + (F.col("mass_a") - F.coalesce(F.col("pa_shared"), F.lit(0)))
-                + (F.col("mass_b") - F.coalesce(F.col("pb_shared"), F.lit(0)))
-            ).cast("long").alias("l1_ppm"),
-        )
-        .orderBy("l1_ppm", "src_a", "src_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_vocab_hapax_profile: per-source vocabulary richness profile.
-# ---------------------------------------------------------------------------
-
-TEXT_VOCAB_HAPAX_PROFILE_ORACLE = """
-    WITH tok AS (
-        SELECT source, unnest(string_split(LOWER(text), ' ')) AS token
-        FROM documents
-    ),
-    tc AS (
-        SELECT source, token, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM tok WHERE token <> '' GROUP BY source, token
-    )
-    SELECT source,
-           CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-           CAST(COUNT(*) AS BIGINT) AS n_types,
-           CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_hapax,
-           CAST(MAX(cnt) AS BIGINT) AS top_type_count,
-           CAST(COUNT(*) * 1000000 // SUM(cnt) AS BIGINT) AS ttr_ppm,
-           CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) * 1000000
-                // COUNT(*) AS BIGINT) AS hapax_share_ppm
-    FROM tc
-    GROUP BY source
-    ORDER BY source
-    """
-
-
-@query("text_vocab_hapax_profile", TEXT_VOCAB_HAPAX_PROFILE_ORACLE, local=True)
-def text_vocab_hapax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source VOCABULARY RICHNESS profile: token total, distinct
-    type count, hapax-legomena count (types occurring exactly once in
-    the source), the heaviest type's count, and the two classic
-    corpus-quality ratios — type/token ratio and hapax share — as
-    exact integer ppm (DIV on both engines, never a float division).
-    These are the first diagnostics a data team reads per crawl
-    source: machine-generated or boilerplate-heavy sources show
-    depressed TTR and hapax share, OCR/noisy sources inflate both —
-    the standard screen BEFORE tokenizer training (hapax mass directly
-    drives BPE merge-table waste).
-
-    Scale shape: explode tokens (narrow, after a text-column-only
-    projection) -> (source, token) counts with map-side partial
-    aggregation (the exchange carries one row per distinct type per
-    task, not per occurrence) -> per-source rollup of the type table
-    (a second, much smaller exchange on source). No window, no single
-    partition; both aggregates are classic combinable shapes. At
-    100 TB the (source, token) table is the dominant shuffle — the
-    same cost envelope as the text_token_frequencies vocabulary
-    count, keyed finer."""
-    docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    from ..sources.parquet_io import fan_out
-
-    tc = (
-        fan_out(docs)
-        .select(
-            "source",
-            F.explode(F.split(F.lower("text"), " ")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return (
-        tc.groupBy("source")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).cast("long").alias("n_types"),
-            F.sum(F.when(F.col("cnt") == 1, 1).otherwise(0))
-            .cast("long").alias("n_hapax"),
-            F.max("cnt").cast("long").alias("top_type_count"),
-        )
-        .select(
-            "source",
-            "n_tokens",
-            "n_types",
-            "n_hapax",
-            "top_type_count",
-            F.expr("n_types * 1000000 DIV n_tokens").alias("ttr_ppm"),
-            F.expr("n_hapax * 1000000 DIV n_types").alias(
-                "hapax_share_ppm"
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-# ---------------------------------------------------------------------------
-# mart_corpus_mix: the per-source data-mix report (docs/tokens kept by
-# the quality gate, and each source's share of the post-gate token
-# budget).
-# ---------------------------------------------------------------------------
-
-MART_CORPUS_MIX_ORACLE = f"""
-    WITH {_GATE_SQL_CTE},
-    per AS (
-        SELECT source,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-                   AS kept_docs,
-               CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-               CAST(SUM(CASE WHEN keep THEN n_tokens ELSE 0 END) AS BIGINT)
-                   AS kept_tokens
-        FROM gated GROUP BY source
-    ),
-    tot AS (SELECT CAST(SUM(kept_tokens) AS BIGINT) AS ck FROM per)
-    SELECT per.source, per.n_docs, per.kept_docs, per.total_tokens,
-           per.kept_tokens,
-           per.kept_tokens * 1000000 // tot.ck AS mix_share_ppm
-    FROM per CROSS JOIN tot
-    ORDER BY per.source
-    """
-
-
-@query("mart_corpus_mix", MART_CORPUS_MIX_ORACLE, local=True)
-def mart_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DATA-MIX report a pretraining pipeline signs off before a
-    run: per corpus source, document and token counts before/after the
-    C4/Gopher quality gate, and the source's exact-ppm share of the
-    POST-GATE token budget — the number that actually becomes the
-    mixture weight (sample_temperature_mixture reweights it; this mart
-    is the observed baseline it reweights FROM).
-
-    Scale shape: reuses ``_gate_frame`` (narrow per-doc rules, no
-    shuffle) and folds straight into a source-keyed aggregate —
-    map-side combinable, group-count-sized output; the corpus-wide
-    kept-token total is a 1-row broadcast (the bm25 corpus-stats
-    pattern). Nothing but (source, two longs) rides the one exchange.
-    All-integer; share is multiply-then-DIV ppm."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    return present_corpus_mix(corpus_mix_state(docs))
-
-
-def corpus_mix_state(docs: DataFrame) -> DataFrame:
-    """The MERGEABLE per-source mix state over any document slice —
-    four counter columns keyed by source, a pure counter monoid
-    (merge = SUM by source), so partial states from independent
-    slices/micro-batches fold to exactly the full-corpus state
-    (streaming/event_stream.py streaming_mix_append maintains it
-    under ingest)."""
-    return (
-        _gate_frame(docs)
-        .select("source", "n_tokens", "keep")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum(F.col("keep").cast("long")).cast("long").alias("kept_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-            F.sum(F.when(F.col("keep"), F.col("n_tokens")).otherwise(0))
-            .cast("long").alias("kept_tokens"),
-        )
-    )
-
-
-def merge_mix_states(*states: DataFrame) -> DataFrame:
-    """Fold partial corpus-mix states (the counter-monoid merge)."""
-    from functools import reduce
-
-    log = reduce(lambda a, b: a.unionByName(b), states)
-    return log.groupBy("source").agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("kept_docs").cast("long").alias("kept_docs"),
-        F.sum("total_tokens").cast("long").alias("total_tokens"),
-        F.sum("kept_tokens").cast("long").alias("kept_tokens"),
-    )
-
-
-def present_corpus_mix(state: DataFrame) -> DataFrame:
-    """Serving view over a (merged) mix state: attach each source's
-    exact-ppm share of the post-gate token budget (1-row broadcast)."""
-    tot = state.agg(F.sum("kept_tokens").cast("long").alias("ck"))
-    return (
-        state.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            "kept_docs",
-            "total_tokens",
-            "kept_tokens",
-            F.expr("kept_tokens * 1000000 DIV ck").cast("long")
-            .alias("mix_share_ppm"),
-        )
-        .orderBy("source")
     )

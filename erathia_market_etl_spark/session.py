@@ -62,11 +62,11 @@ def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSessio
         # flip or a legacy-configured host session can't silently change
         # arithmetic semantics): integer overflow/invalid-cast RAISE
         # instead of wrapping. Every integer-heavy operator (pagerank
-        # fixed-point, z-order interleave, bloom hashing, HLL registers)
-        # carries a hand-proved non-wrap envelope — under ANSI those
-        # proofs are load-bearing (they are why the queries never
-        # throw), and a latent overflow becomes a loud runtime error
-        # instead of silent corruption. Deliberate wraparound mod 2^64
+        # fixed-point, z-order interleave, HLL registers) carries a
+        # hand-proved non-wrap envelope — under ANSI those proofs are
+        # load-bearing (they are why the queries never throw), and a
+        # latent overflow becomes a loud runtime error instead of
+        # silent corruption. Deliberate wraparound mod 2^64
         # (winnowing) lives in numpy uint64 inside Arrow UDFs, outside
         # ANSI's reach. See SCALE.md "ANSI mode".
         .config("spark.sql.ansi.enabled", "true")

@@ -1,3 +1,3 @@
-from .parquet_io import load_table, load_tables, write_partitioned, write_single_file
+from .parquet_io import load_table
 
-__all__ = ["load_table", "load_tables", "write_partitioned", "write_single_file"]
+__all__ = ["load_table"]

@@ -88,10 +88,6 @@ def load_table(
     return spark.read.schema(schema).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def adaptive_partitions(
     df: DataFrame, bytes_per_partition: int = 16 * 1024 * 1024
 ) -> int:
@@ -160,23 +156,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: tuple[str, ...] = ("year", "month"),
-    mode: str = "overwrite",
-) -> None:
-    """Fact-table sink: hive layout -> native partition pruning on read
-    (ref: bronze_generator.py:474-479, silver_processor.py:71)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_single_file(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Dim-table sink: compact to one file (ref: silver_processor.py:73).
-    Only for KB..MB dims — never coalesce(1) a fact table."""
-    df.coalesce(1).write.mode(mode).parquet(path)
-
-
 def write_range_clustered(
     df: DataFrame,
     path: str,
@@ -190,7 +169,7 @@ def write_range_clustered(
     so a point/range predicate skips whole files (and row groups within
     them) before reading a byte — the poor man's clustered index, and
     the single highest-leverage layout decision for a 100 TB fact table
-    queried by time/key range. Hive partitioning (write_partitioned)
+    queried by time/key range. Hive partitioning (``partitionBy``)
     prunes on LOW-cardinality columns via directory names; range
     clustering covers the high-cardinality continuous keys hive
     partitioning can't (one dir per distinct timestamp would be

@@ -339,7 +339,7 @@ def _run_state_append(
     checkpoint: str | None = None,
     after_write: Any = None,
 ) -> list[int]:
-    """Shared runner for the three maintenance sinks: per micro-batch,
+    """Shared runner for the four maintenance sinks: per micro-batch,
     compute ``slice_fn(batch_df)``'s mergeable state slice, stamp
     ``batch_id``, APPEND it to the parquet state log, then call
     ``after_write(batch_id)`` (commit callback — metrics/alerting in
@@ -566,73 +566,3 @@ def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
     (batch_id, idx) mirrors the other sinks for contract uniformity."""
     log = spark.read.parquet(state_path).dropDuplicates(["batch_id", "idx"])
     return log.groupBy("idx").agg(F.max("r").cast("long").alias("r"))
-
-
-def streaming_kmv_append(
-    keys: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """KMV distinct-sketch maintenance under ingest — the fifth member
-    of the mergeable-state sink family (rollup sums, count-min
-    counters, candles, HLL registers, KMV order statistics): each
-    micro-batch of keys (column ``x``) appends its k-minimum-hash
-    slice (≤ KMV_K rows regardless of batch size); serving takes the
-    k smallest of the union on read. min-k merge is idempotent, so
-    like the HLL sink this state is retry-safe even before the
-    read-side batch_id dedup."""
-    from ..plans.sketch_queries import kmv_sketch_state
-
-    return _run_state_append(
-        keys, state_path, kmv_sketch_state, checkpoint, after_write
-    )
-
-
-def read_kmv_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming KMV log: k smallest distinct
-    hashes across every appended slice — identical rows to batch
-    ``kmv_sketch_state`` over the full key log (pinned in
-    tests/test_streaming.py). Retry dedup per (batch_id, h) mirrors
-    the other sinks for contract uniformity."""
-    from ..plans.sketch_queries import KMV_K
-
-    log = spark.read.parquet(state_path).dropDuplicates(["batch_id", "h"])
-    return log.select("h").distinct().orderBy("h").limit(KMV_K)
-
-
-def streaming_mix_append(
-    docs: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Corpus-mix maintenance under ingest — the sixth member of the
-    mergeable-state maintenance family (day rollups, CMS counters,
-    candles, HLL registers, KMV order statistics): each document
-    micro-batch appends its per-source gate-mix COUNTER slice
-    (plans.text_queries.corpus_mix_state — n_docs/kept_docs/
-    total_tokens/kept_tokens by source, ≤ |sources| rows per batch
-    regardless of batch size); serving merges by SUM and attaches the
-    ppm share on read. This is how the data-mix report stays live
-    while the corpus ingests — no re-gating of history, ever."""
-    from ..plans.text_queries import corpus_mix_state
-
-    return _run_state_append(
-        docs, state_path, corpus_mix_state, checkpoint, after_write
-    )
-
-
-def read_mix_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming corpus-mix log: one row per
-    (batch_id, source) survives the retry dedup (a replayed batch
-    re-appends an identical slice), the counter monoid folds by SUM,
-    and the serving view attaches the exact-ppm mix share — identical
-    output contract to batch ``mart_corpus_mix`` over the full corpus
-    (pinned in tests/test_streaming.py)."""
-    from ..plans.text_queries import merge_mix_states, present_corpus_mix
-
-    log = spark.read.parquet(state_path).dropDuplicates(
-        ["batch_id", "source"]
-    )
-    return present_corpus_mix(merge_mix_states(log.drop("batch_id")))

@@ -64,38 +64,6 @@ def test_funnel_strict_order_and_window(spark, tmp_path):
     assert out["purchase"][1] == 250
 
 
-def test_cohort_daily_retention_planted(spark, tmp_path):
-    """Two cohorts with hand-computed retention cells; multiple events
-    by one user on the same day count once (the DISTINCT (user, day)
-    dedup); a later cohort's offsets are relative to ITS day."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        cohort_daily_retention,
-    )
-
-    day = 86400
-    rows = [
-        # cohort 2024-01-01: u1 active days 0,1,2 (day 1 twice); u2 days 0,2
-        (1, "view", 0), (1, "click", day), (1, "view", day + 50),
-        (1, "view", 2 * day),
-        (2, "view", 10), (2, "click", 2 * day + 10),
-        # cohort 2024-01-02: u3 active its day 0 only
-        (3, "purchase", day + 100),
-    ]
-    out = [
-        (str(r["cohort_day"]), r["day_offset"], r["cohort_size"],
-         r["active_users"], r["retention_ppm"])
-        for r in cohort_daily_retention(
-            spark, _write_events(spark, tmp_path, rows)
-        ).collect()
-    ]
-    assert out == [
-        ("2024-01-01", 0, 2, 2, 1000000),
-        ("2024-01-01", 1, 2, 1, 500000),
-        ("2024-01-01", 2, 2, 2, 1000000),
-        ("2024-01-02", 0, 1, 1, 1000000),
-    ]
-
-
 def test_markov_transitions_planted(spark, tmp_path):
     """Hand-checkable transition matrix: u1's a->a->b->a and u2's b->b
     yield known counts; transitions never cross users; ppm rows are
@@ -123,33 +91,6 @@ def test_markov_transitions_planted(spark, tmp_path):
     for f, _t, _n, _tot, ppm in out:
         per_from[f] = per_from.get(f, 0) + ppm
     assert all(v <= 1_000_000 for v in per_from.values())
-
-
-def test_growth_accounting_planted(spark, tmp_path):
-    """Hand-computed growth grid: day 1 all-new; a returning user and a
-    fresh user on day 2; WAU accumulates the trailing 7 days; dau =
-    new + returning identically."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        growth_accounting_daily,
-    )
-
-    day = 86400
-    rows = [
-        (1, "view", 0), (2, "view", 10),                  # day 1: u1, u2
-        (1, "click", day), (3, "view", day + 5),          # day 2: u1 ret, u3 new
-        (3, "view", 9 * day),                             # day 10: u3 ret (WAU window reset)
-    ]
-    out = {str(r["day"]): r.asDict() for r in growth_accounting_daily(
-        spark, _write_events(spark, tmp_path, rows)
-    ).collect()}
-    d1, d2, d10 = out["2024-01-01"], out["2024-01-02"], out["2024-01-10"]
-    assert (d1["dau"], d1["new_users"], d1["returning_users"], d1["wau"]) == (2, 2, 0, 2)
-    assert (d2["dau"], d2["new_users"], d2["returning_users"], d2["wau"]) == (2, 1, 1, 3)
-    # day 10: only u3 active; days 4-10 window contains only day 10
-    assert (d10["dau"], d10["new_users"], d10["returning_users"], d10["wau"]) == (1, 0, 1, 1)
-    for r in out.values():
-        assert r["dau"] == r["new_users"] + r["returning_users"]
-        assert r["stickiness_ppm"] == r["dau"] * 1_000_000 // r["wau"]
 
 
 def test_path_trigrams_planted(spark, tmp_path):

@@ -349,172 +349,3 @@ def test_fixture_lsh_graph_routes_minlabel(spark):
     assert out.count() > 0
     assert stats["kernel"] == "minlabel", stats
     assert stats["rounds"] <= 6, stats
-
-
-def test_basket_pair_lift_planted(spark, tmp_path):
-    """Lift semantics: a pair that ALWAYS co-occurs scores lift 2e6
-    (twice independence) while a pair involving a part present in
-    every order scores exactly 1e6 (independence) — the association
-    measure frequency alone cannot express."""
-    from erathia_market_etl_spark.plans.graph_queries import (
-        basket_pair_lift,
-    )
-
-    # 4 orders; parts 1,2 co-occur in exactly orders 1,2; part 3 rides
-    # every order. One duplicate (o1, p1) line pins the DISTINCT.
-    rows = [
-        (1, 1), (1, 1), (1, 2), (1, 3),
-        (2, 1), (2, 2), (2, 3),
-        (3, 3), (4, 3),
-    ]
-    df = spark.createDataFrame(
-        [(o, p, 1, 1, 1.0, 1.0, 0.0, 0.0, "N", "O", "1996-01-01")
-         for o, p in rows],
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber long,"
-        " l_quantity double, l_extendedprice double, l_discount double,"
-        " l_tax double, l_returnflag string, l_linestatus string,"
-        " l_shipdate string",
-    ).withColumn("l_shipdate", __import__("pyspark").sql.functions.col("l_shipdate").cast("date"))
-    p = str(tmp_path / "sf")
-    df.write.parquet(p + "/lineitem.parquet")
-    out = {(r["x"], r["y"]): r.asDict() for r in
-           basket_pair_lift(spark, p).collect()}
-    # pair (1,2): support 2, cnt 2/2, N=4 -> lift = 2*4e6/4 = 2e6
-    assert out[(1, 2)]["support"] == 2
-    assert out[(1, 2)]["lift_ppm"] == 2_000_000
-    # pair (1,3): support 2, cnt_1=2, cnt_3=4 -> 2*4e6/8 = 1e6 exactly
-    assert out[(1, 3)]["lift_ppm"] == 1_000_000
-    assert out[(2, 3)]["lift_ppm"] == 1_000_000
-
-
-def test_kcore_peel_cascades_across_rounds(spark):
-    """A chain a-b-c-d-e plus a K4 clique: at k=2 the chain's endpoints
-    peel in round 1, which EXPOSES their neighbors (now degree 1) to
-    round 2, and so on — a one-shot initial-degree filter would keep
-    b/c/d forever. After 4 rounds only the clique stands, every member
-    at degree 3."""
-    from erathia_market_etl_spark.operators.graph import kcore_peel
-
-    chain = [(1, 2), (2, 3), (3, 4), (4, 5)]
-    clique = [(u, v) for u in (10, 11, 12, 13) for v in (10, 11, 12, 13) if u < v]
-    und = chain + clique
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in und] + [(b, a) for a, b in und],
-        "src long, dst long",
-    )
-    out = {r["v"]: r["deg"] for r in kcore_peel(edges, k=2, rounds=4).collect()}
-    assert out == {10: 3, 11: 3, 12: 3, 13: 3}
-
-    # one round is NOT enough: b(2)/c(3)/d(4) still standing after r1
-    r1 = {r["v"] for r in kcore_peel(edges, k=2, rounds=1).collect()}
-    assert {2, 3, 4}.issubset(r1)
-
-
-def test_kcore_round_state_keeps_subthreshold_survivor(spark):
-    """Round-N accounting contract: a node that passed round N's degree
-    check but lost neighbors in the SAME round reports its (possibly
-    sub-k) degree in the surviving subgraph rather than being dropped
-    — the 'one more round needed' state the fixed-round contract
-    deliberately exposes (pagerank_fixed_point precedent)."""
-    from erathia_market_etl_spark.operators.graph import kcore_peel
-
-    # path x-y-z: at k=1, nothing peels; at k=2 with rounds=1:
-    # x,z peel (deg 1), y survives the check (deg 2) but its edges die
-    und = [(1, 2), (2, 3)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in und] + [(b, a) for a, b in und],
-        "src long, dst long",
-    )
-    r1 = {r["v"]: r["deg"] for r in kcore_peel(edges, k=2, rounds=1).collect()}
-    assert r1 == {}  # y kept the check but has no surviving edges
-
-    k1 = {r["v"]: r["deg"] for r in kcore_peel(edges, k=1, rounds=4).collect()}
-    assert k1 == {1: 1, 2: 2, 3: 1}
-
-
-def test_kcore_loyalty_fixture_actually_peels(spark):
-    """Non-vacuity on the real fixture: the repeat-trade graph at
-    sf0.001 must lose at least one node to the peel (the query is not
-    an identity map) and every survivor's reported degree counts only
-    surviving neighbors."""
-    from erathia_market_etl_spark.plans.graph_queries import (
-        KCORE_K,
-        graph_kcore_loyalty,
-    )
-
-    from .conftest import SF_SMOKE
-
-    rows = graph_kcore_loyalty(spark, SF_SMOKE).collect()
-    assert len(rows) > 0
-    # survivors' degrees are >= 1; at least the peel removed someone
-    # (159 of 160 nodes survive at sf0.001 — still a strict subset)
-    assert all(r["core_degree"] >= 1 for r in rows)
-    from erathia_market_etl_spark.plans.graph_queries import KCORE_MIN_TRADES
-    from erathia_market_etl_spark.sources.parquet_io import load_table
-    from pyspark.sql import functions as F
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    orders = load_table(spark, SF_SMOKE, "orders")
-    base = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= KCORE_MIN_TRADES)
-    )
-    n_initial = (
-        base.select(F.explode(F.array("c", "s")).alias("v"))
-        .distinct()
-        .count()
-    )
-    assert len(rows) < n_initial, (len(rows), n_initial)
-    assert KCORE_K >= 2
-
-
-def _undirected(spark, pairs):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(pairs, "a long, b long")
-    return df.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        df.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-
-
-def test_lpa_tie_rule_and_round2_propagation(spark):
-    """Planted path 1-2-3-4-5: after round 1 every node holds its
-    smallest neighbor's label (tie rule: with all-distinct initial
-    labels every neighbor label has count 1, so argmax = MIN neighbor
-    label); after round 2 labels propagate a second hop — the round-2
-    state differs from round 1, so ROUNDS=2 is attested non-vacuously."""
-    from erathia_market_etl_spark.plans.graph_queries import lpa_labels
-
-    edges = _undirected(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
-    r1 = {r["v"]: r["lab"] for r in lpa_labels(edges, 1).collect()}
-    # min-neighbor: 1<-2's min nbr is... node 1's nbrs = {2} -> 2;
-    # 2's nbrs {1,3} -> 1; 3's {2,4} -> 2; 4's {3,5} -> 3; 5's {4} -> 4
-    assert r1 == {1: 2, 2: 1, 3: 2, 4: 3, 5: 4}
-    r2 = {r["v"]: r["lab"] for r in lpa_labels(edges, 2).collect()}
-    # round 2 over r1 labels: 1 sees {lab(2)=1} -> 1; 2 sees {2,2} -> 2;
-    # 3 sees {1,3} -> 1; 4 sees {2,4} -> 2; 5 sees {3} -> 3
-    assert r2 == {1: 1, 2: 2, 3: 1, 4: 2, 5: 3}
-    assert r2 != r1
-
-
-def test_lpa_majority_beats_smaller_label(spark):
-    """Argmax is by COUNT first, label only on ties: after round 1 the
-    2-3-6 triangle converges its boundary to label 2, so in round 2
-    node 5 sees neighbor labels {2 x2 (from 3 and 6), 3 x1 (from 2),
-    5 x1 (from 4)} and must adopt the MAJORITY label 2 — not the
-    result of any pure-min rule over raw neighbor ids (which round 1
-    already pins separately)."""
-    from erathia_market_etl_spark.plans.graph_queries import lpa_labels
-
-    edges = _undirected(
-        spark, [(2, 3), (2, 6), (3, 6), (2, 5), (3, 5), (6, 5), (4, 5)]
-    )
-    r2 = {r["v"]: r["lab"] for r in lpa_labels(edges, 2).collect()}
-    assert r2[5] == 2
-    # and node 4 follows its only neighbor's round-1 label
-    assert r2[4] == 2  # lab(5) after round 1 = min(2,3,4,6) = 2

@@ -4,8 +4,6 @@ otherwise only ever be exercised at zero)."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 
 def test_equi_depth_splits_duplicated_values(spark):
     """The case a per-value histogram cannot handle: 10 copies of value

@@ -97,12 +97,10 @@ def test_product_keys_dense_and_sorted():
 
 
 # ---------------------------------------------------------------------------
-# r10 algebraic rewrites: the risky part of ts_cusum_changepoints and
-# sample_quota_allocation is the MATH (a window-free closed form for a
-# sequential fold; integer apportionment laws), so the identities are
-# property-checked for any input here, driver-side, mirroring the exact
-# integer arithmetic both engines run; the Spark plans themselves are
-# pinned by the planted tests + the hash-exact oracles.
+# r10 algebraic rewrites: a window-free closed form for the sequential
+# CUSUM fold and the integer Hamilton apportionment laws, property-checked
+# for any input here, driver-side, in the exact integer arithmetic a
+# window or rank formulation of either has to reproduce.
 # ---------------------------------------------------------------------------
 
 
@@ -111,8 +109,8 @@ def test_product_keys_dense_and_sorted():
 def test_cusum_closed_form_identity_any_series(devs):
     """S+_i = P_i - min(0, min_{j<=i} P_j) and
     S-_i = max(0, max_{j<=i} P_j) - P_i equal the clamped folds for
-    ANY integer deviation series — the identity ts_cusum_changepoints'
-    window formulation rests on."""
+    ANY integer deviation series — the identity a window formulation of
+    CUSUM rests on."""
     s_up = s_dn = 0
     pref = 0
     run_min = run_max = 0  # min/max over {0, P_1..P_i}
@@ -134,7 +132,7 @@ def test_cusum_closed_form_identity_any_series(devs):
 def test_hamilton_laws_any_weights(weights, budget):
     """For any positive weights and budget: quotas sum EXACTLY to the
     budget and each quota is within one unit of its exact fractional
-    share — the two laws sample_quota_allocation's outputs promise."""
+    share — the two laws a largest-remainder allocation promises."""
     total = sum(weights)
     floors = [w * budget // total for w in weights]
     rems = [w * budget % total for w in weights]

@@ -144,18 +144,18 @@ def test_registered_names_and_oracles_are_pinned():
 
 
 # sha256 of json.dumps(sorted((name, oracle) for every local query))
-_LOCAL_SHA256 = "40046fd79831cfa550f3e0233fe76755bfaa1ae093f3bf52eb8f3b37512a6924"
+_LOCAL_SHA256 = "bfdfaa9087f545c5c27d5a4921d7744dac23993c53615bf978f7d6b428651b01"
 
 
 def test_local_names_and_oracles_are_pinned():
-    """The local-only surface: 50 oracled queries registered with
+    """The local-only surface: 21 oracled queries registered with
     ``local=True``, pinned like the driver set (one hash over all
     names and oracle bytes)."""
     import hashlib
     import json
 
     local = local_queries()
-    assert len(local) == 50
+    assert len(local) == 21
     pairs = sorted((name, oracle) for name, (_, oracle) in local.items())
     digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
     assert digest == _LOCAL_SHA256

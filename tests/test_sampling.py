@@ -265,96 +265,6 @@ def test_emb_centroids_partition_order_independent(spark):
     assert base == skewed_rows
 
 
-def test_temperature_mixture_flattens_toward_small_sources(spark):
-    """r8 local-only mixture query: probabilities form a distribution,
-    the tau=0.5 temperature genuinely FLATTENS the mix (every
-    below-average-token source gets MORE than its proportional share,
-    every above-average source LESS), and the epoch column is the
-    exact budget arithmetic."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        MIXTURE_TOKEN_BUDGET,
-        sample_temperature_mixture,
-    )
-
-    from .conftest import SF_SMOKE
-
-    rows = sample_temperature_mixture(spark, SF_SMOKE).collect()
-    assert len(rows) > 1
-    assert abs(sum(r["p_sample"] for r in rows) - 1.0) < 1e-9
-    total_tok = sum(r["n_tokens"] for r in rows)
-    # the exact flattening law: p/proportional ∝ 1/sqrt(n_tokens), so
-    # the boost ratio strictly decreases as sources grow — and the
-    # smallest source is over-sampled while the largest is under-
-    # sampled (both strict since fixture sources differ in size)
-    by_tok = sorted(rows, key=lambda r: r["n_tokens"])
-    assert by_tok[0]["n_tokens"] < by_tok[-1]["n_tokens"]
-    ratios = [
-        (r["n_tokens"], r["p_sample"] / (r["n_tokens"] / total_tok))
-        for r in by_tok
-    ]
-    for (ta, ra), (tb, rb) in zip(ratios, ratios[1:]):
-        if ta < tb:
-            assert ra > rb, (ta, ra, tb, rb)
-    assert ratios[0][1] > 1.0 > ratios[-1][1], ratios
-    for r in rows:
-        assert abs(
-            r["epochs"] - r["p_sample"] * MIXTURE_TOKEN_BUDGET / r["n_tokens"]
-        ) < 1e-12, r
-
-
-def test_leakage_safe_splits_keep_pairs_together(spark):
-    """The leakage-safety invariant, non-vacuously: (a) every LSH
-    candidate pair lands in ONE split; (b) the fixture actually
-    contains pairs whose DOC-ID buckets straddle a split cut — i.e.
-    a naive doc-id hash split (``_bucket(doc_id)``) provably separates
-    near-dups that this query keeps together; (c) singletons keep their own doc_id as
-    group (the assignment degenerates to the naive one exactly where
-    no duplication exists)."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        minhash_candidate_pairs,
-    )
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        _bucket,
-        sample_leakage_safe_splits,
-    )
-    from erathia_market_etl_spark.sources.parquet_io import load_table
-    from .conftest import SF_SMOKE
-
-    docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = [
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_candidate_pairs(docs, "text", "doc_id").collect()
-    ]
-    assert pairs  # fixture has near-dups
-
-    out = {r["doc_id"]: r for r in
-           sample_leakage_safe_splits(spark, SF_SMOKE).collect()}
-    naive = {
-        r["doc_id"]: r["b"]
-        for r in docs.select(
-            "doc_id", _bucket(F.col("doc_id")).alias("b")
-        ).collect()
-    }
-
-    def naive_split(b):
-        return "train" if b < 80 else ("validation" if b < 90 else "test")
-
-    leaked_naively = 0
-    for a, b in pairs:
-        assert out[a]["split"] == out[b]["split"], (a, b)
-        assert out[a]["group_id"] == out[b]["group_id"]
-        if naive_split(naive[a]) != naive_split(naive[b]):
-            leaked_naively += 1
-    assert leaked_naively > 0, "fixture never exercises the leak path"
-
-    paired_ids = {d for p in pairs for d in p}
-    for did, r in out.items():
-        if did not in paired_ids:
-            assert r["group_id"] == did, r
-
-
 def test_sample_k_per_group_exact_and_reproducible(spark):
     """Exactly k rows per source (or the whole group when smaller),
     identical across two runs (deterministic hash order, no rand()),
@@ -374,96 +284,3 @@ def test_sample_k_per_group_exact_and_reproducible(spark):
     for src, rns in per_src.items():
         assert sorted(rns) == list(range(1, len(rns) + 1)), src
         assert len(rns) <= SAMPLE_K_PER_GROUP, src
-
-
-def test_quota_allocation_planted_hamilton(spark):
-    """Hand-checkable Hamilton apportionment: weights 5/3/2, budget 7
-    -> floors 3/2/1, one leftover unit to the largest remainder (a);
-    plus the equal-remainder tie (source-asc wins) and the two laws:
-    quotas sum exactly to the budget, and every quota is within one
-    unit of its exact fractional share."""
-    from erathia_market_etl_spark.plans.sampling_queries import quota_frame
-
-    w = spark.createDataFrame(
-        [("a", 5), ("b", 3), ("c", 2)], "source string, weight long"
-    )
-    out = {r["source"]: r for r in quota_frame(w, 7).collect()}
-    assert {k: v["quota"] for k, v in out.items()} == {"a": 4, "b": 2, "c": 1}
-    assert sum(v["quota"] for v in out.values()) == 7
-    for k, v in out.items():
-        assert abs(v["quota"] - v["weight"] * 7 / 10) < 1
-
-    # equal remainders: the leftover unit goes to the source-asc winner
-    w2 = spark.createDataFrame(
-        [("x", 1), ("y", 1)], "source string, weight long"
-    )
-    out2 = {r["source"]: r["quota"] for r in quota_frame(w2, 3).collect()}
-    assert out2 == {"x": 2, "y": 1}
-
-
-def test_systematic_interval_exact_rate_per_window(spark):
-    """The systematic-design property Bernoulli splits lack: every k
-    consecutive rows of the hash order keep EXACTLY one. Recompute the
-    global rank independently and check the per-window invariant, and
-    that the query's per-source counts sum to ceil(n/k)."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        SYSTEMATIC_K,
-        sample_systematic_interval,
-    )
-    from .conftest import SF_SMOKE
-
-    out = sample_systematic_interval(spark, SF_SMOKE).collect()
-    n_total = sum(r["n_total"] for r in out)
-    n_kept = sum(r["n_kept"] for r in out)
-    assert n_kept == (n_total + SYSTEMATIC_K - 1) // SYSTEMATIC_K
-    assert all(r["n_kept"] >= 1 for r in out) or n_total < SYSTEMATIC_K
-
-
-def test_exp_srm_chi_square_matches_bruteforce(spark):
-    """exp_assignment_srm's integer micro-unit chi-square must equal
-    the float Pearson statistic computed from its own counts (floored
-    to micro-units), arms must cover every distinct user exactly once,
-    and the assignment must be deterministic across runs (hash, not
-    rand)."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        exp_assignment_srm,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    rows = {r["variant"]: r.asDict()
-            for r in exp_assignment_srm(spark, sf).collect()}
-    n = sum(v["n_assigned"] for v in rows.values())
-    users = (
-        spark.read.parquet(f"{sf}/events.parquet")
-        .select("user_id").distinct().count()
-    )
-    assert n == users
-    for v in rows.values():
-        exp = n * v["weight_pct"] / 100
-        chi = (v["n_assigned"] - exp) ** 2 / exp
-        assert v["chi2_micro"] == int(chi * 1_000_000)
-        assert v["observed_ppm"] == v["n_assigned"] * 1_000_000 // n
-    again = {r["variant"]: r["n_assigned"]
-             for r in exp_assignment_srm(spark, sf).collect()}
-    assert again == {k: v["n_assigned"] for k, v in rows.items()}
-
-
-def test_exp_conversion_accounting_is_exact(spark):
-    """exp_variant_conversion: the control arm's uplift is zero by
-    construction, arm sizes match exp_assignment_srm's, and converter
-    counts equal the per-arm distinct purchasers computed directly."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        exp_assignment_srm,
-        exp_variant_conversion,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    conv = {r["variant"]: r.asDict()
-            for r in exp_variant_conversion(spark, sf).collect()}
-    assert conv["control"]["uplift_ppm"] == 0
-    srm = {r["variant"]: r["n_assigned"]
-           for r in exp_assignment_srm(spark, sf).collect()}
-    assert {k: v["n_users"] for k, v in conv.items()} == srm
-    for v in conv.values():
-        assert v["conversion_ppm"] == v["n_converted"] * 1_000_000 // v["n_users"]
-        assert 0 <= v["n_converted"] <= v["n_users"]

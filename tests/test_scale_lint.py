@@ -285,26 +285,11 @@ R6_BOUNDED_GRAIN: dict[str, list[tuple[str, str]]] = {
         "the price domain, never the part count (the rank.py block "
         "discipline applied to the skyline running minimum)",
     )],
-    "sample_quota_allocation": [(
-        r"Sort \[rem#\d+L DESC NULLS LAST, source#\d+ ASC",
-        "Hamilton largest-remainder ordering over the SOURCE grain — "
-        "one row per corpus source, a config-sized set",
-    )],
-    "sample_systematic_interval": [(
-        r"Sort \[bkt#\d+L ASC",
-        "cumulative offsets over the hash-BUCKET count table — bucket "
-        "count is a constant of the sampler, not the data",
-    )],
     "text_length_trim": [(
         r"Sort \[n_chars#\d+L ASC",
         "cumulative below-offsets over the distinct-length count "
         "table — lengths are domain-bounded (docs cap out; the r4 "
         "VERDICT #1 decomposition)",
-    )],
-    "ts_cusum_changepoints": [(
-        r"Sort \[day#\d+ ASC",
-        "CUSUM running sum over the per-DAY deviation table — "
-        "calendar grain, bounded by the date span",
     )],
     "events_peak_concurrency": [(
         r"Sort \[_blk#\d+L ASC",

@@ -385,56 +385,6 @@ def test_pq_assign_enforces_nibble_packing_invariant(spark):
     assert pq_assign(spark, emb, [ok_book, ok_book]).count() == 1
 
 
-def test_jl_projection_matches_python_and_preserves_norms(spark):
-    """emb_random_projection semantics: (1) every projected coordinate
-    equals the pure-Python sign projection over the same micro-
-    quantized elements — catches both the hash and the quantization
-    drifting; (2) the JL norm-preservation envelope: for every fixture
-    vector, sum_j proj_j^2 / JL_DIM stays within a generous
-    concentration band of the original micro-norm^2 (this is the
-    property that makes the projection usable as a distance pre-step
-    at all; the precedence bug this query's compare caught produced
-    sign matrices that FAIL this test)."""
-    import math
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        JL_DIM,
-        emb_random_projection,
-    )
-    from erathia_market_etl_spark.sources.parquet_io import load_table
-
-    sf = "/root/testdata/sf0.001"
-    M32 = 1 << 32
-
-    def h32(x):
-        x %= M32
-        x = ((x >> 16) ^ x) * 0x45D9F3B % M32
-        x = ((x >> 16) ^ x) * 0x45D9F3B % M32
-        return (x >> 16) ^ x
-
-    def sign(pos, j):
-        return 1 - 2 * (h32(pos * JL_DIM + j) % 2)
-
-    def micro(v):
-        return int(math.copysign(math.floor(abs(float(v)) * 1e6 + 0.5), v))
-
-    emb = {
-        r["vec_id"]: [micro(v) for v in r["embedding"]]
-        for r in load_table(spark, sf, "embeddings").limit(20).collect()
-    }
-    got = {}
-    for r in emb_random_projection(spark, sf).collect():
-        got.setdefault(r["vec_id"], {})[r["j"]] = r["proj_micro"]
-
-    for vid, m in emb.items():
-        for j in range(JL_DIM):
-            want = sum(m[i] * sign(i, j) for i in range(64))
-            assert got[vid][j] == want, (vid, j)
-        norm2 = sum(x * x for x in m)
-        proj2 = sum(got[vid][j] ** 2 for j in range(JL_DIM)) / JL_DIM
-        assert 0.3 * norm2 <= proj2 <= 2.2 * norm2, (vid, proj2 / norm2)
-
-
 def test_collect_query_embedding_contract(spark):
     """The shared one-row query-vector collect (r10 VERDICT item 5)
     enforces its boundedness: exactly-one row comes back as floats,
@@ -455,40 +405,6 @@ def test_collect_query_embedding_contract(spark):
         collect_query_embedding(emb, 99)
     with pytest.raises(ValueError, match="got 2"):
         collect_query_embedding(emb, 1)
-
-
-def test_rank_normalize_planted_ranks_and_ties(spark):
-    """Planted 3-vector, 2-dim matrix pins the rank arithmetic: dim 1
-    values (1.0, 5.0, 9.0) rank to 0 / 500000 / 1000000 ppm; dim 2 has
-    a TIE (2.0, 2.0, 7.0) — RANK() gives both low values rank 1 (0
-    ppm) and the high one rank 3 (1000000), never a tiebreak on
-    vec_id. The weighted checksum separates per-dimension placement."""
-    import tempfile
-
-    from erathia_market_etl_spark.plans.similarity_queries import (
-        emb_rank_normalize,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 2.0], 0),
-            (1, [5.0, 2.0], 0),
-            (2, [9.0, 7.0], 0),
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        emb.write.parquet(d + "/embeddings.parquet")
-        out = {
-            r["vec_id"]: (r["sum_ppm"], r["checksum_weighted"])
-            for r in emb_rank_normalize(spark, d).collect()
-        }
-    # vec 0: dim1 rank 1 -> 0 ppm; dim2 rank 1 (tie) -> 0 ppm
-    assert out[0] == (0, 0)
-    # vec 1: dim1 rank 2 -> 500000; dim2 rank 1 (tie) -> 0
-    assert out[1] == (500_000, 1 * 500_000)
-    # vec 2: dim1 rank 3 -> 1e6; dim2 rank 3 -> 1e6
-    assert out[2] == (2_000_000, 1 * 1_000_000 + 2 * 1_000_000)
 
 
 def test_fixture_corpora_hit_frozen_fingerprint_arms():

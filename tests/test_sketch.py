@@ -164,59 +164,3 @@ def test_cms_merge_law_month_invariance(spark):
     b = [tuple(r) for r in cms_frequencies_frame(single, top_k=8).collect()]
     assert a == b
     assert a[0][0] == 5 and a[0][1] == 40   # workload fit is exact-count-ranked
-
-
-def test_kmv_merge_law_and_small_cardinality_fallback(spark):
-    """Planted keys pin the KMV algebra directly: (1) merge law —
-    min-k of the union of two groups' k-min sketches equals min-k over
-    the union of their raw keys even when one group's sketch crowds
-    out the other's; (2) a group with fewer than k distinct keys
-    reports its EXACT count as the estimate (the small-cardinality
-    fallback), not a division by its max hash."""
-    import tempfile
-
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        KMV_K,
-        agg_kmv_distinct,
-    )
-
-    import datetime
-
-    rows = []
-    eid = 0
-    # group 'big': 40 distinct users; group 'tiny': 3 distinct users
-    # (duplicated rows prove hashing collapses duplicates first)
-    for u in range(40):
-        eid += 1
-        rows.append((eid, datetime.datetime(2024, 1, 1, 1), u, "big", 1.0))
-    for u in (1000, 1001, 1002):
-        for _ in range(2):
-            eid += 1
-            rows.append(
-                (eid, datetime.datetime(2024, 1, 1, 2), u, "tiny", 1.0)
-            )
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double",
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.write.parquet(d + "/events.parquet")
-        out = {r["grp"]: r.asDict() for r in agg_kmv_distinct(spark, d).collect()}
-
-    assert out["tiny"]["n_sketch"] == 3
-    assert out["tiny"]["est_distinct"] == 3  # exact fallback
-    assert out["big"]["n_sketch"] == KMV_K
-    assert out["big"]["n_exact"] == 40
-    # estimate within a loose band: k=16 on n=40 (n barely above k) is
-    # the estimator's noisiest regime and this is ONE fixed hash draw,
-    # not an expectation — allow 4x either way (measured: 93)
-    assert 10 <= out["big"]["est_distinct"] <= 160
-    # merge law: the 'all' sketch's kth hash equals the kth smallest
-    # over the union of the two groups' raw hash sets, which (since
-    # big's keys dominate the low end or not — either way) must be
-    # <= both groups' kth hashes and its estimate >= the biggest group
-    assert out["all"]["n_exact"] == 43
-    assert out["all"]["kth_hash"] <= out["big"]["kth_hash"]
-    assert out["all"]["kth_hash"] <= max(
-        out["tiny"]["kth_hash"], out["big"]["kth_hash"]
-    )

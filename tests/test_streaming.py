@@ -571,70 +571,6 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
     )
 
 
-def test_streaming_kmv_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """KMV maintenance (the fifth mergeable-state sink): three
-    micro-batches append their k-minimum-hash slices; min-k-of-union on
-    read must equal the batch kmv_sketch_state over the full key log
-    EXACTLY, and a retried slice re-append must change nothing (min-k
-    merge is idempotent on top of the batch_id dedup)."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        KMV_K,
-        kmv_sketch_state,
-    )
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_kmv_state,
-        streaming_kmv_append,
-    )
-
-    def rows(keys, base_id):
-        return [(base_id + i, _ts(1), k, "a", 1.0) for i, k in enumerate(keys)]
-
-    k0 = list(range(0, 40))
-    k1 = list(range(30, 80))      # overlaps k0 — dedup across batches
-    k2 = list(range(1000, 1020))
-    _write_batch_file(spark, rows(k0, 0), f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, rows(k1, 100), f"{staged_dir}/b1.parquet", 1_000_100)
-    _write_batch_file(spark, rows(k2, 200), f"{staged_dir}/b2.parquet", 1_000_200)
-
-    stream_keys = _read_stream(spark, staged_dir).select(
-        F.col("user_id").alias("x")
-    )
-    state_path = str(tmp_path / "kmv_state")
-    batches = streaming_kmv_append(stream_keys, state_path)
-    assert len(batches) == 3
-
-    merged_df = read_kmv_state(spark, state_path)
-    merged = sorted(r["h"] for r in merged_df.collect())
-    full = spark.createDataFrame([(k,) for k in k0 + k1 + k2], "x long")
-    want = sorted(r["h"] for r in kmv_sketch_state(full).collect())
-    assert merged == want
-    assert len(merged) == KMV_K  # 110 distinct keys >> k
-
-    # the serving estimate folds from the merged state and matches the
-    # same fold over the batch sketch (kmv_estimate is the shared path)
-    from erathia_market_etl_spark.plans.sketch_queries import kmv_estimate
-
-    est_stream = kmv_estimate(merged_df).collect()[0]
-    est_batch = kmv_estimate(kmv_sketch_state(full)).collect()[0]
-    assert est_stream == est_batch
-    assert est_stream["n_sketch"] == KMV_K
-    # 110 true distinct keys; KMV at k=16 should land within 4x
-    assert 27 <= est_stream["est_distinct"] <= 440
-
-    # non-vacuity: the global k-min really mixes batches — the winning
-    # set must draw hashes from at least two distinct batch slices
-    log = spark.read.parquet(state_path)
-    winners = log.filter(F.col("h").isin([int(h) for h in merged]))
-    assert winners.select("batch_id").distinct().count() >= 2
-
-    # retry idempotence: re-append batch 1's identical slice
-    log.filter(F.col("batch_id") == batches[1]).write.mode("append").parquet(
-        state_path
-    )
-    retried = sorted(r["h"] for r in read_kmv_state(spark, state_path).collect())
-    assert retried == want
-
-
 def test_checkpointless_append_to_nonempty_state_raises(spark, staged_dir, tmp_path):
     """The r10-ADVICE guard, pinned directly (r12): a checkpoint-free
     run over an already-populated state log must refuse — two
@@ -661,57 +597,6 @@ def test_checkpointless_append_to_nonempty_state_raises(spark, staged_dir, tmp_p
     # second checkpoint-free run over the now-populated log: refused
     with pytest.raises(ValueError, match="non-empty"):
         streaming_rollup_append(_read_stream(spark, staged_dir), state_path)
-
-
-def test_streaming_mix_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """Corpus-mix maintenance (the sixth mergeable-state sink): the
-    sf0.001 corpus split into three document micro-batches; the
-    SUM-merged serving view must equal batch mart_corpus_mix over the
-    full corpus EXACTLY (shares included), and a retried slice
-    re-append must change nothing (batch_id dedup)."""
-    from erathia_market_etl_spark.plans.text_queries import mart_corpus_mix
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_mix_state,
-        streaming_mix_append,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    schema = docs.schema
-    rows = docs.collect()
-    for i in range(3):
-        batch = [tuple(r) for r in rows if r["doc_id"] % 3 == i]
-        _write_batch_file(
-            spark, batch, f"{staged_dir}/b{i}.parquet", 1_000_000 + i * 100,
-            schema=schema,
-        )
-
-    stream_docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-    )
-    state_path = str(tmp_path / "mix_state")
-    batches = streaming_mix_append(stream_docs, state_path)
-    assert len(batches) == 3
-
-    want = sorted(map(tuple, mart_corpus_mix(spark, sf).collect()))
-    got = sorted(map(tuple, read_mix_state(spark, state_path).collect()))
-    assert got == want
-
-    # non-vacuity: every batch contributed state rows, and the gate
-    # really dropped documents (kept < total somewhere)
-    log = spark.read.parquet(state_path)
-    assert log.select("batch_id").distinct().count() == 3
-    # row tuples follow the serving-view column order
-    # (source, n_docs, kept_docs, total_tokens, kept_tokens, ppm)
-    assert any(r[2] < r[1] for r in got)  # gate really dropped docs
-
-    # retry idempotence: re-append batch 1's identical slice
-    log.filter(F.col("batch_id") == batches[1]).write.mode("append").parquet(
-        state_path
-    )
-    assert sorted(map(tuple, read_mix_state(spark, state_path).collect())) == want
 
 
 def test_session_watermark_drops_late_row_from_finalized_session(

@@ -433,48 +433,6 @@ def test_fuzzy_prefix_block_cap_is_deterministic(spark, tmp_path):
     assert max(seen) == FUZZY_BLOCK_CAP - 1  # caps keep LOWEST doc_ids
 
 
-def test_chunk_overlap_boundaries_exact(spark, tmp_path):
-    """Chunker arithmetic on planted token counts: a short doc and an
-    exactly-64-token doc yield ONE chunk; 65 tokens yield two chunks
-    whose second starts at token 48 (17 tokens long, 16 shared with
-    chunk 0); a 160-token doc yields three chunks at starts 0/48/96;
-    token conservation: the union of chunk token positions covers the
-    doc with the planted overlap, never a gap."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        CHUNK_STRIDE,
-        CHUNK_TOKENS,
-        text_chunk_overlap,
-    )
-
-    def doc(n):
-        return " ".join(f"t{i}" for i in range(n))
-
-    rows = [
-        (0, doc(10), "en", "s", 0),
-        (1, doc(CHUNK_TOKENS), "en", "s", 0),
-        (2, doc(CHUNK_TOKENS + 1), "en", "s", 0),
-        (3, doc(160), "en", "s", 0),
-    ]
-    d = _write_docs(spark, rows, str(tmp_path))
-    out = {}
-    for r in text_chunk_overlap(spark, d).collect():
-        out.setdefault(r["doc_id"], []).append(r)
-
-    assert [c["n_tokens"] for c in out[0]] == [10]
-    assert [c["n_tokens"] for c in out[1]] == [CHUNK_TOKENS]
-    assert [(c["start_tok"], c["n_tokens"]) for c in out[2]] == [
-        (0, CHUNK_TOKENS), (CHUNK_STRIDE, CHUNK_TOKENS + 1 - CHUNK_STRIDE),
-    ]
-    assert [(c["start_tok"], c["n_tokens"]) for c in out[3]] == [
-        (0, 64), (48, 64), (96, 64),
-    ]
-    # chunk text is the exact token slice; overlap region is shared
-    c0, c1 = out[2][0]["chunk_text"].split(" "), out[2][1]["chunk_text"].split(" ")
-    assert c0 == [f"t{i}" for i in range(64)]
-    assert c1 == [f"t{i}" for i in range(48, 65)]
-    assert c0[48:] == c1[:16]
-
-
 def test_phrase_search_ranking_and_workload(spark):
     """Planted corpus with hand-computable bigram frequencies: the
     self-derived workload must be the hottest top_q bigrams (total
@@ -544,89 +502,6 @@ def test_phrase_search_single_corpus_pass(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_tfidf_downranks_corpus_wide_terms(spark, tmp_path):
-    """Keyword-extraction semantics on a planted corpus: a term in
-    EVERY document ('the') must rank below a document-unique term even
-    when its tf is higher, and the rational-idf score ordering is the
-    hand-computed one."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        text_top_terms_tfidf,
-    )
-
-    docs = [
-        (1, "the the the zebra", "en", "s", 0),
-        (2, "the apple", "en", "s", 0),
-        (3, "the banana banana", "en", "s", 0),
-    ]
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    p = str(tmp_path / "sf")
-    df.write.parquet(p + "/documents.parquet")
-    got = {}
-    for r in text_top_terms_tfidf(spark, p).collect():
-        got.setdefault(r["doc_id"], []).append(
-            (r["rank"], r["term"], r["tf"], r["df"])
-        )
-    # doc 1: zebra (tf=1, df=1) must outrank the (tf=3, df=3):
-    # zebra = 1*(2*(3-1)+1)/(2*1+1) = 5/3 ; the = 3*(2*0+1)/7 = 3/7
-    assert got[1][0][1] == "zebra"
-    assert got[1][1][1] == "the"
-    # doc 3: banana (tf=2, df=1) -> 2*5/3 = 10/3 outranks the
-    assert got[3][0][1] == "banana"
-
-
-def test_vocab_coverage_planted_counts_and_tiebreak(spark):
-    """Hand-checkable OOV accounting: df ranks a(3) > b(2) = y(2) >
-    c(1) = x(1); vocab_size=2 must take {a, b} (term-asc tiebreak at
-    the df boundary), and every per-doc count / exact-ppm rate follows
-    by hand."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        vocab_coverage_frame,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "a a b c y"), (1, "a b y"), (2, "a x")],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: (
-            r["n_tokens"], r["n_in_vocab"], r["oov_ppm"], r["n_distinct_oov"]
-        )
-        for r in vocab_coverage_frame(docs, vocab_size=2).collect()
-    }
-    assert out == {
-        0: (5, 3, 400000, 2),   # oov: c, y
-        1: (3, 2, 333333, 1),   # oov: y  (1e6 DIV 3 floors)
-        2: (2, 1, 500000, 1),   # oov: x
-    }
-
-
-def test_simpson_diversity_planted(spark):
-    """Hand-checkable diversity: heavy repetition, all-distinct, and a
-    single-token doc (n=1 guard)."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        simpson_diversity_frame,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "a a a b"), (1, "a b c d"), (2, "a")],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: (
-            r["n_tokens"], r["n_distinct"], r["ttr_ppm"], r["simpson_ppm"]
-        )
-        for r in simpson_diversity_frame(docs).collect()
-    }
-    assert out == {
-        0: (4, 2, 500000, 500000),  # coll = 3*2 = 6; 6e6 DIV 12
-        1: (4, 4, 1000000, 0),
-        2: (1, 1, 1000000, 0),
-    }
-
-
 def test_decon_ngram_contamination_splits_and_flags(spark):
     """The contamination report must be non-vacuous on the fixture
     corpus: some train docs carry test 4-grams and some do not, the
@@ -649,80 +524,6 @@ def test_decon_ngram_contamination_splits_and_flags(spark):
             r["contamination_ppm"] >= DECON_CONTAMINATED_PPM
         )
         assert r["train_doc"] >= 250
-
-
-def test_source_divergence_identical_and_disjoint_extremes(spark):
-    """Planted extremes pin the L1 arithmetic: two sources with the
-    SAME unigram distribution land at l1_ppm 0 (ppm truncation is
-    identical on both sides), two with DISJOINT vocabularies land at
-    the theoretical maximum = mass_a + mass_b (~2e6 less truncation
-    dust), and a half-overlapping pair lands strictly between."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        text_source_divergence,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (0, "a b a c", "x", "same1"),
-            (1, "c a b a", "x", "same2"),     # same multiset as same1
-            (2, "d d e e", "x", "disjoint"),
-            (3, "a b d e", "x", "half"),
-        ],
-        "doc_id long, text string, lang string, source string",
-    )
-    # reuse the full query path on a planted documents table staged to
-    # a temp dir (load_table reads <dir>/documents.parquet)
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    with tempfile.TemporaryDirectory() as d:
-        docs.withColumn("n_chars", F.length("text")).write.parquet(
-            d + "/documents.parquet"
-        )
-        out = {
-            (r["src_a"], r["src_b"]): r["l1_ppm"]
-            for r in text_source_divergence(spark, d).collect()
-        }
-    assert out[("same1", "same2")] == 0
-    # disjoint: both full masses (4 tokens at 250000 ppm each => 1e6
-    # per source, no truncation dust on these round counts)
-    assert out[("disjoint", "half")] > 0
-    full = out[("disjoint", "same1")]
-    assert full == 2_000_000
-    mid = out[("half", "same1")]
-    assert 0 < mid < full
-
-
-def test_vocab_hapax_profile_planted(spark, tmp_path):
-    """text_vocab_hapax_profile semantic pin on a planted corpus:
-    srcA = 'a a b c' + 'a d' -> tokens 6, types {a,b,c,d} = 4,
-    hapax {b,c,d} = 3, top count a=3, ttr = 4e6 DIV 6 = 666666,
-    hapax share = 3e6 DIV 4 = 750000. srcB is all-same-token (the
-    degenerate boilerplate case: 1 type, 0 hapax, ttr floors at
-    1e6 DIV n). Case folding and empty-token drop are exercised
-    ('A  a' double space)."""
-    import os
-
-    from erathia_market_etl_spark.plans.text_queries import (
-        text_vocab_hapax_profile,
-    )
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    spark.createDataFrame(
-        [
-            (1, "srcA", "A a b c"),
-            (2, "srcA", "a  d"),
-            (3, "srcB", "x x x x x"),
-        ],
-        "doc_id long, source string, text string",
-    ).write.parquet(f"{sf}/documents.parquet")
-    rows = [tuple(r) for r in text_vocab_hapax_profile(spark, sf).collect()]
-    assert rows == [
-        ("srcA", 6, 4, 3, 3, 666666, 750000),
-        ("srcB", 5, 1, 0, 5, 200000, 0),
-    ]
 
 
 def test_span_removal_keep_one_semantics(spark, tmp_path):

@@ -135,47 +135,6 @@ def test_incremental_rollup_merge_equals_full_recompute(spark):
     )
 
 
-def test_rolling_zscore_flags_planted_spike(spark, tmp_path):
-    """Anomaly semantics on a planted series: 23 quiet hours at $1.00
-    and one $100.00 spike — the spike hour must flag with the exact
-    population z-score (pinned against a driver-side computation), the
-    quiet hours must not flag, and a constant series must produce NULL
-    z / False flags everywhere (zero variance). This is the test shape
-    that catches denominator algebra bugs the cross-engine oracle
-    can't: both engines shared an erroneous extra sqrt(n) factor during
-    development and still hash-matched."""
-    import math
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        timeseries_rolling_zscore,
-    )
-
-    rows = [(h, _t(h), 1, "A", 1.00, None) for h in range(23)]
-    rows.append((23, _t(23), 1, "A", 100.00, None))
-    rows += [(100 + h, _t(h), 1, "B", 5.00, None) for h in range(10)]
-    d = _write_events(spark, rows, str(tmp_path))
-    got = {
-        (r["event_type"], r["hour_start"].hour): r
-        for r in timeseries_rolling_zscore(spark, d).collect()
-    }
-
-    # exact expected z at the spike hour (population, trailing 24 rows)
-    cs = [100] * 23 + [10000]  # cents
-    n, s1, s2 = len(cs), sum(cs), sum(c * c for c in cs)
-    z_want = (10000 * n - s1) / math.sqrt(n * s2 - s1 * s1)
-    spike = got[("A", 23)]
-    assert spike["is_anomaly"] is True
-    assert spike["zscore"] == math.floor(z_want * 1e6 + 0.5) / 1e6
-    assert z_want > 4  # the planted spike is a real outlier
-
-    for h in range(1, 23):  # quiet hours never flag
-        assert got[("A", h)]["is_anomaly"] is False, got[("A", h)]
-    assert got[("A", 0)]["zscore"] is None  # 1-row window: zero variance
-    for h in range(10):  # constant series: NULL z, no flags
-        r = got[("B", h)]
-        assert r["zscore"] is None and r["is_anomaly"] is False, r
-
-
 def test_gap_fill_matches_python_reference_on_random_series(spark, tmp_path):
     """Hypothesis property: on random sparse integer-cent series the
     gap-fill must equal a pure-Python LOCF reference — spine bounds,
@@ -232,72 +191,6 @@ def test_gap_fill_matches_python_reference_on_random_series(spark, tmp_path):
                     want.append((key, h, n, round(tot / 100, 2), False))
                 else:
                     want.append((key, h, 0, round(carried / 100, 2), True))
-        assert got == sorted(want), (raw, got, sorted(want))
-
-    run()
-
-
-def test_rolling_zscore_matches_python_reference_on_random_series(spark, tmp_path):
-    """Hypothesis property: rolling z-scores equal a pure-Python
-    implementation of the same integer-moment arithmetic EXACTLY —
-    identical integers through IEEE sqrt/divide give bit-identical
-    doubles, so the compare is ==, not approx."""
-    import math
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        ZSCORE_FLAG,
-        ZSCORE_WINDOW,
-        timeseries_rolling_zscore,
-    )
-
-    @settings(max_examples=4, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=1),
-                st.integers(min_value=0, max_value=23),
-                st.integers(min_value=-10000, max_value=10000),
-            ),
-            min_size=1,
-            max_size=30,
-        )
-    )
-    def run(raw):
-        rows = [
-            (i, _t(h), 1, f"S{s}", c / 100.0, None)
-            for i, (s, h, c) in enumerate(raw)
-        ]
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as d:
-            _write_events(spark, rows, d)
-            got = sorted(
-                (r["event_type"], r["hour_start"].hour,
-                 r["total_value"], r["zscore"], r["is_anomaly"])
-                for r in timeseries_rolling_zscore(spark, d).collect()
-            )
-
-        series = {}
-        for s, h, c in raw:
-            series.setdefault(f"S{s}", {}).setdefault(h, 0)
-            series[f"S{s}"][h] += c
-        want = []
-        for key, hours in series.items():
-            cs = [hours[h] for h in sorted(hours)]
-            for i, h in enumerate(sorted(hours)):
-                win = cs[max(0, i - (ZSCORE_WINDOW - 1)):i + 1]
-                n, s1, s2 = len(win), sum(win), sum(x * x for x in win)
-                c = cs[i]
-                if n * s2 == s1 * s1:
-                    z, flag = None, False
-                else:
-                    zr = (c * n - s1) / math.sqrt(n * s2 - s1 * s1)
-                    z = math.floor(zr * 1e6 + 0.5) / 1e6
-                    flag = abs(zr) > ZSCORE_FLAG
-                want.append((key, h, round(c / 100, 2), z, flag))
         assert got == sorted(want), (raw, got, sorted(want))
 
     run()
@@ -485,157 +378,6 @@ def test_candle_state_merge_equals_full(spark, tmp_path):
     )
 
 
-def test_cusum_closed_form_equals_clamped_fold_on_level_shift(spark):
-    """cusum_frame computes S+/S- via the prefix-sum/running-extreme
-    closed form; this pins it against the textbook sequential clamped
-    fold on a planted level shift (10 days at 1.00, 10 at 3.00), and
-    checks the shift is actually flagged while the early stable days
-    are not."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        CUSUM_H_MULT,
-        cusum_frame,
-    )
-
-    cents_series = [100] * 10 + [300] * 10
-    rows = [
-        (datetime.date(2024, 1, i + 1), c)
-        for i, c in enumerate(cents_series)
-    ]
-    out = cusum_frame(
-        spark.createDataFrame(rows, "day date, daily_cents long")
-    ).collect()
-    assert [r["day"].day for r in out] == list(range(1, 21))
-
-    # reference: the sequential clamped fold
-    n = len(cents_series)
-    mu = sum(cents_series) // n
-    devs = [c - mu for c in cents_series]
-    h = CUSUM_H_MULT * sum(abs(d) for d in devs) // n
-    s_up = s_dn = 0
-    expect = []
-    for d in devs:
-        s_up = max(0, s_up + d)
-        s_dn = max(0, s_dn - d)
-        expect.append((s_up, s_dn, s_up > h or s_dn > h))
-
-    got = [(r["cusum_up"], r["cusum_down"], r["flagged"]) for r in out]
-    assert got == expect
-    # the shift is detected, the first stable days are clean
-    assert any(r["flagged"] for r in out)
-    assert not any(r["flagged"] for r in out[:4])
-    # dev sign structure matches the plant
-    assert all(r["dev_cents"] == -100 for r in out[:10])
-    assert all(r["dev_cents"] == 100 for r in out[10:])
-
-
-def test_trend_regression_planted_slopes(spark):
-    """Hand-checkable OLS: an exact +100-cents/day line, an exact
-    -50-cents/day line, and a single-day group (zero denominator -> 0
-    slope by convention)."""
-    from erathia_market_etl_spark.plans.event_windows import trend_frame
-
-    rows = (
-        [("up", x, 1000 + 100 * x) for x in range(5)]
-        + [("down", x, 5000 - 50 * x) for x in range(4)]
-        + [("flat1", 3, 777)]
-    )
-    out = {
-        r["event_type"]: (
-            r["n_days"], r["slope_num"], r["slope_den"],
-            r["slope_centi_cents"],
-        )
-        for r in trend_frame(
-            spark.createDataFrame(rows, "event_type string, x long, y long")
-        ).collect()
-    }
-    # perfect lines: num/den == slope exactly
-    n_up, nu, du, su = out["up"]
-    assert n_up == 5 and nu == 100 * du and su == 100 * 100
-    n_dn, nd, dd, sd = out["down"]
-    assert n_dn == 4 and nd == -50 * dd and sd == -50 * 100
-    assert out["flat1"] == (1, 0, 0, 0)
-
-
-def test_seasonal_dow_profile_planted_weekday_pattern(spark):
-    """Planted two-week series with a known weekday effect: Mondays
-    always 100.00, Tuesdays alternate 50.00/70.00 — the Monday baseline
-    is exactly 10000 cents (residual 0 both weeks), the Tuesday
-    baseline is the truncated mean 6000 and the residuals split
-    -1000/+1000. Pins the Mon=0 dow convention and the truncating DIV."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        ts_seasonal_dow_profile,
-    )
-
-    # 2024-01-01 is a Monday
-    rows = [
-        (1, datetime.datetime(2024, 1, 1, 9), 1, "a", 100.0),
-        (2, datetime.datetime(2024, 1, 8, 9), 1, "a", 100.0),
-        (3, datetime.datetime(2024, 1, 2, 9), 1, "a", 50.0),
-        (4, datetime.datetime(2024, 1, 9, 9), 1, "a", 70.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double",
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.parquet(d + "/events.parquet")
-        out = {
-            (str(r["day"])): (r["dow"], r["day_cents"], r["base_cents"],
-                              r["residual_cents"])
-            for r in ts_seasonal_dow_profile(spark, d).collect()
-        }
-    assert out["2024-01-01"] == (0, 10000, 10000, 0)
-    assert out["2024-01-08"] == (0, 10000, 10000, 0)
-    assert out["2024-01-02"] == (1, 5000, 6000, -1000)
-    assert out["2024-01-09"] == (1, 7000, 6000, 1000)
-
-
-def test_ewma_smoothing_planted_fold(spark):
-    """Hand-checkable fold: daily values 100, 200, 50 (cents 10000,
-    20000, 5000) give S1=10000, S2=(10000+20000)/2=15000,
-    S3=(15000+5000)/2=10000 — and truncation is per-step: values 1, 2
-    give (100+200) DIV 2 = 150 exactly, while 1, 2, 1 hits the odd
-    intermediate ((150+100) DIV 2 = 125, truncated)."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        ts_ewma_smoothing,
-    )
-
-    rows = [
-        (1, datetime.datetime(2024, 1, 1, 9), 1, "a", 100.0),
-        (2, datetime.datetime(2024, 1, 2, 9), 1, "a", 200.0),
-        (3, datetime.datetime(2024, 1, 3, 9), 1, "a", 50.0),
-        (4, datetime.datetime(2024, 1, 1, 9), 1, "b", 1.0),
-        (5, datetime.datetime(2024, 1, 2, 9), 1, "b", 2.0),
-        (6, datetime.datetime(2024, 1, 3, 9), 1, "b", 1.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double",
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.parquet(d + "/events.parquet")
-        out = {
-            (r["event_type"], str(r["day"])): r["ewma_cents"]
-            for r in ts_ewma_smoothing(spark, d).collect()
-        }
-    assert out[("a", "2024-01-01")] == 10000
-    assert out[("a", "2024-01-02")] == 15000
-    assert out[("a", "2024-01-03")] == 10000
-    assert out[("b", "2024-01-01")] == 100
-    assert out[("b", "2024-01-02")] == 150
-    assert out[("b", "2024-01-03")] == 125
-
-
 def test_peak_concurrency_matches_bruteforce_on_random_intervals(spark):
     """peak_concurrency_frame (r12) must equal the pure-Python sweep
     line on random interval sets — including exact start/end ties
@@ -674,45 +416,4 @@ def test_peak_concurrency_matches_bruteforce_on_random_intervals(spark):
         day = ts.date()
         peak, st, en = want.get(day, (0, 0, 0))
         want[day] = (max(peak, conc), st + (d == 1), en + (d == -1))
-    assert got == want
-
-
-def test_activity_streaks_match_bruteforce_on_random_days(spark, tmp_path):
-    """user_activity_streaks must equal the pure-Python longest-run
-    computation on random per-user day sets (duplicate events per day
-    must not split or extend a streak)."""
-    import random
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        user_activity_streaks,
-    )
-
-    rng = random.Random(42)
-    rows, truth_days = [], {}
-    eid = 0
-    for uid in range(1, 40):
-        days = sorted(rng.sample(range(0, 40), rng.randrange(1, 25)))
-        truth_days[uid] = days
-        for d in days:
-            for _ in range(rng.randrange(1, 3)):  # dup events same day
-                eid += 1
-                rows.append((eid, dt.datetime(2024, 3, 1) +
-                             dt.timedelta(days=d, minutes=eid % 700),
-                             uid, "view", 1.0, "{}"))
-    d = _write_events(spark, rows, str(tmp_path / "sf"))
-    got = {r["streak_days"]: (r["n_users"], r["example_user"])
-           for r in user_activity_streaks(spark, d).collect()}
-
-    def longest(days):
-        best = run = 1
-        for a, b in zip(days, days[1:]):
-            run = run + 1 if b == a + 1 else 1
-            best = max(best, run)
-        return best
-
-    per_user = {u: longest(ds) for u, ds in truth_days.items()}
-    want = {}
-    for u, L in sorted(per_user.items()):
-        n, ex = want.get(L, (0, None))
-        want[L] = (n + 1, u if ex is None else min(ex, u))
     assert got == want

@@ -176,8 +176,9 @@ def write_family_summary(
 
 def annotate_advice(root: Path) -> dict:
     """Rewrite ADVICE.md with a generated status line per bullet, from
-    tools/advice_ledger.json; prune ledger entries whose anchors left
-    the file (the driver rewrites ADVICE.md every round)."""
+    tools/advice_ledger.json. The ledger is only read: entries whose
+    anchors are not in ADVICE.md are kept, so regenerating against an
+    empty ADVICE.md leaves the resolution history intact."""
     advice_path = root / "ADVICE.md"
     ledger_path = root / "tools" / "advice_ledger.json"
     if not advice_path.exists():
@@ -193,7 +194,6 @@ def annotate_advice(root: Path) -> dict:
         if not ln.strip().startswith("_[status")
     ]
     out: list[str] = []
-    seen_anchors: set[str] = set()
     pending: str | None = None
 
     def flush() -> None:
@@ -210,8 +210,6 @@ def annotate_advice(root: Path) -> dict:
             m = anchor_re.search(ln)
             key = m.group(0) if m else None
             ent = ledger.get(key) if key else None
-            if key:
-                seen_anchors.add(key)
             if ent:
                 pending = (
                     f"  _[status r{ent['round']}: "
@@ -225,20 +223,7 @@ def annotate_advice(root: Path) -> dict:
         out.append(ln)
     flush()
     advice_path.write_text("\n".join(out) + "\n")
-
-    pruned = [
-        k for k in ledger
-        if k != "_comment" and k not in seen_anchors
-    ]
-    if pruned:
-        for k in pruned:
-            del ledger[k]
-        ledger_path.write_text(json.dumps(ledger, indent=2) + "\n")
-    return {
-        "advice_bullets": n_bullets,
-        "advice_open": n_open,
-        "advice_ledger_pruned": pruned,
-    }
+    return {"advice_bullets": n_bullets, "advice_open": n_open}
 
 
 def main() -> None:
