@@ -50,9 +50,7 @@ HEADLINE = [
     # r4 VERDICT "Next round" #4: the expensive end of the registry —
     # the heaviest end-to-end pipeline (LSH -> iterative components ->
     # anti-join) and the pair-emitting banded-LSH path — carry perf
-    # evidence from r5 on. (sim_topk_lsh_bucket left with its retired
-    # driver slot; its plan is a strict subset of sim_topk_bruteforce's
-    # with a bucket filter.)
+    # evidence from r5 on.
     "dedup_corpus_representatives",
     "sim_similar_pairs",
     # r6: the vectorized winnowing core (the text surface's heaviest

@@ -1,15 +1,15 @@
-"""Distributed exact global rank / NTILE via the block decomposition.
+"""Distributed exact global rank / NTILE and per-group rank / running sum
+via the block decomposition.
 
 The scale problem: ``ROW_NUMBER() / NTILE(k) OVER (ORDER BY ...)`` with
 no PARTITION BY plans as ``Exchange SinglePartition + Sort + Window`` —
 the whole frame funnels through ONE task. Fine over a bounded grain
 (a 50-row distinct-value count table), a scale-killer over a
 data-scaling grain (customers, documents, users): at 100 TB that is
-billions of rows through a single sort (the r11 VERDICT's
-``mart_rfm_segments`` finding).
+billions of rows through a single sort.
 
-The decomposition (same family as ``text_length_trim`` /
-``histogram_equi_depth``, generalized to near-unique value domains):
+The decomposition (same family as ``text_length_trim``, generalized to
+near-unique value domains):
 
   1. quantize the sort value into coarse BLOCKS — ``block = s DIV w``
      with ``s`` the ascending sort key and ``w`` a constant width.
@@ -37,10 +37,10 @@ and the ``c == 0`` (fewer rows than buckets) edge degenerates to
 ``bucket = rank`` through the first arm (cutoff = n covers every row).
 
 MULTI-METRIC SCORING (``with_ntiles``): scoring the same frame under
-several orderings (RFM's recency/frequency/monetary) must NOT chain
+several orderings (say recency, frequency and monetary) must NOT chain
 three single-metric passes — each pass re-references its upstream for
 the block-count branch, and chained that doubles per level (measured:
-2^3 = 8 scans of the orders aggregate in the naive RFM chain; exchange
+2^3 = 8 scans of the upstream aggregate in a naive 3-metric chain; exchange
 reuse does not fire because column pruning makes the branch subtrees
 non-identical). Instead the metrics are MELTED into rows
 (key, metric_id, sort_key), ranked in ONE decomposition partitioned by
@@ -48,13 +48,10 @@ non-identical). Instead the metrics are MELTED into rows
 ``partitionBy(metric)`` over block-grain rows — not even a
 single-partition exchange), and the bucket scores pivoted back with a
 conditional-max aggregate. Upstream cost is a flat 2 references (the
-melted frame and its block-count aggregate) for ANY number of metrics —
-the same 2-reference shape histogram_equi_depth established.
+melted frame and its block-count aggregate) for ANY number of metrics.
 
 Reference parity: the reference engine has no window functions at all —
-this is beyond-reference engine surface; the RFM mart that consumes it
-mirrors classic CRM segmentation semantics (NTILE quartiles under a
-deterministic total order).
+this is beyond-reference engine surface.
 """
 
 from __future__ import annotations
@@ -204,7 +201,7 @@ def grouped_rank(
     melt axis replaced by real grouping columns: a bare
     ``ROW_NUMBER() OVER (PARTITION BY grp ORDER BY v)`` funnels each
     group through ONE task, and when the group grain is data-scaling
-    (customers per nation, docs per source) that is the r11 RFM
+    (customers per nation, docs per source) that is the global-sort
     scale-killer in per-group form. Here instead:
 
       1. ``block = v DIV block_width`` (truncating division is monotone

@@ -241,18 +241,6 @@ def sign_band_near_pairs(emb, threshold: float = 0.9,
     )
 
 
-def sign_bucket(a: Column, n_bits: int = 8) -> Column:
-    """Sign-bit LSH: concat of (aᵢ > 0) over the first n_bits dims ->
-    2^n_bits buckets. Deterministic, engine-independent, and a natural
-    physical partitioning key at scale.
-    DuckDB twin: concat of CASE WHEN a[i] > 0 THEN '1' ELSE '0' END."""
-    bits = [
-        F.when(F.element_at(a, i + 1) > 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_bits)
-    ]
-    return F.concat(*bits)
-
-
 def kmeans_centroids(emb, k: int = 16, iters: int = 10,
                      sample_n: int = 4096, seed: int = 7,
                      id_col: str = "vec_id", vec_col: str = "embedding"):

@@ -407,98 +407,3 @@ def dedup_corpus_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "source", "n_chars")
         .orderBy("doc_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# dedup_fuzzy_prefix_block: blocking + edit-distance verification (the
-# classic record-linkage / entity-resolution near-dup shape — character-
-# level and order-sensitive, catching small edits that token-set
-# Jaccard treats as identical and SimHash as noise).
-# ---------------------------------------------------------------------------
-
-FUZZY_PREFIX_LEN = 16     # blocking key: first 16 chars
-FUZZY_LEN_BUCKET = 32     # ... plus length DIV 32
-FUZZY_BLOCK_CAP = 64      # deterministic per-block candidate cap
-FUZZY_VERIFY_LEN = 120    # edit distance over the first 120 chars
-FUZZY_MAX_DIST = 24       # keep pairs within 24 edits
-
-DEDUP_FUZZY_PREFIX_BLOCK_ORACLE = f"""
-    WITH d AS (
-        SELECT doc_id,
-               substr(text, 1, {FUZZY_PREFIX_LEN}) AS pfx,
-               length(text) // {FUZZY_LEN_BUCKET} AS lb,
-               substr(text, 1, {FUZZY_VERIFY_LEN}) AS head
-        FROM documents
-    ),
-    capped AS (
-        SELECT * FROM (
-            SELECT d.*,
-                   ROW_NUMBER() OVER (PARTITION BY pfx, lb ORDER BY doc_id)
-                       AS rn
-            FROM d
-        ) WHERE rn <= {FUZZY_BLOCK_CAP}
-    )
-    SELECT a.doc_id AS doc_a,
-           b.doc_id AS doc_b,
-           levenshtein(a.head, b.head) AS prefix_edit_distance
-    FROM capped a
-    JOIN capped b
-      ON a.pfx = b.pfx AND a.lb = b.lb AND a.doc_id < b.doc_id
-    WHERE levenshtein(a.head, b.head) <= {FUZZY_MAX_DIST}
-    ORDER BY doc_a, doc_b
-    """
-
-
-@query("dedup_fuzzy_prefix_block", DEDUP_FUZZY_PREFIX_BLOCK_ORACLE, local=True)
-def dedup_fuzzy_prefix_block(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy near-dup pairs by prefix blocking + Levenshtein verify:
-    block on (first FUZZY_PREFIX_LEN (16) chars, length DIV
-    FUZZY_LEN_BUCKET (32)), cap each block at FUZZY_BLOCK_CAP (64) docs
-    deterministically (row_number by doc_id — Spark rewrites the rank
-    filter to a two-phase WindowGroupLimit, so the cap is taken
-    map-side before the block exchange), emit ordered within-block
-    pairs, keep those whose FUZZY_VERIFY_LEN (120)-char heads are
-    within FUZZY_MAX_DIST (24) edits. Levenshtein is an exact integer
-    on both engines (the fixture corpus is ASCII; codepoint semantics
-    agree), so the oracle is hash-exact.
-
-    At 100 TB: only (doc_id, 16-char key, bucket, 120-char head) ride
-    the blocking shuffle — never document payloads; pair expansion is
-    bounded O(cap²) per block with the cap deterministic (a boilerplate
-    prefix shared by millions of docs costs 64 rows, not 10^12 pairs);
-    the O(len²) edit-distance DP runs on 120-char heads only, after
-    blocking has already cut candidates to near-duplicates. The miss
-    budget is explicit and tunable: pairs differing inside their first
-    16 chars belong to the MinHash/SimHash passes (token-level edits),
-    this pass supplies the character-level verify they can't."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = fan_out(docs).select(
-        "doc_id",
-        F.substring("text", 1, FUZZY_PREFIX_LEN).alias("pfx"),
-        F.expr(f"length(text) DIV {FUZZY_LEN_BUCKET}").alias("lb"),
-        F.substring("text", 1, FUZZY_VERIFY_LEN).alias("head"),
-    )
-    from pyspark.sql import Window
-
-    rn = F.row_number().over(
-        Window.partitionBy("pfx", "lb").orderBy("doc_id")
-    )
-    capped = d.withColumn("rn", rn).filter(F.col("rn") <= FUZZY_BLOCK_CAP)
-    a = capped.select(
-        F.col("doc_id").alias("doc_a"), "pfx", "lb",
-        F.col("head").alias("head_a"),
-    )
-    b = capped.select(
-        F.col("doc_id").alias("doc_b"), "pfx", "lb",
-        F.col("head").alias("head_b"),
-    )
-    return (
-        a.join(b, ["pfx", "lb"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            F.levenshtein("head_a", "head_b").alias("prefix_edit_distance"),
-        )
-        .filter(F.col("prefix_edit_distance") <= FUZZY_MAX_DIST)
-        .orderBy("doc_a", "doc_b")
-    )

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.money import _unscale_round2, cents, money_sum_cents
+from ..functions.money import cents, money_sum_cents
 from ..sources.events import load_events
 from .registry import query
 
@@ -333,200 +333,10 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# rollup_multiresolution: hypertable-style continuous-aggregate rollup
-# (minute -> hour -> day).
-# ---------------------------------------------------------------------------
-
-ROLLUP_MULTIRESOLUTION_ORACLE = """
-    SELECT date_trunc('day', ts) AS day_start,
-           event_type,
-           COUNT(*) AS n_events,
-           ROUND(SUM(CAST(value AS DECIMAL(38,12))), 2)::DOUBLE AS total_value,
-           MIN(value) AS min_value,
-           MAX(value) AS max_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY day_start, event_type
-    """
-
-
-@query("rollup_multiresolution", ROLLUP_MULTIRESOLUTION_ORACLE, local=True)
-def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-resolution rollup (the TimescaleDB continuous-aggregate /
-    Druid rollup pattern): aggregate raw events to 1-minute grain, then
-    re-aggregate minutes into hours and hours into days, returning the
-    day grain. The oracle aggregates raw->day DIRECTLY, so the green row
-    attests the property the whole pattern rests on: every measure is
-    re-aggregable (COUNT sums, SUM sums, MIN/MAX compose) and the
-    cents-integer sums make re-association exact — a float SUM would
-    hash-diverge across the regrouping.
-
-    At 100 TB this is the only sane shape for serving multiple time
-    grains: the raw->minute pass is the single full-data shuffle
-    (collapsing map-side — events arrive roughly time-contiguous, so
-    partial aggs reduce ~60x before the exchange); minute->hour and
-    hour->day shuffle only the already-reduced rollup rows (60x then
-    24x smaller). Incremental refresh falls out: a late partition
-    re-aggregates only its own minute rows upward."""
-    events = load_events(spark, sf_dir)
-    minute = (
-        events
-        .select(
-            F.date_trunc("minute", "ts").alias("minute_start"),
-            "event_type",
-            cents("value").alias("v_cents"),
-            F.col("value"),
-        )
-        .groupBy("minute_start", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("v_cents").alias("sum_cents"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-    )
-    hour = (
-        minute
-        .groupBy(
-            F.date_trunc("hour", "minute_start").alias("hour_start"),
-            "event_type",
-        )
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
-    day = (
-        hour
-        .groupBy(
-            F.date_trunc("day", "hour_start").alias("day_start"),
-            "event_type",
-        )
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
-    return (
-        day.select(
-            "day_start",
-            "event_type",
-            "n_events",
-            _unscale_round2(F.col("sum_cents"), 2).alias("total_value"),
-            "min_value",
-            "max_value",
-        )
-        .orderBy("day_start", "event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# timeseries_gap_fill: dense per-series time spine + last-observation-
-# carried-forward.
-# ---------------------------------------------------------------------------
-
-TIMESERIES_GAP_FILL_ORACLE = """
-    WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS hour_start,
-               COUNT(*) AS n,
-               SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS c
-        FROM events GROUP BY 1, 2
-    ),
-    bounds AS (
-        SELECT event_type, MIN(hour_start) AS mn, MAX(hour_start) AS mx
-        FROM hourly GROUP BY 1
-    ),
-    spine AS (
-        SELECT b.event_type,
-               unnest(generate_series(b.mn, b.mx, INTERVAL 1 HOUR)) AS hour_start
-        FROM bounds b
-    )
-    SELECT s.event_type,
-           s.hour_start,
-           COALESCE(h.n, 0) AS n_events,
-           ROUND(CAST(LAST_VALUE(h.c IGNORE NULLS) OVER (
-                          PARTITION BY s.event_type ORDER BY s.hour_start
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                      ) AS DECIMAL(38,0)) / 100, 2)::DOUBLE AS filled_value,
-           h.n IS NULL AS is_gap
-    FROM spine s LEFT JOIN hourly h
-      ON s.event_type = h.event_type AND s.hour_start = h.hour_start
-    ORDER BY s.event_type, s.hour_start
-    """
-
-
-@query("timeseries_gap_fill", TIMESERIES_GAP_FILL_ORACLE, local=True)
-def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-fill + LOCF (the TimescaleDB time_bucket_gapfill / locf
-    shape): build the dense hourly spine per series from that series'
-    own [min, max] hour range, left-join the sparse hourly aggregates,
-    and carry the last observed total forward into empty hours. The
-    spine generation is DISTRIBUTED — one sequence()/explode per series
-    row, never a driver-side loop or a global calendar cross-join — and
-    the first spine hour always has data (the bounds come from the
-    data), so LOCF never emits an unseeded NULL.
-
-    At scale: the hourly pre-aggregation is the only full-data shuffle;
-    the spine explode is narrow (bounds rows -> dense hours), the fill
-    join keys on (series, hour) against already-reduced rollup rows,
-    and the LOCF window shuffles one partition per series. Carried
-    totals stay exact cents integers until the final presentation
-    divide."""
-    events = load_events(spark, sf_dir)
-    hourly = (
-        events
-        .select(
-            "event_type",
-            F.date_trunc("hour", "ts").alias("hour_start"),
-            cents("value").alias("v_cents"),
-        )
-        .groupBy("event_type", "hour_start")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v_cents").alias("c"))
-    )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hour_start").alias("mn"), F.max("hour_start").alias("mx"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))
-            ).alias("hour_start"),
-        )
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour_start")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        spine.join(hourly, ["event_type", "hour_start"], "left")
-        .select(
-            "event_type",
-            "hour_start",
-            F.coalesce(F.col("n"), F.lit(0)).alias("n_events"),
-            F.last("c", ignorenulls=True).over(w).alias("filled_cents"),
-            F.col("n").isNull().alias("is_gap"),
-        )
-        .select(
-            "event_type",
-            "hour_start",
-            "n_events",
-            _unscale_round2(F.col("filled_cents"), 2).alias("filled_value"),
-            "is_gap",
-        )
-        .orderBy("event_type", "hour_start")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Incremental rollup refresh: the mergeable-state algebra behind
-# rollup_multiresolution's "a late partition re-aggregates only its own
-# rows upward" claim. Maintenance-side (no driver query slot — the same
-# class as sinks); exactness pinned in tests/test_timeseries.py.
+# Incremental rollup refresh: the mergeable-state algebra that lets a
+# late partition re-aggregate only its own rows. Maintenance-side (no
+# driver query slot — the same class as sinks); exactness pinned in
+# tests/test_timeseries.py.
 # ---------------------------------------------------------------------------
 
 def day_rollup_state(events: DataFrame) -> DataFrame:
@@ -536,7 +346,7 @@ def day_rollup_state(events: DataFrame) -> DataFrame:
     scaled integer, NOT the rounded presentation total), so states
     computed over any partition of the event log merge associatively
     into the state of the union. This is the storage schema of an
-    incrementally-maintained rollup; ``present_day_rollup`` renders it."""
+    incrementally-maintained rollup."""
     return (
         events
         .select(
@@ -572,24 +382,6 @@ def merge_rollup_states(*states: DataFrame) -> DataFrame:
             F.min("min_value").alias("min_value"),
             F.max("max_value").alias("max_value"),
         )
-    )
-
-
-def present_day_rollup(state: DataFrame) -> DataFrame:
-    """Presentation of a day rollup state — identical output contract
-    to ``rollup_multiresolution`` (which computes the same values
-    through the minute/hour ladder; equality is pinned in
-    tests/test_timeseries.py)."""
-    return (
-        state.select(
-            "day_start",
-            "event_type",
-            "n_events",
-            _unscale_round2(F.col("sum_cents"), 2).alias("total_value"),
-            "min_value",
-            "max_value",
-        )
-        .orderBy("day_start", "event_type")
     )
 
 
@@ -700,121 +492,6 @@ def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# markov_event_transitions: first-order behavior model of the event
-# stream.
-# ---------------------------------------------------------------------------
-
-MARKOV_EVENT_TRANSITIONS_ORACLE = """
-    WITH seq AS (
-        SELECT event_type AS from_type,
-               LEAD(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS to_type
-        FROM events
-    ),
-    t AS (
-        SELECT from_type, to_type, CAST(COUNT(*) AS BIGINT) AS n
-        FROM seq WHERE to_type IS NOT NULL
-        GROUP BY from_type, to_type
-    ),
-    tot AS (
-        SELECT from_type, CAST(SUM(n) AS BIGINT) AS from_total
-        FROM t GROUP BY from_type
-    )
-    SELECT t.from_type, t.to_type, t.n, tot.from_total,
-           t.n * 1000000 // tot.from_total AS prob_ppm
-    FROM t JOIN tot ON t.from_type = tot.from_type
-    ORDER BY t.from_type, t.to_type
-    """
-
-
-@query("markov_event_transitions", MARKOV_EVENT_TRANSITIONS_ORACLE, local=True)
-def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of per-user event behavior:
-    for each (from_type, to_type) pair, the count of consecutive
-    occurrences within a user's (ts, event_id)-ordered stream and the
-    transition probability as exact parts-per-million (integer
-    multiply-then-DIV). The standard product-analytics behavior model —
-    next-action prediction baselines, funnel-shape discovery, bot
-    detection (near-deterministic rows stand out).
-
-    Plan: ONE user_id exchange feeds the LEAD window; the transition
-    aggregate is map-side combinable down to |types|^2 rows; totals
-    derive from THAT table (group-count-sized, never a second corpus
-    scan). Output is strings/longs only — hash-exact."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = load_events(spark, sf_dir).select(
-        F.col("event_type").alias("from_type"),
-        F.lead("event_type").over(w).alias("to_type"),
-    )
-    t = (
-        seq.filter(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = t.groupBy("from_type").agg(
-        F.sum("n").cast("long").alias("from_total")
-    )
-    return (
-        t.join(tot, "from_type")
-        .select(
-            "from_type",
-            "to_type",
-            "n",
-            "from_total",
-            F.expr("n * 1000000 DIV from_total").alias("prob_ppm"),
-        )
-        .orderBy("from_type", "to_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# path_trigrams_top: most common 3-step behavior paths.
-# ---------------------------------------------------------------------------
-
-PATH_TOP_K = 20
-
-PATH_TRIGRAMS_TOP_ORACLE = f"""
-    WITH seq AS (
-        SELECT event_type AS e1,
-               LEAD(event_type, 1) OVER w AS e2,
-               LEAD(event_type, 2) OVER w AS e3
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n
-    FROM seq WHERE e3 IS NOT NULL
-    GROUP BY e1, e2, e3
-    ORDER BY n DESC, e1, e2, e3
-    LIMIT {PATH_TOP_K}
-    """
-
-
-@query("path_trigrams_top", PATH_TRIGRAMS_TOP_ORACLE, local=True)
-def path_trigrams_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PATH_TOP_K (20) most common 3-step event paths across users
-    (the path-analysis complement of the first-order Markov matrix —
-    trigrams expose patterns transition pairs factor away, e.g.
-    view->click->purchase vs view->click->error). Same shape economics
-    as markov_event_transitions: ONE user_id exchange feeds both LEAD
-    windows (same spec — one Window node), counts fold map-side to at
-    most |types|^3 rows, and the cut is TakeOrderedAndProject with a
-    full deterministic tiebreak."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = load_events(spark, sf_dir).select(
-        F.col("event_type").alias("e1"),
-        F.lead("event_type", 1).over(w).alias("e2"),
-        F.lead("event_type", 2).over(w).alias("e3"),
-    )
-    return (
-        seq.filter(F.col("e3").isNotNull())
-        .groupBy("e1", "e2", "e3")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy(F.desc("n"), "e1", "e2", "e3")
-        .limit(PATH_TOP_K)
-    )
-
-
-# ---------------------------------------------------------------------------
 # ohlc_hourly + twap_daily: market-data aggregation shapes over the
 # irregular event stream.
 # ---------------------------------------------------------------------------
@@ -863,9 +540,7 @@ def ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB tick volume this is the standard first rollup: one
     exchange on (instrument, hour), everything downstream
-    candle-count-sized. The close of hour h and open of h+1 stitch into
-    the continuous series the rollup_multiresolution family then
-    compacts upward."""
+    candle-count-sized."""
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hour = F.date_trunc("hour", F.col("ts")).alias("hour_start")
     px = load_events(spark, sf_dir).select(
@@ -942,9 +617,8 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding clock starts at each type's FIRST tick of the day, not at
     midnight — no carry-in from the previous day's close, so days are
     independently computable (embarrassingly parallel at 100 TB; a
-    carried-LOCF variant would chain days and is the gap-fill family's
-    job). One (type, day)-keyed exchange serves the LEAD window and the
-    aggregate."""
+    carried-LOCF variant would chain days). One (type, day)-keyed
+    exchange serves the LEAD window and the aggregate."""
     px = load_events(spark, sf_dir).select(
         "event_type",
         "ts",
@@ -994,7 +668,7 @@ def candle_state(events: DataFrame) -> DataFrame:
     open = argmin over (ts, id), close = argmax, extremes and counts
     fold — which is what lets 100 TB tick pipelines build candles
     per-partition/per-batch and merge, never re-scanning ticks
-    (the day_rollup_state / cms_counter_state algebra, third member)."""
+    (the day_rollup_state algebra, second member)."""
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     px = events.select(
         "event_type",

@@ -58,7 +58,6 @@ def _load_all() -> None:
         event_windows,
         graph_queries,
         multimodal_queries,
-        profile_queries,
         relational,
         sampling_queries,
         similarity_queries,

@@ -1184,232 +1184,6 @@ def setop_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# mart_rfm_segments: quartile RFM customer segmentation over orders.
-# ---------------------------------------------------------------------------
-
-MART_RFM_SEGMENTS_ORACLE = """
-    WITH rfm AS (
-        SELECT o_custkey,
-               MAX(o_orderdate) AS last_order,
-               CAST(COUNT(*) AS BIGINT) AS freq,
-               CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5e0) AS BIGINT))
-                    AS BIGINT) AS monetary_cents
-        FROM orders GROUP BY o_custkey
-    ),
-    scored AS (
-        SELECT o_custkey, monetary_cents,
-               NTILE(4) OVER (ORDER BY last_order DESC, o_custkey) AS r_q,
-               NTILE(4) OVER (ORDER BY freq DESC, o_custkey) AS f_q,
-               NTILE(4) OVER (ORDER BY monetary_cents DESC, o_custkey)
-                   AS m_q
-        FROM rfm
-    )
-    SELECT r_q, f_q, m_q,
-           CASE WHEN r_q = 1 AND f_q = 1 AND m_q = 1 THEN 'champions'
-                WHEN r_q = 4 AND f_q = 4 THEN 'hibernating'
-                ELSE 'mid' END AS segment,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(monetary_cents) AS BIGINT) AS monetary_cents_total
-    FROM scored
-    GROUP BY r_q, f_q, m_q
-    ORDER BY r_q, f_q, m_q
-    """
-
-
-@query("mart_rfm_segments", MART_RFM_SEGMENTS_ORACLE, local=True)
-def mart_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM (recency / frequency / monetary) customer segmentation —
-    the classic CRM mart: per customer the last order date, order
-    count, and lifetime spend in exact cents, each scored into
-    quartiles by NTILE(4) under a DETERMINISTIC total order
-    (metric direction, then custkey — a bare metric order would make
-    bucket boundaries tie-nondeterministic and the engines disagree),
-    then rolled up to the 64-cell segment grid with the two headline
-    labels (champions = best quartile on all three; hibernating =
-    worst recency x frequency). NTILE's uneven-bucket rule
-    (ceil-sized buckets first) is SQL-standard on both engines —
-    sf0.001's 150 customers / 4 force the uneven path, so the compare
-    attests the boundary rule itself.
-
-    Scale shape (r12, the r11 VERDICT's one weak item): the
-    per-customer aggregate is the only order-volume-sized stage
-    (map-side combinable), and the three quartile scores come from
-    ``operators/rank.py``'s melted BLOCK rank decomposition — the
-    three metrics explode into (customer, metric, key) rows, ONE
-    (metric, block)-partitioned row_number ranks them, per-metric
-    offset windows ride the tiny block-count table (no SinglePartition
-    exchange anywhere in this plan — R6-clean by construction, not by
-    justification), and the scores pivot back with a conditional-max
-    aggregate. The customer-grain frame never funnels through one
-    task. NTILE itself is exact integer arithmetic on (rank, n), so
-    the SQL-standard uneven-bucket rule and the DETERMINISTIC total
-    order (metric direction, then custkey) are preserved bit-for-bit
-    and the DuckDB NTILE oracle stays hash-exact. Block widths are
-    domain constants: 64-day recency blocks, 4-order frequency blocks,
-    $100k monetary blocks."""
-    from ..operators.rank import with_ntiles
-
-    orders = T(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    rfm = (
-        orders.select("o_custkey", "o_orderdate", cents.alias("c"))
-        .groupBy("o_custkey")
-        .agg(
-            F.max("o_orderdate").alias("last_order"),
-            F.count(F.lit(1)).cast("long").alias("freq"),
-            F.sum("c").cast("long").alias("monetary_cents"),
-        )
-    )
-    # TIMESTAMP_NTZ has no direct long cast; via TIMESTAMP it is the
-    # identity on wall times under the engine's pinned UTC session tz
-    # (session.py) — a monotone injective key, which is all rank needs
-    scored = with_ntiles(
-        rfm,
-        "o_custkey",
-        [
-            (
-                "r_q",
-                F.col("last_order").cast("timestamp").cast("long"),
-                86_400 * 64,
-            ),
-            ("f_q", F.col("freq"), 4),
-            ("m_q", F.col("monetary_cents"), 10_000_000),
-        ],
-        buckets=4,
-    )
-    return (
-        scored.groupBy("r_q", "f_q", "m_q")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_customers"),
-            F.sum("monetary_cents").cast("long")
-            .alias("monetary_cents_total"),
-        )
-        .select(
-            "r_q",
-            "f_q",
-            "m_q",
-            F.when(
-                (F.col("r_q") == 1) & (F.col("f_q") == 1)
-                & (F.col("m_q") == 1),
-                F.lit("champions"),
-            )
-            .when(
-                (F.col("r_q") == 4) & (F.col("f_q") == 4),
-                F.lit("hibernating"),
-            )
-            .otherwise(F.lit("mid")).alias("segment"),
-            "n_customers",
-            "monetary_cents_total",
-        )
-        .orderBy("r_q", "f_q", "m_q")
-    )
-
-
-# ---------------------------------------------------------------------------
-# skyline_part_frontier: 2-D skyline / Pareto frontier.
-# ---------------------------------------------------------------------------
-
-SKYLINE_BLOCK_CENTS = 500  # $5 price blocks; TPC-H price domain is fixed
-
-SKYLINE_PART_FRONTIER_ORACLE = """
-    WITH p AS (
-        SELECT p_partkey,
-               CAST(FLOOR(p_retailprice * 100 + 0.5e0) AS BIGINT)
-                   AS price_cents,
-               CAST(p_size AS BIGINT) AS size
-        FROM part
-    ),
-    w AS (
-        SELECT p.*,
-               MIN(size) OVER (
-                   ORDER BY price_cents
-                   RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-               ) AS min_prev,
-               MIN(size) OVER (PARTITION BY price_cents) AS min_same
-        FROM p
-    )
-    SELECT p_partkey, price_cents, size
-    FROM w
-    WHERE (min_prev IS NULL OR min_prev > size) AND size = min_same
-    ORDER BY price_cents, size, p_partkey
-    """
-
-
-@query("skyline_part_frontier", SKYLINE_PART_FRONTIER_ORACLE, local=True)
-def skyline_part_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D SKYLINE (Pareto frontier) over parts: every part such that
-    no other part is both cheaper-or-equal AND smaller-or-equal with at
-    least one strict — the classic skyline operator (Börzsönyi et al.,
-    ICDE'01), the "best tradeoff catalog" query. Equal (price, size)
-    duplicates dominate neither way and are all kept.
-
-    Dominance decomposes exactly along the price order:
-      * a strictly-cheaper part dominates iff its size <= mine;
-      * an equal-price part dominates iff its size < mine.
-    So: keep a row iff MIN(size) over strictly-lower prices exceeds
-    its size AND it attains its price's own size minimum.
-
-    Scale shape — skylines are notoriously single-node (the textbook
-    plan is a global sort + running minimum: Exchange SinglePartition
-    over the table grain, lint rule R6's target shape). This plan uses
-    the operators/rank.py BLOCK discipline instead: price quantizes
-    into SKYLINE_BLOCK_CENTS blocks (bounded by the PRICE DOMAIN, not
-    the row count), the running minimum splits into (a) a cumulative
-    min over the tiny per-block minimum table — broadcast back — and
-    (b) a within-block RANGE-frame window partitioned BY block (the
-    same exchange also serves the equal-price frame: two frames, one
-    Window spec family, one shuffle). Blocks are price ranges, so
-    "strictly cheaper" = strictly-earlier block (always dominatable by
-    the block cum-min) plus same-block lower-price rows (the local
-    range frame); no row ever crosses one task. The DuckDB twin is the
-    single-node global-window formulation — hash equality attests the
-    decomposition."""
-    part = T(spark, sf_dir, "part")
-    p = part.select(
-        "p_partkey",
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long").alias("price_cents"),
-        F.col("p_size").cast("long").alias("size"),
-    ).withColumn(
-        "blk", F.expr(f"price_cents DIV {SKYLINE_BLOCK_CENTS}")
-    )
-    from pyspark.sql import Window
-
-    blk_mins = p.groupBy("blk").agg(F.min("size").alias("bmin"))
-    w_prior = Window.orderBy("blk").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    prior = blk_mins.select(
-        "blk", F.min("bmin").over(w_prior).alias("prior_min")
-    )
-    w_in = (
-        Window.partitionBy("blk")
-        .orderBy("price_cents")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_same = (
-        Window.partitionBy("blk")
-        .orderBy("price_cents")
-        .rangeBetween(0, 0)
-    )
-    scored = (
-        p.withColumn("in_min", F.min("size").over(w_in))
-        .withColumn("same_min", F.min("size").over(w_same))
-        .join(F.broadcast(prior), "blk")
-    )
-    keep = (
-        (F.col("prior_min").isNull() | (F.col("prior_min") > F.col("size")))
-        & (F.col("in_min").isNull() | (F.col("in_min") > F.col("size")))
-        & (F.col("same_min") == F.col("size"))
-    )
-    return (
-        scored.filter(keep)
-        .select("p_partkey", "price_cents", "size")
-        .orderBy("price_cents", "size", "p_partkey")
-    )
-
-
-# ---------------------------------------------------------------------------
 # mart_revenue_gini: revenue-concentration (Gini / Lorenz) mart.
 # ---------------------------------------------------------------------------
 
@@ -1605,9 +1379,8 @@ def mart_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     block) sums fold map-side, carries ride the tiny block table, the
     within-block window partitions by (nation, block)) — a bare
     SUM() OVER (PARTITION BY nation ORDER BY ...) would funnel each
-    nation's full customer population through one task, the r11 RFM
-    scale-killer in per-group form. The threshold count is a
-    group-sized aggregate; nation names ride a broadcast. Ordering by
+    nation's full customer population through one task. The threshold
+    count is a group-sized aggregate; nation names ride a broadcast. Ordering by
     descending spend uses the NEGATED cents as the block key —
     truncating division stays monotone for negatives, blocks stay
     order-aligned."""

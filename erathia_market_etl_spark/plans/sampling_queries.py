@@ -433,57 +433,3 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("frequent_source")
     )
-
-
-# ---------------------------------------------------------------------------
-# sample_k_per_group: deterministic fixed-size per-group sample.
-# ---------------------------------------------------------------------------
-
-SAMPLE_K_PER_GROUP = 5
-_KPG_SALT = 60013
-
-
-SAMPLE_K_PER_GROUP_ORACLE = f"""
-    WITH h AS (
-        SELECT source, doc_id,
-               {_bucket_sql('doc_id', _KPG_SALT)} AS hkey
-        FROM documents
-    ),
-    r AS (
-        SELECT source, doc_id, hkey,
-               ROW_NUMBER() OVER (PARTITION BY source
-                                  ORDER BY hkey, doc_id) AS rn
-        FROM h
-    )
-    SELECT source, doc_id, hkey, rn
-    FROM r WHERE rn <= {SAMPLE_K_PER_GROUP}
-    ORDER BY source, rn
-    """
-
-
-@query("sample_k_per_group", SAMPLE_K_PER_GROUP_ORACLE, local=True)
-def sample_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic fixed-size sample of SAMPLE_K_PER_GROUP (5)
-    documents per source — the "give me k examples from every stratum"
-    primitive (eval-set construction, per-source spot checks, UI
-    previews). Rows are ordered within each group by the salted
-    deterministic hash bucket (``_bucket`` with its own salt), so the
-    sample is uniform-ish, REPRODUCIBLE across runs and engines (rand() is lint-banned), and STABLE under corpus
-    growth in the sense that a document's sort key never changes —
-    only boundary membership can shift.
-
-    Plan: one window per source ordered by (hkey, doc_id); the rn <= k
-    predicate pushes INTO the window sort as WindowGroupLimit (pinned
-    in tests/test_plan_shapes.py) — each map task keeps a running
-    top-k per group BEFORE the exchange, so the shuffle carries
-    ~k rows per (task, group), not the corpus."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "source", "doc_id", _bucket(F.col("doc_id"), _KPG_SALT).alias("hkey")
-    )
-    w = Window.partitionBy("source").orderBy("hkey", "doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= SAMPLE_K_PER_GROUP)
-        .select("source", "doc_id", "hkey", "rn")
-        .orderBy("source", "rn")
-    )

@@ -17,7 +17,6 @@ from ..operators.similarity import (
     round6,
     sign_band_near_pairs,
     sign_band_table,
-    sign_bucket,
 )
 from ..sources.parquet_io import load_table
 from .registry import query
@@ -33,10 +32,6 @@ _COSINE_SQL = """
        * SQRT(list_sum(list_transform(list_zip({b}, {b}),
              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))))
 """
-
-_BUCKET_SQL = "||".join(
-    f"(CASE WHEN {{v}}[{i + 1}] > 0 THEN '1' ELSE '0' END)" for i in range(8)
-)
 
 
 def _query_vector(spark: SparkSession, sf_dir: str):
@@ -93,44 +88,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id", "label",
-            round6(cosine(F.col("embedding"), F.col("query_vec"))).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-        .limit(TOP_K)
-    )
-
-
-LSH_BUCKET_ORACLE = f"""
-    WITH q AS (SELECT embedding AS query_vec,
-                      {_BUCKET_SQL.format(v='embedding')} AS qbucket
-               FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-    SELECT e.vec_id, e.label,
-           FLOOR(({_COSINE_SQL.format(a='e.embedding', b='q.query_vec')})
-                 * 1000000 + 0.5) / 1000000 AS cosine_sim
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> {QUERY_VEC_ID}
-      AND {_BUCKET_SQL.format(v='e.embedding')} = q.qbucket
-    ORDER BY cosine_sim DESC, e.vec_id
-    LIMIT {TOP_K}
-    """
-
-
-@query("sim_topk_lsh_bucket", LSH_BUCKET_ORACLE, local=True)
-def sim_topk_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's sign-bit LSH
-    bucket (~1/256 of the data). At scale, write the table partitioned by
-    bucket and this filter becomes partition pruning — the scan itself
-    shrinks 256×."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = _query_vector(spark, sf_dir).select(
-        "query_vec", sign_bucket(F.col("query_vec")).alias("qbucket")
-    )
-    return (
-        emb.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("bucket", sign_bucket(F.col("embedding")))
-        .join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
         .select(
             "vec_id", "label",
             round6(cosine(F.col("embedding"), F.col("query_vec"))).alias("cosine_sim"),

@@ -1,6 +1,5 @@
-"""Mergeable-sketch queries: HyperLogLog registers and count-min
-counters — two merge disciplines (max, sum), both with an
-exact-integer contract.
+"""Mergeable-sketch queries: HyperLogLog registers under a MAX merge,
+with an exact-integer contract.
 
 The reference has no sketch surface beyond its exact aggregates; the
 registered ``agg_approx_sketches`` query covers Spark's built-in
@@ -22,8 +21,7 @@ Everything is integer arithmetic so the DuckDB twin is hash-exact:
   DuckDB has no xxhash64, and the CONTRACT here is the register
   algebra, not the hash family.
 * rho (leading-zero rank of the 26-bit suffix) via LENGTH(BIN(w)) —
-  the exact string-op bit-length idiom ``text_lm_familiarity``
-  established.
+  an exact string-op bit length on both engines.
 * the harmonic denominator is kept 2^27-scaled: S = sum of
   2^(27 - r_j) with absent registers contributing 2^27 each — exact
   BIGINT, order-free.
@@ -207,163 +205,6 @@ def hll_registers_frame(keys: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# agg_cms_frequencies: count-min sketch register algebra (the SUM-merge
-# twin of the HLL MAX-merge above).
-# ---------------------------------------------------------------------------
-
-CMS_W = 1024         # counters per row (top-10-bit column index)
-CMS_TOP_K = 20       # probe workload: the hottest parts by exact count
-# per-row salts xor-ed into the key before the avalanche (< 2^32 so the
-# hash input stays < 2^32)
-CMS_SALTS = (0, 0x5BD1E995, 0x27D4EB2F, 0x165667B1)
-
-
-def _cms_cols_sql(x: str) -> list[str]:
-    return [
-        f"({_hash32_sql(f'xor({x}, {salt})')}) // {1 << 22}"
-        for salt in CMS_SALTS
-    ]
-
-
-AGG_CMS_FREQUENCIES_ORACLE = f"""
-    WITH keys AS (
-        SELECT l_partkey % {_MOD32} AS x FROM lineitem
-    ),
-    cells AS (
-        {" UNION ALL ".join(
-            f"SELECT {r} AS r, {col} AS col, x FROM keys"
-            for r, col in enumerate(_cms_cols_sql('x'))
-        )}
-    ),
-    -- the oracle builds the GLOBAL counter table directly; the Spark
-    -- side builds per-month tables and SUM-merges them — hash equality
-    -- attests the merge law end-to-end
-    counters AS (
-        SELECT r, col, CAST(COUNT(*) AS BIGINT) AS c
-        FROM cells GROUP BY r, col
-    ),
-    top AS (
-        SELECT x, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-        FROM keys GROUP BY x
-        ORDER BY exact_cnt DESC, x LIMIT {CMS_TOP_K}
-    ),
-    probes AS (
-        {" UNION ALL ".join(
-            f"SELECT x, exact_cnt, {r} AS r, {col} AS col FROM top"
-            for r, col in enumerate(_cms_cols_sql('x'))
-        )}
-    )
-    SELECT p.x AS part_key, p.exact_cnt,
-           MIN(c.c) AS est_cnt,
-           MIN(c.c) - p.exact_cnt AS overestimate
-    FROM probes p JOIN counters c ON p.r = c.r AND p.col = c.col
-    GROUP BY p.x, p.exact_cnt
-    ORDER BY exact_cnt DESC, part_key
-    """
-
-
-@query("agg_cms_frequencies", AGG_CMS_FREQUENCIES_ORACLE, local=True)
-def agg_cms_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch over part purchase frequencies, with the merge
-    law attested cross-engine: the Spark side builds PER-MONTH counter
-    tables and SUM-merges them into the global sketch (the incremental
-    shape — a new month's counters add in without touching history);
-    the DuckDB twin builds the global counters DIRECTLY from the keys.
-    Hash equality between the two IS the proof that count-min counters
-    form a commutative monoid under + (the property that lets 100 TB
-    pipelines maintain them per-partition/per-day and merge).
-
-    The probe workload is the CMS_TOP_K hottest parts by exact count
-    (deterministic tiebreak); each returns exact_cnt, the sketch
-    estimate (min over the 4 rows' counters — integer, never below the
-    truth), and the overestimate. The one-sided error contract
-    (overestimate >= 0 always; <= e*N/W per row with prob 1 - e^-D) is
-    pinned in tests/test_sketch.py.
-
-    Plan: the cell stream is a narrow 4x explode of hash arithmetic;
-    counters are ONE map-side-combinable aggregate bounded by
-    months x D x W rows on the wire (sketch-sized, not key-sized —
-    same argument as the HLL registers); the merge is a second
-    aggregate over that tiny table; probes ride a BROADCAST of the
-    top-k rows. The exact-count workload fit is the only key-sized
-    exchange and exists to audit the sketch — production reads probes
-    from outside."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        (F.col("l_partkey") % F.lit(_MOD32)).alias("x"),
-        F.month("l_shipdate").alias("mth"),
-    )
-    return cms_frequencies_frame(li)
-
-
-def _cell_structs() -> list[F.Column]:
-    """One (r, col) struct per CMS hash row for a frame's ``x`` column."""
-    out = []
-    for r, salt in enumerate(CMS_SALTS):
-        key = f"x ^ {salt}" if salt else "x"
-        col = f"CAST(({_hash32_spark_sql(key)}) DIV {1 << 22} AS BIGINT)"
-        out.append(
-            F.struct(F.lit(r).alias("r"), F.expr(col).alias("col"))
-        )
-    return out
-
-
-def cms_counter_state(keys: DataFrame) -> DataFrame:
-    """The count-min COUNTER STATE of a (x: long < 2^32) frame:
-    (r, col, c) rows, one map-side-combinable aggregate bounded by
-    D x W rows on the wire. This is the mergeable unit — two frames'
-    states SUM-merge into the union's state (the monoid law
-    agg_cms_frequencies attests cross-engine; the streaming
-    maintenance sink appends one of these per micro-batch)."""
-    return (
-        keys.select("x", F.explode(F.array(*_cell_structs())).alias("cell"))
-        .select("cell.r", "cell.col")
-        .groupBy("r", "col")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-
-
-def cms_frequencies_frame(li: DataFrame, top_k: int = CMS_TOP_K) -> DataFrame:
-    """Core of agg_cms_frequencies over any (x: long < 2^32, mth: int)
-    frame — split out so planted-key tests can drive the counter
-    algebra, the merge law, and the one-sided error contract."""
-    cells = li.select(
-        "x", "mth", F.explode(F.array(*_cell_structs())).alias("cell")
-    ).select("x", "mth", "cell.r", "cell.col")
-    monthly = cells.groupBy("mth", "r", "col").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    counters = (
-        monthly.groupBy("r", "col")
-        .agg(F.sum("c").cast("long").alias("c"))
-        .localCheckpoint()  # probed once per hash row below
-    )
-    top = (
-        li.groupBy("x")
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_cnt"))
-        .orderBy(F.desc("exact_cnt"), "x")
-        .limit(top_k)
-    )
-    probes = top.select(
-        "x",
-        "exact_cnt",
-        F.explode(F.array(*_cell_structs())).alias("cell"),
-    ).select("x", "exact_cnt", "cell.r", "cell.col")
-    return (
-        F.broadcast(probes)
-        .join(counters, ["r", "col"])
-        .groupBy("x", "exact_cnt")
-        .agg(F.min("c").alias("est_cnt"))
-        .select(
-            F.col("x").alias("part_key"),
-            "exact_cnt",
-            "est_cnt",
-            (F.col("est_cnt") - F.col("exact_cnt")).alias("overestimate"),
-        )
-        .orderBy(F.desc("exact_cnt"), "part_key")
-    )
-
-
 def hll_register_state(keys: DataFrame) -> DataFrame:
     """The HLL REGISTER STATE of an (x: long < 2^32) frame: (idx, r)
     rows, one map-side-combinable aggregate bounded by HLL_M (64) rows
@@ -371,7 +212,7 @@ def hll_register_state(keys: DataFrame) -> DataFrame:
     frames' states MAX-merge per register index into the union's state
     (the law agg_hll_registers' 'all' row attests cross-engine; the
     streaming maintenance sink appends one of these per micro-batch).
-    Unlike the rollup/CMS/candle monoids this one is IDEMPOTENT
+    Unlike the rollup/candle monoids this one is IDEMPOTENT
     (max ∘ max), so it absorbs retries even without batch_id dedup —
     the read side dedups anyway to keep one uniform sink contract."""
     rr = keys.select(_hash32_col("x").alias("h")).select(

@@ -249,37 +249,3 @@ def stream_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         incoming.join(corpus, "fp", "left_anti"), output_mode="append"
     )
     return out.orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# stream_quality_gate: the C4/Gopher quality gate on the ingest stream.
-# Registered (local=True) in text_queries.py, next to the shared oracle.
-# ---------------------------------------------------------------------------
-
-
-def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming form of text_quality_gate (same rules, same oracle —
-    the batch query's _gate_frame applied to the document stream):
-    each arriving micro-batch is gated by the five C4/Gopher boolean
-    rules, entirely STATELESS — the gate is narrow expressions over
-    one projected token array, so it rides the ingest stream with no
-    state store, no watermark, and no shuffle. This is how the gate
-    actually deploys at 100 TB: bolted onto the continuously-ingesting
-    pipeline (with stream_incremental_new_docs downstream), not as a
-    nightly batch over the accumulated corpus."""
-    from ..streaming.event_stream import stream_documents
-    from .text_queries import _gate_frame
-
-    docs = stream_documents(spark, sf_dir)
-    gated = _gate_frame(docs).select(
-        "doc_id",
-        "n_tokens",
-        "len_ok",
-        "mean_len_ok",
-        "stopword_ok",
-        "alpha_ok",
-        "rep_ok",
-        "keep",
-    )
-    out = run_available_now(gated, output_mode="append")
-    return out.orderBy("doc_id")

@@ -19,7 +19,6 @@ from ..operators.similarity import round6
 from ..sources.parquet_io import adaptive_partitions, load_table
 from .registry import query
 from .stage_cache import session_stage
-from .streaming_queries import stream_quality_gate
 
 _MARKER_SQL = {
     lang: "(" + ", ".join(f"'{w}'" for w in words) + ")"
@@ -641,14 +640,6 @@ def text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# The streaming twin shares this oracle, so it registers here: importing
-# this module from streaming_queries would register the text family
-# ahead of temporal_queries and reorder all_queries().
-query("stream_quality_gate", TEXT_QUALITY_GATE_ORACLE, local=True)(
-    stream_quality_gate
-)
-
-
 def _bigrams(toks):
     """whitespace-bigram array: zip_with over two shifted slices."""
     n = F.size(toks)
@@ -1137,279 +1128,14 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_lm_familiarity: self-trained capped-bigram LM quality scoring.
-# ---------------------------------------------------------------------------
-
-# Model capacity: top LM_TOP_K bigrams by corpus count (deterministic
-# tiebreak count DESC, w1, w2 — a total order over distinct bigrams, so
-# the LIMIT cut is identical cross-engine). The fixture vocabulary is
-# ~916 distinct bigrams at every SF, so 512 keeps BOTH the in-model and
-# OOV populations non-vacuous (pinned in tests/test_text_semantics.py).
-LM_TOP_K = 512
-# Score for a bigram outside the model: a flat penalty well below any
-# in-model score (the most negative in-model score is
-# ilog2(1) - ilog2(max c1) >= 1 - 63 = -62 in theory, but -16 ~ a
-# 1-in-65536 conditional — the standard "unknown" floor).
-LM_OOV_BITS = -16
-
-TEXT_LM_FAMILIARITY_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    pairs AS (
-        SELECT doc_id,
-               unnest(t[1:len(t)-1]) AS w1,
-               unnest(t[2:len(t)]) AS w2
-        FROM toks
-    ),
-    cnt AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
-    model AS (
-        SELECT w1, w2,
-               CAST(length(to_base(c2, 2))
-                    - length(to_base(CAST(SUM(c2) OVER (PARTITION BY w1)
-                                          AS BIGINT), 2))
-                    AS INT) AS bits
-        FROM cnt
-        ORDER BY c2 DESC, w1, w2
-        LIMIT {LM_TOP_K}
-    ),
-    scored AS (
-        SELECT p.doc_id,
-               COALESCE(m.bits, {LM_OOV_BITS}) AS bits,
-               CASE WHEN m.w1 IS NULL THEN 1 ELSE 0 END AS oov
-        FROM pairs p
-        LEFT JOIN model m ON p.w1 = m.w1 AND p.w2 = m.w2
-    ),
-    agg AS (
-        SELECT doc_id, COUNT(*) AS n_bigrams,
-               CAST(SUM(oov) AS BIGINT) AS n_oov,
-               CAST(SUM(bits) AS BIGINT) AS sum_bits
-        FROM scored GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(COALESCE(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-           COALESCE(a.n_oov, 0) AS n_oov,
-           COALESCE(a.sum_bits, 0) AS sum_bits,
-           CASE WHEN a.n_bigrams IS NULL THEN NULL
-                ELSE FLOOR(CAST(a.sum_bits AS DOUBLE) / a.n_bigrams
-                           * 1000000 + 0.5) / 1000000
-           END AS mean_bits
-    FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-    ORDER BY d.doc_id
-    """
-
-
-@query("text_lm_familiarity", TEXT_LM_FAMILIARITY_ORACLE, local=True)
-def text_lm_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style LM quality scoring, self-trained on the corpus: fit a
-    capped bigram model (top LM_TOP_K (512) bigrams by count, each carrying an
-    integer log2 conditional score ilog2(c(w1,w2)) - ilog2(c(w1)) where
-    ilog2(x) = floor(log2 x) + 1 = LENGTH(BIN(x)) — an exact STRING op,
-    so the score is integer-exact cross-engine where a float log2 would
-    hash-diverge at the FLOOR boundary), then score every document by
-    its mean per-bigram score with an LM_OOV_BITS (-16) penalty for bigrams
-    outside the model. Low mean_bits ~ high perplexity ~ the documents
-    a perplexity filter drops (CCNet / Gopher keep the low-perplexity
-    tail; the integer-bits approximation keeps the ORDERING those
-    filters need while staying hash-exact).
-
-    Scale shape: fit + score is TWO corpus passes (the same shape as
-    training-then-scoring any quality model). Fit: one vocab-sized
-    count shuffle; c(w1) rides a window over the SAME count subtree
-    (never a second corpus tokenization — the bm25_topk_postings
-    lesson); the top-K cut is TakeOrderedAndProject (per-partition
-    top-K, merge of K x partitions rows). Score: narrow bigram explode
-    -> BROADCAST join against the <= LM_TOP_K-row model (zipfian-hot
-    bigrams hit a broadcast hash table, so the skew that would sink a
-    shuffled join never ships a byte) -> one doc-keyed aggregate. At
-    100 TB the model stays a few KB; only the doc-keyed partial
-    aggregate shuffles, and it collapses map-side because documents
-    arrive contiguous."""
-    from pyspark.sql import Window
-
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs_expr = (
-        "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),"
-        " (a, b) -> struct(a AS w1, b AS w2))"
-    )
-    pairs = (
-        fan_out(docs)
-        .select("doc_id", F.split(F.col("text"), " ").alias("t"))
-        .select("doc_id", F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    cnt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    model = (
-        cnt.withColumn("c1", F.sum("c2").over(Window.partitionBy("w1")))
-        .orderBy(F.col("c2").desc(), "w1", "w2")
-        .limit(LM_TOP_K)
-        .select(
-            "w1", "w2",
-            (F.length(F.bin("c2")) - F.length(F.bin("c1")))
-            .cast("int").alias("bits"),
-        )
-    )
-    scored = pairs.join(F.broadcast(model), ["w1", "w2"], "left")
-    agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum(F.col("bits").isNull().cast("long")).alias("n_oov"),
-        F.sum(F.coalesce(F.col("bits"), F.lit(LM_OOV_BITS)).cast("long"))
-        .alias("sum_bits"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long")
-            .alias("n_bigrams"),
-            F.coalesce(F.col("n_oov"), F.lit(0)).cast("long").alias("n_oov"),
-            F.coalesce(F.col("sum_bits"), F.lit(0)).cast("long")
-            .alias("sum_bits"),
-            F.when(
-                F.col("n_bigrams").isNull(), F.lit(None).cast("double")
-            ).otherwise(
-                round6(F.col("sum_bits").cast("double") / F.col("n_bigrams"))
-            ).alias("mean_bits"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_duplicate_spans: cross-document duplicate-span accounting (the
-# exact-substring dedup signal of Lee et al., "Deduplicating Training
-# Data Makes Language Models Better" — arXiv:2107.06499 — bounded to
-# fixed-length token spans so it runs as three hash aggregates instead
-# of a suffix array).
+# text_dedup_span_removal: exact-substring dedup (Lee et al.,
+# "Deduplicating Training Data Makes Language Models Better" —
+# arXiv:2107.06499 §4 removes the duplicated spans from the training
+# text), bounded to fixed-length token spans so it runs as hash
+# aggregates instead of a suffix array.
 # ---------------------------------------------------------------------------
 
 SPAN_K = 8  # tokens per span; spans overlap (stride 1)
-
-TEXT_DUPLICATE_SPANS_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    spans AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   range(1, len(t) - {SPAN_K - 2}),
-                   i -> array_to_string(t[i:i + {SPAN_K - 1}], ' '))) AS s
-        FROM toks
-    ),
-    occ AS (
-        SELECT doc_id, s, COUNT(*) AS n_occ
-        FROM spans GROUP BY doc_id, s
-    ),
-    wd AS (
-        SELECT doc_id, n_occ,
-               COUNT(*) OVER (PARTITION BY s) AS n_docs
-        FROM occ
-    ),
-    agg AS (
-        SELECT doc_id,
-               CAST(SUM(n_occ) AS BIGINT) AS n_spans,
-               COUNT(*) AS n_distinct_spans,
-               CAST(SUM(CASE WHEN n_docs >= 2 THEN n_occ ELSE 0 END)
-                    AS BIGINT) AS n_dup_spans
-        FROM wd GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(a.n_spans, 0) AS n_spans,
-           CAST(COALESCE(a.n_distinct_spans, 0) AS BIGINT)
-               AS n_distinct_spans,
-           COALESCE(a.n_dup_spans, 0) AS n_dup_spans,
-           CASE WHEN a.n_spans IS NULL THEN NULL
-                ELSE FLOOR(CAST(a.n_dup_spans AS DOUBLE) / a.n_spans
-                           * 1000000 + 0.5) / 1000000
-           END AS dup_fraction
-    FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-    ORDER BY d.doc_id
-    """
-
-
-@query("text_duplicate_spans", TEXT_DUPLICATE_SPANS_ORACLE, local=True)
-def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicate-span accounting: every overlapping
-    SPAN_K (8)-token span, counted across the corpus; a span is DUPLICATED
-    when it appears in >= 2 distinct documents. Reports, per document,
-    total spans, distinct spans, spans that are cross-document
-    duplicates, and the duplicated fraction — the signal behind
-    exact-substring dedup (Lee et al. 2021): documents dominated by
-    boilerplate shared with other documents score high and get trimmed
-    or dropped.
-
-    Scale shape: spans are hashed to int64 (xxhash64) BEFORE any
-    exchange, so ~8 B per span rides the shuffles instead of the
-    ~50-byte span string (the dedup_ngram_jaccard trick: every output
-    is a COUNT or a ratio of counts, so each engine may hash with its
-    own function — DuckDB keeps strings — and results agree unless
-    xxhash64 collides inside one span-key's tiny row group, P ~ n²/2⁶⁵).
-    Three aggregates, in the bm25_topk_postings pattern: (1) the
-    (span, doc) occurrence count — one corpus-sized shuffle with
-    map-side combine collapsing within-doc repeats; (2) the
-    documents-per-span count as a WINDOW over that same subtree (one
-    span-keyed exchange of the already-collapsed table, never a
-    re-tokenization or a join-back); (3) the doc-keyed rollup. Short
-    documents (< SPAN_K tokens) never enter the window — they are
-    re-attached by a doc-keyed left join at the end, so there is no
-    all-NULL-key window partition to skew stage 2."""
-    from pyspark.sql import Window
-
-    from ..sources.parquet_io import fan_out
-
-    docs = load_table(spark, sf_dir, "documents")
-    span_expr = (
-        f"transform(sequence(1, size(t) - {SPAN_K - 1}),"
-        f" i -> xxhash64(concat_ws(' ', slice(t, i, {SPAN_K}))))"
-    )
-    spans = (
-        fan_out(docs)
-        .select("doc_id", F.split(F.col("text"), " ").alias("t"))
-        # pre-filter short docs: sequence(1, n) with n < 1 would count
-        # DOWN (Spark infers step -1), not produce an empty array
-        .filter(F.size("t") >= SPAN_K)
-        .select("doc_id", F.explode(F.expr(span_expr)).alias("s"))
-    )
-    occ = spans.groupBy("doc_id", "s").agg(F.count(F.lit(1)).alias("n_occ"))
-    wd = occ.withColumn(
-        "n_docs", F.count(F.lit(1)).over(Window.partitionBy("s"))
-    )
-    agg = wd.groupBy("doc_id").agg(
-        F.sum("n_occ").alias("n_spans"),
-        F.count(F.lit(1)).alias("n_distinct_spans"),
-        F.sum(F.when(F.col("n_docs") >= 2, F.col("n_occ")).otherwise(0))
-        .alias("n_dup_spans"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n_spans"), F.lit(0)).cast("long")
-            .alias("n_spans"),
-            F.coalesce(F.col("n_distinct_spans"), F.lit(0)).cast("long")
-            .alias("n_distinct_spans"),
-            F.coalesce(F.col("n_dup_spans"), F.lit(0)).cast("long")
-            .alias("n_dup_spans"),
-            F.when(
-                F.col("n_spans").isNull(), F.lit(None).cast("double")
-            ).otherwise(
-                round6(F.col("n_dup_spans").cast("double") / F.col("n_spans"))
-            ).alias("dup_fraction"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_dedup_span_removal: the REWRITE half of exact-substring dedup
-# (Lee et al. 2021, arXiv:2107.06499 §4 removes the duplicated spans
-# from the training text — text_duplicate_spans above only SCORES
-# them).
-# ---------------------------------------------------------------------------
 
 TEXT_DEDUP_SPAN_REMOVAL_ORACLE = f"""
     WITH toks AS (
@@ -1463,8 +1189,7 @@ TEXT_DEDUP_SPAN_REMOVAL_ORACLE = f"""
 
 @query("text_dedup_span_removal", oracle=TEXT_DEDUP_SPAN_REMOVAL_ORACLE)
 def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring span REMOVAL — the rewrite that follows
-    text_duplicate_spans' scoring (Lee et al. 2021: training text loses
+    """Exact-substring span REMOVAL (Lee et al. 2021: training text loses
     substrings long enough to be memorizable that the corpus already
     contains elsewhere): every overlapping SPAN_K (8)-token span seen
     in >= 2 distinct documents keeps exactly ONE canonical copy (the
@@ -1475,12 +1200,12 @@ def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     off-by-one in span coverage breaks the hash, not just a count).
 
     Scale shape: spans are hashed to int64 (xxhash64) before any
-    exchange (~8 B rides the shuffles — the text_duplicate_spans
-    trick; span identity, keeper election, and removal positions all
-    key on the hash, so engines agree unless xxhash64 collides within
-    one span's doc set, P ~ n²/2⁶⁵). Start positions travel THROUGH
-    the (span, doc) aggregate as a collect_list — never a join back
-    onto the corpus-sized span stream — so the plan is: one
+    exchange (~8 B rides the shuffles; span identity, keeper election,
+    and removal positions all key on the hash, so engines agree unless
+    xxhash64 collides within one span's doc set, P ~ n²/2⁶⁵). Start
+    positions travel THROUGH the (span, doc) aggregate as a
+    collect_list — never a join back onto the corpus-sized span
+    stream — so the plan is: one
     (span, doc) combine-collapsed aggregate, one span-keyed window
     (n_docs + keeper over the same collapsed subtree), one doc-keyed
     collect of removal starts, one doc-keyed left join back to
@@ -1555,384 +1280,4 @@ def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "n_tokens", "n_removed", "removed_ppm",
                 "text_rewritten")
         .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_html_extract: HTML boilerplate/markup extraction (r16, VERDICT
-# r15 item 4 — the last big absent LLM-pipeline stage: real pretraining
-# corpora start as crawled HTML, and tags→text + nav/footer/script
-# stripping is the stage upstream of every gate this file already has).
-# Follows the JPEG-codec evidence pattern (plans/multimodal_queries.py
-# media_jpeg_real_decode): stage 1 SYNTHESIZES a deterministic HTML
-# document from each documents row with pure column arithmetic, stage 2
-# runs the REAL generic extractor (operators/html.py — regex block
-# segmentation, tag stripping, link-density/length signals) on it, and
-# the DuckDB oracle predicts the full output — including the extracted
-# text itself — from the same slicing arithmetic, so any defect
-# anywhere in synthesis → noise-strip → block parse → tag strip →
-# signal math → keep rule breaks the hash.
-# ---------------------------------------------------------------------------
-
-TEXT_HTML_EXTRACT_ORACLE = """
-    WITH w AS (
-        SELECT doc_id, string_split(text, ' ') AS ws,
-               len(string_split(text, ' ')) AS n
-        FROM documents
-    ),
-    blocks AS (
-        -- ord 0: nav — four linked words, spaces between anchors are
-        -- the only non-link chars, so link density always > 1/2
-        SELECT doc_id, 0 AS ord,
-               ws[(doc_id*7) % n + 1] || ' ' || ws[(doc_id*7+3) % n + 1]
-               || ' ' || ws[(doc_id*7+6) % n + 1] || ' '
-               || ws[(doc_id*7+9) % n + 1] AS ptext,
-               CAST(length(ws[(doc_id*7) % n + 1])
-                    + length(ws[(doc_id*7+3) % n + 1])
-                    + length(ws[(doc_id*7+6) % n + 1])
-                    + length(ws[(doc_id*7+9) % n + 1]) AS BIGINT) AS link_chars
-        FROM w
-        UNION ALL
-        -- ord 1: heading — always under the length floor
-        SELECT doc_id, 1, 'doc ' || CAST(doc_id AS VARCHAR),
-               CAST(0 AS BIGINT)
-        FROM w
-        UNION ALL
-        -- ord 2..4: paragraphs — L-word slices with one inline anchor
-        SELECT doc_id, 2 + k,
-               array_to_string(ws[s+1 : s+L], ' '),
-               CAST(length(ws[s + r + 1]) AS BIGINT)
-        FROM (
-            SELECT doc_id, ws, n, k,
-                   3 + (doc_id + k) % 5 AS L,
-                   (doc_id + k*11) % (n - (3 + (doc_id + k) % 5) + 1) AS s,
-                   (doc_id + 3*k) % (3 + (doc_id + k) % 5) AS r
-            FROM w, (VALUES (0), (1), (2)) ks(k)
-        )
-        UNION ALL
-        -- ord 5: footer — always under the length floor
-        SELECT doc_id, 5, '(c) 2026 about', CAST(5 AS BIGINT) FROM w
-    ),
-    sig AS (
-        SELECT doc_id, ord, ptext,
-               CAST(length(ptext) AS BIGINT) AS chars,
-               CASE WHEN length(ptext) > 0
-                    THEN (link_chars * 1000000) // length(ptext)
-                    ELSE 1000000 END AS ppm
-        FROM blocks
-    ),
-    kept AS (
-        SELECT *, (chars >= 20 AND ppm <= 500000) AS keep FROM sig
-    )
-    SELECT doc_id,
-           CAST(6 AS INT) AS n_blocks,
-           CAST(COUNT(*) FILTER (WHERE keep) AS INT) AS n_kept,
-           CAST(COALESCE(SUM(chars) FILTER (WHERE keep), 0) AS BIGINT)
-               AS kept_chars,
-           CAST(COALESCE(MAX(ppm) FILTER (WHERE keep), 0) AS BIGINT)
-               AS max_kept_ppm,
-           COALESCE(string_agg(ptext, chr(10) ORDER BY ord)
-                        FILTER (WHERE keep), '') AS kept_text
-    FROM kept GROUP BY doc_id ORDER BY doc_id
-    """
-
-
-@query("text_html_extract", TEXT_HTML_EXTRACT_ORACLE, local=True)
-def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markup→text boilerplate extraction under driver-style check:
-    each documents row synthesizes a deterministic HTML page — a <nav>
-    of 4 linked words (positions (7·id + 3j) mod n), an <h1>, three
-    <p> blocks (L = 3 + (id+k) mod 5 words starting at (id + 11k) mod
-    (n−L+1), one word anchor-wrapped at offset (id + 3k) mod L), a
-    mid-document <script> whose body contains both a bare '<' and a
-    literal '</p>' string, and a short linked <footer> — then runs the
-    REAL generic extractor from operators/html.py over it: noise
-    elements stripped wholesale BEFORE block segmentation, block-level
-    elements collected in document order, inline tags stripped, and
-    the jusText-style two-signal keep rule (>= 20 plain chars, link
-    density <= 500000 ppm) applied. By construction the nav always
-    fails density, the h1/footer always fail length, and the script
-    must vanish without corrupting the block walk, so the kept set is
-    exactly the qualifying paragraphs and the oracle predicts every
-    output column — kept_text included — from slicing arithmetic.
-
-    Scale shape: synthesis and extraction are ONE chain of array/regex
-    column expressions (operators/html.py — no UDF, no explode, no
-    shuffle); the scan is map-only linear like text_quality_gate, and
-    the only exchange is the output ORDER BY. At 100 TB this runs at
-    parquet-scan speed with whole-stage codegen end to end."""
-    from ..operators.html import extract_content
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = F.col("doc_id")
-    ws = F.split(F.col("text"), " ")
-    n = F.size(ws)
-
-    def word(pos):
-        return F.element_at(ws, ((pos % n) + 1).cast("int"))
-
-    def anchor(txt):
-        return F.concat(F.lit('<a href="/x">'), txt, F.lit("</a>"))
-
-    nav = F.concat(
-        F.lit("<nav>"),
-        F.concat_ws(" ", *[anchor(word(d * 7 + j * 3)) for j in range(4)]),
-        F.lit("</nav>"),
-    )
-    h1 = F.concat(F.lit("<h1>doc "), d.cast("string"), F.lit("</h1>"))
-
-    def para(k: int):
-        L = (F.lit(3) + (d + F.lit(k)) % 5).cast("int")
-        s = ((d + F.lit(k * 11)) % (n - L + 1)).cast("int")
-        r = ((d + F.lit(3 * k)) % L).cast("int")
-        wrapped = F.transform(
-            F.slice(ws, s + 1, L),
-            lambda x, i: F.when(i == r, anchor(x)).otherwise(x),
-        )
-        return F.concat(F.lit("<p>"), F.concat_ws(" ", wrapped), F.lit("</p>"))
-
-    footer = F.lit('<footer>(c) 2026 <a href="/about">about</a></footer>')
-    script = F.lit(
-        '<script type="text/javascript">var x = 1;'
-        ' if (x < 2) { x = "</p>"; }</script>'
-    )
-    html = F.concat_ws("\n", nav, h1, para(0), para(1), script, para(2), footer)
-
-    sig = extract_content(html)
-    return (
-        docs.select(
-            "doc_id",
-            sig["n_blocks"].alias("n_blocks"),
-            sig["n_kept"].alias("n_kept"),
-            sig["kept_chars"].alias("kept_chars"),
-            sig["max_kept_ppm"].alias("max_kept_ppm"),
-            sig["kept_text"].alias("kept_text"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# text_phrase_search: positional phrase retrieval with a self-derived
-# query workload.
-# ---------------------------------------------------------------------------
-
-PHRASE_TOP_Q = 4   # query workload: the corpus's 4 hottest bigrams
-PHRASE_TOP_K = 5   # docs returned per phrase
-
-TEXT_PHRASE_SEARCH_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    big AS (
-        SELECT doc_id,
-               unnest(CASE WHEN len(t) >= 2 THEN
-                   list_transform(generate_series(1, len(t) - 1),
-                                  i -> t[i] || ' ' || t[i+1])
-               ELSE [] END) AS phrase
-        FROM toks
-    ),
-    occ AS (
-        SELECT phrase, doc_id, COUNT(*) AS n_occurrences
-        FROM big GROUP BY phrase, doc_id
-    ),
-    tot AS (
-        SELECT phrase,
-               CAST(SUM(n_occurrences) AS BIGINT) AS phrase_total,
-               COUNT(*) AS n_docs
-        FROM occ GROUP BY phrase
-    ),
-    top AS (
-        SELECT * FROM tot
-        ORDER BY phrase_total DESC, phrase LIMIT {PHRASE_TOP_Q}
-    ),
-    ranked AS (
-        SELECT o.phrase, t.phrase_total, t.n_docs, o.doc_id,
-               o.n_occurrences,
-               ROW_NUMBER() OVER (PARTITION BY o.phrase
-                                  ORDER BY o.n_occurrences DESC, o.doc_id)
-                   AS rank
-        FROM occ o JOIN top t ON o.phrase = t.phrase
-    )
-    SELECT phrase, phrase_total, n_docs, doc_id, n_occurrences, rank
-    FROM ranked WHERE rank <= {PHRASE_TOP_K}
-    ORDER BY phrase, rank
-    """
-
-
-@query("text_phrase_search", TEXT_PHRASE_SEARCH_ORACLE, local=True)
-def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Positional phrase search (the exact-phrase complement of BM25's
-    bag-of-words ranking): adjacency is captured by materializing word
-    BIGRAMS from one corpus tokenization (shingles_from_tokens — the
-    dedup shingle machinery reused at n=2), the query workload is
-    self-derived as the PHRASE_TOP_Q (4) globally hottest bigrams, and
-    each phrase returns its PHRASE_TOP_K (5) top documents by
-    occurrence count with deterministic tie-breaks (count DESC,
-    doc_id).
-
-    Plan: the corpus is tokenized ONCE into per-(phrase, doc)
-    occurrence counts — one map-side-combinable aggregate; phrase
-    totals and the top-Q cut derive from THAT table (never a second
-    corpus scan): totals are a phrase-sized aggregate, the cut is
-    TakeOrderedAndProject, and the cut result rides a BROADCAST join
-    back onto the counts, so the final rank window partitions only the
-    ~Q surviving phrases' rows. At 100 TB the only corpus-sized
-    exchange is the occurrence aggregate (bounded by distinct
-    (bigram, doc), with map-side partials); everything downstream is
-    query-workload-sized. For a FIXED external phrase list the same
-    pipeline drops the fit half — filter the bigram stream by the
-    broadcast list before aggregating."""
-    return phrase_search_frame(load_table(spark, sf_dir, "documents"))
-
-
-def phrase_search_frame(docs: DataFrame,
-                        top_q: int = PHRASE_TOP_Q,
-                        top_k: int = PHRASE_TOP_K) -> DataFrame:
-    """Core of text_phrase_search over any (doc_id, text) frame — split
-    out so planted-corpus tests can drive the ranking and adjacency
-    semantics directly."""
-    from ..operators.dedup import shingles_from_tokens
-    from ..sources.parquet_io import fan_out
-
-    big = (
-        fan_out(docs)
-        .withColumn("_toks", TX.tokens(F.col("text")))
-        .select(
-            "doc_id",
-            F.explode(shingles_from_tokens(F.col("_toks"), 2)).alias("phrase"),
-        )
-    )
-    # occ feeds both the workload fit (tot -> top) and the retrieval
-    # join; localCheckpoint (the graph lineage pattern)
-    # materializes the one corpus-sized aggregate instead of scanning
-    # and re-aggregating the corpus once per consumer
-    occ = big.groupBy("phrase", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_occurrences")
-    ).localCheckpoint()
-    tot = occ.groupBy("phrase").agg(
-        F.sum("n_occurrences").cast("long").alias("phrase_total"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-    top = tot.orderBy(F.desc("phrase_total"), "phrase").limit(top_q)
-    from pyspark.sql import Window
-
-    rank = F.row_number().over(
-        Window.partitionBy("phrase").orderBy(
-            F.desc("n_occurrences"), "doc_id"
-        )
-    )
-    return (
-        occ.join(F.broadcast(top), "phrase")
-        .withColumn("rank", rank)
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "phrase", "phrase_total", "n_docs", "doc_id",
-            "n_occurrences", "rank",
-        )
-        .orderBy("phrase", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# decon_ngram_contamination: per-TRAIN-doc n-gram overlap rate vs the
-# held-out split — the GPT-3/PaLM-style decontamination direction
-# (filter TRAIN docs), complementing decon_test_train_overlap's
-# per-test winnowing report.
-# ---------------------------------------------------------------------------
-
-# production pipelines use 8-13-gram exact overlap (GPT-3 appendix C
-# used 13-grams); the fixture corpus is short word-soup where >=5-grams
-# almost never collide, so the CONTRACT here fixes n=4 — the arithmetic
-# and plan shape are n-independent
-DECON_NGRAM_N = 4
-DECON_CONTAMINATED_PPM = 100_000  # >=10% of a doc's grams seen in test
-
-DECON_NGRAM_CONTAMINATION_ORACLE = f"""
-    WITH t AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-    g AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(l) - {DECON_NGRAM_N - 2}),
-                      i -> array_to_string(l[i:i+{DECON_NGRAM_N - 1}], ' ')))
-                   AS gram
-        FROM t WHERE len(l) >= {DECON_NGRAM_N}
-    ),
-    test_set AS (SELECT DISTINCT gram FROM g WHERE doc_id < 250),
-    tr AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-               CAST(SUM(CASE WHEN gram IN (SELECT gram FROM test_set)
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-        FROM g WHERE doc_id >= 250 GROUP BY doc_id
-    )
-    SELECT doc_id AS train_doc, n_grams, n_hits,
-           CAST(n_hits * 1000000 // n_grams AS BIGINT) AS contamination_ppm,
-           (n_hits * 1000000 // n_grams >= {DECON_CONTAMINATED_PPM})
-               AS contaminated
-    FROM tr
-    ORDER BY train_doc
-    """
-
-
-@query("decon_ngram_contamination", DECON_NGRAM_CONTAMINATION_ORACLE, local=True)
-def decon_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-TRAIN-document n-gram contamination rate against the
-    held-out split (test = doc_id < 250, the corpus convention shared
-    with decon_test_train_overlap): the fraction of a training doc's
-    4-gram OCCURRENCES (DECON_NGRAM_N) that appear anywhere in the
-    test set's distinct 4-gram vocabulary, in exact ppm, plus the drop
-    flag at DECON_CONTAMINATED_PPM (10%). This is the direction
-    production decontamination
-    actually filters (drop/trim the TRAIN doc; the winnowing query
-    reports the per-test-doc view) — GPT-3-style exact n-gram overlap
-    rather than fingerprint sampling.
-
-    Plan: grams are emitted by a narrow sequence/slice transform (no
-    python), the test vocabulary is one distinct projection, and the
-    contamination count is a LEFT SEMI join from train gram
-    occurrences into that vocabulary followed by a doc-keyed count —
-    the gram tables are the only shuffled data, text never shuffles.
-    At 100 TB the test vocabulary (one eval suite) is millions of
-    grams — broadcastable — so the scan over train grams is
-    shuffle-free in the regime that matters; the fixture-scale plan
-    keeps the general shuffled-semi-join shape."""
-    docs = load_table(spark, sf_dir, "documents")
-    n = DECON_NGRAM_N
-    toked = docs.select(
-        "doc_id", TX.tokens(F.col("text")).alias("l")
-    ).filter(F.size("l") >= n)
-    grams = toked.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(l) - {n - 1}),"
-                f" i -> concat_ws(' ', slice(l, i, {n})))"
-            )
-        ).alias("gram"),
-    )
-    test_set = grams.filter(F.col("doc_id") < 250).select("gram").distinct()
-    train = grams.filter(F.col("doc_id") >= 250)
-    totals = train.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_grams")
-    )
-    hits = (
-        train.join(test_set, "gram", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    return (
-        totals.join(hits, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias("train_doc"),
-            "n_grams",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-            .alias("n_hits"),
-            F.expr(
-                "coalesce(n_hits, 0) * 1000000 DIV n_grams"
-            ).cast("long").alias("contamination_ppm"),
-            (
-                F.expr("coalesce(n_hits, 0) * 1000000 DIV n_grams")
-                >= DECON_CONTAMINATED_PPM
-            ).alias("contaminated"),
-        )
-        .orderBy("train_doc")
     )

@@ -464,48 +464,6 @@ def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame:
     return merge_rollup_states(log.drop("batch_id"))
 
 
-def streaming_cms_append(
-    keys: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Sketch-state maintenance under ingest — the count-min twin of
-    ``streaming_rollup_append``: for every micro-batch of keys
-    (column ``x``), compute the batch's D x W counter state
-    (plans.sketch_queries.cms_counter_state) and APPEND it to the
-    state log; serving merges on read. Returns processed batch ids.
-
-    Same append-only rationale as the rollup log (lost-update-free
-    under retries, batch_id rides along for exactly-once dedup), and
-    the slice is even smaller: at most D x W = 4096 counter rows per
-    batch regardless of batch size — a frequency sketch over an
-    unbounded stream maintained without ever re-touching history."""
-    from ..plans.sketch_queries import cms_counter_state
-
-    return _run_state_append(
-        keys, state_path, cms_counter_state, checkpoint, after_write
-    )
-
-
-def read_cms_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming count-min state log: SUM every
-    appended counter slice per (r, col). Identical output contract to
-    batch ``cms_counter_state`` over the full key log (pinned in
-    tests/test_streaming.py). Retry idempotence mirrors
-    ``read_rollup_state``: a retried foreachBatch re-appends the SAME
-    batch_id's identical slice, so one row per (batch_id, r, col)
-    before the SUM keeps the read side exactly-once; the dedup
-    shuffles only counter rows (batches x D x W), never keys."""
-    log = spark.read.parquet(state_path).dropDuplicates(
-        ["batch_id", "r", "col"]
-    )
-    return (
-        log.groupBy("r", "col")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
 def streaming_candle_append(
     events: DataFrame,
     state_path: str,
@@ -513,10 +471,10 @@ def streaming_candle_append(
     after_write: Any = None,
 ) -> list[int]:
     """Candle maintenance under tick ingest — the OHLC member of the
-    mergeable-state family (rollup sums, count-min counters, candles):
+    mergeable-state family (rollup sums, candles, HLL registers):
     each micro-batch appends its (type, hour) candle slice with
     attributed open/close keys; serving merges on read. Same
-    append-only / batch_id rationale as the other two sinks."""
+    append-only / batch_id rationale as the other sinks."""
     from ..plans.event_windows import candle_state
 
     return _run_state_append(
@@ -544,10 +502,10 @@ def streaming_hll_append(
     after_write: Any = None,
 ) -> list[int]:
     """Distinct-count sketch maintenance under ingest — the HLL member
-    of the mergeable-state family (rollup sums, count-min counters,
-    candles, HLL registers): each micro-batch of keys (column ``x``)
-    appends its (idx, r) register slice (≤ 64 rows regardless of batch
-    size); serving MAX-merges on read. Same append-only / batch_id
+    of the mergeable-state family (rollup sums, candles, HLL
+    registers): each micro-batch of keys (column ``x``) appends its
+    (idx, r) register slice (≤ 64 rows regardless of batch size);
+    serving MAX-merges on read. Same append-only / batch_id
     rationale as the other sinks, with one bonus: max-merge is
     idempotent, so this state is retry-safe even before the read-side
     dedup."""

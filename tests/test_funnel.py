@@ -64,53 +64,6 @@ def test_funnel_strict_order_and_window(spark, tmp_path):
     assert out["purchase"][1] == 250
 
 
-def test_markov_transitions_planted(spark, tmp_path):
-    """Hand-checkable transition matrix: u1's a->a->b->a and u2's b->b
-    yield known counts; transitions never cross users; ppm rows are
-    exact integer divisions and sum to <= 1e6 per from_type."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        markov_event_transitions,
-    )
-
-    rows = [
-        (1, "a", 0), (1, "a", 10), (1, "b", 20), (1, "a", 30),
-        (2, "b", 0), (2, "b", 10),
-    ]
-    out = [tuple(r) for r in markov_event_transitions(
-        spark, _write_events(spark, tmp_path, rows)
-    ).collect()]
-    # u1 transitions: a->a, a->b, b->a ; u2: b->b. No cross-user b->?
-    # from u1's trailing 'a' to u2's leading 'b'.
-    assert out == [
-        ("a", "a", 1, 2, 500000),
-        ("a", "b", 1, 2, 500000),
-        ("b", "a", 1, 2, 500000),
-        ("b", "b", 1, 2, 500000),
-    ]
-    per_from: dict[str, int] = {}
-    for f, _t, _n, _tot, ppm in out:
-        per_from[f] = per_from.get(f, 0) + ppm
-    assert all(v <= 1_000_000 for v in per_from.values())
-
-
-def test_path_trigrams_planted(spark, tmp_path):
-    """Trigrams never cross users and count overlapping windows: u1's
-    a,b,a,b yields (a,b,a) and (b,a,b) once each; u2's c,c,c,c yields
-    (c,c,c) twice."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        path_trigrams_top,
-    )
-
-    rows = [
-        (1, "a", 0), (1, "b", 1), (1, "a", 2), (1, "b", 3),
-        (2, "c", 0), (2, "c", 1), (2, "c", 2), (2, "c", 3),
-    ]
-    out = {(r["e1"], r["e2"], r["e3"]): r["n"] for r in path_trigrams_top(
-        spark, _write_events(spark, tmp_path, rows)
-    ).collect()}
-    assert out == {("c", "c", "c"): 2, ("a", "b", "a"): 1, ("b", "a", "b"): 1}
-
-
 def test_scd2_matches_python_reference_generative(spark, tmp_path):
     """Generative equality of the SCD2 compaction against an
     independent pure-Python run-compactor over random event sequences

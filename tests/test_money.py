@@ -67,41 +67,3 @@ def test_exact_std_matches_formula(spark):
     assert abs(out - want) < 1e-12
 
 
-def test_rfm_segments_quartiles_and_labels(spark):
-    """Planted 8-customer book pins the NTILE quartile arithmetic and
-    the segment labels: with 8 customers each quartile holds exactly 2,
-    the best customer (most recent, most orders, most spend) lands in
-    (1,1,1)='champions', the worst recency+frequency in r_q=f_q=4 =
-    'hibernating', and segment totals conserve the cents sum."""
-    import datetime
-
-    from erathia_market_etl_spark.plans.relational import mart_rfm_segments
-
-    rows = []
-    oid = 0
-    # customer k (1..8): k orders, last order day k, totalprice 10*k
-    for k in range(1, 9):
-        for j in range(k):
-            oid += 1
-            rows.append(
-                (oid, k, "O", 10.0 * k,
-                 datetime.date(2024, 1, k), "1-URGENT")
-            )
-    df = spark.createDataFrame(
-        rows, "o_orderkey long, o_custkey long, o_orderstatus string, "
-              "o_totalprice double, o_orderdate date, o_orderpriority string",
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.parquet(d + "/orders.parquet")
-        out = mart_rfm_segments(spark, d).collect()
-    seg = {(r["r_q"], r["f_q"], r["m_q"]): r for r in out}
-    # customer 8: latest, most orders, most spend -> all quartile 1
-    assert seg[(1, 1, 1)]["segment"] == "champions"
-    assert seg[(1, 1, 1)]["n_customers"] == 2  # customers 7 and 8
-    # customer 1: oldest, fewest, least -> all quartile 4
-    assert seg[(4, 4, 4)]["segment"] == "hibernating"
-    total = sum(r["monetary_cents_total"] for r in out)
-    assert total == sum(1000 * k * k for k in range(1, 9))
-    assert sum(r["n_customers"] for r in out) == 8

@@ -31,10 +31,6 @@ def final_plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_of(df) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def test_silver_clean_pushes_filters_to_scan(spark):
     df = QUERIES["silver_clean_fact"](spark, SF_T2)
     plan = plan_of(df)
@@ -446,81 +442,12 @@ def test_window_running_total_single_window_pass(spark):
     assert "sum(" in w_node and "count(1)" in w_node, w_node
 
 
-def test_fuzzy_block_cap_is_two_phase_and_scan_pruned(spark):
-    """dedup_fuzzy_prefix_block's scale contract: the per-block cap must
-    run as a two-phase WindowGroupLimit (Partial before the block
-    exchange, Final after — a skewed boilerplate prefix is cut to 64
-    rows map-side, so the block shuffle never carries the full block),
-    the documents scan must be pruned to (doc_id, text), and the edit
-    distance must evaluate inline in the join (one pass, no re-join)."""
-    from erathia_market_etl_spark.plans.dedup_queries import (
-        dedup_fuzzy_prefix_block,
-    )
-
-    plan = plan_of(dedup_fuzzy_prefix_block(spark, SF_T2))
-    assert plan.count("WindowGroupLimit") >= 2, plan  # Partial + Final
-    assert "Partial" in plan and "Final" in plan
-    schema = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-    cols = {c.split(":")[0] for c in schema.group(1).split(",")}
-    assert cols == {"doc_id", "text"}, cols
-    assert plan.count("levenshtein") >= 1, plan
-
-
-def test_gap_fill_spine_is_narrow_single_window(spark):
-    """timeseries_gap_fill's scale contract: the dense spine comes from
-    a Generate(explode(sequence)) directly over the bounds aggregate —
-    NO exchange between them (the spine is born narrow, never a
-    driver-side calendar) — and LOCF is exactly ONE Window node. The
-    events scan reads only (ts, event_type, value)."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        timeseries_gap_fill,
-    )
-
-    plan = plan_of(timeseries_gap_fill(spark, SF_T2))
-    assert plan.count("Window ") == 1, plan
-    assert "explode(sequence(" in plan.replace("\n", ""), plan
-    gen_idx = plan.index("Generate explode")
-    agg_idx = plan.index("HashAggregate", gen_idx)
-    assert "Exchange" not in plan[gen_idx:agg_idx], plan[gen_idx:agg_idx]
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
-        cols = {c.split(":")[0] for c in m.group(1).split(",")}
-        assert cols <= {"ts", "event_type", "value"}, cols
-
-
-def test_histogram_equi_depth_no_single_partition_over_corpus(spark):
-    """histogram_equi_depth inherits text_length_trim's rank-
-    decomposition contract: the per-row rank window partitions BY value
-    (distributed), and any SinglePartition exchange aggregates before
-    exchanging (the <=50-row per-value count table), never sits over
-    the lineitem scan."""
-    from erathia_market_etl_spark.plans.profile_queries import (
-        histogram_equi_depth,
-    )
-
-    plan = plan_of(histogram_equi_depth(spark, SF_T2))
-    assert re.search(
-        r"row_number\(\) windowspecdefinition\(v#\d+", plan
-    ), plan
-    lines = plan.splitlines()
-    sp = [i for i, ln in enumerate(lines) if "Exchange SinglePartition" in ln]
-    for i in sp:
-        below = "\n".join(lines[i + 1:])
-        agg_pos = below.find("HashAggregate")
-        scan_pos = below.find("FileScan")
-        assert 0 <= agg_pos < scan_pos, (
-            f"SinglePartition exchange not fed by an aggregate:\n{plan}"
-        )
-
-
 def test_sketch_exchanges_are_state_sized(spark):
     """The mergeable-sketch selling point must be visible in the plan:
-    both the HLL register aggregate and the CMS counter aggregate plan
-    as two-phase HashAggregates (map-side partial BEFORE the exchange),
-    so each map partition ships at most state-sized rows, and the CMS
-    probe join is a BroadcastHashJoin (the top-k workload never
-    shuffles the counters)."""
+    the HLL register aggregate plans as a two-phase HashAggregate
+    (map-side partial BEFORE the exchange), so each map partition ships
+    at most state-sized rows."""
     from erathia_market_etl_spark.plans.sketch_queries import (
-        agg_cms_frequencies,
         agg_hll_registers,
     )
 
@@ -529,10 +456,6 @@ def test_sketch_exchanges_are_state_sized(spark):
     # consumers), so the visible two-phase aggregate is the MERGE over
     # the register table: partial_max(r) before the idx exchange
     assert re.search(r"partial_max\(r#", hll_plan), hll_plan
-
-    cms_plan = plan_of(agg_cms_frequencies(spark, SF_T2))
-    assert "partial_count" in cms_plan, cms_plan
-    assert "BroadcastHashJoin" in cms_plan, cms_plan
 
 
 def test_funnel_reuses_user_partitioning(spark):
@@ -550,19 +473,6 @@ def test_funnel_reuses_user_partitioning(spark):
     for m in re.finditer(r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"
                          r" \[([a-z_#0-9]+)\]", plan):
         assert m.group(1).startswith("user_id"), m.group(0)
-
-
-def test_sample_k_per_group_uses_window_group_limit(spark):
-    """The rn <= k cut must push into the window sort (WindowGroupLimit)
-    so each map task keeps a running top-k per source before the
-    exchange — the sim_topk_batch rank-cut discipline applied to
-    sampling."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        sample_k_per_group,
-    )
-
-    plan = plan_of(sample_k_per_group(spark, SF_T2))
-    assert "WindowGroupLimit" in plan, plan
 
 
 def test_aqe_skew_join_split_fires(spark):
@@ -628,24 +538,6 @@ def test_aqe_skew_join_split_fires(spark):
                 conf.unset(k)
             else:
                 conf.set(k, v)
-
-
-def test_decon_ngram_semi_join_and_no_text_shuffle(spark):
-    """decon_ngram_contamination (r11): the contamination count must
-    plan as a LEFT SEMI join from train gram occurrences into the
-    BROADCAST test vocabulary (the 100 TB regime: one eval suite's
-    grams are broadcast-sized), and no Exchange may carry the raw text
-    column — only doc ids and grams shuffle."""
-    from erathia_market_etl_spark.plans.text_queries import (
-        decon_ngram_contamination,
-    )
-
-    plan = plan_of(decon_ngram_contamination(spark, SF_T2))
-    semi = [ln for ln in plan.splitlines() if "LeftSemi" in ln]
-    assert len(semi) == 1 and "BroadcastHashJoin" in semi[0], plan
-    for ln in plan.splitlines():
-        if "Exchange" in ln:
-            assert "text#" not in ln, ln
 
 
 def test_shared_minhash_band_stage_is_cached_and_live_capped(spark):

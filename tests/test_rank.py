@@ -1,13 +1,14 @@
 """operators/rank.py — the melted block rank / arithmetic-NTILE kernel
-(r12, the r11 VERDICT's RFM fix).
+and the grouped block rank / prefix-sum kernels (r12).
 
 Semantics pins: the arithmetic NTILE must equal Spark's own
 ``F.ntile`` under the same deterministic total order for sizes that
-exercise the uneven-bucket rule AND the n < buckets edge.
-Plan pins: the kernel must contain NO Exchange SinglePartition (the
-whole point), and the consuming ``mart_rfm_segments`` plan must be
-free of both single-partition exchanges and native ntile windows with
-a LINEAR (not exponential) number of scans.
+exercise the uneven-bucket rule AND the n < buckets edge; each grouped
+kernel must equal Spark's own per-group window under the same
+deterministic total order, at any block width.
+Plan pins: neither the kernels nor the concentration marts that
+consume them may contain an Exchange SinglePartition (the whole
+point), and the NTILE kernel plans no native ntile window.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from erathia_market_etl_spark.operators.rank import with_ntile, with_ntiles
-from erathia_market_etl_spark.plans.relational import mart_rfm_segments
 
 from .conftest import SF_T2
 
@@ -88,19 +88,6 @@ def test_kernel_rejects_bad_inputs(spark):
         with_ntiles(base, "key", [], buckets=4)
 
 
-def test_mart_rfm_plan_is_scale_safe(spark):
-    """The r11 VERDICT weak item's fix, pinned: no single-partition
-    exchange anywhere, no native ntile window, and the upstream
-    aggregate is referenced a LINEAR number of times — the naive
-    chained formulation measured 2^k scans (8 for the 3 metrics); the
-    melt kernel holds it at 3 (df + melted + counts) regardless of
-    metric count."""
-    plan = _plan(mart_rfm_segments(spark, SF_T2))
-    assert "Exchange SinglePartition" not in plan
-    assert "ntile(" not in plan
-    assert plan.count("FileScan") <= 3
-
-
 def test_arithmetic_ntile_formula_exhaustive_small_domain(spark):
     """Exhaustive sweep of the NTILE arithmetic itself: every
     (n, k, rank) with 1 <= rank <= n <= 30, 1 <= k <= 8 (7200 triples,
@@ -139,93 +126,6 @@ def test_arithmetic_ntile_formula_exhaustive_small_domain(spark):
     for row in got:
         assert row["q4"] == ref(row["n"], 4, row["r"])
         assert row["q8"] == ref(row["n"], 8, row["r"])
-
-
-def test_skyline_planted_dominance_and_ties(spark, tmp_path):
-    """skyline_part_frontier semantic pin on a planted catalog:
-
-      (k1, $10.00, 5)  frontier (cheapest overall)
-      (k2, $10.00, 5)  equal duplicate of k1 -> BOTH kept
-      (k3, $10.00, 7)  same price, bigger -> dominated by k1
-      (k4, $12.00, 3)  dearer but smaller -> frontier
-      (k5, $12.00, 5)  dominated by k1 (cheaper, equal size)
-      (k6, $15.00, 3)  dominated by k4 (cheaper, equal size)
-      (k7, $15.00, 1)  frontier
-    k1/k4 sit in different price blocks from k6/k7 (block = $5), so the
-    cross-block prior-min path and the within-block range frame are
-    BOTH load-bearing in this fixture."""
-    import os
-
-    from erathia_market_etl_spark.plans.relational import (
-        skyline_part_frontier,
-    )
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    rows = [
-        (1, 10.00, 5), (2, 10.00, 5), (3, 10.00, 7), (4, 12.00, 3),
-        (5, 12.00, 5), (6, 15.00, 3), (7, 15.00, 1),
-    ]
-    spark.createDataFrame(
-        [(k, "n", "b", "t", sz, pr) for k, pr, sz in rows],
-        "p_partkey long, p_name string, p_brand string, p_type string,"
-        " p_size int, p_retailprice double",
-    ).write.parquet(f"{sf}/part.parquet")
-    got = [tuple(r) for r in skyline_part_frontier(spark, sf).collect()]
-    assert got == [
-        (1, 1000, 5),
-        (2, 1000, 5),
-        (4, 1200, 3),
-        (7, 1500, 1),
-    ]
-
-
-def test_skyline_matches_bruteforce_on_random_catalogs(spark, tmp_path):
-    """Generative pin (the scd2/funnel precedent): the block-decomposed
-    skyline must equal the O(n²) brute-force dominance check on
-    seeded-random catalogs with heavy price ties and duplicate
-    (price, size) pairs — the regimes where the strict/non-strict
-    dominance arms and the block-boundary handoffs actually interact."""
-    import os
-    import random
-
-    from erathia_market_etl_spark.plans.relational import (
-        skyline_part_frontier,
-    )
-
-    rng = random.Random(12)
-    for trial in range(3):
-        n = 120
-        rows = [
-            (
-                k,
-                round(rng.choice([9.0, 9.5, 10.0, 11.0, 12.5, 14.0])
-                      + rng.randrange(0, 4) * 0.25, 2),
-                rng.randrange(1, 9),
-            )
-            for k in range(1, n + 1)
-        ]
-        cents = {k: int(round(p * 100)) for k, p, _ in rows}
-        frontier = set()
-        for k, p, s in rows:
-            dominated = any(
-                cents[k2] <= cents[k] and s2 <= s
-                and (cents[k2] < cents[k] or s2 < s)
-                for k2, p2, s2 in rows
-                if k2 != k
-            )
-            if not dominated:
-                frontier.add(k)
-
-        sf = str(tmp_path / f"sf{trial}")
-        os.makedirs(sf)
-        spark.createDataFrame(
-            [(k, "n", "b", "t", s, p) for k, p, s in rows],
-            "p_partkey long, p_name string, p_brand string,"
-            " p_type string, p_size int, p_retailprice double",
-        ).write.parquet(f"{sf}/part.parquet")
-        got = {r["p_partkey"] for r in skyline_part_frontier(spark, sf).collect()}
-        assert got == frontier, (trial, got ^ frontier)
 
 
 def test_grouped_rank_matches_native_on_scrambled_groups(spark):

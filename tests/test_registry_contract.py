@@ -144,18 +144,18 @@ def test_registered_names_and_oracles_are_pinned():
 
 
 # sha256 of json.dumps(sorted((name, oracle) for every local query))
-_LOCAL_SHA256 = "bfdfaa9087f545c5c27d5a4921d7744dac23993c53615bf978f7d6b428651b01"
+_LOCAL_SHA256 = "e87dcc78b8ff33c41a92b0f92ad8f3b1d3ea7f5d77d17c7092c36bb2b6042506"
 
 
 def test_local_names_and_oracles_are_pinned():
-    """The local-only surface: 21 oracled queries registered with
+    """The local-only surface: 2 oracled queries registered with
     ``local=True``, pinned like the driver set (one hash over all
     names and oracle bytes)."""
     import hashlib
     import json
 
     local = local_queries()
-    assert len(local) == 21
+    assert len(local) == 2
     pairs = sorted((name, oracle) for name, (_, oracle) in local.items())
     digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
     assert digest == _LOCAL_SHA256
@@ -171,7 +171,7 @@ def test_local_entries_are_registered_at_their_definition():
     assert bad == []
 
 
-@pytest.mark.parametrize("taken", ["q1_net_revenue_by_nation", "sim_topk_lsh_bucket"])
+@pytest.mark.parametrize("taken", ["q1_net_revenue_by_nation", "agg_hll_registers"])
 @pytest.mark.parametrize("local", [False, True])
 def test_duplicate_name_across_sets_raises(taken, local):
     before = (all_queries(), local_queries())

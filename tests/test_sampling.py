@@ -265,22 +265,3 @@ def test_emb_centroids_partition_order_independent(spark):
     assert base == skewed_rows
 
 
-def test_sample_k_per_group_exact_and_reproducible(spark):
-    """Exactly k rows per source (or the whole group when smaller),
-    identical across two runs (deterministic hash order, no rand()),
-    and ranks are 1..k."""
-    from erathia_market_etl_spark.plans.sampling_queries import (
-        SAMPLE_K_PER_GROUP,
-        sample_k_per_group,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    a = [tuple(r) for r in sample_k_per_group(spark, sf).collect()]
-    b = [tuple(r) for r in sample_k_per_group(spark, sf).collect()]
-    assert a == b
-    per_src: dict[str, list[int]] = {}
-    for src, _doc, _h, rn in a:
-        per_src.setdefault(src, []).append(rn)
-    for src, rns in per_src.items():
-        assert sorted(rns) == list(range(1, len(rns) + 1)), src
-        assert len(rns) <= SAMPLE_K_PER_GROUP, src

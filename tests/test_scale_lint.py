@@ -201,8 +201,8 @@ def test_no_unbounded_driver_collects_in_package():
 # R2 blesses ANY SinglePartition exchange whose scans are aggregated —
 # but an aggregate's grain can itself scale with the data (customers,
 # documents, users), and a global Sort/Window over such a grain is one
-# task sorting billions of rows at 100 TB (the r11 mart_rfm_segments
-# finding: three NTILE(4) global windows over the customer grain).
+# task sorting billions of rows at 100 TB (the r11 finding: three
+# NTILE(4) global windows over the customer grain).
 # R6 closes that hole: every Exchange SinglePartition whose parent
 # chain is a Sort or Window NODE (exact node-name match — a global
 # SortAggregate is a 1-row reduction, not a sort) must carry a
@@ -210,8 +210,8 @@ def test_no_unbounded_driver_collects_in_package():
 # a regex on the site's ancestor text so the justification pins the
 # SPECIFIC sort/window columns, not the query wholesale: a regressed
 # query that re-grows a data-scaling global sort fails even though its
-# name is in the table (the pre-fix RFM shape is the pinned true
-# positive in test_r6_catches_data_scaling_grain_ntile).
+# name is in the table (a customer-grain NTILE shape is the pinned
+# true positive in test_r6_catches_data_scaling_grain_ntile).
 # ---------------------------------------------------------------------------
 
 
@@ -261,29 +261,10 @@ R6_BOUNDED_GRAIN: dict[str, list[tuple[str, str]]] = {
         "grain = distinct value domain, bounded (SURVEY freq-items "
         "support threshold makes the value table tiny by definition)",
     )],
-    "histogram_equi_depth": [(
-        r"Sort \[v#\d+L ASC",
-        "cumulative below-offsets over the distinct-quantity count "
-        "table — <= 50 distinct values in this domain; the kernel's "
-        "docstring carries the near-unique-domain escape hatch",
-    )],
-    # mart_rfm_segments is deliberately ABSENT: the r12 fix (the melted
-    # block rank decomposition, operators/rank.py) removed every
-    # SinglePartition exchange from its plan — per-metric offset windows
-    # partition by metric id. Any R6 site reappearing there fails with
-    # no allowlist to hide behind (test_r6_catches_data_scaling_grain_
-    # ntile pins the pre-fix shape as the detector's true positive).
     "pack_context_windows": [(
         r"Sort \[blk#\d+L ASC",
         "hierarchical running-sum block offsets — block grain is "
         "corpus_size/block_rows, fixed fan-in per level",
-    )],
-    "skyline_part_frontier": [(
-        r"Sort \[blk#\d+L ASC",
-        "cumulative prior-block minimum over the per-price-BLOCK min "
-        "table — grain = price_domain/SKYLINE_BLOCK_CENTS, bounded by "
-        "the price domain, never the part count (the rank.py block "
-        "discipline applied to the skyline running minimum)",
     )],
     "text_length_trim": [(
         r"Sort \[n_chars#\d+L ASC",
@@ -320,13 +301,10 @@ def test_r6_single_partition_order_on_bounded_grain(plans):
 
 
 def test_r6_catches_data_scaling_grain_ntile(spark):
-    """The lint's own pin: the PRE-r12 mart_rfm_segments shape — an
-    NTILE(4) global-order window directly over a customer-grain
-    aggregate — must be flagged by the site detector, and
-    mart_rfm_segments must have NO allowlist entry (the r12 fix removed
-    every SinglePartition exchange from its plan, so a regression to
-    the global-sort shape fails R6 outright). R2 sanctions this plan
-    (the scan is aggregated); R6 exists precisely for it."""
+    """The lint's own pin: an NTILE(4) global-order window directly
+    over a customer-grain aggregate (the pre-r12 RFM shape) must be
+    flagged by the site detector. R2 sanctions this plan (the scan is
+    aggregated); R6 exists precisely for it."""
     from pyspark.sql import Window
 
     rfm = (
@@ -340,11 +318,7 @@ def test_r6_catches_data_scaling_grain_ntile(spark):
     )
     plan = _plan(prefix)
     sites = _single_partition_order_sites(plan)
-    assert sites, "pre-fix RFM shape must produce an R6 site"
-    assert "mart_rfm_segments" not in R6_BOUNDED_GRAIN, (
-        "the fixed RFM plan has no single-partition sites; do not "
-        "re-add a blanket allowlist entry for it"
-    )
+    assert sites, "customer-grain NTILE shape must produce an R6 site"
     # and a SortAggregate-parented exchange stays exempt (node-name
     # match, not substring: a global SortAggregate is a 1-row reduction)
     assert _node_name("+- SortAggregate(key=[], functions=[first(x)])") == (

@@ -101,66 +101,3 @@ def test_rho_bitlength_idiom(spark):
         assert r["rho"] == expected, (w, r["rho"], expected)
 
 
-def _py_cms_estimate(all_keys, probe):
-    """Pure-Python count-min estimate of `probe` over `all_keys`."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        CMS_SALTS,
-        CMS_W,
-    )
-
-    counters = [dict() for _ in CMS_SALTS]
-    for k in all_keys:
-        for r, salt in enumerate(CMS_SALTS):
-            col = _h32(k ^ salt) // (_MOD32 // CMS_W)
-            counters[r][col] = counters[r].get(col, 0) + 1
-    return min(
-        counters[r].get(_h32(probe ^ salt) // (_MOD32 // CMS_W), 0)
-        for r, salt in enumerate(CMS_SALTS)
-    )
-
-
-def test_cms_matches_python_and_one_sided_error(spark):
-    """Planted frequencies: one heavy hitter among a spread of
-    singletons. Every Spark estimate equals the pure-Python CMS, is
-    never below the exact count (the one-sided error law), and the
-    heavy hitter's overestimate stays within the eN/W bound."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        CMS_W,
-        cms_frequencies_frame,
-    )
-
-    keys = [7] * 500 + list(range(100, 1100))  # N = 1500
-    rows = [(k, 1 + (i % 12)) for i, k in enumerate(keys)]
-    df = spark.createDataFrame(rows, "x long, mth int")
-    got = {
-        r["part_key"]: (r["exact_cnt"], r["est_cnt"], r["overestimate"])
-        for r in cms_frequencies_frame(df, top_k=5).collect()
-    }
-    assert got[7][0] == 500
-    for k, (exact, est, over) in got.items():
-        assert est == _py_cms_estimate(keys, k), k
-        assert over >= 0, k                       # never underestimates
-    # Markov bound with D=4 independent rows: P(over > eN/W) <= e^-4;
-    # pin the deterministic instance well inside 3x that envelope
-    assert got[7][2] <= 3 * (3 * len(keys) // CMS_W), got[7]
-
-
-def test_cms_merge_law_month_invariance(spark):
-    """The monthly-counter SUM-merge must be invisible: the same keys
-    scattered across 12 months and concentrated in one month produce
-    IDENTICAL output — counters form a commutative monoid under +."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        cms_frequencies_frame,
-    )
-
-    keys = [5] * 40 + [9] * 25 + list(range(1000, 1200))
-    scattered = spark.createDataFrame(
-        [(k, 1 + (i % 12)) for i, k in enumerate(keys)], "x long, mth int"
-    )
-    single = spark.createDataFrame(
-        [(k, 1) for k in keys], "x long, mth int"
-    )
-    a = [tuple(r) for r in cms_frequencies_frame(scattered, top_k=8).collect()]
-    b = [tuple(r) for r in cms_frequencies_frame(single, top_k=8).collect()]
-    assert a == b
-    assert a[0][0] == 5 and a[0][1] == 40   # workload fit is exact-count-ranked

@@ -316,60 +316,6 @@ def test_streaming_rollup_append_merges_to_batch_state(spark, staged_dir, tmp_pa
     assert retried == want
 
 
-def test_streaming_cms_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """Sketch-state maintenance: three micro-batches of keys append
-    their D x W counter slices; merge-on-read must equal the batch
-    cms_counter_state over the full key log EXACTLY, and re-appending a
-    retried batch's identical slice must not double-count."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        cms_counter_state,
-    )
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_cms_state,
-        streaming_cms_append,
-    )
-
-    # keys ride user_id -> x; craft per-batch key multisets
-    def rows(keys, base_id):
-        return [(base_id + i, _ts(1), k, "a", 1.0) for i, k in enumerate(keys)]
-
-    k0 = [7] * 5 + [100, 101]
-    k1 = [7] * 3 + [102]
-    k2 = [9] * 4 + [100]
-    _write_batch_file(spark, rows(k0, 0), f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, rows(k1, 100), f"{staged_dir}/b1.parquet", 1_000_100)
-    _write_batch_file(spark, rows(k2, 200), f"{staged_dir}/b2.parquet", 1_000_200)
-
-    stream_keys = _read_stream(spark, staged_dir).select(
-        F.col("user_id").alias("x")
-    )
-    state_path = str(tmp_path / "cms_state")
-    batches = streaming_cms_append(stream_keys, state_path)
-    assert len(batches) == 3
-
-    merged = sorted(map(tuple, read_cms_state(spark, state_path).collect()))
-    full = spark.createDataFrame([(k,) for k in k0 + k1 + k2], "x long")
-    want = sorted(map(tuple, cms_counter_state(full).collect()))
-    assert merged == want
-
-    # retry idempotence: re-append batch 1's identical slice
-    log = spark.read.parquet(state_path)
-    log.filter(F.col("batch_id") == batches[1]).write.mode("append").parquet(
-        state_path
-    )
-    retried = sorted(map(tuple, read_cms_state(spark, state_path).collect()))
-    assert retried == want
-
-    # non-vacuity: key 7's counters really accumulated ACROSS batches —
-    # its count in the merged state is 8 (5 from b0 + 3 from b1), which
-    # no single batch slice contains
-    probe = cms_counter_state(
-        spark.createDataFrame([(7,)], "x long")
-    ).collect()
-    cdict = {(r, c): n for r, c, n in merged}
-    assert all(cdict[(row["r"], row["col"])] >= 8 for row in probe)
-
-
 def test_streaming_candle_append_merges_to_batch_state(spark, staged_dir, tmp_path):
     """Candle maintenance: three micro-batches (one hour split across
     two of them) append candle slices; merge-on-read equals the batch
@@ -475,13 +421,10 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
         candle_state,
         day_rollup_state,
     )
-    from erathia_market_etl_spark.plans.sketch_queries import cms_counter_state
     from erathia_market_etl_spark.streaming.event_stream import (
         read_candle_state,
-        read_cms_state,
         read_rollup_state,
         streaming_candle_append,
-        streaming_cms_append,
         streaming_rollup_append,
     )
 
@@ -533,19 +476,6 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
         map(tuple, day_rollup_state(full).collect())
     )
 
-    # count-min family (keys ride user_id -> x)
-    p = run_with_forced_retry(
-        "cms",
-        streaming_cms_append,
-        src_select=lambda s: s.select(F.col("user_id").alias("x")),
-    )
-    full_keys = spark.createDataFrame(
-        [(r[2],) for r in b0 + b1 + b2], "x long"
-    )
-    assert sorted(map(tuple, read_cms_state(spark, p).collect())) == sorted(
-        map(tuple, cms_counter_state(full_keys).collect())
-    )
-
     # candle family
     p = run_with_forced_retry("candle", streaming_candle_append)
     assert sorted(map(tuple, read_candle_state(spark, p).collect())) == sorted(
@@ -565,6 +495,9 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
         "hll",
         streaming_hll_append,
         src_select=lambda s: s.select(F.col("user_id").alias("x")),
+    )
+    full_keys = spark.createDataFrame(
+        [(r[2],) for r in b0 + b1 + b2], "x long"
     )
     assert sorted(map(tuple, read_hll_state(spark, p).collect())) == sorted(
         map(tuple, hll_register_state(full_keys).collect())

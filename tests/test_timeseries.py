@@ -1,116 +1,29 @@
-"""Semantic pins for the r8 time-series operators on PLANTED events.
+"""Semantic pins for the time-series operators on PLANTED events.
 
-Oracle parity (tests/test_oracle_parity.py::test_queued_queries_match)
-proves Spark and DuckDB agree at the fixture SF; these tests prove the
-operators mean what they claim on inputs constructed to exercise the
-claims: LOCF must carry the LAST observation (not interpolate, not
-zero-fill), the spine must be each series' OWN [min, max] range (no
-global-calendar bleed), and the multi-resolution rollup must equal the
-direct raw->day aggregation measure-for-measure.
+Oracle parity (tests/test_oracle_parity.py) proves Spark and DuckDB
+agree at the fixture SF; these tests prove the operators mean what
+they claim on inputs constructed to exercise the claims: mergeable
+rollup and candle states must equal the full recompute, SCD2 runs
+must compact exactly, OHLC/TWAP must attribute ties and weights
+exactly, and the sweep-line concurrency must match brute force.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import os
-
-
-def _write_events(spark, rows, d):
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-    return d
-
-
-def _t(h, m=0, day=1):
-    return dt.datetime(2024, 3, day, h, m, 0)
-
-
-def test_gap_fill_locf_carries_last_observation(spark, tmp_path):
-    rows = [
-        # series A: hours 00, 01, 04 — gaps at 02 and 03
-        (1, _t(0), 1, "A", 10.00, None),
-        (2, _t(1, 30), 1, "A", 2.50, None),
-        (3, _t(1, 45), 1, "A", 0.25, None),
-        (4, _t(4), 1, "A", 7.00, None),
-        # series B: a single hour — spine must be exactly one row
-        (5, _t(9), 1, "B", 3.00, None),
-    ]
-    from erathia_market_etl_spark.plans.event_windows import timeseries_gap_fill
-
-    out = timeseries_gap_fill(spark, _write_events(spark, rows, str(tmp_path)))
-    got = {(r["event_type"], r["hour_start"].hour): r for r in out.collect()}
-
-    # series A spine is exactly 00..04 (5 rows), series B exactly 09
-    assert sorted(h for t, h in got if t == "A") == [0, 1, 2, 3, 4]
-    assert sorted(h for t, h in got if t == "B") == [9]
-
-    # observed hours: real totals, is_gap False
-    assert got[("A", 0)]["filled_value"] == 10.00
-    assert got[("A", 1)]["filled_value"] == 2.75  # 2.50 + 0.25, exact cents
-    assert got[("A", 1)]["n_events"] == 2
-    assert got[("A", 0)]["is_gap"] is False
-
-    # gap hours: n_events 0, is_gap True, value CARRIED from hour 01
-    for h in (2, 3):
-        r = got[("A", h)]
-        assert r["is_gap"] is True and r["n_events"] == 0, r
-        assert r["filled_value"] == 2.75, r
-    # post-gap observation resumes the real value
-    assert got[("A", 4)]["filled_value"] == 7.00
-    assert got[("B", 9)]["filled_value"] == 3.00
-
-
-def test_rollup_day_equals_direct_aggregation(spark, tmp_path):
-    # two days x two types, with minute/hour structure that makes the
-    # intermediate rollups non-trivial (several minutes per hour,
-    # several hours per day)
-    rows = []
-    eid = 0
-    for day in (1, 2):
-        for h in (0, 5, 23):
-            for m in (0, 7, 59):
-                eid += 1
-                rows.append((eid, _t(h, m, day), 1, "A", 1.01 * eid, None))
-        eid += 1
-        rows.append((eid, _t(12, 0, day), 2, "B", 0.10, None))
-    from erathia_market_etl_spark.plans.event_windows import (
-        rollup_multiresolution,
-    )
-
-    d = _write_events(spark, rows, str(tmp_path))
-    got = {
-        (r["day_start"].day, r["event_type"]): r
-        for r in rollup_multiresolution(spark, d).collect()
-    }
-    assert len(got) == 4
-    # direct check of one cell: day 1 / type A = events 1..9
-    r = got[(1, "A")]
-    assert r["n_events"] == 9
-    assert r["total_value"] == round(sum(round(1.01 * i, 2) for i in range(1, 10)), 2)
-    assert r["min_value"] == 1.01 and r["max_value"] == 9.09
-    assert got[(2, "B")]["n_events"] == 1
-    assert got[(2, "B")]["total_value"] == 0.10
 
 
 def test_incremental_rollup_merge_equals_full_recompute(spark):
     """The mergeable-state algebra: split the fixture event log at an
     arbitrary day cutoff, compute day_rollup_state on each half, merge —
-    the merged state AND its presentation must equal the full-log
-    recompute EXACTLY (long sums / min / max are a commutative monoid;
-    sum_cents is an exact scaled integer, so no float drift either).
-    Presentation must also equal rollup_multiresolution (the
-    minute->hour->day ladder) — three independent computation paths,
-    one answer."""
+    the merged state must equal the full-log recompute EXACTLY (long
+    sums / min / max are a commutative monoid; sum_cents is an exact
+    scaled integer, so no float drift either)."""
     from pyspark.sql import functions as F
 
     from erathia_market_etl_spark.plans.event_windows import (
         day_rollup_state,
         merge_rollup_states,
-        present_day_rollup,
-        rollup_multiresolution,
     )
     from erathia_market_etl_spark.sources.events import load_events
 
@@ -130,70 +43,6 @@ def test_incremental_rollup_merge_equals_full_recompute(spark):
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, full.collect())
     )
-    assert sorted(map(tuple, present_day_rollup(merged).collect())) == sorted(
-        map(tuple, rollup_multiresolution(spark, sf).collect())
-    )
-
-
-def test_gap_fill_matches_python_reference_on_random_series(spark, tmp_path):
-    """Hypothesis property: on random sparse integer-cent series the
-    gap-fill must equal a pure-Python LOCF reference — spine bounds,
-    carried values, counts and gap flags, every row (the generative
-    analog of the planted LOCF pins, per the CC/BPE/pagerank test
-    discipline)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        timeseries_gap_fill,
-    )
-
-    @settings(max_examples=4, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=2),    # series
-                st.integers(min_value=0, max_value=20),   # hour
-                st.integers(min_value=-5000, max_value=5000),  # cents
-            ),
-            min_size=1,
-            max_size=30,
-        )
-    )
-    def run(raw):
-        rows = [
-            (i, _t(h), 1, f"S{s}", c / 100.0, None)
-            for i, (s, h, c) in enumerate(raw)
-        ]
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as d:
-            _write_events(spark, rows, d)
-            got = sorted(
-                (r["event_type"], r["hour_start"].hour, r["n_events"],
-                 r["filled_value"], r["is_gap"])
-                for r in timeseries_gap_fill(spark, d).collect()
-            )
-
-        # pure-Python reference
-        series = {}
-        for s, h, c in raw:
-            key = f"S{s}"
-            n, tot = series.setdefault(key, {}).get(h, (0, 0))
-            series[key][h] = (n + 1, tot + c)
-        want = []
-        for key, hours in series.items():
-            carried = None
-            for h in range(min(hours), max(hours) + 1):
-                if h in hours:
-                    n, tot = hours[h]
-                    carried = tot
-                    want.append((key, h, n, round(tot / 100, 2), False))
-                else:
-                    want.append((key, h, 0, round(carried / 100, 2), True))
-        assert got == sorted(want), (raw, got, sorted(want))
-
-    run()
 
 
 def test_scd2_planted_run_compaction(spark, tmp_path):
