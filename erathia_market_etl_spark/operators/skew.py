@@ -18,7 +18,7 @@ the salt only spreads one key's rows over n reducers.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "__salt"

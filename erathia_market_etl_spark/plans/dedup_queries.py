@@ -21,7 +21,6 @@ from ..operators.dedup import (
     exact_dedup_groups,
     jaccard,
     minhash_band_table,
-    minhash_candidate_pairs,
     shingles_from_tokens,
     simhash_near_pairs,
 )

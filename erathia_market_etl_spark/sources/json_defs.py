@@ -25,13 +25,10 @@ from pyspark.sql import functions as F
 from ..generator.definitions import (
     CATEGORY_TIERS,
     FACTION_NAMES,
-    HERO_INCOME,
-    HEROES_TOTAL,
     N_FACTIONS,
     UNITS_PER_FACTION,
     customers,
     products,
-    towns,
 )
 
 

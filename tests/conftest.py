@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import logging
+
 import pytest
 from hypothesis import settings
 
@@ -15,9 +17,32 @@ settings.register_profile("tier1", derandomize=True, database=None)
 settings.load_profile("tier1")
 
 
+class _Keep(logging.Handler):
+    def __init__(self, records: list):
+        super().__init__()
+        self.records = records
+
+    def emit(self, record):
+        self.records.append(record)
+
+
 @pytest.fixture(scope="session")
-def spark():
+def session_log():
+    """The records ``get_spark`` logged while starting the test session."""
+    return []
+
+
+@pytest.fixture(scope="session")
+def spark(session_log):
     cfg = EngineConfig(app_name="erathia-tests", shuffle_partitions=8)
-    s = get_spark(cfg)
+    logger = logging.getLogger("erathia_market_etl_spark.session")
+    handler, level = _Keep(session_log), logger.level
+    logger.addHandler(handler)
+    logger.setLevel(logging.INFO)
+    try:
+        s = get_spark(cfg)
+    finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)
     yield s
     s.stop()

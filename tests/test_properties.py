@@ -94,53 +94,3 @@ def test_same_seed_same_trades(seed):
 def test_product_keys_dense_and_sorted():
     keys = [p.key for p in products()]
     assert keys == list(range(1000, 1046))
-
-
-# ---------------------------------------------------------------------------
-# r10 algebraic rewrites: a window-free closed form for the sequential
-# CUSUM fold and the integer Hamilton apportionment laws, property-checked
-# for any input here, driver-side, in the exact integer arithmetic a
-# window or rank formulation of either has to reproduce.
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=200, deadline=None)
-@given(devs=st.lists(st.integers(-10**9, 10**9), min_size=1, max_size=60))
-def test_cusum_closed_form_identity_any_series(devs):
-    """S+_i = P_i - min(0, min_{j<=i} P_j) and
-    S-_i = max(0, max_{j<=i} P_j) - P_i equal the clamped folds for
-    ANY integer deviation series — the identity a window formulation of
-    CUSUM rests on."""
-    s_up = s_dn = 0
-    pref = 0
-    run_min = run_max = 0  # min/max over {0, P_1..P_i}
-    for d in devs:
-        s_up = max(0, s_up + d)
-        s_dn = max(0, s_dn - d)
-        pref += d
-        run_min = min(run_min, pref)
-        run_max = max(run_max, pref)
-        assert s_up == pref - run_min
-        assert s_dn == run_max - pref
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    weights=st.lists(st.integers(1, 10**12), min_size=1, max_size=40),
-    budget=st.integers(0, 10**6),
-)
-def test_hamilton_laws_any_weights(weights, budget):
-    """For any positive weights and budget: quotas sum EXACTLY to the
-    budget and each quota is within one unit of its exact fractional
-    share — the two laws a largest-remainder allocation promises."""
-    total = sum(weights)
-    floors = [w * budget // total for w in weights]
-    rems = [w * budget % total for w in weights]
-    leftover = budget - sum(floors)
-    order = sorted(range(len(weights)), key=lambda i: (-rems[i], i))
-    quotas = list(floors)
-    for i in order[:leftover]:
-        quotas[i] += 1
-    assert sum(quotas) == budget
-    for w, q in zip(weights, quotas):
-        assert abs(q - w * budget / total) < 1 + 1e-9
