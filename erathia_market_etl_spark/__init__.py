@@ -10,12 +10,14 @@ package implements.
 Layout:
     config          paths / seed / rates (ref: src/config.py:1-14)
     session         SparkSession factory with scale-aware defaults
-    schemas         enforced StructTypes (ref: src/schemas.py:6-19, there dead code)
-    sources/        parquet IO, JSON definitions, calendar dim, catalog
-    operators/      cleaning, joins, aggregates, sorts, set ops, windows,
-                    dedup, similarity, text analysis, multimodal plumbing
-    functions/      scalar column helpers (date keys, money, cross-engine hashes)
-    plans/          gold data-mart pipelines + the driver-facing query registry
+    pipeline        bronze -> silver cleaning -> the four gold marts
+    app             command-line entry point (the reference's main.py menu)
+    testing         Spark-vs-DuckDB result compare used by tests and tools
+    sources/        parquet loading and scan sizing, events-table normalization
+    operators/      dedup, similarity, text, graph, rank, skew, temporal,
+                    SCD and the media decoders (image, audio, JPEG, GIF)
+    functions/      deterministic money arithmetic
+    plans/          query families + the driver-facing query registry
     generator/      seeded market simulator (bronze producer, driver-side)
     streaming/      structured-streaming analogs of the batch window ops
 """

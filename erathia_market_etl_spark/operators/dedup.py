@@ -120,41 +120,6 @@ N_SIMHASH_BLOCKS = 4  # pigeonhole blocks -> catches hamming <= 3 exactly
 SIMHASH_HAMMING_MAX = 3
 
 
-def token_hash48(tok: Column) -> Column:
-    """48-bit integer hash of a token: first 12 hex chars of md5.
-    Engine-portable hex->int: Spark conv(h,16,10), DuckDB '0x'||h cast.
-    DuckDB twin: CAST('0x' || substr(md5('sh|'||t), 1, 12) AS BIGINT)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit("sh|"), tok)), 1, N_SIMHASH_BITS // 4), 16, 10
-    ).cast("bigint")
-
-
-def simhash_bit_sums(h: Column, nbits: int = N_SIMHASH_BITS) -> list[Column]:
-    """The SimHash accumulator: per bit position j, SUM(±1) over all
-    token instances (summing instances, not distinct tokens, gives the
-    classic term-frequency weighting). All plain conditional sums ->
-    codegen'd hash aggregate with map-side partials.
-    DuckDB twin per bit: SUM(2 * ((h >> j) & 1) - 1)."""
-    return [
-        F.sum(F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{j}")
-        for j in range(nbits)
-    ]
-
-
-def simhash_fingerprint(nbits: int = N_SIMHASH_BITS) -> Column:
-    """Collapse the per-bit sums b0..b{n-1} into the fingerprint:
-    bit j set iff the weighted sum is positive (ties -> 0, both engines).
-    DuckDB twin: SUM-of-CASE over the same columns."""
-    terms = [
-        F.when(F.col(f"b{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-        for j in range(nbits)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def simhash_blocks(fp: Column, nbits: int = N_SIMHASH_BITS,
                    nblocks: int = N_SIMHASH_BLOCKS) -> Column:
     """Split the fingerprint into nblocks bit-ranges for pigeonhole LSH:
@@ -165,13 +130,6 @@ def simhash_blocks(fp: Column, nbits: int = N_SIMHASH_BITS,
     return F.array(*[
         F.shiftright(fp, b * width).bitwiseAND(F.lit(mask)) for b in range(nblocks)
     ])
-
-
-def hamming48(a: Column, b: Column) -> Column:
-    """Hamming distance between fingerprints. Spark xor is ``^`` (via
-    bitwiseXOR); DuckDB's ``^`` is exponentiation — its twin is
-    bit_count(xor(a, b))."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -269,10 +227,8 @@ def simhash_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     fingerprint set iff 2·ones_j − n_tokens > 0 ⟺ Σ(2·bit_j − 1) > 0.
     NULL text yields no row (the old explode dropped those docs);
     empty text hashes its one empty token, as split(' ') always yields
-    a non-empty array. The pre-r16 JVM helpers (token_hash48,
-    simhash_bit_sums, simhash_fingerprint) remain the attested SQL
-    formulation and are pinned equal in tests/test_multimodal.py-style
-    parity via the oracle twins."""
+    a non-empty array. tests/simhash.py keeps the explode + aggregate
+    formulation as the reference this is pinned equal to."""
     import hashlib
     from collections.abc import Iterator
 
@@ -398,7 +354,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str,
     # (+0.30 s of 0.84 s at sf0.1). The bucket collect and its shared
     # exchange with the cap window are unchanged; results are
     # set-identical (tests/test_pair_expansion.py pins kernel ==
-    # pair_array + hamming48 on the same buckets).
+    # pair_array + bit_count on the same buckets).
     grouped = (
         blocks.groupBy("block_idx", "block_key")
         .agg(F.collect_list(F.struct("doc", "fingerprint")).alias("docs"))
@@ -427,42 +383,21 @@ def minhash_band_table(df: DataFrame, text_col: str, id_col: str,
     return sig.select("doc", F.posexplode(band_key_array()).alias("band_idx", "band_key"))
 
 
-def minhash_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
-                            n: int = 3,
-                            max_bucket: int = DEFAULT_MAX_BUCKET) -> DataFrame:
-    """doc pairs sharing ≥1 LSH band: band table -> capped bucket ->
-    in-bucket pair expansion.
-
-    Plan shape matters here:
-      * the signature is 8 MIN aggregates over exploded per-shingle
-        hashes, NOT array_min(transform(...)) — HOF lambdas are excluded
-        from whole-stage codegen and ran interpreted (measured 33s vs 4s
-        at sf0.1); MIN gets map-side partial agg, so each doc contributes
-        one row per partition to the shuffle;
-      * pairs come from collect_list per bucket, NOT a band self-join —
-        one shuffle on the band key, no recomputation of the signature
-        pipeline for a second join side; buckets are truncated to
-        ``max_bucket`` members first (cap_bucket_members), so the
-        in-bucket expansion is O(max_bucket²) worst case even on a
-        degenerate corpus, and the collect_list buffer is bounded.
-        Overflow is reported by lsh_bucket_stats (the sim_bucket_stats
-        query) — no silent truncation. At 100 TB the only large shuffles
-        are the (doc, shingle-hash) pre-agg and the band table, both
-        hash-partitioned by key."""
-    bands = minhash_band_table(df, text_col, id_col, n)
-    return candidate_pairs_from_bands(bands, max_bucket)
-
-
 def candidate_pairs_from_bands(
     bands: DataFrame, max_bucket: int = DEFAULT_MAX_BUCKET
 ) -> DataFrame:
-    """Candidate-pair tail of ``minhash_candidate_pairs`` over a
-    prebuilt (doc, band_idx, band_key) band table — split out (r12) so
-    the signature stage can be computed ONCE per session and shared
-    across its consumers (plans/dedup_queries.shared_minhash_bands):
-    the cap window, bucket collect, pair expansion, and distinct stay
-    LIVE in every consumer's plan (the WindowGroupLimit and
-    exchange-inventory pins keep watching them)."""
+    """Doc pairs sharing ≥1 LSH band, over a prebuilt (doc, band_idx,
+    band_key) band table (``minhash_band_table``). The signature stage
+    is computed ONCE per session and shared across its consumers
+    (plans/dedup_queries.shared_minhash_bands); the cap window, bucket
+    collect, pair expansion, and distinct stay LIVE in every consumer's
+    plan (the WindowGroupLimit and exchange-inventory pins keep
+    watching them). Pairs come from collect_list per bucket, NOT a band
+    self-join: one shuffle on the band key, and buckets are truncated
+    to ``max_bucket`` members first (cap_bucket_members), so the
+    in-bucket expansion is O(max_bucket²) worst case even on a
+    degenerate corpus. Overflow is reported by lsh_bucket_stats (the
+    sim_bucket_stats query) — no silent truncation."""
     bands = cap_bucket_members(bands, ["band_idx", "band_key"], "doc", max_bucket)
     # r17 note: an Arrow (mapInPandas numpy-triu) pair expansion was
     # measured here and REJECTED — alternating same-session A/B at

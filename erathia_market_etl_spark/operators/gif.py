@@ -11,10 +11,10 @@ Same discipline as ``operators/jpeg.py`` / the PNG decoder in
     extension skipping (graphic control / comment / application), and
     the full variable-width LZW state machine (clear codes, deferred
     clear, the KwKwK self-referential case, 12-bit cap);
-  * the ENCODER is the fixture factory that lets tests and oracle
-    queries synthesize valid foreign payloads (GIF is lossless for
-    paletted content, so round-trips are EXACT — no JPEG-style
-    divisibility construction needed);
+  * the encoder in tests/encoders.py is the fixture factory that
+    synthesizes valid payloads (GIF is lossless for paletted content,
+    so round-trips are EXACT — no JPEG-style divisibility construction
+    needed);
   * bit-serial LZW cannot vectorize (each code's width depends on the
     dictionary state built by every previous code), so the walk is
     scalar Python per payload inside the Arrow batch — parallelism is
@@ -23,7 +23,7 @@ Same discipline as ``operators/jpeg.py`` / the PNG decoder in
 
 Policy notes (documented, pinned in tests/test_gif.py): only the FIRST
 image of an animated stream is decoded (frame 1 is what a thumbnail /
-features stage wants; ``gif_frame_count`` reports how many there are);
+features stage wants);
 a transparency index from a Graphic Control Extension renders as its
 palette color (no alpha channel in the (h, w, 3) contract — the same
 alpha-drop policy the PNG decoder records).
@@ -37,28 +37,6 @@ import numpy as np
 
 GIF_MAGICS = (b"GIF87a", b"GIF89a")
 MAX_CODE_WIDTH = 12
-
-
-class _LZWWriter:
-    """Variable-width LSB-first code packer (GIF Appendix F)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, width: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-        return bytes(self.out)
 
 
 class _LZWReader:
@@ -83,45 +61,8 @@ class _LZWReader:
         return code
 
 
-def lzw_compress(indices: np.ndarray, min_code_size: int) -> bytes:
-    """GIF-flavor LZW: emits CLEAR first, grows the string table to
-    4096 then emits CLEAR and resets, bumps the code width as soon as
-    the NEXT free slot would not fit (mirroring the decoder's
-    early-bump convention below, so the two stay in lockstep)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    w = _LZWWriter()
-
-    def reset() -> tuple[dict, int, int]:
-        return {}, eoi + 1, min_code_size + 1
-
-    table, next_code, width = reset()
-    w.put(clear, width)
-    seq = [int(x) for x in indices]
-    if not seq:
-        w.put(eoi, width)
-        return w.finish()
-    cur = seq[0]
-    for k in seq[1:]:
-        if (cur, k) in table:
-            cur = table[(cur, k)]
-            continue
-        w.put(cur, width)
-        table[(cur, k)] = next_code
-        next_code += 1
-        if next_code > (1 << MAX_CODE_WIDTH):
-            w.put(clear, width)
-            table, next_code, width = reset()
-        elif next_code > (1 << width):
-            width += 1
-        cur = k
-    w.put(cur, width)
-    w.put(eoi, width)
-    return w.finish()
-
-
 def lzw_decompress(data: bytes, min_code_size: int) -> bytes:
-    """Inverse of lzw_compress, tolerant of spec-legal foreign
+    """GIF-flavor LZW decode, tolerant of spec-legal foreign
     streams: deferred clears, streams ending without EOI (the bytes
     simply run out), and the KwKwK case (code == next free slot)."""
     clear = 1 << min_code_size
@@ -179,47 +120,6 @@ def _deinterlace(rows: np.ndarray) -> np.ndarray:
             out[y] = rows[src]
             src += 1
     return out
-
-
-def _interlace(rows: np.ndarray) -> np.ndarray:
-    h = rows.shape[0]
-    order = [y for start, step in _INTERLACE_PASSES for y in range(start, h, step)]
-    return rows[order]
-
-
-def encode_gif(img: np.ndarray, interlace: bool = False) -> bytes:
-    """Real single-frame GIF89a encoder for (h, w, 3) uint8 RGB with at
-    most 256 distinct colors (build-time ValueError otherwise — GIF is
-    paletted; quantization is a different operator). Deterministic:
-    palette is the lexicographically sorted distinct color list."""
-    h, w, _ = img.shape
-    flat = img.reshape(-1, 3)
-    palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError("more than 256 distinct colors; quantize first")
-    # palette size must be a power of two >= 2 in the descriptor
-    bits = max(1, int(len(palette) - 1).bit_length())
-    pal = np.zeros((1 << bits, 3), dtype=np.uint8)
-    pal[: len(palette)] = palette
-    indices = inverse.astype(np.int32).reshape(h, w)
-    if interlace:
-        indices = _interlace(indices)
-    min_code_size = max(2, bits)
-    lzw = lzw_compress(indices.reshape(-1), min_code_size)
-    out = bytearray()
-    out += b"GIF89a"
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-    out += pal.tobytes()
-    out += b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, w, h, 0x40 if interlace else 0x00
-    )
-    out.append(min_code_size)
-    for i in range(0, len(lzw), 255):  # sub-block framing
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"  # block terminator + trailer
-    return bytes(out)
 
 
 def _read_sub_blocks(payload: bytes, pos: int) -> tuple[bytes, int]:
@@ -290,12 +190,6 @@ def _parse(payload: bytes):
                 "lzw": lzw,
             }
         )
-
-
-def gif_frame_count(payload: bytes) -> int:
-    """Number of image blocks in the stream (animation length)."""
-    _, _, images = _parse(payload)
-    return len(images)
 
 
 def decode_gif(payload: bytes) -> np.ndarray:

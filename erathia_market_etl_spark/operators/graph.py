@@ -9,11 +9,11 @@ driver-controlled loop of DataFrame joins — the sanctioned use of
 driver control flow (convergence test), with all data movement staying
 distributed.
 
-Three kernels, same (v, component_id) contract:
+Two kernels, same (v, component_id) contract, over one building block:
 
-  * ``connected_components`` — min-label propagation. O(component
-    diameter) rounds, ONE labels-sized shuffle per round; the cheapest
-    kernel when clusters are small and dense (the common dedup shape).
+  * min-label propagation (``_minlabel_rounds``). O(component diameter)
+    rounds, ONE labels-sized shuffle per round; the cheapest kernel
+    when clusters are small and dense (the common dedup shape).
   * ``connected_components_star`` — alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14). O(log² n) rounds REGARDLESS of diameter: each round
@@ -39,8 +39,8 @@ Three kernels, same (v, component_id) contract:
     and driver actions at sf0.1 on graphs where min-label alone
     finishes in 2.5 s (bench notes, r7). The registered dedup
     pipelines use this kernel; tests/test_graph.py pins the routing on
-    planted dense and path graphs, the round-count gap, and
-    three-kernel label equality.
+    planted dense and path graphs, the round-count gap, and label
+    equality between the kernels and a union-find reference.
 """
 
 from __future__ import annotations
@@ -152,30 +152,6 @@ def _minlabel_rounds(
             converged = True
             break
     return labels, rounds, converged
-
-
-def connected_components(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 50,
-    stats: dict | None = None, num_partitions: int | None = None,
-) -> DataFrame:
-    """Component id (= minimum vertex id) for every vertex that appears
-    in ``edges``. Returns (v, component_id). Deterministic: min-labels
-    are order-independent. On max_iter exhaustion it returns the (still
-    consistent, but unconverged) partial labels — callers that must not
-    tolerate that should use ``connected_components_auto`` or the star
-    kernel, which fail loudly instead."""
-    sym = _symmetrize(edges, src, dst, num_partitions)
-    try:
-        # _minlabel_rounds' eager round-1 job computes the (possibly
-        # expensive) edge pipeline once and fills the cache
-        labels, rounds, _ = _minlabel_rounds(sym, max_iter)
-    finally:
-        # labels is checkpointed — safe to drop the edge cache, on the
-        # error path too (r6 ADVICE: no cache leak when a round throws)
-        sym.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels.select("v", F.col("lbl").alias("component_id"))
 
 
 def _canonicalize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -329,8 +305,8 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al. SoCC'14, Algorithms 3-4). Same contract as
-    ``connected_components``: (v, component_id = component minimum) for
-    every vertex appearing in ``edges``; deterministic.
+    ``connected_components_auto``: (v, component_id = component
+    minimum) for every vertex appearing in ``edges``; deterministic.
 
     Round = one large-star then one small-star, each a grouped
     aggregation + co-partitioned join + dedup over the edge set:
@@ -393,8 +369,8 @@ def connected_components_auto(
     dup-cluster graphs (the near-clique shape LSH candidate pairs
     produce — the common case by construction) min-label converges in
     ~3-4 rounds of ONE labels-sized shuffle + ONE action each, and
-    phase 1 is the entire cost: identical to ``connected_components``,
-    zero selection overhead. (A canonicalize+prepass+probe design was
+    phase 1 is the entire cost: plain min-label, zero selection
+    overhead. (A canonicalize+prepass+probe design was
     measured and rejected — it added ~2.4 s of shuffles/actions at
     sf0.1 before the first propagation round; see module docstring.)
 
@@ -418,7 +394,7 @@ def connected_components_auto(
     sym = _symmetrize(edges, src, dst, num_partitions)
     try:
         # _minlabel_rounds' eager round-1 job computes the edge
-        # pipeline once and fills the cache (see connected_components)
+        # pipeline once and fills the cache
         labels, rounds, converged = _minlabel_rounds(sym, escalate_after)
         if converged:
             kernel, star_rounds = "minlabel", 0

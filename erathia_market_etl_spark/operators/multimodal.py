@@ -59,27 +59,6 @@ except ImportError:
 
 N_FEATURES = 8  # byte-histogram bins of the fake decoder
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("content", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("width", IntegerType()),
-                    StructField("height", IntegerType()),
-                    StructField("channels", IntegerType()),
-                    StructField("sample_rate", IntegerType()),
-                    StructField("duration_ms", IntegerType()),
-                    StructField("n_frames", IntegerType()),
-                    StructField("codec", StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 FEATURES_SCHEMA = StructType(
     [
@@ -217,14 +196,14 @@ IMA_STEP_TABLE = np.array([
     29794, 32767,
 ], dtype=np.int64)
 IMA_INDEX_TABLE = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-IMA_BLOCK_ALIGN = 256  # bytes per block -> 505 samples per block
 
 
 def _ima_reconstruct(nibble: int, predictor: int, index: int) -> tuple[int, int]:
     """One decoder step (the spec's multiply-free expansion of
     diff = (nibble + 1/2) * step / 4): returns (new predictor, new
-    index). The ENCODER reuses this exactly so both sides track the
-    same state — any asymmetry would compound across a block."""
+    index). The test encoder (tests/encoders.py) reuses this so both
+    sides track the same state — any asymmetry would compound across a
+    block."""
     step = int(IMA_STEP_TABLE[index])
     diff = step >> 3
     if nibble & 4:
@@ -237,62 +216,6 @@ def _ima_reconstruct(nibble: int, predictor: int, index: int) -> tuple[int, int]
     predictor = max(-32768, min(32767, predictor))
     index = max(0, min(88, index + int(IMA_INDEX_TABLE[nibble & 7])))
     return predictor, index
-
-
-def encode_wav_ima(
-    samples: np.ndarray, sample_rate: int, block_align: int = IMA_BLOCK_ALIGN
-) -> bytes:
-    """Real IMA ADPCM mono WAV encoder (tag 0x0011). Each block stores
-    its first sample verbatim in the 4-byte header (predictor int16,
-    step index uint8, reserved), then 4-bit codes low-nibble-first;
-    the step index carries across blocks as encoders conventionally
-    do (each block stays independently decodable via its header). A
-    fact chunk records the true frame count so a partial final block
-    trims exactly on decode."""
-    import struct
-
-    s = np.asarray(samples, dtype=np.int64)
-    n = len(s)
-    if n == 0:
-        raise ValueError("cannot encode an empty signal")
-    spb = (block_align - 4) * 2 + 1
-    index = 0
-    blocks = bytearray()
-    for b0 in range(0, n, spb):
-        chunk = s[b0 : b0 + spb]
-        predictor = int(chunk[0])
-        blocks += struct.pack("<hBB", predictor, index, 0)
-        nibbles = []
-        for x in chunk[1:]:
-            step = int(IMA_STEP_TABLE[index])
-            diff = int(x) - predictor
-            code = 8 if diff < 0 else 0
-            diff = abs(diff)
-            if diff >= step:
-                code |= 4
-                diff -= step
-            if diff >= step >> 1:
-                code |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                code |= 1
-            predictor, index = _ima_reconstruct(code, predictor, index)
-            nibbles.append(code)
-        nibbles += [0] * ((spb - 1) - len(nibbles))  # pad final block
-        for lo, hi in zip(nibbles[::2], nibbles[1::2]):
-            blocks.append(lo | (hi << 4))
-    avg_bps = sample_rate * block_align // spb
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x0011, 1, sample_rate, avg_bps, block_align, 4, 2, spb
-    )
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + (8 + len(fmt)) + (8 + 4) + (8 + len(blocks)))
-        + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n)
-        + b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
-    )
 
 
 def decode_wav_ima(payload: bytes) -> tuple[np.ndarray, int]:
@@ -390,12 +313,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return img[:, :, ::-1].copy()  # BGR -> RGB
 
 
-def encode_ppm(img: np.ndarray) -> bytes:
-    """Real binary PPM (P6) encoder for (h, w, 3) uint8 RGB."""
-    h, w, _ = img.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + img.tobytes()
-
-
 def decode_ppm(payload: bytes) -> np.ndarray:
     """Real binary PPM (P6) decoder -> (h, w, 3) uint8 RGB."""
     if payload[:2] != b"P6":
@@ -487,146 +404,6 @@ _PNG_VALID_DEPTHS = {
     4: (8, 16),
     6: (8, 16),
 }
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data)) + ctype + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def _png_filter_rows(flat: np.ndarray, bpp: int, filter_type) -> bytearray:
-    """Apply spec filters to packed scanline bytes ``flat`` (h, stride):
-    one filter-type byte + filtered bytes per row. ``filter_type`` is a
-    spec filter (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth) for every
-    scanline, or ``"mixed"`` (row y uses filter y % 5) so one payload
-    exercises every reconstruction path. Predictions use the ORIGINAL
-    prior-scanline bytes (spec: filtering is lossless, so reconstructed
-    == original)."""
-    h, stride = flat.shape
-    lines = bytearray()
-    zero = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        ft = (y % 5) if filter_type == "mixed" else int(filter_type)
-        cur = flat[y]
-        prior = flat[y - 1] if y else zero
-        lines.append(ft)
-        if ft == 0:
-            lines += cur.tobytes()
-        elif ft == 2:  # Up vectorizes: no left-neighbor dependency
-            lines += ((cur.astype(np.int64) - prior) & 0xFF).astype(
-                np.uint8).tobytes()
-        else:
-            out = bytearray(stride)
-            for x in range(stride):
-                out[x] = (
-                    int(cur[x]) - _png_predict(ft, x, cur, prior, bpp)
-                ) & 0xFF
-            lines += out
-    return lines
-
-
-def _png_pack_rows(img: np.ndarray, bit_depth: int) -> np.ndarray:
-    """Pack (h, w, c) samples into the spec's scanline bytes (h, stride):
-    8-bit verbatim, 16-bit big-endian byte pairs, sub-byte MSB-first with
-    zero padding to the byte boundary (spec §7.2). Shared by the
-    sequential encoder (whole image) and the Adam7 encoder (per pass)."""
-    h, w, c = img.shape
-    if bit_depth == 8:
-        return np.ascontiguousarray(img, dtype=np.uint8).reshape(h, w * c)
-    if bit_depth == 16:
-        v = img.astype(np.uint16).reshape(h, w * c)
-        flat = np.zeros((h, w * c * 2), dtype=np.uint8)
-        flat[:, 0::2] = (v >> 8).astype(np.uint8)
-        flat[:, 1::2] = (v & 0xFF).astype(np.uint8)
-        return flat
-    vals = img[..., 0].astype(np.uint8)
-    if int(vals.max(initial=0)) >= (1 << bit_depth):
-        raise ValueError(f"sample exceeds {bit_depth}-bit range")
-    shifts = np.arange(bit_depth - 1, -1, -1, dtype=np.uint8)
-    bits = ((vals[..., None] >> shifts) & 1).astype(np.uint8)
-    return np.packbits(bits.reshape(h, w * bit_depth), axis=1)
-
-
-def encode_png(img: np.ndarray, filter_type: int | str = 0) -> bytes:
-    """Real PNG encoder for (h, w, 3) uint8 RGB — pure stdlib zlib +
-    struct, no codec libraries. 8-bit color type 2, no interlace; the
-    general-shape twin is encode_png_ex below."""
-    return encode_png_ex(img, color_type=2, bit_depth=8,
-                         filter_type=filter_type)
-
-
-def encode_png_ex(
-    img: np.ndarray,
-    color_type: int,
-    bit_depth: int,
-    filter_type: int | str = 0,
-    palette: np.ndarray | None = None,
-    interlace: int = 0,
-) -> bytes:
-    """PNG encoder for EVERY spec-legal (color type, bit depth) pair,
-    sequential or Adam7-interlaced — the fixture factory for the full
-    decode_png surface.
-    ``img`` shapes: (h, w) or (h, w, 1) gray/palette-index, (h, w, 2)
-    gray+alpha, (h, w, 3) RGB, (h, w, 4) RGBA; dtype uint8 (depths
-    1-8; sub-byte values must fit the depth) or uint16 (depth 16).
-    Sub-byte rows pack MSB-first with zero padding to the byte
-    boundary (spec §7.2); 16-bit samples are big-endian. ``palette``
-    is the (n, 3) uint8 PLTE for color type 3. ``interlace=1`` emits
-    the seven Adam7 reduced images in pass order, each packed and
-    filtered as an independent image (spec §8.2), empty passes omitted."""
-    import struct
-    import zlib
-
-    if img.ndim == 2:
-        img = img[..., None]
-    h, w, c = img.shape
-    channels = _PNG_CHANNELS.get(color_type)
-    if channels is None or c != channels:
-        raise ValueError(
-            f"color type {color_type} wants {channels} channel(s), got {c}"
-        )
-    if bit_depth not in _PNG_VALID_DEPTHS[color_type]:
-        raise ValueError(
-            f"bit depth {bit_depth} is not spec-legal for color type "
-            f"{color_type}"
-        )
-    if interlace not in (0, 1):
-        raise ValueError(f"invalid PNG interlace method {interlace}")
-    bpp = max(1, channels * bit_depth // 8)
-    if interlace:
-        lines = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            sub = img[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            lines += _png_filter_rows(
-                _png_pack_rows(sub, bit_depth), bpp, filter_type
-            )
-    else:
-        lines = _png_filter_rows(
-            _png_pack_rows(img, bit_depth), bpp, filter_type
-        )
-
-    ihdr = struct.pack(
-        ">IIBBBBB", w, h, bit_depth, color_type, 0, 0, interlace
-    )
-    parts = PNG_SIG + _png_chunk(b"IHDR", ihdr)
-    if color_type == 3:
-        if palette is None:
-            raise ValueError("color type 3 requires a palette")
-        parts += _png_chunk(
-            b"PLTE", np.ascontiguousarray(palette, dtype=np.uint8).tobytes()
-        )
-    return (
-        parts
-        + _png_chunk(b"IDAT", zlib.compress(bytes(lines), 6))
-        + _png_chunk(b"IEND", b"")
-    )
 
 
 def _png_unfilter(
@@ -847,17 +624,6 @@ def decode_real(payload: bytes, kind: str | None = None):
     raise NotImplementedError("compressed-codec path not wired yet")
 
 
-def _fake_decode_features(buf: bytes, bins: int = N_FEATURES) -> np.ndarray:
-    """Deterministic FAKE decode: byte histogram normalized to sum 1 —
-    stands in for pixel/spectral statistics. Pure numpy over the Arrow
-    buffer, vectorized per batch."""
-    if len(buf) == 0:
-        return np.zeros(bins)
-    arr = np.frombuffer(buf, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=bins, range=(0, 256))
-    return hist / len(arr)
-
-
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction: mapInPandas over (media_id,
     kind, content) — metadata and any other columns are pruned before
@@ -1051,255 +817,3 @@ def wav_decode_stats(wavs: DataFrame) -> DataFrame:
             )
 
     return wavs.select("media_id", "content").mapInPandas(fn, WAV_STATS_SCHEMA)
-
-
-AHASH_SIZE = 8           # 8x8 downsample -> 64-bit perceptual hash
-AHASH_BLOCKS = 4         # pigeonhole blocks of 16 bits each
-AHASH_HAMMING_MAX = 3    # pairs within 3 bit flips; < AHASH_BLOCKS, so
-                         # the pigeonhole guarantee holds (no misses)
-
-
-def ahash_bits(img: np.ndarray) -> int:
-    """Average-hash (aHash) of a decoded (h, w, 3) image: nearest-
-    neighbor downsample to 8x8, integer grayscale (channel sum DIV 3),
-    threshold at the integer mean (sum DIV 64), pack row-major into 64
-    bits. Every step is integer arithmetic — the hash is a pure
-    function of the pixel bytes, reproducible anywhere (no float
-    luminance weights, no library resampler variance)."""
-    small = resample_nearest(img, AHASH_SIZE, AHASH_SIZE)
-    gray = small.astype(np.int64).sum(axis=2) // 3
-    mean = int(gray.sum()) // (AHASH_SIZE * AHASH_SIZE)
-    bits = (gray > mean).flatten()
-    h = 0
-    for b in bits:
-        h = (h << 1) | int(b)
-    # signed-long view so the value rides a Spark LongType unchanged
-    return int(np.int64(np.uint64(h)))
-
-
-def dhash_bits(img: np.ndarray) -> int:
-    """Difference-hash (dHash) of a decoded (h, w, 3) image: nearest-
-    neighbor downsample to 8 rows x 9 columns, integer grayscale
-    (channel sum DIV 3), bit (y, x) = gray[y, x+1] > gray[y, x],
-    packed row-major into 64 bits. Complements aHash: comparing
-    ADJACENT pixels makes the hash invariant under smooth illumination
-    GRADIENTS (a left-to-right light ramp adds a near-constant delta
-    to each neighbor difference), where aHash's global-mean threshold
-    flips half its bits — the classic reason production image dedup
-    runs both. All integer arithmetic, container-independent."""
-    small = resample_nearest(img, AHASH_SIZE + 1, AHASH_SIZE)  # (8, 9, 3)
-    gray = small.astype(np.int64).sum(axis=2) // 3
-    bits = (gray[:, 1:] > gray[:, :-1]).flatten()
-    h = 0
-    for b in bits:
-        h = (h << 1) | int(b)
-    return int(np.int64(np.uint64(h)))
-
-
-def _media_hash64(images: DataFrame, hash_fn) -> DataFrame:
-    """Shared narrow Arrow stage for 64-bit image hashes: decode every
-    payload, apply ``hash_fn(img) -> int64``, emit (media_id, ahash).
-    Payloads never shuffle; only the 8-byte hash rides downstream
-    joins. Undecodable/NULL/audio payloads are dropped (quarantine-sink
-    pattern, as the other real-decode ops)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                try:
-                    modality, img = decode_real(bytes(buf))
-                    if modality != "image":
-                        continue
-                    h = hash_fn(img)
-                except Exception:
-                    continue
-                ids.append(mid)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "ahash": pd.Series(hs, dtype="int64"),
-                }
-            )
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("ahash", LongType())]
-    )
-    return images.select("media_id", "content").mapInPandas(fn, schema)
-
-
-def media_ahash(images: DataFrame) -> DataFrame:
-    """Average-hash table: (media_id, ahash) for every decodable image
-    payload (BMP/PPM/PNG; the codec-free decode path)."""
-    return _media_hash64(images, ahash_bits)
-
-
-def media_dhash(images: DataFrame) -> DataFrame:
-    """Difference-hash table — same contract as media_ahash (the output
-    column keeps the ``ahash`` name so hash64_near_pairs serves every
-    64-bit hash family unchanged)."""
-    return _media_hash64(images, dhash_bits)
-
-
-def dhash_near_pairs(
-    images: DataFrame,
-    hamming_max: int = AHASH_HAMMING_MAX,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Image near-dup pairs by gradient hash: dHash every decodable
-    image payload, then the shared 64-bit pigeonhole pairing."""
-    return hash64_near_pairs(media_dhash(images), hamming_max, max_bucket)
-
-
-def hash64_near_pairs(
-    hashes: DataFrame,
-    hamming_max: int = AHASH_HAMMING_MAX,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit perceptual hash table
-    (media_id, ahash): pigeonhole the 64 bits into AHASH_BLOCKS (4)
-    16-bit blocks (hamming <= hamming_max < blocks implies at least one
-    block matches exactly — candidate generation has NO false negatives
-    within the radius), block-bucket self-join with a deterministic
-    per-bucket cap, exact popcount verify on the full hash. Shared by
-    the image (media_ahash) and audio (media_wav_energy_hash) dedup
-    passes.
-
-    At scale: payloads stay in the upstream narrow hash stage; the
-    banding shuffle carries (media_id, block_idx, 16-bit key); pair
-    expansion is O(cap²) per bucket; verification is one xor+bit_count
-    per surviving pair."""
-    from pyspark.sql import Window
-
-    if not 0 <= hamming_max < AHASH_BLOCKS:
-        # the pigeonhole guarantee is exactly hamming_max < #blocks; a
-        # wider radius would silently lose candidates whose flips hit
-        # every block (r8 self-review) — refuse rather than under-recall
-        raise ValueError(
-            f"hamming_max must be in [0, {AHASH_BLOCKS}) for the "
-            f"{AHASH_BLOCKS}-block pigeonhole guarantee, got {hamming_max}"
-        )
-    blocks = hashes.select(
-        "media_id", "ahash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("block_idx"),
-                    F.shiftright("ahash", i * 16).bitwiseAND(F.lit(0xFFFF))
-                    .alias("block_key"),
-                )
-                for i in range(AHASH_BLOCKS)
-            ])
-        ).alias("b"),
-    ).select("media_id", "ahash", "b.block_idx", "b.block_key")
-    rn = F.row_number().over(
-        Window.partitionBy("block_idx", "block_key").orderBy("media_id")
-    )
-    capped = blocks.withColumn("rn", rn).filter(F.col("rn") <= max_bucket)
-    a = capped.select(
-        F.col("media_id").alias("media_a"), F.col("ahash").alias("hash_a"),
-        "block_idx", "block_key",
-    )
-    b = capped.select(
-        F.col("media_id").alias("media_b"), F.col("ahash").alias("hash_b"),
-        "block_idx", "block_key",
-    )
-    return (
-        a.join(b, ["block_idx", "block_key"])
-        .filter(F.col("media_a") < F.col("media_b"))
-        .select("media_a", "media_b", "hash_a", "hash_b")
-        .distinct()
-        .select(
-            "media_a", "media_b",
-            F.bit_count(
-                F.col("hash_a").bitwiseXOR(F.col("hash_b"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= hamming_max)
-        .orderBy("media_a", "media_b")
-    )
-
-
-def ahash_near_pairs(
-    images: DataFrame,
-    hamming_max: int = AHASH_HAMMING_MAX,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Image near-dup pairs: aHash every decodable image payload, then
-    the shared 64-bit pigeonhole pairing (hash64_near_pairs). The image
-    analog of simhash_near_pairs for the multimodal dedup pass."""
-    return hash64_near_pairs(media_ahash(images), hamming_max, max_bucket)
-
-
-def wav_energy_bits(samples: np.ndarray, n_windows: int = 64) -> int:
-    """64-bit audio fingerprint: split the clip into 64 equal windows,
-    integer mean |amplitude| per window (sum DIV len), threshold at the
-    integer mean of the window means. Pure integer arithmetic over the
-    decoded PCM — reproducible anywhere, robust to low-amplitude noise
-    (a perturbation must move a window's mean energy across the global
-    mean to flip a bit). Clips shorter than n_windows samples repeat
-    windows via the same nearest-neighbor index math as the image
-    resampler."""
-    v = np.abs(samples.astype(np.int64))
-    n = len(v)
-    if n == 0:
-        return 0
-    idx = (np.arange(n_windows + 1) * n) // n_windows
-    means = np.array(
-        [int(v[idx[i]:max(idx[i + 1], idx[i] + 1)].mean())
-         for i in range(n_windows)],
-        dtype=np.int64,
-    )
-    mean = int(means.sum()) // n_windows
-    h = 0
-    for b in means > mean:
-        h = (h << 1) | int(b)
-    return int(np.int64(np.uint64(h)))
-
-
-def media_wav_energy_hash(wavs: DataFrame) -> DataFrame:
-    """Audio fingerprint table: (media_id, ahash) for every decodable
-    WAV payload — the audio twin of media_ahash (same output contract,
-    so hash64_near_pairs serves both). Narrow Arrow stage; payloads
-    never shuffle."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs = [], []
-            for mid, buf in zip(pdf["media_id"], pdf["content"]):
-                if buf is None:
-                    continue
-                try:
-                    samples, _rate = decode_wav(bytes(buf))
-                    h = wav_energy_bits(samples)
-                except Exception:
-                    continue
-                ids.append(mid)
-                hs.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "ahash": pd.Series(hs, dtype="int64"),
-                }
-            )
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("ahash", LongType())]
-    )
-    return wavs.select("media_id", "content").mapInPandas(fn, schema)
-
-
-def wav_near_pairs(
-    wavs: DataFrame,
-    hamming_max: int = AHASH_HAMMING_MAX,
-    max_bucket: int = 256,
-) -> DataFrame:
-    """Audio near-dup pairs: energy-envelope fingerprint + the shared
-    64-bit pigeonhole pairing — completes the text/image/audio dedup
-    modality matrix."""
-    return hash64_near_pairs(
-        media_wav_energy_hash(wavs), hamming_max, max_bucket
-    )

@@ -1,12 +1,12 @@
-"""Distributed exact global rank / NTILE and per-group rank / running sum
-via the block decomposition.
+"""Distributed exact per-group rank and running sum via the block
+decomposition.
 
-The scale problem: ``ROW_NUMBER() / NTILE(k) OVER (ORDER BY ...)`` with
-no PARTITION BY plans as ``Exchange SinglePartition + Sort + Window`` —
-the whole frame funnels through ONE task. Fine over a bounded grain
-(a 50-row distinct-value count table), a scale-killer over a
-data-scaling grain (customers, documents, users): at 100 TB that is
-billions of rows through a single sort.
+The scale problem: ``ROW_NUMBER() OVER (PARTITION BY g ORDER BY ...)``
+funnels each group through ONE task, and with no PARTITION BY the whole
+frame goes through ``Exchange SinglePartition + Sort + Window``. Fine
+over a bounded grain (a 50-row distinct-value count table), a
+scale-killer over a data-scaling grain (customers, documents, users):
+at 100 TB that is billions of rows through a single sort.
 
 The decomposition (same family as ``text_length_trim``, generalized to
 near-unique value domains):
@@ -23,32 +23,9 @@ near-unique value domains):
      TINY block table;
   3. broadcast the offsets back and take ``row_number()`` WITHIN each
      block (``Window.partitionBy(block)`` — parallel across blocks);
-     ``rank = below + rn`` is the exact global rank because blocks are
+     ``rank = below + rn`` is the exact rank because blocks are
      order-aligned and the within-block order completes the total
      order (callers must pass a tie-breaking key).
-
-NTILE is then pure arithmetic on (rank, n): with ``c = n DIV k`` and
-``r = n MOD k``, SQL-standard NTILE gives the first ``r`` buckets
-``c+1`` rows and the rest ``c`` (both engines agree on this
-uneven-bucket rule) — so
-``bucket = (rank-1) DIV (c+1) + 1``            when rank <= r*(c+1)
-``bucket = r + (rank - r*(c+1) - 1) DIV c + 1`` otherwise,
-and the ``c == 0`` (fewer rows than buckets) edge degenerates to
-``bucket = rank`` through the first arm (cutoff = n covers every row).
-
-MULTI-METRIC SCORING (``with_ntiles``): scoring the same frame under
-several orderings (say recency, frequency and monetary) must NOT chain
-three single-metric passes — each pass re-references its upstream for
-the block-count branch, and chained that doubles per level (measured:
-2^3 = 8 scans of the upstream aggregate in a naive 3-metric chain; exchange
-reuse does not fire because column pruning makes the branch subtrees
-non-identical). Instead the metrics are MELTED into rows
-(key, metric_id, sort_key), ranked in ONE decomposition partitioned by
-(metric, block) with PER-METRIC offset windows (the offsets window is
-``partitionBy(metric)`` over block-grain rows — not even a
-single-partition exchange), and the bucket scores pivoted back with a
-conditional-max aggregate. Upstream cost is a flat 2 references (the
-melted frame and its block-count aggregate) for ANY number of metrics.
 
 Reference parity: the reference engine has no window functions at all —
 this is beyond-reference engine surface.
@@ -73,116 +50,6 @@ def _guard_scratch(df: DataFrame, names: set[str], ctx: str) -> None:
         )
 
 
-def ntile_expr(rank_col: str, n_col: str, buckets: int) -> Column:
-    """SQL-standard ``NTILE(buckets)`` as exact integer arithmetic over
-    the named long columns ``rank_col`` (1-based global rank) and
-    ``n_col`` (total rows) — see module docstring for the derivation.
-    All-integer (DIV) so the bucket is exact at any n a long can hold;
-    the ELSE arm's ``DIV c`` is unreachable when ``c == 0`` (the
-    n < buckets edge routes every row through the WHEN arm, and CASE
-    short-circuits per row, so ANSI mode never sees the zero
-    divisor)."""
-    k = buckets
-    c = f"({n_col} DIV {k})"
-    r = f"({n_col} % {k})"
-    cutoff = f"({r} * ({c} + 1))"
-    return F.expr(
-        f"CAST(CASE WHEN {rank_col} <= {cutoff} "
-        f"THEN ({rank_col} - 1) DIV ({c} + 1) + 1 "
-        f"ELSE {r} + ({rank_col} - {cutoff} - 1) DIV {c} + 1 "
-        f"END AS INT)"
-    )
-
-
-def with_ntiles(
-    df: DataFrame,
-    key: str,
-    specs: list[tuple[str, Column, int]],
-    *,
-    buckets: int,
-) -> DataFrame:
-    """Append one ``NTILE(buckets) OVER (ORDER BY value DESC, key ASC)``
-    score column per spec ``(out_col, value, block_width)`` — computed
-    scale-safely in ONE melted rank decomposition (module docstring).
-
-    ``key`` must be a unique key column of ``df`` (it is both the
-    NTILE tiebreak and the pivot-back join key); each ``value`` must be
-    an integral Column over ``df`` (cast dates/cents onto longs) and
-    each ``block_width`` a positive constant chosen from the value's
-    DOMAIN so ``range(value)/block_width`` stays O(thousands)."""
-    if not specs:
-        raise ValueError("with_ntiles needs at least one spec")
-    for out_col, _, w in specs:
-        if w <= 0:
-            raise ValueError(f"block_width for {out_col} must be > 0")
-    _guard_scratch(
-        df,
-        {"_t", *(out_col for out_col, _, _ in specs)},
-        "with_ntiles",
-    )
-    entries = [
-        F.struct(
-            F.lit(i).alias("_m"),
-            (-value).cast("long").alias("_s"),
-            F.lit(int(w)).cast("long").alias("_w"),
-        )
-        for i, (_, value, w) in enumerate(specs)
-    ]
-    melted = (
-        df.select(F.col(key).alias("_t"), F.explode(F.array(*entries)).alias("e"))
-        .select("_t", "e._m", "e._s", "e._w")
-        .select("_t", "_m", "_s", F.expr("_s DIV _w").alias("_blk"))
-    )
-    counts = melted.groupBy("_m", "_blk").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    w_below = (
-        Window.partitionBy("_m")
-        .orderBy("_blk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "_m",
-        "_blk",
-        F.coalesce(F.sum("_cnt").over(w_below), F.lit(0)).alias("_below"),
-        F.sum("_cnt").over(Window.partitionBy("_m")).alias("_n"),
-    )
-    w_within = Window.partitionBy("_m", "_blk").orderBy("_s", "_t")
-    ranked = (
-        melted.withColumn("_rn", F.row_number().over(w_within))
-        .join(F.broadcast(offsets), ["_m", "_blk"])
-        .select(
-            "_t",
-            "_m",
-            (F.col("_below") + F.col("_rn")).cast("long").alias("_rank"),
-            F.col("_n"),
-        )
-        .withColumn("_q", ntile_expr("_rank", "_n", buckets))
-    )
-    scores = ranked.groupBy("_t").agg(
-        *[
-            F.max(F.when(F.col("_m") == i, F.col("_q"))).alias(out_col)
-            for i, (out_col, _, _) in enumerate(specs)
-        ]
-    )
-    return df.join(scores, F.col(key) == scores["_t"]).drop("_t")
-
-
-def with_ntile(
-    df: DataFrame,
-    value: Column,
-    key: str,
-    *,
-    buckets: int,
-    out_col: str,
-    block_width: int,
-) -> DataFrame:
-    """Single-metric convenience wrapper over ``with_ntiles``."""
-    return with_ntiles(
-        df, key, [(out_col, value, block_width)], buckets=buckets
-    )
-
-
 def grouped_rank(
     df: DataFrame,
     group_cols: list[str],
@@ -197,8 +64,8 @@ def grouped_rank(
     by ``tie_col``) WITHIN each ``group_cols`` group, plus the group
     size — without ever planning a per-group global sort.
 
-    This is the same block decomposition as ``with_ntiles`` with the
-    melt axis replaced by real grouping columns: a bare
+    This is the module's block decomposition with the grouping columns
+    carried through every step: a bare
     ``ROW_NUMBER() OVER (PARTITION BY grp ORDER BY v)`` funnels each
     group through ONE task, and when the group grain is data-scaling
     (customers per nation, docs per source) that is the global-sort

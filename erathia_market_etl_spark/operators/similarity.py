@@ -194,7 +194,7 @@ def sign_band_near_pairs(emb, threshold: float = 0.9,
                          max_bucket: int = 256):
     """Embedding near-dup pairs via banded sign-LSH with a hot-bucket cap.
 
-    Scale shape (mirrors operators/dedup.py minhash_candidate_pairs):
+    Scale shape (mirrors operators/dedup.py candidate_pairs_from_bands):
       1. band table carries (id, band_idx, band_key) only — embeddings
          stay out of the banding shuffle;
       2. buckets truncated to ``max_bucket`` members deterministically

@@ -282,29 +282,3 @@ def run_gold(spark: SparkSession, silver_dir: str,
                 os.path.join(gold_dir, name)
             )
     return marts
-
-
-def list_marts(spark: SparkSession) -> list[str]:
-    """Catalog surface (S11): the viewer's dm_% discovery."""
-    return [t.name for t in spark.catalog.listTables() if t.name.startswith("dm_")]
-
-
-def run_full_pipeline(spark: SparkSession, work_dir: str,
-                      weeks: int | None = None, seed: int | None = None) -> dict:
-    """Entry point D analog (main.py choice '4'): bronze generation ->
-    silver cleaning -> gold marts, one call."""
-    from .config import SimulationConfig
-    from .generator.bronze import generate_bronze
-
-    cfg = SimulationConfig()
-    if seed is not None:
-        cfg.seed = seed
-    bronze_dir = os.path.join(work_dir, "bronze")
-    silver_dir = os.path.join(work_dir, "silver")
-    gold_dir = os.path.join(work_dir, "gold")
-    stats = generate_bronze(bronze_dir, weeks=weeks, cfg=cfg)
-    silver_counts = run_silver(spark, bronze_dir, silver_dir)
-    marts = run_gold(spark, silver_dir, gold_dir)
-    for name, df in marts.items():
-        df.createOrReplaceTempView(name)
-    return {"bronze": stats, "silver": silver_counts, "marts": list(marts)}

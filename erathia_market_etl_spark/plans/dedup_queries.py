@@ -52,9 +52,8 @@ def shared_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate pairs over the shared band table — the default-
-    parameter ``minhash_candidate_pairs(docs, "text", "doc_id")``,
-    minus the per-query signature recompute."""
+    """Candidate pairs over the shared band table, with the default
+    bucket cap and no per-query signature recompute."""
     return candidate_pairs_from_bands(shared_minhash_bands(spark, sf_dir))
 
 

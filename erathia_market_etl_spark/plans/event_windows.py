@@ -660,69 +660,6 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the day_rollup_state pattern applied to market candles).
 # ---------------------------------------------------------------------------
 
-def candle_state(events: DataFrame) -> DataFrame:
-    """The mergeable OHLC state of an event slice, one row per
-    (event_type, hour_start): open/close carry their (ts, event_id)
-    attribution keys so the merge can re-decide them, high/low are
-    plain extremes, n_ticks sums. Candles form a commutative MONOID —
-    open = argmin over (ts, id), close = argmax, extremes and counts
-    fold — which is what lets 100 TB tick pipelines build candles
-    per-partition/per-batch and merge, never re-scanning ticks
-    (the day_rollup_state algebra, second member)."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    px = events.select(
-        "event_type",
-        F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-        F.col("ts"),
-        F.col("event_id"),
-        cents.alias("cents"),
-    )
-    open_key = F.struct(
-        F.col("ts").alias("k_ts"),
-        F.col("event_id").alias("k_id"),
-        F.col("cents").alias("k_cents"),
-    )
-    return px.groupBy("event_type", "hour_start").agg(
-        F.min(open_key).alias("open_k"),
-        F.max("cents").alias("high_cents"),
-        F.min("cents").alias("low_cents"),
-        F.max(open_key).alias("close_k"),
-        F.count(F.lit(1)).cast("long").alias("n_ticks"),
-    )
-
-
-def merge_candle_states(*states: DataFrame) -> DataFrame:
-    """Fold any number of candle-state slices into one: re-minimize /
-    re-maximize the attributed open/close keys (struct ordering is
-    lexicographic on (ts, event_id, cents) — ties beyond (ts, id)
-    cannot occur since (ts, id) is unique), fold extremes, sum counts.
-    Associative and commutative; split-vs-full exactness pinned in
-    tests/test_timeseries.py."""
-    from functools import reduce
-
-    u = reduce(lambda a, b: a.unionAll(b), states)
-    return u.groupBy("event_type", "hour_start").agg(
-        F.min("open_k").alias("open_k"),
-        F.max("high_cents").alias("high_cents"),
-        F.min("low_cents").alias("low_cents"),
-        F.max("close_k").alias("close_k"),
-        F.sum("n_ticks").cast("long").alias("n_ticks"),
-    )
-
-
-def present_candles(state: DataFrame) -> DataFrame:
-    """Render a candle state in ohlc_hourly's exact output schema —
-    presentation only, no re-aggregation."""
-    return state.select(
-        "event_type",
-        "hour_start",
-        F.col("open_k.k_cents").alias("open_cents"),
-        "high_cents",
-        "low_cents",
-        F.col("close_k.k_cents").alias("close_cents"),
-        "n_ticks",
-    ).orderBy("event_type", "hour_start")
-
 
 # ---------------------------------------------------------------------------
 # events_peak_concurrency: sweep-line peak concurrent sessions per day.

@@ -80,7 +80,7 @@ def _r6(expr: str) -> str:
 # tests/test_multimodal.py (r4 ADVICE: a non-ASCII vintage would make
 # ord() count codepoints where Spark counts utf-8 bytes); an empty text
 # yields a zeros row on BOTH sides via LEFT JOIN + COALESCE(f_i, 0.0),
-# matching _fake_decode_features' zeros-histogram guard.
+# matching extract_features' zeros row for an empty payload.
 _FEATURE_BINS_SQL = ",\n           ".join(
     f"{_r6(f'SUM(CASE WHEN bin = {i} THEN 1 ELSE 0 END) / COUNT(*)')} AS f{i}"
     for i in range(8)

@@ -1139,7 +1139,7 @@ def q6_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: no joins at all — a conjunctive range predicate
     and one aggregate. The whole query is scan-bound: every predicate
     pushes to the parquet reader (row-group min/max skipping; with
-    write_range_clustered layout on l_shipdate, whole files skip), and
+    files range-clustered on l_shipdate, whole files skip), and
     the aggregation is a single partial+final pair over the survivors.
     The purest test that filters actually reach storage."""
     li = T(spark, sf_dir, "lineitem")

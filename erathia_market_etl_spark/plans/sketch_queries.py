@@ -203,23 +203,3 @@ def hll_registers_frame(keys: DataFrame) -> DataFrame:
         )
         .orderBy("grp")
     )
-
-
-def hll_register_state(keys: DataFrame) -> DataFrame:
-    """The HLL REGISTER STATE of an (x: long < 2^32) frame: (idx, r)
-    rows, one map-side-combinable aggregate bounded by HLL_M (64) rows
-    on the wire. This is the mergeable unit of the HLL family — two
-    frames' states MAX-merge per register index into the union's state
-    (the law agg_hll_registers' 'all' row attests cross-engine; the
-    streaming maintenance sink appends one of these per micro-batch).
-    Unlike the rollup/candle monoids this one is IDEMPOTENT
-    (max ∘ max), so it absorbs retries even without batch_id dedup —
-    the read side dedups anyway to keep one uniform sink contract."""
-    rr = keys.select(_hash32_col("x").alias("h")).select(
-        F.expr(f"h DIV {_W_MOD}").alias("idx"),
-        F.expr(
-            f"CASE WHEN h % {_W_MOD} = 0 THEN {_RHO_MAX} "
-            f"ELSE {_RHO_MAX} - LENGTH(BIN(h % {_W_MOD})) END"
-        ).cast("long").alias("rho"),
-    )
-    return rr.groupBy("idx").agg(F.max("rho").cast("long").alias("r"))

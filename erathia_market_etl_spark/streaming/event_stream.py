@@ -312,26 +312,6 @@ def run_available_now(
     return spark.table(name)
 
 
-def run_foreach_batch_to_parquet(df: DataFrame, path: str) -> list[int]:
-    """foreachBatch sink pattern: per-micro-batch arbitrary writes (the
-    idempotent-upsert hook at scale). Appends each batch to parquet and
-    records batch ids; returns them."""
-    seen: list[int] = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        seen.append(batch_id)
-        batch_df.write.mode("append").parquet(path)
-
-    q = (
-        df.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return seen
-
-
 def _run_state_append(
     source: DataFrame,
     state_path: str,
@@ -339,7 +319,7 @@ def _run_state_append(
     checkpoint: str | None = None,
     after_write: Any = None,
 ) -> list[int]:
-    """Shared runner for the four maintenance sinks: per micro-batch,
+    """Runner for the day-rollup maintenance sink: per micro-batch,
     compute ``slice_fn(batch_df)``'s mergeable state slice, stamp
     ``batch_id``, APPEND it to the parquet state log, then call
     ``after_write(batch_id)`` (commit callback — metrics/alerting in
@@ -348,7 +328,7 @@ def _run_state_append(
     the window a real sink retry duplicates). ``checkpoint`` makes the
     run resumable: a restart replays the uncommitted batch with the
     SAME batch_id and identical content — the duplication the
-    ``read_*_state`` batch_id dedup exists to absorb. Returns the
+    ``read_rollup_state`` batch_id dedup exists to absorb. Returns the
     batch ids processed by THIS run.
 
     A checkpoint is REQUIRED when appending to an already-populated
@@ -462,65 +442,3 @@ def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame:
         ["batch_id", "day_start", "event_type"]
     )
     return merge_rollup_states(log.drop("batch_id"))
-
-
-def streaming_candle_append(
-    events: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Candle maintenance under tick ingest — the OHLC member of the
-    mergeable-state family (rollup sums, candles, HLL registers):
-    each micro-batch appends its (type, hour) candle slice with
-    attributed open/close keys; serving merges on read. Same
-    append-only / batch_id rationale as the other sinks."""
-    from ..plans.event_windows import candle_state
-
-    return _run_state_append(
-        events, state_path, candle_state, checkpoint, after_write
-    )
-
-
-def read_candle_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming candle log: dedup retried slices
-    per (batch_id, event_type, hour_start), then the candle monoid
-    merge. Identical output contract to batch candle_state over the
-    full tick log (pinned in tests/test_streaming.py)."""
-    from ..plans.event_windows import merge_candle_states
-
-    log = spark.read.parquet(state_path).dropDuplicates(
-        ["batch_id", "event_type", "hour_start"]
-    )
-    return merge_candle_states(log.drop("batch_id"))
-
-
-def streaming_hll_append(
-    keys: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Distinct-count sketch maintenance under ingest — the HLL member
-    of the mergeable-state family (rollup sums, candles, HLL
-    registers): each micro-batch of keys (column ``x``) appends its
-    (idx, r) register slice (≤ 64 rows regardless of batch size);
-    serving MAX-merges on read. Same append-only / batch_id
-    rationale as the other sinks, with one bonus: max-merge is
-    idempotent, so this state is retry-safe even before the read-side
-    dedup."""
-    from ..plans.sketch_queries import hll_register_state
-
-    return _run_state_append(
-        keys, state_path, hll_register_state, checkpoint, after_write
-    )
-
-
-def read_hll_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming HLL register log: MAX per
-    register index across every appended slice. Identical output
-    contract to batch ``hll_register_state`` over the full key log
-    (pinned in tests/test_streaming.py). Retry dedup per
-    (batch_id, idx) mirrors the other sinks for contract uniformity."""
-    log = spark.read.parquet(state_path).dropDuplicates(["batch_id", "idx"])
-    return log.groupBy("idx").agg(F.max("r").cast("long").alias("r"))

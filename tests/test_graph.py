@@ -7,19 +7,17 @@ from __future__ import annotations
 import pytest
 
 from erathia_market_etl_spark.operators.graph import (
-    connected_components,
     connected_components_auto,
     connected_components_star,
 )
 
 KERNELS = [
-    connected_components,
     connected_components_star,
     connected_components_auto,
 ]
 
 
-def _cc(spark, edges, kernel=connected_components, **kw):
+def _cc(spark, edges, kernel=connected_components_auto, **kw):
     df = spark.createDataFrame(edges, ["src", "dst"])
     out = kernel(df, "src", "dst", **kw)
     rows = out.collect()
@@ -91,10 +89,8 @@ def test_kernels_agree_on_random_graphs(spark):
         want = {v: find(v) for v in touched}
 
         star = _cc(spark, edges, connected_components_star)
-        ml = _cc(spark, edges, connected_components)
         auto = _cc(spark, edges, connected_components_auto)
         assert star == want, f"star kernel wrong for seed {seed}"
-        assert ml == want, f"min-label kernel wrong for seed {seed}"
         assert auto == want, f"auto kernel wrong for seed {seed}"
 
 
@@ -124,10 +120,12 @@ def test_star_collapses_path_in_log_rounds(spark):
     assert got == {1000 + i: 1000 for i in range(n)}  # correct at the cap
     assert stats["rounds"] <= 10, stats
 
-    ml_stats: dict = {}
-    ml = _cc(spark, edges, connected_components, max_iter=cap, stats=ml_stats)
-    assert ml_stats["rounds"] == cap  # cap exhausted, still propagating
-    assert ml != got  # labels not yet converged — the O(diameter) bound
+    # min-label is still propagating when the same budget runs out (the
+    # O(diameter) bound), so the auto kernel has to escalate
+    auto_stats: dict = {}
+    auto = _cc(spark, edges, escalate_after=cap, stats=auto_stats)
+    assert auto_stats["kernel"] == "minlabel+star", auto_stats
+    assert auto == got
 
 
 def test_auto_kernel_stays_minlabel_on_dense(spark):
@@ -242,9 +240,9 @@ def test_star_prepass_reuses_canon_exchange(spark):
 
 
 def test_cached_edge_partitioning_survives_into_join(spark):
-    """connected_components persists the edge table pre-partitioned on
-    the join key INSTEAD of localCheckpoint (which drops
-    outputPartitioning). Pin the planner behavior that makes that
+    """The connected-components kernels persist the edge table
+    pre-partitioned on the join key INSTEAD of localCheckpoint (which
+    drops outputPartitioning). Pin the planner behavior that makes that
     worthwhile: under sort-merge (the at-scale shape, labels too big to
     broadcast), the cached side joins with NO new exchange — only the
     labels side shuffles. If a Spark upgrade stops honoring cached
@@ -336,14 +334,15 @@ def test_fixture_lsh_graph_routes_minlabel(spark):
     green) but dedup_corpus_representatives' bench cost jumps; fail
     HERE first with the routing stats in hand."""
     from erathia_market_etl_spark.operators.dedup import (
-        minhash_candidate_pairs,
+        candidate_pairs_from_bands,
+        minhash_band_table,
     )
     from erathia_market_etl_spark.sources.parquet_io import load_table
 
     from .conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    pairs = minhash_candidate_pairs(docs, "text", "doc_id")
+    pairs = candidate_pairs_from_bands(minhash_band_table(docs, "text", "doc_id"))
     stats: dict = {}
     out = connected_components_auto(pairs, "doc_a", "doc_b", stats=stats)
     assert out.count() > 0

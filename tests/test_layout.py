@@ -1,64 +1,9 @@
-"""Data-layout verification: write_range_clustered must produce parquet
-files whose footer min/max statistics on the cluster key are pairwise
-disjoint — the property file-skipping readers (Spark, DuckDB, Trino,
-Iceberg planning) prune on. Checked from the real parquet metadata via
-pyarrow, not from Spark's plan."""
+"""Scan layout: ``fan_out`` rebalances a scan with too few splits and
+leaves one at full parallelism alone."""
 
 from __future__ import annotations
 
-import os
-
-import pyarrow.parquet as pq
-
-from erathia_market_etl_spark.sources.parquet_io import (
-    load_table,
-    write_range_clustered,
-)
-
-from .conftest import SF_SMOKE
-
-
-def _file_ranges(path, col):
-    ranges = []
-    for name in os.listdir(path):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        idx = md.schema.to_arrow_schema().get_field_index(col)
-        lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-        ranges.append((lo, hi))
-    return sorted(ranges)
-
-
-def test_range_clustered_files_have_disjoint_stats(spark, tmp_path):
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "clustered")
-    write_range_clustered(li, out, ["l_shipdate"], n_files=4)
-
-    ranges = _file_ranges(out, "l_shipdate")
-    assert len(ranges) >= 2  # actually split
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        # range partitioning puts equal keys in one partition; successive
-        # files may touch at the boundary but never interleave
-        assert hi_prev <= lo_next
-
-    # row count preserved
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-
-
-def test_unclustered_baseline_overlaps(spark, tmp_path):
-    """Sanity check that the property is non-trivial: a plain repartition
-    (round-robin) write produces overlapping file ranges."""
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "roundrobin")
-    li.repartition(4).write.mode("overwrite").parquet(out)
-    ranges = _file_ranges(out, "l_shipdate")
-    overlaps = sum(
-        1 for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]) if hi_prev > lo_next
-    )
-    assert overlaps > 0
+from erathia_market_etl_spark.sources.parquet_io import fan_out
 
 
 def test_fan_out_rebalances_small_scan(spark):
@@ -66,8 +11,6 @@ def test_fan_out_rebalances_small_scan(spark):
     round-robin rebalanced to defaultParallelism; an input already at or
     above that parallelism is returned untouched (the production case —
     no shuffle is added at real split counts)."""
-    from erathia_market_etl_spark.sources.parquet_io import fan_out
-
     n = spark.sparkContext.defaultParallelism
     small = spark.range(100).coalesce(1)
     assert fan_out(small).rdd.getNumPartitions() == n
@@ -75,339 +18,3 @@ def test_fan_out_rebalances_small_scan(spark):
     big = spark.range(100).repartition(n + 3)
     out = fan_out(big)
     assert out is big  # identity, not just same partition count
-
-
-def test_zorder_files_are_tight_on_every_dimension(spark, tmp_path):
-    """write_zorder(l_partkey, l_suppkey): file footers must be tight
-    on BOTH dimensions — the property that makes a predicate on either
-    column, or both, skip files. A contiguous row-balanced split of a
-    Morton curve necessarily leaves the few files that straddle a
-    high-bit boundary wide on one dimension (the curve jumps there;
-    Delta's OPTIMIZE ZORDER has the same artifact), so the pin is
-    statistical: >= 3/4 of files tight (<= 0.6 of the global span) and
-    the MEAN span <= 0.5, per dimension. Range clustering by l_partkey
-    alone would leave l_suppkey footers spanning the full range in
-    every file (asserted as the contrast, proving the interleave is
-    doing the work)."""
-    from erathia_market_etl_spark.sources.parquet_io import write_zorder
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    out = str(tmp_path / "zordered")
-    write_zorder(li, out, ["l_partkey", "l_suppkey"], n_files=16)
-
-    for col in ("l_partkey", "l_suppkey"):
-        ranges = _file_ranges(out, col)
-        glo = min(lo for lo, _ in ranges)
-        ghi = max(hi for _, hi in ranges)
-        span = ghi - glo
-        assert len(ranges) >= 8
-        fracs = sorted((hi - lo) / span for lo, hi in ranges)
-        tight = sum(1 for f in fracs if f <= 0.6)
-        assert tight >= 3 * len(fracs) // 4, (col, fracs)
-        assert sum(fracs) / len(fracs) <= 0.5, (col, fracs)
-
-    back = spark.read.parquet(out)
-    assert back.count() == li.count()
-    assert set(back.columns) == set(li.columns)  # __zkey dropped
-
-    # contrast: single-key range clustering leaves the OTHER dim wide
-    out2 = str(tmp_path / "rangeonly")
-    write_range_clustered(li, out2, ["l_partkey"], n_files=8)
-    supp = _file_ranges(out2, "l_suppkey")
-    gspan = max(h for _, h in supp) - min(l for l, _ in supp)
-    assert all((hi - lo) >= 0.9 * gspan for lo, hi in supp)
-
-
-def test_zorder_rejects_single_column_and_overflow(spark):
-    import pytest
-
-    from erathia_market_etl_spark.sources.parquet_io import zorder_key
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    with pytest.raises(ValueError):
-        zorder_key(li, ["l_partkey"])
-    with pytest.raises(ValueError):
-        zorder_key(li, ["l_partkey", "l_suppkey"], bits=32)
-
-
-def test_zorder_rejects_empty_input(spark):
-    """Empty input has no min/max: the key builder must fail with a
-    named-column ValueError, not a bare TypeError on int(None).
-    (Non-integral columns are already rejected loudly by Spark's cast
-    analysis — timestamp->bigint is a DATATYPE_MISMATCH — so only the
-    NULL-stats path needs the guard.)"""
-    import pytest
-
-    from erathia_market_etl_spark.sources.parquet_io import zorder_key
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    with pytest.raises(ValueError, match="l_partkey"):
-        zorder_key(li.filter("l_partkey < 0"), ["l_partkey", "l_suppkey"])
-
-
-def test_zorder_rejects_overflowing_span(spark):
-    """span > 2^(63-bits) would wrap (v-min)*2^bits under Spark's
-    non-ANSI long multiply and silently garbage the key — refused."""
-    import pytest
-
-    from erathia_market_etl_spark.sources.parquet_io import zorder_key
-
-    wide = spark.createDataFrame(
-        [(0, 0), (1 << 50, 1)], "a long, b long"
-    )
-    with pytest.raises(ValueError, match="overflow"):
-        zorder_key(wide, ["a", "b"])
-
-
-def test_zorder_overflow_guard_boundary(spark):
-    """Exact boundary (r9 ADVICE off-by-one): span-1 == 2^(63-bits)
-    makes the largest product (span-1)*2^bits exactly 2^63, which wraps
-    a signed long — must be refused. span-1 == 2^(63-bits) - 1 keeps
-    the product at 2^63 - 2^bits and must be accepted."""
-    import pytest
-
-    from erathia_market_etl_spark.sources.parquet_io import (
-        ZORDER_BITS,
-        zorder_key,
-    )
-
-    limit = 1 << (63 - ZORDER_BITS)
-    at_limit = spark.createDataFrame([(0, 0), (limit, 1)], "a long, b long")
-    with pytest.raises(ValueError, match="overflow"):
-        zorder_key(at_limit, ["a", "b"])
-
-    below = spark.createDataFrame([(0, 0), (limit - 1, 1)], "a long, b long")
-    key, _ = zorder_key(below, ["a", "b"])
-    # the max-value row must scale to the top bucket, not a wrapped key
-    top = below.select(key.alias("k")).agg({"k": "max"}).first()[0]
-    assert top >= 0
-
-
-def test_composed_layout_partition_dirs_with_disjoint_key_files(spark, tmp_path):
-    """The 100 TB layout rehearsal (r9 VERDICT item 8): SCALE.md
-    prescribes partitionBy(date) x range-clustered(key) for the fact
-    table; the tools were pinned separately — this composes them on the
-    REAL sf0.1 events table and verifies both pruning axes from actual
-    parquet footers: hive date directories exist, and within every
-    directory the user_id footer ranges are pairwise disjoint (touching
-    at a boundary value allowed, never interleaved), so a
-    date-range + user-range predicate prunes dirs first and skips files
-    second."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.sources.events import load_events
-    from erathia_market_etl_spark.sources.parquet_io import (
-        write_partitioned_clustered,
-    )
-
-    ev = load_events(spark, "/root/testdata/sf0.1").withColumn(
-        "event_date", F.to_date("ts")
-    )
-    out = str(tmp_path / "fact_composed")
-    # 64 range tasks over 30 dates -> ~2 files per date dir, so the
-    # within-dir disjointness below is exercised, not vacuous
-    write_partitioned_clustered(
-        ev, out, ["event_date"], ["user_id"], n_files=64
-    )
-
-    date_dirs = sorted(
-        d for d in os.listdir(out) if d.startswith("event_date=")
-    )
-    assert len(date_dirs) == 30  # one hive dir per fixture day
-
-    multi_file_dirs = 0
-    for d in date_dirs:
-        ranges = _file_ranges(os.path.join(out, d), "user_id")
-        if len(ranges) >= 2:
-            multi_file_dirs += 1
-        for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-            assert hi_prev <= lo_next, f"interleaved key ranges in {d}"
-    # the composition is only proven if dirs really hold several
-    # range-clustered files
-    assert multi_file_dirs >= 15
-
-    # nothing lost in the rewrite, and the partition column survives
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-    one_day = back.filter(F.col("event_date") == "2024-01-05")
-    assert one_day.count() == ev.filter(
-        F.col("event_date") == "2024-01-05"
-    ).count()
-
-
-def test_compact_small_files_restores_clustering(spark, tmp_path):
-    """Compaction contract: a dataset fragmented into 64 interleaved
-    files comes back as ~total/target files with identical rows, and
-    with cluster_cols the rewrite also RESTORES footer disjointness on
-    the key (plain coalesce of interleaved appends cannot)."""
-    from erathia_market_etl_spark.sources.events import load_events
-    from erathia_market_etl_spark.sources.parquet_io import (
-        compact_small_files,
-    )
-
-    ev = load_events(spark, SF_SMOKE).select("event_id", "user_id")
-    frag = str(tmp_path / "fragmented")
-    # round-robin 64-way fragmentation interleaves user_id everywhere
-    ev.repartition(64).write.mode("overwrite").parquet(frag)
-    assert len(_file_ranges(frag, "user_id")) == 64
-
-    out = str(tmp_path / "compacted")
-    total = sum(
-        os.path.getsize(os.path.join(frag, f))
-        for f in os.listdir(frag)
-        if f.endswith(".parquet")
-    )
-    stats = compact_small_files(
-        spark, frag, out, target_bytes=total // 4 + 1,
-        cluster_cols=["user_id"],
-    )
-    assert stats["n_files_before"] == 64
-    assert 2 <= stats["n_files_after"] <= 6
-    assert stats["rows"] == ev.count()
-
-    # row fidelity
-    back = spark.read.parquet(out)
-    assert sorted(r["event_id"] for r in back.collect()) == sorted(
-        r["event_id"] for r in ev.collect()
-    )
-
-    # clustering restored: disjoint (touching-allowed) user_id footers
-    ranges = _file_ranges(out, "user_id")
-    assert len(ranges) >= 2
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next
-
-
-def test_compact_partitioned_is_per_dir(spark, tmp_path):
-    """Per-partition compaction contract (r10 VERDICT item 3): over a
-    two-partition fragmented hive layout, each date= dir is listed and
-    compacted INDEPENDENTLY (per-dir stats count only that dir's
-    files), per-dir file counts drop to the target, rows survive with
-    the partition column intact, and clustering is restored inside
-    each dir — never via a global root listing or cross-partition
-    shuffle."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.sources.events import load_events
-    from erathia_market_etl_spark.sources.parquet_io import (
-        compact_partitioned,
-    )
-
-    ev = (
-        load_events(spark, SF_SMOKE)
-        .select("event_id", "user_id", F.to_date("ts").alias("day"))
-    )
-    days = [r["day"] for r in ev.select("day").distinct().limit(2).collect()]
-    two = ev.filter(F.col("day").isin(days))
-    frag = str(tmp_path / "hive_frag")
-    # 16-way round-robin inside each of the two date dirs: the
-    # streaming-append fragmentation pattern, interleaved user_id
-    two.repartition(16).write.partitionBy("day").mode("overwrite").parquet(frag)
-
-    part_dirs = sorted(d for d in os.listdir(frag) if d.startswith("day="))
-    assert len(part_dirs) == 2
-    before = {
-        d: sum(
-            1 for f in os.listdir(os.path.join(frag, d))
-            if f.endswith(".parquet")
-        )
-        for d in part_dirs
-    }
-    # each writer task emits a file per day it holds rows for; with 16
-    # round-robin tasks both dirs end up well-fragmented (not all tasks
-    # necessarily hold rows for both days)
-    assert all(n >= 8 for n in before.values())
-
-    out = str(tmp_path / "hive_compact")
-    dir_bytes = {
-        d: sum(
-            os.path.getsize(os.path.join(frag, d, f))
-            for f in os.listdir(os.path.join(frag, d))
-            if f.endswith(".parquet")
-        )
-        for d in part_dirs
-    }
-    stats = compact_partitioned(
-        spark, frag, out,
-        target_bytes=max(dir_bytes.values()) // 4 + 1,
-        cluster_cols=["user_id"],
-    )
-
-    # one stats entry per dir, and each n_files_before equals THAT
-    # dir's own file count — the listing was per-dir, not global
-    assert sorted(stats) == part_dirs
-    for d in part_dirs:
-        assert stats[d]["n_files_before"] == before[d]
-        assert stats[d]["n_files_after"] < before[d]
-        assert 1 <= stats[d]["n_files_after"] <= 6
-        # clustering restored independently inside each dir
-        ranges = _file_ranges(os.path.join(out, d), "user_id")
-        for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-            assert hi_prev <= lo_next
-
-    # partition discovery on the compacted root: rows and the
-    # partition column both intact
-    back = spark.read.parquet(out)
-    assert "day" in back.columns
-    assert back.count() == two.count()
-    per_day = {
-        str(r["day"]): r["n"]
-        for r in back.groupBy("day").agg(F.count("*").alias("n")).collect()
-    }
-    want = {
-        str(r["day"]): r["n"]
-        for r in two.groupBy("day").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_day == want
-
-
-def test_compact_partitioned_rejects_flat_dataset(spark, tmp_path):
-    import pytest
-
-    from erathia_market_etl_spark.sources.events import load_events
-    from erathia_market_etl_spark.sources.parquet_io import (
-        compact_partitioned,
-    )
-
-    flat = str(tmp_path / "flat")
-    load_events(spark, SF_SMOKE).limit(10).write.parquet(flat)
-    with pytest.raises(ValueError, match="no hive partition dirs"):
-        compact_partitioned(spark, flat, str(tmp_path / "o"))
-
-
-def test_compact_partitioned_rejects_nested_hive_levels(spark, tmp_path):
-    """r11 ADVICE: a multi-level hive tree (date=/hour=) must be
-    rejected, not silently flattened — the per-dir compact would read
-    the inner level via discovery and rewrite its partition column as a
-    data column. The error names the per-leaf recursion fix."""
-    import pytest
-
-    from erathia_market_etl_spark.sources.events import load_events
-    from erathia_market_etl_spark.sources.parquet_io import (
-        compact_partitioned,
-    )
-
-    from pyspark.sql import functions as F
-
-    nested = str(tmp_path / "nested")
-    (
-        load_events(spark, SF_SMOKE)
-        .limit(50)
-        .withColumn("d", F.to_date("ts"))
-        .withColumn("h", F.hour("ts"))
-        .write.partitionBy("d", "h")
-        .parquet(nested)
-    )
-    with pytest.raises(ValueError, match="nested hive dirs"):
-        compact_partitioned(spark, nested, str(tmp_path / "o"))
-    # and the single-level leaf still compacts fine
-    import os
-
-    leaf = next(
-        d for d in sorted(os.listdir(nested))
-        if d.startswith("d=") and os.path.isdir(os.path.join(nested, d))
-    )
-    stats = compact_partitioned(
-        spark, os.path.join(nested, leaf), str(tmp_path / "leaf_out")
-    )
-    assert stats and all(v["n_files_after"] >= 1 for v in stats.values())

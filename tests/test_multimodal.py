@@ -8,8 +8,6 @@ import pytest
 from erathia_market_etl_spark.operators.multimodal import (
     FEATURES_SCHEMA,
     HAVE_CODECS,
-    MEDIA_SCHEMA,
-    _fake_decode_features,
     decode_real,
     extract_features,
     media_table,
@@ -28,7 +26,11 @@ def media(spark):
 def test_media_schema(media):
     # names + types must match the contract; nullability is Catalyst's
     # inference (literals/derived exprs come out non-null) and not part of it
-    assert media.schema.simpleString() == MEDIA_SCHEMA.simpleString()
+    assert media.schema.simpleString() == (
+        "struct<media_id:bigint,kind:string,content:binary,meta:struct<"
+        "width:int,height:int,channels:int,sample_rate:int,duration_ms:int,"
+        "n_frames:int,codec:string>>"
+    )
 
 
 def test_kinds_partition_the_table(media):
@@ -54,10 +56,6 @@ def test_extract_features_schema_and_determinism(media):
     assert rows1 == rows2  # byte-level fake is deterministic
     feats = next(iter(rows1.values()))
     assert len(feats) == 8 and abs(sum(feats) - 1.0) < 1e-9
-
-
-def test_fake_decoder_empty_payload():
-    assert list(_fake_decode_features(b"")) == [0.0] * 8
 
 
 def test_sample_frames_expansion(spark, media):
@@ -131,10 +129,9 @@ def test_bmp_roundtrip_real():
 def test_ppm_roundtrip_real():
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_ppm,
-        encode_ppm,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_ppm
+
+    from .encoders import encode_ppm
 
     img = (np.arange(4 * 6 * 3, dtype=np.uint32) * 31 % 256).astype(
         np.uint8
@@ -154,10 +151,9 @@ def test_png_roundtrip_all_filters():
     path, not just the encoder's favorite."""
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png
 
     img = (np.arange(9 * 7 * 3, dtype=np.uint32) * 41 % 256).astype(
         np.uint8
@@ -185,10 +181,9 @@ def test_png_decode_matches_independent_spec_reference():
 
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png
 
     def reference_decode(payload):
         # chunk walk (no CRC check — the point is the filter math)
@@ -248,10 +243,9 @@ def test_png_honest_gates_and_corruption():
 
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png
 
     img = np.full((3, 3, 3), 9, dtype=np.uint8)
     good = encode_png(img)
@@ -312,10 +306,9 @@ def test_png_all_spec_shapes_roundtrip():
     keep_alpha=True returns the RGBA plane."""
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png_ex,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png_ex
 
     rng = np.random.default_rng(1515)
     filters = [0, 1, 2, 3, 4, "mixed"]
@@ -429,10 +422,9 @@ def test_png_adam7_interlace_roundtrip():
     ragged width)."""
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png_ex,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png_ex
 
     rng = np.random.default_rng(715)
     filters = [0, 1, 2, 3, 4, "mixed"]
@@ -481,10 +473,9 @@ def test_png_spec_shapes_fuzz_roundtrip():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_png,
-        encode_png_ex,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_png
+
+    from .encoders import encode_png_ex
 
     SHAPES = [(c, d) for c, ds in
               [(0, (1, 2, 4, 8, 16)), (2, (8, 16)), (3, (1, 2, 4, 8)),
@@ -547,10 +538,11 @@ def test_resize_image_real_accepts_png(spark):
 
     from erathia_market_etl_spark.operators.multimodal import (
         decode_bmp,
-        encode_png,
         resample_nearest,
         resize_image_real,
     )
+
+    from .encoders import encode_png
 
     img = (np.arange(10 * 8 * 3, dtype=np.uint32) * 29 % 256).astype(
         np.uint8
@@ -567,8 +559,7 @@ def test_resize_image_real_accepts_png(spark):
 
 def test_resize_and_hash_accept_all_png_shapes(spark):
     """r15: planted palette, RGBA, gray+alpha, and 16-bit PNG payloads
-    ride the REAL pipeline ops (decode→resample→re-encode and the
-    64-bit hash pass) — the opened gates are first-class citizens, not
+    ride the REAL pipeline op (decode→resample→re-encode) — the opened gates are first-class citizens, not
     just unit-level decoders. Expected pixels come from the same
     arithmetic the decoder contracts pin (palette lookup / alpha drop /
     exact 16→8 scaling), so the resize outputs are value-checked, not
@@ -577,11 +568,11 @@ def test_resize_and_hash_accept_all_png_shapes(spark):
 
     from erathia_market_etl_spark.operators.multimodal import (
         decode_bmp,
-        encode_png_ex,
-        media_ahash,
         resample_nearest,
         resize_image_real,
     )
+
+    from .encoders import encode_png_ex
 
     rng = np.random.default_rng(77)
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
@@ -619,8 +610,6 @@ def test_resize_and_hash_accept_all_png_shapes(spark):
     for mid, exp in expected.items():
         got = decode_bmp(bytes(out[mid]["content"]))
         assert (got == resample_nearest(exp, 4, 4)).all(), f"media {mid}"
-    hashes = media_ahash(media).collect()
-    assert len(hashes) == 6, "hash pass must accept every shape"
 
 
 def test_resample_nearest_arithmetic():
@@ -751,10 +740,10 @@ def test_decoder_fuzz_roundtrip_and_no_crash():
         decode_real,
         decode_wav,
         encode_bmp,
-        encode_png,
-        encode_ppm,
         encode_wav,
     )
+
+    from .encoders import encode_png, encode_ppm
 
     @settings(max_examples=150, deadline=None)
     @given(
@@ -797,203 +786,6 @@ def test_decoder_fuzz_roundtrip_and_no_crash():
     never_uncontrolled()
 
 
-def test_ahash_perceptual_dedup_finds_planted_near_dup(spark):
-    """Image dedup by perceptual hash: a lightly-perturbed copy (a few
-    pixels nudged — survives the 8x8 average hash) must pair with its
-    original at a small hamming distance; an independent random image
-    must not; the pigeonhole candidate generation must be exact within
-    the radius (hamming <= 3 with 4 blocks guarantees a shared block).
-    Undecodable/NULL/audio payloads drop out of the hash table."""
-    import numpy as np
-
-    from erathia_market_etl_spark.operators.multimodal import (
-        ahash_bits,
-        ahash_near_pairs,
-        encode_bmp,
-        encode_wav,
-        media_ahash,
-    )
-
-    rng = np.random.RandomState(7)
-    base = rng.randint(0, 256, size=(32, 32, 3)).astype(np.uint8)
-    near = base.copy()
-    near[0:2, 0:2] += np.uint8(1)  # tiny perturbation, wraps harmlessly
-    other = rng.randint(0, 256, size=(32, 32, 3)).astype(np.uint8)
-
-    # driver-side ground truth
-    hb, hn, ho = ahash_bits(base), ahash_bits(near), ahash_bits(other)
-    ham = bin((hb ^ hn) & (2**64 - 1)).count("1")
-    assert ham <= 3, ham  # the perturbation is genuinely sub-threshold
-    assert bin((hb ^ ho) & (2**64 - 1)).count("1") > 10
-
-    rows = [
-        (1, bytearray(encode_bmp(base))),
-        (2, bytearray(encode_bmp(near))),
-        (3, bytearray(encode_bmp(other))),
-        (4, bytearray(encode_wav(np.zeros(4, dtype=np.int64), 8000))),
-        (5, None),
-        (6, bytearray(b"junk")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-
-    hashes = {r["media_id"]: r["ahash"] for r in media_ahash(media).collect()}
-    assert set(hashes) == {1, 2, 3}
-    assert hashes[1] == hb and hashes[2] == hn and hashes[3] == ho
-
-    pairs = {
-        (r["media_a"], r["media_b"]): r["hamming"]
-        for r in ahash_near_pairs(media).collect()
-    }
-    assert pairs == {(1, 2): ham}
-
-
-def test_ahash_identical_images_hamming_zero(spark):
-    import numpy as np
-
-    from erathia_market_etl_spark.operators.multimodal import (
-        ahash_near_pairs,
-        encode_bmp,
-        encode_png,
-        encode_ppm,
-    )
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, size=(16, 16, 3)).astype(np.uint8)
-    # the SAME pixels through three containers — two raw (BMP, PPM) and
-    # one COMPRESSED (PNG, mixed filters) — must collide exactly: the
-    # hash is a function of pixels, not encoding (r9: the PNG leg is
-    # the strongest version of this pin — a filter-reconstruction bug
-    # anywhere would break the collision)
-    rows = [
-        (1, bytearray(encode_bmp(img))),
-        (2, bytearray(encode_ppm(img))),
-        (3, bytearray(encode_png(img, filter_type="mixed"))),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    pairs = ahash_near_pairs(media).collect()
-    assert len(pairs) == 3  # all three containers pair up
-    assert all(p["hamming"] == 0 for p in pairs)
-
-
-def test_wav_energy_dedup_finds_planted_near_dup(spark):
-    """Audio dedup: a lightly-noised copy of a clip must pair with its
-    original at a small hamming distance (low-amplitude noise must not
-    move window energy means across the global mean); a different
-    waveform must not pair; silence hashes to 0 and two silent clips
-    collide exactly. Garbage and image payloads drop out of the hash
-    table."""
-    import numpy as np
-
-    from erathia_market_etl_spark.operators.multimodal import (
-        encode_bmp,
-        encode_wav,
-        media_wav_energy_hash,
-        wav_energy_bits,
-        wav_near_pairs,
-    )
-
-    rng = np.random.RandomState(3)
-    n = 8000
-    t = np.arange(n)
-    base = (
-        3000 * np.sin(2 * np.pi * t / 200) + 1500 * np.sin(2 * np.pi * t / 37)
-    ).astype(np.int64)
-    near = base + rng.randint(-20, 21, size=n)      # low-amplitude noise
-    other = (4000 * np.sign(np.sin(2 * np.pi * t / 977))).astype(np.int64)
-
-    hb, hn, ho = map(wav_energy_bits, (base, near, other))
-    ham = bin((hb ^ hn) & (2**64 - 1)).count("1")
-    assert ham <= 3, ham
-    assert bin((hb ^ ho) & (2**64 - 1)).count("1") > 10
-
-    rows = [
-        (1, bytearray(encode_wav(base, 8000))),
-        (2, bytearray(encode_wav(near, 8000))),
-        (3, bytearray(encode_wav(other, 8000))),
-        (4, bytearray(encode_wav(np.zeros(100, dtype=np.int64), 8000))),
-        (5, bytearray(encode_wav(np.zeros(300, dtype=np.int64), 8000))),
-        (6, bytearray(encode_bmp(rng.randint(0, 256, (8, 8, 3)).astype("uint8")))),
-        (7, bytearray(b"junk")),
-        (8, None),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    hashes = {r["media_id"]: r["ahash"]
-              for r in media_wav_energy_hash(media).collect()}
-    assert set(hashes) == {1, 2, 3, 4, 5}  # image/garbage/NULL dropped
-    assert hashes[4] == hashes[5] == 0     # silence collides
-
-    pairs = {
-        (r["media_a"], r["media_b"]): r["hamming"]
-        for r in wav_near_pairs(media).collect()
-    }
-    assert pairs == {(1, 2): ham, (4, 5): 0}
-
-
-def test_hash64_pairs_reject_radius_past_pigeonhole(spark):
-    import pytest
-
-    from erathia_market_etl_spark.operators.multimodal import (
-        hash64_near_pairs,
-    )
-
-    hashes = spark.createDataFrame([(1, 0), (2, 15)], "media_id long, ahash long")
-    with pytest.raises(ValueError, match="pigeonhole"):
-        hash64_near_pairs(hashes, hamming_max=4)
-
-
-def test_dhash_gradient_invariance_vs_ahash(spark):
-    """The property that justifies running BOTH perceptual hashes: a
-    smooth left-to-right illumination ramp leaves dHash nearly
-    unchanged (adjacent-pixel differences shift by a near-constant
-    delta) while flipping a large fraction of aHash bits (the global
-    mean moves relative to each half of the image). Also pins
-    cross-container identity for dHash (BMP == PPM == PNG) and that a
-    perturbed copy pairs through dhash_near_pairs."""
-    import numpy as np
-
-    from erathia_market_etl_spark.operators.multimodal import (
-        ahash_bits,
-        dhash_bits,
-        dhash_near_pairs,
-        encode_bmp,
-        encode_png,
-        encode_ppm,
-        media_dhash,
-    )
-
-    rng = np.random.RandomState(23)
-    # base image with strong per-pixel texture (gradients dominate)
-    base = rng.randint(0, 200, size=(32, 32, 3)).astype(np.uint8)
-    # add a left-to-right illumination ramp of +0..+55
-    ramp = (np.arange(32, dtype=np.int64) * 55 // 31).astype(np.uint8)
-    lit = (base.astype(np.int64) + ramp[None, :, None]).clip(0, 255).astype(np.uint8)
-
-    d_ham = bin((dhash_bits(base) ^ dhash_bits(lit)) & (2**64 - 1)).count("1")
-    a_ham = bin((ahash_bits(base) ^ ahash_bits(lit)) & (2**64 - 1)).count("1")
-    assert d_ham <= 3, d_ham          # gradient hash barely moves
-    assert a_ham > d_ham, (a_ham, d_ham)  # mean-threshold hash moves more
-
-    # cross-container identity (the pixels-not-encoding pin, dHash leg)
-    rows = [
-        (1, bytearray(encode_bmp(base))),
-        (2, bytearray(encode_ppm(base))),
-        (3, bytearray(encode_png(base, filter_type="mixed"))),
-        (4, bytearray(encode_bmp(lit))),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, content binary")
-    hashes = {r["media_id"]: r["ahash"] for r in media_dhash(media).collect()}
-    assert hashes[1] == hashes[2] == hashes[3] == dhash_bits(base)
-
-    pairs = {
-        (r["media_a"], r["media_b"]): r["hamming"]
-        for r in dhash_near_pairs(media).collect()
-    }
-    # the three identical containers pair at 0; the ramped copy pairs
-    # with each of them within the radius
-    assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 0 and pairs[(2, 3)] == 0
-    assert pairs[(1, 4)] == d_ham <= 3
-
-
 # ---------------------------------------------------------------------------
 # IMA/DVI ADPCM WAV (tag 0x0011, r16 — VERDICT r15 item 7: the non-PCM
 # WAV gate, closed with pure integer arithmetic).
@@ -1030,10 +822,9 @@ def test_ima_adpcm_constant_signal_roundtrips_exactly():
     block (fact-chunk trim)."""
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ima,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_wav
+
+    from .encoders import encode_wav_ima
 
     for v in (-32768, -1234, 0, 1, 777, 32767):
         n = 1234  # 2 full blocks (505 samples each) + partial third
@@ -1055,10 +846,9 @@ def test_ima_adpcm_decoder_matches_audioop_reference():
     import numpy as np
 
     audioop = pytest.importorskip("audioop")
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_wav_ima,
-        encode_wav_ima,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_wav_ima
+
+    from .encoders import encode_wav_ima
 
     rng = np.random.default_rng(16)
     sig = rng.integers(-32768, 32768, 505, dtype=np.int16)  # one block
@@ -1082,10 +872,9 @@ def test_ima_adpcm_tracks_smooth_signal():
     final step size at every point, and total error is small."""
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_wav,
-        encode_wav_ima,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_wav
+
+    from .encoders import encode_wav_ima
 
     t = np.arange(2000)
     sig = (3000 * np.sin(t / 40.0)).astype(np.int16)
@@ -1104,11 +893,9 @@ def test_ima_adpcm_gates_and_errors():
 
     import numpy as np
 
-    from erathia_market_etl_spark.operators.multimodal import (
-        decode_real,
-        decode_wav,
-        encode_wav_ima,
-    )
+    from erathia_market_etl_spark.operators.multimodal import decode_real, decode_wav
+
+    from .encoders import encode_wav_ima
 
     payload = encode_wav_ima(np.full(10, 5, dtype=np.int16), 8000)
 

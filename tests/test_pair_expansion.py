@@ -27,7 +27,6 @@ from erathia_market_etl_spark.operators.dedup import (
     SIMHASH_HAMMING_MAX,
     cap_bucket_members,
     expand_fp_pairs,
-    hamming48,
     pair_array,
     simhash_blocks,
     simhash_table,
@@ -35,6 +34,7 @@ from erathia_market_etl_spark.operators.dedup import (
 from erathia_market_etl_spark.sources.parquet_io import load_table
 
 from .conftest import SF_T2
+from .simhash import hamming48
 
 
 def _capped_blocks(spark):

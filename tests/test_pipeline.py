@@ -27,8 +27,6 @@ from erathia_market_etl_spark.generator.simulate import (
 from erathia_market_etl_spark.pipeline import (
     DIM_SCHEMAS,
     clean_dim,
-    list_marts,
-    run_full_pipeline,
     run_gold,
     run_silver,
 )
@@ -122,11 +120,20 @@ def test_simulator_deterministic():
 
 # -- end-to-end medallion run (golden pipeline, SURVEY §5 #2) ---------------
 
+def _run_medallion(spark, work: str) -> dict:
+    """bronze -> silver -> gold under ``work``, as the CLI's ``full``
+    command runs it."""
+    bronze = generate_bronze(f"{work}/bronze", weeks=N_WEEKS,
+                             cfg=SimulationConfig(seed=42))
+    silver = run_silver(spark, f"{work}/bronze", f"{work}/silver")
+    run_gold(spark, f"{work}/silver", f"{work}/gold")
+    return {"bronze": bronze, "silver": silver}
+
+
 @pytest.fixture(scope="module")
 def pipeline_result(spark, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("medallion"))
-    result = run_full_pipeline(spark, work, weeks=N_WEEKS, seed=42)
-    return work, result
+    return work, _run_medallion(spark, work)
 
 
 def test_pipeline_counts(pipeline_result, spark):
@@ -166,8 +173,6 @@ def test_gold_marts(pipeline_result, spark):
         "dm_faction_economy", "dm_resource_price_history",
         "dm_top_vip_customers", "dm_artifact_sales_summary",
     }
-    # S11 catalog introspection: the viewer discovers the marts by name
-    assert set(marts) <= set(list_marts(spark))
     q1 = marts["dm_faction_economy"].collect()
     assert 0 < len(q1) <= 9
     assert q1[0].asDict().keys() == {
@@ -193,7 +198,7 @@ def test_pipeline_deterministic_marts(spark, tmp_path_factory, pipeline_result):
     """Same seed + weeks -> byte-identical mart contents (the reference's
     implicit golden-output mechanism, automated)."""
     work2 = str(tmp_path_factory.mktemp("medallion2"))
-    run_full_pipeline(spark, work2, weeks=N_WEEKS, seed=42)
+    _run_medallion(spark, work2)
     work1, _ = pipeline_result
     a = spark.read.parquet(f"{work1}/gold/dm_faction_economy").collect()
     b = spark.read.parquet(f"{work2}/gold/dm_faction_economy").collect()

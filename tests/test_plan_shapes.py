@@ -255,7 +255,10 @@ def test_lsh_pipelines_minimal_shuffle_inventory(spark):
     hash exchange on the band keys (Catalyst reuses the partitioning).
     A regression that re-shuffles between cap and collect_list doubles
     the biggest exchange at 100 TB."""
-    from erathia_market_etl_spark.operators.dedup import minhash_candidate_pairs
+    from erathia_market_etl_spark.operators.dedup import (
+        candidate_pairs_from_bands,
+        minhash_band_table,
+    )
     from erathia_market_etl_spark.operators.similarity import sign_band_near_pairs
     from erathia_market_etl_spark.plans import stage_cache as sc
     from erathia_market_etl_spark.sources.parquet_io import load_table
@@ -265,7 +268,7 @@ def test_lsh_pipelines_minimal_shuffle_inventory(spark):
     for key in list(sc._STAGES):
         sc.evict(key)
     docs = load_table(spark, SF_T2, "documents")
-    pairs = minhash_candidate_pairs(docs, "text", "doc_id")
+    pairs = candidate_pairs_from_bands(minhash_band_table(docs, "text", "doc_id"))
     hash_ex = [ln for ln in plan_of(pairs).splitlines()
                if "Exchange hashpartitioning" in ln]
     # (doc) signature agg + (band_idx, band_key) shared window/groupBy +
@@ -553,7 +556,8 @@ def test_shared_minhash_band_stage_is_cached_and_live_capped(spark):
         never swallow the R5-pinned stage);
     (d) the shared-path values equal a fresh uncached pipeline's."""
     from erathia_market_etl_spark.operators.dedup import (
-        minhash_candidate_pairs,
+        candidate_pairs_from_bands,
+        minhash_band_table,
     )
     from erathia_market_etl_spark.plans.dedup_queries import (
         shared_minhash_bands,
@@ -572,9 +576,8 @@ def test_shared_minhash_band_stage_is_cached_and_live_capped(spark):
     assert re.search(r"WindowGroupLimit .*, Final", plan)
 
     docs = load_table(spark, SF_T2, "documents")
-    fresh = sorted(
-        map(tuple, minhash_candidate_pairs(docs, "text", "doc_id").collect())
-    )
+    fresh = sorted(map(tuple, candidate_pairs_from_bands(
+        minhash_band_table(docs, "text", "doc_id")).collect()))
     shared = sorted(map(tuple, shared_minhash_pairs(spark, SF_T2).collect()))
     assert fresh == shared
 

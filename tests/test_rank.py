@@ -1,14 +1,10 @@
-"""operators/rank.py — the melted block rank / arithmetic-NTILE kernel
-and the grouped block rank / prefix-sum kernels (r12).
+"""operators/rank.py — the grouped block rank / prefix-sum kernels (r12).
 
-Semantics pins: the arithmetic NTILE must equal Spark's own
-``F.ntile`` under the same deterministic total order for sizes that
-exercise the uneven-bucket rule AND the n < buckets edge; each grouped
-kernel must equal Spark's own per-group window under the same
-deterministic total order, at any block width.
+Semantics pins: each grouped kernel must equal Spark's own per-group
+window under the same deterministic total order, at any block width.
 Plan pins: neither the kernels nor the concentration marts that
 consume them may contain an Exchange SinglePartition (the whole
-point), and the NTILE kernel plans no native ntile window.
+point).
 """
 
 from __future__ import annotations
@@ -17,115 +13,11 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from erathia_market_etl_spark.operators.rank import with_ntile, with_ntiles
-
 from .conftest import SF_T2
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.mark.parametrize("n,k", [(1, 4), (3, 4), (4, 4), (150, 4), (151, 4), (153, 4), (97, 7)])
-def test_arithmetic_ntile_matches_native(spark, n, k):
-    # deterministic scrambled values with ties: v = (i*7) % 13
-    base = spark.range(n).select(
-        F.col("id").alias("key"), ((F.col("id") * 7) % 13).alias("v")
-    )
-    got = with_ntile(
-        base, F.col("v"), "key", buckets=k, out_col="q", block_width=3
-    )
-    want = base.withColumn(
-        "q_native", F.ntile(k).over(Window.orderBy(F.desc("v"), "key"))
-    )
-    joined = got.join(want.select("key", "q_native"), "key")
-    mismatches = joined.filter(F.col("q") != F.col("q_native")).count()
-    assert mismatches == 0
-
-
-def test_multi_metric_matches_chained_native(spark):
-    base = spark.range(200).select(
-        F.col("id").alias("key"),
-        ((F.col("id") * 7) % 13).alias("a"),
-        ((F.col("id") * 11) % 5).alias("b"),
-    )
-    got = with_ntiles(
-        base,
-        "key",
-        [("qa", F.col("a"), 2), ("qb", F.col("b"), 100)],
-        buckets=4,
-    )
-    want = base.select(
-        "key",
-        F.ntile(4).over(Window.orderBy(F.desc("a"), "key")).alias("na"),
-        F.ntile(4).over(Window.orderBy(F.desc("b"), "key")).alias("nb"),
-    )
-    joined = got.join(want, "key")
-    bad = joined.filter(
-        (F.col("qa") != F.col("na")) | (F.col("qb") != F.col("nb"))
-    ).count()
-    assert bad == 0
-
-
-def test_kernel_plan_has_no_single_partition_exchange(spark):
-    base = spark.range(100).select(
-        F.col("id").alias("key"), (F.col("id") % 17).alias("v")
-    )
-    plan = _plan(
-        with_ntile(base, F.col("v"), "key", buckets=4, out_col="q",
-                   block_width=4)
-    )
-    assert "Exchange SinglePartition" not in plan
-    assert "ntile(" not in plan  # arithmetic, not a native window
-
-
-def test_kernel_rejects_bad_inputs(spark):
-    base = spark.range(10).select(F.col("id").alias("key"))
-    with pytest.raises(ValueError, match="block_width"):
-        with_ntile(base, F.col("key"), "key", buckets=4, out_col="q",
-                   block_width=0)
-    with pytest.raises(ValueError, match="at least one"):
-        with_ntiles(base, "key", [], buckets=4)
-
-
-def test_arithmetic_ntile_formula_exhaustive_small_domain(spark):
-    """Exhaustive sweep of the NTILE arithmetic itself: every
-    (n, k, rank) with 1 <= rank <= n <= 30, 1 <= k <= 8 (7200 triples,
-    ONE job) against the SQL-standard reference computed in Python —
-    first n%k buckets get ceil(n/k) rows. Covers every uneven-bucket
-    boundary and the n < k degenerate band that the parametrized
-    native-window tests sample only pointwise."""
-    from erathia_market_etl_spark.operators.rank import ntile_expr
-
-    triples = [
-        (n, k, r)
-        for n in range(1, 31)
-        for k in range(1, 9)
-        for r in range(1, n + 1)
-    ]
-
-    def ref(n, k, r):
-        c, rem = divmod(n, k)
-        cut = rem * (c + 1)
-        if r <= cut:
-            return (r - 1) // (c + 1) + 1
-        return rem + (r - cut - 1) // c + 1 if c else r
-
-    # reference sanity vs a direct "sizes" construction
-    for n, k in [(5, 3), (7, 4), (3, 8), (8, 8), (9, 4)]:
-        sizes = [(n // k) + (1 if i < n % k else 0) for i in range(k)]
-        seq = [i + 1 for i, s in enumerate(sizes) for _ in range(s)]
-        assert [ref(n, k, r) for r in range(1, n + 1)] == seq
-
-    df = spark.createDataFrame(triples, "n long, k long, r long")
-    got = (
-        df.withColumn("q4", ntile_expr("r", "n", 4))
-        .withColumn("q8", ntile_expr("r", "n", 8))
-        .collect()
-    )
-    for row in got:
-        assert row["q4"] == ref(row["n"], 4, row["r"])
-        assert row["q8"] == ref(row["n"], 8, row["r"])
 
 
 def test_grouped_rank_matches_native_on_scrambled_groups(spark):
@@ -277,9 +169,6 @@ def test_kernels_reject_scratch_column_collisions(spark):
     with pytest.raises(ValueError, match="collide"):
         grouped_prefix_sum(base.withColumn("_carry", F.lit(1)), ["g"],
                            F.col("v"), "key", F.col("v"), block_width=2)
-    with pytest.raises(ValueError, match="collide"):
-        with_ntiles(base.withColumn("_t", F.lit(1)), "key",
-                    [("q", F.col("v"), 2)], buckets=4)
     # clean frames still pass
     assert grouped_rank(base, ["g"], F.col("v"), "key",
                         block_width=2).count() == 10

@@ -124,9 +124,14 @@ def degenerate_docs(spark):
 
 
 def test_minhash_cap_bounds_degenerate_corpus(degenerate_docs):
-    from erathia_market_etl_spark.operators.dedup import minhash_candidate_pairs
+    from erathia_market_etl_spark.operators.dedup import (
+        candidate_pairs_from_bands,
+        minhash_band_table,
+    )
 
-    pairs = minhash_candidate_pairs(degenerate_docs, "text", "doc_id", max_bucket=32)
+    pairs = candidate_pairs_from_bands(
+        minhash_band_table(degenerate_docs, "text", "doc_id"), max_bucket=32
+    )
     # C(32,2), not C(2000,2) — same 32 lowest ids survive in every band
     assert pairs.count() == 32 * 31 // 2
 
@@ -146,12 +151,9 @@ def test_simhash_oversized_doc_slices_match_batch_path(spark):
     (token_hash48 -> 48 conditional sums -> sign collapse)."""
     from pyspark.sql import functions as F
 
-    from erathia_market_etl_spark.operators.dedup import (
-        simhash_bit_sums,
-        simhash_fingerprint,
-        simhash_table,
-        token_hash48,
-    )
+    from erathia_market_etl_spark.operators.dedup import simhash_table
+
+    from .simhash import simhash_bit_sums, simhash_fingerprint, token_hash48
 
     # 200_001 tokens from a 7-word vocab -> forces the sliced path
     vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
@@ -285,7 +287,10 @@ def test_bucket_stats_report_overflow(degenerate_docs):
 
 def test_cap_no_op_on_diverse_corpus(spark):
     """On a healthy corpus the cap must not change results at all."""
-    from erathia_market_etl_spark.operators.dedup import minhash_candidate_pairs
+    from erathia_market_etl_spark.operators.dedup import (
+        candidate_pairs_from_bands,
+        minhash_band_table,
+    )
 
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"),
@@ -294,6 +299,7 @@ def test_cap_no_op_on_diverse_corpus(spark):
             F.lit(" with its own words "), F.col("id") * 7, F.lit(" tail"),
         ).alias("text"),
     )
-    capped = minhash_candidate_pairs(docs, "text", "doc_id", max_bucket=256)
-    uncapped = minhash_candidate_pairs(docs, "text", "doc_id", max_bucket=1_000_000)
+    bands = minhash_band_table(docs, "text", "doc_id")
+    capped = candidate_pairs_from_bands(bands, max_bucket=256)
+    uncapped = candidate_pairs_from_bands(bands, max_bucket=1_000_000)
     assert sorted(map(tuple, capped.collect())) == sorted(map(tuple, uncapped.collect()))

@@ -1,6 +1,6 @@
 """Structured Streaming semantics the bounded oracle runs can't cover:
 state persistence across micro-batches, watermark late-data dropping,
-and the foreachBatch sink. Uses crafted multi-file sources so the
+and the day-rollup maintenance sink. Uses crafted multi-file sources so the
 micro-batch sequence is deterministic."""
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql.types import (
 from erathia_market_etl_spark.streaming.event_stream import (
     hourly_stats_stream,
     run_available_now,
-    run_foreach_batch_to_parquet,
     user_running_totals_stream,
 )
 
@@ -161,18 +160,6 @@ def test_checkpoint_recovery_restores_state(spark, staged_dir, tmp_path):
                       f"{staged_dir}/b1.parquet", 1_000_100)
     run_once()  # run 2: resumes from checkpoint -> only batch 1, state restored
     assert collected == [(0, 7, 2, 15.0), (1, 7, 3, 35.0)]
-
-
-def test_foreach_batch_sink_writes_every_batch(spark, staged_dir, tmp_path):
-    _write_batch_file(spark, [(1, _ts(1), 1, "a", 1.0)], f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, [(2, _ts(2), 2, "b", 2.0)], f"{staged_dir}/b1.parquet", 1_000_100)
-    sink_path = str(tmp_path / "sink")
-    batch_ids = run_foreach_batch_to_parquet(
-        _read_stream(spark, staged_dir).select("event_id", "user_id", "value"), sink_path
-    )
-    assert batch_ids == [0, 1]
-    written = spark.read.parquet(sink_path)
-    assert sorted(r["event_id"] for r in written.collect()) == [1, 2]
 
 
 def test_dedup_within_watermark_reemits_after_state_expiry(spark, staged_dir):
@@ -316,115 +303,21 @@ def test_streaming_rollup_append_merges_to_batch_state(spark, staged_dir, tmp_pa
     assert retried == want
 
 
-def test_streaming_candle_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """Candle maintenance: three micro-batches (one hour split across
-    two of them) append candle slices; merge-on-read equals the batch
-    candle_state over all ticks, and a retried slice re-append does not
-    corrupt the merge (open/close re-decided, extremes idempotent)."""
-    from erathia_market_etl_spark.plans.event_windows import candle_state
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_candle_state,
-        streaming_candle_append,
-    )
-
-    b0 = [(1, _ts(9, 5), 1, "trade", 20.0), (2, _ts(9, 10), 1, "trade", 5.0)]
-    b1 = [(3, _ts(9, 0), 1, "trade", 10.0), (4, _ts(9, 59), 1, "trade", 7.5)]
-    b2 = [(5, _ts(10, 0), 1, "trade", 50.0)]
-    _write_batch_file(spark, b0, f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, b1, f"{staged_dir}/b1.parquet", 1_000_100)
-    _write_batch_file(spark, b2, f"{staged_dir}/b2.parquet", 1_000_200)
-
-    state_path = str(tmp_path / "candle_state")
-    batches = streaming_candle_append(
-        _read_stream(spark, staged_dir), state_path
-    )
-    assert len(batches) == 3
-
-    merged = sorted(map(tuple, read_candle_state(spark, state_path).collect()))
-    full = spark.createDataFrame(b0 + b1 + b2, TS_SCHEMA)
-    want = sorted(map(tuple, candle_state(full).collect()))
-    assert merged == want
-
-    log = spark.read.parquet(state_path)
-    log.filter(F.col("batch_id") == batches[0]).write.mode("append").parquet(
-        state_path
-    )
-    retried = sorted(map(tuple, read_candle_state(spark, state_path).collect()))
-    assert retried == want
-
-
-def test_streaming_hll_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """HLL maintenance: three micro-batches of keys append their
-    (idx, r) register slices; MAX-merge-on-read must equal the batch
-    hll_register_state over the full key log EXACTLY, and a retried
-    slice re-append must not change anything (max-merge is idempotent
-    on top of the batch_id dedup)."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        hll_register_state,
-    )
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_hll_state,
-        streaming_hll_append,
-    )
-
-    def rows(keys, base_id):
-        return [(base_id + i, _ts(1), k, "a", 1.0) for i, k in enumerate(keys)]
-
-    k0 = list(range(0, 40))
-    k1 = list(range(30, 80))      # overlaps k0 — dedup across batches
-    k2 = list(range(1000, 1020))
-    _write_batch_file(spark, rows(k0, 0), f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, rows(k1, 100), f"{staged_dir}/b1.parquet", 1_000_100)
-    _write_batch_file(spark, rows(k2, 200), f"{staged_dir}/b2.parquet", 1_000_200)
-
-    stream_keys = _read_stream(spark, staged_dir).select(
-        F.col("user_id").alias("x")
-    )
-    state_path = str(tmp_path / "hll_state")
-    batches = streaming_hll_append(stream_keys, state_path)
-    assert len(batches) == 3
-
-    merged = sorted(map(tuple, read_hll_state(spark, state_path).collect()))
-    full = spark.createDataFrame([(k,) for k in k0 + k1 + k2], "x long")
-    want = sorted(map(tuple, hll_register_state(full).collect()))
-    assert merged == want
-
-    # non-vacuity: the merge really maxes ACROSS batches — some register
-    # index must appear in more than one batch's slice
-    log = spark.read.parquet(state_path)
-    multi = (
-        log.groupBy("idx").count().filter(F.col("count") > 1).count()
-    )
-    assert multi > 0
-
-    # retry idempotence: re-append batch 1's identical slice
-    log.filter(F.col("batch_id") == batches[1]).write.mode("append").parquet(
-        state_path
-    )
-    retried = sorted(map(tuple, read_hll_state(spark, state_path).collect()))
-    assert retried == want
-
-
 def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_path):
     """End-to-end forced retry (r9 VERDICT item 6): unlike the hand
-    re-append in the three tests above, here the ENGINE produces the
+    re-append in the rollup test above, here the ENGINE produces the
     duplicate — the sink's after-write commit callback raises while
     processing batch 1, crashing the query AFTER batch 1's slice landed
     in the state log but BEFORE its checkpoint commit (the exact window
     a real executor/driver failure duplicates). The restarted query
     replays batch 1 from the checkpoint under the SAME batch_id, so the
-    log genuinely holds the slice twice; each family's merge-on-read
-    must still equal its batch state over the full input — the
+    log genuinely holds the slice twice; the merge-on-read must still
+    equal the batch state over the full input — the
     exactly-once claim pinned through the streaming machinery, not just
     the dedup algebra."""
-    from erathia_market_etl_spark.plans.event_windows import (
-        candle_state,
-        day_rollup_state,
-    )
+    from erathia_market_etl_spark.plans.event_windows import day_rollup_state
     from erathia_market_etl_spark.streaming.event_stream import (
-        read_candle_state,
         read_rollup_state,
-        streaming_candle_append,
         streaming_rollup_append,
     )
 
@@ -432,7 +325,7 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
     b1 = [(3, _ts(9, 50), 7, "trade", 10.0), (4, _ts(10, 5), 8, "trade", 7.5)]
     b2 = [(5, _ts(10, 30), 7, "trade", 50.0)]
 
-    def run_with_forced_retry(family, append_fn, src_select=None):
+    def run_with_forced_retry(family, append_fn):
         src_dir = f"{staged_dir}/{family}_src"
         for i, rows in enumerate([b0, b1, b2]):
             _write_batch_file(
@@ -448,8 +341,7 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
                 raise RuntimeError("injected post-write failure")
 
         def src():
-            s = _read_stream(spark, src_dir)
-            return src_select(s) if src_select else s
+            return _read_stream(spark, src_dir)
 
         with pytest.raises(Exception, match="injected post-write failure"):
             append_fn(src(), state_path, checkpoint=ckpt, after_write=crash_once)
@@ -474,33 +366,6 @@ def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_
     full = spark.createDataFrame(b0 + b1 + b2, TS_SCHEMA)
     assert sorted(map(tuple, read_rollup_state(spark, p).collect())) == sorted(
         map(tuple, day_rollup_state(full).collect())
-    )
-
-    # candle family
-    p = run_with_forced_retry("candle", streaming_candle_append)
-    assert sorted(map(tuple, read_candle_state(spark, p).collect())) == sorted(
-        map(tuple, candle_state(full).collect())
-    )
-
-    # HLL family (keys ride user_id -> x)
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        hll_register_state,
-    )
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_hll_state,
-        streaming_hll_append,
-    )
-
-    p = run_with_forced_retry(
-        "hll",
-        streaming_hll_append,
-        src_select=lambda s: s.select(F.col("user_id").alias("x")),
-    )
-    full_keys = spark.createDataFrame(
-        [(r[2],) for r in b0 + b1 + b2], "x long"
-    )
-    assert sorted(map(tuple, read_hll_state(spark, p).collect())) == sorted(
-        map(tuple, hll_register_state(full_keys).collect())
     )
 
 

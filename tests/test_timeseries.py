@@ -173,60 +173,6 @@ def test_twap_density_bias_and_exact_weights(spark, tmp_path):
     assert r["twap_cents"] != (100 + 200 + 200) // 3   # naive mean 166
 
 
-def test_candle_state_merge_equals_full(spark, tmp_path):
-    """The OHLC monoid: candle states built from three arbitrary slices
-    (including an hour SPLIT across slices where the true open lives in
-    the second slice by timestamp) merge to exactly the state built
-    from all ticks at once, and present_candles equals ohlc_hourly."""
-    import datetime as dt
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        candle_state,
-        merge_candle_states,
-        ohlc_hourly,
-        present_candles,
-    )
-
-    t0 = dt.datetime(2024, 3, 1, 9)
-
-    def ev(eid, sec, price, et="trade"):
-        return (eid, t0 + dt.timedelta(seconds=sec), 1, et,
-                float(price), "{}")
-
-    # slice b holds the EARLIEST tick of hour 9 (sec=0) even though
-    # slice a was "ingested" first — the merge must re-decide the open
-    a = [ev(10, 100, 20.0), ev(11, 200, 5.0)]
-    b = [ev(1, 0, 10.0), ev(12, 3599, 7.5)]
-    c = [ev(13, 3600, 50.0), ev(14, 30, 30.0, "quote")]
-
-    schema = ("event_id long, ts timestamp, user_id long,"
-              " event_type string, value double, props string")
-    fa, fb, fc = (spark.createDataFrame(x, schema) for x in (a, b, c))
-    merged = merge_candle_states(
-        candle_state(fa), candle_state(fb), candle_state(fc)
-    )
-    full = candle_state(spark.createDataFrame(a + b + c, schema))
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-
-    got = {(r["event_type"], str(r["hour_start"])): tuple(r)[2:]
-           for r in present_candles(merged).collect()}
-    # hour 9 'trade': open from slice b's sec-0 tick (1000), high 2000,
-    # low 500, close from sec-3599 (750), 4 ticks
-    assert got[("trade", "2024-03-01 09:00:00")] == (1000, 2000, 500, 750, 4)
-    assert got[("quote", "2024-03-01 09:00:00")] == (3000, 3000, 3000, 3000, 1)
-
-    # and present_candles(full state over the whole log) == ohlc_hourly
-    p = str(tmp_path / "sf")
-    spark.createDataFrame(a + b + c, schema).write.parquet(
-        p + "/events.parquet"
-    )
-    assert sorted(map(tuple, present_candles(full).collect())) == sorted(
-        map(tuple, ohlc_hourly(spark, p).collect())
-    )
-
-
 def test_peak_concurrency_matches_bruteforce_on_random_intervals(spark):
     """peak_concurrency_frame (r12) must equal the pure-Python sweep
     line on random interval sets — including exact start/end ties
