@@ -333,59 +333,6 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental rollup refresh: the mergeable-state algebra that lets a
-# late partition re-aggregate only its own rows. Maintenance-side (no
-# driver query slot — the same class as sinks); exactness pinned in
-# tests/test_timeseries.py.
-# ---------------------------------------------------------------------------
-
-def day_rollup_state(events: DataFrame) -> DataFrame:
-    """Mergeable day-grain rollup STATE: (day_start, event_type) ->
-    (n_events, sum_cents, min_value, max_value). Every measure is a
-    commutative monoid (long sums, min, max — sum_cents stays an exact
-    scaled integer, NOT the rounded presentation total), so states
-    computed over any partition of the event log merge associatively
-    into the state of the union. This is the storage schema of an
-    incrementally-maintained rollup."""
-    return (
-        events
-        .select(
-            F.date_trunc("day", "ts").alias("day_start"),
-            "event_type",
-            cents("value").alias("v_cents"),
-            F.col("value"),
-        )
-        .groupBy("day_start", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("v_cents").alias("sum_cents"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-    )
-
-
-def merge_rollup_states(*states: DataFrame) -> DataFrame:
-    """Merge rollup states (union + one re-aggregation — the monoid
-    fold). At 100 TB this is the incremental-refresh step: the state
-    for a late/new ingest partition is day-local and tiny, and the
-    merge shuffles only rollup rows (days x types), never raw events.
-    unionByName so column order never silently misaligns measures."""
-    out = states[0]
-    for s in states[1:]:
-        out = out.unionByName(s)
-    return (
-        out.groupBy("day_start", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # scd2_user_tier_history: type-2 slowly-changing-dimension compaction
 # (CDC gaps-and-islands).
 # ---------------------------------------------------------------------------
@@ -653,12 +600,6 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "day")
     )
-
-
-# ---------------------------------------------------------------------------
-# Mergeable candle state: the OHLC monoid (sink-class, local tests —
-# the day_rollup_state pattern applied to market candles).
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,7 @@ exact answer). This module adds the thing the built-in hides: the
 REGISTER STATE itself as a first-class mergeable table — the shape a
 100 TB pipeline actually ships between stages (per-partition /
 per-day register tables merged by MAX, never re-scanning the raw
-keys; the same monoid-composition story ``day_rollup_state`` attests
-for sums).
+keys).
 
 Everything is integer arithmetic so the DuckDB twin is hash-exact:
 

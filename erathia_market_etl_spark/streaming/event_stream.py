@@ -2,7 +2,7 @@
 
 The reference is batch-only; this module supplies the streaming form of
 the same event-window operators — ``readStream`` file source →
-watermarked window aggregations → memory/``foreachBatch`` sinks — plus a
+watermarked window aggregations → memory sinks — plus a
 custom stateful operator via ``applyInPandasWithState``. Batch/stream
 parity is the design invariant: every streaming aggregation here reuses
 the exact groupBy shape of ``plans/event_windows.py``, so a bounded run
@@ -311,134 +311,3 @@ def run_available_now(
             spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
 
-
-def _run_state_append(
-    source: DataFrame,
-    state_path: str,
-    slice_fn: Any,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Runner for the day-rollup maintenance sink: per micro-batch,
-    compute ``slice_fn(batch_df)``'s mergeable state slice, stamp
-    ``batch_id``, APPEND it to the parquet state log, then call
-    ``after_write(batch_id)`` (commit callback — metrics/alerting in
-    production; the retry test raises there to crash the query AFTER
-    the slice landed but BEFORE the checkpoint commit, which is exactly
-    the window a real sink retry duplicates). ``checkpoint`` makes the
-    run resumable: a restart replays the uncommitted batch with the
-    SAME batch_id and identical content — the duplication the
-    ``read_rollup_state`` batch_id dedup exists to absorb. Returns the
-    batch ids processed by THIS run.
-
-    A checkpoint is REQUIRED when appending to an already-populated
-    state log (r10 ADVICE): two independent checkpoint-free runs both
-    number their batches from 0, and the read-side (batch_id, keys)
-    dedup would then keep an arbitrary row when distinct runs' batches
-    collide on batch_id+key with different values. A fresh/empty
-    state_path may run checkpoint-free (single-run semantics)."""
-    if checkpoint is None:
-        # Emptiness probe via the Hadoop FileSystem API, not os.walk
-        # (r11 ADVICE): a local-only listing silently reports 'fresh'
-        # for s3://, hdfs://, abfs:// state logs — exactly where
-        # restarts are likeliest — and the batch_id-collision guard
-        # would no-op. Path.getFileSystem resolves whatever scheme the
-        # cluster has configured, so the recursive .parquet scan works
-        # on any filesystem Spark itself can write to.
-        spark = source.sparkSession
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        existing = False
-        if fs.exists(jpath):
-            files = fs.listFiles(jpath, True)
-            while files.hasNext():
-                if files.next().getPath().getName().endswith(".parquet"):
-                    existing = True
-                    break
-        if existing:
-            raise ValueError(
-                f"state log at {state_path!r} is non-empty: appending "
-                "without a checkpoint restarts batch_id at 0 and breaks "
-                "the (batch_id, key) exactly-once dedup — pass the "
-                "checkpoint used by the previous run"
-            )
-    seen: list[int] = []
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        seen.append(batch_id)
-        (
-            slice_fn(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(state_path)
-        )
-        if after_write is not None:
-            after_write(batch_id)
-
-    writer = (
-        source.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.awaitTermination()
-    except Exception:
-        # a crashed foreachBatch surfaces as StreamingQueryException; the
-        # caller (retry test / supervisor) restarts from the checkpoint
-        q.stop()
-        raise
-    return seen
-
-
-def streaming_rollup_append(
-    events: DataFrame,
-    state_path: str,
-    checkpoint: str | None = None,
-    after_write: Any = None,
-) -> list[int]:
-    """Continuous-aggregate maintenance under ingest: for every
-    micro-batch, compute the batch's mergeable day-rollup state
-    (plans.event_windows.day_rollup_state) and APPEND it to the state
-    log at ``state_path``; the serving-side state is merged on read
-    (``read_rollup_state``). Returns the processed batch ids.
-
-    Append-only on purpose: a read-modify-overwrite of the state table
-    inside foreachBatch is a lost-update race under retries, while
-    appending partial states is idempotent-friendly (batch_id rides
-    along for exactly-once dedup in a real sink) and contention-free —
-    the delta-log pattern. The log stays small (one rollup-grain slice
-    per batch) and compaction is just rewriting the merged state. At
-    100 TB ingest this is how a continuous aggregate keeps serving
-    while never re-touching raw history: each batch contributes
-    day-local rollup rows, the monoid merge does the rest."""
-    from ..plans.event_windows import day_rollup_state
-
-    return _run_state_append(
-        events, state_path, day_rollup_state, checkpoint, after_write
-    )
-
-
-def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Merge-on-read of the streaming rollup state log: fold every
-    appended partial state through the monoid merge. Identical output
-    contract to batch ``day_rollup_state`` over the full event log
-    (pinned in tests/test_streaming.py).
-
-    Exactly-once under sink retries (r9 ADVICE): a retried foreachBatch
-    re-executes the SAME batch_id and may re-append its slice after a
-    partial write, so the log can hold duplicate (batch_id, day_start,
-    event_type) rows. Spark replays a retried batch_id from the
-    checkpoint with identical content, so keeping ONE row per
-    (batch_id, day_start, event_type) before the merge makes the read
-    side idempotent — the dedup shuffles only rollup-grain state rows
-    (batches x days x types), never events, and reuses the merge's own
-    hash partitioning on (day_start, event_type)."""
-    from ..plans.event_windows import merge_rollup_states
-
-    log = spark.read.parquet(state_path).dropDuplicates(
-        ["batch_id", "day_start", "event_type"]
-    )
-    return merge_rollup_states(log.drop("batch_id"))

@@ -4,10 +4,12 @@ The round driver snapshots the LAST 2000 BYTES of bench.py's stdout
 into BENCH_r{N}.json and json-parses what it finds there. r13's JSON
 line outgrew the window (VERDICT r13 item 2: byte-truncated `tail`,
 `parsed: null`, q1's timing unrecoverable). These tests build the
-payload exactly as bench.main() does — every HEADLINE and TIER2 query
-populated with worst-case-width values, both baseline ratio maps full —
-and pin that emit_result() (a) always fits the window, (b) never drops
-a raw timing, and (c) persists the complete payload to BENCH_FULL.json.
+payload exactly as bench.main() does — every QUERIES row populated with
+worst-case-width values, the baseline ratio map full — and pin that
+emit_result() (a) always fits the window, (b) never drops a raw timing,
+and (c) persists the complete payload to BENCH_FULL.json. They also pin
+the one timer every row goes through and that every row is a
+registered query.
 """
 
 from __future__ import annotations
@@ -18,43 +20,21 @@ import bench
 
 
 def _worst_case_payload() -> dict:
-    # EVERY key bench.main() can emit, over the LIVE headline/tier-2
-    # sets, with worst-case number widths (4-char integer parts are far
-    # beyond any real run). r16's version of this test omitted the band
-    # keys (tier2_vs_band/tier2_over_band/tier2_band_context) that the
-    # real run emits, so it passed at 1897B while the real line was
-    # 1903B and the driver runs crashed (VERDICT r16 item 1). Any new
-    # key added to main()'s payload MUST be added here too — that is
-    # what makes this test the contract.
-    q = {name: 9999.999 for name in bench.HEADLINE}
-    t2 = {name: 9999.999 for name in bench.TIER2}
+    # EVERY key bench.main() can emit, over the LIVE bench query set,
+    # with worst-case number widths (4-char integer parts are far beyond
+    # any real run). r16's version of this test omitted keys the real
+    # run emitted, so it passed at 1897B while the real line was 1903B
+    # and the driver runs crashed (VERDICT r16 item 1). Any new key
+    # added to main()'s payload MUST be added here too — that is what
+    # makes this test the contract.
     return {
         "metric": "headline_queries_total_wall",
         "value": 99999.999,
         "unit": "sec",
-        "queries": q,
+        "queries": {name: 9999.999 for name in bench.QUERIES},
         "sf": 0.1,
-        "calibration": {
-            "probe_sec": 0.1306,
-            "probe_ref_sec": bench.PROBE_REF_SEC,
-            "host_factor": 1.004,
-        },
-        "value_probe_normalized": 99999.999,
-        "queries_tier2": t2,
-        "tier2_total": 9999.999,
-        "tier2_vs_baseline": {name: 99.999 for name in bench.TIER2},
-        "tier2_vs_baseline_total": 99.999,
-        "tier2_vs_band": {
-            name: {"vs_median": 99.999, "class": "under_floor"}
-            for name in bench.TIER2
-        },
-        "tier2_over_band": sorted(bench.TIER2),
-        "tier2_band_context": {
-            "host_factor": 99.999,
-            "quiet_probe": False,
-            "escalate": False,
-        },
-        "vs_baseline": {name: 99.999 for name in bench.HEADLINE},
+        "cores": 9999,
+        "vs_baseline": {name: 99.999 for name in bench.QUERIES},
         "vs_baseline_total": 99.999,
     }
 
@@ -107,12 +87,48 @@ def test_stdout_line_fits_driver_tail_window(tmp_path):
     )
     parsed = json.loads(line)
     # every timed query's raw seconds must survive, q1 included
-    assert set(parsed["queries"]) == set(bench.HEADLINE)
-    assert set(parsed["queries_tier2"]) == set(bench.TIER2)
-    for key in ("metric", "value", "unit", "sf", "calibration",
-                "vs_baseline_total", "tier2_vs_baseline_total"):
+    assert set(parsed["queries"]) == set(bench.QUERIES)
+    for key in ("metric", "value", "unit", "sf", "cores",
+                "vs_baseline_total"):
         assert key in parsed, key
     assert parsed["full"] == "BENCH_FULL.json"
+
+
+def test_every_bench_row_is_a_registered_query():
+    """Each row resolves through the driver registry or the local-only
+    set, so a bench row can never keep unregistered package code
+    alive the way the streaming-sink closure once did."""
+    from erathia_market_etl_spark.plans import all_queries, local_queries
+
+    assert len(bench.QUERIES) == len(set(bench.QUERIES))
+    registered = set(all_queries()) | set(local_queries())
+    assert set(bench.QUERIES) <= registered, sorted(
+        set(bench.QUERIES) - registered)
+
+
+def test_time_query_includes_construction():
+    """The one timer counts plan construction, not just the write: a
+    query whose construction sleeps 50 ms and whose noop write costs
+    nothing still times at >= 50 ms, once per run."""
+    import time
+
+    calls = []
+
+    class _Chain:
+        def __getattr__(self, _name):
+            return self
+
+        def __call__(self, *_args):
+            return self
+
+    def slow_to_build(spark, sf_dir):
+        calls.append((spark, sf_dir))
+        time.sleep(0.05)
+        return _Chain()
+
+    best = bench.time_query(slow_to_build, "spark", "sf_dir", runs=2)
+    assert best >= 0.05
+    assert calls == [("spark", "sf_dir")] * 2
 
 
 def test_full_payload_persisted_lossless(tmp_path):

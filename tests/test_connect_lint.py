@@ -23,10 +23,6 @@ ALLOWED = {
     ("plans/stage_cache.py", "stage_key", "sparkContext"):
         "stage keys read the application id; no fallback, so every "
         "session-cached stage fails on Connect",
-    ("streaming/event_stream.py", "_run_state_append", "_jvm"):
-        "Hadoop FileSystem probe of a checkpoint-free state log; no fallback",
-    ("streaming/event_stream.py", "_run_state_append", "_jsc"):
-        "Hadoop configuration for the same probe; no fallback",
     ("sources/parquet_io.py", "adaptive_partitions", "sparkContext"):
         "parallelism when the shuffle-partitions conf is not an int; "
         "falls back to 200 on AttributeError",

@@ -1,7 +1,7 @@
 """Structured Streaming semantics the bounded oracle runs can't cover:
-state persistence across micro-batches, watermark late-data dropping,
-and the day-rollup maintenance sink. Uses crafted multi-file sources so the
-micro-batch sequence is deterministic."""
+state persistence across micro-batches and watermark late-data
+dropping. Uses crafted multi-file sources so the micro-batch sequence is
+deterministic."""
 
 from __future__ import annotations
 
@@ -244,157 +244,6 @@ def test_stream_static_anti_dedup_multibatch(spark, staged_dir):
     # corpus fingerprint ACROSS batches), 13 passes even though 11 had
     # identical content in an earlier batch (stateless by design)
     assert got == [11, 13, 14]
-
-
-def test_streaming_rollup_append_merges_to_batch_state(spark, staged_dir, tmp_path):
-    """Continuous-aggregate maintenance: three micro-batches append
-    their day-local rollup states; merge-on-read must equal the batch
-    day_rollup_state over the full log EXACTLY (the monoid algebra under
-    real micro-batch boundaries, including a day split ACROSS batches
-    and a late row for an already-rolled-up day arriving two batches
-    later)."""
-    from erathia_market_etl_spark.plans.event_windows import day_rollup_state
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_rollup_state,
-        streaming_rollup_append,
-    )
-
-    import datetime
-
-    def d(day, h):
-        return datetime.datetime(2024, 1, day, h)
-
-    b0 = [(1, d(1, 1), 1, "a", 10.25), (2, d(1, 2), 2, "b", 1.50)]
-    b1 = [(3, d(1, 23), 1, "a", 2.25), (4, d(2, 0), 1, "a", 7.00)]
-    b2 = [(5, d(1, 5), 3, "b", 0.75), (6, d(3, 12), 2, "a", 4.00)]  # late day-1 row
-    _write_batch_file(spark, b0, f"{staged_dir}/b0.parquet", 1_000_000)
-    _write_batch_file(spark, b1, f"{staged_dir}/b1.parquet", 1_000_100)
-    _write_batch_file(spark, b2, f"{staged_dir}/b2.parquet", 1_000_200)
-
-    state_path = str(tmp_path / "rollup_state")
-    batches = streaming_rollup_append(
-        _read_stream(spark, staged_dir), state_path
-    )
-    assert len(batches) == 3
-
-    merged = sorted(map(tuple, read_rollup_state(spark, state_path).collect()))
-    full = spark.createDataFrame(b0 + b1 + b2, TS_SCHEMA)
-    want = sorted(map(tuple, day_rollup_state(full).collect()))
-    assert merged == want
-    # the late day-1 contribution really landed in a separate log slice:
-    # the (day 1, type 'b') KEY must appear under two distinct batch
-    # ids (batch 0's original row and batch 2's late row) — a bare
-    # day-1 row count is >= 2 from batch 0 alone and would pass even
-    # if the late row were dropped (r8 self-review)
-    log = spark.read.parquet(state_path)
-    day1_b_batches = (
-        log.filter((F.col("day_start") == d(1, 0)) & (F.col("event_type") == "b"))
-        .select("batch_id").distinct().count()
-    )
-    assert day1_b_batches == 2
-
-    # retry idempotence (r9 ADVICE): simulate a retried foreachBatch —
-    # the SAME batch_id re-appends its slice after a partial write.
-    # Merge-on-read must dedup per (batch_id, day_start, event_type)
-    # and still equal the batch state, not double-count batch 1.
-    batch1_slice = log.filter(F.col("batch_id") == batches[1])
-    batch1_slice.write.mode("append").parquet(state_path)
-    retried = sorted(map(tuple, read_rollup_state(spark, state_path).collect()))
-    assert retried == want
-
-
-def test_maintenance_sinks_exactly_once_under_real_retry(spark, staged_dir, tmp_path):
-    """End-to-end forced retry (r9 VERDICT item 6): unlike the hand
-    re-append in the rollup test above, here the ENGINE produces the
-    duplicate — the sink's after-write commit callback raises while
-    processing batch 1, crashing the query AFTER batch 1's slice landed
-    in the state log but BEFORE its checkpoint commit (the exact window
-    a real executor/driver failure duplicates). The restarted query
-    replays batch 1 from the checkpoint under the SAME batch_id, so the
-    log genuinely holds the slice twice; the merge-on-read must still
-    equal the batch state over the full input — the
-    exactly-once claim pinned through the streaming machinery, not just
-    the dedup algebra."""
-    from erathia_market_etl_spark.plans.event_windows import day_rollup_state
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_rollup_state,
-        streaming_rollup_append,
-    )
-
-    b0 = [(1, _ts(9, 5), 7, "trade", 20.0), (2, _ts(9, 10), 7, "buy", 5.0)]
-    b1 = [(3, _ts(9, 50), 7, "trade", 10.0), (4, _ts(10, 5), 8, "trade", 7.5)]
-    b2 = [(5, _ts(10, 30), 7, "trade", 50.0)]
-
-    def run_with_forced_retry(family, append_fn):
-        src_dir = f"{staged_dir}/{family}_src"
-        for i, rows in enumerate([b0, b1, b2]):
-            _write_batch_file(
-                spark, rows, f"{src_dir}/b{i}.parquet", 1_000_000 + 100 * i
-            )
-        state_path = str(tmp_path / f"{family}_state")
-        ckpt = str(tmp_path / f"{family}_ckpt")
-        crashed = {"done": False}
-
-        def crash_once(batch_id):
-            if batch_id == 1 and not crashed["done"]:
-                crashed["done"] = True
-                raise RuntimeError("injected post-write failure")
-
-        def src():
-            return _read_stream(spark, src_dir)
-
-        with pytest.raises(Exception, match="injected post-write failure"):
-            append_fn(src(), state_path, checkpoint=ckpt, after_write=crash_once)
-        # restart resumes from the checkpoint and REPLAYS batch 1
-        resumed = append_fn(src(), state_path, checkpoint=ckpt)
-        assert resumed == [1, 2]
-
-        # non-vacuity: batch 1's slice is physically in the log twice —
-        # every one of its state rows has exactly 2 copies
-        log = spark.read.parquet(state_path)
-        b1_rows = log.filter(F.col("batch_id") == 1)
-        key_cols = [c for c in b1_rows.columns]
-        dup_counts = [
-            r["count"]
-            for r in b1_rows.groupBy(*key_cols).count().collect()
-        ]
-        assert dup_counts and set(dup_counts) == {2}
-        return state_path
-
-    # rollup family
-    p = run_with_forced_retry("rollup", streaming_rollup_append)
-    full = spark.createDataFrame(b0 + b1 + b2, TS_SCHEMA)
-    assert sorted(map(tuple, read_rollup_state(spark, p).collect())) == sorted(
-        map(tuple, day_rollup_state(full).collect())
-    )
-
-
-def test_checkpointless_append_to_nonempty_state_raises(spark, staged_dir, tmp_path):
-    """The r10-ADVICE guard, pinned directly (r12): a checkpoint-free
-    run over an already-populated state log must refuse — two
-    independent checkpoint-free runs both number batches from 0, and
-    the (batch_id, key) dedup would keep an arbitrary row on collision.
-    The emptiness probe goes through the Hadoop FileSystem API (r11
-    ADVICE: an os.walk listing silently reported 'fresh' for any
-    non-local scheme), so this also exercises the JVM-side listing on
-    the local scheme it resolves here."""
-    import datetime
-
-    from erathia_market_etl_spark.streaming.event_stream import (
-        streaming_rollup_append,
-    )
-
-    d = datetime.datetime(2024, 1, 1, 1)
-    _write_batch_file(spark, [(1, d, 1, "a", 10.0)],
-                      f"{staged_dir}/b0.parquet", 1_000_000)
-    state_path = str(tmp_path / "guard_state")
-    # first checkpoint-free run over a FRESH path: allowed
-    batches = streaming_rollup_append(_read_stream(spark, staged_dir),
-                                      state_path)
-    assert batches == [0]
-    # second checkpoint-free run over the now-populated log: refused
-    with pytest.raises(ValueError, match="non-empty"):
-        streaming_rollup_append(_read_stream(spark, staged_dir), state_path)
 
 
 def test_session_watermark_drops_late_row_from_finalized_session(

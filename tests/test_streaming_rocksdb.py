@@ -5,40 +5,25 @@ default HDFSBackedStateStoreProvider. At 100-TB-class state the RocksDB
 provider is the production choice (state spills to local disk instead of
 executor heap, incremental snapshot + changelog checkpointing), and its
 checkpoint/recovery format differs — so "the streams are correct" must
-be pinned on BOTH providers, not just the default. This module re-runs:
-
-  * the five registered stateful stream queries (tumbling watermark agg,
-    session_window merge, stream-stream symmetric-hash interval join,
-    dropDuplicates key dedup, applyInPandasWithState running totals —
-    one per state-store operator family) under RocksDB and asserts the
-    collected rows are IDENTICAL to the default-provider run; and
-  * the mid-commit-crash exactly-once pin (engine-produced duplicate
-    slice, checkpoint replay under the same batch_id) with the
-    checkpoint written and recovered by RocksDB.
+be pinned on BOTH providers, not just the default. This module re-runs
+the five registered stateful stream queries (tumbling watermark agg,
+session_window merge, stream-stream symmetric-hash interval join,
+dropDuplicates key dedup, applyInPandasWithState running totals — one
+per state-store operator family) under RocksDB and asserts the
+collected rows are IDENTICAL to the default-provider run.
 
 The provider conf is scoped set/restore on the shared session conf —
 safe because the suite executes queries sequentially (same contract as
 run_available_now's state_partitions scope). Each memory-sink run uses
 a fresh temp checkpoint, so the provider choice applies cleanly at
-query start; the crash test pins recovery by reusing ONE checkpoint
-across crash + restart with the conf held for both.
+query start.
 """
 
 from __future__ import annotations
 
 import contextlib
-import os
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -92,92 +77,3 @@ def test_stateful_stream_matches_default_provider_on_rocksdb(spark, name):
     assert default_rows, f"{name} produced no rows — vacuous parity"
     assert rocksdb_rows == default_rows
 
-
-TS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
-def _write_batch_file(spark, rows, path, mtime):
-    df = spark.createDataFrame(rows, TS_SCHEMA).coalesce(1)
-    df.write.mode("overwrite").parquet(path + ".tmp")
-    part = [f for f in os.listdir(path + ".tmp") if f.endswith(".parquet")][0]
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    os.rename(os.path.join(path + ".tmp", part), path)
-    os.utime(path, (mtime, mtime))
-
-
-def _ts(h, m=0):
-    import datetime
-
-    return datetime.datetime(2024, 1, 1, h, m)
-
-
-def test_exactly_once_crash_restart_on_rocksdb(spark, tmp_path):
-    """The engine-produced-duplicate exactly-once pin, with the state
-    checkpoint written AND recovered by RocksDB: the sink's after-write
-    callback crashes the query after batch 1's slice landed in the
-    state log but before its checkpoint commit; the restart must resume
-    from the RocksDB checkpoint, replay batch 1 under the same
-    batch_id, and the rollup's merge-on-read must still equal the batch
-    state over the full input. Companion to the default-provider run in
-    test_streaming.py::test_maintenance_sinks_exactly_once_under_real_retry
-    (same injection point, same non-vacuity check)."""
-    from erathia_market_etl_spark.plans.event_windows import day_rollup_state
-    from erathia_market_etl_spark.streaming.event_stream import (
-        read_rollup_state,
-        streaming_rollup_append,
-    )
-
-    b0 = [(1, _ts(9, 5), 7, "trade", 20.0), (2, _ts(9, 10), 7, "buy", 5.0)]
-    b1 = [(3, _ts(9, 50), 7, "trade", 10.0), (4, _ts(10, 5), 8, "trade", 7.5)]
-    b2 = [(5, _ts(10, 30), 7, "trade", 50.0)]
-
-    src_dir = str(tmp_path / "rocksdb_src")
-    for i, rows in enumerate([b0, b1, b2]):
-        _write_batch_file(spark, rows, f"{src_dir}/b{i}.parquet", 1_000_000 + 100 * i)
-    state_path = str(tmp_path / "rocksdb_state")
-    ckpt = str(tmp_path / "rocksdb_ckpt")
-    crashed = {"done": False}
-
-    def crash_once(batch_id):
-        if batch_id == 1 and not crashed["done"]:
-            crashed["done"] = True
-            raise RuntimeError("injected post-write failure")
-
-    def src():
-        return (
-            spark.readStream.schema(TS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-    with _provider(spark, ROCKSDB):
-        with pytest.raises(Exception, match="injected post-write failure"):
-            streaming_rollup_append(
-                src(), state_path, checkpoint=ckpt, after_write=crash_once
-            )
-        # restart recovers state FROM the RocksDB checkpoint and replays
-        # batch 1 under the same batch_id
-        resumed = streaming_rollup_append(src(), state_path, checkpoint=ckpt)
-        assert resumed == [1, 2]
-
-    # non-vacuity: batch 1's slice is physically in the log twice
-    log = spark.read.parquet(state_path)
-    b1_rows = log.filter(F.col("batch_id") == 1)
-    dup_counts = [
-        r["count"] for r in b1_rows.groupBy(*b1_rows.columns).count().collect()
-    ]
-    assert dup_counts and set(dup_counts) == {2}
-
-    # merge-on-read over the duplicated log == batch state over full input
-    full = spark.createDataFrame(b0 + b1 + b2, TS_SCHEMA)
-    assert sorted(map(tuple, read_rollup_state(spark, state_path).collect())) == sorted(
-        map(tuple, day_rollup_state(full).collect())
-    )

@@ -2,8 +2,7 @@
 
 Oracle parity (tests/test_oracle_parity.py) proves Spark and DuckDB
 agree at the fixture SF; these tests prove the operators mean what
-they claim on inputs constructed to exercise the claims: mergeable
-rollup and candle states must equal the full recompute, SCD2 runs
+they claim on inputs constructed to exercise the claims: SCD2 runs
 must compact exactly, OHLC/TWAP must attribute ties and weights
 exactly, and the sweep-line concurrency must match brute force.
 """
@@ -11,38 +10,6 @@ exactly, and the sweep-line concurrency must match brute force.
 from __future__ import annotations
 
 import datetime as dt
-
-
-def test_incremental_rollup_merge_equals_full_recompute(spark):
-    """The mergeable-state algebra: split the fixture event log at an
-    arbitrary day cutoff, compute day_rollup_state on each half, merge —
-    the merged state must equal the full-log recompute EXACTLY (long
-    sums / min / max are a commutative monoid; sum_cents is an exact
-    scaled integer, so no float drift either)."""
-    from pyspark.sql import functions as F
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        day_rollup_state,
-        merge_rollup_states,
-    )
-    from erathia_market_etl_spark.sources.events import load_events
-
-    sf = "/root/testdata/sf0.001"
-    events = load_events(spark, sf)
-    cutoff = events.agg(
-        F.date_trunc("day", F.min("ts")) + F.expr("INTERVAL 2 DAYS")
-    ).first()[0]
-    old = events.filter(F.col("ts") < F.lit(cutoff))
-    new = events.filter(F.col("ts") >= F.lit(cutoff))
-    assert old.count() > 0 and new.count() > 0  # the split is real
-
-    merged = merge_rollup_states(
-        day_rollup_state(old), day_rollup_state(new)
-    )
-    full = day_rollup_state(events)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
 
 
 def test_scd2_planted_run_compaction(spark, tmp_path):

@@ -3,7 +3,7 @@
 Usage: python tools/dump_plans.py [--dir rNN] <suffix> [query ...]
   --dir   output round directory under plans/ (default r16)
   suffix  e.g. "before" / "after" — files land at plans/<dir>/<name>_<suffix>.txt
-  query   optional subset; default = HEADLINE + TIER2 from bench.py
+  query   optional subset; default = QUERIES from bench.py
 
 Construction-eager queries (funnel, components, pagerank) execute jobs
 while the plan is built; this tool only needs the FINAL frame's plan, so
@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, TIER2
+from bench import QUERIES
 from erathia_market_etl_spark.config import EngineConfig
 from erathia_market_etl_spark.plans import all_queries, local_queries
 from erathia_market_etl_spark.session import get_spark
@@ -35,7 +35,7 @@ def main() -> None:
         argv = argv[2:]
     out_dir = os.path.join(_PLANS_ROOT, round_dir)
     suffix = argv[0] if argv else "before"
-    names = argv[1:] or (HEADLINE + TIER2)
+    names = argv[1:] or QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(EngineConfig(app_name="erathia-plan-dump"))
@@ -43,8 +43,6 @@ def main() -> None:
     registry = all_queries()
     local = {n: fn for n, (fn, _) in local_queries().items()}
     for name in names:
-        if name == "stream_rollup_maintenance":
-            continue  # streaming lifecycle closure: no single frame to explain
         fn = registry.get(name) or local.get(name)
         if fn is None:
             print(f"SKIP {name}: not found")

@@ -45,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -252,6 +251,7 @@ def generate_rest(con, mx: dict, r: str) -> None:
 
 
 def run_timings() -> None:
+    from bench import time_query
     from erathia_market_etl_spark.config import EngineConfig
     from erathia_market_etl_spark.plans.dedup_queries import (
         dedup_minhash_lsh_pairs,
@@ -281,11 +281,7 @@ def run_timings() -> None:
     out: dict[str, dict] = {}
     for sf_dir, tag in [(SRC, "sf0.1"), (DST, "sf1")]:
         for fn in queries:
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-                best = min(best, time.perf_counter() - t0)
+            best = time_query(fn, spark, sf_dir)
             out.setdefault(fn.__name__, {})[tag] = round(best, 3)
             print("DONE", fn.__name__, tag, round(best, 3), flush=True)
     for v in out.values():
