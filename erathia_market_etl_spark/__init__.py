@@ -15,7 +15,7 @@ Layout:
     testing         Spark-vs-DuckDB result compare used by tests and tools
     sources/        parquet loading and scan sizing, events-table normalization
     operators/      dedup, similarity, text, graph, rank, skew, temporal,
-                    SCD and the media decoders (image, audio, JPEG, GIF)
+                    SCD and the media decoders (WAV, BMP, gray JPEG)
     functions/      deterministic money arithmetic
     plans/          query families + the driver-facing query registry
     generator/      seeded market simulator (bronze producer, driver-side)

@@ -1,41 +1,29 @@
-"""JPEG (ITU-T T.81 / JFIF) codec, baseline + progressive — pure
-numpy + stdlib.
+"""Baseline grayscale JPEG (ITU-T T.81 / JFIF) codec in numpy + stdlib.
 
-The container ships no PIL/ffmpeg, so ``decode_real`` gated the JPEG
-path behind NotImplementedError through r14. This module closes that
-gate the same way the PNG one was closed: a real, spec-shaped codec
-with no native libraries. Reference parity note: the reference repo
-(D-Kniec/erathia-market-etl) has no media surface at all — this is
-extension-surface work for the 100 TB training-data pipeline, where
-compressed images dominate real corpora.
-
-Scope (honest, like the PNG gates were):
-- DECODE: baseline sequential DCT (SOF0), 8-bit, grayscale or YCbCr,
-  arbitrary 1/2 sampling factors (4:4:4, 4:2:2, 4:2:0, ...), multiple
-  DQT/DHT segments, restart intervals (DRI/RSTn), byte unstuffing.
-  Huffman tables come from the file's own DHT segments (required in
-  every well-formed JPEG), never from module constants.
-- ENCODE: the fixture factory — grayscale or RGB in, 4:4:4 or 4:2:0
-  out, IJG quality scaling of the Annex K quantization tables, the
-  Annex K Huffman tables written into DHT.
-- GATED: arithmetic coding (SOF9+), lossless/hierarchical, 12-bit —
-  NotImplementedError with the frame type named. Progressive (SOF2)
-  DECODES since later in r15: spectral selection + successive
-  approximation, DC/AC first + refinement scans, cross-block EOB
-  runs; the encoder grew a progressive mode (fixed scan script) as
-  its fixture factory.
+- DECODE: baseline sequential DCT (SOF0), 8-bit precision, one
+  component, restart intervals (DRI/RSTn), 0xFF fill bytes and
+  standalone markers, multiple DQT/DHT segments. Huffman tables come
+  from the file's own DHT segments. The output is (h, w, 3) uint8 with
+  the gray plane in all three channels, the shape the image stages
+  (``resize_image_real``) take.
+- ENCODE: the payload factory for ``media_jpeg_real_decode`` and the
+  tests. One gray plane in, IJG quality scaling of the Annex K
+  luminance table, the Annex K luminance Huffman tables written into
+  DHT, optional restart interval.
+- Any other frame (progressive, extended, lossless, hierarchical,
+  arithmetic), a frame with more than one component and a precision
+  other than 8 bits raise ``UnsupportedMediaError`` while the frame
+  header is parsed, before any entropy decode. A truncated or corrupt
+  stream raises ``ValueError``.
 
 Determinism: the DCT is the exact orthonormal separable transform in
-float64; quantization rounds half away from zero explicitly. JPEG is
-lossy, so round-trip contracts are error-bound/PSNR pins plus a
-hand-assembled bitstream decoded against spec arithmetic — never value
-hashes across engines (tests/test_jpeg.py).
+float64, and quantization rounds half away from zero explicitly. JPEG
+is lossy, so the tests pin error bounds and PSNR floors, exactness
+where the arithmetic guarantees it, and a hand-assembled bitstream
+decoded against spec arithmetic (tests/test_jpeg.py).
 
-Scale shape: payloads decode inside the same Arrow ``mapInPandas``
-batches as BMP/PNG (operators/multimodal.py) — bytes never shuffle,
-parallelism = input splits; the per-payload Huffman walk is scalar
-Python by necessity (bit-serial entropy code), the block math is
-batched numpy.
+The Huffman walk is scalar Python (a bit-serial entropy code); the
+block math is batched numpy.
 """
 
 from __future__ import annotations
@@ -44,7 +32,9 @@ import struct
 
 import numpy as np
 
-# ITU-T T.81 Annex K.1/K.2 quantization tables (row-major 8x8).
+from .multimodal import UnsupportedMediaError
+
+# ITU-T T.81 Annex K.1 luminance quantization table (row-major 8x8).
 QUANT_LUM = np.array([
     16, 11, 10, 16, 24, 40, 51, 61,
     12, 12, 14, 19, 26, 58, 60, 55,
@@ -56,17 +46,6 @@ QUANT_LUM = np.array([
     72, 92, 95, 98, 112, 100, 103, 99,
 ], dtype=np.int64)
 
-QUANT_CHROM = np.array([
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-], dtype=np.int64)
-
 # Zigzag scan: ZIGZAG[k] = row-major index of the k-th zigzag position.
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -76,13 +55,9 @@ ZIGZAG = np.array([
 ], dtype=np.int64)
 UNZIGZAG = np.argsort(ZIGZAG)  # row-major index -> zigzag position
 
-# Annex K.3 Huffman specs: (bits[1..16] code-length counts, symbols).
+# Annex K.3 luminance Huffman specs: (bits[1..16] code-length counts, symbols).
 HUFF_DC_LUM = (
     [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-    list(range(12)),
-)
-HUFF_DC_CHROM = (
-    [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
     list(range(12)),
 )
 HUFF_AC_LUM = (
@@ -111,34 +86,6 @@ HUFF_AC_LUM = (
         0xF9, 0xFA,
     ],
 )
-HUFF_AC_CHROM = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77],
-    [
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-        0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-        0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-        0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-        0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-        0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-        0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-        0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-        0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-        0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-        0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-        0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-        0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-        0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-        0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-        0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-        0xF9, 0xFA,
-    ],
-)
-
-
 def _dct_matrix() -> np.ndarray:
     """Orthonormal 8-point DCT-II matrix M: FDCT F = M B M^T, IDCT
     B = M^T F M. M[u,x] = c(u)/2 * cos((2x+1) u pi / 16), c(0)=1/sqrt2."""
@@ -308,29 +255,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     return size, bits
 
 
-def rgb_to_ycbcr(img: np.ndarray) -> np.ndarray:
-    """JFIF (BT.601 full-range) RGB -> YCbCr in float64, unclamped."""
-    r = img[..., 0].astype(np.float64)
-    g = img[..., 1].astype(np.float64)
-    b = img[..., 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168735892 * r - 0.331264108 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418687589 * g - 0.081312411 * b + 128.0
-    return np.stack([y, cb, cr], axis=-1)
-
-
-def ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    """JFIF YCbCr -> RGB, clamped to uint8."""
-    y = ycc[..., 0]
-    cb = ycc[..., 1] - 128.0
-    cr = ycc[..., 2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136286 * cb - 0.714136286 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
 def _plane_blocks(plane: np.ndarray, bw: int, bh: int) -> np.ndarray:
     """Edge-replicate ``plane`` to (bh*8, bw*8) and split into blocks in
     raster order -> (bh*bw, 8, 8) float64."""
@@ -379,286 +303,66 @@ def _encode_block_stream(
     return dc
 
 
-def _emit_ac_first(writer, band, al, ac_codes) -> None:
-    """Progressive AC first scan for one block's band (already
-    truncated-shifted by al): run-length + magnitude like baseline with
-    a per-block EOB0 end-of-band. Cross-block EOBn runs need symbols
-    (r, 0) with r >= 1, which the Annex K tables deliberately omit
-    (real progressive encoders ship custom DHTs) — so this fixture
-    factory stays Annex-K-compatible and the decoder's multi-block
-    EOBRUN path is pinned by a hand-assembled custom-DHT stream in
-    tests/test_jpeg.py instead."""
-    run = 0
-    for v in band:
-        v = int(v)
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]
-            writer.write(code, ln)
-            run -= 16
-        size, bits = _magnitude(v)
-        code, ln = ac_codes[(run << 4) | size]
-        writer.write(code, ln)
-        writer.write(bits, size)
-        run = 0
-    if run:
-        code, ln = ac_codes[0x00]
-        writer.write(code, ln)
-
-
-def _emit_ac_refine(writer, band, al, ac_codes) -> None:
-    """Progressive AC refinement for one block's band. t = |v| >> al
-    classifies each position: 0 = still zero (counts toward runs),
-    1 = newly significant this scan, >1 = nonzero history (one
-    buffered correction bit t & 1). CRITICAL window discipline (the
-    libjpeg encode_mcu_AC_refine shape): pending ZRLs flush at the
-    FIRST nonzero position of EITHER kind once 16 zeros accumulate —
-    flushing only at newly-significant positions would let correction
-    bits span a ZRL's 16-zero advance window and desynchronize the
-    decoder (caught by the q95 fuzz case)."""
-    run = 0
-    pending: list[int] = []
-    for v in band:
-        v = int(v)
-        t = abs(v) >> al
-        if t == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]
-            writer.write(code, ln)
-            run -= 16
-            for b in pending:
-                writer.write(b, 1)
-            pending = []
-        if t > 1:  # history coefficient: buffer its correction bit
-            pending.append(t & 1)
-            continue
-        code, ln = ac_codes[(run << 4) | 1]  # newly significant
-        writer.write(code, ln)
-        writer.write(1 if v > 0 else 0, 1)
-        for b in pending:
-            writer.write(b, 1)
-        pending = []
-        run = 0
-    if run or pending:
-        code, ln = ac_codes[0x00]  # EOB covers the band's tail
-        writer.write(code, ln)
-        for b in pending:
-            writer.write(b, 1)
-
-
 def encode_jpeg(
-    img: np.ndarray,
-    quality: int = 85,
-    subsample: bool = True,
-    restart_interval: int = 0,
-    progressive: bool = False,
+    img: np.ndarray, quality: int = 85, restart_interval: int = 0
 ) -> bytes:
-    """Baseline JFIF encoder. ``img``: (h, w) or (h, w, 1) grayscale, or
-    (h, w, 3) uint8 RGB. RGB writes YCbCr with 4:2:0 subsampling when
-    ``subsample`` (2x2-mean chroma) else 4:4:4; grayscale writes one
-    component. Annex K tables scaled by IJG ``quality``; Annex K Huffman
-    tables embedded via DHT. Quantization rounds half away from zero.
-    ``restart_interval`` > 0 writes DRI and emits RST0..RST7 markers
-    every that many MCUs (predictors reset, stream byte-aligned) — the
-    fixture knob for the decoder's restart path. ``progressive=True``
-    writes SOF2 with a fixed six/ten-scan script (DC first at Al=1, DC
-    refinement to Al=0, then per component an AC 1..63 first scan at
-    Al=1 and its refinement to Al=0) — spectral selection AND
-    successive approximation, the fixture factory for the progressive
-    decode path; restart intervals are baseline-only."""
-    if progressive and restart_interval:
-        raise ValueError("restart intervals are wired for baseline only")
+    """Baseline JFIF encoder for one gray plane: ``img`` is (h, w) or
+    (h, w, 1) uint8. The Annex K luminance table is scaled by IJG
+    ``quality`` and quantization rounds half away from zero; the Annex K
+    luminance Huffman tables go into DHT. ``restart_interval`` > 0
+    writes DRI and an RST0..RST7 marker every that many blocks (DC
+    predictor reset, stream byte-aligned)."""
     if img.ndim == 3 and img.shape[2] == 1:
         img = img[..., 0]
-    if img.ndim == 2:
-        planes = [img.astype(np.float64)]
-        samps = [(1, 1)]
-        qids = [0]
-    elif img.ndim == 3 and img.shape[2] == 3:
-        ycc = rgb_to_ycbcr(img)
-        y, cb, cr = ycc[..., 0], ycc[..., 1], ycc[..., 2]
-        if subsample:
-            h, w = y.shape
-            ph, pw = h + (h & 1), w + (w & 1)
-            if (ph, pw) != (h, w):
-                cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-                cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-            cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            samps = [(2, 2), (1, 1), (1, 1)]
-        else:
-            samps = [(1, 1), (1, 1), (1, 1)]
-        planes = [y, cb, cr]
-        qids = [0, 1, 1]
-    else:
-        raise ValueError("encode_jpeg wants (h,w[,1]) gray or (h,w,3) RGB")
-
-    h, w = planes[0].shape
+    if img.ndim != 2:
+        raise ValueError("encode_jpeg wants an (h, w) or (h, w, 1) gray image")
+    h, w = img.shape
     if h == 0 or w == 0:
         raise ValueError("cannot encode an empty image")
-    qtables = [quality_scale(QUANT_LUM, quality)]
-    if len(planes) == 3:
-        qtables.append(quality_scale(QUANT_CHROM, quality))
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
+    qtable = quality_scale(QUANT_LUM, quality)
+    bw, bh = -(-w // 8), -(-h // 8)
+    ratio = fdct_blocks(_plane_blocks(img, bw, bh) - 128.0) / qtable.reshape(8, 8)
+    quant = (np.sign(ratio) * np.floor(np.abs(ratio) + 0.5)).astype(np.int64)
+    zz = quant.reshape(-1, 64)[:, ZIGZAG]
 
-    # quantize every component's blocks, laid out in MCU-raster order
-    comp_zz = []
-    for plane, (hi, vi), qid in zip(planes, samps, qids):
-        bw, bh = mcux * hi, mcuy * vi
-        blocks = _plane_blocks(plane, bw, bh) - 128.0
-        coefs = fdct_blocks(blocks)
-        q = qtables[qid].reshape(8, 8).astype(np.float64)
-        ratio = coefs / q
-        quant = (np.sign(ratio) * np.floor(np.abs(ratio) + 0.5)).astype(
-            np.int64
-        )
-        zz = quant.reshape(-1, 64)[:, ZIGZAG]
-        comp_zz.append(zz.reshape(bh, bw, 64))
-
-    dc_specs = [HUFF_DC_LUM] + ([HUFF_DC_CHROM] if len(planes) == 3 else [])
-    ac_specs = [HUFF_AC_LUM] + ([HUFF_AC_CHROM] if len(planes) == 3 else [])
-    dc_codes = [_build_codes(*s) for s in dc_specs]
-    ac_codes = [_build_codes(*s) for s in ac_specs]
-
-    def sos_header(comps_tabs, ss, se, ah, al) -> bytes:
-        hdr = b"\xff\xda" + struct.pack(
-            ">HB", 6 + 2 * len(comps_tabs), len(comps_tabs)
-        )
-        for cid, td, ta in comps_tabs:
-            hdr += bytes([cid, (td << 4) | ta])
-        return hdr + bytes([ss, se, (ah << 4) | al])
-
-    scans: list[bytes] = []  # each = SOS header + its entropy bytes
-    if not progressive:
-        writer = _BitWriter()
-        preds = [0] * len(planes)
-        mcu_count = 0
-        rst = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and mcu_count and (
-                    mcu_count % restart_interval == 0
-                ):
-                    # byte-align (1-padded), emit RSTn, reset predictors
-                    tail = writer.flush()
-                    writer = _BitWriter()
-                    writer.out += tail + bytes([0xFF, 0xD0 + rst])
-                    rst = (rst + 1) % 8
-                    preds = [0] * len(planes)
-                mcu_count += 1
-                for ci, (hi, vi) in enumerate(samps):
-                    tid = min(ci, 1)
-                    for by in range(vi):
-                        for bx in range(hi):
-                            zz = comp_zz[ci][my * vi + by, mx * hi + bx]
-                            preds[ci] = _encode_block_stream(
-                                writer, zz, preds[ci],
-                                dc_codes[tid], ac_codes[tid],
-                            )
-        scans.append(
-            sos_header(
-                [(ci + 1, min(ci, 1), min(ci, 1))
-                 for ci in range(len(planes))],
-                0, 63, 0, 0,
-            )
-            + writer.flush()
-        )
-    else:
-        # fixed scan script: DC(Ah=0,Al=1) -> DC refine(Ah=1,Al=0),
-        # then per component AC 1..63 first(Al=1) + refine(Ah=1,Al=0)
-        all_ct = [(ci + 1, min(ci, 1), 0) for ci in range(len(planes))]
-
-        writer = _BitWriter()  # DC first, interleaved, point transform 1
-        preds = [0] * len(planes)
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, (hi, vi) in enumerate(samps):
-                    tid = min(ci, 1)
-                    for by in range(vi):
-                        for bx in range(hi):
-                            dc = int(comp_zz[ci][my * vi + by,
-                                                 mx * hi + bx, 0]) >> 1
-                            size, bits = _magnitude(dc - preds[ci])
-                            code, ln = dc_codes[tid][size]
-                            writer.write(code, ln)
-                            if size:
-                                writer.write(bits, size)
-                            preds[ci] = dc
-        scans.append(sos_header(all_ct, 0, 0, 0, 1) + writer.flush())
-
-        writer = _BitWriter()  # DC refinement: one raw bit per block
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci, (hi, vi) in enumerate(samps):
-                    for by in range(vi):
-                        for bx in range(hi):
-                            writer.write(
-                                int(comp_zz[ci][my * vi + by,
-                                                mx * hi + bx, 0]) & 1,
-                                1,
-                            )
-        scans.append(sos_header(all_ct, 0, 0, 1, 0) + writer.flush())
-
-        for ci, (hi, vi) in enumerate(samps):
-            tid = min(ci, 1)
-            # non-interleaved scans iterate the component's REAL grid
-            cw = (-(-w * hi // hmax) + 7) // 8
-            ch = (-(-h * vi // vmax) + 7) // 8
-            zz = comp_zz[ci]
-
-            writer = _BitWriter()  # AC first at Al=1: trunc toward zero
-            for n in range(cw * ch):
-                band = zz[n // cw, n % cw, 1:]
-                tv = np.sign(band) * (np.abs(band) >> 1)
-                _emit_ac_first(writer, tv, 1, ac_codes[tid])
-            scans.append(
-                sos_header([(ci + 1, 0, tid)], 1, 63, 0, 1)
-                + writer.flush()
-            )
-
-            writer = _BitWriter()  # AC refinement to full precision
-            for n in range(cw * ch):
-                band = zz[n // cw, n % cw, 1:]
-                _emit_ac_refine(writer, band, 0, ac_codes[tid])
-            scans.append(
-                sos_header([(ci + 1, 0, tid)], 1, 63, 1, 0)
-                + writer.flush()
-            )
+    dc_codes = _build_codes(*HUFF_DC_LUM)
+    ac_codes = _build_codes(*HUFF_AC_LUM)
+    writer = _BitWriter()
+    pred = 0
+    rst = 0
+    for n in range(bh * bw):
+        if restart_interval and n and n % restart_interval == 0:
+            # byte-align (1-padded), emit RSTn, reset the predictor
+            tail = writer.flush()
+            writer = _BitWriter()
+            writer.out += tail + bytes([0xFF, 0xD0 + rst])
+            rst = (rst + 1) % 8
+            pred = 0
+        pred = _encode_block_stream(writer, zz[n], pred, dc_codes, ac_codes)
 
     out = bytearray(b"\xff\xd8")  # SOI
     out += b"\xff\xe0" + struct.pack(">H", 16)  # APP0 JFIF
     out += b"JFIF\x00\x01\x01\x00" + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    for tq, table in enumerate(qtables):
-        out += b"\xff\xdb" + struct.pack(">HB", 67, tq)
-        out += bytes(int(table[i]) for i in ZIGZAG)
-    out += bytes([0xFF, 0xC2 if progressive else 0xC0]) + struct.pack(
-        ">HBHHB", 8 + 3 * len(planes), 8, h, w, len(planes)
-    )
-    for ci, ((hi, vi), qid) in enumerate(zip(samps, qids)):
-        out += bytes([ci + 1, (hi << 4) | vi, qid])
-    for cls, specs in ((0, dc_specs), (1, ac_specs)):
-        for tid, (bits, symbols) in enumerate(specs):
-            out += b"\xff\xc4" + struct.pack(
-                ">HB", 19 + len(symbols), (cls << 4) | tid
-            )
-            out += bytes(bits) + bytes(symbols)
+    out += b"\xff\xdb" + struct.pack(">HB", 67, 0)
+    out += bytes(int(qtable[i]) for i in ZIGZAG)
+    # SOF0: 8-bit, h x w, one component (id 1, 1x1 sampling, DQT 0)
+    out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
+    for tc, (bits, symbols) in ((0x00, HUFF_DC_LUM), (0x10, HUFF_AC_LUM)):
+        out += b"\xff\xc4" + struct.pack(">HB", 19 + len(symbols), tc)
+        out += bytes(bits) + bytes(symbols)
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    for s in scans:
-        out += s
+    # SOS: component 1 with tables 0/0, spectral band 0..63, Ah=Al=0
+    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00\x00\x3f\x00"
+    out += writer.flush()
     out += b"\xff\xd9"  # EOI
     return bytes(out)
 
 
-_GATED_SOFS = {
+# Every start-of-frame marker other than baseline SOF0 (T.81 Table B.1).
+_OTHER_SOFS = {
     0xC1: "extended sequential",
+    0xC2: "progressive",
     0xC3: "lossless",
     0xC5: "differential sequential",
     0xC6: "differential progressive",
@@ -672,102 +376,31 @@ _GATED_SOFS = {
 }
 
 
-class _ScanState:
-    """Mutable entropy-decoding state shared across one scan's blocks:
-    per-component DC predictors plus the cross-block EOB run counter
-    (progressive AC scans, T.81 G.1.2.2)."""
-
-    __slots__ = ("preds", "eobrun")
-
-    def __init__(self) -> None:
-        self.preds: dict[int, int] = {}
-        self.eobrun = 0
-
-    def reset(self) -> None:  # restart-marker semantics
-        self.preds = dict.fromkeys(self.preds, 0)
-        self.eobrun = 0
-
-
-def _decode_block(
-    zz, reader, dcm, acm, cs, ss, se, ah, al, state: _ScanState
-) -> None:
-    """Decode one block's contribution from the current scan into the
-    zigzag coefficient row ``zz``. Baseline is the ss=0/se=63/ah=al=0
-    special case of the same four paths (T.81 F.2 and G.1.2):
-    DC first / DC refine / AC first (with EOB runs) / AC refine."""
-    k = ss
-    if ss == 0:
-        if ah == 0:
-            s = reader.decode_symbol(dcm)
-            state.preds[cs] += _extend(reader.receive(s), s)
-            zz[0] = state.preds[cs] << al
-        else:  # DC successive-approximation refinement: one bit
-            if reader.read_bit():
-                zz[0] |= 1 << al
-        if se == 0:
-            return
-        k = 1
-    if ah == 0:
-        # AC first scan (al > 0) or the baseline tail (al == 0): EOBn
-        # with n=0 (the plain EOB) makes eobrun 0, so baseline rides
-        # the same loop
-        if state.eobrun > 0:
-            state.eobrun -= 1
-            return
-        while k <= se:
-            rs = reader.decode_symbol(acm)
-            run, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if run < 15:  # EOBn: this block + (eobrun) more done
-                    state.eobrun = (1 << run) - 1 + reader.receive(run)
-                    return
-                k += 16  # ZRL
-            else:
-                k += run
-                if k > se:
-                    raise ValueError("JPEG AC run past band end")
-                zz[k] = _extend(reader.receive(s), s) << al
-                k += 1
-        return
-    # AC successive-approximation refinement (T.81 G.1.2.3): runs count
-    # zero-HISTORY positions; every nonzero-history position passed
-    # over contributes one correction bit
-    p1 = 1 << al
-    m1 = -p1
-    if state.eobrun == 0:
-        while k <= se:
-            rs = reader.decode_symbol(acm)
-            run, s = rs >> 4, rs & 0xF
-            if s == 0:
-                if run < 15:
-                    # EOBn INCLUDING this block; the tail loop below
-                    # consumes this block's correction bits then -= 1
-                    state.eobrun = (1 << run) + reader.receive(run)
-                    break
-                val = 0  # ZRL: 16 zero-history positions, nothing placed
-            else:
-                if s != 1:
-                    raise ValueError("JPEG refine magnitude must be 1")
-                val = p1 if reader.read_bit() else m1
-            while k <= se:
-                if zz[k] != 0:
-                    if reader.read_bit() and (int(zz[k]) & p1) == 0:
-                        zz[k] += p1 if zz[k] > 0 else m1
-                else:
-                    if run == 0:
-                        if val:
-                            zz[k] = val
-                        k += 1
-                        break
-                    run -= 1
-                k += 1
-    if state.eobrun > 0:
-        while k <= se:  # correction bits for the rest of the band
-            if zz[k] != 0:
-                if reader.read_bit() and (int(zz[k]) & p1) == 0:
-                    zz[k] += p1 if zz[k] > 0 else m1
-            k += 1
-        state.eobrun -= 1
+def _decode_block(zz, reader: _BitReader, dcm, acm, pred: int) -> int:
+    """Decode one baseline block (T.81 F.2.2) into the zigzag row
+    ``zz``; returns the new DC predictor."""
+    s = reader.decode_symbol(dcm)
+    if s > 11:  # T.81 F.1.2.1: 8-bit DC differences need at most 11 bits
+        raise ValueError("corrupt JPEG DC magnitude category")
+    pred += _extend(reader.receive(s), s)
+    zz[0] = pred
+    k = 1
+    while k <= 63:
+        rs = reader.decode_symbol(acm)
+        run, s = rs >> 4, rs & 0xF
+        if rs == 0x00:  # EOB
+            break
+        if rs == 0xF0:  # ZRL: 16 zeros
+            k += 16
+            continue
+        if s == 0:  # EOBn with n > 0 exists only in progressive scans
+            raise ValueError(f"invalid baseline JPEG AC symbol 0x{rs:02X}")
+        k += run
+        if k > 63:
+            raise ValueError("JPEG AC run past block end")
+        zz[k] = _extend(reader.receive(s), s)
+        k += 1
+    return pred
 
 
 def _find_next_marker(payload: bytes, pos: int) -> int:
@@ -782,18 +415,10 @@ def _find_next_marker(payload: bytes, pos: int) -> int:
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG decoder -> (h, w, 3) uint8 RGB (grayscale output is
-    replicated across the three channels, matching decode_png's policy).
-    Supports baseline sequential (SOF0) AND progressive (SOF2, r15 —
-    spectral selection + successive approximation, DC/AC first and
-    refinement scans, cross-block EOB runs), 8-bit, 1 or 3 components,
-    sampling factors up to 4, restart intervals, multi-segment DQT/DHT;
-    non-interleaved scans iterate the component's REAL block grid
-    (ceil(ceil(dim*fi/fmax)/8)), not the MCU-padded one. Chroma
-    upsampling is pixel replication (JFIF leaves the filter to the
-    decoder — replication is deterministic and arithmetic-
-    reproducible). Arithmetic/lossless/hierarchical frames raise
-    NotImplementedError by name; corruption raises ValueError."""
+    """Baseline grayscale JPEG decoder -> (h, w, 3) uint8, the gray
+    plane replicated across the three channels. Any frame other than
+    one-component 8-bit SOF0 raises UnsupportedMediaError from its
+    header; corruption and truncation raise ValueError."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     pos = 2
@@ -801,9 +426,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     htables: dict[tuple[int, int], dict] = {}
     frame = None
     restart_interval = 0
-    stores: dict[int, np.ndarray] = {}
     saw_scan = False
-    hmax = vmax = mcux = mcuy = 0
     while True:
         if pos + 2 > len(payload):
             raise ValueError("truncated JPEG: no EOI")
@@ -820,10 +443,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
         if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # TEM / stray RSTn: no length
             pos += 2
             continue
-        if marker in _GATED_SOFS:
-            raise NotImplementedError(
-                f"JPEG {_GATED_SOFS[marker]} (SOF{marker - 0xC0}) decode "
-                "is not wired — baseline SOF0 and progressive SOF2 only"
+        if marker in _OTHER_SOFS:
+            raise UnsupportedMediaError(
+                f"JPEG {_OTHER_SOFS[marker]} frame (SOF{marker - 0xC0}) is "
+                "not supported; baseline SOF0 only"
             )
         if pos + 4 > len(payload):
             raise ValueError("truncated JPEG segment header")
@@ -859,103 +482,45 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                     raise ValueError("truncated DHT table")
                 htables[(cls, tid)] = _build_decode_map(bits, symbols)
                 i += 17 + n
-        elif marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
+        elif marker == 0xC0:  # SOF0 baseline
             prec, fh, fw, ncomp = struct.unpack_from(">BHHB", body, 0)
             if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG is wired")
+                raise UnsupportedMediaError(
+                    f"{prec}-bit JPEG is not supported; 8-bit only"
+                )
+            if ncomp != 1:
+                raise UnsupportedMediaError(
+                    f"JPEG with {ncomp} components is not supported; "
+                    "grayscale (one component) only"
+                )
             if fh == 0 or fw == 0:
                 raise ValueError("JPEG frame with zero dimension")
-            comps = []
-            for c in range(ncomp):
-                cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, sampling >> 4, sampling & 0xF, tq))
-            frame = (fh, fw, comps, marker == 0xC2)
-            hmax = max(hi for _, hi, _, _ in comps)
-            vmax = max(vi for _, _, vi, _ in comps)
-            mcux = -(-fw // (8 * hmax))
-            mcuy = -(-fh // (8 * vmax))
-            stores = {
-                cid: np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int64)
-                for cid, hi, vi, _tq in comps
-            }
+            cid, _sampling, tq = struct.unpack_from(">BBB", body, 6)
+            frame = (fh, fw, cid, tq)
+            # one component: its scan is non-interleaved, one block per
+            # MCU whatever its sampling factors (T.81 A.2.2)
+            store = np.zeros((-(-fh // 8) * -(-fw // 8), 64), dtype=np.int64)
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS: decode this scan, keep parsing
+        elif marker == 0xDA:  # SOS: decode the scan, keep parsing
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            fh, fw, comps, progressive = frame
-            by_id = {cid: (hi, vi, tq) for cid, hi, vi, tq in comps}
-            nsc = body[0]
-            scan = []
-            for c in range(nsc):
-                cs, tids = body[1 + 2 * c], body[2 + 2 * c]
-                if cs not in by_id:
-                    raise ValueError(
-                        f"JPEG scan names unknown component {cs}"
-                    )
-                scan.append((cs, tids >> 4, tids & 0xF))
-            ss, se, aa = body[1 + 2 * nsc : 4 + 2 * nsc]
-            ah, al = aa >> 4, aa & 0xF
-            if not progressive and (ss, se, ah, al) != (0, 63, 0, 0):
+            nsc, cs, tids, ss, se, aa = struct.unpack_from(">6B", body, 0)
+            if nsc != 1 or cs != frame[2]:
+                raise ValueError("JPEG scan does not name the frame's component")
+            if (ss, se, aa) != (0, 63, 0):
                 raise ValueError("baseline scan must cover 0..63 at Ah=Al=0")
-            if progressive and ss == 0 and se != 0:
-                raise ValueError("progressive DC and AC need separate scans")
-            if ss > 0 and nsc != 1:
-                raise ValueError("AC scans are single-component")
-            state = _ScanState()
-            state.preds = {cs: 0 for cs, _td, _ta in scan}
-            tabs = {}
-            for cs, td, ta in scan:
-                dcm = htables.get((0, td))
-                acm = htables.get((1, ta))
-                # only the table classes the scan actually uses must
-                # exist (a DC-only scan may carry any Ta, and vice versa)
-                if ss == 0 and ah == 0 and dcm is None:
-                    raise ValueError("JPEG scan needs a missing DC table")
-                if ss == 0 and ah > 0:
-                    pass  # DC refinement reads raw bits, no table
-                if se > 0 and acm is None:
-                    raise ValueError("JPEG scan needs a missing AC table")
-                tabs[cs] = (dcm, acm)
+            dcm = htables.get((0, tids >> 4))
+            acm = htables.get((1, tids & 0xF))
+            if dcm is None or acm is None:
+                raise ValueError("JPEG scan needs a missing Huffman table")
             reader = _BitReader(payload, pos + 2 + seglen)
-            if len(scan) > 1:  # interleaved: MCU order
-                unit = 0
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        if restart_interval and unit and (
-                            unit % restart_interval == 0
-                        ):
-                            reader.restart()
-                            state.reset()
-                        unit += 1
-                        for cs, _td, _ta in scan:
-                            hi, vi, _tq = by_id[cs]
-                            dcm, acm = tabs[cs]
-                            store = stores[cs]
-                            for by in range(vi):
-                                for bx in range(hi):
-                                    _decode_block(
-                                        store[my * vi + by, mx * hi + bx],
-                                        reader, dcm, acm, cs,
-                                        ss, se, ah, al, state,
-                                    )
-            else:  # non-interleaved: the component's REAL block grid
-                cs, _td, _ta = scan[0]
-                hi, vi, _tq = by_id[cs]
-                dcm, acm = tabs[cs]
-                store = stores[cs]
-                cw = (-(-fw * hi // hmax) + 7) // 8
-                ch = (-(-fh * vi // vmax) + 7) // 8
-                for n in range(cw * ch):
-                    if restart_interval and n and (
-                        n % restart_interval == 0
-                    ):
-                        reader.restart()
-                        state.reset()
-                    _decode_block(
-                        store[n // cw, n % cw], reader, dcm, acm, cs,
-                        ss, se, ah, al, state,
-                    )
+            pred = 0
+            for n in range(len(store)):
+                if restart_interval and n and n % restart_interval == 0:
+                    reader.restart()
+                    pred = 0
+                pred = _decode_block(store[n], reader, dcm, acm, pred)
             saw_scan = True
             pos = _find_next_marker(payload, reader.pos)
             continue
@@ -963,38 +528,14 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
 
     if frame is None or not saw_scan:
         raise ValueError("truncated JPEG: no SOS before EOF")
-    fh, fw, comps, _progressive = frame
-
-    planes = []
-    for cid, hi, vi, tq in comps:
-        if hmax % hi or vmax % vi:
-            raise NotImplementedError(
-                "non-integer JPEG chroma upsampling ratio is not wired"
-            )
-        if tq not in qtables:
-            raise ValueError(f"JPEG frame needs missing DQT {tq}")
-        q = qtables[tq]
-        store = stores[cid]
-        bh, bw = store.shape[0], store.shape[1]
-        # store rows are zigzag-ordered; unzigzag back to row-major
-        # BEFORE multiplying by the row-major quantization table
-        coefs = (
-            store.reshape(-1, 64)[:, UNZIGZAG] * q[None, :]
-        ).reshape(-1, 8, 8).astype(np.float64)
-        pix = idct_blocks(coefs) + 128.0
-        plane = (
-            pix.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
-            .reshape(bh * 8, bw * 8)
-        )
-        # upsample by replication to the full MCU grid, crop to frame
-        plane = np.repeat(
-            np.repeat(plane, hmax // hi, axis=1), vmax // vi, axis=0
-        )
-        planes.append(plane[:fh, :fw])
-
-    if len(planes) == 1:
-        gray = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-        return np.repeat(gray[..., None], 3, axis=2)
-    if len(planes) == 3:
-        return ycbcr_to_rgb(np.stack(planes, axis=-1))
-    raise ValueError(f"unsupported JPEG component count {len(planes)}")
+    fh, fw, _cid, tq = frame
+    if tq not in qtables:
+        raise ValueError(f"JPEG frame needs missing DQT {tq}")
+    bh, bw = -(-fh // 8), -(-fw // 8)
+    # store rows are zigzag-ordered; unzigzag back to row-major BEFORE
+    # multiplying by the row-major quantization table
+    coefs = (store[:, UNZIGZAG] * qtables[tq][None, :]).reshape(-1, 8, 8)
+    pix = idct_blocks(coefs.astype(np.float64)) + 128.0
+    plane = pix.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
+    gray = np.clip(np.round(plane[:fh, :fw]), 0, 255).astype(np.uint8)
+    return np.repeat(gray[..., None], 3, axis=2)

@@ -197,8 +197,7 @@ def media_wav_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     division+sqrt over exact sums, 6dp floor-trick) directly from the
     formula, so any byte-level corruption in encode→Arrow→decode
     breaks the hash match. Both stages are narrow mapInPandas;
-    payloads never shuffle. Compressed codecs (png/jpeg/h264) remain
-    honestly NotImplementedError — no PIL/ffmpeg in this container."""
+    payloads never shuffle."""
     import numpy as np
     import pandas as pd
 

@@ -195,25 +195,3 @@ def test_artifact_names_normalize_equivalent_dir_spellings(tmp_path):
     assert artifact_suffix(str(link2)) == ""
     assert artifact_suffix("/root/testdata/sf0.1") == "_sf01"
     assert artifact_suffix("/root/testdata/sf1/") == "_sf1"
-
-
-def test_advice_annotation_keeps_ledger_entries_absent_from_advice(tmp_path):
-    """Regenerating against an ADVICE.md with no bullets annotates
-    nothing and leaves tools/advice_ledger.json byte-identical: the
-    ledger is the resolution history, not a mirror of the current
-    advice file."""
-    from pathlib import Path
-
-    from tools.evidence_map import annotate_advice
-
-    ledger = Path(__file__).resolve().parents[1] / "tools" / "advice_ledger.json"
-    before = ledger.read_bytes()
-    assert len(json.loads(before)) > 1  # entries beyond "_comment"
-    (tmp_path / "tools").mkdir()
-    (tmp_path / "tools" / "advice_ledger.json").write_bytes(before)
-    (tmp_path / "ADVICE.md").write_text("")
-
-    stats = annotate_advice(tmp_path)
-
-    assert stats == {"advice_bullets": 0, "advice_open": 0}
-    assert (tmp_path / "tools" / "advice_ledger.json").read_bytes() == before

@@ -22,8 +22,6 @@ ALLOWED = {
         "relational", "sampling_queries", "similarity_queries", "sketch_queries",
         "skew_queries", "streaming_queries", "temporal_queries", "text_queries",
     },
-    # probe: sets HAVE_CODECS by whether Pillow imports
-    "operators/multimodal.py": {"Image"},
 }
 
 

@@ -16,16 +16,10 @@ only).
 Run at round close (after tools/localcheck.py): the table is committed
 so a judge can diff it against the JSON artifacts directly.
 
-r13 (VERDICT r12 items 7+8), two more generated artifacts per run:
-  * the FAMILY SUMMARY header block in COVERAGE.md (between the
-    GENERATED:FAMILY-SUMMARY markers) — families x set counts x newest
-    evidence round, derived from the same JSON, so the judge gets the
-    20-line state view before the 800-line narrative;
-  * STATUS annotations in ADVICE.md — every advice bullet gets a
-    generated `_[status ...]_` line from tools/advice_ledger.json
-    (hand-maintained resolution ledger, keyed by the bullet's
-    file:line anchor); bullets with no ledger entry are annotated
-    OPEN, so a stale ADVICE.md can never silently misdirect a round.
+It also regenerates the FAMILY SUMMARY header block in COVERAGE.md
+(between the GENERATED:FAMILY-SUMMARY markers): families x set counts
+x newest evidence round, derived from the same JSON, so a reader gets
+the 20-line state view before the 800-line narrative.
 
 Usage: python tools/evidence_map.py
 """
@@ -174,58 +168,6 @@ def write_family_summary(
         path.write_text(text[:idx] + "\n" + block + "\n" + text[idx:])
 
 
-def annotate_advice(root: Path) -> dict:
-    """Rewrite ADVICE.md with a generated status line per bullet, from
-    tools/advice_ledger.json. The ledger is only read: entries whose
-    anchors are not in ADVICE.md are kept, so regenerating against an
-    empty ADVICE.md leaves the resolution history intact."""
-    advice_path = root / "ADVICE.md"
-    ledger_path = root / "tools" / "advice_ledger.json"
-    if not advice_path.exists():
-        return {"advice_bullets": 0}
-    ledger = (
-        json.loads(ledger_path.read_text()) if ledger_path.exists() else {}
-    )
-    anchor_re = re.compile(r"[\w./-]+\.py:\d+")
-    # drop prior annotations (idempotent regeneration)
-    lines = [
-        ln
-        for ln in advice_path.read_text().splitlines()
-        if not ln.strip().startswith("_[status")
-    ]
-    out: list[str] = []
-    pending: str | None = None
-
-    def flush() -> None:
-        nonlocal pending
-        if pending is not None:
-            out.append(pending)
-            pending = None
-
-    n_bullets = n_open = 0
-    for i, ln in enumerate(lines):
-        if ln.startswith("- "):
-            flush()
-            n_bullets += 1
-            m = anchor_re.search(ln)
-            key = m.group(0) if m else None
-            ent = ledger.get(key) if key else None
-            if ent:
-                pending = (
-                    f"  _[status r{ent['round']}: "
-                    f"{str(ent['status']).upper()} — {ent['note']}]_"
-                )
-            else:
-                n_open += 1
-                pending = "  _[status: OPEN]_"
-        elif pending is not None and not ln.startswith("  "):
-            flush()
-        out.append(ln)
-    flush()
-    advice_path.write_text("\n".join(out) + "\n")
-    return {"advice_bullets": n_bullets, "advice_open": n_open}
-
-
 def main() -> None:
     root = Path(__file__).resolve().parents[1]
     evidence = collect_evidence(root)
@@ -279,14 +221,12 @@ def main() -> None:
     out_path = root / "COVERAGE_EVIDENCE.md"
     out_path.write_text("\n".join(lines))
     write_family_summary(root, evidence, sets)
-    advice_stats = annotate_advice(root)
     print(json.dumps({
         "queries": len(sets),
         "green": len(with_evidence),
         "never_green": missing,
         "aged_past_window": aged,
         "artifact": str(out_path),
-        **advice_stats,
     }))
 
 
