@@ -22,15 +22,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from erathia_market_etl_spark.config import EngineConfig
-from erathia_market_etl_spark.plans import all_queries, local_queries
+from erathia_market_etl_spark.plans import all_queries
 from erathia_market_etl_spark.session import get_spark
 
 # One row per shipped family: the relational marts, windows, dedup,
 # similarity, text, the heavyweight pipelines (LSH -> components ->
 # anti-join, the training funnel, PQ), graph, temporal joins, media
-# decode and the block-rank kernels. scd2_user_tier_history and
-# agg_hll_registers are local-only (plans.local_queries()); every other
-# name is a registered driver query.
+# decode and the block-rank kernels. Every name is a registered driver
+# query.
 QUERIES = [
     "q1_net_revenue_by_nation",
     "q2_monthly_price_history",
@@ -59,9 +58,7 @@ QUERIES = [
     "sim_pq_quality",
     "asof_click_to_purchase",
     "graph_pagerank_influence",
-    "scd2_user_tier_history",
     "media_feature_extract",
-    "agg_hll_registers",
     "mart_revenue_gini",
     "events_peak_concurrency",
 ]
@@ -96,9 +93,8 @@ def bench_artifact_name(sf_dir: str) -> str:
 def emit_result(out: dict, root: str, artifact: str = "BENCH_FULL.json") -> str:
     """Write the full payload to the artifact file and return the
     stdout line (full payload if it fits, else with ratio maps
-    dropped). Non-default SF dirs get their own artifact name (the
-    localcheck suffix convention) so an sf1 decade-step bench never
-    overwrites the canonical sf0.1 artifact."""
+    dropped). Non-default SF dirs get their own artifact name so an sf1
+    decade-step bench never overwrites the canonical sf0.1 artifact."""
     with open(os.path.join(root, artifact), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
         f.write("\n")
@@ -136,7 +132,7 @@ def time_query(fn, spark, sf_dir: str, runs: int = 3) -> float:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
@@ -154,7 +150,6 @@ def main() -> None:
     ).select(scorer("v")).write.mode("overwrite").format("noop").save()
 
     registry = all_queries()
-    registry.update((n, fn) for n, (fn, _) in local_queries().items())
 
     # One untimed run of the first row (r7 VERDICT item 4): C2 keeps
     # recompiling the scan/join/agg codegen paths through the first few

@@ -333,112 +333,6 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# scd2_user_tier_history: type-2 slowly-changing-dimension compaction
-# (CDC gaps-and-islands).
-# ---------------------------------------------------------------------------
-
-SCD2_USER_TIER_HISTORY_ORACLE = """
-    WITH tiers AS (
-        SELECT user_id, event_id, ts,
-               CASE WHEN value < 5 THEN 'low'
-                    WHEN value < 15 THEN 'mid'
-                    ELSE 'high' END AS tier
-        FROM events
-    ),
-    flagged AS (
-        SELECT *,
-               CASE WHEN LAG(tier) OVER w IS DISTINCT FROM tier
-                    THEN 1 ELSE 0 END AS chg
-        FROM tiers
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    runs AS (
-        SELECT *,
-               SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS UNBOUNDED PRECEDING) AS run_id
-        FROM flagged
-    ),
-    intervals AS (
-        SELECT user_id, run_id,
-               MIN(tier) AS tier,        -- constant within a run
-               MIN(ts) AS valid_from,
-               CAST(COUNT(*) AS BIGINT) AS n_events
-        FROM runs GROUP BY user_id, run_id
-    )
-    SELECT user_id, tier, valid_from,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from) AS valid_to,
-           LEAD(valid_from) OVER (PARTITION BY user_id
-                                  ORDER BY valid_from) IS NULL AS is_current,
-           n_events
-    FROM intervals
-    ORDER BY user_id, valid_from
-    """
-
-
-@query("scd2_user_tier_history", SCD2_USER_TIER_HISTORY_ORACLE, local=True)
-def scd2_user_tier_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 slowly-changing-dimension history of each user's value
-    tier (low/mid/high), compacted from the raw event stream: one row
-    per consecutive same-tier RUN with [valid_from, valid_to) validity,
-    an is_current flag on the open interval, and the run's event count.
-    This is the CDC/warehouse dimension-history build (Kimball SCD2)
-    and the gaps-and-islands classic in one: change detection via LAG,
-    island ids via a running sum of change flags, interval closing via
-    LEAD over the compacted runs.
-
-    Determinism/exactness: the tier is a CASE over ``value`` (no float
-    arithmetic crosses an engine boundary — the comparison thresholds
-    are exact doubles), every window orders by (ts, event_id), and the
-    output columns are strings/timestamps/longs — hash-exact.
-
-    Scale shape: ONE exchange on user_id serves all three windows and
-    the run aggregation (same partition key throughout — Catalyst
-    reuses the Exchange; the LEAD windows ride the already-compacted
-    interval table, orders of magnitude smaller than the input). No
-    global window, no driver state. At 100 TB this is the standard
-    dimension-history refresh: partition by the entity key, compact
-    within partitions."""
-    tier = (
-        F.when(F.col("value") < 5, F.lit("low"))
-        .when(F.col("value") < 15, F.lit("mid"))
-        .otherwise(F.lit("high"))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tiers = load_events(spark, sf_dir).select(
-        "user_id", "event_id", "ts", tier.alias("tier")
-    )
-    flagged = tiers.withColumn(
-        "chg",
-        F.when(
-            ~F.lag("tier").over(w).eqNullSafe(F.col("tier")), F.lit(1)
-        ).otherwise(F.lit(0)),
-    )
-    runs = flagged.withColumn(
-        "run_id",
-        F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    intervals = runs.groupBy("user_id", "run_id").agg(
-        F.min("tier").alias("tier"),
-        F.min("ts").alias("valid_from"),
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-    )
-    w2 = Window.partitionBy("user_id").orderBy("valid_from")
-    nxt = F.lead("valid_from").over(w2)
-    return (
-        intervals.select(
-            "user_id",
-            "tier",
-            "valid_from",
-            nxt.alias("valid_to"),
-            nxt.isNull().alias("is_current"),
-            "n_events",
-        )
-        .orderBy("user_id", "valid_from")
-    )
-
-
-# ---------------------------------------------------------------------------
 # ohlc_hourly + twap_daily: market-data aggregation shapes over the
 # irregular event stream.
 # ---------------------------------------------------------------------------

@@ -23,26 +23,15 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-# oracled capabilities kept out of the driver contract: name -> (fn, oracle)
-LOCAL: dict[str, tuple[QueryFn, str]] = {}
 
 
-def query(
-    name: str, oracle: str | None = None, local: bool = False
-) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a named query; ``oracle`` is the DuckDB SQL twin (omit
-    only for genuinely non-SQL-expressible operators). ``local=True``
-    keeps an oracled query out of the driver contract: it lands in
-    ``local_queries()`` instead of ``all_queries()``."""
+    only for genuinely non-SQL-expressible operators)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in QUERIES or name in LOCAL:
+        if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        if local:
-            if oracle is None:
-                raise ValueError(f"local query {name} needs an oracle")
-            LOCAL[name] = (fn, oracle)
-            return fn
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -61,7 +50,6 @@ def _load_all() -> None:
         relational,
         sampling_queries,
         similarity_queries,
-        sketch_queries,
         skew_queries,
         streaming_queries,
         temporal_queries,
@@ -78,7 +66,3 @@ def all_oracles() -> dict[str, str]:
     _load_all()
     return dict(ORACLES)
 
-
-def local_queries() -> dict[str, tuple[QueryFn, str]]:
-    _load_all()
-    return dict(LOCAL)

@@ -213,7 +213,7 @@ def get_spark(cfg: EngineConfig | None = None, **extra_conf: str) -> SparkSessio
         # flip or a legacy-configured host session can't silently change
         # arithmetic semantics): integer overflow/invalid-cast RAISE
         # instead of wrapping. Every integer-heavy operator (pagerank
-        # fixed-point, z-order interleave, HLL registers) carries a
+        # fixed-point, z-order interleave) carries a
         # hand-proved non-wrap envelope — under ANSI those proofs are
         # load-bearing (they are why the queries never throw), and a
         # latent overflow becomes a loud runtime error instead of

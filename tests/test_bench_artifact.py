@@ -95,13 +95,13 @@ def test_stdout_line_fits_driver_tail_window(tmp_path):
 
 
 def test_every_bench_row_is_a_registered_query():
-    """Each row resolves through the driver registry or the local-only
-    set, so a bench row can never keep unregistered package code
-    alive the way the streaming-sink closure once did."""
-    from erathia_market_etl_spark.plans import all_queries, local_queries
+    """Each row resolves through the driver registry, so a bench row
+    can never keep unregistered package code alive the way the
+    streaming-sink closure once did."""
+    from erathia_market_etl_spark.plans import all_queries
 
     assert len(bench.QUERIES) == len(set(bench.QUERIES))
-    registered = set(all_queries()) | set(local_queries())
+    registered = set(all_queries())
     assert set(bench.QUERIES) <= registered, sorted(
         set(bench.QUERIES) - registered)
 
@@ -168,8 +168,6 @@ def test_artifact_names_normalize_equivalent_dir_spellings(tmp_path):
     gen_scale_step bench_totals fold only reads the canonical names."""
     import os
 
-    from tools.localcheck import artifact_suffix
-
     for spelling in (
         bench.DEFAULT_SF_DIR,
         bench.DEFAULT_SF_DIR + "/",
@@ -181,17 +179,3 @@ def test_artifact_names_normalize_equivalent_dir_spellings(tmp_path):
     assert bench.bench_artifact_name(str(link)) == "BENCH_FULL.json"
     assert bench.bench_artifact_name("/root/testdata/sf1") == \
         "BENCH_FULL_sf1.json"
-
-    from tools import localcheck
-
-    for spelling in (
-        localcheck.DEFAULT_SF_DIR,
-        localcheck.DEFAULT_SF_DIR + "/",
-        "/root/testdata/../testdata/sf0.01",
-    ):
-        assert artifact_suffix(spelling) == ""
-    link2 = tmp_path / "sf_localcheck_link"
-    os.symlink(localcheck.DEFAULT_SF_DIR, link2)
-    assert artifact_suffix(str(link2)) == ""
-    assert artifact_suffix("/root/testdata/sf0.1") == "_sf01"
-    assert artifact_suffix("/root/testdata/sf1/") == "_sf1"

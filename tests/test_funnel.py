@@ -64,76 +64,6 @@ def test_funnel_strict_order_and_window(spark, tmp_path):
     assert out["purchase"][1] == 250
 
 
-def test_scd2_matches_python_reference_generative(spark, tmp_path):
-    """Generative equality of the SCD2 compaction against an
-    independent pure-Python run-compactor over random event sequences
-    (random users, shuffled insertion order, duplicate timestamps with
-    id tiebreaks) — the test class that catches shared-algebra bugs
-    cross-engine parity can't (the gap-fill precedent)."""
-    import datetime as dt
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        scd2_user_tier_history,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def tier(v):
-        return "low" if v < 5 else ("mid" if v < 15 else "high")
-
-    @settings(max_examples=4, deadline=None)
-    @given(st.data())
-    def run(data):
-        n = data.draw(st.integers(2, 24))
-        rows = []
-        for eid in range(n):
-            uid = data.draw(st.integers(1, 3))
-            minute = data.draw(st.integers(0, 10))
-            value = data.draw(
-                st.sampled_from([0.0, 4.9, 5.0, 14.9, 15.0, 30.0])
-            )
-            rows.append((eid, t0 + dt.timedelta(minutes=minute), uid,
-                         "e", value, "{}"))
-
-        # python reference: sort per user by (ts, id), compact runs
-        expected = {}
-        by_user: dict[int, list] = {}
-        for eid, ts, uid, _t, v, _p in rows:
-            by_user.setdefault(uid, []).append((ts, eid, tier(v)))
-        for uid, seq in by_user.items():
-            seq.sort()
-            runs = []
-            for ts, _eid, t in seq:
-                if runs and runs[-1][0] == t:
-                    runs[-1][2] += 1
-                else:
-                    runs.append([t, ts, 1])
-            ivs = []
-            for i, (t, vf, cnt) in enumerate(runs):
-                vt = runs[i + 1][1] if i + 1 < len(runs) else None
-                ivs.append((t, vf, vt, vt is None, cnt))
-            expected[uid] = ivs
-
-        sub = str(tmp_path / f"g{abs(hash(tuple(rows))) % 10**9}")
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        ).write.parquet(sub + "/events.parquet")
-        got: dict[int, list] = {}
-        for r in scd2_user_tier_history(spark, sub).collect():
-            got.setdefault(r["user_id"], []).append(
-                (r["tier"], r["valid_from"], r["valid_to"],
-                 r["is_current"], r["n_events"])
-            )
-        assert got == expected
-
-    run()
-
-
 def test_funnel_matches_python_reference_generative(spark, tmp_path):
     """Generative equality of the windowed ordered funnel against a
     pure-Python earliest-qualifying walker over random per-user event

@@ -19,8 +19,8 @@ ALLOWED = {
     # with @query when it is imported
     "plans/registry.py": {
         "dedup_queries", "event_windows", "graph_queries", "multimodal_queries",
-        "relational", "sampling_queries", "similarity_queries", "sketch_queries",
-        "skew_queries", "streaming_queries", "temporal_queries", "text_queries",
+        "relational", "sampling_queries", "similarity_queries", "skew_queries",
+        "streaming_queries", "temporal_queries", "text_queries",
     },
 }
 

@@ -9,9 +9,7 @@ import shutil
 import pyarrow.parquet as pq
 import pytest
 
-from erathia_market_etl_spark.plans import (
-    all_oracles, all_queries, local_queries,
-)
+from erathia_market_etl_spark.plans import all_oracles, all_queries
 from erathia_market_etl_spark.testing import compare_query
 
 from .conftest import SF_SMOKE
@@ -105,19 +103,6 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert "nation_name" in df.columns
-
-
-# Local-only queries: oracled capabilities registered with
-# ``local=True``, outside the driver contract. Same compare as the
-# registered set; tools/localcheck.py sweeps them too.
-LOCAL = local_queries()
-
-
-@pytest.mark.parametrize("name", sorted(LOCAL))
-def test_queued_queries_match(spark, name):
-    fn, oracle = LOCAL[name]
-    result = compare_query(name, fn(spark, SF_SMOKE), oracle, SF_SMOKE)
-    assert result.ok, result
 
 
 def test_quality_gate_splits_corpus(spark):

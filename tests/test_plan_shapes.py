@@ -445,22 +445,6 @@ def test_window_running_total_single_window_pass(spark):
     assert "sum(" in w_node and "count(1)" in w_node, w_node
 
 
-def test_sketch_exchanges_are_state_sized(spark):
-    """The mergeable-sketch selling point must be visible in the plan:
-    the HLL register aggregate plans as a two-phase HashAggregate
-    (map-side partial BEFORE the exchange), so each map partition ships
-    at most state-sized rows."""
-    from erathia_market_etl_spark.plans.sketch_queries import (
-        agg_hll_registers,
-    )
-
-    hll_plan = plan_of(agg_hll_registers(spark, SF_T2))
-    # the register build sits behind a localCheckpoint (it feeds two
-    # consumers), so the visible two-phase aggregate is the MERGE over
-    # the register table: partial_max(r) before the idx exchange
-    assert re.search(r"partial_max\(r#", hll_plan), hll_plan
-
-
 def test_funnel_reuses_user_partitioning(spark):
     """Every join and aggregate in the ordered funnel keys on user_id;
     the plan must contain no cartesian/broadcast-nested-loop join and

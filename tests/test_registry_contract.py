@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as ST
 
-from erathia_market_etl_spark.plans import all_queries, local_queries, query
+from erathia_market_etl_spark.plans import all_queries, query
 
 from .conftest import SF_SMOKE
 
@@ -46,22 +46,6 @@ def test_no_complex_top_level_columns(spark, name):
         f"{name} returns driver-unhashable top-level column(s) {bad}; "
         "join arrays to strings (F.array_join) in the driver-facing "
         "projection — see module docstring"
-    )
-
-
-def test_coverage_markers_match_registry_sets():
-    """COVERAGE.md's ★ (driver-attested) markers must track the live
-    sets: a local-only query carrying ★ overstates its evidence class.
-    Generated artifacts already derive from JSON; this pins the one
-    hand-written narrative."""
-    from pathlib import Path
-
-    text = Path(__file__).resolve().parents[1].joinpath(
-        "COVERAGE.md"
-    ).read_text()
-    stale = [n for n in local_queries() if f"★ `{n}`" in text]
-    assert stale == [], (
-        f"COVERAGE.md marks non-registered queries as ★: {stale}"
     )
 
 
@@ -143,41 +127,11 @@ def test_registered_names_and_oracles_are_pinned():
     } == _ORACLE_SHA256
 
 
-# sha256 of json.dumps(sorted((name, oracle) for every local query))
-_LOCAL_SHA256 = "e87dcc78b8ff33c41a92b0f92ad8f3b1d3ea7f5d77d17c7092c36bb2b6042506"
-
-
-def test_local_names_and_oracles_are_pinned():
-    """The local-only surface: 2 oracled queries registered with
-    ``local=True``, pinned like the driver set (one hash over all
-    names and oracle bytes)."""
-    import hashlib
-    import json
-
-    local = local_queries()
-    assert len(local) == 2
-    pairs = sorted((name, oracle) for name, (_, oracle) in local.items())
-    digest = hashlib.sha256(json.dumps(pairs).encode()).hexdigest()
-    assert digest == _LOCAL_SHA256
-
-
-def test_local_and_driver_sets_are_disjoint():
-    assert set(local_queries()).isdisjoint(QUERIES)
-
-
-def test_local_entries_are_registered_at_their_definition():
-    # a decorator slid onto a helper would register it under the name
-    bad = [n for n, (fn, _) in local_queries().items() if fn.__name__ != n]
-    assert bad == []
-
-
-@pytest.mark.parametrize("taken", ["q1_net_revenue_by_nation", "agg_hll_registers"])
-@pytest.mark.parametrize("local", [False, True])
-def test_duplicate_name_across_sets_raises(taken, local):
-    before = (all_queries(), local_queries())
+def test_duplicate_name_raises():
+    before = all_queries()
     with pytest.raises(ValueError, match="duplicate query name"):
-        query(taken, "SELECT 1", local=local)(lambda spark, sf_dir: None)
-    assert (all_queries(), local_queries()) == before
+        query("q1_net_revenue_by_nation", "SELECT 1")(lambda spark, sf_dir: None)
+    assert all_queries() == before
 
 
 _ORACLE_SHA256 = {

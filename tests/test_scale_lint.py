@@ -53,14 +53,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from erathia_market_etl_spark.plans import all_queries, local_queries
+from erathia_market_etl_spark.plans import all_queries
 
 from .conftest import SF_T2
 
-# the scale-lint rules are policy for EVERY query shape the repo ships,
-# driver-registered or local-only
-ALL_QUERIES = dict(all_queries())
-ALL_QUERIES.update({n: fn for n, (fn, _) in local_queries().items()})
+# the scale-lint rules are policy for EVERY query shape the repo ships
+ALL_QUERIES = all_queries()
 BATCH = [n for n in ALL_QUERIES if not n.startswith("stream_")]
 
 

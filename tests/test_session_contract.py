@@ -1,7 +1,7 @@
 """ANSI-mode contract (SCALE.md "ANSI mode", decided r10).
 
 ANSI arithmetic is pinned ON: the integer-heavy operators (pagerank
-fixed-point, z-order interleave, HLL registers) each
+fixed-point, z-order interleave) each
 hand-prove a non-wrap envelope, and under ANSI those proofs are
 load-bearing — an envelope violation is a loud ARITHMETIC_OVERFLOW, not
 a silently wrapped sketch. These tests pin all three legs: the conf is

@@ -2,74 +2,14 @@
 
 Oracle parity (tests/test_oracle_parity.py) proves Spark and DuckDB
 agree at the fixture SF; these tests prove the operators mean what
-they claim on inputs constructed to exercise the claims: SCD2 runs
-must compact exactly, OHLC/TWAP must attribute ties and weights
-exactly, and the sweep-line concurrency must match brute force.
+they claim on inputs constructed to exercise the claims: OHLC/TWAP
+must attribute ties and weights exactly, and the sweep-line
+concurrency must match brute force.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-
-
-def test_scd2_planted_run_compaction(spark, tmp_path):
-    """Hand-checkable SCD2 pin: a planted per-user event sequence with
-    known tier runs compacts to exactly the expected intervals —
-    intervals tile the timeline (each valid_to == the next
-    valid_from), exactly one open (is_current) interval per user,
-    adjacent intervals always change tier (compaction is maximal), and
-    n_events is conserved."""
-    import datetime as dt
-
-    from erathia_market_etl_spark.plans.event_windows import (
-        scd2_user_tier_history,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(eid, uid, minute, value):
-        return (eid, t0 + dt.timedelta(minutes=minute), uid, "click",
-                float(value), "{}")
-
-    rows = [
-        # user 1: low low | mid | low low  -> 3 intervals
-        ev(1, 1, 0, 1), ev(2, 1, 1, 2), ev(3, 1, 2, 7),
-        ev(4, 1, 3, 1), ev(5, 1, 4, 3),
-        # user 2: single event -> one open interval
-        ev(6, 2, 0, 20),
-        # user 3: same-timestamp tie broken by event_id: low(7) then
-        # high(8) at the SAME ts -> two intervals, order pinned by id
-        ev(7, 3, 0, 1), ev(8, 3, 0, 20),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    p = str(tmp_path / "sf")
-    df.write.parquet(p + "/events.parquet")
-    out = scd2_user_tier_history(spark, p).collect()
-
-    by_user: dict[int, list] = {}
-    for r in out:
-        by_user.setdefault(r["user_id"], []).append(r)
-
-    u1 = [(r["tier"], r["n_events"], r["is_current"]) for r in by_user[1]]
-    assert u1 == [("low", 2, False), ("mid", 1, False), ("low", 2, True)]
-    assert [(r["tier"], r["is_current"]) for r in by_user[2]] == [
-        ("high", True)
-    ]
-    assert [(r["tier"], r["is_current"]) for r in by_user[3]] == [
-        ("low", False), ("high", True)
-    ]
-
-    for uid, ivs in by_user.items():
-        assert sum(r["is_current"] for r in ivs) == 1, uid
-        for a, b in zip(ivs, ivs[1:]):
-            assert a["valid_to"] == b["valid_from"], uid   # tiling
-            assert a["tier"] != b["tier"], uid             # maximal runs
-        assert ivs[-1]["valid_to"] is None
-    assert sum(r["n_events"] for r in out) == len(rows)    # conservation
 
 
 def test_ohlc_planted_with_timestamp_tie(spark, tmp_path):

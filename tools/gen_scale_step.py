@@ -16,10 +16,8 @@ own measured scaling law (every entity table grows 10x per decade):
     NOT collapse into 10x artificial duplicates, which would melt the
     LSH caps and measure the wrong thing).
 
-Output lands in .scalecheck/sf1/ (gitignored scratch). The timing leg
-needs a bigger heap than the 4 GiB test default: 32 local threads x
-128 MB is what OOMed the sf1 wedge expansion (local-mode artifact —
-on a cluster this is per-executor memory sizing, not a plan property).
+Output lands in .scalecheck/sf1/ (gitignored scratch). Every leg runs
+on the default EngineConfig (4 GiB driver).
 
 `--full` additionally synthesizes the REST of the star schema
 (region/nation copied — bounded dims; customer/supplier/part/orders
@@ -32,8 +30,7 @@ collapse into artificial exact duplicates), which makes
 `.scalecheck/sf1` a complete fixture dir the FULL bench can run
 against:
 
-    SPARK_GRAFT_SF_DIR=$REPO/.scalecheck/sf1 \
-    SPARK_GRAFT_DRIVER_MEM=24g python bench.py
+    SPARK_GRAFT_SF_DIR=$REPO/.scalecheck/sf1 python bench.py
 
 Usage: python tools/gen_scale_step.py          # synthesize + time
        python tools/gen_scale_step.py --gen    # synthesize only
@@ -55,8 +52,7 @@ REPLICAS = 10
 
 
 def _round() -> int:
-    """Current round = newest committed CORRECTNESS round + 1 (the
-    localcheck convention)."""
+    """Current round = newest committed CORRECTNESS round + 1."""
     import glob
     import re
 
@@ -73,9 +69,8 @@ def _write_artifact(section: str | None = None,
     """Merge one leg's results into SCALESTEP_r{N}.json (VERDICT r13
     item 6: the decade-step evidence was a hand-run whose results lived
     only in SCALE.md prose — making each leg write the per-round
-    artifact the way localcheck does means it cannot silently go stale
-    as queries are added). Sections accumulate across invocations of
-    the same round: `timings` from the steep-query leg, `compare` from
+    artifact means it cannot silently go stale as queries are added).
+    Sections accumulate across invocations of the same round: `timings` from the steep-query leg, `compare` from
     the exactness leg, and `bench_totals` folded in from the
     BENCH_FULL twins whenever both SFs have been benched."""
     rnd = _round()
@@ -273,9 +268,7 @@ def run_timings() -> None:
         text_quality_gate,
         text_language_id,
     ]
-    spark = get_spark(
-        EngineConfig(app_name="scale-step", driver_memory="24g")
-    )
+    spark = get_spark(EngineConfig(app_name="scale-step"))
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     out: dict[str, dict] = {}
@@ -297,7 +290,7 @@ def run_timings() -> None:
 
 
 # The scale-SENSITIVE exactness classes: exact-money accumulation,
-# int64 envelopes (gini, pagerank fixed-point, HLL packing), bucket
+# int64 envelopes (gini, pagerank fixed-point), bucket
 # caps, window ties, uint64 wraparound (winnowing), iterative
 # convergence. The fingerprint-dispatched contract oracles (sim_pq /
 # sim_ivf) JOIN the sweep in r14: this synthetic corpus's
@@ -314,35 +307,27 @@ COMPARE_NAMES = [
     "bm25_topk_postings", "pack_token_budget_shards",
     "text_length_trim", "dedup_cluster_components",
     "graph_pagerank_influence", "scd2_dimension_merge",
-    "agg_approx_sketches",
-    # registered r14 (was appended as a local-only extra before)
-    "mart_revenue_gini",
+    "agg_approx_sketches", "mart_revenue_gini",
     # contract class, third-fingerprint-pinned r14
     "sim_pq_quality", "sim_ivf_cell_quality",
 ]
 
 
 def run_compare() -> None:
-    """Driver-exact oracle compare (same compare_query as CORRECTNESS/
-    LOCALCHECK) of the scale-sensitive classes at the synthetic sf1 —
+    """Driver-exact oracle compare (same compare_query as CORRECTNESS)
+    of the scale-sensitive classes at the synthetic sf1 —
     attests that EXACTNESS, not just speed, survives the decade step.
     r13 measured: 20/20 hash-exact (incl. 4.5M winnowing fingerprints,
     303k capped LSH pairs, 1M-row running totals, the 160k-row
     pagerank fixed-point, and the Gini int64 envelope)."""
     from erathia_market_etl_spark.config import EngineConfig
-    from erathia_market_etl_spark.plans import (
-        all_oracles, all_queries, local_queries,
-    )
+    from erathia_market_etl_spark.plans import all_oracles, all_queries
     from erathia_market_etl_spark.session import get_spark
     from erathia_market_etl_spark.testing import compare_query
 
-    queries, oracles, local = all_queries(), all_oracles(), local_queries()
+    queries, oracles = all_queries(), all_oracles()
     items = [(n, queries[n], oracles[n]) for n in COMPARE_NAMES]
-    # local-only: agg_hll_registers
-    items += [("agg_hll_registers", *local["agg_hll_registers"])]
-    spark = get_spark(
-        EngineConfig(app_name="sf1-compare", driver_memory="24g")
-    )
+    spark = get_spark(EngineConfig(app_name="sf1-compare"))
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict] = {}
     for name, fn, oracle in items:
