@@ -433,5 +433,4 @@ def lsh_bucket_stats(bands: DataFrame, key_cols: list[str],
             F.sum(F.when(over, 1).otherwise(0)).alias("n_overflow_buckets"),
             F.sum(F.when(over, F.col("sz") - max_bucket).otherwise(0)).alias("n_dropped_members"),
         )
-        .orderBy(idx)
     )

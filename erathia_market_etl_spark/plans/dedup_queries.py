@@ -147,7 +147,7 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: one shuffle on the content hash; representative =
     min(doc_id). At 100 TB: hash the bytes, never the parsed row."""
     docs = load_table(spark, sf_dir, "documents")
-    return exact_dedup_groups(docs, "text", "doc_id").orderBy("content_hash")
+    return exact_dedup_groups(docs, "text", "doc_id")
 
 
 @query(
@@ -163,7 +163,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lexicographic min of md5 — engine-portable) -> 4 bands of 2 ->
     self-equi-join on band key. Catches Jaccard ≳ 0.5 pairs; the only
     shuffle is the band-key join."""
-    return shared_minhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+    return shared_minhash_pairs(spark, sf_dir)
 
 
 # SimHash oracle fragments --------------------------------------------------
@@ -221,7 +221,7 @@ def dedup_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(a XOR b). Same one-shuffle bucket-expansion shape as
     MinHash banding."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_pairs(docs, "text", "doc_id").orderBy("doc_a", "doc_b")
+    return simhash_near_pairs(docs, "text", "doc_id")
 
 
 @query(
@@ -274,7 +274,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_jc", jc)
         .filter(F.col("_jc") >= 0.5)
         .select("doc_a", "doc_b", round6(F.col("_jc")).alias("jaccard_3gram"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -310,7 +309,6 @@ def dedup_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         incoming.join(corpus, "fp", "left_anti")
         .select("doc_id", "fp")
-        .orderBy("doc_id")
     )
 
 
@@ -353,7 +351,6 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         shared_pair_components(spark, sf_dir)
         .select(F.col("v").alias("doc_id"), "component_id")
-        .orderBy("doc_id")
     )
 
 
@@ -403,5 +400,4 @@ def dedup_corpus_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.join(non_reps, "doc_id", "left_anti")
         .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
     )

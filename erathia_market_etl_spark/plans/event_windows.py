@@ -47,7 +47,7 @@ def window_rank_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rn"),
         F.rank().over(w).alias("rnk"),
         F.dense_rank().over(wt).alias("type_rank"),
-    ).orderBy("user_id", "rn")
+    )
 
 
 @query(
@@ -73,7 +73,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
         lagv.alias("prev_value"),
         F.lead("value").over(w).alias("next_value"),
         (F.col("value") - F.coalesce(lagv, F.lit(0.0))).alias("delta"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @query(
@@ -105,7 +105,7 @@ def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(F.sum(cents("value")).over(w).cast("decimal(38,0)") / 100, 2)
          .cast("double").alias("running_value")),
         F.count(F.lit(1)).over(w).alias("running_n"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @query(
@@ -145,7 +145,7 @@ def window_distribution_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("event_id").over(w).alias("first_event"),
         F.last("event_id").over(wf).alias("last_event"),
         F.nth_value("event_id", 2).over(wf).alias("second_event"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @query(
@@ -177,7 +177,6 @@ def tumbling_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.end").alias("window_end"),
             "event_type", "n_events", "total_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -215,7 +214,6 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.end").alias("window_end"),
             "n_events", "total_value",
         )
-        .orderBy("window_start")
     )
 
 
@@ -264,7 +262,6 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.end").alias("session_end"),
             "n_events", "total_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -328,7 +325,6 @@ def sessionize_by_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts")))
             .alias("duration_us"),
         )
-        .orderBy("user_id", "session_seq")
     )
 
 
@@ -411,7 +407,6 @@ def ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long").alias("close_cents"),
             F.count(F.lit(1)).cast("long").alias("n_ticks"),
         )
-        .orderBy("event_type", "hour_start")
     )
 
 
@@ -492,7 +487,6 @@ def twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("twap_cents"),
             F.count(F.lit(1)).cast("long").alias("n_ticks"),
         )
-        .orderBy("event_type", "day")
     )
 
 
@@ -620,5 +614,4 @@ def peak_concurrency_frame(sessions: DataFrame) -> DataFrame:
             F.sum((F.col("delta") == -1).cast("long")).cast("long")
             .alias("sessions_ended"),
         )
-        .orderBy("day")
     )

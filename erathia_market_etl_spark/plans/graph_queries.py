@@ -148,5 +148,4 @@ def graph_pagerank_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("deg").alias("degree"),
             F.col("rank").alias("rank_scaled"),
         )
-        .orderBy(F.col("rank_scaled").desc(), "node_type", "entity_key")
     )

@@ -65,7 +65,6 @@ def media_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("meta.n_frames").alias("n_frames"),
             F.col("meta.codec").alias("codec"),
         )
-        .orderBy("media_id")
     )
 
 
@@ -129,7 +128,7 @@ def media_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.col("features").getItem(i)).alias(f"f{i}")
             for i in range(N_FEATURES)
         ],
-    ).orderBy("media_id")
+    )
 
 
 @query(
@@ -154,9 +153,7 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte layout is utf-8, so the DuckDB oracle regenerates the full
     expansion with range()+md5 — the mapInPandas plumbing is checked
     end-to-end, not rows-only (r3 VERDICT item 1c)."""
-    return sample_frames(_media(spark, sf_dir), every_n=10).orderBy(
-        "media_id", "frame_idx"
-    )
+    return sample_frames(_media(spark, sf_dir), every_n=10)
 
 
 @query(
@@ -222,7 +219,7 @@ def media_wav_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("media_id"))
         .mapInPandas(synth, "media_id long, content binary")
     )
-    return wav_decode_stats(wavs).orderBy("media_id")
+    return wav_decode_stats(wavs)
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +332,7 @@ def media_bmp_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats,
         "media_id long, width int, height int, "
         "mean_r double, mean_g double, mean_b double",
-    ).orderBy("media_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -429,5 +426,4 @@ def media_jpeg_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "media_id long, height int, width int, "
             "px_min int, px_max int, px_sum long",
         )
-        .orderBy("media_id")
     )

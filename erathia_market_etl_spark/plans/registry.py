@@ -10,7 +10,8 @@ Contract (see repo README / driver docs):
     every computed column is aliased identically on both sides;
   * money/double aggregates are rounded to 2dp on both sides before
     comparison (float summation-order noise, SURVEY.md §7.4);
-  * any ORDER BY ... LIMIT has a deterministic total order (tiebreaks).
+  * results carry no row order; a sort appears only under
+    ``ORDER BY ... LIMIT``, with a total order (tiebreaks).
 """
 
 from __future__ import annotations

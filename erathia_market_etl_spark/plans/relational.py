@@ -117,7 +117,6 @@ def q1_net_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_net_cents(kept, returned, 4).alias("net_revenue"),
             F.count(F.lit(1)).alias("transactions"),
         )
-        .orderBy(F.desc("net_revenue"), F.asc("nation_name"))
     )
 
 
@@ -168,7 +167,6 @@ def q2_monthly_price_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_avg(F.col("l_extendedprice") / F.col("l_quantity")).alias("avg_unit_price"),
             money_sum_cents(cents("l_quantity")).alias("total_quantity"),
         )
-        .orderBy("order_year", "order_month", "part_name")
     )
 
 
@@ -260,7 +258,6 @@ def q4_part_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("l_orderkey").alias("total_sold"),
             money_sum_cents(cents("l_extendedprice")).alias("total_gold_value"),
         )
-        .orderBy(F.asc("total_sold"), F.desc("total_gold_value"), F.asc("brand"))
     )
 
 
@@ -342,13 +339,13 @@ def silver_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT p_type AS part_type FROM part ORDER BY part_type",
 )
 def distinct_projection_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6 + O5: the drill-down menu query (main.py:304) — positional
-    ORDER BY 1 becomes a named column."""
+    """P6: the drill-down menu query (main.py:304). Its ORDER BY 1 is
+    presentation order: the oracle keeps it, and the CLI
+    ``report --distinct`` prints the menu sorted."""
     return (
         T(spark, sf_dir, "part")
         .select(F.col("p_type").alias("part_type"))
         .distinct()
-        .orderBy("part_type")
     )
 
 
@@ -386,7 +383,6 @@ def filter_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
         T(spark, sf_dir, "part")
         .filter(F.col("p_brand") == F.lit(param))
         .select("p_partkey", "p_name", "p_brand")
-        .orderBy("p_partkey")
     )
 
 
@@ -415,7 +411,6 @@ def join_left_outer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey", "c_name")
         .agg(F.count("o_orderkey").alias("order_count"))
-        .orderBy("c_custkey")
     )
 
 
@@ -438,7 +433,7 @@ def join_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("status", F.lit("active"))
     inactive = supplier.join(li, F.col("s_suppkey") == F.col("l_suppkey"), "left_anti") \
         .withColumn("status", F.lit("inactive"))
-    return active.unionByName(inactive).orderBy("s_suppkey")
+    return active.unionByName(inactive)
 
 
 @query(
@@ -466,7 +461,6 @@ def pivot_event_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy("user_id")
         .pivot("event_type", ["click", "error", "purchase", "signup", "view"])
         .count()
-        .orderBy("user_id")
     )
 
 
@@ -496,7 +490,6 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
             "measure", "value",
         )
         .withColumn("measure", F.expr("substring(measure, 3)"))  # l_quantity -> quantity
-        .orderBy("l_orderkey", "l_linenumber", "measure")
     )
 
 
@@ -534,7 +527,6 @@ def agg_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.col("pp")[1]).alias("p90"),
             r6(F.col("pp")[2]).alias("p99"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -603,7 +595,6 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.abs(F.col("app")[1] - F.col("pp")[1])
              <= 0.05 * F.col("pp")[1]).alias("p99_ok"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -637,7 +628,6 @@ def scalar_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(k).alias("min_k"),
             F.max(k).alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -670,7 +660,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         UNION ALL
         SELECT NULL, NULL, CAST(1 AS TINYINT), CAST(1 AS TINYINT), COUNT(*)
         FROM lineitem_gs
-        ORDER BY g_flag, g_status, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """)
 
 
@@ -700,7 +689,6 @@ def agg_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_distinct_qty"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -731,10 +719,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The grand total is a global aggregate, not the grouping set ():
     # Spark's Expand + Aggregate yields no row on empty input, where SQL
     # (and the oracle) yields the one grand-total row.
-    return (
-        subtotals.unionByName(lineitem.agg(*aggs), allowMissingColumns=True)
-        .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"))
-    )
+    return subtotals.unionByName(lineitem.agg(*aggs), allowMissingColumns=True)
 
 
 @query(
@@ -771,7 +756,6 @@ def agg_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             round2_det(exact_std("l_quantity")).alias("std_qty"),
             F.countDistinct("l_partkey").alias("distinct_parts"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -822,8 +806,7 @@ def scd2_dimension_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("c_custkey") % 10 == 0)
         .select("c_custkey", "c_name", F.lit("SEGMENT_X").alias("c_mktsegment"))
     )
-    merged = scd2_merge(history, updates, "c_custkey", ["c_mktsegment"], "2024-06-01")
-    return merged.orderBy("c_custkey", "valid_from")
+    return scd2_merge(history, updates, "c_custkey", ["c_mktsegment"], "2024-06-01")
 
 
 # ---------------------------------------------------------------------------
@@ -847,10 +830,7 @@ def setop_except_all_bag(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive over the multiset."""
     c = T(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = T(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return (
-        c.exceptAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("nationkey")
-    )
+    return c.exceptAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -892,7 +872,7 @@ def scalar_date_smart_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("-", y.cast("string"),
                     F.lpad(m.cast("string"), 2, "0"),
                     F.lpad(d.cast("string"), 2, "0")).alias("date_str"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -928,7 +908,6 @@ def subquery_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame
         part.join(F.broadcast(b), "p_brand")
         .filter(dec2("p_retailprice") * F.col("n") > F.col("s"))
         .select("p_partkey", "p_brand", F.col("p_retailprice").alias("retail_price"))
-        .orderBy("p_partkey")
     )
 
 
@@ -992,7 +971,6 @@ def q5_regional_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataF
             money_sum_cents(revenue, 4).alias("local_revenue"),
             F.count(F.lit(1)).alias("transactions"),
         )
-        .orderBy(F.desc("local_revenue"), F.asc("nation_name"))
     )
 
 
@@ -1020,7 +998,7 @@ def silver_null_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repaired.select(
         "l_orderkey", "l_linenumber",
         F.col("l_discount").alias("discount_repaired"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 @query(
@@ -1053,7 +1031,7 @@ def scalar_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.lit("1998-12-31").cast("date"), d).cast("long").alias("days_to_eoy"),
         F.last_day(d).alias("month_end"),
         F.quarter(d).alias("order_quarter"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @query(
@@ -1082,7 +1060,7 @@ def scalar_string_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.reverse("p_brand").alias("brand_rev"),
         F.instr(F.col("p_name"), "0").cast("long").alias("first_zero"),
         F.split_part(F.col("p_name"), F.lit(" "), F.lit(1)).alias("first_word"),
-    ).orderBy("p_partkey")
+    )
 
 
 @query(
@@ -1117,7 +1095,7 @@ def scalar_array_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("first_five_sorted"),
         F.array_join(F.slice(toks, 1, 3), "|").alias("head_joined"),
         (toks.getItem(0).isNotNull() & (F.size(toks) > 0)).alias("non_empty"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -1156,7 +1134,6 @@ def q6_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("potential_revenue"),
             F.count(F.lit(1)).alias("qualifying_items"),
         )
-        .orderBy("potential_revenue")
     )
 
 
@@ -1178,9 +1155,7 @@ def setop_union_by_name_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = T(spark, sf_dir, "supplier")
     full = s.select("s_suppkey", "s_name", "s_acctbal")
     partial = s.filter(F.col("s_acctbal") < 0).select("s_suppkey", "s_name")
-    return full.unionByName(partial, allowMissingColumns=True).orderBy(
-        "s_suppkey", F.asc_nulls_first("s_acctbal")
-    )
+    return full.unionByName(partial, allowMissingColumns=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1308,7 +1283,6 @@ def mart_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.floor(gini_raw * 1000000 + F.lit(0.5))) / 1000000)
             .cast("double").alias("gini"),
         )
-        .orderBy("nation_name")
     )
 
 
@@ -1439,5 +1413,4 @@ def mart_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(COALESCE(n_below, 0) + 1) * 1000000 DIV n_customers"
             ).cast("long").alias("top_share_ppm"),
         )
-        .orderBy("nation_name")
     )

@@ -177,7 +177,6 @@ def pack_context_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | (F.col("off") + F.col("n_tokens") > (F.col("chunk_id") + 1) * c)
             ).alias("is_split"),
         )
-        .orderBy("doc_id", "chunk_id")
     )
 
 
@@ -264,7 +263,6 @@ def pack_token_budget_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double") / _SHARD_BUDGET
             ).alias("shard_id"),
         )
-        .orderBy("source", "doc_id")
     )
 
 
@@ -338,7 +336,6 @@ def text_length_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("pr", pr)
         .filter((F.col("pr") >= 0.05) & (F.col("pr") <= 0.95))
         .select("doc_id", "n_chars")
-        .orderBy("doc_id")
     )
 
 
@@ -388,7 +385,6 @@ def sample_stratified_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_total"),
             F.sum(F.when(F.col("b") < F.col("rate_pct"), 1).otherwise(0)).alias("n_kept"),
         )
-        .orderBy("source")
     )
 
 
@@ -431,5 +427,4 @@ def agg_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             F.array_contains("source_freqItems", F.col("frequent_source")).alias("in_sketch"),
         )
-        .orderBy("frequent_source")
     )

@@ -342,7 +342,6 @@ def sim_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .drop("rn")
-        .orderBy("qid", F.desc("cosine_sim"), F.asc("vec_id"))
     )
 
 
@@ -583,7 +582,7 @@ def sim_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return sign_band_near_pairs(
         emb, threshold=0.9, max_bucket=MAX_SIGN_BUCKET
-    ).orderBy("vec_a", "vec_b")
+    )
 
 
 @query(
@@ -675,7 +674,7 @@ def sim_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return sign_band_near_pairs(
         emb, threshold=SIMILAR_THRESHOLD, max_bucket=MAX_SIGN_BUCKET
-    ).orderBy("vec_a", "vec_b")
+    )
 
 
 @query(
@@ -777,7 +776,6 @@ def emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("micro").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0))
             .alias("centroid"),
         )
-        .orderBy("label", "pos")
     )
 
 

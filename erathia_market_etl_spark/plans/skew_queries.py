@@ -95,5 +95,4 @@ def skew_salted_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("total_value").alias("type_total_value"),
             F.min("n_rows").alias("type_n_rows"),
         )
-        .orderBy("event_type")
     )

@@ -43,10 +43,9 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream; must match the batch tumbling_hourly_stats oracle exactly.
     state_partitions=8 sizes the state-store count to the bounded run
     (see run_available_now)."""
-    out = run_available_now(
+    return run_available_now(
         hourly_stats_stream(stream_events(spark, sf_dir)), state_partitions=8
     )
-    return out.orderBy("window_start", "event_type")
 
 
 @query(
@@ -82,12 +81,11 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch session_window_stats)."""
     # session-window streaming rejects update mode; complete keeps every
     # finalized-or-open session, which for a bounded run IS the batch result
-    out = run_available_now(
+    return run_available_now(
         session_stats_stream(stream_events(spark, sf_dir)),
         output_mode="complete",
         state_partitions=8,
     )
-    return out.orderBy("user_id", "session_start")
 
 
 @query(
@@ -114,12 +112,11 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join carries four state stores per partition and per-store
     fixed costs dominated the bounded run at the session default (6.7 s
     → 2.1 s at sf0.1; rationale in run_available_now's docstring)."""
-    out = run_available_now(
+    return run_available_now(
         click_purchase_interval_join_stream(stream_events(spark, sf_dir)),
         output_mode="append",
         state_partitions=8,
     )
-    return out.orderBy("click_id", "purchase_id")
 
 
 @query(
@@ -138,11 +135,10 @@ def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     running totals. Single input file -> one micro-batch -> the one
     update-mode emission per user is the final cumulative value, which
     the batch GROUP BY oracle reproduces."""
-    out = run_available_now(
+    return run_available_now(
         user_running_totals_stream(stream_events(spark, sf_dir)),
         state_partitions=8,
     )
-    return out.orderBy("user_id")
 
 
 @query(
@@ -165,8 +161,7 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = events.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    out = run_available_now(deduped, output_mode="append", state_partitions=8)
-    return out.orderBy("user_id", "event_type")
+    return run_available_now(deduped, output_mode="append", state_partitions=8)
 
 
 @query(
@@ -193,8 +188,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = events.join(
         customer, events["user_id"] == customer["c_custkey"]
     ).select("event_id", "user_id", "segment")
-    out = run_available_now(enriched, output_mode="append")
-    return out.orderBy("event_id")
+    return run_available_now(enriched, output_mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -245,7 +239,6 @@ def stream_incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") >= 250)
         .select("doc_id", fp)
     )
-    out = run_available_now(
+    return run_available_now(
         incoming.join(corpus, "fp", "left_anti"), output_mode="append"
     )
-    return out.orderBy("doc_id")

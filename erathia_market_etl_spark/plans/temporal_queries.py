@@ -62,7 +62,7 @@ def asof_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = _dedup_purchases(events)
     return asof_join(
         clicks, purchases, on="user_id", ts="ts", right_cols=["event_id", "value"]
-    ).orderBy("event_id")
+    )
 
 
 @query(
@@ -99,7 +99,7 @@ def range_join_error_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("b_ts").cast("timestamp").cast("double")
          - F.col("a_ts").cast("timestamp").cast("double"))
         .cast("bigint").alias("gap_seconds"),
-    ).orderBy("user_id", "a_event_id", "b_event_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -222,12 +222,11 @@ def funnel_ordered_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     zero = F.lit(0).cast("long")
 
-    def _row(ord_: int, stage: str, t_col: str) -> DataFrame:
+    def _row(stage: str, t_col: str) -> DataFrame:
         if t_col == "t1":
             return per_user.agg(
                 F.count(F.lit(1)).cast("long").alias("users")
             ).select(
-                F.lit(ord_).alias("ord"),
                 F.lit(stage).alias("stage"),
                 "users",
                 zero.alias("seconds_to_here"),
@@ -241,14 +240,10 @@ def funnel_ordered_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 zero,
             ).alias("seconds_to_here"),
-        ).select(
-            F.lit(ord_).alias("ord"), F.lit(stage).alias("stage"),
-            "users", "seconds_to_here",
-        )
+        ).select(F.lit(stage).alias("stage"), "users", "seconds_to_here")
 
-    out = (
-        _row(1, "view", "t1")
-        .unionAll(_row(2, "click", "t2"))
-        .unionAll(_row(3, "purchase", "t3"))
+    return (
+        _row("view", "t1")
+        .unionAll(_row("click", "t2"))
+        .unionAll(_row("purchase", "t3"))
     )
-    return out.orderBy("ord").select("stage", "users", "seconds_to_here")

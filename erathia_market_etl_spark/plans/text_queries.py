@@ -55,7 +55,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.sum_token_chars(t).alias("sum_token_chars"),
         round6(TX.sum_token_chars(t).cast("double") / TX.token_count(t)).alias("avg_token_len"),
         TX.bpe_ish_token_count(t).cast("int").alias("n_bpe_tokens"),
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -92,8 +92,8 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r17 (guide §1.2/§2.3): the token array is projected ONCE and all
     five marker filters read it — the previous shape re-split the text
-    inside every score expression (five tokenize passes per row, ten
-    counting the ORDER BY range-sampling re-execution). An Arrow
+    inside every score expression (five tokenize passes per row). The
+    query is one map-only scan: no shuffle, no sort. An Arrow
     one-pass kernel was ALSO measured and rejected: 0.67-0.70 s vs
     0.37-0.40 s for the HOF formulations at sf0.1 — the marker sets are
     tiny, so the JVM↔Python round-trip costs more than the five
@@ -113,7 +113,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     score_cols = {lang: F.col(f"score_{lang}") for lang in TX.LANG_ORDER}
     return df.withColumn(
         "predicted_lang", TX.predicted_language(score_cols)
-    ).orderBy("doc_id")
+    )
 
 
 @query(
@@ -175,7 +175,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shingle_fingerprint")
         )
         .select("doc_id", "content_fingerprint", "shingle_fingerprint")
-        .orderBy("doc_id")
     )
 
 
@@ -227,7 +226,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import winnowing_fingerprints
 
     docs = load_table(spark, sf_dir, "documents")
-    return winnowing_fingerprints(docs, "text", "doc_id").orderBy("doc", "fingerprint")
+    return winnowing_fingerprints(docs, "text", "doc_id")
 
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it")
@@ -346,7 +345,7 @@ def text_quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
                / F.size(toks).cast("double")).alias("stopword_ratio"),
         round6(F.regexp_count(F.col("text"), F.lit("[a-zA-Z]")) / n_chars)
             .alias("alpha_ratio"),
-    ).orderBy("doc_id")
+    )
 
 
 _REP_TOP_BG = 0.06  # flag if top bigram >= 6% of all bigrams
@@ -440,7 +439,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_ratio.alias("top_bigram_ratio"),
         dup_frac.alias("dup_bigram_frac"),
         ((top_ratio >= _REP_TOP_BG) | (dup_frac >= _REP_DUP_BG)).alias("is_repetitive"),
-    ).orderBy("doc_id")
+    )
 
 
 _EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
@@ -484,7 +483,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: pure regexp built-ins, fully map-side/narrow — at
     100 TB the scrub costs exactly one scan plus the write, zero
-    shuffle (the ORDER BY here exists only for the driver compare).
+    shuffle.
 
     The fixture corpus contains no natural PII, so both engines inject
     the SAME deterministic synthetic PII derived from doc_id (an email
@@ -517,7 +516,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count(raw, F.lit(_PHONE_RE)).cast("long").alias("n_phones"),
         (F.length(raw) - F.length(scrubbed)).cast("long").alias("n_chars_redacted"),
         F.md5(scrubbed).alias("scrubbed_md5"),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -539,9 +538,8 @@ def _gate_frame(docs: DataFrame) -> DataFrame:
     # r17 (guide §1.2/§2.3, the shingles_from_tokens lesson): project
     # the token array ONCE and derive every token signal from it — the
     # previous shape re-split the text inside n_tokens, the bigram
-    # builder (three references), n_bg and the stopword filter, and the
-    # registered gate's ORDER BY range-sampling pass ran the whole
-    # stack a second time. Measured 0.53 s vs 0.63 s at sf0.1. An Arrow
+    # builder (three references), n_bg and the stopword filter.
+    # Measured 0.53 s vs 0.63 s at sf0.1. An Arrow
     # one-pass kernel for the three token signals was also measured and
     # REJECTED (0.68-0.76 s — boundary cost exceeds the interpreted HOF
     # walks it saves at this signal mix; OPTIMIZATION_r17.md).
@@ -637,7 +635,7 @@ def text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "alpha_ok",
         "rep_ok",
         "keep",
-    ).orderBy("doc_id")
+    )
 
 
 def _bigrams(toks):
@@ -964,7 +962,6 @@ def decon_test_train_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("train_doc").alias("n_train_docs"),
             F.countDistinct("fingerprint").alias("n_shared_fingerprints"),
         )
-        .orderBy("test_doc")
     )
 
 
@@ -1123,7 +1120,6 @@ def pipeline_training_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" DIV {FUNNEL_CONTEXT_LEN}"
             ).alias("n_windows"),
         )
-        .orderBy("source")
     )
 
 
@@ -1279,5 +1275,4 @@ def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "n_tokens", "n_removed", "removed_ppm",
                 "text_rewritten")
-        .orderBy("doc_id")
     )

@@ -179,3 +179,26 @@ def test_artifact_names_normalize_equivalent_dir_spellings(tmp_path):
     assert bench.bench_artifact_name(str(link)) == "BENCH_FULL.json"
     assert bench.bench_artifact_name("/root/testdata/sf1") == \
         "BENCH_FULL_sf1.json"
+
+
+def test_scale_step_ratio_needs_one_core_count(tmp_path, monkeypatch):
+    """The sf1/sf0.1 bench ratio is only a scaling figure when both
+    totals ran on the same core count; otherwise each total is kept
+    with its own count and no ratio is written."""
+    from tools import gen_scale_step
+
+    monkeypatch.setattr(gen_scale_step, "REPO", str(tmp_path))
+    for name, value, cores in (("BENCH_FULL.json", 20.0, 4),
+                               ("BENCH_FULL_sf1.json", 40.0, 32)):
+        (tmp_path / name).write_text(
+            json.dumps({"value": value, "cores": cores}))
+    gen_scale_step._write_artifact()
+    (artifact,) = tmp_path.glob("SCALESTEP_r*.json")
+    totals = json.loads(artifact.read_text())["bench_totals"]
+    assert totals == {"sf0.1": {"value": 20.0, "cores": 4},
+                      "sf1": {"value": 40.0, "cores": 32}}
+
+    (tmp_path / "BENCH_FULL_sf1.json").write_text(
+        json.dumps({"value": 40.0, "cores": 4}))
+    gen_scale_step._write_artifact()
+    assert json.loads(artifact.read_text())["bench_totals"]["d3"] == 2.0

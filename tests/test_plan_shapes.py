@@ -195,10 +195,9 @@ def test_partition_pruning_on_hive_fact(spark, tmp_path):
 def test_exact_dedup_single_shuffle(spark):
     df = QUERIES["dedup_exact_hash"](spark, SF_T2)
     plan = plan_of(df)
-    # content-hash dedup is one exchange for the groupBy + one for the
-    # final orderBy (rangepartitioning) - nothing else
+    # content-hash dedup is one exchange for the groupBy - nothing else
     exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert len(exchanges) <= 2, plan
+    assert len(exchanges) <= 1, plan
 
 
 def test_length_trim_no_single_partition_over_corpus(spark):
@@ -407,8 +406,7 @@ def test_emb_centroids_single_group_sized_exchange(spark):
     """emb_label_centroids (r7, queued): ONE hashpartitioning exchange
     — the (label, pos) aggregate — fed by a map-side partial aggregate,
     so the shuffle carries at most #labels × 64 rows per partition
-    regardless of corpus size. (The rangepartitioning above it is the
-    presentation orderBy.)"""
+    regardless of corpus size."""
     from erathia_market_etl_spark.plans.similarity_queries import (
         emb_label_centroids,
     )
@@ -425,10 +423,10 @@ def test_window_running_total_single_window_pass(spark):
     plan was re-read in r8 and is byte-equal in shape to the r6 one):
     a 4-column pruned events scan, a NARROW cents projection, exactly
     ONE hash exchange (user_id) into ONE Window node computing BOTH
-    running aggregates in a single pass, then the presentation sort's
-    range exchange. A regression to two Window nodes (one per
-    aggregate — double sort), an extra exchange, or a full-column scan
-    would still pass the value oracle; it fails here."""
+    running aggregates in a single pass, and no other exchange. A
+    regression to two Window nodes (one per aggregate — double sort),
+    an extra exchange, or a full-column scan would still pass the value
+    oracle; it fails here."""
     from erathia_market_etl_spark.plans.event_windows import (
         window_running_total,
     )
@@ -436,7 +434,7 @@ def test_window_running_total_single_window_pass(spark):
     plan = plan_of(window_running_total(spark, SF_T2))
     assert plan.count("Window ") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.count("Exchange") == 2, plan  # + the orderBy range part.
+    assert plan.count("Exchange") == 1, plan
     schema = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     cols = {c.split(":")[0] for c in schema.group(1).split(",")}
     assert cols == {"event_id", "ts", "user_id", "value"}, cols

@@ -233,10 +233,10 @@ def test_emb_centroids_partition_order_independent(spark):
     # so any difference between runs under different session shuffle
     # layouts would surface here and in the sf0.1 sweep; additionally
     # force a skewed layout through a temp view round-trip
-    base = [
+    base = sorted(
         (r["label"], r["pos"], r["n_vectors"], r["centroid"])
         for r in emb_label_centroids(spark, SF_T2).collect()
-    ]
+    )
     emb = load_table(spark, SF_T2, "embeddings").repartition(
         11, F.col("vec_id") % 3
     )

@@ -33,11 +33,17 @@ Rules (each a named check so failures read like a lint report):
       revert to one task sorting a whole group. Named queries are
       pinned in test_plan_shapes.py; this catches any FUTURE
       rank-limit window added to the registry.
+  R6  (below) every Sort/Window-fed SinglePartition exchange carries a
+      bounded-grain justification.
+  R7  (below) no registered query ends in a global Sort without a
+      limit: results carry no row order, so a presentation sort is a
+      range shuffle that re-runs the whole upstream for nothing.
 
 Streaming entries (stream_*) execute during construction
 (Trigger.AvailableNow into a memory sink), so the returned DataFrame is
 a sink read with no lineage to lint; their plan shapes are covered by
-the batch analogs here plus tests/test_streaming.py.
+the batch analogs here plus tests/test_streaming.py. Only R7, which
+reads the root of the returned frame, builds them (at sf0.001).
 
 The lint reads the pre-AQE executedPlan at sf0.01 — shape rules only,
 nothing statistics-dependent is asserted. Caveat: PLAN CONSTRUCTION is
@@ -55,7 +61,7 @@ from pyspark.sql import functions as F
 
 from erathia_market_etl_spark.plans import all_queries
 
-from .conftest import SF_T2
+from .conftest import SF_SMOKE, SF_T2
 
 # the scale-lint rules are policy for EVERY query shape the repo ships
 ALL_QUERIES = all_queries()
@@ -323,3 +329,63 @@ def test_r6_catches_data_scaling_grain_ntile(spark):
         "SortAggregate"
     )
     assert _node_name("*(3) Sort [v#67L ASC NULLS FIRST], false, 0") == "Sort"
+
+
+# ---------------------------------------------------------------------------
+# R7: no presentation sort. The oracle compare hashes rows
+# order-insensitively, so a registered query promises a row set, not a row order. A
+# global Sort reached from the root through only Project/Filter nodes
+# (no limit above it) orders the result for no reader, and Spark runs it
+# as a range shuffle: a sampling job over the whole upstream, then the
+# upstream again. Sorts under a limit (TakeOrderedAndProject) and the
+# local sorts that feed windows are not terminal global sorts.
+# ---------------------------------------------------------------------------
+
+# query -> why its result must stay globally sorted. Starts empty.
+R7_SORTED_RESULT: dict[str, str] = {}
+
+
+def _unlimited_global_sort(plan: str) -> bool:
+    """True iff the plan's root chain, below AdaptiveSparkPlan and
+    through Project/Filter only, reaches a global Sort node
+    (``Sort [...], true, n``)."""
+    for line in plan.splitlines():
+        name = _node_name(line)
+        if name in ("AdaptiveSparkPlan", "Project", "Filter"):
+            continue
+        return name == "Sort" and ", true, " in line
+    return False
+
+
+def test_r7_no_global_sort_without_limit(spark, plans):
+    streams = {
+        name: _plan(ALL_QUERIES[name](spark, SF_SMOKE))
+        for name in ALL_QUERIES
+        if name.startswith("stream_")
+    }
+    bad = [
+        n for n, p in {**plans, **streams}.items()
+        if n not in R7_SORTED_RESULT and _unlimited_global_sort(p)
+    ]
+    assert not bad, f"global Sort with no limit above it in: {bad}"
+
+
+def test_r7_catches_presentation_sort(spark):
+    """The lint's own pin: a terminal orderBy is flagged, also under a
+    Project or Filter; the same sort under a limit, and the local sort
+    a window runs, are not."""
+    from pyspark.sql import Window
+
+    raw = spark.read.parquet(f"{SF_T2}/documents.parquet").select(
+        F.col("doc_id").alias("x"), "source"
+    )
+    assert _unlimited_global_sort(_plan(raw.orderBy("x")))
+    assert _unlimited_global_sort(
+        _plan(raw.orderBy("x").filter(F.col("x") > 3).select("x"))
+    )
+    assert not _unlimited_global_sort(_plan(raw.orderBy("x").limit(5)))
+    assert not _unlimited_global_sort(_plan(raw))
+    windowed = raw.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("source").orderBy("x"))
+    )
+    assert not _unlimited_global_sort(_plan(windowed))

@@ -72,7 +72,9 @@ def _write_artifact(section: str | None = None,
     artifact means it cannot silently go stale as queries are added).
     Sections accumulate across invocations of the same round: `timings` from the steep-query leg, `compare` from
     the exactness leg, and `bench_totals` folded in from the
-    BENCH_FULL twins whenever both SFs have been benched."""
+    BENCH_FULL twins whenever both SFs have been benched. Each total
+    keeps the core count it ran on; the decade ratio `d3` is written
+    only when both ran on the same count."""
     rnd = _round()
     path = os.path.join(REPO, f"SCALESTEP_r{rnd:02d}.json")
     data = {}
@@ -90,11 +92,15 @@ def _write_artifact(section: str | None = None,
         if os.path.exists(p):
             try:
                 with open(p) as f:
-                    totals[tag] = json.load(f).get("value")
+                    art = json.load(f)
             except ValueError:
-                pass
-    if totals.get("sf0.1") and totals.get("sf1"):
-        totals["d3"] = round(totals["sf1"] / totals["sf0.1"], 2)
+                continue
+            totals[tag] = {"value": art.get("value"),
+                           "cores": art.get("cores")}
+    lo, hi = totals.get("sf0.1"), totals.get("sf1")
+    if (lo and hi and lo["value"] and hi["value"] and lo["cores"]
+            and lo["cores"] == hi["cores"]):
+        totals["d3"] = round(hi["value"] / lo["value"], 2)
     if totals:
         data["bench_totals"] = totals
     with open(path, "w") as f:
